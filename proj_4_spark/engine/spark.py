@@ -6,16 +6,24 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   LRU cache, so UDF closures carry only a short string — no pickled
   kernel state, trivially broadcastable, and grid data can be loaded
   worker-side.
-- Execution is ONE Arrow-batched pandas UDF per *whole pipeline*
-  (kernel fusion; never one UDF per step — SURVEY.md §4.3).
-- The UDF returns a struct column so Catalyst sees an ordinary
-  projection: filters still push down, unused input columns still prune,
-  and no shuffle is introduced.
+- transform() consults ONE ordered route table (_ROUTES) once.  A route
+  compiles the operation to a Catalyst "twin": staged Spark-SQL
+  projections (_SqlStager) that reproduce the NumPy kernels term for
+  term, so the hot path is whole-stage codegen with zero Python workers.
+  Every twin comes from two staged pipelines — forward (entry -> shared
+  prepare -> per-family kernel -> shared finalize) and inverse (entry ->
+  per-family kernel -> inv_finalize -> shared finalize) — and the
+  cart/helmert datum legs compose with either inside the same stager.
+- An operation no route accepts runs as ONE Arrow-batched pandas UDF
+  per *whole pipeline* (kernel fusion; never one UDF per step —
+  SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
+  ordinary projection: filters still push down, unused input columns
+  still prune, and no shuffle is introduced.
 
 At 100 TB scale this stage is embarrassingly parallel: cost is
-(rows/partition) x kernel flops, Arrow transfer is the only overhead, and
-`spark.sql.files.maxPartitionBytes` controls batch sizing.  No collect,
-no driver loops.
+(rows/partition) x kernel flops, Arrow transfer (UDF path only) is the
+only overhead, and `spark.sql.files.maxPartitionBytes` controls batch
+sizing.  No collect, no driver loops.
 """
 
 from __future__ import annotations
@@ -31,6 +39,10 @@ from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
 
 _STRUCT4 = "x double, y double, z double, t double"
+_SQL_INF = "CAST('Infinity' AS DOUBLE)"
+_SQL_NAN = "CAST('NaN' AS DOUBLE)"
+_H = math.pi / 2.0
+_CE_LIMIT_JVM = 2.623395162778  # kernels/tmerc._CE_LIMIT (tmerc.cpp:409)
 
 
 @lru_cache(maxsize=256)
@@ -41,362 +53,631 @@ def _cached_operation(projstring: str):
     return create_operation(projstring)
 
 
-# the single source of truth for the forward twin families — used by
-# BOTH the bare fast-path gate and the composed datum-modified twin
-# (which calls _webmerc_jvm_columns directly); a name listed here MUST
-# have a dispatch branch in _webmerc_jvm_columns
+# datum/grid/axis hooks a twin never models, and the cart/helmert hooks
+# the composed datum-modified routes model as staged legs
+_GRID_AXIS_HOOKS = ("hgridshift", "vgridshift", "axisswap")
+_MODIFIER_HOOKS = _GRID_AXIS_HOOKS + ("helmert", "cart", "cart_wgs84")
+
+# forward families of the composed datum-modified route; the bare
+# forward route also serves omerc, the moll family and Poder-Engsager
+# etmerc/tmerc/utm (P.fwd is exact_e_fwd)
 _FWD_TWIN_NAMES = ("webmerc", "merc", "eqc", "cea", "lcc", "aea",
                    "leac", "stere", "ups", "laea", "sterea", "somerc",
                    "krovak", "sinu", "eqdc", "eqearth", "cass",
                    "ortho", "gnom", "geos")
-
-
-def _inv_twin_name_ok(P) -> bool:
-    """Closed-form-inverse gating shared by the bare and composed
-    inverse twins (ellipsoidal stere/ups/sinu/cass/ortho/gnom iterate;
-    ellipsoidal merc needs the phi2 iteration; ellipsoidal eqdc needs
-    inv_mlfn)."""
-    name = getattr(P, "name", None)
-    if name == "merc" and P.es != 0.0:
-        return False
-    if name in ("stere", "ups", "sinu", "cass", "ortho", "gnom") \
-            and P.es != 0.0:
-        return False
-    if name == "laea" and P.es != 0.0:
-        # r8: the ellipsoidal laea inverse moved to the STAGED twin —
-        # its raw Column tree (authlat over the asin/rho chain, apa
-        # series referencing beta four times) collapsed into ONE
-        # 64,030-bytecode method: it still compiled (3% under janino's
-        # 64 KB hard limit) but sat 8x over HotSpot's 8000-byte JIT
-        # ceiling, so the twin ran interpreted — same defect class as
-        # the r7 geos fallback, one notch less visible.
-        return False
-    if name == "eqdc" and P.opaque.get("ellips"):
-        return False
-    # geos moved to the STAGED twin (_emit_iter_inv_kernel) in r8: its
-    # raw Column tree duplicated the Vy/Vz/kq subtrees and CollapseProject
-    # inlined them into one ~22.8k-line generated method that janino
-    # refuses to compile — the twin silently ran interpreted (VERDICT r7)
-    return name in ("webmerc", "merc", "eqc", "cea", "laea",
-                    "stere", "ups", "sinu", "eqdc", "cass", "ortho",
-                    "gnom", "moll", "wag4", "wag5")
+_FWD_KERNEL_NAMES = _FWD_TWIN_NAMES + ("omerc", "moll", "wag4", "wag5")
+# inverse families of _emit_inv_kernel (ortho/gnom: sphere only).
+# sterea is measured OUT: its 20-iteration Gauss inversion unrolled to a
+# twin running 0.64x the Arrow-UDF path (4.0 vs 6.2 M pts/s at 16 M pts,
+# local[8] — the per-iteration frozen-lane overhead exceeds numpy's ~6
+# effective masked iterations)
+_INV_KERNEL_NAMES = ("webmerc", "merc", "eqc", "cea", "laea", "stere",
+                     "ups", "sinu", "eqdc", "cass", "ortho", "gnom",
+                     "moll", "wag4", "wag5", "geos", "eqearth", "omerc",
+                     "lcc", "aea", "leac")
 
 
 def _bare_op_ok(P) -> bool:
-    """Shared twin-gate modifier guard (ADVICE r7): True only for a
-    BARE op — no datum/grid/axis hooks and none of the prepare/finalize
-    modifiers (+over/+geoc/long-wrap/non-Greenwich meridian) that the
-    expression twins do not model.  Every gate must call this instead
-    of copy-pasting the block: a future modifier added to one gate but
-    not another would silently route a modified op through a twin that
-    ignores it."""
-    for attr in ("hgridshift", "vgridshift", "helmert", "cart",
-                 "cart_wgs84", "axisswap"):
-        if getattr(P, attr, None) is not None:
-            return False
+    """True only for a BARE op — no datum/grid/axis hooks and none of
+    the prepare/finalize modifiers (+over/+geoc/long-wrap/non-Greenwich
+    meridian) that the twins do not model."""
+    if any(getattr(P, a, None) is not None for a in _MODIFIER_HOOKS):
+        return False
     if getattr(P, "over", False) or getattr(P, "geoc", False):
         return False
     if getattr(P, "is_long_wrap_set", False):
         return False
-    if getattr(P, "from_greenwich", 0.0) != 0.0:
+    return getattr(P, "from_greenwich", 0.0) == 0.0
+
+
+def _fwd_kernel_ok(P) -> bool:
+    from proj_4_spark.kernels.tmerc import exact_e_fwd
+
+    return (getattr(P, "fwd", None) is exact_e_fwd
+            or getattr(P, "name", None) in _FWD_KERNEL_NAMES)
+
+
+def _inv_kernel_ok(P) -> bool:
+    from proj_4_spark.kernels.tmerc import exact_e_inv
+
+    if getattr(P, "inv", None) is exact_e_inv:
+        return True
+    name = getattr(P, "name", None)
+    if name in ("ortho", "gnom") and P.es != 0.0:
         return False
-    return True
+    return name in _INV_KERNEL_NAMES
 
 
-def _webmerc_jvm_fast_path_ok(op, direction: str) -> bool:
-    """True when the operation is a bare webmerc/merc forward that the
-    JVM expression twin below reproduces exactly: single op, no
-    datum/grid/axis modifiers, no +over/+geoc/long-wrap."""
+def _bare_single(op, direction: str, want: str) -> bool:
+    """A bare single op run in its own direction: a '+proj=... +inv'
+    string builds Operation(inverted=True), whose direction='fwd' runs
+    the INVERSE kernel (proj_trans direction swap, src/4D_api.cpp)."""
     P = getattr(op, "P", None)
-    if P is None or direction != "fwd":
+    return (P is not None and direction == want
+            and not getattr(op, "inverted", False) and _bare_op_ok(P))
+
+
+def _leg_kind(P, step: bool):
+    """"cart" / "helmert" when P is a datum leg the staged twin
+    reproduces (cart fwd src/conversions/cart.cpp:132-147, cart inv
+    closed form cart.cpp:150-205, static 7-param helmert /
+    Molodensky-Badekas matmul src/transformations/helmert.cpp:363-436),
+    else None.  `step` marks a pipeline step, whose angular
+    prepare/finalize the twin replicates, so long-wrap and skipped
+    prepare/finalize disqualify; cs2cs helper ops skip both by
+    construction."""
+    from proj_4_spark.kernels.base import UNITS_CARTESIAN
+
+    if any(getattr(P, a, None) is not None for a in _MODIFIER_HOOKS):
+        return None
+    if P.name == "cart":
+        if (P.lam0 != 0.0 or P.from_greenwich != 0.0 or P.over or P.geoc
+                or P.x0 != 0.0 or P.y0 != 0.0
+                or P.fr_meter != 1.0 or P.to_meter != 1.0):
+            return None
+        if step and (P.is_long_wrap_set
+                     or P.skip_fwd_prepare or P.skip_fwd_finalize
+                     or P.skip_inv_prepare or P.skip_inv_finalize):
+            return None
+        return "cart"
+    if P.name in ("helmert", "molobadekas"):
+        Q = P.opaque
+        if P.left != UNITS_CARTESIAN or Q.get("fourparam"):
+            return None  # 4-param planar mode
+        if (Q["dxyz"] != (0.0, 0.0, 0.0) or Q["dopk"] != (0.0, 0.0, 0.0)
+                or Q["dscale"] != 0.0 or Q["dtheta"] != 0.0):
+            return None  # time-dependent: params vary per row
+        if P.fr_meter != 1.0 or P.to_meter != 1.0:
+            return None
+        return "helmert"
+    return None
+
+
+def _datum_jvm_legs(op, direction: str):
+    """Leg list for the datum-pipeline twin, or None.
+
+    Recognizes a PipelineOperation whose steps are all bare
+    cart / helmert / molobadekas — the towgs84 expansion shape
+    (cart -> helmert -> cart⁻¹, src/datums.cpp pj_datum_set) that
+    every hub-composed catalog candidate and ``pipeline_datum_shift``
+    itself uses.  Returns [(kind, step_dir, P), ...] in effective
+    execution order, the first leg a cart fwd (consumes radians) and
+    the last a cart inv (produces radians)."""
+    from proj_4_spark.engine.plan import PipelineOperation
+
+    if not isinstance(op, PipelineOperation):
+        return None
+    if direction not in ("fwd", "inv"):
+        return None
+    eff = "inv" if ((direction == "inv") != bool(op.inverted)) else "fwd"
+    seq = op.steps if eff == "fwd" else list(reversed(op.steps))
+    legs = []
+    for op_, flags in seq:
+        if op_ is None or flags.get("kind") is not None:
+            return None
+        if flags.get("omit_fwd") or flags.get("omit_inv"):
+            return None
+        kind = _leg_kind(op_.P, step=True)
+        if kind is None:
+            return None
+        step_dir = eff
+        if flags.get("inv"):
+            step_dir = "inv" if step_dir == "fwd" else "fwd"
+        legs.append((kind, step_dir, op_.P))
+    if not legs:
+        return None
+    if legs[0][:2] != ("cart", "fwd") or legs[-1][:2] != ("cart", "inv"):
+        return None  # twin needs angular I/O on both ends
+    return legs
+
+
+def _composed_ok(op, direction: str) -> bool:
+    """True when a SINGLE datum-modified operation (+towgs84 / +datum
+    cs2cs-emulation hooks: P.cart + P.cart_wgs84 [+ P.helmert]) can run
+    as the composed twin: datum legs + the projection's own kernel —
+    the dominant catalog-preset shape runs with zero Python workers in
+    both directions.  Grid hooks (+nadgrids/+geoidgrids), +axis, +over,
+    +geoc, long-wrap, prime meridians, a vertical offset and geocentric
+    CRS stay on the Arrow-UDF path."""
+    from proj_4_spark.engine.plan import PipelineOperation
+
+    P = getattr(op, "P", None)
+    if P is None or isinstance(op, PipelineOperation):
         return False
-    # a '+proj=webmerc ... +inv' projstring builds Operation(inverted=True):
-    # direction='fwd' then runs the INVERSE kernel (proj_trans direction
-    # swap, src/4D_api.cpp) — the expression twin below is forward-only
-    if getattr(op, "inverted", False):
+    if getattr(op, "inverted", False) or direction not in ("fwd", "inv"):
         return False
-    # webmerc (spherical by construction), merc (spherical or
-    # ellipsoidal — the tsfn isometric latitude is Catalyst-expressible)
-    # and eqc (pure linear scaling, eqc.cpp:19-27)
-    # cea (closed-form authalic q, cea.cpp:20-34), lcc (tsfn power,
-    # lcc.cpp:23-43) and aea/leac (authalic rho, aea.cpp:105-118)
-    # and stere/ups (all four aspect modes, stere.cpp:44-140)
-    # and laea (authalic-beta closed form, laea.cpp:35-137)
-    # and sterea (Gauss-Schreiber double projection, sterea.cpp:46-67)
-    # somerc (Swiss oblique Mercator, somerc.cpp:10-25) and krovak
-    # (S-JTSK, krovak.cpp:86-240) — closed-form forwards
-    # sinu and eqdc (flat mlfn meridional-arc series)
-    # r6: eqearth (Equal Earth polynomial), cass (sphere + series),
-    # ortho (sphere + EPSG ellipsoidal), gnom (sphere formulas)
-    if getattr(P, "name", None) not in _FWD_TWIN_NAMES:
+    if P.cart is None or P.cart_wgs84 is None:
+        return False  # not datum-modified: the bare routes handle it
+    if getattr(P, "is_geocent", False):
         return False
-    return _bare_op_ok(P)
+    if any(getattr(P, a, None) is not None for a in _GRID_AXIS_HOOKS):
+        return False
+    if P.over or P.geoc or P.from_greenwich != 0.0 or P.is_long_wrap_set:
+        return False
+    if P.z0 != 0.0:
+        return False  # vfr/vto_meter (e.g. +units=km) are handled
+    want = [("cart", P.cart), ("cart", P.cart_wgs84)]
+    if P.helmert is not None:
+        want.append(("helmert", P.helmert))
+    for kind, hop in want:
+        if getattr(hop, "inverted", False) or \
+                _leg_kind(hop.P, step=False) != kind:
+            return False
+    if getattr(P, "is_latlong", False):
+        return True
+    if direction == "fwd":
+        return P.name in _FWD_TWIN_NAMES
+    return _inv_kernel_ok(P)
 
 
-def _webmerc_jvm_columns(P, xcol, ycol, zcol, degrees: bool, z_supplied: bool):
-    """JVM-expression twin of the webmerc/merc forward (kernels/merc.py
-    merc_s_forward / merc_e_forward + the engine's fwd prepare/
-    finalize): the flagship doc-geo pipeline and plain Mercator
-    transforms become pure whole-stage codegen — zero Python in the
-    hot path.  Semantics replicated term for term:
+def _sql_dlit(v: float) -> str:
+    """Spark-SQL double literal (the D suffix keeps it out of DECIMAL).
+    repr round-trips, so a Python-folded constant lands bit-exact."""
+    v = float(v)
+    if math.isnan(v):
+        return _SQL_NAN
+    if math.isinf(v):
+        return ("CAST('Infinity' AS DOUBLE)" if v > 0
+                else "CAST('-Infinity' AS DOUBLE)")
+    return repr(v) + "D"
 
-    - error rows (NaN, matching the UDF path's HUGE_VAL analogue): null
-      or NaN inputs, |lam|>10 rad pre-wrap (fwd.cpp:55), |phi| within
-      1e-10 of the pole (merc.cpp) or beyond it (PJ_EPS_LAT clip+check);
-    - adjlon wrap (>= pi+1e-12 tolerance) before and after -lam0;
-    - y via log(tan(pi/4 + phi/2)) with the log1p branch at |phi|<=eps
-      (merc.cpp:14-20);
-    - finalize: *a, +x0/y0, *fr_meter.
 
-    Parity with the Arrow-UDF path is pinned bit-pattern-for-NaN and
-    <=1e-6 m for values in tests/test_engine.py."""
-    from pyspark.sql import functions as F
+class _SqlStager:
+    """Accumulates staged-projection SQL stages; ONE selectExpr (py4j
+    round-trip) per codegen region instead of hundreds of Column-object
+    calls (~20 ms plan build instead of ~400 ms).  Fragments
+    referenced more than once must be column refs from an earlier
+    stage, never textual expression duplication (the DuckDB
+    lateral-alias lesson): CollapseProject declines to merge a
+    non-cheap alias referenced more than once, so the plan keeps the
+    staged, linear-size form.
 
-    nan = F.lit(float("nan"))
-    pi = math.pi
-    lam = xcol.cast("double")
-    phi = ycol.cast("double")
+    Temporary columns are named with PREFIX; apply() refuses an input
+    frame that already has a column with that prefix."""
+
+    PREFIX = "_jd_"
+    _split_seq = itertools.count()
+
+    def __init__(self):
+        self.tmp: list[str] = []
+        self.stages: list[list[str]] = []
+        self._barriers: set[int] = set()
+
+    def stage(self, **cols):
+        """Add one stage; returns its column ref (a tuple of refs when
+        several columns are staged)."""
+        exprs = []
+        for name, sql in cols.items():
+            self.tmp.append(self.PREFIX + name)
+            exprs.append(f"({sql}) AS {self.PREFIX}{name}")
+        self.stages.append(exprs)
+        refs = tuple(self.col(n) for n in cols)
+        return refs[0] if len(refs) == 1 else refs
+
+    def barrier(self):
+        """Close the current whole-stage-codegen region: apply() will
+        insert a CollectMetrics (observe) node here, which Spark does
+        not fuse.  HotSpot refuses to JIT methods over 8000 bytecodes
+        (-XX:DontCompileHugeMethods), so a staged chain whose single
+        fused consume() exceeds that runs INTERPRETED — measured 13x
+        slower on the lcc inverse twin.  Splitting into sub-8000
+        regions costs one row-count accumulator per region boundary
+        and keeps every region JIT-compiled."""
+        if self.stages:
+            self._barriers.add(len(self.stages) - 1)
+
+    def col(self, name: str) -> str:
+        return self.PREFIX + name
+
+    def apply(self, df, final_exprs: list[str]):
+        clash = [c for c in df.columns if c.startswith(self.PREFIX)]
+        if clash:
+            # a pre-existing _jd_* column would either raise an
+            # ambiguous-reference AnalysisException mid-plan or be
+            # silently dropped by the final drop(*tmp)
+            raise ValueError(
+                f"input columns collide with the staging prefix "
+                f"{self.PREFIX!r}: {clash}; rename them before transform()")
+        from pyspark.sql import functions as F
+
+        # Batch consecutive stages into ONE selectExpr via lateral
+        # column aliases (Spark >= 3.4): the analyzer rewrites them
+        # into exactly the nested-Project chain that one-selectExpr-
+        # per-stage builds, but at one py4j/parse round-trip per
+        # codegen region instead of per stage (~14 ms each; the 60+
+        # stage iterative-inverse twins dropped from ~2.5 s to ~0.2 s
+        # plan build).  Aliases referenced more than once stay column
+        # refs in the rewrite — no subtree duplication.
+        out = df
+        pending: list[str] = []
+        emitted: list[str] = []
+        for i, exprs in enumerate(self.stages):
+            pending.extend(exprs)
+            if i in self._barriers:
+                out = out.selectExpr("*", *pending)
+                emitted.extend(
+                    e.rsplit(" AS ", 1)[1] for e in pending)
+                pending = []
+                # rows materialize as UnsafeRows at the region
+                # boundary: drop temp columns no later stage reads so
+                # the copy stays narrow (substring match can only
+                # over-retain, never over-drop)
+                later = " ".join(
+                    e for st_ in self.stages[i + 1:] for e in st_)
+                later += " " + " ".join(final_exprs)
+                dead = [c for c in emitted if c not in later]
+                if dead:
+                    out = out.drop(*dead)
+                out = out.observe(
+                    f"{self.PREFIX}cgsplit_{next(self._split_seq)}",
+                    F.count(F.lit(1)).alias("rows"))
+        if pending:
+            out = out.selectExpr("*", *pending)
+        # replace-in-place contract: with the documented default call
+        # shape (columns named x/y, out_prefix="") appending the outputs
+        # would produce DUPLICATE x/y columns and any downstream
+        # select("x") would throw AMBIGUOUS_REFERENCE.  The final
+        # expressions read only staged temp columns (the entry stages
+        # capture the inputs), so the colliding originals can be
+        # dropped first.  (The replaced column moves to the end of the
+        # schema — select by name.)
+        out_names = {e.rsplit(" AS ", 1)[1].strip().strip("`")
+                     for e in final_exprs}
+        clash_out = [c for c in out.columns if c in out_names]
+        if clash_out:
+            out = out.drop(*clash_out)
+        out = out.selectExpr("*", *final_exprs)
+        return out.drop(*[c for c in self.tmp if c in out.columns])
+
+
+def _sql_atan2_ieee(yc: str, xc: str) -> str:
+    """IEEE atan2: Spark's Atan2 evaluates Math.atan2(y + 0.0, x + 0.0),
+    which collapses -0.0 to +0.0 — but the kernels rely on IEEE signed
+    zeros (np.arctan2(0.0, -0.0) = pi, e.g. the polar-aspect origin row
+    or a geocentric Y of exactly -0.0).  The sign of a zero is read
+    from its string form; only y == 0 rows evaluate that branch
+    (CaseWhen codegen is lazy).  Args must be COLUMN REFS (they appear
+    several times textually)."""
+    L = _sql_dlit
+    xneg = f"startswith(cast({xc} AS STRING), '-')"
+    yneg = f"startswith(cast({yc} AS STRING), '-')"
+    return (f"CASE WHEN isnan({xc}) OR isnan({yc}) THEN {_SQL_NAN} "
+            f"WHEN {yc} = 0.0D THEN "
+            f"(CASE WHEN {xneg} AND {yneg} THEN {L(-math.pi)} "
+            f"WHEN {xneg} THEN {L(math.pi)} "
+            f"WHEN {yneg} THEN -0.0D ELSE 0.0D END) "
+            f"ELSE atan2({yc}, {xc}) END")
+
+
+def _sql_adjlon(c: str) -> str:
+    """adjlon over a COLUMN REF (appears 4x textually)."""
+    L = _sql_dlit
+    PI, TWO_PI = L(math.pi), L(2.0 * math.pi)
+    return (f"CASE WHEN abs({c}) >= {L(math.pi + 1e-12)} THEN "
+            f"(({c}) + {PI}) - {TWO_PI} * floor((({c}) + {PI})"
+            f" / {TWO_PI}) - {PI} ELSE ({c}) END")
+
+
+def _clip1(v: str) -> str:
+    return f"greatest(least({v}, 1.0D), -1.0D)"
+
+
+def _sql_tsfn(st, phi: str, sinphi: str, e: float, tag: str) -> str:
+    """tsfn (src/tsfn.cpp:6-17) over a COLUMN REF phi:
+    tan((pi/2 - phi)/2) / ((1 - e sin phi)/(1 + e sin phi))^(e/2)."""
+    L = _sql_dlit
+    es = st.stage(**{f"{tag}esin": f"{sinphi} * {L(e)}"})
+    return (f"tan(0.5D * ({L(_H)} - {phi})) / power((1.0D - {es}) / "
+            f"(1.0D + {es}), {L(0.5 * e)})")
+
+
+def _sql_qsfn(st, P, sinphi: str, tag: str) -> str:
+    """Authalic q (src/qsfn.cpp:9-25) over a COLUMN REF sin(phi)."""
+    L = _sql_dlit
+    con = st.stage(**{f"{tag}con": f"{sinphi} * {L(P.e)}"})
+    return (f"{L(P.one_es)} * ({sinphi} / (1.0D - {con} * {con}) - "
+            f"{L(0.5 / P.e)} * ln((1.0D - {con}) / (1.0D + {con})))")
+
+
+def _sql_mlfn(st, ph: str, en, tag: str) -> str:
+    """Flat meridional-arc series M(phi) (mlfn.hpp inline_pj_mlfn)."""
+    e0, e1, e2, e3, e4 = (_sql_dlit(float(v)) for v in en)
+    s = st.stage(**{f"{tag}ms": f"sin({ph})"})
+    cph, s2 = st.stage(**{f"{tag}mc": f"cos({ph}) * {s}",
+                          f"{tag}m2": f"{s} * {s}"})
+    return (f"{e0} * {ph} - {cph} * ({e1} + {s2} * ({e2} + {s2} * "
+            f"({e3} + {s2} * {e4})))")
+
+
+def _sql_authlat(st, beta: str, apa, tag: str) -> str:
+    """Authalic -> geodetic latitude (src/auth.cpp:33-38, 3-term closed
+    series) over a COLUMN REF beta."""
+    a0, a1, a2 = (_sql_dlit(float(v)) for v in apa[:3])
+    t2 = st.stage(**{f"{tag}t2": f"{beta} + {beta}"})
+    return (f"{beta} + {a0} * sin({t2}) + {a1} * sin({t2} + {t2}) "
+            f"+ {a2} * sin({t2} + {t2} + {t2})")
+
+
+# --- forward pipeline -----------------------------------------------------
+#
+# _entry_stages -> _emit_fwd (shared prepare, _emit_fwd_kernel, *a +
+# x0/y0, *fr_meter) -> shared finalize (_outputs: the error mask,
+# vertical scaling, t).  Every kernel is ported term for term from the
+# NumPy kernels, keeping their operation order, grouping and
+# Python-folded literals: Catalyst does not reassociate floating-point
+# arithmetic, so a twin agrees with the Arrow-UDF path to libm ulps
+# (parity pinned per family in tests/test_engine.py).
+
+
+def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
+                  z_supplied: bool):
+    """Shared FORWARD entry: radian lam/phi, synthesized z/t, the
+    global error predicate (fwd.cpp:41-102)."""
+    L = _sql_dlit
+    col = st.col
+    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
     if degrees:
-        lam = F.radians(lam)
-        phi = F.radians(phi)
-
-    def adjlon(c):
-        return F.when(
-            F.abs(c) >= F.lit(pi + 1e-12),
-            (c + pi) - 2.0 * pi * F.floor((c + pi) / (2.0 * pi)) - pi,
-        ).otherwise(c)
-
-    err = (
-        xcol.isNull() | F.isnan(xcol.cast("double"))
-        | ycol.isNull() | F.isnan(ycol.cast("double"))
-        | (lam > 10.0) | (lam < -10.0)
-    )
-    if P.name in ("webmerc", "merc"):
-        # merc kernels NaN within 1e-10 of the pole (merc.cpp); this
-        # also subsumes the generic PJ_EPS_LAT overrange check
-        err = err | (F.abs(phi) >= pi / 2.0 - 1e-10)
+        lam_sql, phi_sql = f"radians({xq})", f"radians({yq})"
     else:
-        err = err | (F.abs(phi) - pi / 2.0 > 1e-12)  # fwd.cpp:55 only
+        lam_sql, phi_sql = xq, yq
+    # NULL inputs normalize to NaN up front (the UDF path's na_value):
+    # SQL NULL would otherwise slip through least/greatest, which SKIP
+    # NULLs instead of propagating
+    lam_sql = f"coalesce({lam_sql}, {_SQL_NAN})"
+    phi_sql = f"coalesce({phi_sql}, {_SQL_NAN})"
+    zz_sql = (f"coalesce(CAST(`{z}` AS DOUBLE), {_SQL_NAN})"
+              if z is not None else "0.0D")
+    tt_sql = (f"coalesce(CAST(`{t}` AS DOUBLE), {_SQL_NAN})"
+              if t is not None else "0.0D")
+    st.stage(lam=lam_sql, phi=phi_sql, zz=zz_sql, tt=tt_sql)
+    err = (f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR "
+           f"isnan({yq}) OR {col('lam')} > 10.0D OR "
+           f"{col('lam')} < -10.0D OR "
+           f"abs({col('phi')}) - {L(_H)} > 1e-12D")
     if z_supplied:
-        err = err | zcol.isNull() | F.isnan(zcol.cast("double"))
-    lamw = adjlon(adjlon(lam) - F.lit(P.lam0))
-    phic = F.least(F.greatest(phi, F.lit(-pi / 2.0)), F.lit(pi / 2.0))
-    eps = float(np.finfo(np.float64).eps)
+        err += f" OR `{z}` IS NULL OR isnan({col('zz')})"
+    st.stage(err=err)
 
-    def _mlfn_col(ph, en):
-        # flat meridional-arc series M(phi) (mlfn.hpp inline_pj_mlfn)
-        s = F.sin(ph)
-        cph = F.cos(ph) * s
-        s2 = s * s
-        return (F.lit(float(en[0])) * ph
-                - cph * (F.lit(float(en[1]))
-                         + s2 * (F.lit(float(en[2]))
-                                 + s2 * (F.lit(float(en[3]))
-                                         + s2 * F.lit(float(en[4]))))))
 
-    def _clip1c(v):
-        return F.greatest(F.least(v, F.lit(1.0)), F.lit(-1.0))
+def _emit_fwd(st: _SqlStager, P, lam: str, phi: str):
+    """fwd prepare (lam wrap - lam0, lat clip), the family kernel and
+    the projection finalize (*a, +x0/y0, *fr_meter) over radian COLUMN
+    REFS.  Returns (x, y, bad): bad is the kernel's extra error
+    predicate or None."""
+    L = _sql_dlit
+    st.stage(lamw1=_sql_adjlon(lam))
+    st.stage(lamd=f"({st.col('lamw1')} - {L(P.lam0)})")
+    lamw, phic = st.stage(
+        lamw=_sql_adjlon(st.col("lamd")),
+        phic=f"least(greatest({phi}, {L(-_H)}), {L(_H)})")
+    xk, yk, bad = _emit_fwd_kernel(st, P, lamw, phic, phi)
+    xe, ye = st.stage(
+        xe=f"{L(P.fr_meter)} * (({xk}) * {L(P.a)} + {L(P.x0)})",
+        ye=f"{L(P.fr_meter)} * (({yk}) * {L(P.a)} + {L(P.y0)})")
+    return xe, ye, bad
 
-    def _qsfn_col(sphi):
-        # authalic q (src/qsfn.cpp:9-25)
-        e = P.e
-        con = sphi * e
-        return P.one_es * (sphi / (1.0 - con * con)
-                           - F.lit(0.5 / e)
-                           * F.log((1.0 - con) / (1.0 + con)))
 
-    if P.name in ("sinu", "eqdc"):
-        Qo = P.opaque
-        if P.name == "sinu":
-            if P.es != 0.0:
-                # gn_sinu.cpp:27-35
-                s = F.sin(phic)
-                xk = (lamw * F.cos(phic)
-                      / F.sqrt(1.0 - F.lit(P.es) * s * s))
-                yk = _mlfn_col(phic, Qo["en"])
-            else:
-                # sphere: n=1, m=0 (gn_sinu.cpp:57-85 closed branch)
-                Cx, Cy = float(Qo["C_x"]), float(Qo["C_y"])
-                xk = Cx * lamw * F.cos(phic)
-                yk = Cy * phic
+def _emit_fwd_kernel(st: _SqlStager, P, lamw: str, phic: str, phi: str):
+    """Per-family forward kernels over the prepared (lamw, phic) column
+    refs (phi: the unclipped latitude).  Returns (xk, yk, bad): the
+    kernel output before the finalize scales it by a, and an extra
+    per-family error predicate (or None)."""
+    from proj_4_spark.kernels.tmerc import exact_e_fwd
+
+    if getattr(P, "fwd", None) is exact_e_fwd:
+        return _etmerc_fwd_kernel(st, P, lamw, phic)
+    L = _sql_dlit
+    S = st.stage
+    Q = P.opaque
+    name = P.name
+    pi = math.pi
+    if name in ("webmerc", "merc"):
+        # merc.cpp: NaN within 1e-10 of the pole (subsumes the generic
+        # PJ_EPS_LAT check); ellipsoid y = -log(tsfn) (merc.cpp:22-31),
+        # sphere log(tan(pi/4 + phi/2)) with the log1p branch at
+        # |phi| <= eps (merc.cpp:14-20)
+        if P.es != 0.0 and name == "merc":
+            ywm = f"-ln({_sql_tsfn(st, phic, f'sin({phic})', P.e, 'f_')})"
         else:
+            eps = float(np.finfo(np.float64).eps)
+            ywm = (f"CASE WHEN abs({phic}) <= {L(eps)} THEN log1p({phic}) "
+                   f"ELSE ln(tan({L(pi / 4.0)} + 0.5D * {phic})) END")
+        return (f"{L(P.k0)} * {lamw}", f"{L(P.k0)} * ({ywm})",
+                f"abs({phi}) >= {L(_H - 1e-10)}")
+    if name == "eqc":
+        # eqc.cpp:19-27: x = cos(lat_ts)*lam (rc folds at plan time)
+        return (f"{L(float(Q['rc']))} * {lamw}", f"{phic} - {L(P.phi0)}",
+                None)
+    if name == "cea":
+        # cea.cpp:20-34: x = k0*lam; y = sin(phi)/k0 (sphere) or
+        # 0.5*qsfn(sin(phi))/k0 (ellipsoid)
+        sphi = S(f_sphi=f"sin({phic})")
+        yk = (f"0.5D * ({_sql_qsfn(st, P, sphi, 'f_')}) / {L(P.k0)}"
+              if P.es != 0.0 else f"{sphi} / {L(P.k0)}")
+        return f"{L(P.k0)} * {lamw}", yk, None
+    if name == "lcc":
+        # lcc.cpp:23-43: rho = c*tsfn(phi)^n (ellipsoid) or
+        # c*tan(pi/4+phi/2)^-n (sphere); pole rows are exact (rho=0)
+        # unless on the wrong side of the cone (n*phi <= 0 -> NaN)
+        n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
+        pole = S(f_pole=f"abs(abs({phic}) - {L(_H)}) < {L(1e-10)}")
+        if P.es != 0.0:
+            ts = _sql_tsfn(st, phic, f"sin({phic})", P.e, "f_")
+            rho = f"{L(c)} * power({ts}, {L(n)})"
+        else:
+            rho = (f"{L(c)} * power(tan({L(pi / 4.0)} + 0.5D * {phic}), "
+                   f"{L(-n)})")
+        rho, lamn = S(f_rho=f"CASE WHEN {pole} THEN 0.0D ELSE {rho} END",
+                      f_lamn=f"{lamw} * {L(n)}")
+        return (f"{L(P.k0)} * ({rho} * sin({lamn}))",
+                f"{L(P.k0)} * ({L(rho0)} - {rho} * cos({lamn}))",
+                f"{pole} AND ({phic} * {L(n)}) <= 0.0D")
+    if name in ("aea", "leac"):
+        # aea.cpp:105-118: rho^2 = c - n*q(sin phi); negative -> NaN
+        c, dd, rho0, n = (float(Q[k]) for k in ("c", "dd", "rho0", "n"))
+        sphi = S(f_sphi=f"sin({phic})")
+        if Q["ellips"]:
+            rho2 = f"{L(c)} - {L(n)} * ({_sql_qsfn(st, P, sphi, 'f_')})"
+        else:
+            rho2 = f"{L(c)} - {L(float(Q['n2']))} * {sphi}"
+        rho2 = S(f_rho2=rho2)
+        bad = f"{rho2} < 0.0D"
+        rho, lamn = S(f_rho=f"{L(dd)} * sqrt(CASE WHEN {bad} THEN 0.0D "
+                            f"ELSE {rho2} END)",
+                      f_lamn=f"{lamw} * {L(n)}")
+        return (f"{rho} * sin({lamn})", f"{L(rho0)} - {rho} * cos({lamn})",
+                bad)
+    if name in ("sinu", "eqdc"):
+        if name == "eqdc":
             # eqdc.cpp forward over the stashed setup constants
-            n, c, rho0 = (float(Qo["n"]), float(Qo["c"]),
-                          float(Qo["rho0"]))
-            if Qo["ellips"]:
-                rho = F.lit(c) - _mlfn_col(phic, Qo["en"])
-            else:
-                rho = F.lit(c) - phic
-            lamn = lamw * n
-            xk = rho * F.sin(lamn)
-            yk = F.lit(rho0) - rho * F.cos(lamn)
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "eqearth":
+            n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
+            m = _sql_mlfn(st, phic, Q["en"], "f_") if Q["ellips"] else phic
+            rho, lamn = S(f_rho=f"{L(c)} - ({m})", f_lamn=f"{lamw} * {L(n)}")
+            return (f"{rho} * sin({lamn})",
+                    f"{L(rho0)} - {rho} * cos({lamn})", None)
+        if P.es != 0.0:
+            # gn_sinu.cpp:27-35
+            s = S(f_s=f"sin({phic})")
+            return (f"{lamw} * cos({phic}) / sqrt(1.0D - {L(P.es)} * {s} "
+                    f"* {s})", _sql_mlfn(st, phic, Q["en"], "f_"), None)
+        # sphere: n=1, m=0 (gn_sinu.cpp:57-85 closed branch)
+        return (f"{L(float(Q['C_x']))} * {lamw} * cos({phic})",
+                f"{L(float(Q['C_y']))} * {phic}", None)
+    if name == "eqearth":
         # eqearth.cpp:44-74: psi from the (authalic) sin-beta, 9th-order
         # polynomial; the Equal Earth constants are exact doubles
         from proj_4_spark.kernels.pseudocyl import _A1, _A2, _A3, _A4, _M
 
-        Qo = P.opaque
-        rqda = float(Qo["rqda"])
-        sphi = F.sin(phic)
+        rqda = float(Q["rqda"])
+        sb = S(f_sphi=f"sin({phic})")
         if P.es != 0.0:
-            sbeta = _clip1c(_qsfn_col(sphi) / float(Qo["qp"]))
-        else:
-            sbeta = sphi
-        psi = F.asin(F.lit(_M) * sbeta)
-        psi2 = psi * psi
-        psi6 = psi2 * psi2 * psi2
-        xk = (lamw * F.cos(psi)
-              / (_M * (F.lit(_A1) + 3.0 * _A2 * psi2
-                       + psi6 * (7.0 * _A3 + 9.0 * _A4 * psi2))))
-        yk = psi * (F.lit(_A1) + _A2 * psi2 + psi6 * (_A3 + _A4 * psi2))
-        xe = F.lit(P.fr_meter) * (xk * rqda * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * rqda * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "cass":
+            sb = _clip1(f"({_sql_qsfn(st, P, sb, 'f_')}) / "
+                        f"{L(float(Q['qp']))}")
+        psi = S(f_psi=f"asin({L(_M)} * {sb})")
+        psi2 = S(f_psi2=f"{psi} * {psi}")
+        psi6 = S(f_psi6=f"{psi2} * {psi2} * {psi2}")
+        xk = (f"{lamw} * cos({psi}) / ({L(_M)} * ({L(_A1)} + "
+              f"{L(3.0 * _A2)} * {psi2} + {psi6} * ({L(7.0 * _A3)} + "
+              f"{L(9.0 * _A4)} * {psi2})))")
+        yk = (f"{psi} * ({L(_A1)} + {L(_A2)} * {psi2} + {psi6} * "
+              f"({L(_A3)} + {L(_A4)} * {psi2}))")
+        return f"({xk}) * {L(rqda)}", f"({yk}) * {L(rqda)}", None
+    if name == "cass":
         # cass.cpp forward: spherical closed form / ellipsoidal series
         # over the flat mlfn meridional arc; en/m0 recomputed at plan
-        # time with the kernel's own scalar formulas (closure constants)
+        # time with the kernel's own scalar formulas
         if P.es == 0.0:
-            xk = F.asin(_clip1c(F.cos(phic) * F.sin(lamw)))
-            yk = F.atan2(F.tan(phic), F.cos(lamw)) - F.lit(P.phi0)
-        else:
-            C1_, C2_, C3_ = (0.16666666666666666666,
-                             0.00833333333333333333,
-                             0.04166666666666666666)
-            en = C.enfn(P.es)
-            m0 = float(C.mlfn(np.float64(P.phi0),
-                              np.float64(math.sin(P.phi0)),
-                              np.float64(math.cos(P.phi0)), en))
-            s = F.sin(phic)
-            cph = F.cos(phic)
-            yml = _mlfn_col(phic, en)
-            n = 1.0 / F.sqrt(1.0 - F.lit(P.es) * s * s)
-            tn = F.tan(phic)
-            tt = tn * tn
-            a1 = lamw * cph
-            cc = cph * (F.lit(P.es / (1.0 - P.es)) * cph)
-            a2 = a1 * a1
-            xk = n * a1 * (1.0 - a2 * tt
-                           * (C1_ - (8.0 - tt + 8.0 * cc) * a2 * C2_))
-            yk = yml - (F.lit(m0) - n * tn * a2
-                        * (0.5 + (5.0 - tt + 6.0 * cc) * a2 * C3_))
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "geos":
+            return (f"asin({_clip1(f'cos({phic}) * sin({lamw})')})",
+                    f"atan2(tan({phic}), cos({lamw})) - {L(P.phi0)}", None)
+        C1_, C2_, C3_ = (0.16666666666666666666,
+                         0.00833333333333333333,
+                         0.04166666666666666666)
+        en = C.enfn(P.es)
+        m0 = float(C.mlfn(np.float64(P.phi0), np.float64(math.sin(P.phi0)),
+                          np.float64(math.cos(P.phi0)), en))
+        s, cph = S(f_s=f"sin({phic})", f_cph=f"cos({phic})")
+        yml = S(f_yml=_sql_mlfn(st, phic, en, "f_"))
+        n, tn, a1 = S(f_n=f"1.0D / sqrt(1.0D - {L(P.es)} * {s} * {s})",
+                      f_tn=f"tan({phic})", f_a1=f"{lamw} * {cph}")
+        tt, cc, a2 = S(f_tt=f"{tn} * {tn}",
+                       f_cc=f"{cph} * ({L(P.es / (1.0 - P.es))} * {cph})",
+                       f_a2=f"{a1} * {a1}")
+        return (f"{n} * {a1} * (1.0D - {a2} * {tt} * ({L(C1_)} - "
+                f"(8.0D - {tt} + 8.0D * {cc}) * {a2} * {L(C2_)}))",
+                f"{yml} - ({L(m0)} - {n} * {tn} * {a2} * (0.5D + "
+                f"(5.0D - {tt} + 6.0D * {cc}) * {a2} * {L(C3_)}))", None)
+    if name == "geos":
         # geos.cpp forward (geostationary satellite view): closed form;
-        # the kernel's closure constants are recomputed here at plan
-        # time from the op's own params (kernels/misc6.py setup_geos)
-        h = P.param_f("h")
-        flip = P.params.get("sweep") == "x"
-        rg1 = h / P.a
+        # the kernel's closure constants recomputed at plan time from
+        # the op's own params (kernels/misc6.py setup_geos)
+        rg1 = P.param_f("h") / P.a
         rg = 1.0 + rg1
-        ell = P.es != 0.0
-        if ell:
+        if P.es != 0.0:
             rp = math.sqrt(P.one_es)
-            rp2, rp_inv2 = P.one_es, P.rone_es
-            phig = F.atan(F.lit(rp2) * F.tan(phic))
-            r = F.lit(rp) / F.hypot(F.lit(rp) * F.cos(phig),
-                                    F.sin(phig))
+            phig = S(f_phig=f"atan({L(P.one_es)} * tan({phic}))")
+            r = S(f_r=f"{L(rp)} / hypot({L(rp)} * cos({phig}), "
+                      f"sin({phig}))")
         else:
-            rp_inv2 = 1.0
-            phig = phic
-            r = F.lit(1.0)
-        Vx = r * F.cos(lamw) * F.cos(phig)
-        Vy = r * F.sin(lamw) * F.cos(phig)
-        Vz = r * F.sin(phig)
-        tmp = F.lit(rg) - Vx
-        if flip:
-            xk = F.lit(rg1) * F.atan(Vy / F.hypot(Vz, tmp))
-            yk = F.lit(rg1) * F.atan(Vz / tmp)
+            phig, r = phic, "1.0D"
+        vx, vy, vz = S(f_vx=f"{r} * cos({lamw}) * cos({phig})",
+                       f_vy=f"{r} * sin({lamw}) * cos({phig})",
+                       f_vz=f"{r} * sin({phig})")
+        tmp = S(f_tmp=f"{L(rg)} - {vx}")
+        if P.params.get("sweep") == "x":
+            xk = f"{L(rg1)} * atan({vy} / hypot({vz}, {tmp}))"
+            yk = f"{L(rg1)} * atan({vz} / {tmp})"
         else:
-            xk = F.lit(rg1) * F.atan(Vy / tmp)
-            yk = F.lit(rg1) * F.atan(Vz / F.hypot(Vy, tmp))
-        if ell:
-            # visibility check (the sphere path skips it, like the
-            # kernel)
-            bad = ((F.lit(rg) - Vx) * Vx - Vy * Vy
-                   - Vz * Vz * F.lit(rp_inv2)) < 0.0
-            xk = F.when(bad, nan).otherwise(xk)
-            yk = F.when(bad, nan).otherwise(yk)
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name in ("ortho", "gnom"):
+            xk = f"{L(rg1)} * atan({vy} / {tmp})"
+            yk = f"{L(rg1)} * atan({vz} / hypot({vy}, {tmp}))"
+        if P.es != 0.0:
+            # visibility check (the sphere path skips it, like the kernel)
+            vis = S(f_vis=f"(({L(rg)} - {vx}) * {vx} - {vy} * {vy} - "
+                          f"{vz} * {vz} * {L(P.rone_es)}) < 0.0D")
+            xk = f"CASE WHEN {vis} THEN {_SQL_NAN} ELSE {xk} END"
+            yk = f"CASE WHEN {vis} THEN {_SQL_NAN} ELSE {yk} END"
+        return xk, yk, None
+    if name in ("ortho", "gnom"):
         # ortho.cpp:38-76/133-157, gnom.cpp:33-77: hemisphere-guarded
         # closed forms, all aspect modes
-        Qo = P.opaque
-        mode = Qo["mode"]
-        sinph0, cosph0 = float(Qo["sinph0"]), float(Qo["cosph0"])
-        cosphi = F.cos(phic)
-        sinphi = F.sin(phic)
-        coslam = F.cos(lamw)
-        sinlam = F.sin(lamw)
-        if P.name == "ortho" and P.es != 0.0:
-            nu0 = float(Qo["nu0"])
-            bad = (F.lit(sinph0) * sinphi
-                   + F.lit(cosph0) * cosphi * coslam) < -1e-10
-            nu = 1.0 / F.sqrt(1.0 - F.lit(P.es) * sinphi * sinphi)
-            xk = nu * cosphi * sinlam
-            yk = (nu * (sinphi * cosph0 - cosphi * sinph0 * coslam)
-                  + P.es * (F.lit(nu0 * sinph0) - nu * sinphi) * cosph0)
-        elif P.name == "ortho":
+        mode = Q["mode"]
+        s0, c0 = float(Q["sinph0"]), float(Q["cosph0"])
+        cosphi, sinphi, coslam, sinlam = S(
+            f_cp=f"cos({phic})", f_sp=f"sin({phic})",
+            f_cl=f"cos({lamw})", f_sl=f"sin({lamw})")
+        obliq = f"{L(s0)} * {sinphi} + {L(c0)} * {cosphi} * {coslam}"
+        obliq_y = f"{L(c0)} * {sinphi} - {L(s0)} * {cosphi} * {coslam}"
+        cl = f"(-{coslam})" if mode == "n_pole" else coslam
+        if name == "ortho" and P.es != 0.0:
+            nu = S(f_nu=f"1.0D / sqrt(1.0D - {L(P.es)} * {sinphi} * "
+                        f"{sinphi})")
+            return (f"{nu} * {cosphi} * {sinlam}",
+                    f"{nu} * ({sinphi} * {L(c0)} - {cosphi} * {L(s0)} * "
+                    f"{coslam}) + {L(P.es)} * ({L(float(Q['nu0']) * s0)} "
+                    f"- {nu} * {sinphi}) * {L(c0)}",
+                    f"({obliq}) < {L(-1e-10)}")
+        if name == "ortho":
             if mode == "equit":
-                bad = cosphi * coslam < -1e-10
-                yk = sinphi
+                bad, yk = f"{cosphi} * {coslam} < {L(-1e-10)}", sinphi
             elif mode == "obliq":
-                bad = (F.lit(sinph0) * sinphi
-                       + F.lit(cosph0) * cosphi * coslam) < -1e-10
-                yk = (F.lit(cosph0) * sinphi
-                      - F.lit(sinph0) * cosphi * coslam)
+                bad, yk = f"({obliq}) < {L(-1e-10)}", obliq_y
             else:
-                cl = -coslam if mode == "n_pole" else coslam
-                bad = (F.abs(phic - F.lit(P.phi0)) - 1e-10) > pi / 2.0
-                yk = cosphi * cl
-            xk = cosphi * sinlam
-        else:
-            # gnom: sphere formulas regardless of es (gnom.cpp)
-            if mode == "equit":
-                y0c = cosphi * coslam
-            elif mode == "obliq":
-                y0c = (F.lit(sinph0) * sinphi
-                       + F.lit(cosph0) * cosphi * coslam)
-            elif mode == "s_pole":
-                y0c = -sinphi
-            else:
-                y0c = sinphi
-            bad = y0c <= 1e-10
-            yi = 1.0 / F.when(bad, F.lit(1.0)).otherwise(y0c)
-            xk = yi * cosphi * sinlam
-            if mode == "equit":
-                yk = yi * sinphi
-            elif mode == "obliq":
-                yk = yi * (F.lit(cosph0) * sinphi
-                           - F.lit(sinph0) * cosphi * coslam)
-            else:
-                cl = -coslam if mode == "n_pole" else coslam
-                yk = yi * cosphi * cl
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "somerc":
+                bad = (f"(abs({phic} - {L(P.phi0)}) - {L(1e-10)}) > "
+                       f"{L(_H)}")
+                yk = f"{cosphi} * {cl}"
+            return f"{cosphi} * {sinlam}", yk, bad
+        # gnom: sphere formulas regardless of es (gnom.cpp)
+        y0c = S(f_y0={"equit": f"{cosphi} * {coslam}", "obliq": obliq,
+                      "s_pole": f"-{sinphi}"}.get(mode, sinphi))
+        bad = f"{y0c} <= {L(1e-10)}"
+        yi = S(f_yi=f"1.0D / (CASE WHEN {bad} THEN 1.0D ELSE {y0c} END)")
+        yk = {"equit": f"{yi} * {sinphi}",
+              "obliq": f"{yi} * ({obliq_y})"}.get(mode,
+                                                  f"{yi} * {cosphi} * {cl}")
+        return f"{yi} * {cosphi} * {sinlam}", yk, bad
+    if name == "somerc":
         # somerc.cpp:10-25; the setup constants (c, K, kR, phip0) are
-        # recomputed here with the same scalar formulas as the kernel
-        # closure (somerc.cpp:57-80) — deterministic plan-time math
+        # recomputed with the kernel closure's scalar formulas
+        # (somerc.cpp:57-80) — deterministic plan-time math
         e = P.e
         hlf_e = 0.5 * e
         cp0 = math.cos(P.phi0) ** 2
@@ -410,29 +691,19 @@ def _webmerc_jvm_columns(P, xcol, ycol, zcol, degrees: bool, z_supplied: bool):
               - cons * (math.log(math.tan(pi / 4.0 + 0.5 * P.phi0))
                         - hlf_e * math.log((1.0 + spe) / (1.0 - spe))))
         kR = P.k0 * math.sqrt(P.one_es) / (1.0 - spe * spe)
-
-        def _aasin(v):
-            return F.asin(F.greatest(F.least(v, F.lit(1.0)),
-                                     F.lit(-1.0)))
-
-        spc = F.sin(phic) * e
-        phip = (2.0 * F.atan(F.exp(
-            cons * (F.log(F.tan(pi / 4.0 + 0.5 * phic))
-                    - hlf_e * F.log((1.0 + spc) / (1.0 - spc)))
-            + F.lit(Kc))) - F.lit(pi / 2.0))
-        lamp = cons * lamw
-        cpp = F.cos(phip)
-        phipp = _aasin(F.lit(cosp0) * F.sin(phip)
-                       - F.lit(sinp0) * cpp * F.cos(lamp))
-        lampp = _aasin(cpp * F.sin(lamp) / F.cos(phipp))
-        xk = kR * lampp
-        yk = kR * F.log(F.tan(pi / 4.0 + 0.5 * phipp))
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "krovak":
+        spc = S(f_spc=f"sin({phic}) * {L(e)}")
+        phip = S(f_phip=f"2.0D * atan(exp({L(cons)} * (ln(tan("
+                        f"{L(pi / 4.0)} + 0.5D * {phic})) - {L(hlf_e)} * "
+                        f"ln((1.0D + {spc}) / (1.0D - {spc}))) + {L(Kc)}))"
+                        f" - {L(_H)}")
+        lamp, cpp = S(f_lamp=f"{L(cons)} * {lamw}", f_cpp=f"cos({phip})")
+        phipp = S(f_phipp="asin(" + _clip1(
+            f"{L(cosp0)} * sin({phip}) - {L(sinp0)} * {cpp} * cos({lamp})")
+            + ")")
+        lampp = _clip1(f"{cpp} * sin({lamp}) / cos({phipp})")
+        return (f"{L(kR)} * asin({lampp})",
+                f"{L(kR)} * ln(tan({L(pi / 4.0)} + 0.5D * {phipp}))", None)
+    if name == "krovak":
         # krovak.cpp:86-240; setup constants recomputed with the same
         # scalar formulas (P.a/P.es already stomped to Bessel at setup)
         e = P.e
@@ -451,741 +722,405 @@ def _webmerc_jvm_columns(P, xcol, ycol, zcol, degrees: bool, z_supplied: bool):
         n = math.sin(S0)
         rho0 = P.k0 * n0 / math.tan(S0)
         ad = pi / 2.0 - UQ
-
-        def _clip1(v):
-            return F.greatest(F.least(v, F.lit(1.0)), F.lit(-1.0))
-
-        esin = F.sin(phic) * e
-        gfi = F.pow((1.0 + esin) / (1.0 - esin), F.lit(alpha * e / 2.0))
-        u = 2.0 * (F.atan(kk * F.pow(F.tan(phic / 2.0 + F.lit(pi / 4.0)),
-                                     F.lit(alpha)) / gfi)
-                   - F.lit(pi / 4.0))
-        deltav = -lamw * alpha
-        s = F.asin(_clip1(F.lit(math.cos(ad)) * F.sin(u)
-                          + F.lit(math.sin(ad)) * F.cos(u)
-                          * F.cos(deltav)))
-        cos_s = F.cos(s)
-        degenerate = cos_s < 1e-12
-        d = F.asin(_clip1(F.cos(u) * F.sin(deltav)
-                          / F.when(degenerate, F.lit(1.0))
-                          .otherwise(cos_s)))
-        epsc = n * d
-        rho = (rho0 * math.pow(math.tan(S0 / 2.0 + pi / 4.0), n)
-               / F.pow(F.tan(s / 2.0 + F.lit(pi / 4.0)), F.lit(n)))
-        yk = F.when(degenerate, F.lit(0.0)).otherwise(
-            rho * F.cos(epsc) * czech)
-        xk = F.when(degenerate, F.lit(0.0)).otherwise(
-            rho * F.sin(epsc) * czech)
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "sterea":
+        esin = S(f_esin=f"sin({phic}) * {L(e)}")
+        u, dv = S(f_u=f"2.0D * (atan({L(kk)} * power(tan({phic} / 2.0D + "
+                      f"{L(pi / 4.0)}), {L(alpha)}) / power((1.0D + {esin})"
+                      f" / (1.0D - {esin}), {L(alpha * e / 2.0)})) - "
+                      f"{L(pi / 4.0)})",
+                  f_dv=f"(-{lamw}) * {L(alpha)}")
+        s = S(f_s="asin(" + _clip1(
+            f"{L(math.cos(ad))} * sin({u}) + {L(math.sin(ad))} * cos({u})"
+            f" * cos({dv})") + ")")
+        cs = S(f_cs=f"cos({s})")
+        dg = f"{cs} < {L(1e-12)}"
+        d = S(f_d="asin(" + _clip1(
+            f"cos({u}) * sin({dv}) / (CASE WHEN {dg} THEN 1.0D "
+            f"ELSE {cs} END)") + ")")
+        rr = rho0 * math.pow(math.tan(S0 / 2.0 + pi / 4.0), n)
+        rho, ep = S(f_rho=f"{L(rr)} / power(tan({s} / 2.0D + "
+                          f"{L(pi / 4.0)}), {L(n)})",
+                    f_ep=f"{L(n)} * {d}")
+        return (f"CASE WHEN {dg} THEN 0.0D ELSE {rho} * sin({ep}) * "
+                f"{L(czech)} END",
+                f"CASE WHEN {dg} THEN 0.0D ELSE {rho} * cos({ep}) * "
+                f"{L(czech)} END", None)
+    if name == "sterea":
         # sterea.cpp:46-67 over gauss.cpp:84-94: conformal-sphere
         # latitude via one atan/pow, then the oblique stereographic;
         # C/K/ratexp/sinc0/cosc0/R2 fold at plan time
-        Qo = P.opaque
-        Cc, Kc = float(Qo["C"]), float(Qo["K"])
-        ratexp = float(Qo["ratexp"])
-        sinc0, cosc0 = float(Qo["sinc0"]), float(Qo["cosc0"])
-        R2 = float(Qo["R2"])
-        e = P.e
-        esin = F.sin(phic) * e
-        srat = F.pow((1.0 - esin) / (1.0 + esin), F.lit(ratexp))
-        sphi = (2.0 * F.atan(
-            Kc * F.pow(F.tan(0.5 * phic + F.lit(pi / 4.0)), F.lit(Cc))
-            * srat) - F.lit(pi / 2.0))
-        slam = Cc * lamw
-        sinc = F.sin(sphi)
-        cosc = F.cos(sphi)
-        cosl = F.cos(slam)
-        denom = 1.0 + F.lit(sinc0) * sinc + F.lit(cosc0) * cosc * cosl
-        bad = denom == 0.0
-        kk = P.k0 * R2 / F.when(bad, F.lit(1.0)).otherwise(denom)
-        xk = kk * cosc * F.sin(slam)
-        yk = kk * (F.lit(cosc0) * sinc - F.lit(sinc0) * cosc * cosl)
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "laea":
-        # laea.cpp:35-137: authalic sin-beta = qsfn(sin phi)/qp; the
-        # xmf/ymf/qp/sinb1/cosb1 constants fold at plan time
-        Qo = P.opaque
-        mode = Qo["mode"]
-        sinlam = F.sin(lamw)
-        coslam = F.cos(lamw)
-        sinphi = F.sin(phic)
-        if P.es != 0.0:
-            e = P.e
-            con = sinphi * e
-            q = P.one_es * (sinphi / (1.0 - con * con)
-                            - F.lit(0.5 / e)
-                            * F.log((1.0 - con) / (1.0 + con)))
-            qp = float(Qo["qp"])
-            if mode in ("obliq", "equit"):
-                sinb1, cosb1 = float(Qo["sinb1"]), float(Qo["cosb1"])
-                xmf, ymf = float(Qo["xmf"]), float(Qo["ymf"])
-                sinb = q / qp
-                cosb2 = 1.0 - sinb * sinb
-                cosb = F.when(cosb2 > 0.0,
-                              F.sqrt(F.greatest(cosb2, F.lit(0.0)))
-                              ).otherwise(F.lit(0.0))
-                if mode == "obliq":
-                    b = (1.0 + F.lit(sinb1) * sinb
-                         + F.lit(cosb1) * cosb * coslam)
-                else:
-                    b = 1.0 + cosb * coslam
-                bad = F.abs(b) < 1e-10
-                bb = F.sqrt(2.0 / F.when(bad, F.lit(1.0)).otherwise(b))
-                if mode == "obliq":
-                    yk = ymf * bb * (F.lit(cosb1) * sinb
-                                     - F.lit(sinb1) * cosb * coslam)
-                else:
-                    yk = bb * sinb * ymf
-                xk = xmf * bb * cosb * sinlam
-            else:
-                if mode == "n_pole":
-                    b = F.lit(pi / 2.0) + phic
-                    qq = F.lit(qp) - q
-                else:
-                    b = phic - F.lit(pi / 2.0)
-                    qq = F.lit(qp) + q
-                bad = F.abs(b) < 1e-10
-                small = qq < 1e-15
-                bb = F.sqrt(F.greatest(qq, F.lit(0.0)))
-                xk = F.when(small, F.lit(0.0)).otherwise(bb * sinlam)
-                yk = F.when(small, F.lit(0.0)).otherwise(
-                    coslam * (bb if mode == "s_pole" else -bb))
-        else:
-            cosphi = F.cos(phic)
-            if mode in ("equit", "obliq"):
-                sinb1, cosb1 = float(Qo["sinb1"]), float(Qo["cosb1"])
-                if mode == "equit":
-                    b = 1.0 + cosphi * coslam
-                else:
-                    b = (1.0 + F.lit(sinb1) * sinphi
-                         + F.lit(cosb1) * cosphi * coslam)
-                bad = b <= 1e-10
-                bb = F.sqrt(2.0 / F.when(bad, F.lit(1.0)).otherwise(b))
-                xk = bb * cosphi * sinlam
-                if mode == "equit":
-                    yk = bb * sinphi
-                else:
-                    yk = bb * (F.lit(cosb1) * sinphi
-                               - F.lit(sinb1) * cosphi * coslam)
-            else:
-                pcoslam = -coslam if mode == "n_pole" else coslam
-                bad = F.abs(phic + F.lit(P.phi0)) < 1e-10
-                half = F.lit(pi / 4.0) - phic * 0.5
-                yy = 2.0 * (F.cos(half) if mode == "s_pole"
-                            else F.sin(half))
-                xk = yy * sinlam
-                yk = yy * pcoslam
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name in ("stere", "ups"):
-        # stere.cpp:44-140 (ellipsoidal 44-96, spherical 99-140); akm1
-        # folds k0/lat_ts at setup; all four aspect modes mirrored
-        Qo = P.opaque
-        mode = Qo["mode"]
-        akm1 = float(Qo["akm1"])
-        sinX1, cosX1 = float(Qo["sinX1"]), float(Qo["cosX1"])
-        sinlam = F.sin(lamw)
-        coslam = F.cos(lamw)
-        sinphi = F.sin(phic)
-        bad = F.lit(False)
-        if P.es != 0.0:
-            e = P.e
-            if mode in ("obliq", "equit"):
-                esin = sinphi * e
-                ssfn = (F.tan(0.5 * (F.lit(pi / 2.0) + phic))
-                        * F.pow((1.0 - esin) / (1.0 + esin),
-                                F.lit(0.5 * e)))
-                Xc = 2.0 * F.atan(ssfn) - F.lit(pi / 2.0)
-                sinX = F.sin(Xc)
-                cosX = F.cos(Xc)
-                if mode == "obliq":
-                    denom = cosX1 * (1.0 + F.lit(sinX1) * sinX
-                                     + F.lit(cosX1) * cosX * coslam)
-                    bad = denom == 0.0
-                    A = akm1 / F.when(bad, F.lit(1.0)).otherwise(denom)
-                    yk = A * (F.lit(cosX1) * sinX
-                              - F.lit(sinX1) * cosX * coslam)
-                    xk = A * cosX
-                else:
-                    denom = 1.0 + cosX * coslam
-                    bad = denom == 0.0
-                    A = akm1 / F.when(bad, F.lit(1.0)).otherwise(denom)
-                    yk = A * sinX
-                    xk = A * cosX
-            else:
-                pphi, pcoslam, psin = ((-phic, -coslam, -sinphi)
-                                       if mode == "s_pole"
-                                       else (phic, coslam, sinphi))
-                pesin = psin * e
-                ts = (F.tan(0.5 * (F.lit(pi / 2.0) - pphi))
-                      / F.pow((1.0 - pesin) / (1.0 + pesin),
-                              F.lit(0.5 * e)))
-                xk = akm1 * ts
-                yk = -xk * pcoslam
-            xk = xk * sinlam
-        else:
-            cosphi = F.cos(phic)
-            if mode in ("obliq", "equit"):
-                if mode == "equit":
-                    denom = 1.0 + cosphi * coslam
-                else:
-                    denom = (1.0 + F.lit(sinX1) * sinphi
-                             + F.lit(cosX1) * cosphi * coslam)
-                bad = denom <= 1.0e-10
-                A = akm1 / F.when(bad, F.lit(1.0)).otherwise(denom)
-                xk = A * cosphi * sinlam
-                if mode == "equit":
-                    yk = A * sinphi
-                else:
-                    yk = A * (F.lit(cosX1) * sinphi
-                              - F.lit(sinX1) * cosphi * coslam)
-            else:
-                pphi, pcoslam = ((-phic, -coslam) if mode == "n_pole"
-                                 else (phic, coslam))
-                bad = F.abs(pphi - F.lit(pi / 2.0)) < 1.0e-8
-                yb = akm1 * F.tan(pi / 4.0 + 0.5 * pphi)
-                xk = sinlam * yb
-                yk = yb * pcoslam
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "lcc":
-        # lcc.cpp:23-43: rho = c*tsfn(phi)^n (ellipsoid) or
-        # c*tan(pi/4+phi/2)^-n (sphere); pole rows are exact (rho=0)
-        # unless on the wrong side of the cone (n*phi <= 0 -> NaN)
-        Qo = P.opaque
-        n, c, rho0, k0 = (float(Qo["n"]), float(Qo["c"]),
-                          float(Qo["rho0"]), P.k0)
-        at_pole = F.abs(F.abs(phic) - F.lit(pi / 2.0)) < 1e-10
-        bad = at_pole & ((phic * n) <= 0.0)
-        if P.es != 0.0:
-            e = P.e
-            esin = F.sin(phic) * e
-            ts = (F.tan(0.5 * (F.lit(pi / 2.0) - phic))
-                  / F.pow((1.0 - esin) / (1.0 + esin), F.lit(0.5 * e)))
-            rho = c * F.pow(ts, F.lit(n))
-        else:
-            rho = c * F.pow(F.tan(pi / 4.0 + 0.5 * phic), F.lit(-n))
-        rho = F.when(at_pole, F.lit(0.0)).otherwise(rho)
-        lamn = lamw * n
-        xk = k0 * (rho * F.sin(lamn))
-        yk = k0 * (F.lit(rho0) - rho * F.cos(lamn))
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name in ("aea", "leac"):
-        # aea.cpp:105-118: rho^2 = c - n*q(sin phi); negative -> NaN
-        Qo = P.opaque
-        c, dd, rho0 = float(Qo["c"]), float(Qo["dd"]), float(Qo["rho0"])
-        n = float(Qo["n"])
-        sphi = F.sin(phic)
-        if Qo["ellips"]:
-            e = P.e
-            con = sphi * e
-            q = P.one_es * (sphi / (1.0 - con * con)
-                            - F.lit(0.5 / e)
-                            * F.log((1.0 - con) / (1.0 + con)))
-            rho2 = c - F.lit(n) * q
-        else:
-            rho2 = c - F.lit(float(Qo["n2"])) * sphi
-        bad = rho2 < 0.0
-        rho = dd * F.sqrt(F.when(bad, F.lit(0.0)).otherwise(rho2))
-        lamn = lamw * n
-        xk = rho * F.sin(lamn)
-        yk = F.lit(rho0) - rho * F.cos(lamn)
-        err = err | bad
-        xe = F.lit(P.fr_meter) * (xk * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "cea":
-        # cea.cpp:20-34: x = k0*lam; y = sin(phi)/k0 (sphere) or
-        # 0.5*qsfn(sin(phi))/k0 (ellipsoid; qsfn src/qsfn.cpp:9-25)
-        k0 = P.k0
-        sphi = F.sin(phic)
-        if P.es != 0.0:
-            e = P.e
-            con = sphi * e
-            q = P.one_es * (sphi / (1.0 - con * con)
-                            - F.lit(0.5 / e)
-                            * F.log((1.0 - con) / (1.0 + con)))
-            yk = 0.5 * q / k0
-        else:
-            yk = sphi / k0
-        xe = F.lit(P.fr_meter) * (k0 * lamw * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * (yk * P.a + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.name == "eqc":
-        # eqc.cpp:19-27: x = cos(lat_ts)*lam, y = phi - phi0; the rc
-        # constant folds at plan time; k0 is 1 in the shared finalize
-        rc = float(P.opaque["rc"])
-        xe = F.lit(P.fr_meter) * (F.lit(rc) * lamw * P.a + F.lit(P.x0))
-        ye = F.lit(P.fr_meter) * ((phic - F.lit(P.phi0)) * P.a
-                                  + F.lit(P.y0))
-        xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-        yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-        return xout, yout
-    if P.es != 0.0 and P.name == "merc":
-        # ellipsoidal forward (merc.cpp:22-31): y = -k0*log(tsfn);
-        # tsfn = tan((pi/2 - phi)/2) / ((1-e sin phi)/(1+e sin phi))^(e/2)
-        # (src/tsfn.cpp:6-17); k0 applies at the shared finalize below
-        e = P.e
-        esin = F.sin(phic) * e
-        ts = (F.tan(0.5 * (F.lit(pi / 2.0) - phic))
-              / F.pow((1.0 - esin) / (1.0 + esin), F.lit(0.5 * e)))
-        ywm = -F.log(ts)
-    else:
-        ywm = F.when(F.abs(phic) <= eps, F.log1p(phic)).otherwise(
-            F.log(F.tan(pi / 4.0 + 0.5 * phic)))
-    k0 = P.k0
-    xe = F.lit(P.fr_meter) * (k0 * lamw * P.a + F.lit(P.x0))
-    ye = F.lit(P.fr_meter) * (k0 * ywm * P.a + F.lit(P.y0))
-    xout = F.when(err, nan).otherwise(F.coalesce(xe, nan))
-    yout = F.when(err, nan).otherwise(F.coalesce(ye, nan))
-    return xout, yout
-
-
-def _inv_jvm_fast_path_ok(op, direction: str) -> bool:
-    """True for bare INVERSE webmerc / spherical-merc / eqc / cea /
-    laea / spherical stere/ups / spherical sinu / spherical eqdc — the
-    closed-form inverses (atan∘sinh, linear, authalic-latitude series
-    auth.cpp:33-38) with no datum/grid/axis modifiers; tile->lon/lat
-    and reverse-geocode style workloads run with zero Python workers.
-    Ellipsoidal stere/sinu/eqdc inverses need Newton/fixed-point
-    iteration and stay on the Arrow-UDF path."""
-    P = getattr(op, "P", None)
-    if P is None or direction != "inv":
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if not _inv_twin_name_ok(P):
-        return False
-    return _bare_op_ok(P)
-
-
-def _inv_jvm_columns(P, xcol, ycol, zcol, degrees: bool,
-                     z_supplied: bool):
-    """Catalyst twin of the inverse prepare/kernel/finalize chain for
-    webmerc / spherical merc (lam = x/k0, phi = atan(sinh(y/k0)),
-    merc.cpp:57-62) and eqc (linear, eqc.cpp:30-38): inv_prepare scales
-    (to_meter*v - offset) * 1/a (inv.cpp), inv_finalize adds lam0 and
-    wraps.  Parity pinned like the forward twins."""
-    from pyspark.sql import functions as F
-
-    nan = F.lit(float("nan"))
-    pi = math.pi
-    err = (
-        xcol.isNull() | F.isnan(xcol.cast("double"))
-        | ycol.isNull() | F.isnan(ycol.cast("double"))
-    )
-    if z_supplied:
-        err = err | zcol.isNull() | F.isnan(zcol.cast("double"))
-    xm = (F.lit(P.to_meter) * xcol.cast("double") - F.lit(P.x0)) * P.ra
-    ym = (F.lit(P.to_meter) * ycol.cast("double") - F.lit(P.y0)) * P.ra
-
-    def clip1(v):
-        return F.greatest(F.least(v, F.lit(1.0)), F.lit(-1.0))
-
-    def atan2_ieee(yc, xc):
-        # Spark's Atan2 evaluates Math.atan2(y + 0.0, x + 0.0), which
-        # collapses -0.0 to +0.0 — but the kernels rely on IEEE signed
-        # zeros (np.arctan2(0.0, -0.0) = pi, e.g. the polar-aspect
-        # origin row).  Restore IEEE semantics on the y == 0 boundary;
-        # the sign of a zero is detected via its string form
-        # (Double.toString(-0.0) = "-0.0"); only rows with y == 0 ever
-        # evaluate these branches (CaseWhen codegen is lazy), so the
-        # cast is off the hot path.
-        xneg = xc.cast("string").startswith("-")
-        yneg = yc.cast("string").startswith("-")
-        return (F.when(F.isnan(xc) | F.isnan(yc), nan)
-                 .when(yc == 0.0,
-                       F.when(xneg & yneg, F.lit(-pi))
-                        .when(xneg, F.lit(pi))
-                        .when(yneg, F.lit(-0.0))
-                        .otherwise(F.lit(0.0)))
-                 .otherwise(F.atan2(yc, xc)))
-
-    def authlat(beta, apa):
-        # src/auth.cpp:33-38 (3-term closed series)
-        t2 = beta + beta
-        return (beta + F.lit(float(apa[0])) * F.sin(t2)
-                + F.lit(float(apa[1])) * F.sin(t2 + t2)
-                + F.lit(float(apa[2])) * F.sin(t2 + t2 + t2))
-
-    Qo = P.opaque
-    if P.name == "eqc":
-        rc = float(Qo["rc"])
-        lam = xm / rc
-        phi = ym + F.lit(P.phi0)
-    elif P.name == "cea":
-        # cea.cpp:37-61
-        if P.es != 0.0:
-            beta = F.asin(clip1(2.0 * ym * P.k0 / float(Qo["qp"])))
-            phi = authlat(beta, Qo["apa"])
-            lam = xm / P.k0
-        else:
-            yk = ym * P.k0
-            ta = F.abs(yk)
-            ok = (ta - 1e-10) <= 1.0
-            phi = F.when(ok,
-                         F.when(ta >= 1.0,
-                                F.when(yk < 0.0, F.lit(-pi / 2.0))
-                                 .otherwise(F.lit(pi / 2.0)))
-                          .otherwise(F.asin(clip1(yk)))).otherwise(nan)
-            lam = F.when(ok, xm / P.k0).otherwise(nan)
-    elif P.name == "laea":
-        # laea.cpp:140-228
-        mode = Qo["mode"]
-        if P.es != 0.0:
-            apa, qp = Qo["apa"], float(Qo["qp"])
-            if mode in ("equit", "obliq"):
-                dd, rq = float(Qo["dd"]), float(Qo["rq"])
-                x2 = xm / dd
-                y2 = ym * dd
-                rho = F.hypot(x2, y2)
-                center = rho < 1e-10
-                sCe0 = 2.0 * F.asin(clip1(0.5 * rho / rq))
-                cCe = F.cos(sCe0)
-                sCe = F.sin(sCe0)
-                rho_safe = F.when(center, F.lit(1.0)).otherwise(rho)
-                xs = x2 * sCe
-                if mode == "obliq":
-                    sb1, cb1 = float(Qo["sinb1"]), float(Qo["cosb1"])
-                    ab = cCe * sb1 + y2 * sCe * cb1 / rho_safe
-                    ys = rho * cb1 * cCe - y2 * sb1 * sCe
-                else:
-                    ab = y2 * sCe / rho_safe
-                    ys = rho * cCe
-                lam = F.when(center, F.lit(0.0)).otherwise(atan2_ieee(xs, ys))
-                phi = F.when(center, F.lit(P.phi0)).otherwise(
-                    authlat(F.asin(clip1(ab)), apa))
-            else:
-                yy = -ym if mode == "n_pole" else ym
-                q = xm * xm + yy * yy
-                center = q == 0.0
-                ab = 1.0 - q / qp
-                if mode == "s_pole":
-                    ab = -ab
-                lam = F.when(center, F.lit(0.0)).otherwise(atan2_ieee(xm, yy))
-                phi = F.when(center, F.lit(P.phi0)).otherwise(
-                    authlat(F.asin(clip1(ab)), apa))
-        else:
-            rh = F.hypot(xm, ym)
-            bad = rh * 0.5 > 1.0
-            phz = 2.0 * F.asin(clip1(rh * 0.5))
-            if mode in ("obliq", "equit"):
-                sinz = F.sin(phz)
-                cosz = F.cos(phz)
-                rh_safe = F.when(rh == 0.0, F.lit(1.0)).otherwise(rh)
-                if mode == "equit":
-                    phi = F.when(F.abs(rh) <= 1e-10, F.lit(0.0)).otherwise(
-                        F.asin(clip1(ym * sinz / rh_safe)))
-                    xs = xm * sinz
-                    ys = cosz * rh
-                else:
-                    sb1, cb1 = float(Qo["sinb1"]), float(Qo["cosb1"])
-                    phi = F.when(F.abs(rh) <= 1e-10,
-                                 F.lit(P.phi0)).otherwise(
-                        F.asin(clip1(cosz * sb1 + ym * sinz * cb1
-                                     / rh_safe)))
-                    xs = xm * sinz * cb1
-                    ys = (cosz - F.sin(phi) * sb1) * rh
-                lam = F.when(ys == 0.0, F.lit(0.0)).otherwise(
-                    atan2_ieee(xs, ys))
-            elif mode == "n_pole":
-                phi = F.lit(pi / 2.0) - phz
-                lam = atan2_ieee(xm, -ym)
-            else:
-                phi = phz - F.lit(pi / 2.0)
-                lam = atan2_ieee(xm, ym)
-            phi = F.when(bad, nan).otherwise(phi)
-            lam = F.when(bad, nan).otherwise(lam)
-    elif P.name in ("stere", "ups"):
-        # stere.cpp:193-234 (spherical only; e_inverse iterates)
-        mode = Qo["mode"]
-        akm1 = float(Qo["akm1"])
-        rh = F.hypot(xm, ym)
-        c2 = 2.0 * F.atan(rh / akm1)
-        sinc = F.sin(c2)
-        cosc = F.cos(c2)
-        rh_safe = F.when(rh == 0.0, F.lit(1.0)).otherwise(rh)
-        if mode == "equit":
-            phi = F.when(F.abs(rh) <= 1e-10, F.lit(0.0)).otherwise(
-                F.asin(clip1(ym * sinc / rh_safe)))
-            lam = F.when((cosc != 0.0) | (xm != 0.0),
-                         atan2_ieee(xm * sinc, cosc * rh)).otherwise(F.lit(0.0))
-        elif mode == "obliq":
-            sX1, cX1 = float(Qo["sinX1"]), float(Qo["cosX1"])
-            phi = F.when(F.abs(rh) <= 1e-10, F.lit(P.phi0)).otherwise(
-                F.asin(clip1(cosc * sX1 + ym * sinc * cX1 / rh_safe)))
-            cc = cosc - sX1 * F.sin(phi)
-            lam = F.when((cc != 0.0) | (xm != 0.0),
-                         atan2_ieee(xm * sinc * cX1, cc * rh)
-                         ).otherwise(F.lit(0.0))
-        else:
-            yy = -ym if mode == "n_pole" else ym
-            pole = -cosc if mode == "s_pole" else cosc
-            phi = F.when(F.abs(rh) <= 1e-10, F.lit(P.phi0)).otherwise(
-                F.asin(clip1(pole)))
-            lam = F.when((xm == 0.0) & (yy == 0.0), F.lit(0.0)).otherwise(
-                atan2_ieee(xm, yy))
-    elif P.name == "sinu":
-        # gn_sinu.cpp:88-97 spherical branch (setup pins n=1, m=0)
-        yy = ym / float(Qo["C_y"])
-        phi = yy
-        lam = xm / (float(Qo["C_x"]) * F.cos(yy))
-    elif P.name == "cass":
-        # cass.cpp spherical inverse (closed form)
-        dd = ym + F.lit(P.phi0)
-        phi = F.asin(clip1(F.sin(dd) * F.cos(xm)))
-        lam = atan2_ieee(F.tan(xm), F.cos(dd))
-    elif P.name == "ortho":
-        # ortho.cpp:79-128 spherical inverse, all aspect modes
-        Qo2 = P.opaque
-        mode = Qo2["mode"]
-        rh = F.hypot(xm, ym)
-        bad = (rh - 1.0) > 1e-10
-        sinc = F.least(rh, F.lit(1.0))
-        cosc = F.sqrt(F.greatest(1.0 - sinc * sinc, F.lit(0.0)))
-        center = rh <= 1e-10
-        rh_safe = F.when(rh == 0.0, F.lit(1.0)).otherwise(rh)
-        if mode in ("n_pole", "s_pole"):
-            sgn = 1.0 if mode == "n_pole" else -1.0
-            phi = sgn * F.acos(clip1(sinc))
-            lam = atan2_ieee(xm, -sgn * ym)
-        else:
-            if mode == "equit":
-                raw = ym * sinc / rh_safe
-                xx = xm * sinc
-                yy = cosc * rh
-            else:
-                s0, c0 = float(Qo2["sinph0"]), float(Qo2["cosph0"])
-                raw = cosc * s0 + ym * sinc * c0 / rh_safe
-                yy = (cosc - s0 * raw) * rh
-                xx = xm * sinc * c0
-            phi = F.when(F.abs(raw) >= 1.0,
-                         F.when(raw < 0.0, F.lit(-pi / 2.0))
-                          .otherwise(F.lit(pi / 2.0))
-                         ).otherwise(F.asin(clip1(raw)))
-            lam = F.when(yy == 0.0,
-                         F.when(xx == 0.0, F.lit(0.0))
-                          .when(xx < 0.0, F.lit(-pi / 2.0))
-                          .otherwise(F.lit(pi / 2.0))
-                         ).otherwise(atan2_ieee(xx, yy))
-        phi = F.when(center, F.lit(P.phi0)).otherwise(phi)
-        lam = F.when(center, F.lit(0.0)).otherwise(lam)
-        phi = F.when(bad, nan).otherwise(phi)
-        lam = F.when(bad, nan).otherwise(lam)
-    elif P.name == "gnom":
-        # gnom.cpp:80-125 spherical inverse, all aspect modes
-        Qo2 = P.opaque
-        mode = Qo2["mode"]
-        rh = F.hypot(xm, ym)
-        phi0a = F.atan(rh)
-        sinz = F.sin(phi0a)
-        cosz = F.sqrt(1.0 - sinz * sinz)
-        center = F.abs(rh) <= 1e-10
-        rh_safe = F.when(center, F.lit(1.0)).otherwise(rh)
-        if mode in ("obliq", "equit"):
-            if mode == "obliq":
-                s0, c0 = float(Qo2["sinph0"]), float(Qo2["cosph0"])
-                raw = cosz * s0 + ym * sinz * c0 / rh_safe
-            else:
-                raw = ym * sinz / rh_safe
-            phi = F.when(F.abs(raw) >= 1.0,
-                         F.when(raw > 0.0, F.lit(pi / 2.0))
-                          .otherwise(F.lit(-pi / 2.0))
-                         ).otherwise(F.asin(clip1(raw)))
-            if mode == "obliq":
-                yy = (cosz - F.lit(s0) * F.sin(phi)) * rh
-                xx = xm * sinz * c0
-            else:
-                yy = cosz * rh
-                xx = xm * sinz
-        elif mode == "s_pole":
-            phi = phi0a - F.lit(pi / 2.0)
-            xx, yy = xm, ym
-        else:
-            phi = F.lit(pi / 2.0) - phi0a
-            xx, yy = xm, -ym
-        lam = atan2_ieee(xx, yy)
-        phi = F.when(center, F.lit(P.phi0)).otherwise(phi)
-        lam = F.when(center, F.lit(0.0)).otherwise(lam)
-    elif P.name in ("moll", "wag4", "wag5"):
-        # moll.cpp:45-58 inverse (closed form; the Newton is
-        # forward-only).  cos(asin(±1)) is ~6.1e-17, never exactly 0,
-        # so the lam division cannot hit ANSI divide-by-zero
-        C_x, C_y, C_p = (float(Qo["C_x"]), float(Qo["C_y"]),
-                         float(Qo["C_p"]))
-        ph1 = F.asin(clip1(ym / C_y))
-        lam_raw = xm / (F.lit(C_x) * F.cos(ph1))
-        ok = F.abs(lam_raw) < pi
-        ph2 = ph1 + ph1
-        phi = F.when(ok,
-                     F.asin(clip1((ph2 + F.sin(ph2)) / C_p))
-                     ).otherwise(nan)
-        lam = F.when(ok, lam_raw).otherwise(nan)
-    elif P.name == "geos":
-        # geos.cpp inverse (closed-form ray/ellipsoid intersection);
-        # closure constants recomputed at plan time like the forward
-        h = P.param_f("h")
-        flip = P.params.get("sweep") == "x"
-        rg1 = h / P.a
-        rg = 1.0 + rg1
-        Cq = rg * rg - 1.0
-        ell = P.es != 0.0
-        rp = math.sqrt(P.one_es) if ell else 1.0
-        rp_inv2 = P.rone_es if ell else 1.0
-        if flip:
-            Vz = F.tan(ym / rg1)
-            Vy = F.tan(xm / rg1) * (F.hypot(F.lit(1.0), Vz) if ell
-                                    else F.sqrt(1.0 + Vz * Vz))
-        else:
-            Vy = F.tan(xm / rg1)
-            Vz = F.tan(ym / rg1) * (F.hypot(F.lit(1.0), Vy) if ell
-                                    else F.sqrt(1.0 + Vy * Vy))
-        if ell:
-            azp = Vz / rp
-            aa = Vy * Vy + azp * azp + 1.0
-        else:
-            aa = Vy * Vy + Vz * Vz + 1.0
-        bb = 2.0 * rg * -1.0  # Vx = -1 (geos.cpp)
-        det = F.lit(bb * bb) - 4.0 * aa * Cq
-        bad = det < 0.0
-        kq = (F.lit(-bb) - F.sqrt(F.greatest(det, F.lit(0.0)))) \
-            / (2.0 * aa)
-        Vx2 = F.lit(rg) + kq * F.lit(-1.0)
-        Vy2 = Vy * kq
-        Vz2 = Vz * kq
-        lam = atan2_ieee(Vy2, Vx2)
-        # Vx2 > 0 for every det>=0 lane (k <= rg/aa < rg), so the
-        # division cannot hit the ANSI divide-by-zero path
-        phi = F.atan(Vz2 * F.cos(lam) / Vx2)
-        if ell:
-            phi = F.atan(F.lit(rp_inv2) * F.tan(phi))
-        lam = F.when(bad, nan).otherwise(lam)
-        phi = F.when(bad, nan).otherwise(phi)
-    elif P.name == "eqdc":
-        # eqdc.cpp inverse, spherical branch (phi = c - rho)
-        n, c, rho0 = float(Qo["n"]), float(Qo["c"]), float(Qo["rho0"])
-        yy = F.lit(rho0) - ym
-        rho = F.hypot(xm, yy)
-        if n < 0.0:
-            rho = -rho
-            xs, ys = -xm, -yy
-        else:
-            xs, ys = xm, yy
-        nonzero = rho != 0.0
-        lam = F.when(nonzero, atan2_ieee(xs, ys) / n).otherwise(F.lit(0.0))
-        phi = F.when(nonzero, c - rho).otherwise(
-            F.lit(pi / 2.0 if n > 0.0 else -pi / 2.0))
-    else:
-        k0 = P.k0
-        lam = xm / k0
-        phi = F.atan(F.sinh(ym / k0))
-    lam = lam + F.lit(P.lam0)
-    lam = F.when(
-        F.abs(lam) >= F.lit(pi + 1e-12),
-        (lam + pi) - 2.0 * pi * F.floor((lam + pi) / (2.0 * pi)) - pi,
-    ).otherwise(lam)
-    if degrees:
-        r2d = C.RAD_TO_DEG
-        lam = lam * r2d
-        phi = phi * r2d
-    xout = F.when(err, nan).otherwise(F.coalesce(lam, nan))
-    yout = F.when(err, nan).otherwise(F.coalesce(phi, nan))
-    return xout, yout
-
-
-# --- iterative inverse twins: lcc / aea / leac / ellipsoidal merc -----------
-#
-# The dominant conic families' ellipsoidal inverses need the bounded
-# phi2 (src/phi2.cpp:12-83) / phi1 (src/projections/aea.cpp:48-70)
-# iterations.  Both unroll to their reference iteration bound as staged
-# SQL with a carried `done` flag that FREEZES converged lanes — the
-# per-lane update sequence is identical to the masked-lane NumPy
-# kernels, so twin/UDF parity is exact, not approximate.  Spark-SQL NaN
-# semantics differ from IEEE (NaN sorts above +Infinity in every
-# comparison), so convergence tests are phrased as
-# `abs(dphi) > TOL AND abs(v) < Infinity`: the finite guard is False
-# for NaN under Spark ordering, reproducing numpy's isfinite stop.
-
-
-def _iter_inv_sql_ok(P) -> bool:
-    """Families served by the staged iterative-inverse twin (the
-    closed-form ones live in _inv_jvm_columns): phi2 for lcc/merc,
-    phi1 for aea/leac, inv_mlfn for ellipsoidal eqdc/sinu/cass."""
-    from proj_4_spark.kernels.tmerc import exact_e_inv
-
-    name = getattr(P, "name", None)
-    if name in ("lcc", "aea", "leac"):
-        return True
-    if name in ("merc", "sinu", "cass") and P.es != 0.0:
-        return True
-    if name in ("stere", "ups") and P.es != 0.0:
-        return True  # 8-iteration conformal-lat inversion
-    if name == "geos":
-        return True  # closed form, but staged: the raw Column tree
-        # blew janino's method limit (r8; see _inv_twin_name_ok)
-    if name == "laea" and P.es != 0.0:
-        return True  # closed form, but staged: the Column tree's one
-        # 64 KB method ran interpreted (r8; see _inv_twin_name_ok)
-    if name == "eqearth":
-        return True  # 12-iteration Newton (both ellipsoid classes)
+        Cc, Kc = float(Q["C"]), float(Q["K"])
+        sc0, cc0 = float(Q["sinc0"]), float(Q["cosc0"])
+        esin = S(f_esin=f"sin({phic}) * {L(P.e)}")
+        sph, slam = S(f_sph=f"2.0D * atan({L(Kc)} * power(tan(0.5D * "
+                            f"{phic} + {L(pi / 4.0)}), {L(Cc)}) * power("
+                            f"(1.0D - {esin}) / (1.0D + {esin}), "
+                            f"{L(float(Q['ratexp']))})) - {L(_H)}",
+                      f_slam=f"{L(Cc)} * {lamw}")
+        sinc, cosc, cosl = S(f_sinc=f"sin({sph})", f_cosc=f"cos({sph})",
+                             f_cosl=f"cos({slam})")
+        den = S(f_den=f"1.0D + {L(sc0)} * {sinc} + {L(cc0)} * {cosc} * "
+                      f"{cosl}")
+        bad = f"{den} = 0.0D"
+        kk = S(f_kk=f"{L(P.k0 * float(Q['R2']))} / (CASE WHEN {bad} THEN "
+                    f"1.0D ELSE {den} END)")
+        return (f"{kk} * {cosc} * sin({slam})",
+                f"{kk} * ({L(cc0)} * {sinc} - {L(sc0)} * {cosc} * {cosl})",
+                bad)
+    if name == "laea":
+        return _laea_fwd_kernel(st, P, lamw, phic)
+    if name in ("stere", "ups"):
+        return _stere_fwd_kernel(st, P, lamw, phic)
     if name == "omerc":
-        return True  # closed prep + the phi2 iteration
-    # sterea measured OUT: its 20-iteration Gauss inversion unrolls to
-    # a twin that runs 0.64x the Arrow-UDF path (4.0 vs 6.2 M pts/s at
-    # 16 M pts, local[8] pinned — the per-iteration frozen-lane branch
-    # overhead exceeds numpy's ~6 effective masked iterations), so the
-    # emit branch below stays available but the default is the UDF
-    # path.  Same evidence standard as the r5 etmerc decision.
-    if getattr(P, "inv", None) is exact_e_inv:
-        return True  # Poder-Engsager etmerc/tmerc/utm (non-iterative
-        # fixed Clenshaw recurrences, tmerc.cpp:419-489)
-    return name == "eqdc" and bool(P.opaque.get("ellips"))
+        return _omerc_fwd_kernel(st, P, lamw, phic)
+    return _moll_fwd_kernel(st, P, lamw, phic)
 
 
-def _iter_inv_jvm_ok(op, direction: str) -> bool:
-    """True for bare INVERSE lcc / aea / leac (sphere + ellipsoid) and
-    ellipsoidal merc with no datum/grid/axis modifiers: tile->lonlat
-    workloads for the two dominant conic families run with zero Python
-    workers."""
-    P = getattr(op, "P", None)
-    if P is None or direction != "inv":
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if not _iter_inv_sql_ok(P):
-        return False
-    return _bare_op_ok(P)
+def _laea_fwd_kernel(st, P, lamw: str, phic: str):
+    """laea.cpp:35-137: authalic sin-beta = qsfn(sin phi)/qp; the
+    xmf/ymf/qp/sinb1/cosb1 constants fold at plan time."""
+    L = _sql_dlit
+    S = st.stage
+    Q = P.opaque
+    mode = Q["mode"]
+    sinlam, coslam, sinphi = S(f_sl=f"sin({lamw})", f_cl=f"cos({lamw})",
+                               f_sp=f"sin({phic})")
+    sb1, cb1 = (L(float(Q["sinb1"])), L(float(Q["cosb1"]))) \
+        if mode in ("obliq", "equit") else (None, None)
+    if P.es != 0.0:
+        q = S(f_q=_sql_qsfn(st, P, sinphi, "f_"))
+        qp = float(Q["qp"])
+        if mode in ("obliq", "equit"):
+            xmf, ymf = L(float(Q["xmf"])), L(float(Q["ymf"]))
+            sinb = S(f_sinb=f"{q} / {L(qp)}")
+            cosb2 = S(f_cb2=f"1.0D - {sinb} * {sinb}")
+            cosb = S(f_cosb=f"CASE WHEN {cosb2} > 0.0D THEN "
+                            f"sqrt(greatest({cosb2}, 0.0D)) ELSE 0.0D END")
+            b = S(f_b=f"1.0D + {sb1} * {sinb} + {cb1} * {cosb} * {coslam}"
+                  if mode == "obliq" else f"1.0D + {cosb} * {coslam}")
+            bad = f"abs({b}) < {L(1e-10)}"
+            bb = S(f_bb=f"sqrt(2.0D / (CASE WHEN {bad} THEN 1.0D "
+                        f"ELSE {b} END))")
+            yk = (f"{ymf} * {bb} * ({cb1} * {sinb} - {sb1} * {cosb} * "
+                  f"{coslam})" if mode == "obliq"
+                  else f"{bb} * {sinb} * {ymf}")
+            return f"{xmf} * {bb} * {cosb} * {sinlam}", yk, bad
+        if mode == "n_pole":
+            b, qq = f"{L(_H)} + {phic}", f"{L(qp)} - {q}"
+        else:
+            b, qq = f"{phic} - {L(_H)}", f"{L(qp)} + {q}"
+        qq = S(f_qq=qq)
+        bb = S(f_bb=f"sqrt(greatest({qq}, 0.0D))")
+        small = f"{qq} < {L(1e-15)}"
+        yb = bb if mode == "s_pole" else f"(-{bb})"
+        return (f"CASE WHEN {small} THEN 0.0D ELSE {bb} * {sinlam} END",
+                f"CASE WHEN {small} THEN 0.0D ELSE {coslam} * {yb} END",
+                f"abs({b}) < {L(1e-10)}")
+    cosphi = S(f_cp=f"cos({phic})")
+    if mode in ("equit", "obliq"):
+        b = S(f_b=f"1.0D + {cosphi} * {coslam}" if mode == "equit" else
+              f"1.0D + {sb1} * {sinphi} + {cb1} * {cosphi} * {coslam}")
+        bad = f"{b} <= {L(1e-10)}"
+        bb = S(f_bb=f"sqrt(2.0D / (CASE WHEN {bad} THEN 1.0D "
+                    f"ELSE {b} END))")
+        yk = (f"{bb} * {sinphi}" if mode == "equit" else
+              f"{bb} * ({cb1} * {sinphi} - {sb1} * {cosphi} * {coslam})")
+        return f"{bb} * {cosphi} * {sinlam}", yk, bad
+    half = S(f_half=f"{L(math.pi / 4.0)} - {phic} * 0.5D")
+    yy = S(f_yy=f"2.0D * {'cos' if mode == 's_pole' else 'sin'}({half})")
+    pcl = f"(-{coslam})" if mode == "n_pole" else coslam
+    return (f"{yy} * {sinlam}", f"{yy} * {pcl}",
+            f"abs({phic} + {L(P.phi0)}) < {L(1e-10)}")
 
 
-_SQL_INF = "CAST('Infinity' AS DOUBLE)"
-_SQL_NAN = "CAST('NaN' AS DOUBLE)"
+def _stere_fwd_kernel(st, P, lamw: str, phic: str):
+    """stere.cpp:44-140 (ellipsoidal 44-96, spherical 99-140); akm1
+    folds k0/lat_ts at setup; all four aspect modes."""
+    L = _sql_dlit
+    S = st.stage
+    Q = P.opaque
+    mode = Q["mode"]
+    akm1 = L(float(Q["akm1"]))
+    sX1, cX1 = L(float(Q["sinX1"])), L(float(Q["cosX1"]))
+    sinlam, coslam, sinphi = S(f_sl=f"sin({lamw})", f_cl=f"cos({lamw})",
+                               f_sp=f"sin({phic})")
+    if P.es != 0.0:
+        e = P.e
+        if mode in ("obliq", "equit"):
+            esin = S(f_esin=f"{sinphi} * {L(e)}")
+            xc = S(f_xc=f"2.0D * atan(tan(0.5D * ({L(_H)} + {phic})) * "
+                        f"power((1.0D - {esin}) / (1.0D + {esin}), "
+                        f"{L(0.5 * e)})) - {L(_H)}")
+            sinX, cosX = S(f_sx=f"sin({xc})", f_cx=f"cos({xc})")
+            den = S(f_den=f"{cX1} * (1.0D + {sX1} * {sinX} + {cX1} * "
+                          f"{cosX} * {coslam})" if mode == "obliq"
+                    else f"1.0D + {cosX} * {coslam}")
+            bad = f"{den} = 0.0D"
+            A = S(f_A=f"{akm1} / (CASE WHEN {bad} THEN 1.0D ELSE {den} END)")
+            yk = (f"{A} * ({cX1} * {sinX} - {sX1} * {cosX} * {coslam})"
+                  if mode == "obliq" else f"{A} * {sinX}")
+            return f"{A} * {cosX} * {sinlam}", yk, bad
+        s_pole = mode == "s_pole"
+        pphi = f"(-{phic})" if s_pole else phic
+        psin = f"(-{sinphi})" if s_pole else sinphi
+        pcl = f"(-{coslam})" if s_pole else coslam
+        xa = S(f_xa=f"{akm1} * ({_sql_tsfn(st, pphi, psin, e, 'f_')})")
+        return f"{xa} * {sinlam}", f"(-{xa}) * {pcl}", None
+    cosphi = S(f_cp=f"cos({phic})")
+    if mode in ("obliq", "equit"):
+        den = S(f_den=f"1.0D + {cosphi} * {coslam}" if mode == "equit" else
+                f"1.0D + {sX1} * {sinphi} + {cX1} * {cosphi} * {coslam}")
+        bad = f"{den} <= {L(1.0e-10)}"
+        A = S(f_A=f"{akm1} / (CASE WHEN {bad} THEN 1.0D ELSE {den} END)")
+        yk = (f"{A} * {sinphi}" if mode == "equit" else
+              f"{A} * ({cX1} * {sinphi} - {sX1} * {cosphi} * {coslam})")
+        return f"{A} * {cosphi} * {sinlam}", yk, bad
+    n_pole = mode == "n_pole"
+    pphi = S(f_pphi=f"-{phic}" if n_pole else phic)
+    pcl = f"(-{coslam})" if n_pole else coslam
+    yb = S(f_yb=f"{akm1} * tan({L(math.pi / 4.0)} + 0.5D * {pphi})")
+    return (f"{sinlam} * {yb}", f"{yb} * {pcl}",
+            f"abs({pphi} - {L(_H)}) < {L(1.0e-8)}")
+
+
+def _omerc_fwd_kernel(st, P, lamw: str, phic: str):
+    """omerc.cpp forward (Hotine oblique Mercator, kernels/misc5.py):
+    interior lanes run the closed hyperbolic form, the pole lanes take
+    the setup's v_pole constants; divisions that numpy evaluates under
+    errstate (E/ts^B at the exact pole, the U log at |U|=1) sit inside
+    interior/bad CASE branches so ANSI Spark never hits them."""
+    Q = P.opaque
+    L = _sql_dlit
+    S = st.stage
+    EPS_O, TOL_O = 1.0e-10, 1.0e-7
+    A, B, E = float(Q["A"]), float(Q["B"]), float(Q["E"])
+    ArB = float(Q["ArB"])
+    sg, cg = float(Q["singam"]), float(Q["cosgam"])
+    inter = S(k_int=f"abs(abs({phic}) - {L(_H)}) > {L(EPS_O)}")
+    sph = S(k_sph=f"sin({phic})")
+    esn = S(k_es=f"{L(P.e)} * {sph}")
+    # tsfn (tsfn.cpp:6-17); 1+e*sin > 0 always
+    ts = S(k_ts=f"tan(0.5D * ({L(_H)} - {phic})) / "
+                f"power((1.0D - {esn}) / (1.0D + {esn}), {L(0.5 * P.e)})")
+    # W = E/ts^B: guarded to 1 off-interior (exact-pole ts is 0/inf,
+    # where numpy's errstate division would be an ANSI error here)
+    w = S(k_w=f"CASE WHEN {inter} THEN {L(E)} / power({ts}, {L(B)}) "
+              f"ELSE 1.0D END")
+    wi = S(k_wi=f"1.0D / {w}")
+    sc, tc, vv, tcos = S(k_s=f"0.5D * ({w} - {wi})",
+                         k_t=f"0.5D * ({w} + {wi})",
+                         k_vv=f"sin({L(B)} * {lamw})",
+                         k_tc=f"cos({L(B)} * {lamw})")
+    uu = S(k_u0=f"({sc} * {L(sg)} - {vv} * {L(cg)}) / {tc}")
+    badc = S(k_bad=f"{inter} AND abs(abs({uu}) - 1.0D) < {L(EPS_O)}")
+    a1 = S(k_a1=f"{sc} * {L(cg)} + {vv} * {L(sg)}")
+    ve, ue = S(k_ve=f"CASE WHEN NOT {inter} THEN "
+                    f"(CASE WHEN {phic} > 0.0D THEN "
+                    f"{L(float(Q['v_pole_n']))} ELSE "
+                    f"{L(float(Q['v_pole_s']))} END) "
+                    f"WHEN {badc} THEN {_SQL_NAN} ELSE "
+                    f"0.5D * {L(ArB)} * ln((1.0D - {uu}) / "
+                    f"(1.0D + {uu})) END",
+               k_ue=f"CASE WHEN NOT {inter} THEN {L(ArB)} * {phic} "
+                    f"WHEN abs({tcos}) < {L(TOL_O)} THEN "
+                    f"{L(A)} * {lamw} ELSE {L(ArB)} * "
+                    f"{_sql_atan2_ieee(a1, tcos)} END")
+    if Q["no_rot"]:
+        xk, yk = ue, ve
+    else:
+        sr, cr = float(Q["sinrot"]), float(Q["cosrot"])
+        u2 = S(k_u2=f"{ue} - {L(float(Q['u_0']))}")
+        xk, yk = S(k_xr=f"{ve} * {L(cr)} + {u2} * {L(sr)}",
+                   k_yr=f"{u2} * {L(cr)} - {ve} * {L(sr)}")
+    return S(k_xb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {xk} END",
+             k_yb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {yk} END") \
+        + (None,)
+
+
+def _moll_fwd_kernel(st, P, lamw: str, phic: str):
+    """moll/wag4/wag5 forward (kernels/pseudocyl.moll_s_forward,
+    moll.cpp:22-42): the bounded Newton on the parametric angle unrolls
+    with the frozen-lane flag (non-convergent lanes substitute the
+    +-pi/2 pole like the kernel); the exact-zero Newton denominator
+    (1+cos == 0 at the float pi) routes through num*Infinity to mirror
+    numpy under ANSI mode."""
+    Q = P.opaque
+    L = _sql_dlit
+    S = st.stage
+    kk = S(k_k=f"{L(float(Q['C_p']))} * sin({phic})")
+    cur, done = phic, "false"
+    for i in range(1, 11):
+        nu, de = S(**{f"m_nu{i}": f"CASE WHEN {done} THEN 0.0D "
+                                  f"ELSE {cur} + sin({cur}) - {kk} END",
+                      f"m_de{i}": f"CASE WHEN {done} THEN 1.0D "
+                                  f"ELSE 1.0D + cos({cur}) END"})
+        vv = S(**{f"m_v{i}": f"CASE WHEN {done} THEN 0.0D "
+                             f"WHEN {de} = 0.0D THEN {nu} * {_SQL_INF} "
+                             f"ELSE {nu} / {de} END"})
+        cur, done = S(**{f"m_ph{i}": f"CASE WHEN {done} THEN {cur} "
+                                     f"ELSE {cur} - {vv} END",
+                         f"m_dn{i}": f"abs({vv}) < {L(1.0e-7)}"})
+        if i == 5:
+            st.barrier()  # keep each codegen region JIT-compilable
+    po = S(k_po=f"CASE WHEN {done} THEN 0.5D * {cur} ELSE "
+                f"(CASE WHEN {cur} < 0.0D THEN {L(-_H)} "
+                f"ELSE {L(_H)} END) END")
+    return (f"{L(float(Q['C_x']))} * {lamw} * cos({po})",
+            f"{L(float(Q['C_y']))} * sin({po})", None)
+
+
+def _etmerc_fwd_kernel(st, P, lamw: str, phic: str):
+    """Poder-Engsager etmerc/tmerc/utm forward (kernels/tmerc.
+    exact_e_fwd, tmerc.cpp:334-415).  The gatg and complex-Clenshaw
+    recurrences reference each intermediate twice, so inlining them
+    into one projection would duplicate subtrees Fibonacci-style
+    (Catalyst does not CSE across an expression tree); every recurrence
+    step lands in its OWN stage instead."""
+    Q = P.opaque["exact"]
+    cbg, gtu = Q["cbg"], Q["gtu"]
+    L = _sql_dlit
+    S = st.stage
+    # gatg(cbg): real Clenshaw over cos/sin(2*phi) (tmerc.cpp:267-279)
+    two, s2 = S(two=f"2.0D * cos(2.0D * {phic})", s2=f"sin(2.0D * {phic})")
+    cn0 = S(Cn0=f"{phic} + {_sql_gatg(st, cbg, two, '')} * {s2}")
+    # spherical-to-complex-plane setup (tmerc.cpp:352-376)
+    sCn, cCn, sCe, cCe = S(sCn=f"sin({cn0})", cCn=f"cos({cn0})",
+                           sCe=f"sin({lamw})", cCe=f"cos({lamw})")
+    cc = S(cc=f"{cCn} * {cCe}")
+    cn1, invd = S(Cn1=f"atan2({sCn}, {cc})",
+                  invd=f"1.0D / hypot({sCn}, {cc})")
+    tCe, twoinv = S(tCe=f"{sCe} * {cCn} * {invd}", twoinv=f"2.0D * {invd}")
+    ce1, twoinvsq = S(Ce1=f"asinh({tCe})", twoinvsq=f"{twoinv} * {invd}")
+    tmpr = S(tmpr=f"{cc} * {twoinvsq}")
+    sar, car, shi, chi = S(sar=f"{sCn} * {tmpr}", car=f"{cc} * {tmpr} - 1.0D",
+                           shi=f"{tCe} * {twoinv}", chi=f"{twoinvsq} - 1.0D")
+    # complex Clenshaw over gtu (tmerc.cpp:283-311)
+    r, i = S(r=f"2.0D * {car} * {chi}", i=f"-2.0D * {sar} * {shi}")
+    hr, hi = _sql_clens(st, gtu, r, i, "")
+    rr, ii = S(rr=f"{sar} * {chi}", ii=f"{car} * {shi}")
+    cn, ce = S(Cn=f"{cn1} + {rr} * ({hr}) - {ii} * ({hi})",
+               Ce=f"{ce1} + {rr} * ({hi}) + {ii} * ({hr})")
+    # Ce bound (tmerc.cpp:409)
+    ok = S(ok=f"abs({ce}) <= {L(_CE_LIMIT_JVM)}")
+    # close the region after the recurrences: a chained roundtrip (utm
+    # fwd -> inv) otherwise fuses this chain (~5.3k bytecodes alone)
+    # with the inverse's first region past HotSpot's 8000-byte JIT
+    # ceiling, and the forward leg runs interpreted
+    st.barrier()
+    Qn = L(float(Q["Qn"]))
+    return (f"CASE WHEN {ok} THEN {Qn} * {ce} ELSE {_SQL_NAN} END",
+            f"CASE WHEN {ok} THEN {Qn} * {cn} + {L(float(Q['Zb']))} "
+            f"ELSE {_SQL_NAN} END", None)
+
+
+def _sql_gatg(st, coeffs, two: str, tag: str) -> str:
+    """Real Clenshaw sum (gatg, tmerc.cpp:267-279) over the COLUMN REF
+    two = 2*cos(2*phi); every step is its own stage (each intermediate
+    is read twice)."""
+    L = _sql_dlit
+    h1, h2 = L(float(coeffs[-1])), "0.0D"
+    for k in range(len(coeffs) - 2, -1, -1):
+        h2, h1 = h1, st.stage(**{f"{tag}g{k}": f"-({h2}) + {two} * ({h1}) "
+                                               f"+ {L(float(coeffs[k]))}"})
+    return h1
+
+
+def _sql_clens(st, coeffs, r: str, i: str, tag: str):
+    """Complex Clenshaw recurrence (clenS, tmerc.cpp:283-311) over the
+    COLUMN REFS r, i; returns the (hr, hi) refs."""
+    L = _sql_dlit
+    hr, hi = L(float(coeffs[-1])), "0.0D"
+    hr1 = hi1 = "0.0D"
+    for k in range(len(coeffs) - 2, -1, -1):
+        hr1, hi1, (hr, hi) = hr, hi, st.stage(**{
+            f"{tag}hr{k}": f"-({hr1}) + {r} * ({hr}) - {i} * ({hi}) "
+                           f"+ {L(float(coeffs[k]))}",
+            f"{tag}hi{k}": f"-({hi1}) + {i} * ({hr}) + {r} * ({hi})"})
+    return hr, hi
+
+
+def _fwd_apply(df, op, direction: str, x, y, z, t, degrees: bool,
+               z_supplied: bool, out_prefix: str):
+    """Route "fwd": a bare single-op forward."""
+    P = op.P
+    st = _SqlStager()
+    _entry_stages(st, x, y, z, t, degrees, z_supplied)
+    xe, ye, bad = _emit_fwd(st, P, st.col("lam"), st.col("phi"))
+    zout = st.col("zz")
+    if P.vfr_meter != 1.0 or P.z0 != 0.0:
+        # fwd_finalize vertical scaling (fwd.cpp: z = vfr_meter*(z + z0))
+        zout = f"{_sql_dlit(P.vfr_meter)} * ({zout} + {_sql_dlit(P.z0)})"
+    mask = st.col("err") + (f" OR {bad}" if bad else "")
+    return st.apply(df, _outputs(st, out_prefix, xe, ye, zout, mask))
+
+
+def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask=None,
+             mask_z: bool = False) -> list[str]:
+    """The final select list every twin shares: NULL -> NaN (the UDF
+    path's na_value), `mask` rows -> NaN on x/y (and z when mask_z), t
+    passed through."""
+    def fin(v, masked):
+        v = f"coalesce({v}, {_SQL_NAN})"
+        if masked and mask:
+            v = f"CASE WHEN {mask} THEN {_SQL_NAN} ELSE {v} END"
+        return v
+
+    return [f"{fin(xo, True)} AS `{prefix}x`",
+            f"{fin(yo, True)} AS `{prefix}y`",
+            f"{fin(zo, mask_z)} AS `{prefix}z`",
+            f"{st.col('tt')} AS `{prefix}t`"]
+
+
+# --- inverse pipeline -----------------------------------------------------
+#
+# _emit_inv: entry (inv_prepare) -> _emit_inv_kernel -> inv_finalize,
+# then the same shared finalize as the forward (_outputs).  The
+# iterative families (phi2 src/phi2.cpp:12-83, phi1
+# src/projections/aea.cpp:48-70, inv_mlfn, the Newton inversions)
+# unroll to their reference iteration bound with a carried `done` flag
+# that FREEZES converged lanes — the per-lane update sequence is
+# identical to the masked-lane NumPy kernels, so twin/UDF parity is
+# exact, not approximate.  Spark-SQL NaN semantics differ from IEEE
+# (NaN sorts above +Infinity in every comparison), so convergence tests
+# are phrased as `abs(dphi) > TOL AND abs(v) < Infinity`: the finite
+# guard is False for NaN under Spark ordering, reproducing numpy's
+# isfinite stop.
+
+
+def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool,
+              z_supplied: bool):
+    """Inverse entry — the null/NaN error predicate and inv_prepare
+    scaling (to_meter*v - offset) * 1/a (src/inv.cpp:42-76), or radians
+    for a latlong op — then the family kernel and inv_finalize (lam0 +
+    adjlon, inv.cpp:117-124).  Returns radian (lam, phi) column refs."""
+    L = _sql_dlit
+    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
+    if getattr(P, "is_latlong", False):
+        xv, yv = ((f"radians({xq})", f"radians({yq})") if degrees
+                  else (xq, yq))
+    else:
+        xv = f"({L(P.to_meter)} * {xq} - {L(P.x0)}) * {L(P.ra)}"
+        yv = f"({L(P.to_meter)} * {yq} - {L(P.y0)}) * {L(P.ra)}"
+    err = f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR isnan({yq})"
+    if z_supplied:
+        err += f" OR `{z}` IS NULL OR isnan(CAST(`{z}` AS DOUBLE))"
+    # the coalesce makes xm/ym NON-NULLABLE (NULL -> NaN, the UDF path's
+    # na_value), which drops the isNull plumbing from every downstream
+    # codegen expression — without it the staged iterative kernels blow
+    # past HotSpot's 8000-byte JIT limit (measured 11185 -> ~6k for the
+    # lcc inverse) and run interpreted, 13x slower
+    xm, ym, _, _, _ = st.stage(
+        xm=f"coalesce({xv}, {_SQL_NAN})", ym=f"coalesce({yv}, {_SQL_NAN})",
+        zz=(f"coalesce(CAST(`{z}` AS DOUBLE), {_SQL_NAN})"
+            if z is not None else "0.0D"),
+        tt=(f"coalesce(CAST(`{t}` AS DOUBLE), {_SQL_NAN})"
+            if t is not None else "0.0D"),
+        err=err)
+    if getattr(P, "is_latlong", False):
+        lam, phi = xm, ym
+    else:
+        lam, phi = _emit_inv_kernel(st, P, xm, ym)
+    lf, phi = st.stage(k_lf=f"({lam}) + {L(P.lam0)}", k_phf=phi)
+    return st.stage(k_lw=_sql_adjlon(lf)), phi
 
 
 def _sql_phi2_stages(st, ts0: str, e: float, tag: str) -> str:
@@ -1197,38 +1132,30 @@ def _sql_phi2_stages(st, ts0: str, e: float, tag: str) -> str:
     so the 15th update need not be emitted.  `ts0` must be a column
     ref.  Returns the φ column name."""
     L = _sql_dlit
-    col = st.col
+    S = st.stage
     TOL, ecc = L(1.0e-10), L(0.5 * e)
-    st.stage(**{f"{tag}dn0": f"NOT (abs({ts0}) < {_SQL_INF})"})
-    ts, done = ts0, col(f"{tag}dn0")
+    ts, done = ts0, S(**{f"{tag}dn0": f"NOT (abs({ts0}) < {_SQL_INF})"})
     for k in range(1, 15):
         # con = e * sinφ where sinφ = (1-ts²)/(1+ts²) (phi2.cpp:41);
         # CASE-guarded so frozen lanes skip the arithmetic (codegen
         # CaseWhen is lazy); 1+ts² >= 1 so no ANSI divide-by-zero
-        st.stage(**{f"{tag}cn{k}":
-                    f"CASE WHEN {done} THEN 0.0D ELSE "
-                    f"{L(e)} * ((1.0D - {ts} * {ts}) / "
-                    f"(1.0D + {ts} * {ts})) END"})
-        cn = col(f"{tag}cn{k}")
-        st.stage(**{f"{tag}ts{k}":
-                    f"CASE WHEN {done} THEN {ts} ELSE "
-                    f"{ts0} * power((1.0D - {cn}) / (1.0D + {cn}), "
-                    f"{ecc}) END"})
-        nts = col(f"{tag}ts{k}")
+        cn = S(**{f"{tag}cn{k}": f"CASE WHEN {done} THEN 0.0D ELSE "
+                                 f"{L(e)} * ((1.0D - {ts} * {ts}) / "
+                                 f"(1.0D + {ts} * {ts})) END"})
+        nts = S(**{f"{tag}ts{k}": f"CASE WHEN {done} THEN {ts} ELSE "
+                                  f"{ts0} * power((1.0D - {cn}) / "
+                                  f"(1.0D + {cn}), {ecc}) END"})
         # frozen lanes have nts == ts -> dphi == 0 -> stay done (no
         # `done OR` needed); non-finite frozen lanes give dphi = NaN,
         # whose finite guard is False under Spark's NaN-sorts-above-
         # Infinity ordering, so they stay done too
-        st.stage(**{f"{tag}dn{k}":
-                    f"NOT (abs(2.0D * ({nts} - {ts})) > {TOL} "
-                    f"AND abs({nts}) < {_SQL_INF})"})
-        ts, done = nts, col(f"{tag}dn{k}")
+        ts, done = nts, S(**{f"{tag}dn{k}":
+                             f"NOT (abs(2.0D * ({nts} - {ts})) > {TOL} "
+                             f"AND abs({nts}) < {_SQL_INF})"})
         if k == 7:
             st.barrier()  # keep each codegen region JIT-compilable
-    st.stage(**{f"{tag}phi":
-                f"CASE WHEN NOT {done} THEN {_SQL_NAN} "
-                f"ELSE {L(math.pi / 2.0)} - 2.0D * atan({ts}) END"})
-    return col(f"{tag}phi")
+    return S(**{f"{tag}phi": f"CASE WHEN NOT {done} THEN {_SQL_NAN} "
+                             f"ELSE {L(_H)} - 2.0D * atan({ts}) END"})
 
 
 def _sql_phi1_stages(st, qs: str, Te: float, one_es: float,
@@ -1239,49 +1166,41 @@ def _sql_phi1_stages(st, qs: str, Te: float, one_es: float,
     kernel's count<0 -> NaN lane (the C loop bound admits one more pass
     than phi2's).  `qs` must be a column ref."""
     L = _sql_dlit
-    col = st.col
+    S = st.stage
     TOL = L(1.0e-10)
-    st.stage(**{f"{tag}p0":
-                f"asin(least(greatest(0.5D * {qs}, -1.0D), 1.0D))"})
-    phi = col(f"{tag}p0")
+    phi = S(**{f"{tag}p0": f"asin(least(greatest(0.5D * {qs}, -1.0D), "
+                           f"1.0D))"})
     if Te < 1.0e-7:
         return phi
-    st.stage(**{f"{tag}dn0": f"NOT (abs({phi}) < {_SQL_INF})"})
-    done = col(f"{tag}dn0")
+    done = S(**{f"{tag}dn0": f"NOT (abs({phi}) < {_SQL_INF})"})
     for k in range(1, 16):
         # CASE-guarded: frozen lanes skip the trig (the dominant
         # per-iteration cost — most lanes converge in <=5 of the 15)
-        st.stage(**{f"{tag}sp{k}":
-                    f"CASE WHEN {done} THEN 0.0D ELSE sin({phi}) END",
-                    f"{tag}cp{k}":
-                    f"CASE WHEN {done} THEN 1.0D ELSE cos({phi}) END"})
-        sp, cp = col(f"{tag}sp{k}"), col(f"{tag}cp{k}")
+        sp, cp = S(**{
+            f"{tag}sp{k}": f"CASE WHEN {done} THEN 0.0D ELSE sin({phi}) END",
+            f"{tag}cp{k}": f"CASE WHEN {done} THEN 1.0D ELSE cos({phi}) END"})
         # con = Te*sinφ; com = 1 - con² (recomputing (Te*sp) keeps the
         # two columns in ONE stage; the product is bit-identical)
-        st.stage(**{f"{tag}cn{k}": f"{L(Te)} * {sp}",
-                    f"{tag}cm{k}":
-                    f"1.0D - {L(Te)} * {sp} * ({L(Te)} * {sp})"})
-        cn, cm = col(f"{tag}cn{k}"), col(f"{tag}cm{k}")
+        cn, cm = S(**{
+            f"{tag}cn{k}": f"{L(Te)} * {sp}",
+            f"{tag}cm{k}": f"1.0D - {L(Te)} * {sp} * ({L(Te)} * {sp})"})
         # com > 0 and (1±con) > 0 for every active (finite-φ) lane since
         # |con| <= e < 1, so the divisions and ln() cannot hit the
         # ANSI-mode divide-by-zero / negative-log paths
-        st.stage(**{f"{tag}dp{k}":
-                    f"CASE WHEN {done} THEN 0.0D ELSE "
-                    f"0.5D * {cm} * {cm} / {cp} * "
-                    f"({qs} / {L(one_es)} - {sp} / {cm} + "
-                    f"{L(0.5 / Te)} * ln((1.0D - {cn}) / (1.0D + {cn})))"
-                    f" END"})
-        dp = col(f"{tag}dp{k}")
-        st.stage(**{f"{tag}ph{k}":
-                    f"CASE WHEN {done} THEN {phi} ELSE {phi} + {dp} END",
-                    f"{tag}dn{k}":
-                    f"NOT (abs({dp}) > {TOL} AND abs({dp}) < {_SQL_INF})"})
-        phi, done = col(f"{tag}ph{k}"), col(f"{tag}dn{k}")
+        dp = S(**{f"{tag}dp{k}":
+                  f"CASE WHEN {done} THEN 0.0D ELSE "
+                  f"0.5D * {cm} * {cm} / {cp} * "
+                  f"({qs} / {L(one_es)} - {sp} / {cm} + "
+                  f"{L(0.5 / Te)} * ln((1.0D - {cn}) / (1.0D + {cn}))) END"})
+        phi, done = S(**{
+            f"{tag}ph{k}": f"CASE WHEN {done} THEN {phi} "
+                           f"ELSE {phi} + {dp} END",
+            f"{tag}dn{k}": f"NOT (abs({dp}) > {TOL} AND "
+                           f"abs({dp}) < {_SQL_INF})"})
         if k % 6 == 0:
             st.barrier()  # keep each codegen region JIT-compilable
-    st.stage(**{f"{tag}phi":
-                f"CASE WHEN NOT {done} THEN {_SQL_NAN} ELSE {phi} END"})
-    return col(f"{tag}phi")
+    return S(**{f"{tag}phi": f"CASE WHEN NOT {done} THEN {_SQL_NAN} "
+                             f"ELSE {phi} END"})
 
 
 def _sql_invmlfn_stages(st, arg: str, es: float, en, tag: str) -> str:
@@ -1293,218 +1212,138 @@ def _sql_invmlfn_stages(st, arg: str, es: float, en, tag: str) -> str:
     True under both Spark's ordering and numpy's, and the updates stay
     NaN).  `arg` must be a column ref."""
     L = _sql_dlit
-    col = st.col
+    S = st.stage
     k = 1.0 / (1.0 - es)
-    e0, e1, e2, e3, e4 = (float(v) for v in en)
-    st.stage(**{f"{tag}dn0": f"NOT (abs({arg}) < {_SQL_INF})"})
-    ph, done = arg, col(f"{tag}dn0")
+    e0, e1, e2, e3, e4 = (L(float(v)) for v in en)
+    ph, done = arg, S(**{f"{tag}dn0": f"NOT (abs({arg}) < {_SQL_INF})"})
     for i in range(1, 11):
-        st.stage(**{f"{tag}sp{i}":
-                    f"CASE WHEN {done} THEN 0.0D ELSE sin({ph}) END",
-                    f"{tag}cp{i}":
-                    f"CASE WHEN {done} THEN 1.0D ELSE cos({ph}) END"})
-        sp, cp = col(f"{tag}sp{i}"), col(f"{tag}cp{i}")
-        st.stage(**{f"{tag}s2{i}": f"{sp} * {sp}",
-                    f"{tag}cs{i}": f"{cp} * {sp}"})
-        s2, cs = col(f"{tag}s2{i}"), col(f"{tag}cs{i}")
-        st.stage(**{f"{tag}t{i}": f"1.0D - {L(es)} * {s2}"})
-        tq = col(f"{tag}t{i}")
+        sp, cp = S(**{
+            f"{tag}sp{i}": f"CASE WHEN {done} THEN 0.0D ELSE sin({ph}) END",
+            f"{tag}cp{i}": f"CASE WHEN {done} THEN 1.0D ELSE cos({ph}) END"})
+        s2, cs = S(**{f"{tag}s2{i}": f"{sp} * {sp}",
+                      f"{tag}cs{i}": f"{cp} * {sp}"})
+        tq = S(**{f"{tag}t{i}": f"1.0D - {L(es)} * {s2}"})
         # dphi = (mlfn(p) - arg) * t*sqrt(t) * 1/(1-es); t >= 1-es > 0
         # for active lanes so sqrt/div never hit the ANSI error paths
-        st.stage(**{f"{tag}dp{i}":
-                    f"CASE WHEN {done} THEN 0.0D ELSE "
-                    f"(({L(e0)} * {ph} - {cs} * ({L(e1)} + {s2} * "
-                    f"({L(e2)} + {s2} * ({L(e3)} + {s2} * {L(e4)})))) "
-                    f"- {arg}) * ({tq} * sqrt({tq})) * {L(k)} END"})
-        dp = col(f"{tag}dp{i}")
-        st.stage(**{f"{tag}ph{i}":
-                    f"CASE WHEN {done} THEN {ph} ELSE {ph} - {dp} END",
-                    f"{tag}dn{i}":
-                    f"NOT (abs({dp}) >= {L(1.0e-11)})"})
-        ph, done = col(f"{tag}ph{i}"), col(f"{tag}dn{i}")
+        dp = S(**{f"{tag}dp{i}":
+                  f"CASE WHEN {done} THEN 0.0D ELSE "
+                  f"(({e0} * {ph} - {cs} * ({e1} + {s2} * ({e2} + {s2} * "
+                  f"({e3} + {s2} * {e4})))) - {arg}) * "
+                  f"({tq} * sqrt({tq})) * {L(k)} END"})
+        ph, done = S(**{
+            f"{tag}ph{i}": f"CASE WHEN {done} THEN {ph} ELSE {ph} - {dp} END",
+            f"{tag}dn{i}": f"NOT (abs({dp}) >= {L(1.0e-11)})"})
         if i % 6 == 0:
             st.barrier()  # keep each codegen region JIT-compilable
     return ph
 
 
-def _inv_entry_stages(st, P, x, y, z, t, z_supplied: bool):
-    """Shared INVERSE entry: null/NaN error predicate + inv_prepare
-    scaling (to_meter*v - offset) * 1/a (src/inv.cpp:42-76) —
-    the staged twin of the column-path entry in _inv_jvm_columns.
-    Returns the (xm, ym) column names."""
-    L = _sql_dlit
-    col = st.col
-    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
-    zz_sql = (f"coalesce(CAST(`{z}` AS DOUBLE), {_SQL_NAN})"
-              if z is not None else "0.0D")
-    tt_sql = (f"coalesce(CAST(`{t}` AS DOUBLE), {_SQL_NAN})"
-              if t is not None else "0.0D")
-    err = (f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR "
-           f"isnan({yq})")
-    if z_supplied:
-        err += f" OR `{z}` IS NULL OR isnan(CAST(`{z}` AS DOUBLE))"
-    # the outer coalesce makes xm/ym NON-NULLABLE (NULL -> NaN, the UDF
-    # path's na_value), which drops the isNull plumbing from every
-    # downstream codegen expression — without it the staged iterative
-    # kernels blow past HotSpot's 8000-byte JIT limit (measured 11185
-    # -> ~6k for the lcc inverse) and run interpreted, 13x slower
-    st.stage(
-        xm=f"coalesce(({L(P.to_meter)} * {xq} - {L(P.x0)}) * {L(P.ra)},"
-           f" {_SQL_NAN})",
-        ym=f"coalesce(({L(P.to_meter)} * {yq} - {L(P.y0)}) * {L(P.ra)},"
-           f" {_SQL_NAN})",
-        zz=zz_sql, tt=tt_sql, err=err)
-    return col("xm"), col("ym")
-
-
-def _emit_iter_inv_kernel(st, P, xm: str, ym: str):
-    """Staged-SQL inverse kernels for lcc (lcc.cpp:46-77), aea/leac
-    (aea.cpp:121-160) and ellipsoidal merc (merc.cpp:46-54), plus the
-    inv_finalize lam0+wrap (src/inv.cpp:117-124).  Returns radian
-    (lam, phi) column names.  xm/ym must be column refs."""
+def _emit_inv_kernel(st, P, xm: str, ym: str):
+    """Per-family inverse kernels over the inv_prepare'd (xm, ym)
+    column refs: closed forms, and the bounded phi2 / phi1 / inv_mlfn /
+    Newton iterations unrolled with frozen lanes.  Returns the radian
+    (lam, phi) before inv_finalize (lam0 + adjlon)."""
     from proj_4_spark.kernels.tmerc import exact_e_inv
 
     L = _sql_dlit
-    col = st.col
+    S = st.stage
     Q = P.opaque
-    H = math.pi / 2.0
+    H = _H
+    name = P.name
     if getattr(P, "inv", None) is exact_e_inv:
         # Poder-Engsager etmerc/utm INVERSE (tmerc.cpp:419-489): the
         # mirror of the r7 forward twin — complex Clenshaw over utg,
         # spherical de-projection, real Clenshaw (gatg) over cgb.
-        # Non-iterative; staged like _etmerc_jvm_apply.
+        # Non-iterative; staged like _etmerc_fwd_kernel.
         QE = Q["exact"]
         utg, cgb = QE["utg"], QE["cgb"]
         Qn, Zb = float(QE["Qn"]), float(QE["Zb"])
-        st.stage(k_cn0=f"(({ym}) - {L(Zb)}) / {L(Qn)}",
-                 k_ce0=f"({xm}) / {L(Qn)}")
-        cn0, ce0 = col("k_cn0"), col("k_ce0")
-        st.stage(k_ok=f"abs({ce0}) <= {L(_CE_LIMIT_JVM)}")
-        ok = col("k_ok")
-        st.stage(k_sar=f"sin(2.0D * {cn0})",
-                 k_car=f"cos(2.0D * {cn0})",
-                 k_e2c=f"exp(2.0D * (CASE WHEN {ok} THEN {ce0} "
-                       f"ELSE 0.0D END))")
-        sar, car, e2c = col("k_sar"), col("k_car"), col("k_e2c")
-        st.stage(k_shi=f"0.5D * {e2c} - 0.5D / {e2c}",
-                 k_chi=f"0.5D * {e2c} + 0.5D / {e2c}")
-        shi, chi = col("k_shi"), col("k_chi")
+        cn0, ce0 = S(k_cn0=f"(({ym}) - {L(Zb)}) / {L(Qn)}",
+                     k_ce0=f"({xm}) / {L(Qn)}")
+        ok = S(k_ok=f"abs({ce0}) <= {L(_CE_LIMIT_JVM)}")
+        sar, car, e2c = S(k_sar=f"sin(2.0D * {cn0})",
+                          k_car=f"cos(2.0D * {cn0})",
+                          k_e2c=f"exp(2.0D * (CASE WHEN {ok} THEN {ce0} "
+                                f"ELSE 0.0D END))")
+        shi, chi = S(k_shi=f"0.5D * {e2c} - 0.5D / {e2c}",
+                     k_chi=f"0.5D * {e2c} + 0.5D / {e2c}")
         # clenS(utg): complex Clenshaw (tmerc.cpp:283-311)
-        st.stage(k_r=f"2.0D * {car} * {chi}",
+        r, i = S(k_r=f"2.0D * {car} * {chi}",
                  k_i=f"-2.0D * {sar} * {shi}")
-        r, i = col("k_r"), col("k_i")
-        hr, hi = L(float(utg[-1])), "0.0D"
-        hr1 = hi1 = "0.0D"
-        for k in range(len(utg) - 2, -1, -1):
-            st.stage(
-                **{f"k_hr{k}": f"-({hr1}) + {r} * ({hr}) "
-                               f"- {i} * ({hi}) + {L(float(utg[k]))}",
-                   f"k_hi{k}": f"-({hi1}) + {i} * ({hr}) "
-                               f"+ {r} * ({hi})"})
-            hr1, hi1 = hr, hi
-            hr, hi = col(f"k_hr{k}"), col(f"k_hi{k}")
-        st.stage(k_rr=f"{sar} * {chi}", k_ii=f"{car} * {shi}")
-        rr, ii = col("k_rr"), col("k_ii")
-        st.stage(k_cn1=f"{cn0} + {rr} * ({hr}) - {ii} * ({hi})",
-                 k_ce1=f"{ce0} + {rr} * ({hi}) + {ii} * ({hr})")
-        cn1, ce1 = col("k_cn1"), col("k_ce1")
+        hr, hi = _sql_clens(st, utg, r, i, "k_")
+        rr, ii = S(k_rr=f"{sar} * {chi}", k_ii=f"{car} * {shi}")
+        cn1, ce1 = S(k_cn1=f"{cn0} + {rr} * ({hr}) - {ii} * ({hi})",
+                     k_ce1=f"{ce0} + {rr} * ({hi}) + {ii} * ({hr})")
         st.barrier()  # keep each codegen region JIT-compilable
         # spherical de-projection (tmerc.cpp:452-470)
-        st.stage(k_scn=f"sin({cn1})", k_ccn=f"cos({cn1})",
-                 k_she=f"sinh({ce1})")
-        scn, ccn, she = col("k_scn"), col("k_ccn"), col("k_she")
-        st.stage(k_ce2=_sql_atan2_ieee(she, ccn),
-                 k_mod=f"hypot({she}, {ccn})")
-        ce2, mod = col("k_ce2"), col("k_mod")
-        st.stage(k_cn2=_sql_atan2_ieee(scn, mod),
-                 k_tmp=f"2.0D * {mod} / ({she} * {she} + 1.0D)")
-        cn2, tmp = col("k_cn2"), col("k_tmp")
-        st.stage(k_s2c=f"{scn} * {tmp}",
-                 k_c2c=f"{tmp} * {mod} - 1.0D")
-        s2c, c2c = col("k_s2c"), col("k_c2c")
+        scn, ccn, she = S(k_scn=f"sin({cn1})", k_ccn=f"cos({cn1})",
+                          k_she=f"sinh({ce1})")
+        ce2, mod = S(k_ce2=_sql_atan2_ieee(she, ccn),
+                     k_mod=f"hypot({she}, {ccn})")
+        cn2, tmp = S(k_cn2=_sql_atan2_ieee(scn, mod),
+                     k_tmp=f"2.0D * {mod} / ({she} * {she} + 1.0D)")
+        s2c, c2c = S(k_s2c=f"{scn} * {tmp}",
+                     k_c2c=f"{tmp} * {mod} - 1.0D")
         # gatg(cgb): real Clenshaw (tmerc.cpp:267-279)
-        st.stage(k_two=f"2.0D * {c2c}")
-        two = col("k_two")
-        h1, h2 = L(float(cgb[-1])), "0.0D"
-        for k in range(len(cgb) - 2, -1, -1):
-            st.stage(**{f"k_g{k}": f"-({h2}) + {two} * ({h1}) "
-                                   f"+ {L(float(cgb[k]))}"})
-            h2, h1 = h1, col(f"k_g{k}")
-        st.stage(k_ph=f"CASE WHEN {ok} THEN {cn2} + {col('k_g0')} * "
-                      f"{s2c} ELSE {_SQL_NAN} END",
-                 k_lam=f"CASE WHEN {ok} THEN {ce2} "
-                       f"ELSE {_SQL_NAN} END")
-        phi, lam = col("k_ph"), col("k_lam")
-    elif P.name == "merc":
-        st.stage(k_ts0=f"exp(-({ym}) / {L(P.k0)})")
-        phi = _sql_phi2_stages(st, col("k_ts0"), P.e, "p2_")
-        st.stage(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
-                       f"ELSE ({xm}) / {L(P.k0)} END")
-        lam = col("k_lam")
-    elif P.name in ("stere", "ups"):
+        g0 = _sql_gatg(st, cgb, S(k_two=f"2.0D * {c2c}"), "k_")
+        phi, lam = S(k_ph=f"CASE WHEN {ok} THEN {cn2} + {g0} * "
+                          f"{s2c} ELSE {_SQL_NAN} END",
+                     k_lam=f"CASE WHEN {ok} THEN {ce2} "
+                           f"ELSE {_SQL_NAN} END")
+    elif name == "merc" and P.es != 0.0:
+        ts0 = S(k_ts0=f"exp(-({ym}) / {L(P.k0)})")
+        phi = _sql_phi2_stages(st, ts0, P.e, "p2_")
+        lam = S(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
+                      f"ELSE ({xm}) / {L(P.k0)} END")
+    elif name in ("stere", "ups") and P.es != 0.0:
         # stere.cpp:143-190 ellipsoidal inverse: aspect-specific
         # preamble + the 8-iteration conformal-latitude inversion
         # (tolerance 1e-10); lanes not converged after 8 -> NaN
         mode = Q["mode"]
-        st.stage(k_rh=f"hypot({xm}, {ym})")
-        rh = col("k_rh")
+        rh = S(k_rh=f"hypot({xm}, {ym})")
         if mode in ("obliq", "equit"):
             sX1, cX1 = float(Q["sinX1"]), float(Q["cosX1"])
             akm1 = float(Q["akm1"])
-            st.stage(k_tp0=f"2.0D * atan2({rh} * {L(cX1)}, {L(akm1)})")
-            tp0 = col("k_tp0")
-            st.stage(k_cph=f"cos({tp0})", k_sph=f"sin({tp0})",
-                     k_rs=f"CASE WHEN {rh} = 0.0D THEN 1.0D "
-                          f"ELSE {rh} END")
-            cph, sph, rs = col("k_cph"), col("k_sph"), col("k_rs")
-            st.stage(k_phl=f"CASE WHEN {rh} = 0.0D THEN "
-                           f"asin(least(greatest({cph} * {L(sX1)}, "
-                           f"-1.0D), 1.0D)) ELSE "
-                           f"asin(least(greatest({cph} * {L(sX1)} + "
-                           f"({ym}) * {sph} * {L(cX1)} / {rs}, -1.0D),"
-                           f" 1.0D)) END")
-            phl = col("k_phl")
-            st.stage(k_tp=f"tan(0.5D * ({L(H)} + {phl}))",
-                     k_xs=f"({xm}) * {sph}",
-                     k_ys=f"{rh} * {L(cX1)} * {cph} "
-                          f"- ({ym}) * {L(sX1)} * {sph}")
-            tp, xs, ys = col("k_tp"), col("k_xs"), col("k_ys")
+            tp0 = S(k_tp0=f"2.0D * atan2({rh} * {L(cX1)}, {L(akm1)})")
+            cph, sph, rs = S(k_cph=f"cos({tp0})", k_sph=f"sin({tp0})",
+                             k_rs=f"CASE WHEN {rh} = 0.0D THEN 1.0D "
+                                  f"ELSE {rh} END")
+            phl = S(k_phl=f"CASE WHEN {rh} = 0.0D THEN "
+                          f"asin(least(greatest({cph} * {L(sX1)}, "
+                          f"-1.0D), 1.0D)) ELSE "
+                          f"asin(least(greatest({cph} * {L(sX1)} + "
+                          f"({ym}) * {sph} * {L(cX1)} / {rs}, -1.0D),"
+                          f" 1.0D)) END")
+            tp, xs, ys = S(k_tp=f"tan(0.5D * ({L(H)} + {phl}))",
+                           k_xs=f"({xm}) * {sph}",
+                           k_ys=f"{rh} * {L(cX1)} * {cph} "
+                                f"- ({ym}) * {L(sX1)} * {sph}")
             halfe, halfpi = 0.5 * P.e, H
         else:
             akm1 = float(Q["akm1"])
             ysg = f"-({ym})" if mode == "n_pole" else ym
-            st.stage(k_tp=f"-({rh}) / {L(akm1)}", k_ys=ysg)
-            tp, ys = col("k_tp"), col("k_ys")
-            st.stage(k_phl=f"{L(H)} - 2.0D * atan({tp})")
-            phl = col("k_phl")
+            tp, ys = S(k_tp=f"-({rh}) / {L(akm1)}", k_ys=ysg)
+            phl = S(k_phl=f"{L(H)} - 2.0D * atan({tp})")
             xs = xm
             halfe, halfpi = -0.5 * P.e, -H
-        st.stage(s_dn0=f"NOT (abs({phl}) < {_SQL_INF})")
-        cur, done = phl, col("s_dn0")
+        cur, done = phl, S(s_dn0=f"NOT (abs({phl}) < {_SQL_INF})")
         for k in range(1, 9):
-            st.stage(**{f"s_es{k}":
-                        f"CASE WHEN {done} THEN 0.0D "
-                        f"ELSE {L(P.e)} * sin({cur}) END"})
-            es = col(f"s_es{k}")
-            st.stage(**{f"s_nw{k}":
-                        f"CASE WHEN {done} THEN {cur} ELSE "
-                        f"2.0D * atan({tp} * power((1.0D + {es}) / "
-                        f"(1.0D - {es}), {L(halfe)})) - {L(halfpi)} "
-                        f"END"})
-            nw = col(f"s_nw{k}")
-            st.stage(**{f"s_dn{k}":
-                        f"abs({cur} - {nw}) < {L(1.0e-10)}"})
-            cur, done = nw, col(f"s_dn{k}")
+            es = S(**{f"s_es{k}": f"CASE WHEN {done} THEN 0.0D "
+                                  f"ELSE {L(P.e)} * sin({cur}) END"})
+            nw = S(**{f"s_nw{k}": f"CASE WHEN {done} THEN {cur} ELSE "
+                                  f"2.0D * atan({tp} * power((1.0D + {es})"
+                                  f" / (1.0D - {es}), {L(halfe)})) - "
+                                  f"{L(halfpi)} END"})
+            cur, done = nw, S(**{f"s_dn{k}": f"abs({cur} - {nw}) < "
+                                             f"{L(1.0e-10)}"})
         neg = "-" if mode == "s_pole" else ""
-        st.stage(k_ph=f"CASE WHEN {done} THEN {neg}{cur} "
-                      f"ELSE {_SQL_NAN} END")
-        phi = col("k_ph")
-        st.stage(k_la0=f"CASE WHEN {xs} = 0.0D AND {ys} = 0.0D THEN "
-                       f"0.0D ELSE {_sql_atan2_ieee(xs, ys)} END")
-        st.stage(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
-                       f"ELSE {col('k_la0')} END")
-        lam = col("k_lam")
-    elif P.name == "omerc":
+        phi = S(k_ph=f"CASE WHEN {done} THEN {neg}{cur} "
+                     f"ELSE {_SQL_NAN} END")
+        la0 = S(k_la0=f"CASE WHEN {xs} = 0.0D AND {ys} = 0.0D THEN "
+                      f"0.0D ELSE {_sql_atan2_ieee(xs, ys)} END")
+        lam = S(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
+                      f"ELSE {la0} END")
+    elif name == "omerc":
         # omerc.cpp inverse (Hotine oblique Mercator): de-rotation,
         # hyperbolic de-projection, then phi2; closure scalars come
         # from the setup's opaque export (kernels/misc5.py)
@@ -1514,128 +1353,85 @@ def _emit_iter_inv_kernel(st, P, xm: str, ym: str):
             vq, uq = ym, xm
         else:
             sr, cr = float(Q["sinrot"]), float(Q["cosrot"])
-            st.stage(k_v=f"({xm}) * {L(cr)} - ({ym}) * {L(sr)}",
-                     k_u=f"({ym}) * {L(cr)} + ({xm}) * {L(sr)} "
-                         f"+ {L(float(Q['u_0']))}")
-            vq, uq = col("k_v"), col("k_u")
-        st.stage(k_qp=f"exp(-({L(float(Q['BrA']))}) * {vq})")
-        qp = col("k_qp")
-        st.stage(k_bad=f"{qp} = 0.0D")
-        badc = col("k_bad")
-        st.stage(k_qs=f"CASE WHEN {badc} THEN 1.0D ELSE {qp} END")
-        qs = col("k_qs")
-        st.stage(k_sp=f"0.5D * ({qs} - 1.0D / {qs})",
-                 k_tp=f"0.5D * ({qs} + 1.0D / {qs})",
-                 k_vp=f"sin({L(float(Q['BrA']))} * {uq})")
-        sp, tp, vp = col("k_sp"), col("k_tp"), col("k_vp")
-        st.stage(k_up=f"({vp} * {L(cg)} + {sp} * {L(sg)}) / {tp}")
-        up = col("k_up")
-        st.stage(k_ap=f"abs(abs({up}) - 1.0D) < {L(EPS_O)}")
-        ap = col("k_ap")
+            vq, uq = S(k_v=f"({xm}) * {L(cr)} - ({ym}) * {L(sr)}",
+                       k_u=f"({ym}) * {L(cr)} + ({xm}) * {L(sr)} "
+                           f"+ {L(float(Q['u_0']))}")
+        qp = S(k_qp=f"exp(-({L(float(Q['BrA']))}) * {vq})")
+        badc = S(k_bad=f"{qp} = 0.0D")
+        qs = S(k_qs=f"CASE WHEN {badc} THEN 1.0D ELSE {qp} END")
+        sp, tp, vp = S(k_sp=f"0.5D * ({qs} - 1.0D / {qs})",
+                       k_tp=f"0.5D * ({qs} + 1.0D / {qs})",
+                       k_vp=f"sin({L(float(Q['BrA']))} * {uq})")
+        up = S(k_up=f"({vp} * {L(cg)} + {sp} * {L(sg)}) / {tp}")
+        ap = S(k_ap=f"abs(abs({up}) - 1.0D) < {L(EPS_O)}")
         # at-pole lanes feed ts=1 into phi2 exactly like the kernel's
         # np.where BEFORE the power; (1-Up)=0 only at-pole, so the
         # guarded CASE also keeps ANSI division happy
-        st.stage(k_ts0=f"CASE WHEN {ap} THEN 1.0D ELSE "
-                       f"power({L(float(Q['E']))} / sqrt((1.0D + {up})"
-                       f" / (1.0D - {up})), {L(1.0 / float(Q['B']))}) "
-                       f"END")
-        phi_i = _sql_phi2_stages(st, col("k_ts0"), P.e, "p2_")
-        st.stage(k_ph0=f"CASE WHEN {ap} THEN (CASE WHEN {up} < 0.0D "
-                       f"THEN {L(-H)} ELSE {L(H)} END) "
-                       f"ELSE {phi_i} END")
-        ph0 = col("k_ph0")
-        st.stage(k_ax=f"{sp} * {L(cg)} - {vp} * {L(sg)}",
-                 k_ay=f"cos({L(float(Q['BrA']))} * {uq})")
-        st.stage(k_la0=f"CASE WHEN {ap} THEN 0.0D ELSE "
-                       f"-({L(float(Q['rB']))}) * "
-                       f"{_sql_atan2_ieee(col('k_ax'), col('k_ay'))} "
-                       f"END")
-        st.stage(k_la1=f"CASE WHEN isnan({ph0}) THEN {_SQL_NAN} "
-                       f"ELSE {col('k_la0')} END")
-        st.stage(k_ph=f"CASE WHEN {badc} THEN {_SQL_NAN} "
-                      f"ELSE {ph0} END",
-                 k_lam=f"CASE WHEN {badc} THEN {_SQL_NAN} "
-                       f"ELSE {col('k_la1')} END")
-        phi, lam = col("k_ph"), col("k_lam")
-    elif P.name == "laea":
-        # laea.cpp:140-228 ellipsoidal inverse, STAGED (r8): the raw
-        # Column tree's authlat-over-asin chain referenced beta four
-        # times and collapsed into one 64,030-bytecode method — it
-        # compiled (just under janino's 64 KB) but ran interpreted
-        # (8x over the JIT ceiling).  Term-for-term the Column order.
+        ts0 = S(k_ts0=f"CASE WHEN {ap} THEN 1.0D ELSE "
+                      f"power({L(float(Q['E']))} / sqrt((1.0D + {up})"
+                      f" / (1.0D - {up})), {L(1.0 / float(Q['B']))}) "
+                      f"END")
+        phi_i = _sql_phi2_stages(st, ts0, P.e, "p2_")
+        ph0 = S(k_ph0=f"CASE WHEN {ap} THEN (CASE WHEN {up} < 0.0D "
+                      f"THEN {L(-H)} ELSE {L(H)} END) "
+                      f"ELSE {phi_i} END")
+        ax, ay = S(k_ax=f"{sp} * {L(cg)} - {vp} * {L(sg)}",
+                   k_ay=f"cos({L(float(Q['BrA']))} * {uq})")
+        la0 = S(k_la0=f"CASE WHEN {ap} THEN 0.0D ELSE "
+                      f"-({L(float(Q['rB']))}) * "
+                      f"{_sql_atan2_ieee(ax, ay)} END")
+        la1 = S(k_la1=f"CASE WHEN isnan({ph0}) THEN {_SQL_NAN} "
+                      f"ELSE {la0} END")
+        phi, lam = S(k_ph=f"CASE WHEN {badc} THEN {_SQL_NAN} "
+                          f"ELSE {ph0} END",
+                     k_lam=f"CASE WHEN {badc} THEN {_SQL_NAN} "
+                           f"ELSE {la1} END")
+    elif name == "laea" and P.es != 0.0:
+        # laea.cpp:140-228 ellipsoidal inverse: beta is a column ref
+        # (an inlined authlat-over-asin chain referencing it four times
+        # collapsed into one 64,030-bytecode method, 8x over the JIT
+        # ceiling)
         mode = Q["mode"]
         apa, qp = Q["apa"], float(Q["qp"])
-        a0, a1, a2 = (float(apa[0]), float(apa[1]), float(apa[2]))
-
-        def authlat_stages(beta_ref: str) -> str:
-            st.stage(k_t2=f"{beta_ref} + {beta_ref}")
-            t2 = col("k_t2")
-            st.stage(k_aphi=f"{beta_ref} + {L(a0)} * sin({t2}) "
-                            f"+ {L(a1)} * sin({t2} + {t2}) "
-                            f"+ {L(a2)} * sin({t2} + {t2} + {t2})")
-            return col("k_aphi")
-
         if mode in ("equit", "obliq"):
             dd, rq = float(Q["dd"]), float(Q["rq"])
-            st.stage(k_x2=f"({xm}) / {L(dd)}", k_y2=f"({ym}) * {L(dd)}")
-            x2, y2 = col("k_x2"), col("k_y2")
-            st.stage(k_rho=f"hypot({x2}, {y2})")
-            rho = col("k_rho")
-            st.stage(k_ctr=f"{rho} < {L(1e-10)}",
-                     k_sc0=f"2.0D * asin(greatest(least("
-                           f"0.5D * {rho} / {L(rq)}, 1.0D), -1.0D))")
-            ctr, sc0 = col("k_ctr"), col("k_sc0")
-            st.stage(k_cce=f"cos({sc0})", k_sce=f"sin({sc0})",
-                     k_rsf=f"CASE WHEN {ctr} THEN 1.0D "
-                           f"ELSE {rho} END")
-            cce, sce, rsf = col("k_cce"), col("k_sce"), col("k_rsf")
-            st.stage(k_xs=f"{x2} * {sce}")
-            xs = col("k_xs")
+            x2, y2 = S(k_x2=f"({xm}) / {L(dd)}", k_y2=f"({ym}) * {L(dd)}")
+            rho = S(k_rho=f"hypot({x2}, {y2})")
+            ctr, sc0 = S(k_ctr=f"{rho} < {L(1e-10)}",
+                         k_sc0=f"2.0D * asin(greatest(least("
+                               f"0.5D * {rho} / {L(rq)}, 1.0D), -1.0D))")
+            cce, sce, rsf = S(k_cce=f"cos({sc0})", k_sce=f"sin({sc0})",
+                              k_rsf=f"CASE WHEN {ctr} THEN 1.0D "
+                                    f"ELSE {rho} END")
+            xs = S(k_xs=f"{x2} * {sce}")
             if mode == "obliq":
                 sb1, cb1 = float(Q["sinb1"]), float(Q["cosb1"])
-                st.stage(k_ab=f"{cce} * {L(sb1)} + {y2} * {sce} "
-                              f"* {L(cb1)} / {rsf}",
-                         k_ys=f"{rho} * {L(cb1)} * {cce} "
-                              f"- {y2} * {L(sb1)} * {sce}")
+                ab, ys = S(k_ab=f"{cce} * {L(sb1)} + {y2} * {sce} "
+                                f"* {L(cb1)} / {rsf}",
+                           k_ys=f"{rho} * {L(cb1)} * {cce} "
+                                f"- {y2} * {L(sb1)} * {sce}")
             else:
-                st.stage(k_ab=f"{y2} * {sce} / {rsf}",
-                         k_ys=f"{rho} * {cce}")
-            ab, ys = col("k_ab"), col("k_ys")
-            st.stage(k_bt=f"asin(greatest(least({ab}, 1.0D), -1.0D))")
-            aphi = authlat_stages(col("k_bt"))
-            st.stage(k_la0=_sql_atan2_ieee(xs, ys))
-            st.stage(k_lam=f"CASE WHEN {ctr} THEN 0.0D "
-                           f"ELSE {col('k_la0')} END",
-                     k_ph=f"CASE WHEN {ctr} THEN {L(P.phi0)} "
-                          f"ELSE {aphi} END")
+                ab, ys = S(k_ab=f"{y2} * {sce} / {rsf}",
+                           k_ys=f"{rho} * {cce}")
         else:
-            yy_sql = f"-({ym})" if mode == "n_pole" else f"({ym})"
-            st.stage(k_yy=yy_sql)
-            yy = col("k_yy")
-            st.stage(k_q=f"({xm}) * ({xm}) + {yy} * {yy}")
-            qv = col("k_q")
-            st.stage(k_ctr=f"{qv} = 0.0D",
-                     k_ab0=f"1.0D - {qv} / {L(qp)}")
-            ctr = col("k_ctr")
-            ab = col("k_ab0")
+            xs = xm
+            ys = S(k_yy=f"-({ym})" if mode == "n_pole" else f"({ym})")
+            qv = S(k_q=f"({xm}) * ({xm}) + {ys} * {ys}")
+            ctr, ab = S(k_ctr=f"{qv} = 0.0D",
+                        k_ab0=f"1.0D - {qv} / {L(qp)}")
             if mode == "s_pole":
-                st.stage(k_ab1=f"-({ab})")
-                ab = col("k_ab1")
-            st.stage(k_bt=f"asin(greatest(least({ab}, 1.0D), -1.0D))")
-            aphi = authlat_stages(col("k_bt"))
-            st.stage(k_la0=_sql_atan2_ieee(xm, yy))
-            st.stage(k_lam=f"CASE WHEN {ctr} THEN 0.0D "
-                           f"ELSE {col('k_la0')} END",
+                ab = S(k_ab1=f"-({ab})")
+        bt = S(k_bt=f"asin(greatest(least({ab}, 1.0D), -1.0D))")
+        aphi = S(k_aphi=_sql_authlat(st, bt, apa, "k_"))
+        la0 = S(k_la0=_sql_atan2_ieee(xs, ys))
+        lam, phi = S(k_lam=f"CASE WHEN {ctr} THEN 0.0D ELSE {la0} END",
                      k_ph=f"CASE WHEN {ctr} THEN {L(P.phi0)} "
                           f"ELSE {aphi} END")
-        lam, phi = col("k_lam"), col("k_ph")
-    elif P.name == "geos":
-        # geos.cpp inverse (closed-form ray/ellipsoid intersection),
-        # STAGED (r8): the raw Column twin duplicated the Vy/Vz/kq
-        # subtrees — CollapseProject inlined them into one ~22.8k-line
-        # method janino refuses (silent interpreted fallback, VERDICT
-        # r7 #2).  Every shared subexpression below is a column ref;
-        # arithmetic term for term the Column tree's order.
+    elif name == "geos":
+        # geos.cpp inverse (closed-form ray/ellipsoid intersection).
+        # Every shared subexpression is a column ref: inlined Vy/Vz/kq
+        # subtrees collapsed into one ~22.8k-line method janino refuses
+        # (silent interpreted fallback)
         h = P.param_f("h")
         flip = P.params.get("sweep") == "x"
         rg1 = h / P.a
@@ -1645,51 +1441,35 @@ def _emit_iter_inv_kernel(st, P, xm: str, ym: str):
         rp = math.sqrt(P.one_es) if ell else 1.0
         rp_inv2 = P.rone_es if ell else 1.0
         if flip:
-            st.stage(k_vz=f"tan(({ym}) / {L(rg1)})")
-            vz = col("k_vz")
+            vz = S(k_vz=f"tan(({ym}) / {L(rg1)})")
             hyp = (f"hypot(1.0D, {vz})" if ell
                    else f"sqrt(1.0D + {vz} * {vz})")
-            st.stage(k_vy=f"tan(({xm}) / {L(rg1)}) * {hyp}")
-            vy = col("k_vy")
+            vy = S(k_vy=f"tan(({xm}) / {L(rg1)}) * {hyp}")
         else:
-            st.stage(k_vy=f"tan(({xm}) / {L(rg1)})")
-            vy = col("k_vy")
+            vy = S(k_vy=f"tan(({xm}) / {L(rg1)})")
             hyp = (f"hypot(1.0D, {vy})" if ell
                    else f"sqrt(1.0D + {vy} * {vy})")
-            st.stage(k_vz=f"tan(({ym}) / {L(rg1)}) * {hyp}")
-            vz = col("k_vz")
-        if ell:
-            st.stage(k_azp=f"{vz} / {L(rp)}")
-            azp = col("k_azp")
-            st.stage(k_aa=f"{vy} * {vy} + {azp} * {azp} + 1.0D")
-        else:
-            st.stage(k_aa=f"{vy} * {vy} + {vz} * {vz} + 1.0D")
-        aa = col("k_aa")
+            vz = S(k_vz=f"tan(({ym}) / {L(rg1)}) * {hyp}")
+        azp = S(k_azp=f"{vz} / {L(rp)}") if ell else vz
+        aa = S(k_aa=f"{vy} * {vy} + {azp} * {azp} + 1.0D")
         bb = 2.0 * rg * -1.0  # Vx = -1 (geos.cpp)
-        st.stage(k_det=f"{L(bb * bb)} - (4.0D * {aa}) * {L(Cq)}")
-        det = col("k_det")
-        st.stage(k_bad=f"{det} < 0.0D",
-                 k_kq=f"({L(-bb)} - sqrt(greatest({det}, 0.0D))) "
-                      f"/ (2.0D * {aa})")
-        badc, kq = col("k_bad"), col("k_kq")
-        st.stage(k_vx2=f"{L(rg)} + {kq} * (-1.0D)",
-                 k_vy2=f"{vy} * {kq}", k_vz2=f"{vz} * {kq}")
-        vx2, vy2, vz2 = col("k_vx2"), col("k_vy2"), col("k_vz2")
-        st.stage(k_la0=_sql_atan2_ieee(vy2, vx2))
-        la0 = col("k_la0")
+        det = S(k_det=f"{L(bb * bb)} - (4.0D * {aa}) * {L(Cq)}")
+        badc, kq = S(k_bad=f"{det} < 0.0D",
+                     k_kq=f"({L(-bb)} - sqrt(greatest({det}, 0.0D))) "
+                          f"/ (2.0D * {aa})")
+        vx2, vy2, vz2 = S(k_vx2=f"{L(rg)} + {kq} * (-1.0D)",
+                          k_vy2=f"{vy} * {kq}", k_vz2=f"{vz} * {kq}")
+        la0 = S(k_la0=_sql_atan2_ieee(vy2, vx2))
         # Vx2 > 0 for every det>=0 lane (k <= rg/aa < rg), so the
         # division cannot hit the ANSI divide-by-zero path
-        st.stage(k_ph0=f"atan({vz2} * cos({la0}) / {vx2})")
-        ph0 = col("k_ph0")
+        ph0 = S(k_ph0=f"atan({vz2} * cos({la0}) / {vx2})")
         if ell:
-            st.stage(k_ph1=f"atan({L(rp_inv2)} * tan({ph0}))")
-            ph0 = col("k_ph1")
-        st.stage(k_lam=f"CASE WHEN {badc} THEN {_SQL_NAN} "
-                       f"ELSE {la0} END",
-                 k_ph=f"CASE WHEN {badc} THEN {_SQL_NAN} "
-                      f"ELSE {ph0} END")
-        lam, phi = col("k_lam"), col("k_ph")
-    elif P.name == "eqearth":
+            ph0 = S(k_ph1=f"atan({L(rp_inv2)} * tan({ph0}))")
+        lam, phi = S(k_lam=f"CASE WHEN {badc} THEN {_SQL_NAN} "
+                           f"ELSE {la0} END",
+                     k_ph=f"CASE WHEN {badc} THEN {_SQL_NAN} "
+                          f"ELSE {ph0} END")
+    elif name == "eqearth":
         # eqearth.cpp:77-131 inverse: 12-iteration Newton on the
         # parametric latitude, then the closed de-projection (+ the
         # authalic-latitude series for the ellipsoid class)
@@ -1697,194 +1477,57 @@ def _emit_iter_inv_kernel(st, P, xm: str, ym: str):
             _A1, _A2, _A3, _A4, _M, _MAX_Y)
 
         rqda = float(Q["rqda"])
-        st.stage(k_x1=f"({xm}) / {L(rqda)}",
-                 k_yt=f"least(greatest(({ym}) / {L(rqda)}, "
-                      f"{L(-_MAX_Y)}), {L(_MAX_Y)})")
-        x1, yt = col("k_x1"), col("k_yt")
+        x1, yt = S(k_x1=f"({xm}) / {L(rqda)}",
+                   k_yt=f"least(greatest(({ym}) / {L(rqda)}, "
+                        f"{L(-_MAX_Y)}), {L(_MAX_Y)})")
         cur, done = yt, "false"
         for k in range(1, 13):
-            st.stage(**{f"n_y2{k}":
-                        f"CASE WHEN {done} THEN 0.0D "
-                        f"ELSE {cur} * {cur} END"})
-            y2 = col(f"n_y2{k}")
-            st.stage(**{f"n_y6{k}": f"{y2} * {y2} * {y2}"})
-            y6 = col(f"n_y6{k}")
-            st.stage(**{f"n_f{k}":
-                        f"CASE WHEN {done} THEN 0.0D ELSE "
-                        f"{cur} * ({L(_A1)} + {L(_A2)} * {y2} + {y6} *"
-                        f" ({L(_A3)} + {L(_A4)} * {y2})) - {yt} END",
-                        f"n_fd{k}":
-                        f"{L(_A1)} + {L(3 * _A2)} * {y2} + {y6} * "
-                        f"({L(7 * _A3)} + {L(9 * _A4)} * {y2})"})
-            fn, fd = col(f"n_f{k}"), col(f"n_fd{k}")
+            y2 = S(**{f"n_y2{k}": f"CASE WHEN {done} THEN 0.0D "
+                                  f"ELSE {cur} * {cur} END"})
+            y6 = S(**{f"n_y6{k}": f"{y2} * {y2} * {y2}"})
+            fn, fd = S(**{
+                f"n_f{k}": f"CASE WHEN {done} THEN 0.0D ELSE "
+                           f"{cur} * ({L(_A1)} + {L(_A2)} * {y2} + {y6} *"
+                           f" ({L(_A3)} + {L(_A4)} * {y2})) - {yt} END",
+                f"n_fd{k}": f"{L(_A1)} + {L(3 * _A2)} * {y2} + {y6} * "
+                            f"({L(7 * _A3)} + {L(9 * _A4)} * {y2})"})
             # numpy's f/0 gives a silent ±inf; ANSI Spark would error,
             # so the exact-zero denominator is routed through f * inf
-            st.stage(**{f"n_tl{k}":
-                        f"CASE WHEN {done} THEN 0.0D "
-                        f"WHEN {fd} = 0.0D THEN {fn} * {_SQL_INF} "
-                        f"ELSE {fn} / {fd} END"})
-            tl = col(f"n_tl{k}")
-            st.stage(**{f"n_yc{k}":
-                        f"CASE WHEN {done} THEN {cur} "
-                        f"ELSE {cur} - {tl} END",
-                        f"n_dn{k}": f"abs({tl}) < {L(1.0e-11)}"})
-            cur, done = col(f"n_yc{k}"), col(f"n_dn{k}")
+            tl = S(**{f"n_tl{k}": f"CASE WHEN {done} THEN 0.0D "
+                                  f"WHEN {fd} = 0.0D THEN {fn} * {_SQL_INF} "
+                                  f"ELSE {fn} / {fd} END"})
+            cur, done = S(**{f"n_yc{k}": f"CASE WHEN {done} THEN {cur} "
+                                         f"ELSE {cur} - {tl} END",
+                             f"n_dn{k}": f"abs({tl}) < {L(1.0e-11)}"})
             if k % 5 == 0:
                 st.barrier()
-        st.stage(k_fy2=f"{cur} * {cur}")
-        fy2 = col("k_fy2")
-        st.stage(k_fy6=f"{fy2} * {fy2} * {fy2}")
-        fy6 = col("k_fy6")
-        st.stage(k_la0=f"{L(_M)} * {x1} * ({L(_A1)} + {L(3 * _A2)} * "
-                       f"{fy2} + {fy6} * ({L(7 * _A3)} + {L(9 * _A4)}"
-                       f" * {fy2})) / cos({cur})",
-                 k_ph0=f"asin(least(greatest(sin({cur}) / {L(_M)}, "
-                       f"-1.0D), 1.0D))")
-        ph0 = col("k_ph0")
+        fy2 = S(k_fy2=f"{cur} * {cur}")
+        fy6 = S(k_fy6=f"{fy2} * {fy2} * {fy2}")
+        la0, ph0 = S(k_la0=f"{L(_M)} * {x1} * ({L(_A1)} + {L(3 * _A2)} "
+                           f"* {fy2} + {fy6} * ({L(7 * _A3)} + "
+                           f"{L(9 * _A4)} * {fy2})) / cos({cur})",
+                     k_ph0=f"asin(least(greatest(sin({cur}) / {L(_M)}, "
+                           f"-1.0D), 1.0D))")
         if P.es != 0.0:
-            apa = Q["apa"]
-            st.stage(k_t2=f"{ph0} + {ph0}")
-            t2 = col("k_t2")
-            st.stage(k_pha=f"{ph0} + {L(float(apa[0]))} * sin({t2}) "
-                           f"+ {L(float(apa[1]))} * sin({t2} + {t2}) "
-                           f"+ {L(float(apa[2]))} * "
-                           f"sin({t2} + {t2} + {t2})")
-            ph0 = col("k_pha")
-        st.stage(k_ph=f"CASE WHEN {done} THEN {ph0} "
-                      f"ELSE {_SQL_NAN} END",
-                 k_lam=f"CASE WHEN {done} THEN {col('k_la0')} "
-                       f"ELSE {_SQL_NAN} END")
-        phi, lam = col("k_ph"), col("k_lam")
-    elif P.name == "sterea":
-        # sterea.cpp:70-88: oblique-stereographic de-projection on the
-        # Gauss sphere, then the 20-iteration gauss.cpp:96-113
-        # fixed-point inversion (tol 1e-14; non-convergent lanes keep
-        # the last estimate, like the reference)
-        Cg, Kg, R2 = float(Q["C"]), float(Q["K"]), float(Q["R2"])
-        sc0, cc0 = float(Q["sinc0"]), float(Q["cosc0"])
-        st.stage(k_x1=f"({xm}) / {L(P.k0)}",
-                 k_y1=f"({ym}) / {L(P.k0)}")
-        x1, y1 = col("k_x1"), col("k_y1")
-        st.stage(k_rh=f"hypot({x1}, {y1})")
-        rh = col("k_rh")
-        st.stage(k_rs=f"CASE WHEN {rh} = 0.0D THEN 1.0D ELSE {rh} END",
-                 k_c2=f"2.0D * atan2({rh}, {L(R2)})")
-        rs, c2 = col("k_rs"), col("k_c2")
-        st.stage(k_sc=f"sin({c2})", k_cc=f"cos({c2})")
-        sc, cc = col("k_sc"), col("k_cc")
-        st.stage(k_ax=f"{x1} * {sc}",
-                 k_ay=f"{rh} * {L(cc0)} * {cc} - {y1} * {L(sc0)} * "
-                      f"{sc}")
-        ax, ay = col("k_ax"), col("k_ay")
-        st.stage(k_sf0=f"asin(least(greatest({cc} * {L(sc0)} + {y1} *"
-                       f" {sc} * {L(cc0)} / {rs}, -1.0D), 1.0D))",
-                 k_sl0=_sql_atan2_ieee(ax, ay))
-        st.stage(k_sf=f"CASE WHEN {rh} = 0.0D THEN "
-                      f"{L(float(Q['phic0']))} ELSE {col('k_sf0')} "
-                      f"END",
-                 k_sl=f"CASE WHEN {rh} = 0.0D THEN 0.0D "
-                      f"ELSE {col('k_sl0')} END")
-        sf, sl = col("k_sf"), col("k_sl")
-        # gauss inverse: lam = slam/C; num = (tan(sphi/2+pi/4)/K)^(1/C)
-        st.stage(k_lam=f"{sl} / {L(Cg)}",
-                 k_num=f"power(tan(0.5D * {sf} + {L(math.pi / 4.0)}) "
-                       f"/ {L(Kg)}, {L(1.0 / Cg)})")
-        lam, num = col("k_lam"), col("k_num")
-        st.stage(g_dn0=f"NOT (abs({sf}) < {_SQL_INF})")
-        cur, done = sf, col("g_dn0")
-        for k in range(1, 21):
-            st.stage(**{f"g_es{k}":
-                        f"CASE WHEN {done} THEN 0.0D "
-                        f"ELSE {L(P.e)} * sin({cur}) END"})
-            es = col(f"g_es{k}")
-            st.stage(**{f"g_nw{k}":
-                        f"CASE WHEN {done} THEN {cur} ELSE "
-                        f"2.0D * atan({num} * power((1.0D - {es}) / "
-                        f"(1.0D + {es}), {L(-0.5 * P.e)})) - {L(H)} "
-                        f"END"})
-            nw = col(f"g_nw{k}")
-            st.stage(**{f"g_dn{k}":
-                        f"abs({nw} - {cur}) < {L(1.0e-14)}"})
-            cur, done = nw, col(f"g_dn{k}")
-            if k % 8 == 0:
-                st.barrier()
-        phi = cur  # non-convergent lanes keep the last estimate
-    elif P.name == "lcc":
-        n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
-        st.stage(k_x1=f"({xm}) / {L(P.k0)}",
-                 k_yr=f"{L(rho0)} - ({ym}) / {L(P.k0)}")
-        x1, yr = col("k_x1"), col("k_yr")
-        st.stage(k_rh=f"hypot({x1}, {yr})")
-        if n < 0.0:  # cone opens south: setup-time sign flips
-            st.stage(k_rho=f"-{col('k_rh')}", k_xs=f"-{x1}",
-                     k_ys=f"-{yr}")
-            rho, xs, ys = col("k_rho"), col("k_xs"), col("k_ys")
-        else:
-            rho, xs, ys = col("k_rh"), x1, yr
-        st.stage(k_nz=f"{rho} != 0.0D")
-        nz = col("k_nz")
-        st.stage(k_rnz=f"CASE WHEN {nz} THEN {rho} ELSE 1.0D END")
-        rnz = col("k_rnz")
-        if P.es != 0.0:
-            st.stage(k_ts0=f"power({rnz} / {L(c)}, {L(1.0 / n)})")
-            phi_i = _sql_phi2_stages(st, col("k_ts0"), P.e, "p2_")
-        else:
-            st.stage(k_sph=f"2.0D * atan(power({L(c)} / {rnz}, "
-                           f"{L(1.0 / n)})) - {L(H)}")
-            phi_i = col("k_sph")
-        st.stage(k_ph=f"CASE WHEN {nz} THEN {phi_i} "
-                      f"ELSE {L(H if n > 0.0 else -H)} END")
-        phi = col("k_ph")
-        st.stage(k_la0=f"CASE WHEN {nz} THEN "
-                       f"{_sql_atan2_ieee(xs, ys)} / {L(n)} "
-                       f"ELSE 0.0D END")
-        st.stage(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
-                       f"ELSE {col('k_la0')} END")
-        lam = col("k_lam")
-    elif P.name == "eqdc":
-        # eqdc.cpp ellipsoidal inverse: conic geometry + inv_mlfn
-        # (the spherical branch is a closed-form r5 column twin)
-        n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
-        st.stage(k_yy=f"{L(rho0)} - ({ym})")
-        yy = col("k_yy")
-        st.stage(k_rh=f"hypot({xm}, {yy})")
-        if n < 0.0:
-            st.stage(k_rho=f"-{col('k_rh')}", k_xs=f"-({xm})",
-                     k_ys=f"-{yy}")
-            rho, xs, ys = col("k_rho"), col("k_xs"), col("k_ys")
-        else:
-            rho, xs, ys = col("k_rh"), xm, yy
-        st.stage(k_nz=f"{rho} != 0.0D")
-        nz = col("k_nz")
-        st.stage(k_pa=f"{L(c)} - {rho}")
-        phi_i = _sql_invmlfn_stages(st, col("k_pa"), P.es, Q["en"],
-                                    "im_")
-        st.stage(k_ph=f"CASE WHEN {nz} THEN {phi_i} "
-                      f"ELSE {L(H if n > 0.0 else -H)} END")
-        phi = col("k_ph")
-        # (the eqdc kernel has no isnan(phi) lam masking — mirror it)
-        st.stage(k_lam=f"CASE WHEN {nz} THEN "
-                       f"{_sql_atan2_ieee(xs, ys)} / {L(n)} "
-                       f"ELSE 0.0D END")
-        lam = col("k_lam")
-    elif P.name == "sinu":
+            ph0 = S(k_pha=_sql_authlat(st, ph0, Q["apa"], "k_"))
+        phi, lam = S(k_ph=f"CASE WHEN {done} THEN {ph0} "
+                          f"ELSE {_SQL_NAN} END",
+                     k_lam=f"CASE WHEN {done} THEN {la0} "
+                           f"ELSE {_SQL_NAN} END")
+    elif name == "sinu" and P.es != 0.0:
         # gn_sinu.cpp:38-54 ellipsoidal inverse
         phi_i = _sql_invmlfn_stages(st, ym, P.es, Q["en"], "im_")
-        st.stage(k_sa=f"abs({phi_i})")
-        sa = col("k_sa")
-        st.stage(k_int=f"{sa} < {L(H)}",
-                 k_pol=f"({sa} - {L(1e-10)}) < {L(H)}")
-        inter, pol = col("k_int"), col("k_pol")
-        st.stage(k_sp=f"sin({phi_i})")
-        sp = col("k_sp")
-        st.stage(k_lam=f"CASE WHEN {inter} THEN ({xm}) * "
-                       f"sqrt(1.0D - {L(P.es)} * {sp} * {sp}) / "
-                       f"cos({phi_i}) WHEN {pol} THEN 0.0D "
-                       f"ELSE {_SQL_NAN} END",
-                 k_ph=f"CASE WHEN {inter} OR {pol} THEN {phi_i} "
-                      f"ELSE {_SQL_NAN} END")
-        lam, phi = col("k_lam"), col("k_ph")
-    elif P.name == "cass":
+        sa = S(k_sa=f"abs({phi_i})")
+        inter, pol = S(k_int=f"{sa} < {L(H)}",
+                       k_pol=f"({sa} - {L(1e-10)}) < {L(H)}")
+        sp = S(k_sp=f"sin({phi_i})")
+        lam, phi = S(k_lam=f"CASE WHEN {inter} THEN ({xm}) * "
+                           f"sqrt(1.0D - {L(P.es)} * {sp} * {sp}) / "
+                           f"cos({phi_i}) WHEN {pol} THEN 0.0D "
+                           f"ELSE {_SQL_NAN} END",
+                     k_ph=f"CASE WHEN {inter} OR {pol} THEN {phi_i} "
+                          f"ELSE {_SQL_NAN} END")
+    elif name == "cass" and P.es != 0.0:
         # cass.cpp ellipsoidal inverse: inv_mlfn + closed series;
         # en/m0 recomputed at plan time like the forward twin
         C3_, C4_, C5_ = (0.04166666666666666666,
@@ -1894,667 +1537,377 @@ def _emit_iter_inv_kernel(st, P, xm: str, ym: str):
         m0 = float(C.mlfn(np.float64(P.phi0),
                           np.float64(math.sin(P.phi0)),
                           np.float64(math.cos(P.phi0)), en))
-        st.stage(k_my=f"{L(m0)} + ({ym})")
-        ph1 = _sql_invmlfn_stages(st, col("k_my"), P.es, en, "im_")
-        st.stage(k_tn=f"tan({ph1})", k_sn=f"sin({ph1})")
-        tn, sn = col("k_tn"), col("k_sn")
-        st.stage(k_tt=f"{tn} * {tn}",
-                 k_r1=f"1.0D / (1.0D - {L(P.es)} * {sn} * {sn})")
-        tt, r1 = col("k_tt"), col("k_r1")
-        st.stage(k_nq=f"sqrt({r1})")
-        nq = col("k_nq")
-        st.stage(k_r2=f"{r1} * {L(1.0 - P.es)} * {nq}",
-                 k_dd=f"({xm}) / {nq}")
-        r2, ddc = col("k_r2"), col("k_dd")
-        st.stage(k_d2=f"{ddc} * {ddc}")
-        d2 = col("k_d2")
-        st.stage(k_ph=f"{ph1} - ({nq} * {tn} / {r2}) * {d2} * "
-                      f"(0.5D - (1.0D + 3.0D * {tt}) * {d2} * "
-                      f"{L(C3_)})",
-                 k_lam=f"{ddc} * (1.0D + {tt} * {d2} * "
-                       f"(-{L(C4_)} + (1.0D + 3.0D * {tt}) * {d2} * "
-                       f"{L(C5_)})) / cos({ph1})")
-        phi, lam = col("k_ph"), col("k_lam")
-    else:  # aea / leac
-        n, c = float(Q["n"]), float(Q["c"])
-        dd, rho0 = float(Q["dd"]), float(Q["rho0"])
-        st.stage(k_yy=f"{L(rho0)} - ({ym})")
-        yy = col("k_yy")
-        st.stage(k_rh=f"hypot({xm}, {yy})")
-        if n < 0.0:
-            st.stage(k_rho=f"-{col('k_rh')}", k_xs=f"-({xm})",
-                     k_ys=f"-{yy}")
-            rho, xs, ys = col("k_rho"), col("k_xs"), col("k_ys")
+        ph1 = _sql_invmlfn_stages(st, S(k_my=f"{L(m0)} + ({ym})"), P.es,
+                                  en, "im_")
+        tn, sn = S(k_tn=f"tan({ph1})", k_sn=f"sin({ph1})")
+        tt, r1 = S(k_tt=f"{tn} * {tn}",
+                   k_r1=f"1.0D / (1.0D - {L(P.es)} * {sn} * {sn})")
+        nq = S(k_nq=f"sqrt({r1})")
+        r2, ddc = S(k_r2=f"{r1} * {L(1.0 - P.es)} * {nq}",
+                    k_dd=f"({xm}) / {nq}")
+        d2 = S(k_d2=f"{ddc} * {ddc}")
+        phi, lam = S(k_ph=f"{ph1} - ({nq} * {tn} / {r2}) * {d2} * "
+                          f"(0.5D - (1.0D + 3.0D * {tt}) * {d2} * "
+                          f"{L(C3_)})",
+                     k_lam=f"{ddc} * (1.0D + {tt} * {d2} * "
+                           f"(-{L(C4_)} + (1.0D + 3.0D * {tt}) * {d2} * "
+                           f"{L(C5_)})) / cos({ph1})")
+    elif name in ("lcc", "eqdc", "aea", "leac"):
+        # conic inverses (lcc.cpp:46-77, eqdc.cpp, aea.cpp:121-160):
+        # polar geometry about the apex, then each family's latitude
+        n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
+        if name == "lcc":
+            x1, yr = S(k_x1=f"({xm}) / {L(P.k0)}",
+                       k_yr=f"{L(rho0)} - ({ym}) / {L(P.k0)}")
         else:
-            rho, xs, ys = col("k_rh"), xm, yy
-        st.stage(k_nz=f"{rho} != 0.0D")
-        nz = col("k_nz")
-        st.stage(k_pr=f"{rho} / {L(dd)}")
-        pr = col("k_pr")
-        if Q["ellips"]:
-            ec = float(Q["ec"])
-            st.stage(k_pq=f"({L(c)} - {pr} * {pr}) / {L(n)}")
-            pq = col("k_pq")
-            st.stage(k_al=f"abs({L(ec)} - abs({pq})) <= {L(1.0e-7)}")
-            al = col("k_al")
+            x1, yr = xm, S(k_yy=f"{L(rho0)} - ({ym})")
+        rh = S(k_rh=f"hypot({x1}, {yr})")
+        if n < 0.0:  # cone opens south: setup-time sign flips
+            rho, xs, ys = S(k_rho=f"-{rh}", k_xs=f"-({x1})", k_ys=f"-{yr}")
+        else:
+            rho, xs, ys = rh, x1, yr
+        nz = S(k_nz=f"{rho} != 0.0D")
+        if name == "lcc":
+            rnz = S(k_rnz=f"CASE WHEN {nz} THEN {rho} ELSE 1.0D END")
+            if P.es != 0.0:
+                ts0 = S(k_ts0=f"power({rnz} / {L(c)}, {L(1.0 / n)})")
+                phi_i = _sql_phi2_stages(st, ts0, P.e, "p2_")
+            else:
+                phi_i = S(k_sph=f"2.0D * atan(power({L(c)} / {rnz}, "
+                                f"{L(1.0 / n)})) - {L(H)}")
+        elif name == "eqdc":
+            # phi = c - rho (sphere) or inv_mlfn(c - rho) (ellipsoid)
+            phi_i = S(k_pa=f"{L(c)} - {rho}")
+            if Q["ellips"]:
+                phi_i = _sql_invmlfn_stages(st, phi_i, P.es, Q["en"], "im_")
+        elif Q["ellips"]:
+            pr = S(k_pr=f"{rho} / {L(float(Q['dd']))}")
+            pq = S(k_pq=f"({L(c)} - {pr} * {pr}) / {L(n)}")
+            al = S(k_al=f"abs({L(float(Q['ec']))} - abs({pq})) <= "
+                        f"{L(1.0e-7)}")
             # Spark's NaN>2 is TRUE (numpy: False), so a NaN pq lands
             # in the too-big lane here; both paths end at NaN, see the
             # al/tb CASE below
-            st.stage(k_tb=f"abs({pq}) > 2.0D AND NOT {al}")
-            tb = col("k_tb")
-            st.stage(k_qs=f"CASE WHEN {al} OR {tb} THEN 0.0D "
-                          f"ELSE {pq} END")
-            phi_it = _sql_phi1_stages(st, col("k_qs"), P.e,
-                                      P.one_es, "p1_")
-            st.stage(k_ph0=f"CASE WHEN {al} THEN "
-                           f"(CASE WHEN {pq} < 0.0D THEN {L(-H)} "
-                           f"ELSE {L(H)} END) "
-                           f"WHEN {tb} THEN {_SQL_NAN} "
-                           f"ELSE {phi_it} END")
+            tb = S(k_tb=f"abs({pq}) > 2.0D AND NOT {al}")
+            qs = S(k_qs=f"CASE WHEN {al} OR {tb} THEN 0.0D ELSE {pq} END")
+            phi_it = _sql_phi1_stages(st, qs, P.e, P.one_es, "p1_")
+            phi_i = S(k_ph0=f"CASE WHEN {al} THEN "
+                            f"(CASE WHEN {pq} < 0.0D THEN {L(-H)} "
+                            f"ELSE {L(H)} END) "
+                            f"WHEN {tb} THEN {_SQL_NAN} "
+                            f"ELSE {phi_it} END")
         else:
-            n2 = float(Q["n2"])
-            st.stage(k_pq=f"({L(c)} - {pr} * {pr}) / {L(n2)}")
-            pq = col("k_pq")
-            st.stage(k_ph0=f"CASE WHEN abs({pq}) <= 1.0D THEN "
-                           f"asin(least(greatest({pq}, -1.0D), 1.0D)) "
-                           f"ELSE (CASE WHEN {pq} < 0.0D THEN {L(-H)} "
-                           f"ELSE {L(H)} END) END")
-        phi_i = col("k_ph0")
-        st.stage(k_ph=f"CASE WHEN {nz} THEN {phi_i} "
-                      f"ELSE {L(H if n > 0.0 else -H)} END")
-        phi = col("k_ph")
-        st.stage(k_la0=f"CASE WHEN {nz} THEN "
-                       f"{_sql_atan2_ieee(xs, ys)} / {L(n)} "
-                       f"ELSE 0.0D END")
-        st.stage(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
-                       f"ELSE {col('k_la0')} END")
-        lam = col("k_lam")
-    # inv_finalize: lam0 + wrap (inv.cpp:117-124)
-    st.stage(k_lf=f"{lam} + {L(P.lam0)}")
-    st.stage(k_lw=_sql_adjlon(col("k_lf")))
-    return col("k_lw"), phi
+            pr = S(k_pr=f"{rho} / {L(float(Q['dd']))}")
+            pq = S(k_pq=f"({L(c)} - {pr} * {pr}) / {L(float(Q['n2']))}")
+            phi_i = S(k_ph0=f"CASE WHEN abs({pq}) <= 1.0D THEN "
+                            f"asin(least(greatest({pq}, -1.0D), 1.0D)) "
+                            f"ELSE (CASE WHEN {pq} < 0.0D THEN {L(-H)} "
+                            f"ELSE {L(H)} END) END")
+        phi = S(k_ph=f"CASE WHEN {nz} THEN {phi_i} "
+                     f"ELSE {L(H if n > 0.0 else -H)} END")
+        lam = S(k_la0=f"CASE WHEN {nz} THEN {_sql_atan2_ieee(xs, ys)} / "
+                      f"{L(n)} ELSE 0.0D END")
+        if name != "eqdc":  # (the eqdc kernel has no isnan(phi) masking)
+            lam = S(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
+                          f"ELSE {lam} END")
+    elif name == "eqc":
+        # eqc.cpp:30-38: linear
+        lam = f"{xm} / {L(float(Q['rc']))}"
+        phi = f"{ym} + {L(P.phi0)}"
+    elif name == "cea":
+        # cea.cpp:37-61
+        if P.es != 0.0:
+            beta = S(k_bt="asin(" + _clip1(
+                f"2.0D * {ym} * {L(P.k0)} / {L(float(Q['qp']))}") + ")")
+            phi = _sql_authlat(st, beta, Q["apa"], "k_")
+            lam = f"{xm} / {L(P.k0)}"
+        else:
+            yk = S(k_yk=f"{ym} * {L(P.k0)}")
+            ta = S(k_ta=f"abs({yk})")
+            ok = S(k_ok=f"({ta} - {L(1e-10)}) <= 1.0D")
+            phi = (f"CASE WHEN {ok} THEN (CASE WHEN {ta} >= 1.0D THEN "
+                   f"(CASE WHEN {yk} < 0.0D THEN {L(-H)} ELSE {L(H)} END) "
+                   f"ELSE asin({_clip1(yk)}) END) ELSE {_SQL_NAN} END")
+            lam = (f"CASE WHEN {ok} THEN {xm} / {L(P.k0)} "
+                   f"ELSE {_SQL_NAN} END")
+    elif name == "laea":
+        # laea.cpp:140-228 spherical inverse, all aspect modes
+        mode = Q["mode"]
+        rh = S(k_rh=f"hypot({xm}, {ym})")
+        bad, phz = S(k_bad=f"{rh} * 0.5D > 1.0D",
+                     k_phz=f"2.0D * asin({_clip1(f'{rh} * 0.5D')})")
+        if mode in ("obliq", "equit"):
+            sinz, cosz, rhs = S(k_sz=f"sin({phz})", k_cz=f"cos({phz})",
+                                k_rhs=f"CASE WHEN {rh} = 0.0D THEN 1.0D "
+                                      f"ELSE {rh} END")
+            if mode == "equit":
+                ph = S(k_ph0=f"CASE WHEN abs({rh}) <= {L(1e-10)} THEN 0.0D "
+                             f"ELSE asin({_clip1(f'{ym} * {sinz} / {rhs}')})"
+                             f" END")
+                xs, ys = S(k_xs=f"{xm} * {sinz}", k_ys=f"{cosz} * {rh}")
+            else:
+                sb1, cb1 = L(float(Q["sinb1"])), L(float(Q["cosb1"]))
+                ph = S(k_ph0=f"CASE WHEN abs({rh}) <= {L(1e-10)} THEN "
+                             f"{L(P.phi0)} ELSE asin(" + _clip1(
+                                 f"{cosz} * {sb1} + {ym} * {sinz} * {cb1} "
+                                 f"/ {rhs}") + ") END")
+                xs, ys = S(k_xs=f"{xm} * {sinz} * {cb1}",
+                           k_ys=f"({cosz} - sin({ph}) * {sb1}) * {rh}")
+            la = (f"CASE WHEN {ys} = 0.0D THEN 0.0D "
+                  f"ELSE {_sql_atan2_ieee(xs, ys)} END")
+        elif mode == "n_pole":
+            ph = f"{L(H)} - {phz}"
+            la = _sql_atan2_ieee(xm, S(k_nym=f"-{ym}"))
+        else:
+            ph = f"{phz} - {L(H)}"
+            la = _sql_atan2_ieee(xm, ym)
+        phi = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {ph} END"
+        lam = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {la} END"
+    elif name in ("stere", "ups"):
+        # stere.cpp:193-234 spherical inverse (e_inverse iterates)
+        mode = Q["mode"]
+        akm1 = L(float(Q["akm1"]))
+        rh = S(k_rh=f"hypot({xm}, {ym})")
+        c2 = S(k_c2=f"2.0D * atan({rh} / {akm1})")
+        sinc, cosc, rhs = S(k_sc=f"sin({c2})", k_cc=f"cos({c2})",
+                            k_rhs=f"CASE WHEN {rh} = 0.0D THEN 1.0D "
+                                  f"ELSE {rh} END")
+        near = f"abs({rh}) <= {L(1e-10)}"
+        if mode == "equit":
+            phi = (f"CASE WHEN {near} THEN 0.0D "
+                   f"ELSE asin({_clip1(f'{ym} * {sinc} / {rhs}')}) END")
+            ax, ay = S(k_ax=f"{xm} * {sinc}", k_ay=f"{cosc} * {rh}")
+            lam = (f"CASE WHEN ({cosc} != 0.0D) OR ({xm} != 0.0D) THEN "
+                   f"{_sql_atan2_ieee(ax, ay)} ELSE 0.0D END")
+        elif mode == "obliq":
+            sX1, cX1 = L(float(Q["sinX1"])), L(float(Q["cosX1"]))
+            phi = S(k_ph0=f"CASE WHEN {near} THEN {L(P.phi0)} ELSE asin(" +
+                    _clip1(f"{cosc} * {sX1} + {ym} * {sinc} * {cX1} / {rhs}")
+                    + ") END")
+            cc = S(k_ccc=f"{cosc} - {sX1} * sin({phi})")
+            ax, ay = S(k_ax=f"{xm} * {sinc} * {cX1}", k_ay=f"{cc} * {rh}")
+            lam = (f"CASE WHEN ({cc} != 0.0D) OR ({xm} != 0.0D) THEN "
+                   f"{_sql_atan2_ieee(ax, ay)} ELSE 0.0D END")
+        else:
+            yy = S(k_yy=f"-{ym}") if mode == "n_pole" else ym
+            pole = f"(-{cosc})" if mode == "s_pole" else cosc
+            phi = (f"CASE WHEN {near} THEN {L(P.phi0)} "
+                   f"ELSE asin({_clip1(pole)}) END")
+            lam = (f"CASE WHEN ({xm} = 0.0D) AND ({yy} = 0.0D) THEN 0.0D "
+                   f"ELSE {_sql_atan2_ieee(xm, yy)} END")
+    elif name == "sinu":
+        # gn_sinu.cpp:88-97 spherical branch (setup pins n=1, m=0)
+        phi = S(k_yy=f"{ym} / {L(float(Q['C_y']))}")
+        lam = f"{xm} / ({L(float(Q['C_x']))} * cos({phi}))"
+    elif name == "cass":
+        # cass.cpp spherical inverse (closed form)
+        dd = S(k_dd=f"{ym} + {L(P.phi0)}")
+        tx, cd = S(k_tx=f"tan({xm})", k_cd=f"cos({dd})")
+        phi = f"asin({_clip1(f'sin({dd}) * cos({xm})')})"
+        lam = _sql_atan2_ieee(tx, cd)
+    elif name in ("ortho", "gnom"):
+        # ortho.cpp:79-128 / gnom.cpp:80-125 spherical inverses, all
+        # aspect modes
+        mode = Q["mode"]
+        rh = S(k_rh=f"hypot({xm}, {ym})")
+        if name == "ortho":
+            bad, sinc = S(k_bad=f"({rh} - 1.0D) > {L(1e-10)}",
+                          k_sc=f"least({rh}, 1.0D)")
+            cosc = S(k_cc=f"sqrt(greatest(1.0D - {sinc} * {sinc}, 0.0D))")
+            center = f"{rh} <= {L(1e-10)}"
+            rhs = f"CASE WHEN {rh} = 0.0D THEN 1.0D ELSE {rh} END"
+        else:
+            ph0a = S(k_p0a=f"atan({rh})")
+            sinc = S(k_sc=f"sin({ph0a})")
+            cosc = S(k_cc=f"sqrt(1.0D - {sinc} * {sinc})")
+            center = f"abs({rh}) <= {L(1e-10)}"
+            rhs = f"CASE WHEN {center} THEN 1.0D ELSE {rh} END"
+        pole = mode in ("n_pole", "s_pole")
+        if not pole:
+            rhs = S(k_rhs=rhs)
+            if mode == "equit":
+                raw = S(k_raw=f"{ym} * {sinc} / {rhs}")
+                xx, yy = S(k_xx=f"{xm} * {sinc}", k_yy=f"{cosc} * {rh}")
+            else:
+                s0, c0 = L(float(Q["sinph0"])), L(float(Q["cosph0"]))
+                raw = S(k_raw=f"{cosc} * {s0} + {ym} * {sinc} * {c0} / {rhs}")
+            hi, lo = ((L(-H), L(H)) if name == "ortho" else (L(H), L(-H)))
+            cmp = "<" if name == "ortho" else ">"
+            ph = S(k_ph0=f"CASE WHEN abs({raw}) >= 1.0D THEN (CASE WHEN "
+                         f"{raw} {cmp} 0.0D THEN {hi} ELSE {lo} END) "
+                         f"ELSE asin({_clip1(raw)}) END")
+            if mode == "obliq":
+                s0n = raw if name == "ortho" else f"sin({ph})"
+                xx, yy = S(k_xx=f"{xm} * {sinc} * {c0}",
+                           k_yy=f"({cosc} - {s0} * {s0n}) * {rh}")
+            if name == "ortho":
+                la = (f"CASE WHEN {yy} = 0.0D THEN (CASE WHEN {xx} = 0.0D "
+                      f"THEN 0.0D WHEN {xx} < 0.0D THEN {L(-H)} "
+                      f"ELSE {L(H)} END) ELSE {_sql_atan2_ieee(xx, yy)} END")
+            else:
+                la = _sql_atan2_ieee(xx, yy)
+        elif name == "ortho":
+            sgn = 1.0 if mode == "n_pole" else -1.0
+            ph = f"{L(sgn)} * acos({_clip1(sinc)})"
+            la = _sql_atan2_ieee(xm, S(k_yy=f"{L(-sgn)} * {ym}"))
+        elif mode == "s_pole":
+            ph, la = f"{ph0a} - {L(H)}", _sql_atan2_ieee(xm, ym)
+        else:
+            ph = f"{L(H)} - {ph0a}"
+            la = _sql_atan2_ieee(xm, S(k_yy=f"-{ym}"))
+        phi = f"CASE WHEN {center} THEN {L(P.phi0)} ELSE {ph} END"
+        lam = f"CASE WHEN {center} THEN 0.0D ELSE {la} END"
+        if name == "ortho":
+            phi = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {phi} END"
+            lam = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {lam} END"
+    elif name in ("moll", "wag4", "wag5"):
+        # moll.cpp:45-58 inverse (closed form; the Newton is
+        # forward-only).  cos(asin(+-1)) is ~6.1e-17, never exactly 0,
+        # so the lam division cannot hit ANSI divide-by-zero
+        ph1 = S(k_ph1="asin(" + _clip1(f"{ym} / {L(float(Q['C_y']))}")
+                + ")")
+        lr, ph2 = S(k_lr=f"{xm} / ({L(float(Q['C_x']))} * cos({ph1}))",
+                    k_ph2=f"{ph1} + {ph1}")
+        ok = f"abs({lr}) < {L(math.pi)}"
+        phi = (f"CASE WHEN {ok} THEN asin(" + _clip1(
+            f"({ph2} + sin({ph2})) / {L(float(Q['C_p']))}")
+            + f") ELSE {_SQL_NAN} END")
+        lam = f"CASE WHEN {ok} THEN {lr} ELSE {_SQL_NAN} END"
+    else:
+        # webmerc / spherical merc (merc.cpp:57-62)
+        lam = f"{xm} / {L(P.k0)}"
+        phi = f"atan(sinh({ym} / {L(P.k0)}))"
+    return lam, phi
 
 
-def _iter_inv_apply(df, P, x, y, z, t, degrees: bool,
-                    z_supplied: bool, out_prefix: str):
-    """Staged-projection Catalyst twin of the ITERATIVE inverses (lcc /
-    aea / leac, both variants, and ellipsoidal merc): tile->lonlat
-    workloads for the dominant conic families run with ZERO Python
-    workers.  Parity with the Arrow-UDF path is pinned (exact NaN
-    pattern, frozen-lane iteration) in
-    tests/test_engine.py::test_iter_inverse_jvm_fast_path_parity."""
+def _inv_apply(df, op, direction: str, x, y, z, t, degrees: bool,
+               z_supplied: bool, out_prefix: str):
+    """Route "inv": a bare single-op inverse — tile->lonlat and
+    reverse-geocode workloads run with zero Python workers."""
+    P = op.P
     st = _SqlStager()
-    xm, ym = _inv_entry_stages(st, P, x, y, z, t, z_supplied)
-    lam, phi = _emit_iter_inv_kernel(st, P, xm, ym)
+    lam, phi = _emit_inv(st, P, x, y, z, t, degrees, z_supplied)
     if degrees:
-        lam = f"{lam} * {_sql_dlit(C.RAD_TO_DEG)}"
-        phi = f"{phi} * {_sql_dlit(C.RAD_TO_DEG)}"
-    errc = st.col("err")
+        lam, phi = _sql_deg(lam), _sql_deg(phi)
     zout = st.col("zz")
     if P.vto_meter != 1.0 or P.z0 != 0.0:
-        # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0)
+        # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0;
+        # +units=km implies vto_meter=1000 when +vunits is absent)
         zout = f"{zout} * {_sql_dlit(P.vto_meter)} - {_sql_dlit(P.z0)}"
-    outs = [
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({lam}, {_SQL_NAN}) END AS `{out_prefix}x`",
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({phi}, {_SQL_NAN}) END AS `{out_prefix}y`",
-        f"{zout} AS `{out_prefix}z`",
-        f"{st.col('tt')} AS `{out_prefix}t`",
-    ]
-    return st.apply(df, outs)
+    return st.apply(df, _outputs(st, out_prefix, lam, phi, zout,
+                                 st.col("err")))
 
 
-def _omerc_fwd_jvm_ok(op, direction: str) -> bool:
-    """True for a bare Hotine oblique Mercator FORWARD (omerc.cpp:
-    closed form — W/S/T hyperbolics + the U log) with no modifiers."""
-    P = getattr(op, "P", None)
-    if P is None or direction != "fwd":
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if getattr(P, "name", None) != "omerc":
-        return False
-    return _bare_op_ok(P)
+def _sql_deg(v: str) -> str:
+    return f"{v} * {_sql_dlit(C.RAD_TO_DEG)}"
 
 
-def _omerc_fwd_apply(df, P, x, y, z, t, degrees: bool,
-                     z_supplied: bool, out_prefix: str):
-    """Staged Catalyst twin of the omerc forward (kernels/misc5.py,
-    omerc.cpp fwd): interior lanes run the closed hyperbolic form, the
-    pole lanes take the setup's v_pole constants; divisions that numpy
-    evaluates under errstate (E/ts^B at the exact pole, the U log at
-    |U|=1) sit inside interior/bad CASE branches so ANSI Spark never
-    hits them.  Parity pinned in
-    tests/test_engine.py::test_omerc_jvm_fast_path_parity."""
-    Q = P.opaque
-    L = _sql_dlit
-    EPS_O, TOL_O = 1.0e-10, 1.0e-7
-    A, B, E = float(Q["A"]), float(Q["B"]), float(Q["E"])
-    ArB = float(Q["ArB"])
-    sg, cg = float(Q["singam"]), float(Q["cosgam"])
-    st = _SqlStager()
-    col = st.col
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    st.stage(lamw1=_sql_adjlon(col("lam")))
-    st.stage(lamd=f"({col('lamw1')} - {L(P.lam0)})")
-    st.stage(lamw=_sql_adjlon(col("lamd")),
-             phic=f"least(greatest({col('phi')}, "
-                  f"{L(-math.pi / 2.0)}), {L(math.pi / 2.0)})")
-    lamw, phic = col("lamw"), col("phic")
-    st.stage(k_int=f"abs(abs({phic}) - {L(math.pi / 2.0)}) "
-                   f"> {L(EPS_O)}")
-    inter = col("k_int")
-    st.stage(k_sph=f"sin({phic})")
-    sph = col("k_sph")
-    st.stage(k_es=f"{L(P.e)} * {sph}")
-    esn = col("k_es")
-    # tsfn (tsfn.cpp:6-17); 1+e*sin > 0 always
-    st.stage(k_ts=f"tan(0.5D * ({L(math.pi / 2.0)} - {phic})) / "
-                  f"power((1.0D - {esn}) / (1.0D + {esn}), "
-                  f"{L(0.5 * P.e)})")
-    ts = col("k_ts")
-    # W = E/ts^B: guarded to 1 off-interior (exact-pole ts is 0/inf,
-    # where numpy's errstate division would be an ANSI error here)
-    st.stage(k_w=f"CASE WHEN {inter} THEN "
-                 f"{L(E)} / power({ts}, {L(B)}) ELSE 1.0D END")
-    w = col("k_w")
-    st.stage(k_wi=f"1.0D / {w}")
-    wi = col("k_wi")
-    st.stage(k_s=f"0.5D * ({w} - {wi})", k_t=f"0.5D * ({w} + {wi})",
-             k_vv=f"sin({L(B)} * {lamw})",
-             k_tc=f"cos({L(B)} * {lamw})")
-    sc, tc = col("k_s"), col("k_t")
-    vv, tcos = col("k_vv"), col("k_tc")
-    st.stage(k_u0=f"({sc} * {L(sg)} - {vv} * {L(cg)}) / {tc}")
-    uu = col("k_u0")
-    st.stage(k_bad=f"{inter} AND abs(abs({uu}) - 1.0D) < {L(EPS_O)}")
-    badc = col("k_bad")
-    st.stage(k_a1=f"{sc} * {L(cg)} + {vv} * {L(sg)}")
-    a1 = col("k_a1")
-    st.stage(k_ve=f"CASE WHEN NOT {inter} THEN "
-                  f"(CASE WHEN {phic} > 0.0D THEN "
-                  f"{L(float(Q['v_pole_n']))} ELSE "
-                  f"{L(float(Q['v_pole_s']))} END) "
-                  f"WHEN {badc} THEN {_SQL_NAN} ELSE "
-                  f"0.5D * {L(ArB)} * ln((1.0D - {uu}) / "
-                  f"(1.0D + {uu})) END",
-             k_ue=f"CASE WHEN NOT {inter} THEN {L(ArB)} * {phic} "
-                  f"WHEN abs({tcos}) < {L(TOL_O)} THEN "
-                  f"{L(A)} * {lamw} ELSE {L(ArB)} * "
-                  f"{_sql_atan2_ieee(a1, tcos)} END")
-    ve, ue = col("k_ve"), col("k_ue")
-    if Q["no_rot"]:
-        xk, yk = ue, ve
+# --- datum legs and the datum routes --------------------------------------
+
+
+def _emulation_legs(P, direction: str):
+    """The cs2cs-emulation datum leg sequence (fwd_prepare
+    src/fwd.cpp:74-85 / inv_finalize src/inv.cpp:117-124)."""
+    if direction == "fwd":
+        legs = [("cart", "fwd", P.cart_wgs84.P)]
+        if P.helmert is not None:
+            legs.append(("helmert", "inv", P.helmert.P))
+        legs.append(("cart", "inv", P.cart.P))
     else:
-        sr, cr = float(Q["sinrot"]), float(Q["cosrot"])
-        st.stage(k_u2=f"{ue} - {L(float(Q['u_0']))}")
-        u2 = col("k_u2")
-        st.stage(k_xr=f"{ve} * {L(cr)} + {u2} * {L(sr)}",
-                 k_yr=f"{u2} * {L(cr)} - {ve} * {L(sr)}")
-        xk, yk = col("k_xr"), col("k_yr")
-    st.stage(k_xb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {xk} END",
-             k_yb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {yk} END")
-    st.stage(k_xe=f"{L(P.fr_meter)} * ({col('k_xb')} * {L(P.a)} "
-                  f"+ {L(P.x0)})",
-             k_ye=f"{L(P.fr_meter)} * ({col('k_yb')} * {L(P.a)} "
-                  f"+ {L(P.y0)})")
-    errc = col("err")
-    zout = col("zz")
-    if P.vfr_meter != 1.0 or P.z0 != 0.0:
-        # fwd_finalize vertical scaling (fwd.cpp)
-        zout = f"{L(P.vfr_meter)} * ({zout} + {L(P.z0)})"
-    outs = [
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({col('k_xe')}, {_SQL_NAN}) END "
-        f"AS `{out_prefix}x`",
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({col('k_ye')}, {_SQL_NAN}) END "
-        f"AS `{out_prefix}y`",
-        f"{zout} AS `{out_prefix}z`",
-        f"{col('tt')} AS `{out_prefix}t`",
-    ]
-    return st.apply(df, outs)
-
-
-def _moll_fwd_jvm_ok(op, direction: str) -> bool:
-    """True for a bare moll/wag4/wag5 FORWARD (moll.cpp:22-42, the
-    10-iteration Newton on the parametric angle) with no modifiers."""
-    P = getattr(op, "P", None)
-    if P is None or direction != "fwd":
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if getattr(P, "name", None) not in ("moll", "wag4", "wag5"):
-        return False
-    return _bare_op_ok(P)
-
-
-def _moll_fwd_apply(df, P, x, y, z, t, degrees: bool,
-                    z_supplied: bool, out_prefix: str):
-    """Staged Catalyst twin of the moll-family forward
-    (kernels/pseudocyl.moll_s_forward, moll.cpp:22-42): the bounded
-    Newton on the parametric angle unrolls with the frozen-lane flag
-    (non-convergent lanes substitute the +-pi/2 pole like the kernel);
-    the exact-zero Newton denominator (1+cos == 0 at the float pi)
-    routes through num*Infinity to mirror numpy under ANSI mode.
-    Parity pinned in tests/test_engine.py."""
-    Q = P.opaque
-    L = _sql_dlit
-    C_x, C_y, C_p = (float(Q["C_x"]), float(Q["C_y"]),
-                     float(Q["C_p"]))
-    H = math.pi / 2.0
-    st = _SqlStager()
-    col = st.col
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    st.stage(lamw1=_sql_adjlon(col("lam")))
-    st.stage(lamd=f"({col('lamw1')} - {L(P.lam0)})")
-    st.stage(lamw=_sql_adjlon(col("lamd")),
-             phic=f"least(greatest({col('phi')}, "
-                  f"{L(-H)}), {L(H)})")
-    lamw, phic = col("lamw"), col("phic")
-    st.stage(k_k=f"{L(C_p)} * sin({phic})")
-    kk = col("k_k")
-    cur, done = phic, "false"
-    for i in range(1, 11):
-        st.stage(**{f"m_nu{i}":
-                    f"CASE WHEN {done} THEN 0.0D "
-                    f"ELSE {cur} + sin({cur}) - {kk} END",
-                    f"m_de{i}":
-                    f"CASE WHEN {done} THEN 1.0D "
-                    f"ELSE 1.0D + cos({cur}) END"})
-        nu, de = col(f"m_nu{i}"), col(f"m_de{i}")
-        st.stage(**{f"m_v{i}":
-                    f"CASE WHEN {done} THEN 0.0D "
-                    f"WHEN {de} = 0.0D THEN {nu} * {_SQL_INF} "
-                    f"ELSE {nu} / {de} END"})
-        vv = col(f"m_v{i}")
-        st.stage(**{f"m_ph{i}":
-                    f"CASE WHEN {done} THEN {cur} "
-                    f"ELSE {cur} - {vv} END",
-                    f"m_dn{i}": f"abs({vv}) < {L(1.0e-7)}"})
-        cur, done = col(f"m_ph{i}"), col(f"m_dn{i}")
-        if i == 5:
-            st.barrier()  # keep each codegen region JIT-compilable
-    st.stage(k_po=f"CASE WHEN {done} THEN 0.5D * {cur} ELSE "
-                  f"(CASE WHEN {cur} < 0.0D THEN {L(-H)} "
-                  f"ELSE {L(H)} END) END")
-    po = col("k_po")
-    st.stage(k_xk=f"{L(C_x)} * {lamw} * cos({po})",
-             k_yk=f"{L(C_y)} * sin({po})")
-    st.stage(k_xe=f"{L(P.fr_meter)} * ({col('k_xk')} * {L(P.a)} "
-                  f"+ {L(P.x0)})",
-             k_ye=f"{L(P.fr_meter)} * ({col('k_yk')} * {L(P.a)} "
-                  f"+ {L(P.y0)})")
-    errc = col("err")
-    zout = col("zz")
-    if P.vfr_meter != 1.0 or P.z0 != 0.0:
-        zout = f"{L(P.vfr_meter)} * ({zout} + {L(P.z0)})"
-    outs = [
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({col('k_xe')}, {_SQL_NAN}) END "
-        f"AS `{out_prefix}x`",
-        f"CASE WHEN {errc} THEN {_SQL_NAN} "
-        f"ELSE coalesce({col('k_ye')}, {_SQL_NAN}) END "
-        f"AS `{out_prefix}y`",
-        f"{zout} AS `{out_prefix}z`",
-        f"{col('tt')} AS `{out_prefix}t`",
-    ]
-    return st.apply(df, outs)
-
-
-def _etmerc_jvm_fast_path_ok(op, direction: str) -> bool:
-    """True when the operation is a bare Poder-Engsager tmerc/etmerc/utm
-    forward (the DEFAULT tmerc algorithm) with no datum/grid/axis
-    modifiers — the staged-projection Catalyst twin below reproduces
-    it exactly."""
-    from proj_4_spark.kernels.tmerc import exact_e_fwd
-
-    P = getattr(op, "P", None)
-    if P is None or direction != "fwd":
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if getattr(P, "fwd", None) is not exact_e_fwd:
-        return False
-    return _bare_op_ok(P)
-
-
-_CE_LIMIT_JVM = 2.623395162778  # kernels/tmerc._CE_LIMIT (tmerc.cpp:409)
-
-
-def _etmerc_jvm_apply(df, P, x, y, z, t, degrees: bool,
-                      z_supplied: bool, out_prefix: str):
-    """Staged-projection Catalyst twin of the Poder-Engsager etmerc
-    forward (kernels/tmerc.exact_e_fwd, tmerc.cpp:334-415) + the
-    engine's fwd prepare/finalize: UTM / Transverse Mercator forwards
-    run with ZERO Python workers.
-
-    The gatg and complex-Clenshaw recurrences reference each
-    intermediate twice, so inlining them into one projection would
-    duplicate subtrees Fibonacci-style (Catalyst does not CSE across
-    an expression tree); instead every recurrence step lands in its
-    OWN stage — CollapseProject declines to merge projections whose
-    non-cheap aliases are referenced more than once, so the physical
-    plan keeps the staged, linear-size form inside a single
-    whole-stage-codegen region.  SQL-string staged since r7
-    (_SqlStager): ONE selectExpr per stage brings plan build from
-    ~400 ms (Column-object churn) to ~20 ms.
-
-    Parity with the Arrow-UDF path is pinned (exact NaN pattern,
-    <=1e-6 m) in tests/test_engine.py."""
-    Q = P.opaque["exact"]
-    cbg, gtu = Q["cbg"], Q["gtu"]
-    Qn, Zb = float(Q["Qn"]), float(Q["Zb"])
-    L = _sql_dlit
-    NAN = "CAST('NaN' AS DOUBLE)"
-    st = _SqlStager()
-    col = st.col
-    # shared entry: radian lam/phi (null->NaN), zz/tt, global err
-    # (fwd.cpp:41-102)
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-
-    # fwd prepare lam wrap + lat clip (NaN phi passes through err)
-    st.stage(lamw1=_sql_adjlon(col("lam")))
-    st.stage(lamd=f"({col('lamw1')} - {L(P.lam0)})")
-    st.stage(lamw=_sql_adjlon(col("lamd")),
-             phic=f"least(greatest({col('phi')}, {L(-math.pi / 2.0)}), "
-                  f"{L(math.pi / 2.0)})")
-
-    # gatg(cbg): real Clenshaw over cos/sin(2*phi) (tmerc.cpp:267-279)
-    st.stage(two=f"2.0D * cos(2.0D * {col('phic')})",
-             s2=f"sin(2.0D * {col('phic')})")
-    h1, h2 = L(float(cbg[-1])), "0.0D"
-    for k in range(len(cbg) - 2, -1, -1):
-        st.stage(**{f"g{k}": f"-({h2}) + {col('two')} * ({h1}) "
-                            f"+ {L(float(cbg[k]))}"})
-        h2, h1 = h1, col(f"g{k}")
-    st.stage(Cn0=f"{col('phic')} + {col('g0')} * {col('s2')}")
-
-    # spherical-to-complex-plane setup (tmerc.cpp:352-376)
-    st.stage(sCn=f"sin({col('Cn0')})", cCn=f"cos({col('Cn0')})",
-             sCe=f"sin({col('lamw')})", cCe=f"cos({col('lamw')})")
-    st.stage(cc=f"{col('cCn')} * {col('cCe')}")
-    st.stage(Cn1=f"atan2({col('sCn')}, {col('cc')})",
-             invd=f"1.0D / hypot({col('sCn')}, {col('cc')})")
-    st.stage(tCe=f"{col('sCe')} * {col('cCn')} * {col('invd')}",
-             twoinv=f"2.0D * {col('invd')}")
-    st.stage(Ce1=f"asinh({col('tCe')})",
-             twoinvsq=f"{col('twoinv')} * {col('invd')}")
-    st.stage(tmpr=f"{col('cc')} * {col('twoinvsq')}")
-    st.stage(sar=f"{col('sCn')} * {col('tmpr')}",
-             car=f"{col('cc')} * {col('tmpr')} - 1.0D",
-             shi=f"{col('tCe')} * {col('twoinv')}",
-             chi=f"{col('twoinvsq')} - 1.0D")
-
-    # complex Clenshaw over gtu (tmerc.cpp:283-311)
-    st.stage(r=f"2.0D * {col('car')} * {col('chi')}",
-             i=f"-2.0D * {col('sar')} * {col('shi')}")
-    hr, hi = L(float(gtu[-1])), "0.0D"
-    hr1 = hi1 = "0.0D"
-    for k in range(len(gtu) - 2, -1, -1):
-        st.stage(
-            **{f"hr{k}": f"-({hr1}) + {col('r')} * ({hr}) "
-                         f"- {col('i')} * ({hi}) + {L(float(gtu[k]))}",
-               f"hi{k}": f"-({hi1}) + {col('i')} * ({hr}) "
-                         f"+ {col('r')} * ({hi})"})
-        hr1, hi1 = hr, hi
-        hr, hi = col(f"hr{k}"), col(f"hi{k}")
-    st.stage(rr=f"{col('sar')} * {col('chi')}",
-             ii=f"{col('car')} * {col('shi')}")
-    st.stage(Cn=f"{col('Cn1')} + {col('rr')} * ({hr}) "
-                f"- {col('ii')} * ({hi})",
-             Ce=f"{col('Ce1')} + {col('rr')} * ({hi}) "
-                f"+ {col('ii')} * ({hr})")
-
-    # Ce bound (tmerc.cpp:409) + finalize (*a, +x0/y0, *fr_meter)
-    st.stage(ok=f"abs({col('Ce')}) <= {L(_CE_LIMIT_JVM)}")
-    st.stage(xk=f"CASE WHEN {col('ok')} THEN {L(Qn)} * {col('Ce')} "
-                f"ELSE {NAN} END",
-             yk=f"CASE WHEN {col('ok')} THEN {L(Qn)} * {col('Cn')} "
-                f"+ {L(Zb)} ELSE {NAN} END")
-    st.stage(xe=f"{L(P.fr_meter)} * ({col('xk')} * {L(P.a)} "
-                f"+ {L(P.x0)})",
-             ye=f"{L(P.fr_meter)} * ({col('yk')} * {L(P.a)} "
-                f"+ {L(P.y0)})")
-    # r8: close the region after the forward chain.  Standalone the
-    # chain is ~5.3k bytecodes (JIT-fine), but a chained roundtrip
-    # (utm fwd -> inv) fused it with the inverse's first region into a
-    # 9,043-byte method — just past the 8000-byte JIT ceiling, so the
-    # flagship utm_roundtrip ran its forward leg interpreted.
-    st.barrier()
-    errc = col("err")
-    zout = col("zz")
-    if P.vfr_meter != 1.0 or P.z0 != 0.0:
-        # fwd_finalize vertical scaling (fwd.cpp)
-        zout = f"{L(P.vfr_meter)} * ({zout} + {L(P.z0)})"
-    outs = [
-        f"CASE WHEN {errc} THEN {NAN} ELSE coalesce({col('xe')}, {NAN})"
-        f" END AS `{out_prefix}x`",
-        f"CASE WHEN {errc} THEN {NAN} ELSE coalesce({col('ye')}, {NAN})"
-        f" END AS `{out_prefix}y`",
-        f"{zout} AS `{out_prefix}z`",
-        f"{col('tt')} AS `{out_prefix}t`",
-    ]
-    return st.apply(df, outs)
-
-
-def _datum_jvm_legs(op, direction: str):
-    """Leg list for the Catalyst datum-pipeline twin, or None.
-
-    Recognizes a PipelineOperation whose steps are all bare
-    cart / helmert / molobadekas — the towgs84 expansion shape
-    (cart -> helmert -> cart⁻¹, src/datums.cpp pj_datum_set) that
-    every hub-composed catalog candidate and ``pipeline_datum_shift``
-    itself uses.  All three legs are closed forms (cart fwd
-    src/conversions/cart.cpp:132-147, 7-param helmert matmul
-    src/transformations/helmert.cpp:363-399, cart inv closed-form
-    cart.cpp:150-205) — no iteration, so no etmerc-style codegen
-    cliff risk.
-
-    Returns [(kind, step_dir, P), ...] in effective execution order
-    (kind in {"cart", "helmert"}), with the first leg a cart fwd
-    (consumes radians) and the last a cart inv (produces radians).
-    """
-    from proj_4_spark.engine.plan import PipelineOperation
-    from proj_4_spark.kernels.base import UNITS_CARTESIAN
-
-    if not isinstance(op, PipelineOperation):
-        return None
-    if direction not in ("fwd", "inv"):
-        return None
-    eff = "inv" if ((direction == "inv") != bool(op.inverted)) else "fwd"
-    seq = op.steps if eff == "fwd" else list(reversed(op.steps))
-    legs = []
-    for op_, flags in seq:
-        if op_ is None or flags.get("kind") is not None:
-            return None
-        if flags.get("omit_fwd") or flags.get("omit_inv"):
-            return None
-        P = op_.P
-        step_dir = eff
-        if flags.get("inv"):
-            step_dir = "inv" if step_dir == "fwd" else "fwd"
-        if P.name == "cart":
-            # the twin replicates the step's angular prepare/finalize;
-            # any modifier that changes them disqualifies
-            if (P.lam0 != 0.0 or P.from_greenwich != 0.0
-                    or P.over or P.geoc
-                    or P.x0 != 0.0 or P.y0 != 0.0
-                    or P.fr_meter != 1.0 or P.to_meter != 1.0
-                    or P.is_long_wrap_set
-                    or P.skip_fwd_prepare or P.skip_fwd_finalize
-                    or P.skip_inv_prepare or P.skip_inv_finalize):
-                return None
-            kind = "cart"
-        elif P.name in ("helmert", "molobadekas"):
-            if P.left != UNITS_CARTESIAN:
-                return None  # 4-param planar mode
-            Q = P.opaque
-            if (Q.get("fourparam")
-                    or Q["dxyz"] != (0.0, 0.0, 0.0)
-                    or Q["dopk"] != (0.0, 0.0, 0.0)
-                    or Q["dscale"] != 0.0 or Q["dtheta"] != 0.0):
-                return None  # time-dependent: params vary per row
-            if P.fr_meter != 1.0 or P.to_meter != 1.0:
-                return None
-            kind = "helmert"
-        else:
-            return None
-        for attr in ("hgridshift", "vgridshift", "helmert", "cart",
-                     "cart_wgs84", "axisswap"):
-            if getattr(P, attr, None) is not None:
-                return None
-        legs.append((kind, step_dir, P))
-    if not legs:
-        return None
-    if legs[0][:2] != ("cart", "fwd") or legs[-1][:2] != ("cart", "inv"):
-        return None  # twin needs angular I/O on both ends
+        legs = [("cart", "fwd", P.cart.P)]
+        if P.helmert is not None:
+            legs.append(("helmert", "fwd", P.helmert.P))
+        legs.append(("cart", "inv", P.cart_wgs84.P))
     return legs
 
 
-def _sql_dlit(v: float) -> str:
-    """Spark-SQL double literal (the D suffix keeps it out of DECIMAL)."""
-    v = float(v)
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return ("CAST('Infinity' AS DOUBLE)" if v > 0
-                else "CAST('-Infinity' AS DOUBLE)")
-    return repr(v) + "D"
+def _datum_pipeline_apply(df, op, direction: str, x, y, z, t,
+                          degrees: bool, z_supplied: bool, out_prefix: str):
+    """Route "datum_pipeline": a cart/helmert datum pipeline (the legs
+    from _datum_jvm_legs) — towgs84-style shifts and hub-composed
+    catalog candidates run with zero Python workers."""
+    st = _SqlStager()
+    _entry_stages(st, x, y, z, t, degrees, z_supplied)
+    cx, cy, cz = _emit_datum_legs(st, _datum_jvm_legs(op, direction),
+                                  st.col("lam"), st.col("phi"),
+                                  st.col("zz"))
+    if degrees:
+        cx, cy = _sql_deg(cx), _sql_deg(cy)
+    return st.apply(df, _outputs(st, out_prefix, cx, cy, cz,
+                                 st.col("err"), mask_z=True))
 
 
-class _SqlStager:
-    """Accumulates staged-projection SQL stages; ONE selectExpr (py4j
-    round-trip) per stage instead of hundreds of Column-object calls —
-    building a ~15-stage plan costs ~20 ms instead of ~400 ms, which
-    dominated small-batch wall time.  Fragments referenced more than
-    once must be column refs from an earlier stage, never textual
-    expression duplication (the DuckDB lateral-alias lesson)."""
-
-    PREFIX = "_jd_"
-    _split_seq = itertools.count()
-
-    def __init__(self):
-        self.tmp: list[str] = []
-        self.stages: list[list[str]] = []
-        self._barriers: set[int] = set()
-
-    def stage(self, **cols):
-        exprs = []
-        for name, sql in cols.items():
-            self.tmp.append(self.PREFIX + name)
-            exprs.append(f"({sql}) AS {self.PREFIX}{name}")
-        self.stages.append(exprs)
-
-    def barrier(self):
-        """Close the current whole-stage-codegen region: apply() will
-        insert a CollectMetrics (observe) node here, which Spark does
-        not fuse.  HotSpot refuses to JIT methods over 8000 bytecodes
-        (-XX:DontCompileHugeMethods), so a staged chain whose single
-        fused consume() exceeds that runs INTERPRETED — measured 13x
-        slower on the lcc inverse twin.  Splitting into sub-8000
-        regions costs one row-count accumulator per region boundary
-        and keeps every region JIT-compiled."""
-        if self.stages:
-            self._barriers.add(len(self.stages) - 1)
-
-    def col(self, name: str) -> str:
-        return self.PREFIX + name
-
-    def apply(self, df, final_exprs: list[str] | None = None):
-        clash = [c for c in df.columns
-                 if c.startswith(self.PREFIX) and c not in self.tmp]
-        if clash:
-            # a pre-existing _jd_* column (other than hand-off columns
-            # the caller registered in self.tmp, e.g. the composed
-            # inverse twin's pre-seeded projection outputs) would either
-            # raise an ambiguous-reference AnalysisException mid-plan or
-            # be silently dropped by the final drop(*tmp)
-            raise ValueError(
-                f"input columns collide with the staging prefix "
-                f"{self.PREFIX!r}: {clash}; rename them before transform()")
-        from pyspark.sql import functions as F
-
-        # Batch consecutive stages into ONE selectExpr via lateral
-        # column aliases (Spark >= 3.4): the analyzer rewrites them
-        # into exactly the nested-Project chain that one-selectExpr-
-        # per-stage builds, but at one py4j/parse round-trip per
-        # codegen region instead of per stage (~14 ms each; the 60+
-        # stage iterative-inverse twins dropped from ~2.5 s to ~0.2 s
-        # plan build).  Aliases referenced more than once stay column
-        # refs in the rewrite — no subtree duplication.
-        out = df
-        pending: list[str] = []
-        emitted: list[str] = list(
-            c for c in df.columns if c in self.tmp)  # pre-seeded cols
-        for i, exprs in enumerate(self.stages):
-            pending.extend(exprs)
-            if i in self._barriers:
-                out = out.selectExpr("*", *pending)
-                emitted.extend(
-                    e.rsplit(" AS ", 1)[1] for e in pending)
-                pending = []
-                # rows materialize as UnsafeRows at the region
-                # boundary: drop temp columns no later stage reads so
-                # the copy stays narrow (substring match can only
-                # over-retain, never over-drop)
-                later = " ".join(
-                    e for st_ in self.stages[i + 1:] for e in st_)
-                later += " " + " ".join(final_exprs or ())
-                dead = [c for c in emitted if c not in later]
-                if dead:
-                    out = out.drop(*dead)
-                out = out.observe(
-                    f"{self.PREFIX}cgsplit_{next(self._split_seq)}",
-                    F.count(F.lit(1)).alias("rows"))
-        if pending:
-            out = out.selectExpr("*", *pending)
-        if final_exprs:
-            # replace-in-place contract (r8, VERDICT r7 #4): with the
-            # documented default call shape (columns named x/y,
-            # out_prefix="") appending the outputs produced DUPLICATE
-            # x/y columns and any downstream select("x") threw
-            # AMBIGUOUS_REFERENCE — the UDF path and the Column twins
-            # replace via withColumn.  Every final_exprs list
-            # references only staged temp columns (the entry stages
-            # capture the inputs), so the colliding originals can be
-            # dropped first.  (The replaced column moves to the end of
-            # the schema rather than keeping its position — select by
-            # name, as every caller does.)
-            out_names = {e.rsplit(" AS ", 1)[1].strip().strip("`")
-                         for e in final_exprs}
-            clash_out = [c for c in out.columns if c in out_names]
-            if clash_out:
-                out = out.drop(*clash_out)
-            out = out.selectExpr("*", *final_exprs)
-        return out.drop(*[c for c in self.tmp if c in out.columns])
-
-
-def _sql_atan2_ieee(yc: str, xc: str) -> str:
-    """SQL twin of the Column-path atan2_ieee (see _inv_jvm_columns):
-    Spark's atan2 adds +0.0 to both args, collapsing -0.0 — restore
-    IEEE signed-zero semantics on the y == 0 boundary so a geocentric
-    Y of exactly -0.0 yields lon -0.0 / ±pi like the NumPy kernels.
-    Args must be COLUMN REFS (they appear several times textually)."""
+def _composed_fwd_apply(df, op, direction: str, x, y, z, t,
+                        degrees: bool, z_supplied: bool, out_prefix: str):
+    """Route "composed_fwd": the datum legs (WGS84 -> local datum,
+    fwd_prepare order) then the projection's forward pipeline (or the
+    latlong identity) in one stager, a codegen barrier between them."""
+    P = op.P
     L = _sql_dlit
-    xneg = f"startswith(cast({xc} AS STRING), '-')"
-    yneg = f"startswith(cast({yc} AS STRING), '-')"
-    return (f"CASE WHEN isnan({xc}) OR isnan({yc}) THEN {L(float('nan'))} "
-            f"WHEN {yc} = 0.0D THEN "
-            f"(CASE WHEN {xneg} AND {yneg} THEN {L(-math.pi)} "
-            f"WHEN {xneg} THEN {L(math.pi)} "
-            f"WHEN {yneg} THEN -0.0D ELSE 0.0D END) "
-            f"ELSE atan2({yc}, {xc}) END")
+    st = _SqlStager()
+    col = st.col
+    _entry_stages(st, x, y, z, t, degrees, z_supplied)
+    cx, cy, cz = _emit_datum_legs(st, _emulation_legs(P, "fwd"),
+                                  col("lam"), col("phi"), col("zz"))
+    # NOT masked by err: fwd_prepare runs the legs on the clipped /
+    # wrapped values and NaN-masks only x,y afterwards (fwd.cpp:41-102)
+    # — an overrange-latitude row still gets a real datum-shifted z.
+    # NULLs (guarded-division lanes) normalize to NaN.
+    glam, gphi, gz = st.stage(glam=f"coalesce({cx}, {_SQL_NAN})",
+                              gphi=f"coalesce({cy}, {_SQL_NAN})",
+                              gz=f"coalesce({cz}, {_SQL_NAN})")
+    mask = col("err")
+    if getattr(P, "is_latlong", False):
+        # prepare tail: x -= lam0, adjlon; identity kernel; finalize
+        # wraps nothing further (long_wrap refused by the gate)
+        lamd = st.stage(ll_d=f"{glam} - {L(P.lam0)}")
+        xo = st.stage(ll_w=_sql_adjlon(lamd))
+        yo = gphi
+        if degrees:
+            xo, yo = _sql_deg(xo), _sql_deg(yo)
+    else:
+        # the projection's own entry check on the shifted geographic
+        # coordinates (fwd.cpp:55)
+        gerr = st.stage(gerr=f"isnan({glam}) OR isnan({gphi}) OR "
+                             f"{glam} > 10.0D OR {glam} < -10.0D OR "
+                             f"abs({gphi}) - {L(_H)} > 1e-12D")
+        st.barrier()  # datum legs and projection: separate regions
+        xo, yo, bad = _emit_fwd(st, P, glam, gphi)
+        mask += f" OR {gerr}" + (f" OR {bad}" if bad else "")
+    # fwd_finalize vertical scaling: z = vfr_meter * (z + z0), z0 == 0
+    # by the gate (src/fwd.cpp:119-131; +units=km propagates to vunits)
+    zout = gz if P.vfr_meter == 1.0 else f"{gz} * {L(P.vfr_meter)}"
+    return st.apply(df, _outputs(st, out_prefix, xo, yo, zout, mask))
 
 
-def _sql_adjlon(c: str) -> str:
-    """adjlon over a COLUMN REF (appears 4x textually)."""
-    L = _sql_dlit
-    PI, TWO_PI = L(math.pi), L(2.0 * math.pi)
-    return (f"CASE WHEN abs({c}) >= {L(math.pi + 1e-12)} THEN "
-            f"(({c}) + {PI}) - {TWO_PI} * floor((({c}) + {PI})"
-            f" / {TWO_PI}) - {PI} ELSE ({c}) END")
+def _composed_inv_apply(df, op, direction: str, x, y, z, t,
+                        degrees: bool, z_supplied: bool, out_prefix: str):
+    """Route "composed_inv": the projection's inverse pipeline (or the
+    latlong identity) then the datum legs (local datum -> WGS84,
+    inv_finalize order, src/inv.cpp:117-124) — e.g. a +towgs84 lcc
+    zone inverse runs Python-free end to end."""
+    P = op.P
+    st = _SqlStager()
+    col = st.col
+    lam, phi = _emit_inv(st, P, x, y, z, t, degrees, z_supplied)
+    zz = col("zz")
+    if P.vto_meter != 1.0:
+        # inv_prepare vertical scaling: z = vto_meter * z - z0, z0 == 0
+        # by the gate (src/inv.cpp:55-76)
+        zz = st.stage(zs=f"{zz} * {_sql_dlit(P.vto_meter)}")
+    errc = col("err")
+    plam, pphi = st.stage(
+        plam=f"CASE WHEN {errc} THEN {_SQL_NAN} "
+             f"ELSE coalesce({lam}, {_SQL_NAN}) END",
+        pphi=f"CASE WHEN {errc} THEN {_SQL_NAN} "
+             f"ELSE coalesce({phi}, {_SQL_NAN}) END")
+    st.barrier()  # datum legs get their own codegen region
+    cx, cy, cz = _emit_datum_legs(st, _emulation_legs(P, "inv"),
+                                  plam, pphi, zz, first_cart_prepare=False)
+    if degrees:
+        cx, cy = _sql_deg(cx), _sql_deg(cy)
+    return st.apply(df, _outputs(st, out_prefix, cx, cy, cz))
+
 
 
 def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
@@ -2687,310 +2040,37 @@ def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
     return cx, cy, cz
 
 
-def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
-                  z_supplied: bool):
-    """Shared entry: radian lam/phi, synthesized z/t, the global error
-    predicate (fwd.cpp:41-102)."""
-    L = _sql_dlit
-    NAN = "CAST('NaN' AS DOUBLE)"
-    col = st.col
-    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
-    if degrees:
-        lam_sql, phi_sql = f"radians({xq})", f"radians({yq})"
-    else:
-        lam_sql, phi_sql = xq, yq
-    # NULL inputs normalize to NaN up front (the UDF path's na_value):
-    # SQL NULL would otherwise slip through least/greatest, which SKIP
-    # NULLs instead of propagating
-    lam_sql = f"coalesce({lam_sql}, {NAN})"
-    phi_sql = f"coalesce({phi_sql}, {NAN})"
-    zz_sql = (f"coalesce(CAST(`{z}` AS DOUBLE), {NAN})"
-              if z is not None else "0.0D")
-    tt_sql = (f"coalesce(CAST(`{t}` AS DOUBLE), {NAN})"
-              if t is not None else "0.0D")
-    st.stage(lam=lam_sql, phi=phi_sql, zz=zz_sql, tt=tt_sql)
-    err = (f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR "
-           f"isnan({yq}) OR {col('lam')} > 10.0D OR "
-           f"{col('lam')} < -10.0D OR "
-           f"abs({col('phi')}) - {L(math.pi / 2.0)} > 1e-12D")
-    if z_supplied:
-        err += f" OR `{z}` IS NULL OR isnan({col('zz')})"
-    st.stage(err=err)
+# --- the route table ------------------------------------------------------
+#
+# ONE ordered table of (route_name, gate(op, direction), emitter).
+# transform() takes the first row whose gate accepts; no row -> the
+# Arrow-UDF path.  Every emitter has the signature
+# (df, op, direction, x, y, z, t, degrees, z_supplied, out_prefix).
+
+_ROUTES = (
+    ("datum_pipeline",
+     lambda op, d: _datum_jvm_legs(op, d) is not None,
+     _datum_pipeline_apply),
+    ("composed_fwd",
+     lambda op, d: d == "fwd" and _composed_ok(op, d),
+     _composed_fwd_apply),
+    ("composed_inv",
+     lambda op, d: d == "inv" and _composed_ok(op, d),
+     _composed_inv_apply),
+    ("fwd",
+     lambda op, d: _bare_single(op, d, "fwd") and _fwd_kernel_ok(op.P),
+     _fwd_apply),
+    ("inv",
+     lambda op, d: _bare_single(op, d, "inv") and _inv_kernel_ok(op.P),
+     _inv_apply),
+)
 
 
-def _datum_jvm_apply(df, legs, x, y, z, t, degrees: bool,
-                     z_supplied: bool, out_prefix: str):
-    """Staged-projection Catalyst twin of a cart/helmert datum pipeline
-    (engine/plan.py PipelineOperation over the legs from
-    _datum_jvm_legs): towgs84-style datum shifts run with ZERO Python
-    workers.  Stage layout and semantics in _emit_datum_legs /
-    _SqlStager; parity pinned in tests/test_engine.py."""
-    NAN = "CAST('NaN' AS DOUBLE)"
-    st = _SqlStager()
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    cx, cy, cz = st.col("lam"), st.col("phi"), st.col("zz")
-    cx, cy, cz = _emit_datum_legs(st, legs, cx, cy, cz)
-    if degrees:
-        cx = f"{cx} * {_sql_dlit(C.RAD_TO_DEG)}"
-        cy = f"{cy} * {_sql_dlit(C.RAD_TO_DEG)}"
-    errc = st.col("err")
-    outs = [
-        f"CASE WHEN {errc} THEN {NAN} ELSE coalesce({cx}, {NAN}) END"
-        f" AS `{out_prefix}x`",
-        f"CASE WHEN {errc} THEN {NAN} ELSE coalesce({cy}, {NAN}) END"
-        f" AS `{out_prefix}y`",
-        f"CASE WHEN {errc} THEN {NAN} ELSE coalesce({cz}, {NAN}) END"
-        f" AS `{out_prefix}z`",
-        f"{st.col('tt')} AS `{out_prefix}t`",
-    ]
-    return st.apply(df, outs)
+def _pick_route(op, direction: str):
+    """The first _ROUTES row whose gate accepts (op, direction), or None
+    (the Arrow-UDF path)."""
+    return next((r for r in _ROUTES if r[1](op, direction)), None)
 
-
-def _bare_cart_helper_ok(hop) -> bool:
-    hp = getattr(hop, "P", None)
-    if hp is None or getattr(hop, "inverted", False):
-        return False
-    if hp.name != "cart":
-        return False
-    if (hp.lam0 != 0.0 or hp.from_greenwich != 0.0 or hp.over
-            or hp.geoc or hp.x0 != 0.0 or hp.y0 != 0.0
-            or hp.fr_meter != 1.0 or hp.to_meter != 1.0):
-        return False
-    for attr in ("hgridshift", "vgridshift", "helmert", "cart",
-                 "cart_wgs84", "axisswap"):
-        if getattr(hp, attr, None) is not None:
-            return False
-    return True
-
-
-def _static_helmert_helper_ok(hop) -> bool:
-    from proj_4_spark.kernels.base import UNITS_CARTESIAN
-
-    hp = getattr(hop, "P", None)
-    if hp is None or getattr(hop, "inverted", False):
-        return False
-    if hp.name not in ("helmert", "molobadekas"):
-        return False
-    if hp.left != UNITS_CARTESIAN:
-        return False
-    Q = hp.opaque
-    if (Q.get("fourparam") or Q["dxyz"] != (0.0, 0.0, 0.0)
-            or Q["dopk"] != (0.0, 0.0, 0.0)
-            or Q["dscale"] != 0.0 or Q["dtheta"] != 0.0):
-        return False
-    return hp.fr_meter == 1.0 and hp.to_meter == 1.0
-
-
-def _datum_modified_jvm_ok(op, direction: str) -> bool:
-    """True when a SINGLE datum-modified operation (+towgs84 / +datum
-    cs2cs-emulation hooks: P.cart + P.cart_wgs84 [+ P.helmert]) can run
-    as the composed Catalyst twin: datum legs (closed forms, see
-    _emit_datum_legs) + the projection's own expression twin — i.e. the
-    dominant catalog-preset shape runs with zero Python workers in both
-    directions.  Grid hooks (+nadgrids/+geoidgrids), +axis, +over,
-    +geoc, long-wrap, prime meridians, vertical unit scaling and
-    geocentric CRS stay on the Arrow-UDF path."""
-    from proj_4_spark.engine.plan import PipelineOperation
-
-    P = getattr(op, "P", None)
-    if P is None or isinstance(op, PipelineOperation):
-        return False
-    if getattr(op, "inverted", False):
-        return False
-    if direction not in ("fwd", "inv"):
-        return False
-    if P.cart is None or P.cart_wgs84 is None:
-        return False  # not datum-modified: the bare twins handle it
-    if getattr(P, "is_geocent", False):
-        return False
-    for attr in ("hgridshift", "vgridshift", "axisswap"):
-        if getattr(P, attr, None) is not None:
-            return False
-    if P.over or P.geoc or P.from_greenwich != 0.0 or P.is_long_wrap_set:
-        return False
-    if P.z0 != 0.0:
-        return False  # vfr/vto_meter (e.g. +units=km) are handled
-    if not (_bare_cart_helper_ok(P.cart)
-            and _bare_cart_helper_ok(P.cart_wgs84)):
-        return False
-    if P.helmert is not None and not _static_helmert_helper_ok(P.helmert):
-        return False
-    if getattr(P, "is_latlong", False):
-        return True
-    if direction == "fwd":
-        return P.name in _FWD_TWIN_NAMES
-    return _inv_twin_name_ok(P) or _iter_inv_sql_ok(P)
-
-
-def _emulation_legs(P, direction: str):
-    """The cs2cs-emulation datum leg sequence (fwd_prepare
-    src/fwd.cpp:74-85 / inv_finalize src/inv.cpp:117-124)."""
-    if direction == "fwd":
-        legs = [("cart", "fwd", P.cart_wgs84.P)]
-        if P.helmert is not None:
-            legs.append(("helmert", "inv", P.helmert.P))
-        legs.append(("cart", "inv", P.cart.P))
-    else:
-        legs = [("cart", "fwd", P.cart.P)]
-        if P.helmert is not None:
-            legs.append(("helmert", "fwd", P.helmert.P))
-        legs.append(("cart", "inv", P.cart_wgs84.P))
-    return legs
-
-
-def _datum_modified_fwd_apply(df, op, x, y, z, t, degrees: bool,
-                              z_supplied: bool, out_prefix: str):
-    """Composed forward twin for a datum-modified single op: SQL-staged
-    datum legs (WGS84 -> local datum, fwd_prepare order) feeding the
-    projection's Column-expression twin (or the latlong identity).
-
-    The masked hand-off (err -> NaN on the staged geographic columns)
-    makes the projection twin's own isnan error predicate subsume the
-    global error rows, exactly like NaN propagation through the NumPy
-    kernels on the UDF path."""
-    from pyspark.sql import functions as F
-
-    P = op.P
-    NAN = "CAST('NaN' AS DOUBLE)"
-    st = _SqlStager()
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    cx, cy, cz = st.col("lam"), st.col("phi"), st.col("zz")
-    cx, cy, cz = _emit_datum_legs(st, _emulation_legs(P, "fwd"),
-                                  cx, cy, cz)
-    # NOT masked by err: fwd_prepare runs the legs on the clipped /
-    # wrapped values and NaN-masks only x,y afterwards (fwd.cpp:41-102)
-    # — an overrange-latitude row still gets a real datum-shifted z.
-    # NULLs (guarded-division lanes) normalize to NaN.
-    st.stage(glam=f"coalesce({cx}, {NAN})",
-             gphi=f"coalesce({cy}, {NAN})",
-             gz=f"coalesce({cz}, {NAN})")
-    staged = df
-    for exprs in st.stages:
-        staged = staged.selectExpr("*", *exprs)
-    glam = F.col(st.col("glam"))
-    gphi = F.col(st.col("gphi"))
-    gz = F.col(st.col("gz"))
-    tc = F.col(st.col("tt"))
-    errc = F.col(st.col("err"))
-    nan = F.lit(float("nan"))
-    if getattr(P, "is_latlong", False):
-        # prepare tail: x -= lam0, adjlon; identity kernel; finalize
-        # wraps nothing further (long_wrap refused in detection)
-        pi = math.pi
-        lam = glam - F.lit(P.lam0)
-        lam = F.when(
-            F.abs(lam) >= F.lit(pi + 1e-12),
-            (lam + pi) - 2.0 * pi * F.floor((lam + pi) / (2.0 * pi)) - pi,
-        ).otherwise(lam)
-        phi = gphi
-        if degrees:
-            lam = lam * C.RAD_TO_DEG
-            phi = phi * C.RAD_TO_DEG
-        xo = F.coalesce(lam, nan)
-        yo = F.coalesce(phi, nan)
-    else:
-        xo, yo = _webmerc_jvm_columns(P, glam, gphi, gz,
-                                      degrees=False, z_supplied=False)
-    # fwd_finalize vertical scaling: z = vfr_meter * (z + z0), z0 == 0
-    # by detection (src/fwd.cpp:119-131; +units=km propagates to vunits)
-    zout = gz if P.vfr_meter == 1.0 else gz * F.lit(P.vfr_meter)
-    out = (staged.withColumn(f"{out_prefix}x",
-                             F.when(errc, nan).otherwise(xo))
-                 .withColumn(f"{out_prefix}y",
-                             F.when(errc, nan).otherwise(yo))
-                 .withColumn(f"{out_prefix}z", zout)
-                 .withColumn(f"{out_prefix}t", tc))
-    return out.drop(*st.tmp)
-
-
-def _datum_modified_inv_apply(df, op, x, y, z, t, degrees: bool,
-                              z_supplied: bool, out_prefix: str):
-    """Composed inverse twin: the projection's inverse Column twin
-    (which bakes inv_prepare scaling and the inv_finalize lam0+adjlon),
-    then the SQL-staged datum legs (local datum -> WGS84, inv_finalize
-    order, src/inv.cpp:117-124).  Iterative families (lcc/aea/leac,
-    ellipsoidal merc) route through the staged phi2/phi1 kernels
-    instead, feeding the same datum legs — e.g. a +towgs84 lcc zone
-    inverse runs Python-free end to end (r7)."""
-    from pyspark.sql import functions as F
-
-    P = op.P
-    NAN = "CAST('NaN' AS DOUBLE)"
-    nan = F.lit(float("nan"))
-    if _iter_inv_sql_ok(P):
-        st = _SqlStager()
-        xm, ym = _inv_entry_stages(st, P, x, y, z, t, z_supplied)
-        lam, phi = _emit_iter_inv_kernel(st, P, xm, ym)
-        zz = st.col("zz")
-        if P.vto_meter != 1.0:
-            st.stage(zs=f"{zz} * {_sql_dlit(P.vto_meter)}")
-            zz = st.col("zs")
-        errc = st.col("err")
-        st.stage(
-            plam=f"CASE WHEN {errc} THEN {NAN} "
-                 f"ELSE coalesce({lam}, {NAN}) END",
-            pphi=f"CASE WHEN {errc} THEN {NAN} "
-                 f"ELSE coalesce({phi}, {NAN}) END")
-        st.barrier()  # datum legs get their own codegen region
-        cx, cy, cz = _emit_datum_legs(
-            st, _emulation_legs(P, "inv"),
-            st.col("plam"), st.col("pphi"), zz,
-            first_cart_prepare=False)
-        if degrees:
-            cx = f"{cx} * {_sql_dlit(C.RAD_TO_DEG)}"
-            cy = f"{cy} * {_sql_dlit(C.RAD_TO_DEG)}"
-        outs = [
-            f"coalesce({cx}, {NAN}) AS `{out_prefix}x`",
-            f"coalesce({cy}, {NAN}) AS `{out_prefix}y`",
-            f"coalesce({cz}, {NAN}) AS `{out_prefix}z`",
-            f"{st.col('tt')} AS `{out_prefix}t`",
-        ]
-        return st.apply(df, outs)
-    zc = (F.coalesce(F.col(z).cast("double"), nan) if z else F.lit(0.0))
-    tc = (F.coalesce(F.col(t).cast("double"), nan) if t else F.lit(0.0))
-    # inv_prepare vertical scaling: z = vto_meter * z - z0, z0 == 0 by
-    # detection (src/inv.cpp:55-76)
-    if P.vto_meter != 1.0:
-        zc = zc * F.lit(P.vto_meter)
-    if getattr(P, "is_latlong", False):
-        pi = math.pi
-        err = (F.col(x).isNull() | F.isnan(F.col(x).cast("double"))
-               | F.col(y).isNull() | F.isnan(F.col(y).cast("double")))
-        if z_supplied:
-            err = err | zc.isNull() | F.isnan(zc)
-        lam = F.col(x).cast("double")
-        phi = F.col(y).cast("double")
-        if degrees:
-            lam = F.radians(lam)
-            phi = F.radians(phi)
-        lam = lam + F.lit(P.lam0)
-        lam = F.when(
-            F.abs(lam) >= F.lit(pi + 1e-12),
-            (lam + pi) - 2.0 * pi * F.floor((lam + pi) / (2.0 * pi)) - pi,
-        ).otherwise(lam)
-        xo = F.when(err, nan).otherwise(F.coalesce(lam, nan))
-        yo = F.when(err, nan).otherwise(F.coalesce(phi, nan))
-    else:
-        xo, yo = _inv_jvm_columns(P, F.col(x), F.col(y), zc,
-                                  degrees=False, z_supplied=z_supplied)
-    T = _SqlStager.PREFIX
-    staged = df.select("*", xo.alias(T + "plam"), yo.alias(T + "pphi"),
-                       zc.alias(T + "pz"), tc.alias(T + "ptt"))
-    st = _SqlStager()
-    st.tmp.extend([T + "plam", T + "pphi", T + "pz", T + "ptt"])
-    cx, cy, cz = _emit_datum_legs(
-        st, _emulation_legs(P, "inv"),
-        T + "plam", T + "pphi", T + "pz", first_cart_prepare=False)
-    if degrees:
-        cx = f"{cx} * {_sql_dlit(C.RAD_TO_DEG)}"
-        cy = f"{cy} * {_sql_dlit(C.RAD_TO_DEG)}"
-    outs = [
-        f"coalesce({cx}, {NAN}) AS `{out_prefix}x`",
-        f"coalesce({cy}, {NAN}) AS `{out_prefix}y`",
-        f"coalesce({cz}, {NAN}) AS `{out_prefix}z`",
-        f"{T}ptt AS `{out_prefix}t`",
-    ]
-    return st.apply(staged, outs)
 
 def transform(
     df,
@@ -3003,7 +2083,7 @@ def transform(
     degrees: bool = True,
     out_prefix: str = "",
     keep_errors: bool = True,
-    jvm_fast_path: bool | str = True,
+    jvm_fast_path: bool = True,
 ):
     """Apply a proj-string operation to coordinate columns of ``df``.
 
@@ -3014,45 +2094,47 @@ def transform(
 
     Angular input/output is degrees at the DataFrame edge when
     ``degrees=True`` (matching the reference CLIs, src/apps/proj.cpp:144-152);
-    radians internally.  Errored rows yield NULLs in the output columns
+    radians internally.  Errored rows yield NaN in the output columns
     (reference: HUGE_VAL sentinel, src/fwd.cpp:42-43); pass
     ``keep_errors=False`` to filter them out.
 
-    ``jvm_fast_path``: True (default) compiles to Catalyst expression
-    twins (zero Python workers; parity pinned per twin in
-    tests/test_engine.py):
-    - bare single-op FORWARDS of webmerc/merc/eqc/cea/lcc/aea/leac/
-      stere/ups/laea/sterea/somerc/krovak/sinu/eqdc/eqearth/cass/
-      ortho/gnom (19 families);
-    - closed-form INVERSES of webmerc/merc(sphere)/eqc/cea/laea and
-      spherical stere/ups/sinu/eqdc/cass/ortho/gnom;
-    - ITERATIVE inverses of lcc/aea/leac (sphere + ellipsoid) and
-      ellipsoidal merc/eqdc/sinu/cass: the bounded phi2/phi1/inv_mlfn
-      iterations (src/phi2.cpp, src/projections/aea.cpp:48-70,
-      src/mlfn.hpp) unroll to staged SQL with per-lane convergence
-      freezing (new in r7);
-    - cart/helmert datum PIPELINES (the towgs84 expansion shape, incl.
-      hub-composed catalog candidates);
-    - datum-MODIFIED single ops (+towgs84/+datum emulation hooks over
-      any twin family or latlong), both directions — including the
-      iterative inverse families (a +towgs84 lcc/aea zone inverse
-      runs Python-free end to end, r7);
-    - the staged Poder-Engsager etmerc/utm forward twin (default-on
-      since r7: the r5 JIT cliff does not reproduce with the
-      SQL-staged shape — PLANS.md "etmerc JVM expression twin").
-    ``"all"`` is accepted as an alias of ``True`` (the pre-r7 opt-in
-    spelling).  ``False`` always uses the Arrow-UDF kernels.
+    ``jvm_fast_path`` must be a bool.  True (default) runs the first
+    route of the route table that accepts the operation as a Catalyst
+    twin — staged Spark-SQL projections, zero Python workers, parity
+    with the Arrow-UDF kernels pinned per family in
+    tests/test_engine.py.  The routes, in table order:
+    - ``datum_pipeline``: cart/helmert datum PIPELINES (the towgs84
+      expansion shape, incl. hub-composed catalog candidates);
+    - ``composed_fwd`` / ``composed_inv``: datum-MODIFIED single ops
+      (+towgs84/+datum emulation hooks) over latlong, over a forward
+      family of webmerc/merc/eqc/cea/lcc/aea/leac/stere/ups/laea/
+      sterea/somerc/krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos, or
+      over any inverse family of the ``inv`` route;
+    - ``fwd``: bare single-op FORWARDS of those 20 families plus omerc,
+      moll/wag4/wag5 and Poder-Engsager etmerc/tmerc/utm;
+    - ``inv``: bare single-op INVERSES of webmerc/merc/eqc/cea/laea/
+      stere/ups/sinu/eqdc/cass/geos/eqearth/omerc/lcc/aea/leac/moll/
+      wag4/wag5, spherical ortho/gnom and Poder-Engsager
+      etmerc/tmerc/utm — closed forms, and the bounded phi2 / phi1 /
+      inv_mlfn / Newton iterations (src/phi2.cpp,
+      src/projections/aea.cpp:48-70, src/mlfn.hpp) unrolled with
+      per-lane convergence freezing.
+    ``False`` always uses the Arrow-UDF kernels (the reference path).
     Grid-backed datums (+nadgrids/+geoidgrids), +axis, +over, +geoc,
-    geocentric CRS and the remaining iterative ellipsoidal inverses
-    (etmerc/stere/sterea/omerc/...) always use the UDF path.
+    long-wrap, prime meridians, geocentric CRS, ``+inv`` proj-strings
+    and the remaining families (robin, the sterea inverse, ...) always
+    use the UDF path.  Twin routes stage through temporary ``_jd_*``
+    columns: an input column with that prefix raises ValueError.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    # validate direction + proj-string on the driver (fail fast at plan
+    # validate arguments + proj-string on the driver (fail fast at plan
     # time, not as an executor traceback at collect time)
+    if not isinstance(jvm_fast_path, bool):
+        raise ValueError(
+            f"jvm_fast_path must be True or False, got {jvm_fast_path!r}")
     _DIRS = {"fwd": "fwd", "forward": "fwd",
              "inv": "inv", "inverse": "inv", "reverse": "inv"}
     if direction not in _DIRS:
@@ -3060,129 +2142,36 @@ def transform(
             f"direction must be one of {sorted(_DIRS)}, got {direction!r}")
     direction = _DIRS[direction]
     op_probe = _cached_operation(projstring)
+
+    route = _pick_route(op_probe, direction) if jvm_fast_path else None
+    if route is not None:
+        out = route[2](df, op_probe, direction, x, y, z, t, degrees,
+                       z is not None, out_prefix)
+    else:
+        out = _udf_apply(df, projstring, direction, x, y, z, t, degrees,
+                         out_prefix)
+    if not keep_errors:
+        out = out.where(F.col(f"{out_prefix}x").isNotNull()
+                        & ~F.isnan(F.col(f"{out_prefix}x")))
+    return out
+
+
+def _udf_apply(df, projstring: str, direction: str, x, y, z, t,
+               degrees: bool, out_prefix: str):
+    """The Arrow-UDF path: ONE Arrow-batched pandas UDF runs the whole
+    pipeline's NumPy kernels; the executor-side plan comes from
+    _cached_operation(projstring)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    op_probe = _cached_operation(projstring)
     ang_in = op_probe.angular_input(direction)
     ang_out = op_probe.angular_output(direction)
-    z_supplied = z is not None
-    t_supplied = t is not None
-
-    # jvm_fast_path: True (default) compiles every available expression
-    # twin — including the staged Poder-Engsager etmerc/utm twin, which
-    # is DEFAULT-ON since r7: re-measured with exec-only timing after
-    # the _SqlStager rewrite, the twin shows NO JIT cliff under mixed
-    # codegen load (30.1 M pts/s dirty vs the UDF path's 11.6 at 16 M
-    # pts on local[8]; the r5 "2.5x cliff" was dominated by the old
-    # Column-object plan-build cost being re-paid per bench iteration
-    # — see PLANS.md "etmerc JVM expression twin").  "all" is kept as
-    # an accepted alias of True for backward compatibility.
-    if jvm_fast_path:
-        datum_legs = _datum_jvm_legs(op_probe, direction)
-        if datum_legs is not None:
-            # cart/helmert datum-pipeline twin: towgs84-style shifts and
-            # hub-composed catalog candidates run as pure whole-stage
-            # codegen — zero Python workers
-            out = _datum_jvm_apply(df, datum_legs, x, y, z, t,
-                                   degrees, z_supplied, out_prefix)
-            if not keep_errors:
-                out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                                & ~F.isnan(F.col(f"{out_prefix}x")))
-            return out
-
-        if _datum_modified_jvm_ok(op_probe, direction):
-            # composed twin: datum legs + the projection's expression
-            # twin — the dominant catalog-preset shape (+towgs84 /
-            # +datum) runs with zero Python workers in both directions
-            fn = (_datum_modified_fwd_apply if direction == "fwd"
-                  else _datum_modified_inv_apply)
-            out = fn(df, op_probe, x, y, z, t, degrees, z_supplied,
-                     out_prefix)
-            if not keep_errors:
-                out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                                & ~F.isnan(F.col(f"{out_prefix}x")))
-            return out
-
-    if jvm_fast_path and _inv_jvm_fast_path_ok(op_probe, direction):
-        zc = (F.coalesce(F.col(z).cast("double"), F.lit(float("nan")))
-              if z else F.lit(0.0))
-        tc = (F.coalesce(F.col(t).cast("double"), F.lit(float("nan")))
-              if t else F.lit(0.0))
-        xo, yo = _inv_jvm_columns(
-            op_probe.P, F.col(x), F.col(y), zc, degrees, z_supplied)
-        # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0;
-        # +units=km implies vto_meter=1000 when +vunits is absent)
-        if op_probe.P.vto_meter != 1.0 or op_probe.P.z0 != 0.0:
-            zc = zc * F.lit(op_probe.P.vto_meter) \
-                - F.lit(op_probe.P.z0)
-        out = (df.withColumn(f"{out_prefix}x", xo)
-                 .withColumn(f"{out_prefix}y", yo)
-                 .withColumn(f"{out_prefix}z", zc)
-                 .withColumn(f"{out_prefix}t", tc))
-        if not keep_errors:
-            out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                            & ~F.isnan(F.col(f"{out_prefix}x")))
-        return out
-
-    if jvm_fast_path and _iter_inv_jvm_ok(op_probe, direction):
-        # staged iterative-inverse twin: lcc/aea/leac and ellipsoidal
-        # merc inverses (bounded phi2/phi1 unroll with frozen lanes)
-        out = _iter_inv_apply(df, op_probe.P, x, y, z, t, degrees,
-                              z_supplied, out_prefix)
-        if not keep_errors:
-            out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                            & ~F.isnan(F.col(f"{out_prefix}x")))
-        return out
-
-    if jvm_fast_path and _omerc_fwd_jvm_ok(op_probe, direction):
-        # staged Hotine oblique Mercator forward twin (late r7)
-        out = _omerc_fwd_apply(df, op_probe.P, x, y, z, t, degrees,
-                               z_supplied, out_prefix)
-        if not keep_errors:
-            out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                            & ~F.isnan(F.col(f"{out_prefix}x")))
-        return out
-
-    if jvm_fast_path and _moll_fwd_jvm_ok(op_probe, direction):
-        # staged moll/wag4/wag5 forward twin (late r7)
-        out = _moll_fwd_apply(df, op_probe.P, x, y, z, t, degrees,
-                              z_supplied, out_prefix)
-        if not keep_errors:
-            out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                            & ~F.isnan(F.col(f"{out_prefix}x")))
-        return out
-
-    use_etmerc_twin = bool(jvm_fast_path) and _etmerc_jvm_fast_path_ok(
-        op_probe, direction)
-    if jvm_fast_path and (_webmerc_jvm_fast_path_ok(op_probe, direction)
-                          or use_etmerc_twin):
-        # whole-stage-codegen twin: no Python worker in the hot path
-        # (null z/t from user columns surface as NaN like the UDF path)
-        if _webmerc_jvm_fast_path_ok(op_probe, direction):
-            zc = (F.coalesce(F.col(z).cast("double"),
-                             F.lit(float("nan")))
-                  if z else F.lit(0.0))
-            tc = (F.coalesce(F.col(t).cast("double"),
-                             F.lit(float("nan")))
-                  if t else F.lit(0.0))
-            xo, yo = _webmerc_jvm_columns(
-                op_probe.P, F.col(x), F.col(y), zc, degrees, z_supplied)
-            # fwd_finalize vertical scaling (fwd.cpp:
-            # z = vfr_meter*(z + z0))
-            if op_probe.P.vfr_meter != 1.0 or op_probe.P.z0 != 0.0:
-                zc = F.lit(op_probe.P.vfr_meter) \
-                    * (zc + F.lit(op_probe.P.z0))
-            out = (df.withColumn(f"{out_prefix}x", xo)
-                     .withColumn(f"{out_prefix}y", yo)
-                     .withColumn(f"{out_prefix}z", zc)
-                     .withColumn(f"{out_prefix}t", tc))
-        else:
-            out = _etmerc_jvm_apply(df, op_probe.P, x, y, z, t,
-                                    degrees, z_supplied, out_prefix)
-        if not keep_errors:
-            out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                            & ~F.isnan(F.col(f"{out_prefix}x")))
-        return out
+    z_supplied, t_supplied = z is not None, t is not None
 
     @pandas_udf(_STRUCT4)
-    def _tx(xs: pd.Series, ys: pd.Series, zs: pd.Series, ts: pd.Series) -> pd.DataFrame:
+    def _tx(xs: pd.Series, ys: pd.Series, zs: pd.Series,
+            ts: pd.Series) -> pd.DataFrame:
         op = _cached_operation(projstring)
         xa = xs.to_numpy(dtype=np.float64, na_value=np.nan)
         ya = ys.to_numpy(dtype=np.float64, na_value=np.nan)
@@ -3215,20 +2204,17 @@ def transform(
 
     zcol = F.col(z) if z else F.lit(0.0)
     tcol = F.col(t) if t else F.lit(0.0)
-    res = df.withColumn("_pj", _tx(F.col(x).cast("double"), F.col(y).cast("double"),
+    res = df.withColumn("_pj", _tx(F.col(x).cast("double"),
+                                   F.col(y).cast("double"),
                                    zcol.cast("double"), tcol.cast("double")))
-    out = (
+    return (
         res.withColumn(f"{out_prefix}x", F.col("_pj.x"))
         .withColumn(f"{out_prefix}y", F.col("_pj.y"))
         .withColumn(f"{out_prefix}z", F.col("_pj.z"))
         .withColumn(f"{out_prefix}t", F.col("_pj.t"))
         .drop("_pj")
     )
-    if not keep_errors:
-        out = out.where(
-            F.col(f"{out_prefix}x").isNotNull() & ~F.isnan(F.col(f"{out_prefix}x"))
-        )
-    return out
+
 
 
 def roundtrip_drift_deg(df, projstring: str, lon: str, lat: str, n: int = 1):

@@ -638,7 +638,7 @@ def test_etmerc_jvm_fast_path_parity(spark):
                "+ellps=WGS84 +units=us-ft",
                "+proj=utm +zone=56 +south +ellps=GRS80"):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_",
-                         jvm_fast_path="all")
+                         jvm_fast_path=True)
         plan = fast._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, ps
         slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
@@ -667,13 +667,13 @@ def test_etmerc_jvm_fast_path_parity(spark):
     for ps in ("+proj=tmerc +algo=auto +lon_0=9 +ellps=WGS84",
                "+proj=tmerc +approx +lon_0=9 +ellps=WGS84",
                "+proj=utm +zone=32 +datum=NAD83"):
-        p = transform(df, ps, x="lon", y="lat", jvm_fast_path="all")
+        p = transform(df, ps, x="lon", y="lat", jvm_fast_path=True)
         assert "EvalPython" in \
             p._jdf.queryExecution().executedPlan().toString(), ps
     # the Poder-Engsager INVERSE is a staged twin since late r7
     # (parity pinned in test_iter_inverse_jvm_fast_path_parity)
     inv = transform(df, "+proj=utm +zone=32 +ellps=GRS80", x="lon",
-                    y="lat", direction="inv", jvm_fast_path="all")
+                    y="lat", direction="inv", jvm_fast_path=True)
     assert "EvalPython" not in \
         inv._jdf.queryExecution().executedPlan().toString()
 
@@ -1121,9 +1121,9 @@ def test_datum_pipeline_jvm_fast_path_parity(spark):
 def test_datum_twin_signed_zero_and_prefix_collision(spark):
     """r7 ADVICE fixes on the SQL-staged datum twin: (a) the cart-inverse
     leg preserves IEEE signed zeros (geocentric Y=-0.0 -> lon -0.0, and
-    Y=+0.0, X<0 -> lon +180, Y=-0.0, X<0 -> lon -180) via the same CASE
-    the Column twins' atan2_ieee uses; (b) an input column colliding
-    with the _jd_ staging prefix raises a clear ValueError instead of an
+    Y=+0.0, X<0 -> lon +180, Y=-0.0, X<0 -> lon -180) via the shared
+    _sql_atan2_ieee CASE; (b) an input column colliding with the _jd_
+    staging prefix raises a clear ValueError instead of an
     ambiguous-reference AnalysisException / silent drop."""
     import math
 
@@ -1157,6 +1157,31 @@ def test_datum_twin_signed_zero_and_prefix_collision(spark):
     clash = df.withColumn("_jd_x", F.lit(1))
     with pytest.raises(ValueError, match="_jd_"):
         transform(clash, ps, x="lon", y="lat", z="h", out_prefix="o_")
+    # every twin route reserves the prefix — incl. the composed +towgs84
+    # forward, whose staged temporaries _jd_glam/_jd_lam once clashed
+    # with AMBIGUOUS_REFERENCE instead, and the bare merc/webmerc twins
+    lcc = ("+proj=lcc +lat_0=46.5 +lon_0=3 +lat_1=49 +lat_2=44 "
+           "+x_0=700000 +y_0=6600000 +ellps=clrk80ign "
+           "+towgs84=-168,-60,320")
+    for ps_, name in ((lcc, "_jd_glam"), (lcc, "_jd_lam"),
+                      ("+proj=merc +ellps=WGS84", "_jd_lam"),
+                      ("+proj=webmerc +ellps=WGS84", "_jd_x")):
+        with pytest.raises(ValueError, match="_jd_"):
+            transform(df.withColumn(name, F.lit(1.0)), ps_, x="lon",
+                      y="lat")
+
+
+def test_jvm_fast_path_must_be_bool(spark):
+    """jvm_fast_path is a plain bool: a string (the retired "all"
+    alias, or "no", which used to be truthy and silently turned the
+    twins ON) or any other non-bool raises at plan time."""
+    from proj_4_spark.engine.spark import transform
+
+    df = spark.createDataFrame([(3.0, 46.5)], "lon double, lat double")
+    for bad in ("all", "no", "False", 1, None):
+        with pytest.raises(ValueError, match="jvm_fast_path"):
+            transform(df, "+proj=merc +ellps=WGS84", x="lon", y="lat",
+                      jvm_fast_path=bad)
 
 
 def test_inverse_jvm_fast_path_parity_r6(spark):

@@ -298,6 +298,30 @@ def test_expression_twin_queries_have_no_python_workers(spark):
         assert "EvalPython" not in txt, (name, txt[-1200:])
 
 
+def _assert_codegen_health(spark, df, label):
+    """Compile each whole-stage-codegen subtree of ``df`` for real and
+    assert (a) it produced bytecode (maxMethodCodeSize == -1 marks a
+    failed compile, which Spark only logs) and (b) every generated
+    method is within the 8000-byte HotSpot JIT ceiling
+    (-XX:DontCompileHugeMethods), so no region silently runs
+    interpreted at scale."""
+    import re
+
+    pkg = getattr(spark._jvm.org.apache.spark.sql.execution.debug,
+                  "package$")
+    code = getattr(pkg, "MODULE$").codegenString(
+        df._jdf.queryExecution().executedPlan())
+    sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(-?\d+)", code)]
+    assert sizes, (label, "no codegen subtree found")
+    assert all(s != -1 for s in sizes), \
+        (label, sizes, "a whole-stage-codegen subtree failed to "
+         "compile (interpreted fallback)")
+    assert all(s <= 8000 for s in sizes), \
+        (label, sizes, "a generated method exceeds the HotSpot "
+         "JIT ceiling (DontCompileHugeMethods) — split the "
+         "region with a stager barrier")
+
+
 def test_twin_queries_codegen_health(spark):
     """Runtime codegen-health gate (VERDICT r7 #3): the zero-Python
     plan gates cannot see a janino failure or an over-sized method —
@@ -305,19 +329,15 @@ def test_twin_queries_codegen_health(spark):
     to compile, and silently ran interpreted; the ellipsoidal laea
     inverse compiled at 64,030 bytecodes (3% under janino's 64 KB hard
     limit) but sat 8x over HotSpot's 8000-byte JIT ceiling, also
-    interpreted.  For every twin-gated / headline query, compile each
-    whole-stage-codegen subtree for real and assert (a) it produced
-    bytecode (maxMethodCodeSize == -1 marks a failed compile, which
-    Spark only logs) and (b) every generated method is within the
-    8000-byte HotSpot JIT ceiling (-XX:DontCompileHugeMethods), so no
-    region silently runs interpreted at scale."""
-    import re
-
+    interpreted.  Every twin-gated / headline driver query, and the
+    composed datum-modified forward twins (the lcc +towgs84 benchmark
+    route, EPSG:2154 and EPSG:3035 — 10,575 / 10,503 bytecodes and a
+    janino failure before the codegen barrier between the datum legs
+    and the projection), must pass _assert_codegen_health."""
     import __spark_entry__ as E
 
-    pkg = getattr(spark._jvm.org.apache.spark.sql.execution.debug,
-                  "package$")
-    dbg = getattr(pkg, "MODULE$")
+    from proj_4_spark.engine.spark import transform
+
     qs = E.queries()
     old = spark.conf.get("spark.sql.adaptive.enabled")
     # codegenString sees no subtrees under an unexecuted AQE plan
@@ -330,18 +350,14 @@ def test_twin_queries_codegen_health(spark):
                      "geos_inverse", "utm_inverse", "utm_roundtrip",
                      "boundcrs_text_shift", "projjson_text_merc",
                      "ann_cosine_topk", "ann_lsh_topk", "ann_ivf_topk"):
-            df = qs[name](spark, SF)
-            code = dbg.codegenString(
-                df._jdf.queryExecution().executedPlan())
-            sizes = [int(m) for m in
-                     re.findall(r"maxMethodCodeSize:(-?\d+)", code)]
-            assert sizes, (name, "no codegen subtree found")
-            assert all(s != -1 for s in sizes), \
-                (name, sizes, "a whole-stage-codegen subtree failed to "
-                 "compile (interpreted fallback)")
-            assert all(s <= 8000 for s in sizes), \
-                (name, sizes, "a generated method exceeds the HotSpot "
-                 "JIT ceiling (DontCompileHugeMethods) — split the "
-                 "region with a stager barrier")
+            _assert_codegen_health(spark, qs[name](spark, SF), name)
+        pts = spark.range(0, 64).select(
+            (F.col("id") % 8 * 0.5 + 1.0).alias("lon"),
+            (F.col("id") / 8 * 0.5 + 44.0).alias("lat"))
+        for ps in ("+proj=lcc +lat_0=46.5 +lon_0=3 +lat_1=49 +lat_2=44 "
+                   "+x_0=700000 +y_0=6600000 +ellps=clrk80ign "
+                   "+towgs84=-168,-60,320", "EPSG:2154", "EPSG:3035"):
+            out = transform(pts, ps, x="lon", y="lat", out_prefix="p_")
+            _assert_codegen_health(spark, out, ps)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)

@@ -55,30 +55,33 @@ def test_registry_parity_holds():
     assert len(_registry()) >= 175
 
 
+def _route(ps, direction):
+    """Name of the transform() route-table row that takes (ps,
+    direction), or None for the Arrow-UDF path."""
+    from proj_4_spark.engine.plan import create_operation
+    from proj_4_spark.engine.spark import _pick_route
+
+    row = _pick_route(create_operation(ps), direction)
+    return None if row is None else row[0]
+
+
 def test_r6_twin_roster_and_text_formats():
     """r6 ratchets: the datum-pipeline twin, the widened inverse-twin
     roster, and the full CRS-text surface (WKT2 incl. BOUNDCRS, ESRI
     WKT1, PROJJSON) stay wired."""
     from proj_4_spark.engine.plan import create_operation
-    from proj_4_spark.engine.spark import (
-        _datum_jvm_legs,
-        _inv_jvm_fast_path_ok,
-    )
 
-    op = create_operation(
-        "+proj=pipeline +ellps=GRS80 +step +proj=cart "
-        "+step +proj=helmert +x=1 +step +proj=cart +inv")
-    assert _datum_jvm_legs(op, "fwd") is not None
-    assert _datum_jvm_legs(op, "inv") is not None
+    pipe = ("+proj=pipeline +ellps=GRS80 +step +proj=cart "
+            "+step +proj=helmert +x=1 +step +proj=cart +inv")
+    assert _route(pipe, "fwd") == "datum_pipeline"
+    assert _route(pipe, "inv") == "datum_pipeline"
 
     inv_twins = (
         "+proj=webmerc +ellps=WGS84",
         "+proj=merc +R=6371000",
         "+proj=eqc +ellps=WGS84",
         "+proj=cea +ellps=WGS84",       # ellipsoidal authlat series
-        "+proj=laea +R=6371000 +lat_0=52",  # ellipsoidal laea moved to
-        # the STAGED twin in r8 (its Column tree's 64 KB method ran
-        # interpreted); asserted in the r8 block below
+        "+proj=laea +R=6371000 +lat_0=52",
         "+proj=stere +R=6371000 +lat_0=90",
         "+proj=sinu +R=6371000",
         "+proj=eqdc +R=6371000 +lat_1=20 +lat_2=60",
@@ -87,20 +90,18 @@ def test_r6_twin_roster_and_text_formats():
         "+proj=gnom +R=6371000",
     )
     for ps in inv_twins:
-        assert _inv_jvm_fast_path_ok(create_operation(ps), "inv"), ps
+        assert _route(ps, "inv") == "inv", ps
 
-    # fwd twin roster (15 families) keeps compiling
+    # fwd twin roster keeps compiling
     fwd_twins = ("webmerc", "merc", "eqc", "cea", "lcc", "aea", "leac",
                  "stere", "ups", "laea", "sterea", "somerc", "krovak",
                  "sinu", "eqdc", "eqearth", "cass", "ortho", "gnom")
-    from proj_4_spark.engine.spark import _webmerc_jvm_fast_path_ok
-
     ex = {"lcc": " +lat_1=33 +lat_2=45", "aea": " +lat_1=29 +lat_2=45",
           "leac": " +lat_1=29", "eqdc": " +lat_1=20 +lat_2=60",
           "krovak": "", "somerc": ""}
     for name in fwd_twins:
         ps = f"+proj={name} +ellps=GRS80" + ex.get(name, "")
-        assert _webmerc_jvm_fast_path_ok(create_operation(ps), "fwd"), ps
+        assert _route(ps, "fwd") == "fwd", ps
 
     # CRS-text formats all dispatch through create_operation
     from proj_4_spark.sources.projjson import projstring_to_projjson
@@ -125,9 +126,6 @@ def test_r7_iterative_inverse_twins_stay_wired():
     phi1 unroll with frozen-lane convergence) keep compiling for
     lcc / aea / leac (sphere + ellipsoid) and ellipsoidal merc; the
     remaining iterative families keep refusing (UDF path)."""
-    from proj_4_spark.engine.plan import create_operation
-    from proj_4_spark.engine.spark import _iter_inv_jvm_ok
-
     for ps in (
         "+proj=lcc +ellps=GRS80 +lat_1=33 +lat_2=45",
         "+proj=lcc +R=6371000 +lat_1=-33 +lat_2=-45",
@@ -136,15 +134,13 @@ def test_r7_iterative_inverse_twins_stay_wired():
         "+proj=leac +ellps=WGS84 +lat_1=45",
         "+proj=merc +ellps=WGS84",
     ):
-        assert _iter_inv_jvm_ok(create_operation(ps), "inv"), ps
-    for ps in ("+proj=merc +R=6371000",          # closed-form r5 twin
-               "+proj=moll +R=6371000",          # off-roster family
-               "+proj=robin +R=6371000",
+        assert _route(ps, "inv") == "inv", ps
+    for ps in ("+proj=robin +R=6371000",
                # sterea measured out (0.64x the UDF path; see
-               # _iter_inv_sql_ok)
+               # _INV_KERNEL_NAMES)
                "+proj=sterea +lat_0=52.2 +lon_0=5.4 +k=0.9999079 "
                "+x_0=155000 +y_0=463000 +ellps=bessel"):
-        assert not _iter_inv_jvm_ok(create_operation(ps), "inv"), ps
+        assert _route(ps, "inv") is None, ps
     # late r7: Poder-Engsager (utm roundtrips Python-free end to end),
     # ellipsoidal stere/ups and the eqearth Newton inverse join too
     for ps in ("+proj=utm +zone=32 +ellps=GRS80",
@@ -153,57 +149,52 @@ def test_r7_iterative_inverse_twins_stay_wired():
                "+proj=eqearth +ellps=WGS84",
                "+proj=omerc +lat_0=4 +lonc=115 +alpha=53 "
                "+ellps=evrst69"):
-        assert _iter_inv_jvm_ok(create_operation(ps), "inv"), ps
-    # the omerc FORWARD has its own staged twin
-    from proj_4_spark.engine.spark import _omerc_fwd_jvm_ok
-
-    assert _omerc_fwd_jvm_ok(create_operation(
-        "+proj=omerc +lat_0=4 +lonc=115 +alpha=53 +ellps=evrst69"),
-        "fwd")
-    # geos forward stays a closed-form column twin; its INVERSE (and
-    # the ellipsoidal laea inverse) moved to the STAGED twin in r8 —
-    # the raw Column trees produced a janino compile failure (geos,
-    # ~22.8k-line method, silent interpreted fallback) resp. a 64,030-
-    # byte method 8x over the HotSpot JIT ceiling (laea); both are now
-    # served by _emit_iter_inv_kernel and gated by the codegen-health
-    # test in tests/test_plans.py
-    from proj_4_spark.engine.spark import (
-        _inv_jvm_fast_path_ok,
-        _webmerc_jvm_fast_path_ok as _fwd_ok,
-    )
-
-    geos = create_operation("+proj=geos +h=35785831.0 +ellps=GRS80")
-    assert _fwd_ok(geos, "fwd")
-    assert not _inv_jvm_fast_path_ok(geos, "inv")
-    assert _iter_inv_jvm_ok(geos, "inv")
-    laea_e = create_operation("+proj=laea +ellps=GRS80 +lat_0=52")
-    assert not _inv_jvm_fast_path_ok(laea_e, "inv")
-    assert _iter_inv_jvm_ok(laea_e, "inv")
-    # spherical laea keeps the closed-form column twin
-    assert _inv_jvm_fast_path_ok(
-        create_operation("+proj=laea +R=6371000 +lat_0=52"), "inv")
+        assert _route(ps, "inv") == "inv", ps
+    # the omerc FORWARD has its own staged kernel
+    assert _route("+proj=omerc +lat_0=4 +lonc=115 +alpha=53 "
+                  "+ellps=evrst69", "fwd") == "fwd"
+    # geos (both directions) and the ellipsoidal laea inverse are staged
+    # twins gated by the codegen-health test in tests/test_plans.py:
+    # r7's raw geos inverse tree failed janino (~22.8k-line method,
+    # silent interpreted fallback) and r8's ellipsoidal laea inverse sat
+    # at 64,030 bytecodes, 8x over the HotSpot JIT ceiling
+    geos = "+proj=geos +h=35785831.0 +ellps=GRS80"
+    assert _route(geos, "fwd") == "fwd"
+    assert _route(geos, "inv") == "inv"
+    assert _route("+proj=laea +ellps=GRS80 +lat_0=52", "inv") == "inv"
+    assert _route("+proj=laea +R=6371000 +lat_0=52", "inv") == "inv"
 
     # the COMPOSED datum-modified inverse accepts the iterative
     # families too (+towgs84 conic zone inverses run Python-free)
-    from proj_4_spark.engine.spark import _datum_modified_jvm_ok
+    assert _route("+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
+                  "+towgs84=-10,158,187", "inv") == "composed_inv"
+    assert _route("+proj=merc +ellps=GRS80 +towgs84=1,2,3",
+                  "inv") == "composed_inv"
+    assert _route("+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
+                  "+towgs84=-10,158,187", "fwd") == "composed_fwd"
 
-    assert _datum_modified_jvm_ok(create_operation(
-        "+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
-        "+towgs84=-10,158,187"), "inv")
-    assert _datum_modified_jvm_ok(create_operation(
-        "+proj=merc +ellps=GRS80 +towgs84=1,2,3"), "inv")
+    # modifiers no twin models keep the Arrow-UDF path
+    for ps, d in (("+proj=webmerc +ellps=WGS84 +inv", "fwd"),
+                  ("+proj=webmerc +ellps=WGS84 +inv", "inv"),
+                  ("+proj=merc +ellps=WGS84 +over", "fwd"),
+                  ("+proj=merc +ellps=WGS84 +axis=wsu", "fwd"),
+                  ("+proj=tmerc +algo=auto +lon_0=9 +ellps=WGS84", "fwd"),
+                  ("+proj=tmerc +approx +lon_0=9 +ellps=WGS84", "inv"),
+                  ("+proj=ortho +ellps=GRS80 +lat_0=40", "inv"),
+                  ("+proj=utm +zone=32 +datum=NAD83", "fwd"),
+                  ("+proj=webmerc +datum=NAD27", "fwd"),
+                  ("+proj=robin +R=6371000 +towgs84=1,2,3", "inv")):
+        assert _route(ps, d) is None, (ps, d)
 
     # r7 late roster: inv_mlfn twins (ellipsoidal eqdc/sinu/cass)
     for ps in ("+proj=eqdc +ellps=GRS80 +lat_1=20 +lat_2=60",
                "+proj=sinu +ellps=WGS84",
                "+proj=cass +ellps=GRS80"):
-        assert _iter_inv_jvm_ok(create_operation(ps), "inv"), ps
+        assert _route(ps, "inv") == "inv", ps
 
-    # moll family: closed-form inverse column twins + the staged
-    # Newton forward (late r7)
-    from proj_4_spark.engine.spark import _moll_fwd_jvm_ok
-
+    # moll family: closed-form inverse + the staged Newton forward
+    # (late r7)
     for nm in ("moll", "wag4", "wag5"):
-        op_m = create_operation(f"+proj={nm} +R=6371000")
-        assert _inv_jvm_fast_path_ok(op_m, "inv"), nm
-        assert _moll_fwd_jvm_ok(op_m, "fwd"), nm
+        ps = f"+proj={nm} +R=6371000"
+        assert _route(ps, "inv") == "inv", nm
+        assert _route(ps, "fwd") == "fwd", nm
