@@ -1474,8 +1474,7 @@ def _q_ann_cosine(spark, sf_dir):
     queries = emb.where("vec_id < 20").selectExpr(
         "vec_id as q_id", "embedding"
     )
-    topk = cosine_topk(corpus, queries, k=5, raw_cosine=True,
-                       dim=64)
+    topk = cosine_topk(corpus, queries, k=5, raw_cosine=True)
     return topk.select(
         "q_id", "vec_id", "rank", _i(F.col("cosine"), 1000000).alias("cosine")
     )
@@ -2195,6 +2194,20 @@ def _nad27_oracle_sql() -> str:
     )
 
 
+def _grid_gated(build: Callable[[], str], *grids: str) -> str:
+    """An oracle that reads grid files: `build()`'s SQL when every grid
+    resolves, else SQL that fails with `grid absent: <file>` when run,
+    so a missing grid fails only its own entry."""
+    from proj_4_spark.sources.grids import resolve_grid_path
+
+    for g in grids:
+        try:
+            resolve_grid_path(g)
+        except FileNotFoundError:
+            return f"select error('grid absent: {g}')"
+    return build()
+
+
 def _compound_geoid_oracle_sql() -> str:
     """DuckDB bilinear re-interpolation of the egm96 grid, mirroring
     kernels/gridshift.py vgrid_value term-for-term: same float64 grid
@@ -2747,10 +2760,12 @@ def oracle_sql() -> dict[str, str]:
         # upcast exactly) with the kernel's bilinear stencil mirrored
         # term-for-term (kernels/gridshift.py vgrid_value: full-world
         # double-mod wrap, left-associated weight sum, multiplier=-1)
-        "compound_geoid": _compound_geoid_oracle_sql(),
+        "compound_geoid": _grid_gated(_compound_geoid_oracle_sql,
+                                      "egm96_15.gtx"),
         # catalog-routed NAD27->NAD83: DuckDB re-interpolates the same
         # NADCON CTable2 arrays; routing pinned via the chosen column
-        "nad27_catalog_routed": _nad27_oracle_sql(),
+        "nad27_catalog_routed": _grid_gated(_nad27_oracle_sql, "conus",
+                                            "alaska"),
         # multimodal: expected features computed driver-side from the
         # same deterministic payloads + per-payload math (no Spark) —
         # the gate value-checks the mapInPandas decode plumbing.

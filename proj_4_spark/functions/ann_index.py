@@ -14,14 +14,20 @@ batches.  This module splits the two:
   round-trip bit-exactly via repr).
 - lsh_topk_prebuilt / ivf_topk_prebuilt: probe-only queries.  The query
   batch (small by definition in the serving shape) is collected ONCE
-  (bounded by n_queries, NOT by corpus size) and signed/probed
-  driver-side with exact sequential arithmetic; the probe keys become a
-  literal partition filter, so the corpus side of the plan is a
-  partition-PRUNED parquet scan of precomputed columns feeding ONE
-  mapInArrow pass that emits exact candidate dots against the
-  closure-held query matrix (r8 — no join, no per-candidate vector
-  shipping).  No full-corpus signature recompute, and only the probed
-  fraction of the index is read.
+  (bounded by n_queries, NOT by corpus size) and probe-planned
+  driver-side; the probe keys become a literal partition filter, so
+  the corpus side of the plan is a partition-PRUNED parquet scan of
+  precomputed columns feeding ONE mapInArrow pass that emits exact
+  candidate dots against the closure-held query matrix (no join, no
+  per-candidate vector shipping).  No full-corpus signature recompute,
+  and only the probed fraction of the index is read.
+
+Nothing here computes a dot product of its own: the tag kernels
+(`_lsh_signature`, `_nearest_centroid`), the probe planners
+(`_lsh_probe_map`, `_ivf_probe_map`), the centroid init and the
+candidate pass are similarity.py's, the one sequential-order kernel
+path, so prebuilt and in-query results are bit-identical.  Ids must be
+integral (byte, short, int or long); the index stores them as long.
 
 At cluster scale `path` is a DFS URI and the partition directories are
 the inverted file; everything here is plain `spark.read/write.parquet`,
@@ -43,12 +49,22 @@ import os
 import numpy as np
 
 from proj_4_spark.functions.similarity import (
-    _corpus_tag_ivf_udf,
-    _corpus_tag_lsh_udf,
+    _candidate_topk,
+    _collect_query_batch,
+    _corpus,
+    _corpus_tag_udf,
     _hyperplanes,
+    _ivf_centroids,
+    _ivf_probe_map,
+    _lsh_probe_map,
+    _lsh_signature,
+    _nearest_centroid,
 )
 
 META_NAME = "_ann_meta.json"
+
+# persisted key column per index kind (the partitionBy column)
+_KEY_COL = {"lsh": "bucket", "ivf": "list_id"}
 
 
 def _write_meta(path: str, meta: dict) -> None:
@@ -66,39 +82,44 @@ def read_meta(path: str) -> dict:
         return json.load(fh)
 
 
+def _build_index(emb_df, path: str, tag, meta: dict, id_col: str,
+                 vec_col: str) -> dict:
+    """One full-corpus pass: (vec_id, v, v_norm, key) with the key from
+    the tag kernel, written partitioned by the kind's key column, plus
+    the JSON sidecar.  Ids must be integral (they are stored as long)."""
+    from pyspark.sql import functions as F
+
+    key_col = _KEY_COL[meta["kind"]]
+    indexed = _corpus(emb_df, id_col, vec_col).select(
+        F.col("vec_id").cast("long").alias("vec_id"), "v",
+        _corpus_tag_udf(tag)(F.col("v")).alias("_t"),
+    ).select("vec_id", "v", F.col("_t.v_norm").alias("v_norm"),
+             F.col("_t.key").alias(key_col))
+    # cluster by the partition key before partitionBy: without it every
+    # write task emits a file into every key directory it touches
+    # (n_tasks x n_keys tiny files — measured 510 files for 2000 rows
+    # at sf0.1); with it, one file per key.  At 100 TB you'd
+    # additionally bound file sizes via spark.sql.files.maxRecordsPerFile
+    indexed.repartition(key_col).write.mode("overwrite") \
+        .partitionBy(key_col).parquet(path)
+    # footer-only count over the just-written files: cheap staleness
+    # fingerprint for callers that cache the index
+    meta["corpus_rows"] = emb_df.sparkSession.read.parquet(path).count()
+    _write_meta(path, meta)
+    return meta
+
+
 def build_lsh_index(emb_df, path: str, *, dim: int, n_planes: int = 8,
                     seed: int = 42, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> dict:
     """One-pass LSH index build: sign-bucket signature + norm per
-    corpus vector in ONE Arrow hop (similarity._corpus_tag_lsh_udf —
-    exact sequential arithmetic at any plane-matrix width), written
-    partitioned by bucket (<= 2^n_planes directories).  Returns the
-    meta dict."""
-    from pyspark.sql import functions as F
-
+    corpus vector in ONE Arrow hop, written partitioned by bucket
+    (<= 2^n_planes directories).  Returns the meta dict."""
     planes = _hyperplanes(dim, n_planes, seed)
-    indexed = emb_df.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _corpus_tag_lsh_udf(planes)(F.col(vec_col)).alias("_t"),
-    ).select("vec_id", "v", F.col("_t.v_norm").alias("v_norm"),
-             F.col("_t.bucket").alias("bucket"))
-    # cluster by the partition key before partitionBy: without it every
-    # write task emits a file into every bucket directory it touches
-    # (n_tasks x n_buckets tiny files — measured 510 files for 2000 rows
-    # at sf0.1); with it, one file per bucket.  At 100 TB you'd
-    # additionally bound file sizes via spark.sql.files.maxRecordsPerFile
-    indexed.repartition("bucket").write.mode("overwrite") \
-        .partitionBy("bucket").parquet(path)
-    spark = emb_df.sparkSession
-    meta = {
-        "kind": "lsh", "dim": dim, "n_planes": n_planes, "seed": seed,
-        # footer-only count over the just-written files: cheap staleness
-        # fingerprint for callers that cache the index
-        "corpus_rows": spark.read.parquet(path).count(),
-    }
-    _write_meta(path, meta)
-    return meta
+    return _build_index(
+        emb_df, path, lambda V: _lsh_signature(V, planes),
+        {"kind": "lsh", "dim": dim, "n_planes": n_planes, "seed": seed},
+        id_col, vec_col)
 
 
 def build_ivf_index(emb_df, path: str, *, dim: int, n_centroids: int = 16,
@@ -112,41 +133,12 @@ def build_ivf_index(emb_df, path: str, *, dim: int, n_centroids: int = 16,
     similarity.ivf_topk uses, so prebuilt and in-query results match
     exactly.  The exact centroid matrix is persisted in the sidecar
     (JSON float repr round-trips doubles bit-exactly)."""
-    from pyspark.sql import functions as F
-
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=np.float64)
-        n_centroids = cents.shape[0]
-    else:
-        rng = np.random.Generator(np.random.PCG64(seed))
-        cents = rng.standard_normal((n_centroids, dim))
-        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    # two-step projection: argmax references the dots twice; a separate
-    # projection stops CollapseProject from inlining the matmul twice
-    corpus = emb_df.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _corpus_tag_ivf_udf(cents)(F.col(vec_col)).alias("_t"),
-    ).select("vec_id", "v", F.col("_t.v_norm").alias("v_norm"),
-             F.col("_t.cd").alias("_cd"))
-    corpus = corpus.withColumn(
-        "list_id",
-        F.array_position(F.col("_cd"), F.array_max(F.col("_cd")))
-        .cast("int") - 1,
-    ).drop("_cd")
-    # one file per inverted list (see build_lsh_index)
-    corpus.repartition("list_id").write.mode("overwrite") \
-        .partitionBy("list_id").parquet(path)
-    spark = emb_df.sparkSession
-    meta = {
-        "kind": "ivf", "dim": dim, "n_centroids": n_centroids,
-        "seed": seed, "centroids": [[float(x) for x in c] for c in cents],
-        "corpus_rows": spark.read.parquet(path).count(),
-    }
-    _write_meta(path, meta)
-    return meta
-
+    cents = _ivf_centroids(dim, n_centroids, seed, centroids)
+    return _build_index(
+        emb_df, path, lambda V: _nearest_centroid(V, cents),
+        {"kind": "ivf", "dim": dim, "n_centroids": cents.shape[0],
+         "seed": seed, "centroids": [[float(x) for x in c] for c in cents]},
+        id_col, vec_col)
 
 
 def _read_index(spark, path: str, key_col: str):
@@ -176,58 +168,48 @@ def _read_index(spark, path: str, key_col: str):
         spark.conf.set(key, old)
 
 
+def _probe_index(spark, path: str, kind: str, query_df, q_id_col: str,
+                 q_vec_col: str, k: int, raw_cosine: bool, plan):
+    """Shared probe: collect the query batch, plan its probe keys with
+    `plan(meta, Q)`, prune the index to those key partitions, then the
+    candidate pass over the persisted (v, v_norm, key) rows."""
+    from pyspark.sql import functions as F
+
+    meta = read_meta(path)
+    if meta.get("kind") != kind:
+        raise ValueError(f"index at {path!r} is {meta.get('kind')!r}, "
+                         f"not {kind}")
+    key_col = _KEY_COL[kind]
+    q_ids, Q = _collect_query_batch(query_df, q_id_col, q_vec_col)
+    probe_map = plan(meta, Q)
+    corpus = (_read_index(spark, path, key_col)
+              .where(F.col(key_col).isin(sorted(probe_map))))
+    return _candidate_topk(corpus, key_col, probe_map, Q, q_ids, k,
+                           raw_cosine)
+
+
 def lsh_topk_prebuilt(spark, path: str, query_df, k: int = 5,
                       multiprobe: int = 1, q_id_col: str = "q_id",
                       q_vec_col: str = "embedding",
                       raw_cosine: bool = False):
     """Probe-only LSH top-k against a persisted index.
 
-    Plan shape (r8): the query batch is collected ONCE (bounded by the
-    batch, never the corpus) and signed/probe-expanded driver-side with
-    the index's planes (exact sequential arithmetic — identical values
-    to the executor path); the distinct probe buckets become a literal
-    `bucket IN (...)` partition filter, so the corpus side is a
+    Plan shape: the query batch is collected ONCE (bounded by the
+    batch, never the corpus) and signed/probe-expanded driver-side
+    with the index's planes; the distinct probe buckets become a
+    literal `bucket IN (...)` partition filter, so the corpus side is a
     partition-PRUNED scan of precomputed (v, v_norm, bucket) rows; ONE
     mapInArrow pass emits the exact candidate dots against the query
     matrix held in closure (no join, no per-candidate vector shipping);
     the only Exchange is the ranking window's.  Matches
-    similarity.lsh_bucket_topk(multiprobe=...) value-exactly."""
-    from pyspark.sql import functions as F
+    similarity.lsh_bucket_topk(multiprobe=...) value-exactly.  Query
+    ids must be integral."""
+    def plan(meta, Q):
+        planes = _hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
+        return _lsh_probe_map(Q, planes, multiprobe)
 
-    from proj_4_spark.functions.similarity import (
-        _candidates_map_arrow,
-        _CAND_SCHEMA,
-        _collect_query_batch,
-        _pack_signature,
-        _probe_masks,
-        _rank_candidate_rows,
-        _seq_dots,
-        _seq_norms,
-    )
-
-    meta = read_meta(path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"index at {path!r} is {meta.get('kind')!r}, "
-                         "not lsh")
-    n_planes = meta["n_planes"]
-    planes = _hyperplanes(meta["dim"], n_planes, meta["seed"])
-
-    q_ids, Q = _collect_query_batch(query_df, q_id_col, q_vec_col)
-    qsig = _pack_signature(
-        _seq_dots(Q, np.ascontiguousarray(planes, dtype=np.float64))
-    ) if len(q_ids) else np.zeros(0, dtype=np.int64)
-    probe_map: dict = {}
-    for ki, s in enumerate(qsig):
-        for m in _probe_masks(n_planes, multiprobe):
-            probe_map.setdefault(int(s) ^ m, []).append(ki)
-
-    corpus = (_read_index(spark, path, "bucket")
-              .where(F.col("bucket").isin(sorted(probe_map))))
-    cand = corpus.mapInArrow(
-        _candidates_map_arrow(probe_map, Q, key_col="bucket",
-                              norm_col="v_norm"), _CAND_SCHEMA)
-    return _rank_candidate_rows(cand, q_ids, _seq_norms(Q), k,
-                                raw_cosine)
+    return _probe_index(spark, path, "lsh", query_df, q_id_col, q_vec_col,
+                        k, raw_cosine, plan)
 
 
 def ivf_topk_prebuilt(spark, path: str, query_df, k: int = 5,
@@ -236,42 +218,14 @@ def ivf_topk_prebuilt(spark, path: str, query_df, k: int = 5,
                       raw_cosine: bool = False):
     """Probe-only IVF top-k against a persisted index: each query's
     n_probe best centroid lists (from the sidecar's exact centroid
-    matrix, selected driver-side with JVM-identical argsort semantics)
-    become a literal `list_id IN (...)` partition filter; ONE
+    matrix) become a literal `list_id IN (...)` partition filter; ONE
     mapInArrow pass over the pruned inverted lists emits the exact
-    candidate dots against the closure-held query matrix (r8 — no
-    broadcast join, no per-candidate vector shipping).  Matches
-    similarity.ivf_topk (same centroids) value-exactly."""
-    from pyspark.sql import functions as F
+    candidate dots against the closure-held query matrix (no join, no
+    per-candidate vector shipping).  Matches similarity.ivf_topk (same
+    centroids) value-exactly.  Query ids must be integral."""
+    def plan(meta, Q):
+        cents = np.asarray(meta["centroids"], dtype=np.float64)
+        return _ivf_probe_map(Q, cents, n_probe)
 
-    from proj_4_spark.functions.similarity import (
-        _candidates_map_arrow,
-        _CAND_SCHEMA,
-        _collect_query_batch,
-        _probe_lists_np,
-        _rank_candidate_rows,
-        _seq_dots,
-        _seq_norms,
-    )
-
-    meta = read_meta(path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path!r} is {meta.get('kind')!r}, "
-                         "not ivf")
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-
-    q_ids, Q = _collect_query_batch(query_df, q_id_col, q_vec_col)
-    probe_map: dict = {}
-    if len(q_ids):
-        for ki, lists in enumerate(_probe_lists_np(_seq_dots(Q, cents),
-                                                   n_probe)):
-            for lid in lists:
-                probe_map.setdefault(int(lid), []).append(ki)
-
-    corpus = (_read_index(spark, path, "list_id")
-              .where(F.col("list_id").isin(sorted(probe_map))))
-    cand = corpus.mapInArrow(
-        _candidates_map_arrow(probe_map, Q, key_col="list_id",
-                              norm_col="v_norm"), _CAND_SCHEMA)
-    return _rank_candidate_rows(cand, q_ids, _seq_norms(Q), k,
-                                raw_cosine)
+    return _probe_index(spark, path, "ivf", query_df, q_id_col, q_vec_col,
+                        k, raw_cosine, plan)

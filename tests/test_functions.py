@@ -256,45 +256,158 @@ def test_multimodal_real_decode_end_to_end(spark):
 
 
 def test_ann_pandas_path_parity(spark):
-    """The Arrow-matmul signature/centroid path (used above
-    _JVM_EXPR_MAX_TERMS literal terms) must produce the same buckets,
-    list assignments and top-k output as the JVM expression path."""
+    """signature_col and centroid_dots_col, given a column name or a
+    Column, equal a scalar Python reference BIT FOR BIT: each dot is
+    s = 0.0; s += float(a[j]) * float(b[j]) for j in order (the
+    sequential sum the DuckDB oracles use; a matmul would differ)."""
     from proj_4_spark.functions import similarity as S
+
+    def dot(a, b):
+        s = 0.0
+        for j in range(len(a)):
+            s += float(a[j]) * float(b[j])
+        return s
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     planes = S._hyperplanes(64, 8, seed=42)
-    both = emb.select(
-        "vec_id",
-        S.signature_col(F.col("embedding"), planes, use_pandas=False).alias("jvm"),
-        S.signature_col(F.col("embedding"), planes, use_pandas=True).alias("pdu"),
-    ).toPandas()
-    assert (both["jvm"] == both["pdu"]).all()
+    cents = np.random.Generator(np.random.PCG64(7)).standard_normal((16, 64))
+    rows = emb.select(
+        "embedding",
+        S.signature_col("embedding", planes).alias("sig_name"),
+        S.signature_col(F.col("embedding"), planes).alias("sig_col"),
+        S.centroid_dots_col("embedding", cents).alias("cd_name"),
+        S.centroid_dots_col(F.col("embedding"), cents).alias("cd_col"),
+    ).collect()
+    assert len(rows) > 0
+    for r in rows:
+        v = r["embedding"]
+        sig = sum(1 << i for i, p in enumerate(planes) if dot(v, p) > 0)
+        assert r["sig_name"] == sig and r["sig_col"] == sig
+        want = np.array([dot(v, c) for c in cents]).view(np.int64)
+        for name in ("cd_name", "cd_col"):
+            got = np.array(r[name], dtype=np.float64).view(np.int64)
+            assert (got == want).all(), name
 
-    rng = np.random.Generator(np.random.PCG64(7))
-    cents = rng.standard_normal((16, 64))
-    cd = emb.select(
-        S.centroid_dots_col(F.col("embedding"), cents, use_pandas=False).alias("jvm"),
-        S.centroid_dots_col(F.col("embedding"), cents, use_pandas=True).alias("pdu"),
-    ).toPandas()
-    a = np.stack(cd["jvm"].to_numpy())
-    b = np.stack(cd["pdu"].to_numpy())
-    # summation order differs (fold vs matmul) -> allow float slack; the
-    # argmax / probe ordering both paths feed is identical on this data
-    assert np.allclose(a, b, rtol=1e-12, atol=1e-12)
-    assert (a.argmax(axis=1) == b.argmax(axis=1)).all()
+
+def test_lsh_probe_keys_wrap_bit63():
+    """At 64 planes a probe key that flips bit 63 is the signed int64
+    `_pack_signature` gives the corpus row (s - 2**63 for s >= 0), and
+    every key lies in the int64 range."""
+    from proj_4_spark.functions.similarity import (_hyperplanes,
+                                                   _lsh_probe_map,
+                                                   _lsh_signature)
+
+    planes = _hyperplanes(64, 64, seed=42)
+    Q = np.random.Generator(np.random.PCG64(4)).standard_normal((20, 64))
+    sigs = [int(s) for s in _lsh_signature(Q, planes)]
+    assert any(s >= 0 for s in sigs) and any(s < 0 for s in sigs)
+    keys = _lsh_probe_map(Q, planes, multiprobe=1)
+    assert all(-2**63 <= key < 2**63 for key in keys)
+    for qi, s in enumerate(sigs):
+        flipped = s - 2**63 if s >= 0 else s + 2**63
+        assert qi in keys[flipped], (qi, s)
+        assert qi in keys[s]
+
+
+def test_lsh_bit63_neighbour_found(spark, tmp_path):
+    """End to end at 64 planes: a corpus vector that differs from the
+    query only in the sign of plane 63 is found with multiprobe=1, by
+    both the in-query and the prebuilt LSH probe."""
+    from proj_4_spark.functions.ann_index import (build_lsh_index,
+                                                  lsh_topk_prebuilt)
+    from proj_4_spark.functions.similarity import (_hyperplanes,
+                                                   _lsh_signature,
+                                                   lsh_bucket_topk)
+
+    dim, n_planes = 64, 64
+    planes = _hyperplanes(dim, n_planes, seed=42)
+    p63 = planes[63]
+    rng = np.random.Generator(np.random.PCG64(21))
+    base = rng.standard_normal(dim)
+    base -= (base @ p63) / (p63 @ p63) * p63   # on plane 63
+    q = (base - 1e-4 * p63).astype(np.float32)  # bit 63 clear
+    w = (base + 1e-4 * p63).astype(np.float32)  # its bit-63 neighbour
+    vecs = np.vstack([q, w, rng.standard_normal((30, dim))
+                      .astype(np.float32)])
+    sq, sw = (int(s) for s in _lsh_signature(vecs[:2].astype(np.float64),
+                                              planes))
+    assert sq >= 0 and sw == sq - 2**63
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    queries = emb.where("vec_id = 0").selectExpr("vec_id as q_id",
+                                                 "embedding")
+    live = lsh_bucket_topk(emb, queries, k=3, n_planes=n_planes, dim=dim,
+                           multiprobe=1).collect()
+    assert 1 in {r["vec_id"] for r in live}
+    path = str(tmp_path / "lsh64")
+    build_lsh_index(emb, path, dim=dim, n_planes=n_planes)
+    pre = lsh_topk_prebuilt(spark, path, queries, k=3,
+                            multiprobe=1).collect()
+    assert sorted(map(tuple, pre)) == sorted(map(tuple, live))
+
+
+def test_ragged_vector_batch_rejected():
+    """A batch whose flat length happens to divide its row count is
+    still ragged: it raises, naming the widths, instead of being
+    reshaped into wrong vectors."""
+    import pyarrow as pa
+
+    from proj_4_spark.functions.similarity import _list_matrix_f64
+
+    ragged = pa.array([[1, 2], [3, 4, 5, 6]], type=pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match=r"widths \[2, 4\]"):
+        _list_matrix_f64(ragged)
+    ok = pa.array([[1, 2], [3, 4]], type=pa.list_(pa.float32()))
+    assert (_list_matrix_f64(ok) == [[1, 2], [3, 4]]).all()
+    assert (_list_matrix_f64(ragged.slice(1)) == [[3, 4, 5, 6]]).all()
+
+
+def test_ann_ids_must_be_integral(spark, tmp_path):
+    """Non-integral id columns are rejected at plan time, naming the
+    column, by every ANN operator and index build (ids are carried as
+    long)."""
+    from proj_4_spark.functions.ann_index import (build_ivf_index,
+                                                  build_lsh_index,
+                                                  ivf_topk_prebuilt,
+                                                  lsh_topk_prebuilt)
+    from proj_4_spark.functions.similarity import (cosine_topk, ivf_topk,
+                                                   lsh_bucket_topk)
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(40)
+    q = emb.where("vec_id < 3").selectExpr("vec_id as q_id", "embedding")
+    s_emb = emb.selectExpr("cast(vec_id as string) as vec_id", "embedding")
+    s_q = q.selectExpr("cast(q_id as string) as q_id", "embedding")
+    calls = {
+        "cosine": lambda e, qq: cosine_topk(e, qq),
+        "lsh": lambda e, qq: lsh_bucket_topk(e, qq, n_planes=4, dim=64),
+        "ivf": lambda e, qq: ivf_topk(e, qq, n_centroids=4, dim=64),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="id column 'vec_id' is string"):
+            call(s_emb, q)
+        with pytest.raises(ValueError, match="id column 'q_id' is string"):
+            call(emb, s_q)
+    lp, ip = str(tmp_path / "lsh"), str(tmp_path / "ivf")
+    with pytest.raises(ValueError, match="id column 'vec_id'"):
+        build_lsh_index(s_emb, lp, dim=64, n_planes=2)
+    build_lsh_index(emb, lp, dim=64, n_planes=2)
+    build_ivf_index(emb, ip, dim=64, n_centroids=2)
+    with pytest.raises(ValueError, match="id column 'q_id'"):
+        lsh_topk_prebuilt(spark, lp, s_q)
+    with pytest.raises(ValueError, match="id column 'q_id'"):
+        ivf_topk_prebuilt(spark, ip, s_q)
 
 
 def test_ann_large_dim_plan_stays_small(spark):
     """At production widths (dim=768, 64 planes) the plan must NOT embed
-    the n_planes x dim literal matrix — the pandas path keeps the
+    the n_planes x dim literal matrix — the Arrow kernel path keeps the
     Catalyst tree O(1) in the matrix size, and the query still runs."""
     import pandas as pd
 
-    from proj_4_spark.functions import similarity as S
     from proj_4_spark.functions.similarity import lsh_bucket_topk
 
     dim, n_planes, n = 768, 64, 200
-    assert n_planes * dim > S._JVM_EXPR_MAX_TERMS  # pandas path engages
     rng = np.random.Generator(np.random.PCG64(3))
     pdf = pd.DataFrame({
         "vec_id": np.arange(n),
@@ -306,8 +419,8 @@ def test_ann_large_dim_plan_stays_small(spark):
     topk = lsh_bucket_topk(emb, queries, k=5, n_planes=n_planes, dim=dim,
                            multiprobe=1)
     plan = topk._jdf.queryExecution().optimizedPlan().toString()
-    # the literal-matrix path would put >= n_planes*dim = 49k float
-    # literals in the plan; the pandas path keeps it to the UDF reference
+    # a literal-matrix plan would hold >= n_planes*dim = 49k float
+    # literals; the Arrow pass keeps the matrix in its closure
     assert len(plan) < 50_000, len(plan)
     assert plan.count("0.") < 200, plan.count("0.")
 

@@ -1,6 +1,8 @@
 """Production-width ANN bench (dim=768, 64 planes / 64 IVF centroids):
-the r3 pandas-matmul path vs what the r2 literal-expression path would
-have put in the plan.  Prints one JSON line for BENCH/BASELINE.md."""
+throughput of the sequential-order Arrow kernels behind signature_col /
+centroid_dots_col, and the plan size they keep (the matrices live in
+the UDF closure, not in the plan).  Prints one JSON line for
+BENCH/BASELINE.md."""
 import json
 import sys
 import time
@@ -41,20 +43,17 @@ emb.count()
 from proj_4_spark.functions import similarity as S
 
 planes = S._hyperplanes(DIM, N_PLANES, 42)
-rng = np.random.Generator(np.random.PCG64(42))
-cents = rng.standard_normal((N_CENTS, DIM))
-cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+cents = S._ivf_centroids(DIM, N_CENTS, 42)
 
 out = {"dim": DIM, "n_planes": N_PLANES, "n_centroids": N_CENTS, "rows": N}
 
-# plan size: pandas path keeps the Catalyst tree O(1) in the matrix
+# plan size: the Arrow kernel keeps the Catalyst tree O(1) in the
+# matrix (a literal-expression plan at this width would need
+# n_planes*dim = 49k float literals before codegen even starts)
 sig_df = emb.select(S.signature_col(F.col("embedding"), planes).alias("b"))
 plan = sig_df._jdf.queryExecution().optimizedPlan().toString()
 out["plan_chars_pandas_path"] = len(plan)
 out["plan_embeds_matrix"] = plan.count("0.") > 500
-# (the JVM literal path at this width would need n_planes*dim = 49k
-#  float literals before codegen even starts; gated off by
-#  _JVM_EXPR_MAX_TERMS=4096)
 
 sig_best = None
 for _ in range(3):
