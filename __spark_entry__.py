@@ -1290,25 +1290,26 @@ def _knn_karney_fixture_path() -> str:
                              FX.knn_karney_expected_table)
 
 
-def _knn_res(sf_dir: str, base: int = 4, base_rows: int = 100_000) -> int:
-    """Scale-adaptive kNN cell resolution (guide §2: partitioning must
-    not be a constant tuned for one scale).  res=4 was sized for the
-    sf0.1 density (100k points); at sf1 the same cells hold ~10x the
-    points, so ring-1 candidate generation exploded to ~170M
-    (point, query) Karney evaluations and the query ran for minutes.
-    Each +1 of res quarters the cell area; holding rows-per-cell
-    roughly constant keeps per-query candidates flat as the corpus
-    grows.  At the driver's correctness SFs (<= 100k events) this
-    returns exactly r7's res=4, and the ring-guarantee machinery makes
-    the RESULT invariant in res at any scale (certified top-k or brute
-    fallback; parity re-verified at sf1).  Footer-only row count — no
-    Spark job."""
-    import math
+def _knn_query(spark, sf_dir, per_m: float, name: str, **metric):
+    """The driver's kNN setup: every event a point, every 211th a
+    query, k=5 within 3 rings; `dist_m` integerized at `per_m` units
+    per meter as `name`.  knn_join sizes its cells from the events
+    footers (scale.knn_res)."""
+    from pyspark.sql import functions as F
 
-    n = _parquet_footer_rows(f"{sf_dir}/events.parquet")
-    if n <= base_rows:
-        return base
-    return min(base + round(math.log(n / base_rows, 4)), 9)
+    from proj_4_spark.spatial.knn import knn_join
+
+    pts = _geo_points(spark, sf_dir).select(
+        F.col("event_id").cast("string").alias("doc_id"),
+        F.lit(0).alias("span_offset"), "lon", "lat",
+    )
+    queries = _geo_points(spark, sf_dir).where("event_id % 211 = 0").select(
+        F.col("event_id").cast("string").alias("q_id"), "lon", "lat"
+    )
+    out = knn_join(pts, queries, k=5, max_ring=3, **metric)
+    return out.select(
+        "q_id", "doc_id", "rank", _i(F.col("dist_m"), per_m).alias(name)
+    )
 
 
 def _q_knn(spark, sf_dir):
@@ -1317,22 +1318,7 @@ def _q_knn(spark, sf_dir):
     brute-force all-pairs fixture (same vectorized kernel, no
     cells/rings/Spark) and must reproduce ranks AND mm-integerized
     distances."""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.spatial.knn import knn_join
-
-    pts = _geo_points(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("span_offset"), "lon", "lat",
-    )
-    queries = _geo_points(spark, sf_dir).where("event_id % 211 = 0").select(
-        F.col("event_id").cast("string").alias("q_id"), "lon", "lat"
-    )
-    out = knn_join(pts, queries, k=5, res=_knn_res(sf_dir),
-                   ring=1, max_ring=3)
-    return out.select(
-        "q_id", "doc_id", "rank", _i(F.col("dist_m"), 1000).alias("dist_mm")
-    )
+    return _knn_query(spark, sf_dir, 1000, "dist_mm")
 
 
 def _q_knn_haversine(spark, sf_dir):
@@ -1340,22 +1326,7 @@ def _q_knn_haversine(spark, sf_dir):
     tie-breaks) with the SQL-expressible haversine metric, so DuckDB
     brute-force recomputes the exact result set (value-level check of
     the join; the Karney entry keeps the production metric)."""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.spatial.knn import knn_join
-
-    pts = _geo_points(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("span_offset"), "lon", "lat",
-    )
-    queries = _geo_points(spark, sf_dir).where("event_id % 211 = 0").select(
-        F.col("event_id").cast("string").alias("q_id"), "lon", "lat"
-    )
-    out = knn_join(pts, queries, k=5, res=_knn_res(sf_dir),
-                   ring=1, max_ring=3, metric="haversine")
-    return out.select(
-        "q_id", "doc_id", "rank", _i(F.col("dist_m"), 1000).alias("dist_mm")
-    )
+    return _knn_query(spark, sf_dir, 1000, "dist_mm", metric="haversine")
 
 
 def _q_knn_karney_sphere(spark, sf_dir):
@@ -1366,23 +1337,8 @@ def _q_knn_karney_sphere(spark, sf_dir):
     not a twin formula.  cm integerization absorbs the asin-vs-atan2
     formulation ulps.  (The f!=0 ellipsoidal path is pinned by geodtest
     20/20 and brute-force parity in pytest.)"""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.spatial.knn import knn_join
-
-    pts = _geo_points(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("span_offset"), "lon", "lat",
-    )
-    queries = _geo_points(spark, sf_dir).where("event_id % 211 = 0").select(
-        F.col("event_id").cast("string").alias("q_id"), "lon", "lat"
-    )
-    out = knn_join(pts, queries, k=5, res=_knn_res(sf_dir),
-                   ring=1, max_ring=3, metric="karney", a=6378137.0,
-                   f=0.0)
-    return out.select(
-        "q_id", "doc_id", "rank", _i(F.col("dist_m"), 100).alias("dist_cm")
-    )
+    return _knn_query(spark, sf_dir, 100, "dist_cm", metric="karney",
+                      a=6378137.0, f=0.0)
 
 
 def _q_dedup_exact(spark, sf_dir):
@@ -1400,48 +1356,19 @@ def _q_dedup_exact(spark, sf_dir):
     )
 
 
-def _read_fanout(spark, path: str,
-                 min_bytes: int = 32 * 1024 * 1024):
-    """Parquet read with a conditional fan-out: the fixture tables are
-    ONE parquet row group each, which Spark cannot split — any per-row
-    Python stage (minhash shingles, simhash, language-ID, text stats,
-    the ANN corpus pass) would run on a single task no matter how many
-    cores exist (guide §2.5: one huge unsplittable file -> repartition
-    right after the read).  The round-robin repartition costs one
-    shuffle of the payload and buys full-cluster parallelism for the
-    Arrow batches; the conditions make it a no-op for inputs that
-    already arrive well-partitioned (at 100 TB the scan has thousands
-    of splits and nothing moves) and for SMALL single-file inputs,
-    where the one-task pass is cheaper than the shuffle it would buy
-    (measured at sf1: the 5 MB embeddings corpus pays ~0.2 s for a
-    fan-out that saves ~0.2 s; at sf100 the 500 MB single row group
-    serializes an 8 s pass onto one core).  `min_bytes` is the
-    worth-it floor, set per call site by the per-byte cost of the
-    downstream work (document shingling is ~10x costlier per byte than
-    the ANN dot pass, so the docs sites fan out sooner)."""
-    df = spark.read.parquet(path)
-    target = spark.sparkContext.defaultParallelism
-    if (_parquet_bytes(path) >= min_bytes
-            and df.rdd.getNumPartitions() < target):
-        df = df.repartition(target)
-    return df
-
-
-def _read_docs_fanout(spark, sf_dir: str):
-    return _read_fanout(spark, f"{sf_dir}/documents.parquet",
-                        min_bytes=4 * 1024 * 1024)
-
-
 def _q_text_stats(spark, sf_dir):
     from pyspark.sql import functions as F
 
+    from proj_4_spark import scale
     from proj_4_spark.functions.text import (
         fingerprint_col,
         quality_score_col,
         token_count_col,
     )
 
-    docs = _read_docs_fanout(spark, sf_dir)
+    # a Column-function pass with no library operator: fan out here
+    docs = scale.fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
+                         4 << 20)
     return docs.select(
         "doc_id",
         token_count_col(F.col("text")).alias("n_tokens"),
@@ -1453,9 +1380,12 @@ def _q_text_stats(spark, sf_dir):
 def _q_lang_id(spark, sf_dir):
     from pyspark.sql import functions as F
 
+    from proj_4_spark import scale
     from proj_4_spark.functions.text import lang_id_col
 
-    docs = _read_docs_fanout(spark, sf_dir)
+    # a Column-function pass with no library operator: fan out here
+    docs = scale.fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
+                         4 << 20)
     return (
         docs.select(lang_id_col(F.col("text")).alias("pred_lang"))
         .groupBy("pred_lang").agg(F.count("*").alias("n"))
@@ -1468,13 +1398,10 @@ def _q_ann_cosine(spark, sf_dir):
     from proj_4_spark.functions.similarity import cosine_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # corpus side fans out (single-row-group file, guide §2.5);
-    # the query side keeps the pruned scan for its tiny collect
-    corpus = _read_fanout(spark, f"{sf_dir}/embeddings.parquet")
     queries = emb.where("vec_id < 20").selectExpr(
         "vec_id as q_id", "embedding"
     )
-    topk = cosine_topk(corpus, queries, k=5, raw_cosine=True)
+    topk = cosine_topk(emb, queries, k=5, raw_cosine=True)
     return topk.select(
         "q_id", "vec_id", "rank", _i(F.col("cosine"), 1000000).alias("cosine")
     )
@@ -1491,11 +1418,8 @@ def _q_ann_ivf(spark, sf_dir):
     from proj_4_spark.functions.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # corpus side fans out (single-row-group file, guide §2.5);
-    # the query side keeps the pruned scan for its tiny collect
-    corpus = _read_fanout(spark, f"{sf_dir}/embeddings.parquet")
     queries = emb.where("vec_id < 20").selectExpr("vec_id as q_id", "embedding")
-    topk = ivf_topk(corpus, queries, k=5, n_centroids=16,
+    topk = ivf_topk(emb, queries, k=5, n_centroids=16,
                     n_probe=6, dim=64, raw_cosine=True)
     return topk.select("q_id", "vec_id", "rank",
                        _i(F.col("cosine"), 1000000).alias("cosine"))
@@ -1742,7 +1666,7 @@ def _q_minhash_pairs(spark, sf_dir):
     """MinHash-LSH near-dup candidates; value-verified against a DuckDB
     oracle that recomputes the full FNV-shingle -> (a*x+b) mod p
     signatures and band-joins on raw band values."""
-    docs = _read_docs_fanout(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return __import__(
         "proj_4_spark.functions.dedup", fromlist=["minhash_lsh_pairs"]
     ).minhash_lsh_pairs(docs, "text", "doc_id", num_perm=32, bands=8)
@@ -1759,11 +1683,8 @@ def _q_ann_lsh(spark, sf_dir):
     from proj_4_spark.functions.similarity import lsh_bucket_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # corpus side fans out (single-row-group file, guide §2.5);
-    # the query side keeps the pruned scan for its tiny collect
-    corpus = _read_fanout(spark, f"{sf_dir}/embeddings.parquet")
     queries = emb.where("vec_id < 20").selectExpr("vec_id as q_id", "embedding")
-    topk = lsh_bucket_topk(corpus, queries, k=5, n_planes=8,
+    topk = lsh_bucket_topk(emb, queries, k=5, n_planes=8,
                            dim=64, multiprobe=2,
                            raw_cosine=True)
     return topk.select("q_id", "vec_id", "rank",
@@ -1778,65 +1699,29 @@ def _ann_index_path(kind: str, sf_dir: str) -> str:
                         "benchdata", "ann_index", f"{kind}_{tag}")
 
 
-def _parquet_footer_rows(path: str) -> int:
-    """Row count from parquet footers only — no Spark job (r8: the
-    per-invocation `emb.count()` staleness check was a full scheduler
-    round trip inside the timed probe path).  Matches Spark's count
-    exactly (both read the same footer num_rows)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = ([path] if os.path.isfile(path)
-             else sorted(glob.glob(os.path.join(path, "*.parquet"))))
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def _parquet_bytes(path: str) -> int:
-    """Total on-disk bytes of a parquet file/dir — a content
-    fingerprint that (unlike a bare row count) changes whenever the
-    source data is regenerated with different values."""
-    import glob
-
-    files = ([path] if os.path.isfile(path)
-             else sorted(glob.glob(os.path.join(path, "*.parquet"))))
-    return sum(os.path.getsize(f) for f in files)
-
-
 def _ensure_ann_index(spark, sf_dir: str, kind: str) -> str:
     """Build-once semantics for the prebuilt ANN queries: reuse the
-    cached index when its sidecar params + corpus row count still match
-    the sf dir, else (re)build.  The staleness check is one footer-only
-    parquet count — cheap at any sf, and driver-local (no Spark job)."""
+    cached index while its sidecar params, row count and source bytes
+    still match the sf dir's embeddings footers (no Spark job), else
+    (re)build."""
+    from proj_4_spark import scale
     from proj_4_spark.functions import ann_index
 
     path = _ann_index_path(kind, sf_dir)
-    # build-side fan-out: the tag UDF runs BEFORE the partitionBy
-    # shuffle, so a single-row-group source would serialize the whole
-    # index build onto one task (guide §2.5)
-    emb = _read_fanout(spark, f"{sf_dir}/embeddings.parquet")
-    want = ({"kind": "lsh", "dim": 64, "n_planes": 8, "seed": 42}
-            if kind == "lsh"
-            else {"kind": "ivf", "dim": 64, "n_centroids": 16, "seed": 42})
-    src = f"{sf_dir}/embeddings.parquet"
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    rows, size, _ = scale.parquet_stats(emb)
+    params = {"dim": 64, "seed": 42,
+              **({"n_planes": 8} if kind == "lsh" else {"n_centroids": 16})}
+    want = {"kind": kind, **params, "corpus_rows": rows, "corpus_bytes": size}
     try:
         meta = ann_index.read_meta(path)
-        if (all(meta.get(k) == v for k, v in want.items())
-                and meta.get("corpus_rows") == _parquet_footer_rows(src)
-                and meta.get("corpus_bytes") == _parquet_bytes(src)):
+        if all(meta.get(k) == v for k, v in want.items()):
             return path
     except ValueError:
         pass
-    if kind == "lsh":
-        meta = ann_index.build_lsh_index(emb, path, dim=64, n_planes=8,
-                                         seed=42)
-    else:
-        meta = ann_index.build_ivf_index(emb, path, dim=64,
-                                         n_centroids=16, seed=42)
-    # source-content fingerprint for the reuse check above (r8: a bare
-    # row count cannot see regenerated-same-size source data)
-    meta["corpus_bytes"] = _parquet_bytes(src)
-    ann_index._write_meta(path, meta)
+    build = (ann_index.build_lsh_index if kind == "lsh"
+             else ann_index.build_ivf_index)
+    build(emb, path, **params)
     return path
 
 
@@ -1887,7 +1772,7 @@ def _q_ngram_jaccard(spark, sf_dir):
 
     from proj_4_spark.functions.dedup import ngram_jaccard_pairs
 
-    docs = _read_docs_fanout(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5,
                               num_perm=32, bands=8)
     return out.select("id_a", "id_b", _i(F.col("jaccard"), 10000).alias("jac"))
@@ -1896,7 +1781,7 @@ def _q_ngram_jaccard(spark, sf_dir):
 def _q_simhash(spark, sf_dir):
     from proj_4_spark.functions.dedup import simhash_col
 
-    docs = _read_docs_fanout(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return simhash_col(docs, "text", "doc_id").select("doc_id", "simhash")
 
 

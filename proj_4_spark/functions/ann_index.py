@@ -32,8 +32,11 @@ integral (byte, short, int or long); the index stores them as long.
 At cluster scale `path` is a DFS URI and the partition directories are
 the inverted file; everything here is plain `spark.read/write.parquet`,
 so nothing changes beyond the path scheme.  Index lifecycle (rebuilds
-after corpus updates) is the caller's job — `meta["corpus_rows"]` is
-recorded to make staleness checks cheap.
+after corpus updates) is the caller's job: the sidecar records
+`corpus_rows` (the index's footer row count) and `corpus_bytes` (the
+source's parquet bytes; both 0 where pyarrow cannot open the files),
+so a staleness check is one comparison with `scale.parquet_stats` of
+the source, no Spark job.
 
 Reference parity: the reference engine (kbevers/proj.4) has no ANN
 surface; these operators extend the engine for LLM-training-data
@@ -60,6 +63,7 @@ from proj_4_spark.functions.similarity import (
     _lsh_signature,
     _nearest_centroid,
 )
+from proj_4_spark.scale import parquet_stats
 
 META_NAME = "_ann_meta.json"
 
@@ -102,9 +106,11 @@ def _build_index(emb_df, path: str, tag, meta: dict, id_col: str,
     # additionally bound file sizes via spark.sql.files.maxRecordsPerFile
     indexed.repartition(key_col).write.mode("overwrite") \
         .partitionBy(key_col).parquet(path)
-    # footer-only count over the just-written files: cheap staleness
-    # fingerprint for callers that cache the index
-    meta["corpus_rows"] = emb_df.sparkSession.read.parquet(path).count()
+    # staleness fingerprint from footers, no Spark job: the written
+    # index's rows and the source's bytes
+    spark = emb_df.sparkSession
+    meta["corpus_rows"] = parquet_stats(_read_index(spark, path, key_col))[0]
+    meta["corpus_bytes"] = parquet_stats(emb_df)[1]
     _write_meta(path, meta)
     return meta
 
@@ -153,8 +159,6 @@ def _read_index(spark, path: str, key_col: str):
     per open for the 256-bucket LSH index at sf1.  On a DFS URI the
     default threshold is left alone (remote listing does benefit from
     the job)."""
-    import os
-
     schema = f"vec_id bigint, v array<float>, v_norm double, {key_col} bigint"
     reader = spark.read.schema(schema)
     if not os.path.isdir(path):

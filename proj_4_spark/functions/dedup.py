@@ -19,6 +19,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from proj_4_spark.scale import fan_out
+
+# fan-out floor of the per-document Python passes: shingling costs ~10x
+# more per byte than the ANN dot pass (32 MiB), so it pays off sooner
+_FAN_OUT_BYTES = 4 << 20
+
 # 31-bit universe keeps (a*x + b) < 2^63: exact in int64, no bigint path
 _MERSENNE = (1 << 31) - 1
 
@@ -160,8 +166,9 @@ def minhash_signatures(df, text_col: str = "text", id_col: str = "doc_id",
             out[i] = ((arow * sh[:, None] + brow) % _MERSENNE).min(axis=0)
         return pd.Series(out.tolist())
 
-    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")) \
-             .withColumn("sig", _sig(F.col("text")))
+    return fan_out(df, _FAN_OUT_BYTES).select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).withColumn("sig", _sig(F.col("text")))
 
 
 def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
@@ -234,8 +241,9 @@ def simhash_col(df, text_col: str = "text", id_col: str = "doc_id", k: int = 5):
             word |= (votes > 0).astype(np.uint64) << np.uint64(j)
         return pd.Series(word.astype(np.int64))
 
-    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")) \
-             .withColumn("simhash", _sim(F.col("text")))
+    return fan_out(df, _FAN_OUT_BYTES).select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).withColumn("simhash", _sim(F.col("text")))
 
 
 def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",

@@ -47,6 +47,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # noqa: F401 — pandas_udf resolves `pd.Series` hints
 
+from proj_4_spark.scale import fan_out
+
 # --- exact sequential NumPy kernels ----------------------------------------
 
 
@@ -168,11 +170,12 @@ def _require_integral_id(df, name: str) -> None:
 
 
 def _corpus(emb_df, id_col: str, vec_col: str):
-    """The corpus frame (vec_id, v) after the id check."""
+    """The corpus frame (vec_id, v) after the id check, fanned out when
+    its input is one large unsplittable file (scale.fan_out)."""
     from pyspark.sql import functions as F
 
-    corpus = emb_df.select(F.col(id_col).alias("vec_id"),
-                           F.col(vec_col).alias("v"))
+    corpus = fan_out(emb_df, 32 << 20).select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     _require_integral_id(corpus, id_col)
     return corpus
 
@@ -269,6 +272,10 @@ def _emit_candidates(vec_ids, keys, V, norms, probe_map: dict,
         if qidx is None:
             continue
         sel = np.nonzero(keys == key)[0]
+        zero = sel[norms[sel] == 0]
+        if len(zero):
+            raise ValueError(f"corpus vector vec_id={int(vec_ids[zero[0]])} "
+                             "has zero norm: its cosine is undefined")
         dots = _seq_dots(V[sel], Q[qidx])  # (n_sel, n_q)
         n_sel, n_q = dots.shape
         out_vid.append(np.repeat(vec_ids[sel], n_q))
@@ -290,10 +297,16 @@ def _candidate_topk(corpus, key, probe_map: dict, Q: np.ndarray, q_ids,
     """The corpus candidate pass, then the shared ranking tail: cosine
     = dot / (v_norm * q_norm) with the q-norm as a plan-time literal,
     q_id looked up from the collected batch, then the single-Exchange
-    window top-k."""
+    window top-k.  A zero-norm query raises here (plan time) and a
+    zero-norm corpus candidate in the pass, each naming its id."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    q_norms = _seq_norms(Q)
+    zero = np.nonzero(q_norms == 0)[0]
+    if len(zero):
+        raise ValueError(f"query vector q_id={q_ids[zero[0]]} has zero "
+                         "norm: its cosine is undefined")
     cand = corpus.mapInArrow(_candidates_map_arrow(probe_map, Q, key),
                              _CAND_SCHEMA)
     if len(q_ids) == 0:
@@ -301,7 +314,7 @@ def _candidate_topk(corpus, key, probe_map: dict, Q: np.ndarray, q_ids,
         qn_arr = F.expr("CAST(array() AS ARRAY<DOUBLE>)")
     else:
         qid_arr = F.array(*[F.lit(int(v)).cast("long") for v in q_ids])
-        qn_arr = F.array(*[F.lit(float(v)) for v in _seq_norms(Q)])
+        qn_arr = F.array(*[F.lit(float(v)) for v in q_norms])
     cand = cand.select(
         F.element_at(qid_arr, F.col("qi") + 1).alias("q_id"),
         "vec_id",

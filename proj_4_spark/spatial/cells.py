@@ -49,20 +49,33 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"(cast({res} as bigint) * {1 << RES_SHIFT} + {iy} * {1 << IY_SHIFT} + {ix})"
 
 
-def cell_col(lon_col, lat_col, res: int):
-    """JVM-side Column expression (stays inside whole-stage codegen)."""
+def index_cols(lon_col, lat_col, res: int):
+    """JVM-side clamped grid indexes (ix, iy) of lon/lat degree columns
+    at `res` (the Column form of cell_np's ix/iy)."""
     from pyspark.sql import functions as F
 
     n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((lon_col + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((lat_col + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
+
+    def idx(col, lo, span):
+        return F.least(
+            F.greatest(F.floor((col + lo) / span * n).cast("long"), F.lit(0)),
+            F.lit(n - 1),
+        )
+
+    return idx(lon_col, 180.0, 360.0), idx(lat_col, 90.0, 180.0)
+
+
+def pack_col(res: int, iy, ix):
+    """JVM-side cell id (res << 58) + (iy << 29) + ix of index columns."""
+    from pyspark.sql import functions as F
+
     return (F.lit(res).cast("long") * (1 << RES_SHIFT)) + (iy * (1 << IY_SHIFT)) + ix
+
+
+def cell_col(lon_col, lat_col, res: int):
+    """JVM-side Column expression (stays inside whole-stage codegen)."""
+    ix, iy = index_cols(lon_col, lat_col, res)
+    return pack_col(res, iy, ix)
 
 
 def decode_np(cell):
@@ -119,10 +132,7 @@ def neighbors_col(cell_col_, res: int, ring: int = 1):
         for dx in range(-ring, ring + 1):
             iy2 = F.least(F.greatest(iy + dy, F.lit(0)), F.lit(n - 1))
             ix2 = F.pmod(ix + dx, F.lit(n))
-            cells.append(
-                (F.lit(res).cast("long") * (1 << RES_SHIFT))
-                + (iy2 * (1 << IY_SHIFT)) + ix2
-            )
+            cells.append(pack_col(res, iy2, ix2))
     return F.array_distinct(F.array(*cells))
 
 

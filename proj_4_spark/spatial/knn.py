@@ -24,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from proj_4_spark import scale
 from proj_4_spark.spatial import cells
 
 # MINIMUM meridional meters per degree (at the equator, GRS80): the guard
@@ -76,12 +77,26 @@ def _dist_udf(a: float, f: float, metric: str = "karney"):
     return geodesic_m
 
 
+def _ranked(cand, geodesic_m, k: int):
+    """Candidate (q, p) pairs -> distance UDF -> per-query window ->
+    rank <= k, ties broken by (doc_id, span_offset)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("q_id").orderBy("dist_m", "doc_id", "span_offset")
+    return (
+        cand.withColumn("dist_m", geodesic_m(F.col("q_lon"), F.col("q_lat"),
+                                             F.col("p_lon"), F.col("p_lat")))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "q_lon", "q_lat", "doc_id", "span_offset", "dist_m", "rank")
+    )
+
+
 def knn_join(
     points_df,
     queries_df,
     k: int = 10,
-    res: int = 6,
-    ring: int = 1,
     max_ring: int = 4,
     a: float = 6378137.0,
     f: float = 1 / 298.257222101,
@@ -93,6 +108,11 @@ def knn_join(
     """Returns (q_id, doc_id, span_offset, dist_m, rank) with rank<=k.
 
     points_df: (doc_id, span_offset, lon, lat); queries_df: (q_id, lon, lat).
+    The cell resolution comes from the parquet footer row count of the
+    files `points_df` scans (scale.knn_res), not from its rows after
+    filters, limits or joins: a small subset of a large file gets the
+    large file's (smaller) cells.  Rings widen from 1 up to `max_ring`,
+    then the remaining queries are brute-forced.
     metric: "karney" (exact ellipsoidal) or "haversine" (mean sphere —
     the SQL-expressible twin used by the DuckDB correctness gate).
     n_salt > 1 defuses hot-cell skew (a metro cell holding most of the
@@ -102,12 +122,12 @@ def knn_join(
     one.  The per-query ranking window is salt-agnostic, so the result
     is IDENTICAL to n_salt=1 (pinned in tests).
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     did, soff, plon, plat = point_cols
     qid, qlon, qlat = query_cols
     geodesic_m = _dist_udf(a, f, metric)
+    res = scale.knn_res(scale.parquet_stats(points_df)[0])
 
     pts = points_df.select(
         F.col(did).alias("doc_id"),
@@ -130,8 +150,7 @@ def knn_join(
     results = None
     cell_h_deg = cells.cell_size_deg(res)[1]
 
-    cur_ring = ring
-    while cur_ring <= max_ring:
+    for cur_ring in range(1, max_ring + 1):
         q = remaining.withColumn(
             "cell",
             F.explode(
@@ -144,17 +163,7 @@ def knn_join(
             q = q.withColumn(
                 "salt",
                 F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
-        cand = q.join(pts, join_keys, "inner")
-        cand = cand.withColumn(
-            "dist_m",
-            geodesic_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
-        )
-        w = Window.partitionBy("q_id").orderBy("dist_m", "doc_id", "span_offset")
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "q_lon", "q_lat", "doc_id", "span_offset", "dist_m", "rank")
-        )
+        topk = _ranked(q.join(pts, join_keys, "inner"), geodesic_m, k)
         # r8: materialize each round's top-k ONCE (it is tiny: <= k rows
         # per query).  Without the checkpoint the round's candidate join
         # + distance UDF + window re-executed from scratch for every
@@ -189,21 +198,11 @@ def knn_join(
                                    "left_anti").localCheckpoint(eager=True)
         if remaining.isEmpty():
             break
-        cur_ring += 1
     else:
         # brute force the stragglers (polar / sparse regions)
-        bf = remaining.crossJoin(
-            pts.select("doc_id", "span_offset", "p_lon", "p_lat")
-        ).withColumn(
-            "dist_m",
-            geodesic_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")),
-        )
-        w = Window.partitionBy("q_id").orderBy("dist_m", "doc_id", "span_offset")
-        bf_top = (
-            bf.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "q_lon", "q_lat", "doc_id", "span_offset", "dist_m", "rank")
-        )
+        bf_top = _ranked(remaining.crossJoin(
+            pts.select("doc_id", "span_offset", "p_lon", "p_lat")),
+            geodesic_m, k)
         results = bf_top if results is None else results.unionByName(bf_top)
 
     return results.select("q_id", "doc_id", "span_offset", "dist_m", "rank")

@@ -116,27 +116,15 @@ def _zone_cells_col(res: int):
     (JVM-side: sequence over the iy/ix index ranges, no UDF)."""
     from pyspark.sql import functions as F
 
-    from proj_4_spark.spatial.cells import IY_SHIFT, RES_SHIFT
+    from proj_4_spark.spatial.cells import index_cols, pack_col
 
-    n = 1 << res
-    def idx(col, lo, span):
-        return F.least(
-            F.greatest(F.floor((col + lo) / span * n).cast("long"), F.lit(0)),
-            F.lit(n - 1),
-        )
-
-    ix0 = idx(F.col("min_lon"), 180.0, 360.0)
-    ix1 = idx(F.col("max_lon"), 180.0, 360.0)
-    iy0 = idx(F.col("min_lat"), 90.0, 180.0)
-    iy1 = idx(F.col("max_lat"), 90.0, 180.0)
+    ix0, iy0 = index_cols(F.col("min_lon"), F.col("min_lat"), res)
+    ix1, iy1 = index_cols(F.col("max_lon"), F.col("max_lat"), res)
     return F.flatten(
         F.transform(
             F.sequence(iy0, iy1),
             lambda iy: F.transform(
-                F.sequence(ix0, ix1),
-                lambda ix: (F.lit(res).cast("long") * (1 << RES_SHIFT))
-                + (iy * (1 << IY_SHIFT)) + ix,
-            ),
+                F.sequence(ix0, ix1), lambda ix: pack_col(res, iy, ix)),
         )
     )
 

@@ -829,3 +829,116 @@ def test_ann_index_meta_errors(spark, tmp_path):
     build_lsh_index(emb, path, dim=64, n_planes=4)
     with pytest.raises(ValueError, match="not ivf"):
         ivf_topk_prebuilt(spark, path, q)
+
+
+# ---------------------------------------------------------------------------
+# scale policies and zero-norm vectors
+# ---------------------------------------------------------------------------
+
+
+def test_fan_out_single_row_group_over_floor(spark, tmp_path):
+    """A single-row-group parquet at or over the byte floor fans out to
+    defaultParallelism; the same file under a higher floor, and a file
+    with enough row groups, come back unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from proj_4_spark.scale import fan_out, parquet_stats
+
+    target = spark.sparkContext.defaultParallelism
+    t = pa.table({"i": np.arange(4000), "s": [f"row-{i}" for i in range(4000)]})
+    one, many = str(tmp_path / "one.parquet"), str(tmp_path / "many.parquet")
+    pq.write_table(t, one)
+    pq.write_table(t, many, row_group_size=4000 // target)
+    df = spark.read.parquet(one)
+    rows, size, groups = parquet_stats(df)
+    assert (rows, groups) == (4000, 1) and size > 0
+    fanned = fan_out(df, size)
+    assert fanned.rdd.getNumPartitions() == target
+    assert fan_out(df, size + 1) is df
+    multi = spark.read.parquet(many)
+    assert parquet_stats(multi)[2] >= target
+    assert fan_out(multi, 1) is multi
+
+
+def test_fan_out_many_files_reads_no_footer(spark, tmp_path, monkeypatch):
+    """An input of at least defaultParallelism files already splits that
+    far: fan_out returns it unchanged without opening a footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from proj_4_spark import scale
+
+    target = spark.sparkContext.defaultParallelism
+    for i in range(target):
+        pq.write_table(pa.table({"i": np.arange(10) + 10 * i}),
+                       str(tmp_path / f"part-{i}.parquet"))
+    df = spark.read.parquet(str(tmp_path))
+    assert len(df.inputFiles()) == target
+
+    def _no_footers(_):
+        raise AssertionError("footer read")
+
+    monkeypatch.setattr(scale, "parquet_stats", _no_footers)
+    assert scale.fan_out(df, 1) is df
+
+
+def test_build_lsh_index_meta_from_footers(spark, tmp_path, monkeypatch):
+    """The index build records the written index's footer row count and
+    the source's bytes, and launches no Spark job after its write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from proj_4_spark.functions.ann_index import build_lsh_index
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    after_write = []
+    write = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        write(self, *args, **kwargs)
+        after_write.append(last_job())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    meta = build_lsh_index(emb, str(tmp_path / "idx"), dim=64, n_planes=8)
+    assert len(after_write) == 1 and last_job() == after_write[0]
+    monkeypatch.undo()
+    assert meta["corpus_rows"] == emb.count()
+    assert meta["corpus_bytes"] > 0
+
+
+def test_ann_zero_norm_vectors_raise(spark, tmp_path):
+    """A zero-norm query raises at plan time naming its q_id; a
+    zero-norm corpus vector raises from the candidate pass naming its
+    vec_id (in-query and prebuilt), instead of Spark's DIVIDE_BY_ZERO
+    aborting the query."""
+    from proj_4_spark.functions.ann_index import (build_lsh_index,
+                                                  lsh_topk_prebuilt)
+    from proj_4_spark.functions.similarity import cosine_topk, ivf_topk
+
+    rng = np.random.Generator(np.random.PCG64(5))
+    vecs = rng.standard_normal((12, 8)).astype(np.float32)
+    vecs[7] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    nonzero = emb.where("vec_id != 7")
+    zero_q = emb.where("vec_id in (3, 7)").selectExpr("vec_id as q_id",
+                                                      "embedding")
+    for call in (lambda e, q: cosine_topk(e, q),
+                 lambda e, q: ivf_topk(e, q, n_centroids=2, n_probe=2,
+                                       dim=8)):
+        with pytest.raises(ValueError, match="q_id=7 has zero norm"):
+            call(nonzero, zero_q)
+    q = emb.where("vec_id = 3").selectExpr("vec_id as q_id", "embedding")
+    assert len(cosine_topk(nonzero, q, k=3).collect()) == 3
+    with pytest.raises(Exception, match="vec_id=7 has zero norm"):
+        cosine_topk(emb, q, k=3).collect()
+    path = str(tmp_path / "lsh0")
+    build_lsh_index(emb, path, dim=8, n_planes=2)
+    with pytest.raises(Exception, match="vec_id=7 has zero norm"):
+        lsh_topk_prebuilt(spark, path, q, k=3, multiprobe=2).collect()

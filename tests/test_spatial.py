@@ -17,6 +17,7 @@ from proj_4_spark.spatial.pip import pip_join
 from proj_4_spark.spatial.salting import salted_count
 
 N_DOCS = 1500
+TESTDATA = "/root/testdata"  # committed scale-factor dirs (TESTDATA.md)
 
 
 @pytest.fixture(scope="module")
@@ -199,7 +200,7 @@ def test_knn_matches_brute_force(spark, media_pts):
     qpath = FX.ensure_fixture("knn_queries.parquet", FX.knn_queries)
     queries = spark.read.parquet(qpath).limit(25)
     pts = media_pts.where("abs(lon) <= 180 and abs(lat) <= 85")
-    got = knn_join(pts, queries, k=5, res=4, ring=1, max_ring=3).toPandas()
+    got = knn_join(pts, queries, k=5, max_ring=3).toPandas()
     exp = knn_brute_force(pts, queries, k=5).toPandas()
     g = got.sort_values(["q_id", "rank"]).reset_index(drop=True)
     e = exp.sort_values(["q_id", "rank"]).reset_index(drop=True)
@@ -250,12 +251,109 @@ def test_knn_salted_equals_plain(spark):
     )
     queries = pts.where("doc_id % 211 = 0").selectExpr(
         "doc_id as q_id", "lon", "lat")
-    plain = knn_join(pts, queries, k=5, res=4, ring=1, max_ring=3,
+    plain = knn_join(pts, queries, k=5, max_ring=3,
                      metric="haversine").orderBy("q_id", "rank").toPandas()
-    salted = knn_join(pts, queries, k=5, res=4, ring=1, max_ring=3,
+    salted = knn_join(pts, queries, k=5, max_ring=3,
                       metric="haversine", n_salt=8
                       ).orderBy("q_id", "rank").toPandas()
     assert len(plain) == len(salted)
     for c in ("q_id", "doc_id", "rank"):
         assert (plain[c].to_numpy() == salted[c].to_numpy()).all(), c
     assert np.allclose(plain["dist_m"], salted["dist_m"], rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_knn_res_from_events_footers(spark, sf):
+    """The driver's kNN points (one per event) size the cell resolution
+    from the events footers: res 4 at every committed scale factor,
+    as the sizing rule gave when it lived in the driver."""
+    import __spark_entry__ as E
+
+    from proj_4_spark import scale
+
+    pts = E._geo_points(spark, f"{TESTDATA}/sf{sf}")
+    rows = scale.parquet_stats(pts)[0]
+    assert rows == pts.count()
+    assert scale.knn_res(rows) == 4
+
+
+def test_knn_res_rule_and_fileless_frames(spark, tmp_path):
+    """A frame without parquet input files reports zero rows and gets
+    the base resolution; the rule adds one level per 4x rows above
+    100k, capped at 9; a cached source still reports its footers."""
+    from proj_4_spark import scale
+
+    df = spark.createDataFrame([(0.0, 0.0)], "lon double, lat double")
+    assert scale.parquet_stats(df) == (0, 0, 0)
+    df.write.csv(str(tmp_path / "pts.csv"))
+    csv = spark.read.csv(str(tmp_path / "pts.csv"))
+    assert csv.inputFiles() and scale.parquet_stats(csv) == (0, 0, 0)
+    assert scale.knn_res(0) == 4
+    assert [scale.knn_res(n) for n in
+            (100_000, 400_000, 1_600_000, 10**12)] == [4, 5, 6, 9]
+    ev = spark.read.parquet(f"{TESTDATA}/sf0.01/events.parquet").cache()
+    try:
+        ev.count()
+        again = spark.read.parquet(f"{TESTDATA}/sf0.01/events.parquet")
+        assert scale.parquet_stats(again)[0] == ev.count()
+    finally:
+        ev.unpersist()
+
+
+def test_knn_filtered_subset_of_large_file(spark):
+    """The cell resolution follows the scanned file, not the filtered
+    rows: ~1k points kept out of the sf0.1 events (100k rows) get the
+    file's resolution, the ring rounds still certify most queries, and
+    the join matches brute force."""
+    import __spark_entry__ as E
+    from pyspark.sql import functions as F
+
+    from proj_4_spark import scale
+    from proj_4_spark.spatial.knn import HAVERSINE_R
+
+    geo = E._geo_points(spark, f"{TESTDATA}/sf0.1")
+    pts = geo.where("event_id % 100 = 0").select(
+        F.col("event_id").cast("string").alias("doc_id"),
+        F.lit(0).alias("span_offset"), "lon", "lat")
+    queries = geo.where("event_id % 1009 = 0").select(
+        F.col("event_id").cast("string").alias("q_id"), "lon", "lat")
+    res = scale.knn_res(scale.parquet_stats(pts)[0])
+    assert pts.count() <= 1000 and res == scale.knn_res(100_000)
+    k, max_ring = 5, 3
+    got = knn_join(pts, queries, k=k, max_ring=max_ring, metric="haversine"
+                   ).orderBy("q_id", "rank").toPandas()
+    exp = knn_brute_force(pts, queries, k=k, metric="haversine"
+                          ).orderBy("q_id", "rank").toPandas()
+    assert len(got) == len(exp) == k * queries.count()
+    assert (got["doc_id"] == exp["doc_id"]).all()
+    assert np.allclose(got["dist_m"], exp["dist_m"], rtol=1e-9)
+    # a query is certified within the rings iff its k-th distance is
+    # under the last ring's guard (knn_join's lower bound on unexplored
+    # cells)
+    kth = exp.groupby("q_id")["dist_m"].max().rename("kth").reset_index() \
+        .merge(queries.toPandas(), on="q_id")
+    guard = (max_ring * cells.cell_size_deg(res)[1] * HAVERSINE_R * np.pi
+             / 180 * np.minimum(1.0, np.cos(np.radians(kth["lat"]))))
+    assert (kth["kth"] <= guard).mean() >= 0.9
+
+
+def test_unreadable_input_scheme_counts_as_no_stats(spark, monkeypatch):
+    """An input pyarrow cannot open (a scheme it does not know, such as
+    Spark's s3a://) reports no statistics, so knn_join and fan_out take
+    their small-input answers instead of failing."""
+    from proj_4_spark import scale
+
+    monkeypatch.setattr(scale, "_input_files",
+                        lambda df: {"s3a://bucket/events/part-0.parquet"})
+    pts = spark.createDataFrame(
+        [("d%d" % i, 0, float(i), float(i) / 2) for i in range(20)],
+        "doc_id string, span_offset int, lon double, lat double")
+    queries = spark.createDataFrame([("q0", 3.1, 1.4)],
+                                    "q_id string, lon double, lat double")
+    assert scale.parquet_stats(pts) == (0, 0, 0)
+    assert scale.knn_res(scale.parquet_stats(pts)[0]) == 4
+    assert scale.fan_out(pts, 1) is pts
+    got = knn_join(pts, queries, k=3, metric="haversine").orderBy("rank")
+    exp = knn_brute_force(pts, queries, k=3, metric="haversine").orderBy("rank")
+    assert [r.doc_id for r in got.collect()] == \
+        [r.doc_id for r in exp.collect()] == ["d3", "d4", "d2"]

@@ -22,7 +22,7 @@ NOTES = {
     "projjson_text_merc": "the CRS arrives as PROJJSON TEXT: JSON -> proj-string -> merc Catalyst twin, zero Python.",
     "cell_counts": "pure JVM cell encode (no Python) -> single hash aggregate. One shuffle.",
     "pip_rect_zones": "r8: the 12 plan-time-literal rectangles compile to ONE whole-stage-codegen conditional aggregate over the points scan - zero joins, map-side partials, one tiny exchange (the former BroadcastNestedLoop paid 12M pair visits for 72k hits). General polygons keep pip_join (broadcast + closure rings) / pip_join_cells (cell hash join).",
-    "knn_haversine": "points repartitioned by cell once and cached; per-ring hash join on cell; window top-k per query; driver loop only widens rings for unfinished queries. r8: cell res scales with corpus rows (footer count) and each round's tiny top-k is eagerly localCheckpointed so the candidate join runs exactly once.",
+    "knn_haversine": "points repartitioned by cell once and cached; per-ring hash join on cell; window top-k per query; driver loop only widens rings for unfinished queries. knn_join sizes the cell res itself from the points' parquet footer row count (proj_4_spark/scale.py knn_res; res 4 at the committed SFs), rings start at 1, and each round's tiny top-k is eagerly localCheckpointed so the candidate join runs exactly once.",
     "ann_cosine_topk": "deliberate brute force (oracle baseline), r8 shape: query batch collected once (serving contract), ONE mapInArrow corpus pass emits exact sequential-NumPy dots vs the closure-held query matrix as narrow candidate rows; corpus vectors cross the Python boundary exactly once; only exchange = ranking window.",
     "ann_ivf_topk": "r8: single mapInArrow corpus pass (centroid assignment + candidate dots vs the closure probe map) - no corpus repartition (the old list_id exchange shuffled the full vector payload for nothing), no join; the persisted inverted file in ann_index.py is the real serving layout.",
     "dedup_exact": "md5 groupBy: single shuffle with map-side combine.",
