@@ -358,16 +358,24 @@ def _kernel_col(vec_col, return_type: str, kernel):
     return _k(vec_col)
 
 
-def _seq_pair_dot_udf():
-    """pandas UDF: exact sequential dot of two array columns (the
-    candidate re-rank — one Arrow hop carrying only the two vectors)."""
+def _pair_cosine_udf():
+    """pandas UDF: cosine of two corpus vectors, their exact sequential
+    dot over the product of their norms (the candidate re-rank — one
+    Arrow hop).  A zero-norm vector raises, naming its vec_id."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
-    def _dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        return pd.Series(_seq_rowdots(_as_f64(va), _as_f64(vb)))
+    def _cos(id_a: pd.Series, va: pd.Series, na: pd.Series,
+             id_b: pd.Series, vb: pd.Series, nb: pd.Series) -> pd.Series:
+        for ids, norms in ((id_a, na), (id_b, nb)):
+            zero = np.nonzero(norms.to_numpy() == 0)[0]
+            if len(zero):
+                raise ValueError(f"corpus vector vec_id={int(ids.iloc[zero[0]])} "
+                                 "has zero norm: its cosine is undefined")
+        dots = _seq_rowdots(_as_f64(va), _as_f64(vb))
+        return pd.Series(dots / (na.to_numpy() * nb.to_numpy()))
 
-    return _dot
+    return _cos
 
 
 def signature_col(vec_col, planes: np.ndarray):
@@ -536,7 +544,8 @@ def embedding_cosine_dedup(emb_df, threshold: float = 0.95, n_planes: int = 12,
     minhash_lsh_pairs: a degenerate bucket (e.g. all-zero vectors
     sharing one signature) would otherwise go O(bucket^2).  Pairs inside
     a dropped bucket are missed — the recall trade the MinHash sibling
-    documents.  None disables the cap."""
+    documents.  None disables the cap.  A candidate pair with a
+    zero-norm vector raises, naming its vec_id."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -559,11 +568,8 @@ def embedding_cosine_dedup(emb_df, threshold: float = 0.95, n_planes: int = 12,
     b = tagged.select("bucket", F.col("vec_id").alias("id_b"),
                       F.col("v").alias("vb"), F.col("n").alias("nb"))
     pairs = a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
-    pairs = pairs.withColumn(
-        "cosine",
-        _seq_pair_dot_udf()(F.col("va"), F.col("vb"))
-        / (F.col("na") * F.col("nb"))
-    )
+    pairs = pairs.withColumn("cosine", _pair_cosine_udf()(
+        "id_a", "va", "na", "id_b", "vb", "nb"))
     return (
         pairs.where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))

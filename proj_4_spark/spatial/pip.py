@@ -1,31 +1,31 @@
-"""Broadcast point-in-polygon join.
+"""Point-in-polygon joins with the exact test in the JVM.
 
 Plan shape (north_rule / SURVEY.md §2.5):
-  1. broadcast the polygon table (small dimension side — zone rings +
-     bboxes), so the join is a BroadcastNestedLoop/Hash with *bbox range
-     predicates* doing the candidate pruning JVM-side;
-  2. exact test on surviving (point, polygon) candidate pairs with a
-     vectorized NumPy ray-crossing kernel inside one pandas UDF.
+  1. bbox range predicates prune (point, zone) candidates;
+  2. the even-odd (ray crossing) test runs on the survivors as one Spark
+     SQL `aggregate` over the zone's ring edges (`_in_ring`) — no Python
+     worker, no Arrow hop.
 
-At 100 TB the fact side never shuffles: candidates ~= points x avg
-bbox-overlap (<< cross product), and the exact test is Arrow-batched.
-For polygon sets too large to broadcast, pre-join on a shared cell index
-(cells.cell_col at a resolution ~ polygon size) instead — same exact
-kernel downstream.
+`point_in_ring_np` is the NumPy oracle.  `_in_ring` performs the same
+float operations in the same order, and Java doubles are strict IEEE, so
+both joins return bit-identical (point, zone) sets.  `pip_join`
+broadcasts the zones with their rings; `pip_join_cells` is the scale
+path for zone sets too large to broadcast.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+
+_BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
 
 
 def point_in_ring_np(px, py, ring_x, ring_y):
     """Vectorized even-odd (ray crossing) test of points against ONE ring.
 
     px/py: [n]; ring_x/ring_y: [m] closed or open ring (auto-closed).
-    Boundary convention: the standard even-odd half-open rule (consistent
-    with the driver-side oracle in tests).
+    Boundary convention: the standard even-odd half-open rule.  The
+    oracle of `_in_ring` and of the DuckDB twin `_sql_pip_cells`.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
@@ -48,67 +48,68 @@ def point_in_ring_np(px, py, ring_x, ring_y):
     return hits.sum(axis=1) % 2 == 1
 
 
+def _lt(a: str, b: str) -> str:
+    """NumPy's `a < b` in Spark SQL: Spark orders NaN above +Infinity,
+    NumPy's comparisons with NaN are false."""
+    return f"({a} < {b} AND NOT isnan({b}))"
+
+
+def _in_ring(lon: str, lat: str):
+    """Boolean column: point (`lon`, `lat`) inside the ring held as the
+    array columns `ring_lon`/`ring_lat`, by `point_in_ring_np`'s rule.
+
+    Edge i runs from vertex i to vertex (i + 1) % n: the implicit
+    closing edge is always taken (for a closed ring it is horizontal and
+    never crosses).  The crossing test is a CASE, not an AND, so the
+    division only runs on crossing edges, whose endpoint latitudes
+    differ: under ANSI mode a horizontal edge would raise DIVIDE_BY_ZERO
+    where NumPy computes an inf it then discards."""
+    from pyspark.sql import functions as F
+
+    px, py = f"`{lon}`", f"`{lat}`"
+    x1, y1 = "ring_lon[i]", "ring_lat[i]"
+    x2 = "ring_lon[(i + 1) % size(ring_lon)]"
+    y2 = "ring_lat[(i + 1) % size(ring_lat)]"
+    crosses = f"{_lt(py, y1)} != {_lt(py, y2)}"
+    xint = f"{x1} + ({py} - {y1}) / ({y2} - {y1}) * ({x2} - {x1})"
+    return F.expr(
+        "aggregate(sequence(0, size(ring_lon) - 1), false, (odd, i) -> "
+        f"odd != CASE WHEN {crosses} THEN {_lt(px, xint)} ELSE false END)")
+
+
+def _bbox(lon: str, lat: str):
+    from pyspark.sql import functions as F
+
+    return ((F.col(lon) >= F.col("min_lon")) & (F.col(lon) <= F.col("max_lon"))
+            & (F.col(lat) >= F.col("min_lat")) & (F.col(lat) <= F.col("max_lat")))
+
+
+def _rings(zones_df, *cols):
+    from pyspark.sql import functions as F
+
+    return zones_df.select("zone_id", *cols,
+                           F.col("ring.lon").alias("ring_lon"),
+                           F.col("ring.lat").alias("ring_lat"))
+
+
 def pip_join(points_df, zones_df, lon: str = "lon", lat: str = "lat"):
     """points (doc_id, span_offset, lon, lat) x zones
     (zone_id, ring:array<struct<lon,lat>>, min_lon..max_lat)
     -> (doc_id, span_offset, zone_id).
 
-    zones_df is broadcast; bbox predicates prune candidates JVM-side;
-    the exact ray-crossing test runs in one Arrow-batched UDF with the
-    ring geometry held as a CLOSURE constant keyed by zone_id (r8: the
-    rings used to travel as array columns through the join and the
-    Arrow boundary — ~40 doubles per candidate row of pure dead weight;
-    the zone side is small by this function's contract, the same
-    assumption its broadcast already makes, so one driver collect of
-    (zone_id, ring) ships the geometry once per task instead of once
-    per candidate).  Identical candidates, identical kernel.
+    (zone_id, bbox, ring) is broadcast — the zone side is small by this
+    function's contract — and one join condition holds both tests, the
+    ring loop behind the bbox in a single CASE.  As separate predicates,
+    Catalyst may order the loop first and run it on every (point, zone)
+    pair of the nested-loop join.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    ring_rows = zones_df.select(
-        "zone_id", F.col("ring.lon").alias("rx"),
-        F.col("ring.lat").alias("ry")).collect()
-    rings = {r["zone_id"]: (np.asarray(r["rx"], dtype=np.float64),
-                            np.asarray(r["ry"], dtype=np.float64))
-             for r in ring_rows}
-
-    cand = points_df.join(
-        F.broadcast(
-            zones_df.select(
-                "zone_id", "min_lon", "min_lat", "max_lon", "max_lat",
-            )
-        ),
-        on=(
-            (F.col(lon) >= F.col("min_lon"))
-            & (F.col(lon) <= F.col("max_lon"))
-            & (F.col(lat) >= F.col("min_lat"))
-            & (F.col(lat) <= F.col("max_lat"))
-        ),
+    return points_df.join(
+        F.broadcast(_rings(zones_df, *_BBOX)),
+        on=F.when(_bbox(lon, lat), _in_ring(lon, lat)).otherwise(False),
         how="inner",
-    )
-
-    @pandas_udf("boolean")
-    def _exact(zid: pd.Series, px: pd.Series,
-               py: pd.Series) -> pd.Series:
-        n = len(px)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=np.float64)
-        pyv = py.to_numpy(dtype=np.float64)
-        # group candidate rows by zone_id (unique per ring — a ring-shape
-        # key would collide for distinct polygons sharing a lon profile)
-        df = pd.DataFrame({"i": np.arange(n), "k": zid.to_numpy()})
-        for key, grp in df.groupby("k", sort=False):
-            idx = grp["i"].to_numpy()
-            rx, ry = rings[key]
-            out[idx] = point_in_ring_np(pxv[idx], pyv[idx], rx, ry)
-        return pd.Series(out)
-
-    return cand.where(
-        _exact(F.col("zone_id"), F.col(lon), F.col(lat))
-    ).drop("min_lon", "min_lat", "max_lon", "max_lat")
+    ).drop(*_BBOX, "ring_lon", "ring_lat")
 
 
 def _zone_cells_col(res: int):
@@ -135,7 +136,7 @@ def pip_join_cells(points_df, zones_df, res: int = 6,
     the shared cell index (spatial/cells) and meet in an ordinary HASH
     join — no cross product, no broadcast.
 
-    Plan shape (the 100-TB path promised in the module docstring):
+    Plan shape:
       1. zones explode to the cells covering their bbox — carrying ONLY
          (zone_id, bbox, cell), never the ring: a 1000-vertex polygon
          covering 100 cells must not shuffle its ring 100x (cheap:
@@ -146,53 +147,19 @@ def pip_join_cells(points_df, zones_df, res: int = 6,
          co-located, skew handled by AQE / salting upstream);
       4. bbox predicate prunes candidates;
       5. ring geometry re-attaches by a zone_id join (each ring
-         shuffles ONCE, and only bbox-surviving candidates carry it),
-         then the same exact ray-crossing UDF.
+         shuffles ONCE, and only bbox-surviving candidates meet it),
+         and the same `_in_ring` test as pip_join keeps the hits.
 
     Same output as pip_join; pick by zone-table size.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     from proj_4_spark.spatial.cells import cell_col
 
     zones_cells = zones_df.select(
-        "zone_id",
-        "min_lon", "min_lat", "max_lon", "max_lat",
-        F.explode(_zone_cells_col(res)).alias("cell"),
-    )
+        "zone_id", *_BBOX, F.explode(_zone_cells_col(res)).alias("cell"))
     pts = points_df.withColumn("cell", cell_col(F.col(lon), F.col(lat), res))
-    cand = pts.join(zones_cells, "cell", "inner").where(
-        (F.col(lon) >= F.col("min_lon")) & (F.col(lon) <= F.col("max_lon"))
-        & (F.col(lat) >= F.col("min_lat")) & (F.col(lat) <= F.col("max_lat"))
-    )
-    rings = zones_df.select(
-        "zone_id",
-        F.col("ring.lon").alias("ring_lon"),
-        F.col("ring.lat").alias("ring_lat"),
-    )
-    cand = cand.join(rings, "zone_id", "inner")
-
-    @pandas_udf("boolean")
-    def _exact(
-        zid: pd.Series, px: pd.Series, py: pd.Series, rlon: pd.Series, rlat: pd.Series
-    ) -> pd.Series:
-        n = len(px)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=np.float64)
-        pyv = py.to_numpy(dtype=np.float64)
-        df = pd.DataFrame({"i": np.arange(n), "k": zid.to_numpy()})
-        for _, grp in df.groupby("k", sort=False):
-            idx = grp["i"].to_numpy()
-            rx = np.asarray(rlon.iloc[idx[0]], dtype=np.float64)
-            ry = np.asarray(rlat.iloc[idx[0]], dtype=np.float64)
-            out[idx] = point_in_ring_np(pxv[idx], pyv[idx], rx, ry)
-        return pd.Series(out)
-
-    return cand.where(
-        _exact(F.col("zone_id"), F.col(lon), F.col(lat),
-               F.col("ring_lon"), F.col("ring_lat"))
-    ).drop("ring_lon", "ring_lat", "min_lon", "min_lat", "max_lon", "max_lat",
-           "cell")
+    cand = pts.join(zones_cells, "cell", "inner").where(_bbox(lon, lat))
+    return (cand.join(_rings(zones_df), "zone_id", "inner")
+            .where(_in_ring(lon, lat))
+            .drop("ring_lon", "ring_lat", *_BBOX, "cell"))

@@ -193,6 +193,23 @@ def test_embedding_cosine_dedup_exact_pairs(spark):
         assert C[ia, ib] >= 0.99 - 1e-6
 
 
+def test_embedding_cosine_dedup_zero_norm_pair_raises(spark):
+    """Two all-zero vectors share the all-negative LSH bucket: the pair
+    re-rank raises a ValueError naming a vec_id, as the ANN operators
+    do, instead of Spark's DIVIDE_BY_ZERO aborting the job."""
+    from proj_4_spark.functions.similarity import embedding_cosine_dedup
+
+    df = spark.createDataFrame(
+        [(0, [0.0] * 4), (1, [0.0] * 4), (2, [1.0, 2.0, 3.0, 4.0]),
+         (3, [1.0, 2.0, 3.0, 4.1])], "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match=r"ValueError: corpus vector "
+                                        r"vec_id=[01] has zero norm"):
+        embedding_cosine_dedup(df, threshold=0.9, n_planes=4, dim=4).collect()
+    got = embedding_cosine_dedup(df.where("vec_id >= 2"), threshold=0.9,
+                                 n_planes=4, dim=4).collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(2, 3)]
+
+
 def test_codecs_roundtrip_exact():
     """Pure-NumPy BMP / WAV-PCM16 / Y4M codecs: encode -> decode must be
     bit-exact (incl. BMP row padding and bottom-up order)."""

@@ -119,6 +119,8 @@ def test_pip_join_is_broadcast(spark):
     )
     plan = plan_of(pip_join(pts, zones))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    # the exact ring test is a JVM expression: no Python worker
+    assert "EvalPython" not in plan
     # the fact side must not be exchanged before the join
     before_join = plan.split("Join")[0]
     assert "Exchange hashpartitioning" not in before_join
@@ -146,7 +148,11 @@ def test_cell_and_tile_exprs_are_codegen(spark):
 def test_pip_join_cells_is_hash_join_no_broadcast_nlj(spark):
     """The non-broadcast PIP path must be a shuffle HASH join on the
     cell key — never BroadcastNestedLoop / CartesianProduct (at 100 TB
-    the zone side may exceed broadcast limits)."""
+    the zone side may exceed broadcast limits).  Only (zone_id, bbox,
+    cell) rides the cell shuffle: no exchange below the cell join
+    carries a ring column."""
+    import re
+
     from proj_4_spark.sources import fixtures as FX
     from proj_4_spark.spatial.pip import pip_join_cells
 
@@ -160,12 +166,20 @@ def test_pip_join_cells_is_hash_join_no_broadcast_nlj(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        txt = plan_of(pip_join_cells(pts, zones_df, res=5))
+        out = pip_join_cells(pts, zones_df, res=5)
+        txt = plan_of(out)
+        nodes = formatted(out).split("\n\n")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "CartesianProduct" not in txt
     assert "BroadcastNestedLoop" not in txt
     assert "SortMergeJoin" in txt or "ShuffledHashJoin" in txt, txt[:3000]
+    assert "EvalPython" not in txt
+    cell_inputs = [re.search(r"^Input \[\d+\]: (.*)$", n, re.M).group(1)
+                   for n in nodes if re.match(r"\(\d+\) Exchange\n", n)
+                   and "hashpartitioning(cell#" in n]
+    assert len(cell_inputs) == 2, nodes
+    assert not [i for i in cell_inputs if "ring" in i], cell_inputs
 
 
 def test_ivf_single_pass_single_exchange(spark):

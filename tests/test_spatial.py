@@ -196,6 +196,77 @@ def test_pip_join_cells_matches_broadcast_path(spark, media_pts):
     assert len(a) > 0
 
 
+def test_pip_joins_bit_exact_vs_numpy_oracle(spark):
+    """Both PIP joins return exactly the (point, zone) pairs that the
+    bbox test and `point_in_ring_np` accept.  Adversarial rings: open
+    and closed, repeated vertices, -0.0, horizontal and vertical edges,
+    NaN vertices (Spark orders NaN above +Infinity, NumPy comparisons
+    with NaN are false).  Adversarial points: every vertex, points on
+    edges and at the latitude of horizontal edges (a division by zero
+    under ANSI mode if the crossing guard is not a CASE), -0.0, NaN."""
+    from proj_4_spark.spatial.pip import pip_join_cells, point_in_ring_np
+
+    nan = float("nan")
+    rings = {
+        "open_square": [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)],
+        "closed_tri": [(12.0, 0.0), (20.0, 4.0), (12.0, 8.0), (12.0, 0.0)],
+        "repeats_negzero": [(-0.0, -0.0), (-0.0, -0.0), (5.0, 0.0),
+                            (5.0, 5.0), (5.0, 5.0), (0.0, 5.0), (0.0, -0.0)],
+        "concave_l": [(22.0, 0.0), (30.0, 0.0), (30.0, 3.0), (25.0, 3.0),
+                      (25.0, 10.0), (22.0, 10.0)],
+        "nan_lon": [(0.0, 12.0), (8.0, 12.0), (nan, 15.0), (8.0, 19.0),
+                    (0.0, 19.0)],
+        "nan_lat": [(12.0, 12.0), (20.0, 12.0), (20.0, nan), (20.0, 19.0),
+                    (12.0, 19.0)],
+        "nan_first": [(nan, nan), (22.0, 12.0), (30.0, 12.0), (30.0, 19.0),
+                      (22.0, 19.0)],
+    }
+    zrows = []
+    for zid, ring in rings.items():
+        xs, ys = np.array(ring).T
+        zrows.append((zid, ring, float(np.nanmin(xs)), float(np.nanmin(ys)),
+                      float(np.nanmax(xs)), float(np.nanmax(ys))))
+    zones = spark.createDataFrame(
+        zrows, "zone_id string, ring array<struct<lon double, lat double>>, "
+               "min_lon double, min_lat double, max_lon double, max_lat double")
+
+    rng = np.random.Generator(np.random.PCG64(7))
+    pts = [tuple(p) for p in np.column_stack(
+        [rng.uniform(-2, 32, 3000), rng.uniform(-2, 21, 3000)]).tolist()]
+    for ring in rings.values():
+        pts += ring                                        # vertices
+        for (x1, y1), (x2, y2) in zip(ring, ring[1:] + ring[:1]):
+            pts += [((x1 + x2) / 2, (y1 + y2) / 2)]        # edge midpoints
+            if y1 == y2:                                   # on the edge line
+                pts += [(x1 - 1.0, y1), (x2 + 1.0, y2), (x1 + 0.25, y1)]
+    pts += [(-0.0, 3.0), (3.0, -0.0), (-0.0, -0.0), (0.0, 0.0), (nan, 5.0),
+            (5.0, nan), (10.0, 5.0), (25.0, 6.0), (30.0, 1.5)]
+    lon = np.array([p[0] for p in pts])
+    lat = np.array([p[1] for p in pts])
+
+    expected = set()
+    for zid, ring, x0, y0, x1, y1 in zrows:
+        idx = np.flatnonzero((lon >= x0) & (lon <= x1)
+                             & (lat >= y0) & (lat <= y1))
+        rx, ry = np.array(ring).T
+        hit = point_in_ring_np(lon[idx], lat[idx], rx, ry)
+        expected |= {(int(i), zid) for i in idx[hit]}
+    assert len(expected) > 500
+    # nan_lon and nan_lat have no hits: every crossing they could add
+    # lies outside their bbox or has a NaN crossing longitude (which
+    # Spark's ordering would turn into a hit)
+    assert {z for _, z in expected} == set(rings) - {"nan_lon", "nan_lat"}
+
+    pts_df = spark.createDataFrame(
+        [(i, 0, x, y) for i, (x, y) in enumerate(pts)],
+        "doc_id long, span_offset int, lon double, lat double")
+    for out in (pip_join(pts_df, zones), pip_join_cells(pts_df, zones, res=5)):
+        got = {(r.doc_id, r.zone_id)
+               for r in out.select("doc_id", "zone_id").collect()}
+        assert got == expected, (sorted(got - expected)[:10],
+                                 sorted(expected - got)[:10])
+
+
 def test_knn_matches_brute_force(spark, media_pts):
     qpath = FX.ensure_fixture("knn_queries.parquet", FX.knn_queries)
     queries = spark.read.parquet(qpath).limit(25)
