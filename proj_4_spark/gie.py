@@ -16,10 +16,12 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from proj_4_spark.engine.plan import Operation, create_operation
+from proj_4_spark.engine.plan import Operation
 from proj_4_spark.engine.projstring import dmstor
+from proj_4_spark.engine.spark import _cached_operation
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
+from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
 
 _TOL_UNITS = {"m": 1.0, "dm": 0.1, "cm": 0.01, "mm": 0.001, "um": 1e-6, "nm": 1e-9, "km": 1000.0}
 
@@ -182,27 +184,22 @@ class GieResult:
     dist_m: float = float("nan")
 
 
-_op_cache: dict[str, Operation | ProjError] = {}
-
-
-def _get_op(projstring: str):
-    hit = _op_cache.get(projstring)
-    if hit is None:
-        try:
-            hit = create_operation(projstring)
-        except ProjError as e:
-            hit = e
-        except Exception as e:  # setup bug — surface as failure, not crash
-            hit = ProjError("setup_exception", repr(e))
-        _op_cache[projstring] = hit
-    return hit
+def _get_op(projstring: str) -> Operation | ProjError:
+    """The shared operation cache (engine/spark.py); a setup error comes
+    back as the ProjError a failed result is built from."""
+    try:
+        return _cached_operation(projstring)
+    except ProjError as e:
+        return e
+    except Exception as e:  # setup bug — surface as failure, not crash
+        return ProjError("setup_exception", repr(e))
 
 
 def _dist(op: Operation, got, exp, ndim: int, angular: bool) -> float:
     """gie comparison metric; src/apps/gie.cpp:1017-1020."""
     if angular:
         d = float(
-            C.geodesic_inverse_karney(
+            geodesic_inverse_karney(
                 np.array([got[0]]), np.array([got[1]]),
                 np.array([exp[0]]), np.array([exp[1]]),
                 op.P.a, op.P.f,

@@ -1,10 +1,9 @@
 """Azimuthal Equidistant (aeqd) incl. Guam mode.
 
 Reference: src/projections/aeqd.cpp.  The ellipsoidal oblique/equatorial
-branch uses geodesic inverse/direct (Karney in the C,
-aeqd.cpp:70-78,155-161); here the vectorized Vincenty equivalents
-(common.geodesic_inverse_full / geodesic_direct) — sub-0.1 mm agreement
-away from the near-antipodal zone.
+branch solves the geodesic inverse/direct problems with Karney's
+algorithm (aeqd.cpp:70-78,155-161), here through the vectorized port in
+kernels/geodesic.py, so it stays exact up to the antipode.
 """
 
 from __future__ import annotations
@@ -15,6 +14,7 @@ import numpy as np
 
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import PJ, UNITS_CLASSIC, UNITS_RADIANS
+from proj_4_spark.kernels.geodesic import _cached_geodesic
 
 _EPS10 = 1e-10
 _TOL = 1e-14
@@ -34,6 +34,7 @@ def setup_aeqd(P: PJ) -> PJ:
         sinph0, cosph0 = math.sin(P.phi0), math.cos(P.phi0)
 
     guam = P.param_b("guam")
+    g = _cached_geodesic(P.a, P.f)
     if P.es != 0.0:
         en = C.enfn(P.es)
         M1 = float(C.mlfn(np.float64(P.phi0), np.float64(sinph0),
@@ -82,10 +83,12 @@ def setup_aeqd(P: PJ) -> PJ:
             y = rho * cl
             return x, y, z, t
         center = (np.abs(lam) < _EPS10) & (np.abs(phi - P.phi0) < _EPS10)
-        s12, azi1 = C.geodesic_inverse_full(
-            np.full_like(lam, P.lam0), np.full_like(phi, P.phi0),
-            lam + P.lam0, phi, P.a, P.f,
+        s12, azi1, _, _ = g.inverse(
+            np.full_like(phi, P.phi0 / C.DEG_TO_RAD),
+            np.full_like(lam, P.lam0 / C.DEG_TO_RAD),
+            phi / C.DEG_TO_RAD, (lam + P.lam0) / C.DEG_TO_RAD,
         )
+        azi1 = azi1 * C.DEG_TO_RAD
         x = s12 * np.sin(azi1) / P.a
         y = s12 * np.cos(azi1) / P.a
         x = np.where(center, 0.0, x)
@@ -99,14 +102,14 @@ def setup_aeqd(P: PJ) -> PJ:
         if mode in ("obliq", "equit"):
             x2 = x * P.a
             y2 = y * P.a
-            azi1 = np.arctan2(x2, y2)
+            azi1 = np.arctan2(x2, y2) / C.DEG_TO_RAD
             s12 = np.sqrt(x2 * x2 + y2 * y2)
-            lon2, lat2 = C.geodesic_direct(
-                np.full_like(x, P.lam0), np.full_like(y, P.phi0),
-                azi1, s12, P.a, P.f,
+            lat2, lon2, _, _ = g.direct(
+                np.full_like(y, P.phi0 / C.DEG_TO_RAD),
+                np.full_like(x, P.lam0 / C.DEG_TO_RAD), azi1, s12,
             )
-            phi = lat2
-            lam = lon2 - P.lam0
+            phi = lat2 * C.DEG_TO_RAD
+            lam = lon2 * C.DEG_TO_RAD - P.lam0
         else:
             phi = C.inv_mlfn(Mp - c if mode == "n_pole" else Mp + c, P.es, en)
             lam = np.arctan2(x, -y if mode == "n_pole" else y)

@@ -236,113 +236,6 @@ def hypot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return np.hypot(x, y)
 
 
-def geodesic_inverse_full(lon1, lat1, lon2, lat2, a: float, f: float):
-    """Vincenty inverse returning (s12 meters, azi1 radians).
-
-    Stands in for Karney geod_inverse (src/geodesic.c:1166) in the aeqd
-    kernel; sub-0.1 mm agreement away from the near-antipodal zone (the
-    zone aeqd cannot represent uniquely anyway).
-    """
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    lon2 = np.broadcast_to(np.asarray(lon2, dtype=np.float64), lon1.shape).copy()
-    lat2 = np.broadcast_to(np.asarray(lat2, dtype=np.float64), lat1.shape).copy()
-    b = a * (1 - f)
-    U1 = np.arctan((1 - f) * np.tan(lat1))
-    U2 = np.arctan((1 - f) * np.tan(lat2))
-    L = adjlon(lon2 - lon1)
-    sinU1, cosU1 = np.sin(U1), np.cos(U1)
-    sinU2, cosU2 = np.sin(U2), np.cos(U2)
-    lam = L.copy()
-    for _ in range(100):
-        sinLam, cosLam = np.sin(lam), np.cos(lam)
-        sinSigma = np.sqrt(
-            (cosU2 * sinLam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * cosLam) ** 2
-        )
-        cosSigma = sinU1 * sinU2 + cosU1 * cosU2 * cosLam
-        sigma = np.arctan2(sinSigma, cosSigma)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sinAlpha = np.where(sinSigma == 0, 0.0, cosU1 * cosU2 * sinLam / np.where(sinSigma == 0, 1.0, sinSigma))
-        cosSqAlpha = 1 - sinAlpha**2
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos2SigmaM = np.where(
-                cosSqAlpha == 0, 0.0,
-                cosSigma - 2 * sinU1 * sinU2 / np.where(cosSqAlpha == 0, 1.0, cosSqAlpha),
-            )
-        Cc = f / 16 * cosSqAlpha * (4 + f * (4 - 3 * cosSqAlpha))
-        lam_new = L + (1 - Cc) * f * sinAlpha * (
-            sigma + Cc * sinSigma * (cos2SigmaM + Cc * cosSigma * (-1 + 2 * cos2SigmaM**2))
-        )
-        if np.all(np.abs(lam_new - lam) < 1e-14):
-            lam = lam_new
-            break
-        lam = lam_new
-    sinLam, cosLam = np.sin(lam), np.cos(lam)
-    uSq = cosSqAlpha * (a * a - b * b) / (b * b)
-    A = 1 + uSq / 16384 * (4096 + uSq * (-768 + uSq * (320 - 175 * uSq)))
-    B = uSq / 1024 * (256 + uSq * (-128 + uSq * (74 - 47 * uSq)))
-    deltaSigma = B * sinSigma * (
-        cos2SigmaM + B / 4 * (
-            cosSigma * (-1 + 2 * cos2SigmaM**2)
-            - B / 6 * cos2SigmaM * (-3 + 4 * sinSigma**2) * (-3 + 4 * cos2SigmaM**2)
-        )
-    )
-    s12 = b * A * (sigma - deltaSigma)
-    azi1 = np.arctan2(cosU2 * sinLam, cosU1 * sinU2 - sinU1 * cosU2 * cosLam)
-    return s12, azi1
-
-
-def geodesic_direct(lon1, lat1, azi1, s12, a: float, f: float):
-    """Vincenty direct: (lon1, lat1) + (azi1 radians, s12 meters) ->
-    (lon2, lat2).  Counterpart of geod_direct (src/geodesic.c:777)."""
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    azi1 = np.asarray(azi1, dtype=np.float64)
-    s12 = np.asarray(s12, dtype=np.float64)
-    b = a * (1 - f)
-    tanU1 = (1 - f) * np.tan(lat1)
-    cosU1 = 1 / np.sqrt(1 + tanU1 * tanU1)
-    sinU1 = tanU1 * cosU1
-    cosAzi = np.cos(azi1)
-    sinAzi = np.sin(azi1)
-    sigma1 = np.arctan2(tanU1, cosAzi)
-    sinAlpha = cosU1 * sinAzi
-    cosSqAlpha = 1 - sinAlpha * sinAlpha
-    uSq = cosSqAlpha * (a * a - b * b) / (b * b)
-    A = 1 + uSq / 16384 * (4096 + uSq * (-768 + uSq * (320 - 175 * uSq)))
-    B = uSq / 1024 * (256 + uSq * (-128 + uSq * (74 - 47 * uSq)))
-    sigma = s12 / (b * A)
-    for _ in range(100):
-        cos2SigmaM = np.cos(2 * sigma1 + sigma)
-        sinSigma = np.sin(sigma)
-        cosSigma = np.cos(sigma)
-        deltaSigma = B * sinSigma * (
-            cos2SigmaM + B / 4 * (
-                cosSigma * (-1 + 2 * cos2SigmaM**2)
-                - B / 6 * cos2SigmaM * (-3 + 4 * sinSigma**2) * (-3 + 4 * cos2SigmaM**2)
-            )
-        )
-        sigma_new = s12 / (b * A) + deltaSigma
-        if np.all(np.abs(sigma_new - sigma) < 1e-14):
-            sigma = sigma_new
-            break
-        sigma = sigma_new
-    sinSigma = np.sin(sigma)
-    cosSigma = np.cos(sigma)
-    cos2SigmaM = np.cos(2 * sigma1 + sigma)
-    lat2 = np.arctan2(
-        sinU1 * cosSigma + cosU1 * sinSigma * cosAzi,
-        (1 - f) * np.hypot(sinAlpha, sinU1 * sinSigma - cosU1 * cosSigma * cosAzi),
-    )
-    lam = np.arctan2(sinSigma * sinAzi, cosU1 * cosSigma - sinU1 * sinSigma * cosAzi)
-    Cc = f / 16 * cosSqAlpha * (4 + f * (4 - 3 * cosSqAlpha))
-    L = lam - (1 - Cc) * f * sinAlpha * (
-        sigma + Cc * sinSigma * (cos2SigmaM + Cc * cosSigma * (-1 + 2 * cos2SigmaM**2))
-    )
-    lon2 = lon1 + L
-    return lon2, lat2
-
-
 def generic_inverse_2d(fwd, P, x, y, lam_init, phi_init):
     """Vectorized port of pj_generic_inverse_2d (src/generic_inverse.cpp:44):
     2D Newton-Raphson with numerically-estimated Jacobian, 15 iterations,
@@ -387,123 +280,3 @@ def generic_inverse_2d(fwd, P, x, y, lam_init, phi_init):
         delta_phi = np.clip(dX * dp_X + dY * dp_Y, -0.3, 0.3)
         phi = np.where(upd & (y != 0), np.clip(phi - delta_phi, -M_HALFPI, M_HALFPI), phi)
     return lam, phi
-
-
-def geodesic_inverse_vincenty(
-    lon1, lat1, lon2, lat2, a: float, f: float
-) -> np.ndarray:
-    """Geodesic distance (meters) between (lon,lat) pairs in radians.
-
-    Vectorized Vincenty inverse with haversine fallback for non-convergent
-    (near-antipodal) pairs.  Stands in for the reference's Karney
-    geod_inverse (src/geodesic.c:1166) in the gie comparison metric
-    (src/apps/gie.cpp:1017-1020, src/4D_api.cpp:137-167): the metric only
-    needs micrometer accuracy at sub-meter separations, where Vincenty and
-    Karney agree far below 1e-9 m.
-    """
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    lon2 = np.broadcast_to(np.asarray(lon2, dtype=np.float64), lon1.shape)
-    lat2 = np.broadcast_to(np.asarray(lat2, dtype=np.float64), lat1.shape)
-    b = a * (1 - f)
-    U1 = np.arctan((1 - f) * np.tan(lat1))
-    U2 = np.arctan((1 - f) * np.tan(lat2))
-    L = adjlon(lon2 - lon1)
-    sinU1, cosU1 = np.sin(U1), np.cos(U1)
-    sinU2, cosU2 = np.sin(U2), np.cos(U2)
-
-    lam = L.copy()
-    converged = np.zeros(lam.shape, dtype=bool)
-    sinSigma = np.zeros_like(lam)
-    cosSigma = np.ones_like(lam)
-    sigma = np.zeros_like(lam)
-    cosSqAlpha = np.ones_like(lam)
-    cos2SigmaM = np.zeros_like(lam)
-    for _ in range(50):
-        sinLam, cosLam = np.sin(lam), np.cos(lam)
-        sinSigma_n = np.sqrt(
-            (cosU2 * sinLam) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * cosLam) ** 2
-        )
-        cosSigma_n = sinU1 * sinU2 + cosU1 * cosU2 * cosLam
-        sigma_n = np.arctan2(sinSigma_n, cosSigma_n)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sinAlpha = np.where(
-                sinSigma_n == 0, 0.0, cosU1 * cosU2 * sinLam / sinSigma_n
-            )
-        cosSqAlpha_n = 1 - sinAlpha**2
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos2SigmaM_n = np.where(
-                cosSqAlpha_n == 0,
-                0.0,
-                cosSigma_n - 2 * sinU1 * sinU2 / np.where(cosSqAlpha_n == 0, 1.0, cosSqAlpha_n),
-            )
-        C = f / 16 * cosSqAlpha_n * (4 + f * (4 - 3 * cosSqAlpha_n))
-        lam_new = L + (1 - C) * f * sinAlpha * (
-            sigma_n
-            + C
-            * sinSigma_n
-            * (cos2SigmaM_n + C * cosSigma_n * (-1 + 2 * cos2SigmaM_n**2))
-        )
-        upd = ~converged
-        newly = np.abs(lam_new - lam) < 1e-13
-        sinSigma = np.where(upd, sinSigma_n, sinSigma)
-        cosSigma = np.where(upd, cosSigma_n, cosSigma)
-        sigma = np.where(upd, sigma_n, sigma)
-        cosSqAlpha = np.where(upd, cosSqAlpha_n, cosSqAlpha)
-        cos2SigmaM = np.where(upd, cos2SigmaM_n, cos2SigmaM)
-        lam = np.where(upd, lam_new, lam)
-        converged = converged | newly
-        if converged.all():
-            break
-
-    uSq = cosSqAlpha * (a * a - b * b) / (b * b)
-    A = 1 + uSq / 16384 * (4096 + uSq * (-768 + uSq * (320 - 175 * uSq)))
-    B = uSq / 1024 * (256 + uSq * (-128 + uSq * (74 - 47 * uSq)))
-    deltaSigma = (
-        B
-        * sinSigma
-        * (
-            cos2SigmaM
-            + B
-            / 4
-            * (
-                cosSigma * (-1 + 2 * cos2SigmaM**2)
-                - B
-                / 6
-                * cos2SigmaM
-                * (-3 + 4 * sinSigma**2)
-                * (-3 + 4 * cos2SigmaM**2)
-            )
-        )
-    )
-    dist = b * A * (sigma - deltaSigma)
-
-    # haversine fallback on the mean sphere for non-converged (antipodal) lanes
-    if not converged.all():
-        R = a * (1 - f / 3)
-        dphi = lat2 - lat1
-        dlam = L
-        h = (
-            np.sin(dphi / 2) ** 2
-            + np.cos(lat1) * np.cos(lat2) * np.sin(dlam / 2) ** 2
-        )
-        hav = 2 * R * np.arcsin(np.minimum(1.0, np.sqrt(h)))
-        dist = np.where(converged, dist, hav)
-    # coincident points
-    return np.where(sinSigma == 0, 0.0, dist)
-
-
-def geodesic_inverse_karney(lon1, lat1, lon2, lat2, a: float, f: float):
-    """Karney geodesic distance (meters), radians in — the reference's
-    actual geod_inverse (src/geodesic.c:1166); exact for near-antipodal
-    pairs where Vincenty fails to converge.  See kernels/geodesic.py."""
-    from proj_4_spark.kernels.geodesic import Geodesic
-
-    g = Geodesic(a, f)
-    R = RAD_TO_DEG
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    lon2 = np.broadcast_to(np.asarray(lon2, dtype=np.float64), lon1.shape)
-    lat2 = np.broadcast_to(np.asarray(lat2, dtype=np.float64), lat1.shape)
-    s12, _, _, _ = g.inverse(lat1 * R, lon1 * R, lat2 * R, lon2 * R)
-    return s12

@@ -12,8 +12,9 @@ the Newton iteration runs all lanes with frozen state for converged
 points, which yields identical per-lane sequences to the scalar loops.
 
 Accuracy: matches the reference's 20-case geodtest.cpp table to <1e-8 m
-in distance and <1e-12 deg in azimuths, including antipodal cases where
-Vincenty fails to converge.
+in distance and <1e-12 deg in azimuths, including nearly antipodal
+cases.  This is the package's only geodesic solver: aeqd, kNN, the gie
+metric and polygon area all call it.
 """
 
 from __future__ import annotations
@@ -809,17 +810,17 @@ from functools import lru_cache
 @lru_cache(maxsize=16)
 def _cached_geodesic(a: float, f: float) -> "Geodesic":
     """Geodesic setup computes the A3/C3 series coefficients; cache per
-    (a, f) — the gie metric calls this once per expect line."""
+    (a, f) — the gie metric calls this once per expect line and the kNN
+    UDF once per Arrow batch."""
     return Geodesic(a, f)
 
 
 def geodesic_inverse_karney(lon1, lat1, lon2, lat2,
                             a: float = 6378137.0,
                             f: float = 1 / 298.257223563):
-    """Distance-only convenience twin of geodesic_inverse_vincenty
-    (RADIANS in, meters out) backed by the Karney solver — exact for
-    antipodal pairs where Vincenty fails to converge."""
-    g = Geodesic(a, f)
+    """Distance-only inverse problem: RADIANS in, meters out.  Equal-shape
+    arrays; the solver for (a, f) is built once and cached."""
+    g = _cached_geodesic(a, f)
     R = 180.0 / math.pi
     s12, _, _, _ = g.inverse(
         np.asarray(lat1) * R, np.asarray(lon1) * R,

@@ -120,9 +120,10 @@ def knn_queries(n: int = 100, seed: int = SEED + 1) -> pa.Table:
 
 def expected_knn(points, queries: pa.Table, k: int = 10,
                  a: float = 6378137.0, f: float = 1 / 298.257222101):
-    """Oracle kNN: brute-force Vincenty on the driver, ties broken by
+    """Oracle kNN: brute-force Karney inverse on the driver, ties broken by
     (dist, doc_id, span_offset).  Returns {q_id: [(doc_id, off, dist)...]}"""
-    from proj_4_spark.kernels.common import DEG_TO_RAD, geodesic_inverse_karney
+    from proj_4_spark.kernels.common import DEG_TO_RAD
+    from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
 
     doc_ids = [p[0] for p in points]
     offs = [p[1] for p in points]
@@ -162,7 +163,8 @@ def knn_karney_expected_table(sf_dir: str = "/root/testdata/sf0.01",
     the metric itself is pinned by the geodtest suites.
 
     Brute force is the point here: no cells, no rings, no Spark."""
-    from proj_4_spark.kernels.common import DEG_TO_RAD, geodesic_inverse_karney
+    from proj_4_spark.kernels.common import DEG_TO_RAD
+    from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
 
     ev = pq.read_table(os.path.join(sf_dir, "events.parquet"),
                        columns=["event_id"])["event_id"].to_numpy()

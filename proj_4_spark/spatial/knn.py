@@ -63,7 +63,8 @@ def _dist_udf(a: float, f: float, metric: str = "karney"):
 
     @pandas_udf("double")
     def geodesic_m(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-        from proj_4_spark.kernels.common import DEG_TO_RAD, geodesic_inverse_karney
+        from proj_4_spark.kernels.common import DEG_TO_RAD
+        from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
 
         d = geodesic_inverse_karney(
             lon1.to_numpy(dtype=np.float64) * DEG_TO_RAD,

@@ -97,3 +97,25 @@ def test_geodesic_inverse_direct_closure_property(lat1, lon1, lat2, lon2):
     s21, _, _, _ = g.inverse(np.array([lat2]), np.array([lon2]),
                              np.array([lat1]), np.array([lon1]))
     assert abs(s12[0] - s21[0]) < 1e-6
+
+
+@pytest.mark.parametrize("lat0,lat_rng", [(40.0, (-42, -38)), (0.0, (-2, 2))])
+def test_aeqd_near_antipode_matches_karney(lat0, lat_rng):
+    """Ellipsoidal oblique/equatorial aeqd near the antipode of its centre
+    (aeqd.cpp:70-78,155-161): the radius is the Karney geodesic distance
+    from the centre, and fwd -> inv closes.  Seeded NumPy sample."""
+    from proj_4_spark.kernels.geodesic import Geodesic
+
+    rng = np.random.default_rng(20261017)
+    n = 2000
+    lon = rng.uniform(-172, -168, n)
+    lat = rng.uniform(*lat_rng, n)
+    op = _op(f"+proj=aeqd +lat_0={lat0:g} +lon_0=10 +ellps=GRS80")
+    x, y, _, _ = op.apply(lon * D, lat * D, np.zeros(n), np.zeros(n))
+    s12, _, _, _ = Geodesic(op.P.a, op.P.f).inverse(
+        np.full(n, lat0), np.full(n, 10.0), lat, lon)
+    assert np.max(np.abs(np.hypot(x, y) - s12)) < 1e-6
+    lo, la, _, _ = op.apply(x, y, np.zeros(n), np.zeros(n), "inv")
+    dlon = (lo / D - lon + 180.0) % 360.0 - 180.0
+    assert np.max(np.abs(dlon)) < 1e-9
+    assert np.max(np.abs(la / D - lat)) < 1e-9
