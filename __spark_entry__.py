@@ -1292,7 +1292,7 @@ def _knn_karney_fixture_path() -> str:
 
 def _knn_query(spark, sf_dir, per_m: float, name: str, **metric):
     """The driver's kNN setup: every event a point, every 211th a
-    query, k=5 within 3 rings; `dist_m` integerized at `per_m` units
+    query, k=5; `dist_m` integerized at `per_m` units
     per meter as `name`.  knn_join sizes its cells from the events
     footers (scale.knn_res)."""
     from pyspark.sql import functions as F
@@ -1306,7 +1306,7 @@ def _knn_query(spark, sf_dir, per_m: float, name: str, **metric):
     queries = _geo_points(spark, sf_dir).where("event_id % 211 = 0").select(
         F.col("event_id").cast("string").alias("q_id"), "lon", "lat"
     )
-    out = knn_join(pts, queries, k=5, max_ring=3, **metric)
+    out = knn_join(pts, queries, k=5, **metric)
     return out.select(
         "q_id", "doc_id", "rank", _i(F.col("dist_m"), per_m).alias(name)
     )
@@ -1322,9 +1322,9 @@ def _q_knn(spark, sf_dir):
 
 
 def _q_knn_haversine(spark, sf_dir):
-    """The SAME cell-partitioned kNN machinery (rings, guards,
-    tie-breaks) with the SQL-expressible haversine metric, so DuckDB
-    brute-force recomputes the exact result set (value-level check of
+    """The SAME cell-partitioned kNN machinery (ring-1 pass, guard,
+    widening pass, tie-breaks) with the SQL-expressible haversine
+    metric, so DuckDB brute-force recomputes the exact result set (value-level check of
     the join; the Karney entry keeps the production metric)."""
     return _knn_query(spark, sf_dir, 1000, "dist_mm", metric="haversine")
 

@@ -2216,30 +2216,6 @@ def _udf_apply(df, projstring: str, direction: str, x, y, z, t,
     )
 
 
-
-def roundtrip_drift_deg(df, projstring: str, lon: str, lat: str, n: int = 1):
-    """Column of max(|dlon|, |dlat|) in degrees after n fwd/inv round trips
-    (proj_roundtrip analogue, src/4D_api.cpp:171-201) — used by tests and
-    data-quality audits at scale."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    _cached_operation(projstring)
-
-    @pandas_udf("double")
-    def _rt(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        op = _cached_operation(projstring)
-        lo = lons.to_numpy(dtype=np.float64, na_value=np.nan) * C.DEG_TO_RAD
-        la = lats.to_numpy(dtype=np.float64, na_value=np.nan) * C.DEG_TO_RAD
-        z = np.zeros_like(lo)
-        t = np.zeros_like(lo)
-        lo2, la2, _, _ = op.roundtrip(lo, la, z, t, n)
-        drift = np.maximum(np.abs(lo2 - lo), np.abs(la2 - la)) * C.RAD_TO_DEG
-        return pd.Series(drift)
-
-    return df.withColumn("rt_drift_deg", _rt(F.col(lon), F.col(lat)))
-
-
 _GEOD_STRUCT = "s12 double, azi1 double, azi2 double"
 
 

@@ -149,27 +149,34 @@ def build_ivf_index(emb_df, path: str, *, dim: int, n_centroids: int = 16,
 
 def _read_index(spark, path: str, key_col: str):
     """Open the persisted index with the layout's explicit schema and,
-    for a LOCAL index directory, driver-side partition listing.
+    for a LOCAL index directory, its partition directories listed
+    driver-side.
 
     Both choices are measured plan-BUILD wins (the probe path is
     latency-sensitive): schema inference re-reads a footer per open,
-    and with > 32 partition directories Spark launches a distributed
-    listing job (spark.sql.sources.parallelPartitionDiscovery.threshold)
-    whose scheduling overhead dwarfs a local readdir — 0.58 s -> 0.06 s
-    per open for the 256-bucket LSH index at sf1.  On a DFS URI the
-    default threshold is left alone (remote listing does benefit from
-    the job)."""
+    and Spark lists more root paths, or more subdirectories of one
+    root, than spark.sql.sources.parallelPartitionDiscovery.threshold
+    (32) in a distributed listing job whose scheduling overhead dwarfs
+    a local readdir — 0.58 s -> 0.06 s per open for the 256-bucket LSH
+    index at sf1.  So a local index is read as its `key=value`
+    directories, at most `threshold` per read, unioned; the session's
+    conf is only read, never set.  On a DFS URI Spark lists the path
+    itself (remote listing does benefit from the job)."""
+    from functools import reduce
+
     schema = f"vec_id bigint, v array<float>, v_norm double, {key_col} bigint"
     reader = spark.read.schema(schema)
-    if not os.path.isdir(path):
+    dirs = (sorted(e.path for e in os.scandir(path)
+                   if e.is_dir() and e.name.startswith(f"{key_col}="))
+            if os.path.isdir(path) else [])
+    if not dirs:
         return reader.parquet(path)
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "8192")
-    try:
-        return reader.parquet(path)
-    finally:
-        spark.conf.set(key, old)
+    step = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = reader.option("basePath", path)
+    return reduce(lambda x, y: x.unionByName(y),
+                  [reader.parquet(*dirs[i:i + step])
+                   for i in range(0, len(dirs), step)])
 
 
 def _probe_index(spark, path: str, kind: str, query_df, q_id_col: str,

@@ -115,11 +115,14 @@ def neighbors_np(cell, ring: int = 1):
     return (res[:, None] << RES_SHIFT) | (iy2 << IY_SHIFT) | ix2
 
 
-def neighbors_col(cell_col_, res: int, ring: int = 1):
-    """JVM-side neighbor ring as an array column (for explode-join)."""
-    from pyspark.sql import functions as F
+def neighbors_col(cell_col_, res: int, ring=1):
+    """JVM-side neighbor ring as an array column (for explode-join);
+    `ring` is an int or a per-row Column.  Rows clamp at the poles and
+    columns wrap and cap at 2^res, so each cell appears once."""
+    from pyspark.sql import Column, functions as F
 
-    n = 1 << res
+    n = F.lit(1 << res).cast("long")
+    r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
     # Exact integer decode: shiftright/bitwise, never `/` (double division
     # rounds above 2^53 — cell ids carry res<<58, so float division can be
     # off by up to ~128 in ix/iy near row boundaries).
@@ -127,13 +130,13 @@ def neighbors_col(cell_col_, res: int, ring: int = 1):
         F.lit((1 << (RES_SHIFT - IY_SHIFT)) - 1)
     )
     ix = cell_col_.bitwiseAND(F.lit((1 << IY_SHIFT) - 1))
-    cells = []
-    for dy in range(-ring, ring + 1):
-        for dx in range(-ring, ring + 1):
-            iy2 = F.least(F.greatest(iy + dy, F.lit(0)), F.lit(n - 1))
-            ix2 = F.pmod(ix + dx, F.lit(n))
-            cells.append(pack_col(res, iy2, ix2))
-    return F.array_distinct(F.array(*cells))
+    rows = F.sequence(F.greatest(iy - r, F.lit(0).cast("long")),
+                      F.least(iy + r, n - 1))
+    cols = (F.when(2 * r + 1 >= n, F.sequence(F.lit(0).cast("long"), n - 1))
+            .otherwise(F.transform(F.sequence(ix - r, ix + r),
+                                   lambda x: F.pmod(x, n))))
+    return F.flatten(F.transform(
+        rows, lambda y: F.transform(cols, lambda x: pack_col(res, y, x))))
 
 
 def cell_size_deg(res: int) -> tuple[float, float]:

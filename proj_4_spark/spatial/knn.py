@@ -9,11 +9,9 @@ Plan shape (north_rule / SURVEY.md §2.5):
   4. Window.partitionBy(q_id).orderBy(dist, doc_id, span_offset)
      row_number() <= k (deterministic tie-break).
 
-Correctness across ring boundaries: after ranking within ring R the
-k-th distance must be <= the geodesic lower bound to any unexplored
-cell; queries that fail the guarantee re-run with a wider ring
-(driver-side loop, each pass fully distributed).  Near-polar queries
-where the bound degenerates fall back to brute force (rare by area).
+Correctness across ring boundaries: two passes, no loop.  Ring 1 first;
+each uncertified query then re-runs once in the ring its own ring-1
+k-th distance implies, or the whole grid (knn_join proves the guard).
 
 Skew: hot cells (cities) put many points in one cell; the join key can
 be salted with spatial/salting.py and AQE skew-join splits the rest.
@@ -98,7 +96,6 @@ def knn_join(
     points_df,
     queries_df,
     k: int = 10,
-    max_ring: int = 4,
     a: float = 6378137.0,
     f: float = 1 / 298.257222101,
     point_cols=("doc_id", "span_offset", "lon", "lat"),
@@ -112,8 +109,7 @@ def knn_join(
     The cell resolution comes from the parquet footer row count of the
     files `points_df` scans (scale.knn_res), not from its rows after
     filters, limits or joins: a small subset of a large file gets the
-    large file's (smaller) cells.  Rings widen from 1 up to `max_ring`,
-    then the remaining queries are brute-forced.
+    large file's (smaller) cells.
     metric: "karney" (exact ellipsoidal) or "haversine" (mean sphere —
     the SQL-expressible twin used by the DuckDB correctness gate).
     n_salt > 1 defuses hot-cell skew (a metro cell holding most of the
@@ -122,19 +118,44 @@ def knn_join(
     cell's candidate generation spreads over n_salt tasks instead of
     one.  The per-query ranking window is salt-agnostic, so the result
     is IDENTICAL to n_salt=1 (pinned in tests).
+
+    Guard.  A query at latitude q_lat in row iy, column ix, with cell
+    height h = 180/2^res degrees, explores ring R: rows iy-R..iy+R and
+    columns ix-R..ix+R mod 2^res.  Every other point is at least
+    guard(R) = R h m_per_deg min(1, cos q_lat) meters away.  Both
+    metrics are at least the great-circle distance between the same
+    (lat, lon) on a sphere of m_per_deg meters per degree: the haversine
+    sphere is that sphere, and the ellipsoid's meridian and prime-vertical
+    radii both exceed the radius M_PER_DEG implies.  On that sphere:
+      - latitude leg: a point in an unexplored row is more than R h
+        degrees of latitude away, and the meridian arc is the shortest
+        path between two parallels;
+      - longitude leg: a point in an unexplored column is at least
+        dl = 2 R h degrees of longitude away, so at least as far as the
+        meridian dl away, asin(cos q_lat sin dl).  That exceeds
+        R h cos q_lat only while dl <= 90 degrees, where
+        sin dl >= (2/pi) dl > R h (radians) and asin(x) >= x.
+
+    Two passes, no loop.  Ring 1 for every query; its tiny top-k, beside
+    each query's ring, is localCheckpointed once.  A query with k rows
+    and k-th distance d1 <= guard(1) keeps them.  Every other query gets
+    ring R = floor(d1 / guard(1)) + 1, so guard(R) > d1 >= its true k-th
+    distance, or the whole grid when it found fewer than k rows, when
+    guard(1) <= 0, or when R * 360/2^res > 90 degrees.  One widening
+    candidate join ranks them all, each in its own ring.
     """
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     did, soff, plon, plat = point_cols
     qid, qlon, qlat = query_cols
     geodesic_m = _dist_udf(a, f, metric)
     res = scale.knn_res(scale.parquet_stats(points_df)[0])
+    n = 1 << res
 
     pts = points_df.select(
-        F.col(did).alias("doc_id"),
-        F.col(soff).alias("span_offset"),
-        F.col(plon).alias("p_lon"),
-        F.col(plat).alias("p_lat"),
+        F.col(did).alias("doc_id"), F.col(soff).alias("span_offset"),
+        F.col(plon).alias("p_lon"), F.col(plat).alias("p_lat"),
         cells.cell_col(F.col(plon), F.col(plat), res).alias("cell"),
     )
     join_keys = ["cell"]
@@ -142,71 +163,45 @@ def knn_join(
         pts = pts.withColumn(
             "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).cast("int"))
         join_keys = ["cell", "salt"]
-    # repartition points by cell (and salt) once; reused across passes
+    # repartition points by cell (and salt) once; both passes read it
     pts = pts.repartition(*join_keys).cache()
 
-    remaining = queries_df.select(
-        F.col(qid).alias("q_id"), F.col(qlon).alias("q_lon"), F.col(qlat).alias("q_lat")
-    )
-    results = None
-    cell_h_deg = cells.cell_size_deg(res)[1]
-
-    for cur_ring in range(1, max_ring + 1):
-        q = remaining.withColumn(
-            "cell",
-            F.explode(
-                cells.neighbors_col(
-                    cells.cell_col(F.col("q_lon"), F.col("q_lat"), res), res, cur_ring
-                )
-            ),
-        )
+    def ranked_within(q, ring):
+        q = q.withColumn("cell", F.explode(cells.neighbors_col(
+            cells.cell_col(F.col("q_lon"), F.col("q_lat"), res), res, ring)))
         if n_salt > 1:
-            q = q.withColumn(
-                "salt",
-                F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
-        topk = _ranked(q.join(pts, join_keys, "inner"), geodesic_m, k)
-        # r8: materialize each round's top-k ONCE (it is tiny: <= k rows
-        # per query).  Without the checkpoint the round's candidate join
-        # + distance UDF + window re-executed from scratch for every
-        # downstream action — the per-round isEmpty(), the next round's
-        # anti-join lineage, and the caller's final action each replayed
-        # the full join (measured ~3x redundant work at sf1).  Local
-        # (non-replicated) checkpoint is the right durability trade for
-        # a driver-side loop; the cached `pts` above already makes the
-        # same call.
-        topk = topk.localCheckpoint(eager=True)
-        # guarantee: unexplored cells are at least `cur_ring * cell_h` of
-        # latitude away OR the equivalent (cos-lat-shrunk) longitude span;
-        # the latitude component alone gives a safe meters lower bound
-        # scaled by cos for the east-west direction.
-        # per-metric meters-per-degree LOWER bound: on the haversine
-        # sphere the meridian arc is exactly R*pi/180 per degree
-        m_per_deg = (HAVERSINE_R * 3.141592653589793 / 180.0
-                     if metric == "haversine" else M_PER_DEG)
-        guard = (
-            F.lit(cur_ring * cell_h_deg * m_per_deg)
-            * F.least(F.lit(1.0), F.cos(F.radians(F.col("q_lat"))))
-        )
-        agg = topk.groupBy("q_id", "q_lon", "q_lat").agg(
-            F.count("*").alias("n_found"), F.max("dist_m").alias("kth_dist")
-        )
-        done_q = agg.where((F.col("n_found") >= k) & (F.col("kth_dist") <= guard))
-        got = topk.join(done_q.select("q_id"), "q_id", "left_semi")
-        results = got if results is None else results.unionByName(got)
-        # tiny (query-count) frame: checkpoint so the next round's plan
-        # does not re-derive it through this round's join
-        remaining = remaining.join(done_q.select("q_id"), "q_id",
-                                   "left_anti").localCheckpoint(eager=True)
-        if remaining.isEmpty():
-            break
-    else:
-        # brute force the stragglers (polar / sparse regions)
-        bf_top = _ranked(remaining.crossJoin(
-            pts.select("doc_id", "span_offset", "p_lon", "p_lat")),
-            geodesic_m, k)
-        results = bf_top if results is None else results.unionByName(bf_top)
+            q = q.withColumn("salt", F.explode(
+                F.array(*[F.lit(i) for i in range(n_salt)])))
+        return _ranked(q.join(pts, join_keys, "inner"), geodesic_m, k)
 
-    return results.select("q_id", "doc_id", "span_offset", "dist_m", "rank")
+    queries = queries_df.select(
+        F.col(qid).alias("q_id"), F.col(qlon).alias("q_lon"), F.col(qlat).alias("q_lat"))
+    # meters-per-degree lower bound; exact on the haversine sphere
+    m_per_deg = HAVERSINE_R * np.pi / 180 if metric == "haversine" else M_PER_DEG
+    unit = (F.lit(cells.cell_size_deg(res)[1] * m_per_deg)
+            * F.least(F.lit(1.0), F.cos(F.radians(F.col("q_lat")))))
+    d1 = F.col("kth_dist")
+    # 0 = certified by ring 1; n = the whole grid.  A CASE, so the
+    # division never sees unit <= 0 (ANSI mode raises on it)
+    ring = (F.when((F.col("n_found") < k) | (unit <= 0), n)
+            .when(d1 <= unit, 0)
+            .when(d1 / unit >= n // 4, n)  # R > 2^res / 4: dl > 90 deg
+            .otherwise(F.floor(d1 / unit) + 1))
+    # every query beside its ring-1 top-k (one null row if it found
+    # none) and its ring, materialized once because both outputs read it
+    w = Window.partitionBy("q_id")
+    first = (queries.join(ranked_within(queries, 1).drop("q_lon", "q_lat"),
+                          "q_id", "left")
+             .withColumn("n_found", F.count("doc_id").over(w))
+             .withColumn("kth_dist", F.max("dist_m").over(w))
+             .withColumn("ring", ring.cast("long"))
+             .localCheckpoint(eager=True))
+
+    widened = ranked_within(
+        first.where("ring > 0 AND coalesce(rank, 1) = 1")
+        .select("q_id", "q_lon", "q_lat", "ring"), F.col("ring"))
+    out = ["q_id", "doc_id", "span_offset", "dist_m", "rank"]
+    return first.where("ring = 0").select(out).unionByName(widened.select(out))
 
 
 def knn_brute_force(points_df, queries_df, k: int = 10,

@@ -35,32 +35,3 @@ def salted_count(df, key_col: str = "cell", id_col: str = "doc_id", n_salt: int 
     salted = with_salt(df, key_col, id_col, n_salt)
     partial = salted.groupBy(key_col, "salted_cell").agg(F.count("*").alias("partial_n"))
     return partial.groupBy(key_col).agg(F.sum("partial_n").alias("n"))
-
-
-def salted_agg(df, key_col: str, id_col: str, aggs: dict, n_salt: int = 16):
-    """Generic two-phase aggregation for decomposable aggregates.
-
-    aggs: {out_name: (col, 'sum'|'count'|'min'|'max')}"""
-    from pyspark.sql import functions as F
-
-    salted = with_salt(df, key_col, id_col, n_salt)
-    partial_exprs = []
-    final_exprs = []
-    for out, (col, how) in aggs.items():
-        p = f"_p_{out}"
-        if how == "count":
-            partial_exprs.append(F.count(col).alias(p))
-            final_exprs.append(F.sum(p).alias(out))
-        elif how == "sum":
-            partial_exprs.append(F.sum(col).alias(p))
-            final_exprs.append(F.sum(p).alias(out))
-        elif how == "min":
-            partial_exprs.append(F.min(col).alias(p))
-            final_exprs.append(F.min(p).alias(out))
-        elif how == "max":
-            partial_exprs.append(F.max(col).alias(p))
-            final_exprs.append(F.max(p).alias(out))
-        else:
-            raise ValueError(f"non-decomposable aggregate {how!r}")
-    partial = salted.groupBy(key_col, "salted_cell").agg(*partial_exprs)
-    return partial.groupBy(key_col).agg(*final_exprs)

@@ -778,6 +778,51 @@ def test_lsh_prebuilt_matches_in_query(spark, tmp_path):
             ["q_id", "vec_id", "rank", "cosine"]]))
 
 
+def test_prebuilt_probe_leaves_session_conf_alone(spark, tmp_path,
+                                                  monkeypatch):
+    """Opening a local index never sets a session conf (a concurrent
+    query on the same session would see it): the probe lists the
+    partition directories itself, and opening an index with more of
+    them than the parallel-discovery threshold launches no Spark job."""
+    import os
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from proj_4_spark.functions.ann_index import (_read_index,
+                                                  build_lsh_index,
+                                                  lsh_topk_prebuilt)
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.where("vec_id < 10").selectExpr("vec_id as q_id",
+                                                  "embedding")
+    path = str(tmp_path / "lsh_idx")
+    build_lsh_index(emb, path, dim=64, n_planes=8, seed=42)
+    n_dirs = sum(d.startswith("bucket=") for d in os.listdir(path))
+    before = spark.conf.get(key)
+    assert n_dirs > int(before)
+
+    touched = []
+
+    def recording(orig):
+        def wrapped(self, k, *args):
+            touched.append(k)
+            return orig(self, k, *args)
+        return wrapped
+
+    for name in ("set", "unset"):
+        monkeypatch.setattr(RuntimeConfig, name,
+                            recording(getattr(RuntimeConfig, name)))
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    index = _read_index(spark, path, "bucket")
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    assert index.count() == emb.count()
+    assert lsh_topk_prebuilt(spark, path, queries, k=5,
+                             multiprobe=2).count() == 50
+    assert key not in touched and spark.conf.get(key) == before
+
+
 def test_ivf_prebuilt_matches_in_query(spark, tmp_path):
     """ivf_topk_prebuilt (seed quantizer) == ivf_topk; the probe plan
     reads only the probed list_id partitions."""

@@ -182,6 +182,26 @@ def test_pip_join_cells_is_hash_join_no_broadcast_nlj(spark):
     assert not [i for i in cell_inputs if "ring" in i], cell_inputs
 
 
+def test_knn_join_has_no_cross_product(spark):
+    """kNN candidates come from equi-joins on the cell key in both
+    passes: a query that found nothing in ring 1 goes to the whole grid
+    through the same widening join, never a cross join."""
+    from proj_4_spark.spatial.knn import knn_join
+
+    pts = spark.createDataFrame(
+        [("near", 0, 1.0, 2.0), ("far", 0, 120.0, -60.0)],
+        "doc_id string, span_offset int, lon double, lat double")
+    queries = spark.createDataFrame(
+        [("q_near", 1.5, 2.0), ("q_far", -100.0, 40.0)],
+        "q_id string, lon double, lat double")
+    out = knn_join(pts, queries, k=1, metric="haversine")
+    assert sorted((r.q_id, r.doc_id) for r in out.collect()) == [
+        ("q_far", "near"), ("q_near", "near")]
+    txt = plan_of(out)
+    assert "CartesianProduct" not in txt
+    assert "BroadcastNestedLoopJoin" not in txt
+
+
 def test_ivf_single_pass_single_exchange(spark):
     """IVF ANN plan (r8): ONE mapInArrow corpus pass emits narrow
     candidate rows against the closure-held query batch — no corpus

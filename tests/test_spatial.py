@@ -131,6 +131,27 @@ def test_neighbors_col_exact_decode_near_row_boundary(spark):
     assert got_sets == expect_sets
 
 
+def test_neighbors_col_ring_column_distinct(spark):
+    """A per-row ring Column gives neighbors_np's cell set with each cell
+    once: rows clamp at the poles and columns cap at the 2^res columns
+    once the ring spans the globe."""
+    from pyspark.sql import functions as F
+
+    res = 4
+    rows = [(iy, ix, ring) for iy, ix in ((0, 0), (7, 8), (15, 15))
+            for ring in (0, 1, 3, 7, 8, 16)]
+    ids = [int((np.int64(res) << cells.RES_SHIFT)
+               | (np.int64(iy) << cells.IY_SHIFT) | ix) for iy, ix, _ in rows]
+    df = spark.createDataFrame(
+        [(c, r) for c, (_, _, r) in zip(ids, rows)], "cell long, ring int")
+    got = df.select(cells.neighbors_col(F.col("cell"), res, F.col("ring"))
+                    .alias("nb")).collect()
+    for c, (_, _, ring), g in zip(ids, rows, got):
+        nb = [int(x) for x in g["nb"]]
+        assert len(nb) == len(set(nb))
+        assert set(nb) == set(map(int, cells.neighbors_np(c, ring)[0]))
+
+
 def test_pip_join_distinct_zones_same_lon_profile(spark):
     """Regression: the exact-test UDF once grouped candidate rows by a
     (len, first_lon, last_lon) ring key — two lat-stacked zones sharing a
@@ -271,7 +292,7 @@ def test_knn_matches_brute_force(spark, media_pts):
     qpath = FX.ensure_fixture("knn_queries.parquet", FX.knn_queries)
     queries = spark.read.parquet(qpath).limit(25)
     pts = media_pts.where("abs(lon) <= 180 and abs(lat) <= 85")
-    got = knn_join(pts, queries, k=5, max_ring=3).toPandas()
+    got = knn_join(pts, queries, k=5).toPandas()
     exp = knn_brute_force(pts, queries, k=5).toPandas()
     g = got.sort_values(["q_id", "rank"]).reset_index(drop=True)
     e = exp.sort_values(["q_id", "rank"]).reset_index(drop=True)
@@ -280,6 +301,33 @@ def test_knn_matches_brute_force(spark, media_pts):
     assert (g["doc_id"] == e["doc_id"]).all()
     assert (g["span_offset"] == e["span_offset"]).all()
     assert np.allclose(g["dist_m"], e["dist_m"], rtol=1e-9)
+
+
+def test_knn_pole_crossing_neighbour(spark):
+    """At res 4 the nearest point to (1, 30) lies across the pole, in the
+    one column ring 7 leaves unexplored, where ring 7's guard (7.54e6 m)
+    is past its valid range: trusting that guard certifies the point at
+    (1, -36.5).  The query at (1, 80) derives ring 6 or 7 from
+    its ring-1 distance and must take the whole grid instead.  Both must
+    equal brute force bit for bit, under both metrics."""
+    cases = [
+        ([("far", 0, 1.0, -36.5), ("pole", 0, -170.0, 85.0)], ("qA", 1.0, 30.0)),
+        ([("ring1", 0, 1.0, 68.3), ("across", 0, -179.0, 89.9)], ("qB", 1.0, 80.0)),
+    ]
+    for metric in ("karney", "haversine"):
+        for pts, query in cases:
+            pts = spark.createDataFrame(
+                pts, "doc_id string, span_offset int, lon double, lat double")
+            queries = spark.createDataFrame(
+                [query], "q_id string, lon double, lat double")
+            got = knn_join(pts, queries, k=1, metric=metric).collect()
+            exp = knn_brute_force(pts, queries, k=1, metric=metric).collect()
+            assert [r.doc_id for r in exp] == ["pole" if query[0] == "qA"
+                                               else "across"]
+            key = [(r.q_id, r.doc_id, r.span_offset, r.rank,
+                    np.float64(r.dist_m).view(np.int64)) for r in got]
+            assert key == [(r.q_id, r.doc_id, r.span_offset, r.rank,
+                            np.float64(r.dist_m).view(np.int64)) for r in exp]
 
 
 def test_span_sequence_invariant_after_pipeline(spark, docs, media_pts):
@@ -322,9 +370,9 @@ def test_knn_salted_equals_plain(spark):
     )
     queries = pts.where("doc_id % 211 = 0").selectExpr(
         "doc_id as q_id", "lon", "lat")
-    plain = knn_join(pts, queries, k=5, max_ring=3,
+    plain = knn_join(pts, queries, k=5,
                      metric="haversine").orderBy("q_id", "rank").toPandas()
-    salted = knn_join(pts, queries, k=5, max_ring=3,
+    salted = knn_join(pts, queries, k=5,
                       metric="haversine", n_salt=8
                       ).orderBy("q_id", "rank").toPandas()
     assert len(plain) == len(salted)
@@ -374,7 +422,7 @@ def test_knn_res_rule_and_fileless_frames(spark, tmp_path):
 def test_knn_filtered_subset_of_large_file(spark):
     """The cell resolution follows the scanned file, not the filtered
     rows: ~1k points kept out of the sf0.1 events (100k rows) get the
-    file's resolution, the ring rounds still certify most queries, and
+    file's resolution, ring 3 would still certify most queries, and
     the join matches brute force."""
     import __spark_entry__ as E
     from pyspark.sql import functions as F
@@ -390,20 +438,20 @@ def test_knn_filtered_subset_of_large_file(spark):
         F.col("event_id").cast("string").alias("q_id"), "lon", "lat")
     res = scale.knn_res(scale.parquet_stats(pts)[0])
     assert pts.count() <= 1000 and res == scale.knn_res(100_000)
-    k, max_ring = 5, 3
-    got = knn_join(pts, queries, k=k, max_ring=max_ring, metric="haversine"
+    k, ring = 5, 3
+    got = knn_join(pts, queries, k=k, metric="haversine"
                    ).orderBy("q_id", "rank").toPandas()
     exp = knn_brute_force(pts, queries, k=k, metric="haversine"
                           ).orderBy("q_id", "rank").toPandas()
     assert len(got) == len(exp) == k * queries.count()
     assert (got["doc_id"] == exp["doc_id"]).all()
     assert np.allclose(got["dist_m"], exp["dist_m"], rtol=1e-9)
-    # a query is certified within the rings iff its k-th distance is
-    # under the last ring's guard (knn_join's lower bound on unexplored
+    # a query is certified within `ring` iff its k-th distance is
+    # under that ring's guard (knn_join's lower bound on unexplored
     # cells)
     kth = exp.groupby("q_id")["dist_m"].max().rename("kth").reset_index() \
         .merge(queries.toPandas(), on="q_id")
-    guard = (max_ring * cells.cell_size_deg(res)[1] * HAVERSINE_R * np.pi
+    guard = (ring * cells.cell_size_deg(res)[1] * HAVERSINE_R * np.pi
              / 180 * np.minimum(1.0, np.cos(np.radians(kth["lat"]))))
     assert (kth["kth"] <= guard).mean() >= 0.9
 

@@ -145,12 +145,12 @@ queries = (spark.range(0, 16).select(
 
 
 def knn_plain():
-    return knn_join(kpts, queries, k=5, max_ring=2,
+    return knn_join(kpts, queries, k=5,
                     metric="haversine").count()
 
 
 def knn_salted():
-    return knn_join(kpts, queries, k=5, max_ring=2,
+    return knn_join(kpts, queries, k=5,
                     metric="haversine", n_salt=N_SALT).count()
 
 
