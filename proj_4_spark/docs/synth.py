@@ -17,11 +17,8 @@ partition generates its own id-range with no coordination).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 SEED = 42
 HOT_CENTERS = [
@@ -105,14 +102,6 @@ def synthesize_arrow(n_docs: int, seed: int = SEED) -> pa.Table:
         {"doc_id": pa.array(ids, pa.string()),
          "spans": pa.array(spans, pa.list_(SPANS_SCHEMA))}
     )
-
-
-def write_fixture(path: str, n_docs: int = 10_000, seed: int = SEED) -> str:
-    """Write (or reuse) the documents_sf0 fixture parquet."""
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(synthesize_arrow(n_docs, seed), path)
-    return path
 
 
 def synthesize_spark(spark, n_docs: int, seed: int = SEED, partitions: int | None = None):

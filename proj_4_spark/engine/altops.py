@@ -216,12 +216,13 @@ def alt_transform(df, candidates: list[Candidate],
     inputs) and False for direction='inv', where the inputs are
     typically projected meters and a deg->rad scale would corrupt them.
 
-    When every candidate carries a projstring `spec` (the
-    from_projstring path), only the specs + metadata ship to workers
+    Every candidate must carry a projstring `spec` (as every library
+    producer sets it: from_projstring, crs_to_crs_candidates,
+    vertical_candidates): only the specs + metadata ship to workers
     and each worker rebuilds (and caches) the operations — grids load
     once per worker from their own search path, never through the task
-    binary.  Candidates with bespoke ops (no spec) fall back to closure
-    pickling.
+    binary.  A candidate without a spec raises ValueError; bespoke ops
+    run through AltOperation in NumPy.
 
     Returns df plus columns {x, y, chosen_op} (prefix-able)."""
     import pandas as pd
@@ -231,27 +232,23 @@ def alt_transform(df, candidates: list[Candidate],
     d2r = np.pi / 180.0
     if degrees is None:
         degrees = direction == "fwd"
-    if all(c.spec is not None for c in candidates):
-        meta = tuple(
-            (c.spec, tuple(c.bbox_src), tuple(c.bbox_dst), c.accuracy,
-             c.is_offshore, c.needs_grids, c.name, c.bbox_units,
-             c.bbox_dst_units)
-            for c in candidates
-        )
-
-        def _get_alt():
-            return _cached_alt_operation(meta)
-    else:
-        alt_obj = AltOperation(candidates)
-
-        def _get_alt():
-            return alt_obj
+    for c in candidates:
+        if c.spec is None:
+            raise ValueError(
+                f"alt_transform candidate {c.name!r} has no projstring "
+                "spec (build it with Candidate.from_projstring)")
+    meta = tuple(
+        (c.spec, tuple(c.bbox_src), tuple(c.bbox_dst), c.accuracy,
+         c.is_offshore, c.needs_grids, c.name, c.bbox_units,
+         c.bbox_dst_units)
+        for c in candidates
+    )
 
     @pandas_udf("struct<x: double, y: double, chosen: int>")
     def _alt(lo: pd.Series, la: pd.Series) -> pd.DataFrame:
         if len(lo) == 0:
             return pd.DataFrame({"x": [], "y": [], "chosen": []})
-        alt = _get_alt()
+        alt = _cached_alt_operation(meta)
         lam = lo.to_numpy(np.float64) * (d2r if degrees else 1.0)
         phi = la.to_numpy(np.float64) * (d2r if degrees else 1.0)
         zz = np.zeros_like(lam)

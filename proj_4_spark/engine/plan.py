@@ -56,7 +56,6 @@ def _registry():
     from proj_4_spark.kernels import lcc as k_lcc
     from proj_4_spark.kernels import merc as k_merc
     from proj_4_spark.kernels import misc as k_misc
-    from proj_4_spark.kernels import molodensky as k_molo
     from proj_4_spark.kernels import azimuthal as k_azim
     from proj_4_spark.kernels import pseudocyl as k_pcyl
     from proj_4_spark.kernels import pseudocyl2 as k_pc2

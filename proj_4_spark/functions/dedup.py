@@ -36,30 +36,9 @@ def _hash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
-def _shingle_hashes(text: str, k: int = 5) -> np.ndarray:
-    """Character k-shingles -> int64 hashes (FNV-1a, vectorized)."""
-    data = text.encode("utf-8", "ignore")
-    if len(data) < k:
-        data = data + b" " * (k - len(data))
-    arr = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    n = len(arr) - k + 1
-    h = np.full(n, 0xCBF29CE484222325, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i in range(k):
-            h = (h ^ arr[i : i + n]) * np.uint64(0x100000001B3)
-    return np.unique(h)
-
-
-def _shingle_hashes_31(text: str, k: int = 5) -> np.ndarray:
-    """31-bit-folded shingle universe for the minhash permutations."""
-    return np.unique(
-        (_shingle_hashes(text, k) & np.uint64(0x7FFFFFFF)).astype(np.int64)
-    )
-
-
 def _shingle_batch(texts, k: int = 5, unique: bool = False):
-    """Batch twin of _shingle_hashes: ONE vectorized FNV pass over the
-    whole Arrow batch (no per-doc NumPy churn).
+    """Character k-shingle hashes (FNV-1a) of a whole Arrow batch in
+    ONE vectorized pass (no per-doc NumPy churn).
 
     Returns (hashes, offsets, counts): every doc's shingle hashes
     concatenated doc-by-doc (uint64), doc i occupying

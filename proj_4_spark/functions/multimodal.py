@@ -7,9 +7,9 @@ pandas UDFs over mapInPandas.
 Decode is REAL for self-describing uncompressed formats (BMP images,
 PCM16 WAV audio, YUV4MPEG2 video — pure-NumPy codecs in
 functions/codecs.py, encode+decode roundtrip-tested); formats that need
-external libraries (JPEG/MP4 — not in this container) raise
-`DecodeUnavailable`, and a deterministic fake (`fake=True`) remains for
-shape-only tests.
+external libraries (JPEG/MP4) raise `DecodeUnavailable`.  The synthetic
+media table (`synth_media_table`) is made of such real payloads, so
+tests and the fixture oracle run the same decode path as production.
 
 Scale notes: media bytes dominate row width -> keep them in their own
 column family / table, process with mapInPandas so bytes stream through
@@ -18,8 +18,6 @@ Arrow without JVM row materialization, and size partitions by
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
@@ -48,28 +46,11 @@ def _real_decode(payload: bytes, media_type: str):
     return arr
 
 
-def _fake_decode(payload: bytes, media_type: str) -> np.ndarray:
-    """Deterministic stand-in: pseudo-pixels from the payload digest.
-    Keeps batch shapes, dtypes and downstream feature math real."""
-    digest = hashlib.sha256(payload or b"").digest()
-    seed = int.from_bytes(digest[:8], "little")
-    rng = np.random.Generator(np.random.PCG64(seed))
-    if media_type == "image":
-        return rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    if media_type == "audio":
-        return (rng.standard_normal(1600) * 0.1).astype(np.float32)
-    if media_type == "video":
-        return rng.integers(0, 256, (4, 8, 8, 3), dtype=np.uint8)
-    raise ValueError(f"unknown media_type {media_type!r}")
-
-
-def payload_features(payload: bytes, media_type: str,
-                     fake: bool = False) -> list:
+def payload_features(payload: bytes, media_type: str) -> list:
     """Single-payload decode -> 8-dim feature vector.  Shared by the
     Spark mapInPandas path and the driver-side fixture generator, so the
     DuckDB oracle checks the SAME math through different plumbing."""
-    decode = _fake_decode if fake else _real_decode
-    arr = decode(payload, media_type).astype(np.float64)
+    arr = _real_decode(payload, media_type).astype(np.float64)
     flat = arr.ravel()
     q = np.quantile(flat, [0.25, 0.75])
     return [
@@ -81,7 +62,7 @@ def payload_features(payload: bytes, media_type: str,
 
 
 def extract_features(media_df, payload_col: str = "payload",
-                     meta_col: str = "meta", fake: bool = False):
+                     meta_col: str = "meta"):
     """binary payload -> fixed-width feature vector (array<float>, 8 dims:
     mean/std/min/max per leading channels, deterministic).
 
@@ -91,7 +72,7 @@ def extract_features(media_df, payload_col: str = "payload",
     def gen(batches):
         for pdf in batches:
             feats = [
-                payload_features(payload, meta["media_type"], fake=fake)
+                payload_features(payload, meta["media_type"])
                 for payload, meta in zip(pdf[payload_col], pdf[meta_col])
             ]
             out = pdf[[c for c in pdf.columns if c not in (payload_col,)]].copy()
@@ -106,11 +87,10 @@ def extract_features(media_df, payload_col: str = "payload",
 
 
 def frame_sample(media_df, payload_col: str = "payload", meta_col: str = "meta",
-                 every_n: int = 2, fake: bool = False):
+                 every_n: int = 2):
     """Video frame sampling: one output row per sampled frame
     (doc exploded by frame index) — the row-expansion plumbing for
     video pipelines."""
-    decode = _fake_decode if fake else _real_decode
 
     def gen(batches):
         for pdf in batches:
@@ -121,7 +101,7 @@ def frame_sample(media_df, payload_col: str = "payload", meta_col: str = "meta",
                 meta = pdf[meta_col].iloc[i]
                 if meta["media_type"] != "video":
                     continue
-                arr = decode(pdf[payload_col].iloc[i], "video")
+                arr = _real_decode(pdf[payload_col].iloc[i], "video")
                 for fi in range(0, arr.shape[0], every_n):
                     for c in rows:
                         if c not in ("frame_idx", "frame_mean"):
@@ -181,16 +161,13 @@ def resize_array(arr: np.ndarray, height: int, width: int,
 
 def resize_images(media_df, height: int, width: int,
                   method: str = "bilinear",
-                  payload_col: str = "payload", meta_col: str = "meta",
-                  fake: bool = False):
+                  payload_col: str = "payload", meta_col: str = "meta"):
     """Image resize over a binary media column: decode (real codecs) ->
     resize_array -> re-encode as PNG; non-image rows pass through
     untouched.  mapInPandas, bytes never materialize in JVM rows.
 
     Adds out_width/out_height columns; payload is replaced for images."""
     from proj_4_spark.functions.codecs import encode_png
-
-    decode = _fake_decode if fake else _real_decode
 
     def gen(batches):
         import pandas as pd
@@ -206,7 +183,7 @@ def resize_images(media_df, height: int, width: int,
                     hs.append(meta.get("height"))
                     metas.append(meta)
                     continue
-                arr = decode(payload, "image")
+                arr = _real_decode(payload, "image")
                 small = resize_array(arr, height, width, method)
                 payloads.append(encode_png(small))
                 ws.append(width)
@@ -228,20 +205,16 @@ def resize_images(media_df, height: int, width: int,
     return media_df.mapInPandas(gen, schema=schema)
 
 
-def synth_media_row(i: int, seed: int = 42, real: bool = True):
-    """Deterministic (payload, meta) for row id `i` — one PCG64
+def synth_media_row(i: int, seed: int = 42):
+    """Deterministic (payload, meta) for row id `i`: genuine BMP /
+    PCM16-WAV / Y4M bytes from the pure-NumPy codecs, one PCG64
     substream per row so generation distributes and the driver-side
     fixture generator reproduces the exact bytes."""
     from proj_4_spark.functions.codecs import encode_bmp, encode_wav, encode_y4m
 
     rng = np.random.Generator(np.random.PCG64(seed ^ int(i)))
     kind = ["image", "audio", "video"][int(i) % 3]
-    if not real:
-        payload = rng.bytes(64 + int(i) % 128)
-        codec = "fake"
-        w = h = 16 if kind != "audio" else 0
-        dur = 100 if kind != "image" else 0
-    elif kind == "image":
+    if kind == "image":
         w = h = 16 + 8 * (int(i) % 3)
         payload = encode_bmp(rng.integers(0, 256, (h, w, 3), dtype=np.uint8))
         codec, dur = "bmp", 0
@@ -260,17 +233,14 @@ def synth_media_row(i: int, seed: int = 42, real: bool = True):
     return payload, meta
 
 
-def synth_media_table(spark, n: int = 200, seed: int = 42, real: bool = True):
-    """Deterministic media table for tests/bench.  With real=True the
-    payloads are genuine BMP / PCM16-WAV / Y4M bytes (encoded by the
-    pure-NumPy codecs, per-row PCG64 substream so generation
-    distributes); real=False keeps the legacy opaque-random payloads."""
+def synth_media_table(spark, n: int = 200, seed: int = 42):
+    """Deterministic media table for tests/bench: `synth_media_row`
+    payloads, generated per partition."""
 
     def gen(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()
-            rows = [synth_media_row(int(i), seed=seed, real=real)
-                    for i in ids]
+            rows = [synth_media_row(int(i), seed=seed) for i in ids]
             yield pd.DataFrame({
                 "media_id": [f"m-{int(i):08d}" for i in ids],
                 "payload": [r[0] for r in rows],

@@ -174,14 +174,3 @@ def fresh(x, y, z, t):
         np.array(z, dtype=np.float64, copy=True),
         np.array(t, dtype=np.float64, copy=True),
     )
-
-
-def coord_error_mask(x, y, z, t, mask):
-    """Set error sentinel (NaN) on all four components where mask is true
-    (reference proj_coord_error sets all-HUGE_VAL)."""
-    if mask.any():
-        x = np.where(mask, np.nan, x)
-        y = np.where(mask, np.nan, y)
-        z = np.where(mask, np.nan, z)
-        t = np.where(mask, np.nan, t)
-    return x, y, z, t

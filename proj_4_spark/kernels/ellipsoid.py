@@ -122,10 +122,6 @@ class Ellipsoid:
         object.__setattr__(self, "one_es", one_es)
         object.__setattr__(self, "rone_es", 1.0 / one_es)
 
-    @property
-    def is_sphere(self) -> bool:
-        return self.es == 0.0
-
 
 def ellipsoid_from_params(params: dict[str, str]) -> Ellipsoid:
     """Resolve +ellps/+a/+b/+rf/+f/+es/+e/+R into an Ellipsoid.

@@ -132,21 +132,3 @@ def setup_sterea(P: PJ) -> PJ:
     P.left = UNITS_RADIANS
     P.right = UNITS_CLASSIC
     return P
-
-
-def setup_ups(P: PJ) -> PJ:  # moved to azimuthal.py; kept for import compat
-    from proj_4_spark.kernels.azimuthal import setup_ups as _s
-
-    return _s(P)
-
-
-def setup_stere(P: PJ) -> PJ:
-    from proj_4_spark.kernels.azimuthal import setup_stere as _s
-
-    return _s(P)
-
-
-def setup_laea(P: PJ) -> PJ:
-    from proj_4_spark.kernels.azimuthal import setup_laea as _s
-
-    return _s(P)

@@ -13,8 +13,8 @@ from __future__ import annotations
 
 import re
 
-from proj_4_spark.kernels.ellipsoid import ELLPS_TABLE
 from proj_4_spark.sources.epsg_methods import fmt
+from proj_4_spark.sources.wkt2 import ellipsoid_fragment
 
 _ESRI_SIMPLE = {
     # esri projection name -> (proj name, uses lat_ts from SP1)
@@ -142,22 +142,7 @@ def _wkt1_base_fragments(text: str) -> list[str]:
         text)
     if not m:
         raise ValueError("WKT1 without SPHEROID")
-    a, rf = float(m.group(2)), float(m.group(3))
-    frag = None
-    for name, spec in ELLPS_TABLE.items():
-        if spec.get("a") != a:
-            continue
-        erf = spec.get("rf")
-        if erf is None:
-            b = spec["b"]
-            erf = 0.0 if b == a else a / (a - b)
-        if erf == rf:
-            frag = f"ellps={name}"
-            break
-    if frag is None:
-        frag = (f"a={fmt(a)} b={fmt(a)}" if rf == 0.0
-                else f"a={fmt(a)} rf={fmt(rf)}")
-    frags = [frag]
+    frags = [ellipsoid_fragment(float(m.group(2)), float(m.group(3)))]
     mt = re.search(r'TOWGS84\[([^\]]*)\]', text)
     if mt:
         vals = [float(v) for v in mt.group(1).split(",")]

@@ -118,29 +118,6 @@ def knn_queries(n: int = 100, seed: int = SEED + 1) -> pa.Table:
     })
 
 
-def expected_knn(points, queries: pa.Table, k: int = 10,
-                 a: float = 6378137.0, f: float = 1 / 298.257222101):
-    """Oracle kNN: brute-force Karney inverse on the driver, ties broken by
-    (dist, doc_id, span_offset).  Returns {q_id: [(doc_id, off, dist)...]}"""
-    from proj_4_spark.kernels.common import DEG_TO_RAD
-    from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
-
-    doc_ids = [p[0] for p in points]
-    offs = [p[1] for p in points]
-    plon = np.array([p[2] for p in points], dtype=np.float64) * DEG_TO_RAD
-    plat = np.array([p[3] for p in points], dtype=np.float64) * DEG_TO_RAD
-    out = {}
-    for q in queries.to_pylist():
-        d = geodesic_inverse_karney(
-            np.full_like(plon, q["lon"] * DEG_TO_RAD),
-            np.full_like(plat, q["lat"] * DEG_TO_RAD),
-            plon, plat, a, f,
-        )
-        order = sorted(range(len(d)), key=lambda i: (d[i], doc_ids[i], offs[i]))[:k]
-        out[q["q_id"]] = [(doc_ids[i], int(offs[i]), float(d[i])) for i in order]
-    return out
-
-
 def ensure_fixture(name: str, builder) -> str:
     """Build-once parquet fixture under fixtures/."""
     os.makedirs(FIXTURE_DIR, exist_ok=True)
@@ -204,7 +181,7 @@ def multimodal_expected_table(n: int = 300, seed: int = SEED) -> pa.Table:
 
     ids, kinds, means, stds = [], [], [], []
     for i in range(n):
-        payload, meta = synth_media_row(i, seed=seed, real=True)
+        payload, meta = synth_media_row(i, seed=seed)
         feats = payload_features(payload, meta["media_type"])
         ids.append(f"m-{i:08d}")
         kinds.append(meta["media_type"])

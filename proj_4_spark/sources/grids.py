@@ -289,13 +289,13 @@ def read_ntv1(path: str) -> list[HGrid]:
     )]
 
 
-def load_hgrids(names: str) -> list[HGrid]:
-    """Load a +grids=a.gsb,b.gsb list.  '@' prefix marks a grid as
-    optional — a missing optional grid is skipped silently (nadgrids
-    semantics, src/datums.cpp:49 / grid init).  Subgrid preference at
-    lookup time: most-refined containing grid wins (gridAt child
-    recursion, src/grids.cpp:2402-2414)."""
-    out: list[HGrid] = []
+def _load_grid_list(names: str, null_grid, read) -> list:
+    """Load a +grids=a,b,... list in list order.  An '@' prefix marks a
+    grid as optional — a missing optional grid is skipped silently
+    (nadgrids semantics, src/datums.cpp:49 / grid init); 'null' is the
+    builtin zero-shift grid from ``null_grid()``; ``read(name, path)``
+    returns the grids of one resolved file."""
+    out = []
     for raw in str(names).split(","):
         nm = raw.strip()
         if not nm:
@@ -303,7 +303,7 @@ def load_hgrids(names: str) -> list[HGrid]:
         optional = nm.startswith("@")
         nm = nm.lstrip("@")
         if nm == "null":
-            out.append(null_hgrid())
+            out.append(null_grid())
             continue
         try:
             path = resolve_grid_path(nm)
@@ -311,21 +311,30 @@ def load_hgrids(names: str) -> list[HGrid]:
             if optional:
                 continue
             raise
-        if nm.endswith(".gsb"):
-            out.extend(read_ntv2(path))
-        elif _is_tiff(path):
-            out.extend(read_gtiff_hgrids(path))
-        else:
-            # sniff magic: CTable2, NTv1 ("HEADER"), else NTv2
-            with open(path, "rb") as f:
-                magic = f.read(8)
-            if magic == b"CTABLE V":
-                out.extend(read_ctable2(path))
-            elif magic.startswith(b"HEADER"):
-                out.extend(read_ntv1(path))
-            else:
-                out.extend(read_ntv2(path))
+        out.extend(read(nm, path))
     return out
+
+
+def _read_hgrid_file(nm: str, path: str) -> list[HGrid]:
+    if nm.endswith(".gsb"):
+        return read_ntv2(path)
+    if _is_tiff(path):
+        return read_gtiff_hgrids(path)
+    # sniff magic: CTable2, NTv1 ("HEADER"), else NTv2
+    with open(path, "rb") as f:
+        magic = f.read(8)
+    if magic == b"CTABLE V":
+        return read_ctable2(path)
+    if magic.startswith(b"HEADER"):
+        return read_ntv1(path)
+    return read_ntv2(path)
+
+
+def load_hgrids(names: str) -> list[HGrid]:
+    """Load a +grids=a.gsb,b.gsb horizontal list (see _load_grid_list).
+    Subgrid preference at lookup time: most-refined containing grid
+    wins (gridAt child recursion, src/grids.cpp:2402-2414)."""
+    return _load_grid_list(names, null_hgrid, _read_hgrid_file)
 
 
 def null_hgrid() -> HGrid:
@@ -348,27 +357,10 @@ def null_vgrid() -> VGrid:
 
 
 def load_vgrids(names: str) -> list[VGrid]:
-    out: list[VGrid] = []
-    for raw in str(names).split(","):
-        nm = raw.strip()
-        if not nm:
-            continue
-        optional = nm.startswith("@")
-        nm = nm.lstrip("@")
-        if nm == "null":
-            out.append(null_vgrid())
-            continue
-        try:
-            path = resolve_grid_path(nm)
-        except FileNotFoundError:
-            if optional:
-                continue
-            raise
-        if _is_tiff(path):
-            out.extend(read_gtiff_vgrids(path))
-        else:
-            out.append(read_gtx(path))
-    return out
+    return _load_grid_list(
+        names, null_vgrid,
+        lambda nm, path: (read_gtiff_vgrids(path) if _is_tiff(path)
+                          else [read_gtx(path)]))
 
 
 def read_gtiff_hgrids(path: str) -> list[HGrid]:
@@ -472,26 +464,13 @@ def load_generic_grids(names: str):
     (pj_generic_grid_init); GeoTIFF-backed, plus the 'null' grid."""
     from proj_4_spark.sources.tiff import GTiffGrid, read_gtiff_grids
 
-    out = []
-    for raw in str(names).split(","):
-        nm = raw.strip()
-        if not nm:
-            continue
-        optional = nm.startswith("@")
-        nm = nm.lstrip("@")
-        if nm == "null":
-            out.append(GTiffGrid(
-                name="null", width=3, height=3, spp=3,
-                data=np.zeros((3, 3, 3), dtype=np.float32), metadata={},
-                nodata=None, is_geographic=True,
-                west=-np.pi, south=-np.pi / 2, east=np.pi, north=np.pi / 2,
-                resx=np.pi, resy=np.pi / 2, description="null"))
-            continue
-        try:
-            path = resolve_grid_path(nm)
-        except FileNotFoundError:
-            if optional:
-                continue
-            raise
-        out.extend(read_gtiff_grids(path))
-    return out
+    def null_grid():
+        return GTiffGrid(
+            name="null", width=3, height=3, spp=3,
+            data=np.zeros((3, 3, 3), dtype=np.float32), metadata={},
+            nodata=None, is_geographic=True,
+            west=-np.pi, south=-np.pi / 2, east=np.pi, north=np.pi / 2,
+            resx=np.pi, resy=np.pi / 2, description="null")
+
+    return _load_grid_list(names, null_grid,
+                           lambda nm, path: read_gtiff_grids(path))

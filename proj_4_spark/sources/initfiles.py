@@ -280,19 +280,21 @@ def vertical_fragment(vert_code) -> str:
     return " ".join(parts)
 
 
-def _with_vertical(horiz_frag: str, vfrag: str) -> str:
-    if not vfrag:
-        return horiz_frag
-    if horiz_frag.endswith(" no_defs"):
-        return (horiz_frag[: -len(" no_defs")] + f" {vfrag} no_defs")
-    return f"{horiz_frag} {vfrag}"
+def splice_fragment(frag: str, extra: str) -> str:
+    """Add ``extra`` to a proj-string fragment, before a trailing
+    ``no_defs`` (vertical fragments, +towgs84/+nadgrids)."""
+    if not extra:
+        return frag
+    if frag.endswith(" no_defs"):
+        return frag[: -len(" no_defs")] + f" {extra} no_defs"
+    return f"{frag} {extra}"
 
 
 def _compound_expand(horiz_code: int, vert_code: int) -> str:
     frag = _epsg_builtin(horiz_code)
     if frag is None:
         raise LookupError(f"epsg:{horiz_code} not in built-in catalog")
-    return _with_vertical(frag, vertical_fragment(vert_code))
+    return splice_fragment(frag, vertical_fragment(vert_code))
 
 
 def _vertical_or_compound_builtin(code: int) -> str | None:
@@ -316,7 +318,7 @@ def _vertical_or_compound_builtin(code: int) -> str | None:
             else None
         if horiz is None:
             horiz = "proj=longlat datum=WGS84 no_defs"
-        return _with_vertical(horiz, vertical_fragment(code))
+        return splice_fragment(horiz, vertical_fragment(code))
     return None
 
 

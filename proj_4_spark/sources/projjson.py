@@ -4,9 +4,9 @@ Reference: src/iso19111/io.cpp:4905 (``class JSONParser``);
 createFromUserInput dispatches on a leading ``{`` (io.cpp:5974).
 PROJJSON carries the same model as WKT2, so the reader maps the JSON
 dict onto the WKT2 ``Node`` tree and reuses sources/wkt2's compiler —
-the same EPSG method mappers, ellipsoid matching and unit handling —
-so a PROJJSON definition and its WKT2 twin produce identical
-proj-strings.
+the same EPSG method mappers, ellipsoid matching, unit handling and
+BoundCRS reader — so a PROJJSON definition and its WKT2 twin produce
+identical proj-strings.
 
 Supported subset (mirrors the WKT2 reader's):
 - GeographicCRS / GeodeticCRS (datum or datum_ensemble, prime
@@ -15,14 +15,16 @@ Supported subset (mirrors the WKT2 reader's):
   mapping + axis length unit);
 - CompoundCRS (horizontal + vertical), VerticalCRS (ID- or
   name-keyed against the generated vertical presets);
-- BoundCRS: helmert-family transformations -> +towgs84 (PROJJSON
-  values are TRUE values with units — metres / arc-seconds / ppm —
-  unlike the abridged WKT2 convention), NTv2 (EPSG:9615, parameter
-  8656) -> +nadgrids.
+- BoundCRS: the transformation becomes a COORDINATEOPERATION node and
+  goes through wkt2's BOUNDCRS reader — helmert-family methods ->
+  +towgs84 (PROJJSON values are TRUE values with units — metres /
+  arc-seconds / ppm — unlike the abridged WKT2 convention), NTv2
+  (EPSG:9615) -> +nadgrids.
 
 The writer half (projstring_to_projjson) emits the same subset for
-the catalog presets, sharing the WKT2 writer's method tables; the
-round-trip test pins parse(write(x)) == x parameter-exactly.
+the catalog presets from the WKT2 writer's preset resolver and method
+tables; the round-trip test pins parse(write(x)) == x
+parameter-exactly.
 """
 
 from __future__ import annotations
@@ -30,70 +32,86 @@ from __future__ import annotations
 import json
 import math
 
-from proj_4_spark.sources.epsg_methods import fmt
 from proj_4_spark.sources.wkt2 import (
     Node,
+    _inverse_flattening,
     _node_to_projstring,
-    _parse_projstring_tokens,
-    _wkt_family,
-    _WKT_METHODS,
-    _UNIT_WKT,
+    _resolve_preset,
+    _writer_conversion,
 )
 
 _ARCSEC_RAD = math.pi / 180.0 / 3600.0
 _DEG_RAD = math.pi / 180.0
 
+# PROJJSON unit strings -> (WKT unit node kind, factor); exact factors
+# so the wkt2 converters take their exact degree/arc-second/ppm paths
+# (io.cpp getUnit: same five SI-or-common cases)
+_UNIT_STRINGS = {
+    "metre": ("LENGTHUNIT", 1.0),
+    "degree": ("ANGLEUNIT", _DEG_RAD),
+    "arc-second": ("ANGLEUNIT", _ARCSEC_RAD),
+    "grad": ("ANGLEUNIT", math.pi / 200.0),
+    "radian": ("ANGLEUNIT", 1.0),
+    "unity": ("SCALEUNIT", 1.0),
+    "parts per million": ("SCALEUNIT", 1e-6),
+    "kilometre": ("LENGTHUNIT", 1000.0),
+    "foot": ("LENGTHUNIT", 0.3048),
+    "US survey foot": ("LENGTHUNIT", 1200.0 / 3937.0),
+    "year": ("TIMEUNIT", 1.0),
+}
+# unit object "type" -> WKT unit node kind
+_UNIT_TYPES = {"angularunit": "ANGLEUNIT", "linearunit": "LENGTHUNIT",
+               "scaleunit": "SCALEUNIT", "timeunit": "TIMEUNIT"}
 
-def _num(v, kind: str = "L") -> float:
-    """A PROJJSON measure: plain number (SI / degree) or
+
+def _num(v) -> float:
+    """A PROJJSON length or scale measure: plain number (SI) or
     {"value": v, "unit": <string or unit object>}."""
     if isinstance(v, dict):
         val = float(v.get("value", 0.0))
-        u = v.get("unit")
-        f = _unit_conv(u)
-        if f is None:
-            return val
-        if kind == "A":
-            # angle: factor is rad/unit -> degrees
-            return val * f / _DEG_RAD
-        return val * f
+        f = _unit_conv(v.get("unit"))
+        return val if f is None else val * f
     return float(v)
 
 
 def _unit_conv(u) -> float | None:
-    """Conversion factor of a PROJJSON unit (string enum or object);
-    None for the kind's default (metre / degree / unity)."""
-    if u is None or u in ("metre", "degree", "unity"):
-        return None
+    """Conversion factor of a PROJJSON unit (string or object); None for
+    the kind's default (metre / degree / unity) or an unknown unit."""
     if isinstance(u, dict):
         f = u.get("conversion_factor")
         return float(f) if f is not None else None
-    known = {"arc-second": _ARCSEC_RAD, "grad": math.pi / 200.0,
-             "radian": 1.0, "parts per million": 1e-6,
-             "foot": 0.3048, "US survey foot": 1200.0 / 3937.0,
-             "kilometre": 1000.0}
-    return known.get(str(u))
-
-
-def _unit_node(u, wkt_kind: str) -> Node | None:
-    """PROJJSON unit -> a WKT2 unit Node the wkt2 compiler understands
-    (None when the default applies)."""
-    f = _unit_conv(u)
-    if f is None:
+    if u in (None, "metre", "degree", "unity"):
         return None
-    name = u.get("name", "unknown") if isinstance(u, dict) else str(u)
-    return Node(wkt_kind, [name, float(f)])
+    return _UNIT_STRINGS.get(str(u), (None, None))[1]
 
 
-def _id_node(d: dict) -> Node | None:
+def _units(u) -> list:
+    """PROJJSON unit -> [the WKT2 unit Node the wkt2 compiler reads], or
+    [] when absent or without a conversion factor."""
+    if u is None:
+        return []
+    if isinstance(u, dict):
+        f = _unit_conv(u)
+        if f is None:
+            return []
+        kind = _UNIT_TYPES.get(str(u.get("type", "")).lower(), "UNIT")
+        return [Node(kind, [u.get("name", "unknown"), f])]
+    if u not in _UNIT_STRINGS:
+        raise ValueError(f"unsupported unit {u!r}")
+    kind, f = _UNIT_STRINGS[u]
+    return [Node(kind, [u, f])]
+
+
+def _ids(d: dict) -> list:
+    """[ID node] for a PROJJSON object's id (or first of ids), else []."""
     idd = d.get("id")
     if idd is None:
         ids = d.get("ids")
         idd = ids[0] if ids else None
     if not isinstance(idd, dict):
-        return None
-    return Node("ID", [str(idd.get("authority", "")),
-                       float(idd.get("code", -1))])
+        return []
+    return [Node("ID", [str(idd.get("authority", "")),
+                        float(idd.get("code", -1))])]
 
 
 def _ellipsoid_node(e: dict) -> Node:
@@ -104,10 +122,9 @@ def _ellipsoid_node(e: dict) -> Node:
     else:
         a = _num(e["semi_major_axis"])
         if "inverse_flattening" in e:
-            rf = _num(e["inverse_flattening"], "K")
+            rf = _num(e["inverse_flattening"])
         elif "semi_minor_axis" in e:
-            b = _num(e["semi_minor_axis"])
-            rf = 0.0 if b == a else a / (a - b)
+            rf = _inverse_flattening(a, _num(e["semi_minor_axis"]))
         else:
             rf = 0.0
     return Node("ELLIPSOID", [name, float(a), float(rf)])
@@ -126,9 +143,13 @@ def _geog_args(d: dict) -> list:
                                  _ellipsoid_node(ell)])]
     pm = d.get("prime_meridian")
     if pm is not None:
-        lon = _num(pm.get("longitude", 0.0), "A")
+        # the angle unit rides along as a node, so wkt2._angle_value's
+        # exact degree/grad paths apply as they do to WKT2 text
+        lon, units = pm.get("longitude", 0.0), []
+        if isinstance(lon, dict):
+            lon, units = lon.get("value", 0.0), _units(lon.get("unit"))
         args.append(Node("PRIMEM", [str(pm.get("name", "unknown")),
-                                    float(lon)]))
+                                    float(lon)] + units))
     # CS/AXIS nodes (axis order + angular unit) — ignored by the CRS
     # compiler but required by the coordinate-operation compiler's
     # normalization steps (wkt2._geog_io_steps)
@@ -138,66 +159,54 @@ def _geog_args(d: dict) -> list:
         args.append(Node("CS", [str(cs.get("subtype", "ellipsoidal")),
                                 float(len(axes))]))
         for ax in axes:
-            axargs: list = [str(ax.get("name", "")),
-                            str(ax.get("direction", ""))]
-            u = ax.get("unit")
-            if u == "degree":
-                axargs.append(Node("ANGLEUNIT", ["degree", _DEG_RAD]))
-            else:
-                un = _unit_node(u, "ANGLEUNIT")
-                if un is not None:
-                    axargs.append(un)
-            args.append(Node("AXIS", axargs))
-    idn = _id_node(d)
-    if idn is not None:
-        args.append(idn)
+            args.append(Node("AXIS", [str(ax.get("name", "")),
+                                      str(ax.get("direction", ""))]
+                             + _units(ax.get("unit"))))
+    return args + _ids(d)
+
+
+def _operation_args(d: dict, what: str) -> list:
+    """[name, METHOD, PARAMETER...] of a PROJJSON conversion or
+    transformation (io.cpp:5635 JSONParser::buildTransformation).  A
+    string parameter value is a grid file name -> PARAMETERFILE
+    (ParameterValue::createFilename); conversions take numbers only."""
+    m = d.get("method")
+    if m is None:
+        raise ValueError(f"{what} without method")
+    args: list = [str(d.get("name", "unknown")),
+                  Node("METHOD", [str(m.get("name", ""))] + _ids(m))]
+    for prm in d.get("parameters", []):
+        pname, v = str(prm.get("name", "")), prm.get("value")
+        if isinstance(v, str) and what != "conversion":
+            args.append(Node("PARAMETERFILE", [pname, v]))
+            continue
+        if not isinstance(v, (int, float)):
+            raise ValueError(f"non-numeric {what} parameter {pname!r}")
+        args.append(Node("PARAMETER", [pname, float(v)]
+                         + _units(prm.get("unit")) + _ids(prm)))
     return args
 
 
-def _conversion_node(c: dict) -> Node:
-    m = c.get("method")
-    if m is None:
-        raise ValueError("conversion without method")
-    margs: list = [str(m.get("name", ""))]
-    idn = _id_node(m)
-    if idn is not None:
-        margs.append(idn)
-    args: list = [str(c.get("name", "unknown")), Node("METHOD", margs)]
-    for prm in c.get("parameters", []):
-        v = prm.get("value")
-        if not isinstance(v, (int, float)):
-            raise ValueError(
-                f"non-numeric conversion parameter {prm.get('name')!r}")
-        pargs: list = [str(prm.get("name", "")), float(v)]
-        u = prm.get("unit")
-        if isinstance(u, dict):
-            t = str(u.get("type", "")).lower()
-            wkt_kind = {"angularunit": "ANGLEUNIT",
-                        "linearunit": "LENGTHUNIT",
-                        "scaleunit": "SCALEUNIT"}.get(t, "UNIT")
-            un = _unit_node(u, wkt_kind)
-            if un is not None:
-                pargs.append(un)
-        elif u not in (None, "metre", "degree", "unity"):
-            f = _unit_conv(u)
-            if f is not None:
-                pargs.append(Node("UNIT", [str(u), float(f)]))
-        idn = _id_node(prm)
-        if idn is not None:
-            pargs.append(idn)
-        args.append(Node("PARAMETER", pargs))
-    return Node("CONVERSION", args)
+def _crs_args(d: dict, what: str) -> list:
+    """SOURCECRS/TARGETCRS nodes of a PROJJSON coordinate operation."""
+    args = []
+    for key, kw in (("source_crs", "SOURCECRS"),
+                    ("target_crs", "TARGETCRS")):
+        c = d.get(key)
+        if c is None:
+            raise ValueError(f"{what} without {key}")
+        args.append(Node(kw, [_to_node(c)]))
+    return args
 
 
-def _axis_length_unit(d: dict) -> Node | None:
+def _axis_length_unit(d: dict) -> list:
+    """[unit node] of the first axis carrying a unit, else []."""
     cs = d.get("coordinate_system") or {}
     for ax in cs.get("axis", []):
-        un = _unit_node(ax.get("unit"), "LENGTHUNIT")
-        if un is not None:
-            return un
-        if ax.get("unit") == "metre":
-            return Node("LENGTHUNIT", ["metre", 1.0])
-    return None
+        units = _units(ax.get("unit"))
+        if units:
+            return units
+    return []
 
 
 def _vert_node(d: dict) -> Node:
@@ -205,10 +214,7 @@ def _vert_node(d: dict) -> Node:
     datum = d.get("datum") or d.get("datum_ensemble")
     if datum is not None:
         args.append(Node("VDATUM", [str(datum.get("name", "unknown"))]))
-    idn = _id_node(d)
-    if idn is not None:
-        args.append(idn)
-    return Node("VERTCRS", args)
+    return Node("VERTCRS", args + _ids(d))
 
 
 def _to_node(d: dict) -> Node:
@@ -222,16 +228,11 @@ def _to_node(d: dict) -> Node:
         conv = d.get("conversion")
         if conv is None:
             raise ValueError("ProjectedCRS without conversion")
-        args: list = [str(d.get("name", "unknown")),
-                      Node("BASEGEOGCRS", _geog_args(base)),
-                      _conversion_node(conv)]
-        un = _axis_length_unit(d)
-        if un is not None:
-            args.append(un)
-        idn = _id_node(d)
-        if idn is not None:
-            args.append(idn)
-        return Node("PROJCRS", args)
+        return Node("PROJCRS", [str(d.get("name", "unknown")),
+                                Node("BASEGEOGCRS", _geog_args(base)),
+                                Node("CONVERSION",
+                                     _operation_args(conv, "conversion"))]
+                    + _axis_length_unit(d) + _ids(d))
     if t == "DerivedProjectedCRS":
         # io.cpp:5494 buildDerivedProjectedCRS (json_import
         # derived_projected_crs, test_io.cpp:12577): base ProjectedCRS +
@@ -251,222 +252,47 @@ def _to_node(d: dict) -> Node:
         basep = Node("BASEPROJCRS",
                      [str(base.get("name", "unknown")),
                       Node("BASEGEOGCRS", _geog_args(basegeog)),
-                      _conversion_node(baseconv)])
-        dconv = _conversion_node(conv)
-        args = [str(d.get("name", "unknown")), basep,
-                Node("DERIVINGCONVERSION", dconv.args)]
-        un = _axis_length_unit(d)
-        if un is not None:
-            args.append(un)
-        idn = _id_node(d)
-        if idn is not None:
-            args.append(idn)
-        return Node("DERIVEDPROJCRS", args)
+                      Node("CONVERSION",
+                           _operation_args(baseconv, "conversion"))])
+        return Node("DERIVEDPROJCRS",
+                    [str(d.get("name", "unknown")), basep,
+                     Node("DERIVINGCONVERSION",
+                          _operation_args(conv, "conversion"))]
+                    + _axis_length_unit(d) + _ids(d))
     if t == "CompoundCRS":
         comps = [_to_node(c) for c in d.get("components", [])]
         return Node("COMPOUNDCRS", [str(d.get("name", "unknown"))] + comps)
     if t == "VerticalCRS":
         return _vert_node(d)
+    if t == "BoundCRS":
+        # io.cpp JSONParser::buildBoundCRS; the transformation carries no
+        # CRSs of its own, and the target (WGS 84) is implied by towgs84
+        src = d.get("source_crs")
+        tr = d.get("transformation")
+        if src is None or tr is None:
+            raise ValueError("BoundCRS needs source_crs and transformation")
+        return Node("BOUNDCRS", [
+            Node("SOURCECRS", [_to_node(src)]),
+            Node("COORDINATEOPERATION",
+                 _operation_args(tr, "BoundCRS transformation"))])
     if t == "Transformation":
-        return _transformation_node(d)
+        # the WKT COORDINATEOPERATION Node shape, compiled by
+        # wkt2._operation_to_projstring
+        crs = _crs_args(d, "Transformation")
+        return Node("COORDINATEOPERATION",
+                    crs + _operation_args(d, "Transformation"))
     if t == "ConcatenatedOperation":
-        args: list = [str(d.get("name", "unknown"))]
-        for key, kw in (("source_crs", "SOURCECRS"),
-                        ("target_crs", "TARGETCRS")):
-            c = d.get(key)
-            if c is None:
-                raise ValueError(f"ConcatenatedOperation without {key}")
-            args.append(Node(kw, [_to_node(c)]))
-        steps = d.get("steps", [])
-        for s in steps:
-            args.append(Node("STEP", [_to_node(s)]))
-        return Node("CONCATENATEDOPERATION", args)
+        return Node("CONCATENATEDOPERATION",
+                    [str(d.get("name", "unknown"))]
+                    + _crs_args(d, "ConcatenatedOperation")
+                    + [Node("STEP", [_to_node(s)])
+                       for s in d.get("steps", [])])
     if t == "Conversion":
-        return _conversion_node(d)
+        return Node("CONVERSION", _operation_args(d, "conversion"))
     raise ValueError(f"unsupported PROJJSON type {t!r} (subset: "
                      "GeographicCRS/ProjectedCRS/CompoundCRS/"
                      "VerticalCRS/BoundCRS/Transformation/"
                      "ConcatenatedOperation)")
-
-
-# known PROJJSON unit strings -> (WKT unit node kind, factor); exact
-# factors so the wkt2 converters take their exact degree/arcsec/ppm
-# paths (io.cpp getUnit: same five SI-or-common cases)
-_UNIT_STRINGS = {
-    "metre": ("LENGTHUNIT", 1.0),
-    "degree": ("ANGLEUNIT", _DEG_RAD),
-    "arc-second": ("ANGLEUNIT", _ARCSEC_RAD),
-    "grad": ("ANGLEUNIT", math.pi / 200.0),
-    "radian": ("ANGLEUNIT", 1.0),
-    "unity": ("SCALEUNIT", 1.0),
-    "parts per million": ("SCALEUNIT", 1e-6),
-    "kilometre": ("LENGTHUNIT", 1000.0),
-    "foot": ("LENGTHUNIT", 0.3048),
-    "US survey foot": ("LENGTHUNIT", 1200.0 / 3937.0),
-    "year": ("TIMEUNIT", 1.0),
-}
-
-
-def _transformation_node(d: dict) -> Node:
-    """PROJJSON Transformation -> the WKT COORDINATEOPERATION Node shape
-    (io.cpp:5635 JSONParser::buildTransformation), compiled by
-    wkt2._operation_to_projstring.  String parameter values are grid
-    file names -> PARAMETERFILE (ParameterValue::createFilename)."""
-    args: list = [str(d.get("name", "unknown"))]
-    for key, kw in (("source_crs", "SOURCECRS"),
-                    ("target_crs", "TARGETCRS")):
-        c = d.get(key)
-        if c is None:
-            raise ValueError(f"Transformation without {key}")
-        args.append(Node(kw, [_to_node(c)]))
-    m = d.get("method")
-    if m is None:
-        raise ValueError("Transformation without method")
-    margs: list = [str(m.get("name", ""))]
-    idn = _id_node(m)
-    if idn is not None:
-        margs.append(idn)
-    args.append(Node("METHOD", margs))
-    for prm in d.get("parameters", []):
-        v = prm.get("value")
-        if isinstance(v, str):
-            args.append(Node("PARAMETERFILE",
-                             [str(prm.get("name", "")), v]))
-            continue
-        pargs: list = [str(prm.get("name", "")), float(v)]
-        u = prm.get("unit")
-        if isinstance(u, str) and u in _UNIT_STRINGS:
-            kind, f = _UNIT_STRINGS[u]
-            pargs.append(Node(kind, [u, f]))
-        elif isinstance(u, dict):
-            t2 = str(u.get("type", "")).lower()
-            wkt_kind = {"angularunit": "ANGLEUNIT",
-                        "linearunit": "LENGTHUNIT",
-                        "scaleunit": "SCALEUNIT",
-                        "timeunit": "TIMEUNIT"}.get(t2, "UNIT")
-            un = _unit_node(u, wkt_kind)
-            if un is not None:
-                pargs.append(un)
-        elif u is not None:
-            raise ValueError(f"unsupported parameter unit {u!r} in "
-                             "Transformation")
-        idn = _id_node(prm)
-        if idn is not None:
-            pargs.append(idn)
-        args.append(Node("PARAMETER", pargs))
-    return Node("COORDINATEOPERATION", args)
-
-
-# BoundCRS helmert parameter slots (EPSG parameter codes) and the
-# target unit of each towgs84 slot
-_HELMERT_SLOTS = {8605: (0, "L"), 8606: (1, "L"), 8607: (2, "L"),
-                  8608: (3, "R"), 8609: (4, "R"), 8610: (5, "R"),
-                  8611: (6, "S")}
-_HELMERT_NAMES = {"x-axis translation": 8605, "y-axis translation": 8606,
-                  "z-axis translation": 8607, "x-axis rotation": 8608,
-                  "y-axis rotation": 8609, "z-axis rotation": 8610,
-                  "scale difference": 8611}
-
-
-def _bound_to_projstring(d: dict) -> str:
-    """BoundCRS -> source fragments + towgs84/nadgrids.
-
-    Unlike the WKT2 ABRIDGEDTRANSFORMATION convention, PROJJSON
-    transformation parameters carry TRUE values with units
-    (io.cpp JSONParser::buildBoundCRS): translations in metres,
-    rotations with an angular unit (arc-second in GDAL exports),
-    Scale difference in parts per million."""
-    src = d.get("source_crs")
-    tr = d.get("transformation")
-    if src is None or tr is None:
-        raise ValueError("BoundCRS needs source_crs and transformation")
-    frag = _node_to_projstring(_to_node(src))
-    m = tr.get("method") or {}
-    mname = str(m.get("name", "")).lower()
-    mid = m.get("id") or {}
-    mcode = int(mid.get("code", -1)) if isinstance(mid, dict) else -1
-
-    def _inject(extra: str) -> str:
-        if frag.endswith(" no_defs"):
-            return frag[: -len(" no_defs")] + f" {extra} no_defs"
-        return f"{frag} {extra}"
-
-    if mcode == 9615 or "ntv2" in mname:
-        for prm in tr.get("parameters", []):
-            pid = prm.get("id") or {}
-            if (isinstance(pid, dict) and int(pid.get("code", -1)) == 8656) \
-                    or "difference file" in str(prm.get("name", "")).lower():
-                return _inject(f"nadgrids={prm.get('value')}")
-        raise ValueError("NTv2 BoundCRS without a grid file parameter")
-
-    if "coordinate frame" in mname or mcode in (1032, 1038, 9607):
-        invert_rot = True
-    elif "position vector" in mname or mcode in (1033, 1037, 9606):
-        invert_rot = False
-    elif "geocentric translations" in mname or mcode in (1031, 1035, 9603):
-        invert_rot = False
-    else:
-        raise ValueError(f"unsupported BoundCRS method {mname!r} "
-                         f"(EPSG:{mcode})")
-    vals = [0.0] * 7
-    for prm in tr.get("parameters", []):
-        pid = prm.get("id") or {}
-        pcode = int(pid.get("code", -1)) if isinstance(pid, dict) else -1
-        if pcode not in _HELMERT_SLOTS:
-            pcode = _HELMERT_NAMES.get(str(prm.get("name", "")).lower(), -1)
-        if pcode not in _HELMERT_SLOTS:
-            raise ValueError(
-                f"unsupported BoundCRS parameter {prm.get('name')!r}")
-        slot, kind = _HELMERT_SLOTS[pcode]
-        v = float(prm.get("value", 0.0))
-        u = prm.get("unit")
-        if kind == "L":
-            f = _unit_conv(u)
-            v = v * f if f is not None else v
-        elif kind == "R":
-            # to arc-seconds.  NOTE: the schema-valid string "degree"
-            # is NOT the slot default here (the _unit_conv None return
-            # means metre/degree/unity SI defaults, but rotation slots
-            # default to arc-second) — handle the strings explicitly
-            if u in (None, "arc-second"):
-                pass
-            elif u == "degree":
-                v = v * 3600.0
-            else:
-                f = _unit_conv(u)
-                if f is None:
-                    raise ValueError(
-                        f"unsupported rotation unit {u!r} in BoundCRS")
-                # exact paths: multiplying by f then dividing by the
-                # same arc-second factor would corrupt the last bits
-                # (the WKT2 degree-factor lesson).  Unit OBJECTS whose
-                # conversion_factor is the (possibly 15-digit-rounded)
-                # degree factor get the same exact *3600 route as the
-                # "degree" string.
-                if abs(f - _DEG_RAD) < 1e-16:
-                    v = v * 3600.0
-                elif f != _ARCSEC_RAD:
-                    v = v * f / _ARCSEC_RAD
-        else:
-            # to ppm; same reasoning for the "unity" string
-            if u in (None, "parts per million"):
-                pass
-            elif u == "unity":
-                v = v * 1e6
-            else:
-                f = _unit_conv(u)
-                if f is None:
-                    raise ValueError(
-                        f"unsupported scale unit {u!r} in BoundCRS")
-                if f == 1.0:  # unit OBJECT for unity: exact *1e6 path
-                    v = v * 1e6
-                elif f != 1e-6:  # exact ppm path (see above)
-                    v = v * f / 1e-6
-        vals[slot] = v
-    if invert_rot:
-        for i in (3, 4, 5):
-            vals[i] = -vals[i] if vals[i] != 0.0 else 0.0
-    return _inject("towgs84=" + ",".join(fmt(v) for v in vals))
 
 
 def projjson_to_projstring(text: str | dict) -> str:
@@ -475,52 +301,25 @@ def projjson_to_projstring(text: str | dict) -> str:
     d = json.loads(text) if isinstance(text, str) else text
     if not isinstance(d, dict):
         raise ValueError("PROJJSON root is not an object")
-    if d.get("type") == "BoundCRS":
-        return _bound_to_projstring(d)
     return _node_to_projstring(_to_node(d))
 
 
 # ---------------------------------------------------------------------------
-# writer (round-trip half; shares the WKT2 writer's method tables)
+# writer (round-trip half; shares the WKT2 writer's preset resolver and
+# method tables)
 # ---------------------------------------------------------------------------
 
-def _ellipsoid_json(p: dict) -> dict:
-    from proj_4_spark.engine.plan import DATUMS
-    from proj_4_spark.kernels.ellipsoid import ELLPS_TABLE
-
-    if "datum" in p:
-        d = DATUMS.get(p["datum"])
-        if d is None:
-            raise ValueError(f"unknown datum {p['datum']}")
-        p.setdefault("ellps", d["ellps"])
-    if "ellps" in p:
-        ell = ELLPS_TABLE[p["ellps"]]
-        a = ell["a"]
-        if "rf" in ell:
-            rf = ell["rf"]
-        else:
-            b = ell["b"]
-            rf = 0.0 if b == a else a / (a - b)
-        name = p["ellps"]
-    elif "a" in p:
-        a = float(p["a"])
-        rf = float(p["rf"]) if "rf" in p else 0.0
-        if rf == 0.0 and "b" in p and float(p["b"]) != a:
-            rf = a / (a - float(p["b"]))
-        name = "unnamed"
+def _geog_json(pre, name: str) -> dict:
+    if pre.rf == 0.0:
+        ell = {"name": pre.ellps, "radius": pre.a}
     else:
-        raise ValueError("preset without ellipsoid information")
-    if rf == 0.0:
-        return {"name": name, "radius": a}
-    return {"name": name, "semi_major_axis": a, "inverse_flattening": rf}
-
-
-def _geog_json(p: dict, name: str) -> dict:
+        ell = {"name": pre.ellps, "semi_major_axis": pre.a,
+               "inverse_flattening": pre.rf}
     out = {
         "type": "GeographicCRS",
         "name": name,
         "datum": {"type": "GeodeticReferenceFrame", "name": "unknown",
-                  "ellipsoid": _ellipsoid_json(p)},
+                  "ellipsoid": ell},
         "coordinate_system": {
             "subtype": "ellipsoidal",
             "axis": [
@@ -530,37 +329,27 @@ def _geog_json(p: dict, name: str) -> dict:
                  "direction": "north", "unit": "degree"},
             ]},
     }
-    from proj_4_spark.sources.wkt2 import _pm_degrees
-
-    pm = _pm_degrees(p)
-    if pm:
-        out["prime_meridian"] = {"name": str(p.get("pm", "unnamed")),
-                                 "longitude": pm}
+    if pre.pm:
+        out["prime_meridian"] = {"name": str(pre.p.get("pm", "unnamed")),
+                                 "longitude": pre.pm}
     return out
 
 
-def _bound_json(core: dict, p: dict, name: str) -> dict:
+def _bound_json(core: dict, pre, name: str) -> dict:
     """Wrap a CRS dict in a BoundCRS when the preset carries datum
     info (+towgs84 / +nadgrids) — the writer must not silently DROP
     the datum shift; the reader converts the wrapper back."""
-    tw = p.get("towgs84")
-    ng = p.get("nadgrids")
-    if not tw and not ng:
-        return core
-    if ng:
+    if pre.nadgrids:
         tr = {
             "name": name + " to WGS84",
             "method": {"name": "NTv2",
                        "id": {"authority": "EPSG", "code": 9615}},
             "parameters": [
                 {"name": "Latitude and longitude difference file",
-                 "value": ng,
+                 "value": pre.nadgrids,
                  "id": {"authority": "EPSG", "code": 8656}}],
         }
-    else:
-        vals = [float(x) for x in str(tw).split(",")]
-        while len(vals) < 7:
-            vals.append(0.0)
+    elif pre.towgs84:
         asec = {"type": "AngularUnit", "name": "arc-second",
                 "conversion_factor": _ARCSEC_RAD}
         ppm = {"type": "ScaleUnit", "name": "parts per million",
@@ -572,7 +361,8 @@ def _bound_json(core: dict, p: dict, name: str) -> dict:
         units = ["metre", "metre", "metre", asec, asec, asec, ppm]
         params = [{"name": n, "value": v, "unit": u,
                    "id": {"authority": "EPSG", "code": 8605 + i}}
-                  for i, (n, v, u) in enumerate(zip(names, vals, units))]
+                  for i, (n, v, u) in enumerate(zip(names, pre.towgs84,
+                                                    units))]
         # +towgs84 is the position-vector convention by definition
         tr = {
             "name": name + " to WGS84",
@@ -581,8 +371,11 @@ def _bound_json(core: dict, p: dict, name: str) -> dict:
                        "id": {"authority": "EPSG", "code": 9606}},
             "parameters": params,
         }
+    else:
+        return core
     return {"type": "BoundCRS", "source_crs": core,
-            "target_crs": _geog_json({"ellps": "WGS84"}, "WGS 84"),
+            "target_crs": _geog_json(_resolve_preset("ellps=WGS84"),
+                                     "WGS 84"),
             "transformation": tr}
 
 
@@ -591,34 +384,12 @@ def projstring_to_projjson(projstring: str, name: str = "unnamed") -> dict:
     preset (the writer half of the round-trip test: parse(write(x))
     must reproduce x's parameters exactly, INCLUDING the datum shift —
     towgs84/nadgrids presets emit a BoundCRS wrapper)."""
-    from proj_4_spark.engine.plan import DATUMS
-
-    p = _parse_projstring_tokens(projstring)
-    if "datum" in p:
-        d = DATUMS.get(p["datum"])
-        if d is None:
-            raise ValueError(f"unknown datum {p['datum']}")
-        for k, v in d.items():
-            p.setdefault(k, v)
-    if p.get("proj") == "longlat":
-        return _bound_json(_geog_json(p, name), p, name)
-    fam = _wkt_family(p)
-    if fam is None:
-        raise ValueError(f"no PROJJSON writer for proj={p.get('proj')!r}")
-    key, pp = fam
-    code, mname, plist = _WKT_METHODS[key]
-    params = []
-    for pcode, pname, projkey, kind, default in plist:
-        v = float(pp.get(projkey, default) or default)
-        unit = {"A": "degree", "K": "unity", "L": "metre"}[kind]
-        params.append({"name": pname, "value": v, "unit": unit,
-                       "id": {"authority": "EPSG", "code": pcode}})
-    if "units" in p and p["units"] in _UNIT_WKT:
-        uname, ufac = _UNIT_WKT[p["units"]]
-    elif "to_meter" in p:
-        uname, ufac = "unknown", float(p["to_meter"])
-    else:
-        uname, ufac = "metre", 1.0
+    pre = _resolve_preset(projstring)
+    if pre.p.get("proj") == "longlat":
+        return _bound_json(_geog_json(pre, name), pre, name)
+    code, mname, params = _writer_conversion(pre.p, "PROJJSON")
+    units = {"A": "degree", "K": "unity", "L": "metre"}
+    uname, ufac = pre.unit
     if ufac == 1.0:
         unit_json = "metre"
     else:
@@ -627,12 +398,15 @@ def projstring_to_projjson(projstring: str, name: str = "unnamed") -> dict:
     return _bound_json({
         "type": "ProjectedCRS",
         "name": name,
-        "base_crs": _geog_json(p, name + " base"),
+        "base_crs": _geog_json(pre, name + " base"),
         "conversion": {
             "name": name + " conversion",
             "method": {"name": mname,
                        "id": {"authority": "EPSG", "code": code}},
-            "parameters": params,
+            "parameters": [
+                {"name": pname, "value": v, "unit": units[kind],
+                 "id": {"authority": "EPSG", "code": pcode}}
+                for pcode, pname, kind, v in params],
         },
         "coordinate_system": {
             "subtype": "Cartesian",
@@ -642,4 +416,4 @@ def projstring_to_projjson(projstring: str, name: str = "unnamed") -> dict:
                 {"name": "Northing", "abbreviation": "N",
                  "direction": "north", "unit": unit_json},
             ]},
-    }, p, name)
+    }, pre, name)

@@ -24,8 +24,14 @@ engine can execute):
 Also supported: VERTCRS (ID-keyed, with a normalized-name fallback
 against the generated VERT_PRESETS), COMPOUNDCRS (horizontal +
 vertical members), and BOUNDCRS (SOURCECRS + ABRIDGEDTRANSFORMATION
--> +towgs84 on the source CRS, io.cpp:4406 buildBoundCRS — the shape
-gdalsrsinfo exports for any towgs84-bearing CRS).
+-> +towgs84/+nadgrids on the source CRS, io.cpp:4406 buildBoundCRS —
+the shape gdalsrsinfo exports for any towgs84-bearing CRS; a PROJJSON
+BoundCRS reaches the same reader with a COORDINATEOPERATION).
+
+This Node tree is the one CRS model of the text formats: sources/
+projjson maps PROJJSON onto it, the ellipsoid matcher
+(ellipsoid_fragment) serves the WKT2, PROJJSON and ESRI WKT1 readers,
+and the preset resolver (_resolve_preset) both writers.
 
 Also supported: DERIVEDPROJCRS (base projection + deriving conversion
 composed as a pipeline; EPSG 9624 affine parametric and PROJ-based
@@ -46,6 +52,7 @@ from dataclasses import dataclass, field
 
 from proj_4_spark.kernels.ellipsoid import ELLPS_TABLE
 from proj_4_spark.sources.epsg_methods import fmt, method_fragment
+from proj_4_spark.sources.initfiles import splice_fragment, vertical_fragment
 
 # ---------------------------------------------------------------------------
 # tokenizer / parser
@@ -254,6 +261,40 @@ def _id_code(node: Node) -> int | None:
 # ---------------------------------------------------------------------------
 
 
+def _inverse_flattening(a: float, b: float) -> float:
+    """1/f of an (a, b)-defined ellipsoid; 0.0 for a sphere."""
+    return 0.0 if b == a else a / (a - b)
+
+
+def _registry_ellipsoid(name: str) -> tuple[float, float]:
+    """(a, 1/f) of a registry ellipsoid; b-defined entries (clrk66
+    etc.) give their effective inverse flattening a/(a-b)."""
+    spec = ELLPS_TABLE[name]
+    a = spec["a"]
+    if "rf" in spec:
+        return a, spec["rf"]
+    return a, _inverse_flattening(a, spec["b"])
+
+
+def ellipsoid_fragment(a: float, rf: float) -> str:
+    """(a, 1/f) -> ``ellps=NAME`` when a registry entry matches, else
+    ``a=/rf=`` (``a=/b=`` for a sphere).  Shared by the WKT2, PROJJSON
+    and ESRI WKT1 readers."""
+    for name in ELLPS_TABLE:
+        ea, erf = _registry_ellipsoid(name)
+        # exact match, or the 15-significant-digit WKT rounding of the
+        # registry value (b-defined ellipsoids like clrk66 print rf as
+        # 294.978698213898 in the reference's own WKT, a last-bit short
+        # of the computed a/(a-b) — the reference canonicalizes such
+        # text back to the named ellipsoid via tolerant equivalence,
+        # iso19111 _isEquivalentTo)
+        if ea == a and (erf == rf or float(f"{erf:.15g}") == rf):
+            return f"ellps={name}"
+    if rf == 0.0:
+        return f"a={fmt(a)} b={fmt(a)}"
+    return f"a={fmt(a)} rf={fmt(rf)}"
+
+
 def _ellps_fragment_from(ell: Node) -> str:
     vals = [a for a in ell.args if isinstance(a, float)]
     if len(vals) < 2:
@@ -262,28 +303,7 @@ def _ellps_fragment_from(ell: Node) -> str:
     lu = _unit_factor(ell.first("LENGTHUNIT", "UNIT"))
     if lu is not None and lu != 1.0:
         a *= lu
-    # prefer the named registry entry when (a, 1/f) matches exactly —
-    # b-defined entries (clrk66 etc.) compare by their effective
-    # inverse flattening a/(a-b), the same expression the writer uses
-    for name, spec in ELLPS_TABLE.items():
-        if spec.get("a") != a:
-            continue
-        if "rf" in spec:
-            erf = spec["rf"]
-        else:
-            b = spec["b"]
-            erf = 0.0 if b == a else a / (a - b)
-        # exact match, or the 15-significant-digit WKT rounding of the
-        # registry value (b-defined ellipsoids like clrk66 print rf as
-        # 294.978698213898 in the reference's own WKT, a last-bit short
-        # of the computed a/(a-b) — the reference canonicalizes such
-        # text back to the named ellipsoid via tolerant equivalence,
-        # iso19111 _isEquivalentTo)
-        if erf == rf or float(f"{erf:.15g}") == rf:
-            return f"ellps={name}"
-    if rf == 0.0:
-        return f"a={fmt(a)} b={fmt(a)}"
-    return f"a={fmt(a)} rf={fmt(rf)}"
+    return ellipsoid_fragment(a, rf)
 
 
 def _base_fragments(crs: Node) -> list[str]:
@@ -303,20 +323,6 @@ def _base_fragments(crs: Node) -> list[str]:
             if lon != 0.0:
                 frags.append(f"pm={fmt(lon)}")
     return frags
-
-
-def _pm_degrees(p: dict) -> float:
-    """Resolve a +pm token — numeric degrees or a NAMED meridian
-    (``pm=paris`` etc., src/datums.cpp pj_prime_meridians) — to decimal
-    degrees via the same table the proj-string reader uses.  Shared by
-    the WKT2 and PROJJSON writers so named meridians round-trip instead
-    of crashing float()."""
-    raw = p.get("pm", 0.0) or 0.0
-    try:
-        return float(raw)
-    except (TypeError, ValueError):
-        from proj_4_spark.engine.projstring import prime_meridian_rad
-        return prime_meridian_rad(str(raw)) * 180.0 / math.pi
 
 
 def _conversion_params(conv: Node) -> tuple[int, dict]:
@@ -352,6 +358,20 @@ def _conversion_params(conv: Node) -> tuple[int, dict]:
             v = v * f if f not in (None, 1.0) else v
         p[pcode] = v
     return code, p
+
+
+# method_fragment accessors over a normalized {param code: value} dict
+# (angles in degrees, lengths in metres, scales unitless)
+_ACCESSORS = (lambda d, c, default=None: d.get(c, default),
+              lambda d, c, default=0.0: d.get(c, default),
+              lambda d, c, default=1.0: d.get(c, default))
+
+
+def _epsg_fragment(code: int, p: dict) -> str:
+    frag = method_fragment(code, p, *_ACCESSORS)
+    if frag is None:
+        raise ValueError(f"unsupported EPSG method {code}")
+    return frag
 
 
 def _units_fragment_from(crs: Node) -> str:
@@ -419,8 +439,6 @@ def _vertical_fragment_from(vert: Node) -> str:
     if code not in VERT_PRESETS:
         raise ValueError(f"vertical CRS EPSG:{code} not in the generated "
                          "registry")
-    from proj_4_spark.sources.initfiles import vertical_fragment
-
     return vertical_fragment(code)
 
 
@@ -429,89 +447,6 @@ def wkt2_to_projstring(text: str) -> str:
     proj-string."""
     root = parse_wkt(text)
     return _node_to_projstring(root)
-
-
-# ABRIDGEDTRANSFORMATION parameter slots (EPSG parameter codes 8605-8611)
-_ABRIDGED_SLOTS = {8605: 0, 8606: 1, 8607: 2, 8608: 3, 8609: 4,
-                   8610: 5, 8611: 6}
-_ABRIDGED_NAMES = {"x-axis translation": 0, "y-axis translation": 1,
-                   "z-axis translation": 2, "x-axis rotation": 3,
-                   "y-axis rotation": 4, "z-axis rotation": 5,
-                   "scale difference": 6}
-
-
-def _boundcrs_to_projstring(root: Node) -> str:
-    """BOUNDCRS[SOURCECRS, TARGETCRS[WGS84], ABRIDGEDTRANSFORMATION]
-    -> the source CRS fragments + towgs84 — the most common WKT2 shape
-    a user pastes from gdalsrsinfo (GDAL exports any towgs84-bearing
-    CRS this way).
-
-    Reference: WKTParser::Private::buildBoundCRS
-    (src/iso19111/io.cpp:4406) + Transformation::getTOWGS84Parameters
-    (src/iso19111/coordinateoperation.cpp:6706): abridged parameter
-    values are unitless metres / arc-seconds, Scale difference is
-    (value - 1) * 1e6 ppm (convertFromAbridged,
-    coordinateoperation.cpp:1294-1345), and Coordinate Frame rotations
-    flip sign into the position-vector towgs84 convention."""
-    src = root.first("SOURCECRS")
-    ab = root.first("ABRIDGEDTRANSFORMATION")
-    if src is None or ab is None:
-        raise ValueError("BOUNDCRS needs SOURCECRS and "
-                         "ABRIDGEDTRANSFORMATION")
-    inner = next((a for a in src.args if isinstance(a, Node)), None)
-    if inner is None:
-        raise ValueError("SOURCECRS without a CRS node")
-    frag = _node_to_projstring(inner)
-
-    meth = ab.first("METHOD")
-    if meth is None:
-        raise ValueError("ABRIDGEDTRANSFORMATION without METHOD")
-    mname = next((a for a in meth.args if isinstance(a, str)), "").lower()
-    mcode = _id_code(meth)
-    if "ntv2" in mname or mcode == 9615:
-        pf = ab.first("PARAMETERFILE")
-        if pf is None:
-            raise ValueError("NTv2 BOUNDCRS without PARAMETERFILE")
-        grid = [a for a in pf.args if isinstance(a, str)]
-        if len(grid) < 2:
-            raise ValueError("PARAMETERFILE needs a file name")
-        extra = f"nadgrids={grid[1]}"
-        if frag.endswith(" no_defs"):
-            return frag[: -len(" no_defs")] + f" {extra} no_defs"
-        return f"{frag} {extra}"
-    if "coordinate frame" in mname or mcode in (1032, 1038, 9607):
-        invert_rot = True
-    elif "position vector" in mname or mcode in (1033, 1037, 9606):
-        invert_rot = False
-    elif "geocentric translations" in mname or mcode in (1031, 1035, 9603):
-        invert_rot = False
-    else:
-        raise ValueError(f"unsupported BOUNDCRS method {mname!r} "
-                         f"(EPSG:{mcode})")
-
-    vals = [0.0] * 7
-    for prm in ab.all("PARAMETER"):
-        pname = next((a for a in prm.args if isinstance(a, str)), "")
-        value = next((a for a in prm.args
-                      if isinstance(a, (int, float))), None)
-        if value is None:
-            continue
-        slot = _ABRIDGED_SLOTS.get(_id_code(prm))
-        if slot is None:
-            slot = _ABRIDGED_NAMES.get(pname.lower())
-        if slot is None:
-            raise ValueError(
-                f"unsupported ABRIDGEDTRANSFORMATION parameter {pname!r}")
-        if slot == 6:
-            value = (value - 1.0) * 1e6
-        vals[slot] = float(value)
-    if invert_rot:
-        for i_ in (3, 4, 5):
-            vals[i_] = -vals[i_] if vals[i_] != 0.0 else 0.0
-    towgs84 = "towgs84=" + ",".join(fmt(v) for v in vals)
-    if frag.endswith(" no_defs"):
-        return frag[: -len(" no_defs")] + f" {towgs84} no_defs"
-    return f"{frag} {towgs84}"
 
 
 def _node_to_projstring(root: Node) -> str:
@@ -530,13 +465,8 @@ def _node_to_projstring(root: Node) -> str:
         if len(horiz) != 1 or len(vert) != 1:
             raise ValueError("COMPOUNDCRS needs one horizontal and one "
                              "vertical component")
-        hfrag = _node_to_projstring(horiz[0])
-        vfrag = _vertical_fragment_from(vert[0])
-        if not vfrag:
-            return hfrag
-        if hfrag.endswith(" no_defs"):
-            return hfrag[: -len(" no_defs")] + f" {vfrag} no_defs"
-        return f"{hfrag} {vfrag}"
+        return splice_fragment(_node_to_projstring(horiz[0]),
+                               _vertical_fragment_from(vert[0]))
     if kw == "BOUNDCRS":
         return _boundcrs_to_projstring(root)
     if kw in ("COORDINATEOPERATION", "CONCATENATEDOPERATION",
@@ -555,21 +485,8 @@ def _node_to_projstring(root: Node) -> str:
     conv = root.first("CONVERSION")
     if conv is None:
         raise ValueError("PROJCRS without CONVERSION")
-    code, p = _conversion_params(conv)
-
-    def A(prm, c, default=None):
-        return prm.get(c, default)
-
-    def L(prm, c, default=0.0):
-        return prm.get(c, default)
-
-    def K(prm, c, default=1.0):
-        return prm.get(c, default)
-
-    frag = method_fragment(code, p, A, L, K)
-    if frag is None:
-        raise ValueError(f"unsupported EPSG method {code}")
-    return " ".join([frag] + _base_fragments(base)
+    return " ".join([_epsg_fragment(*_conversion_params(conv))]
+                    + _base_fragments(base)
                     + [_units_fragment_from(root), "no_defs"])
 
 
@@ -596,20 +513,8 @@ def _derived_projcrs_to_projstring(root: Node) -> str:
     if conv is None:
         raise ValueError("BASEPROJCRS without CONVERSION")
 
-    def A(prm, c, default=None):
-        return prm.get(c, default)
-
-    def L(prm, c, default=0.0):
-        return prm.get(c, default)
-
-    def K(prm, c, default=1.0):
-        return prm.get(c, default)
-
-    code, p = _conversion_params(conv)
-    frag = method_fragment(code, p, A, L, K)
-    if frag is None:
-        raise ValueError(f"unsupported EPSG method {code}")
-    base_step = " ".join([frag] + _base_fragments(base_geog))
+    base_step = " ".join([_epsg_fragment(*_conversion_params(conv))]
+                         + _base_fragments(base_geog))
 
     meth = dconv.first("METHOD", "PROJECTION")
     names = ([a for a in meth.args if isinstance(a, str)]
@@ -621,7 +526,7 @@ def _derived_projcrs_to_projstring(root: Node) -> str:
             raise ValueError("malformed PROJ-based operation method")
     else:
         dcode, dp = _conversion_params(dconv)
-        dstep = method_fragment(dcode, dp, A, L, K)
+        dstep = method_fragment(dcode, dp, *_ACCESSORS)
         if dstep is None:
             raise ValueError(
                 f"unsupported DERIVINGCONVERSION method {dcode} "
@@ -716,22 +621,29 @@ def _to_ppm(v: float, f: float | None) -> float:
     return v * f / 1e-6
 
 
+_OP_PARAM_CODES = set(_OP_PARAM_NAMES.values())
+
+
+def _op_param(par: Node) -> tuple[int | None, float | None, float | None]:
+    """(EPSG transformation-parameter code, raw value, unit factor) of a
+    PARAMETER node; the code comes from a known ID, else the name."""
+    pcode = _id_code(par)
+    if pcode not in _OP_PARAM_CODES:
+        names = [a for a in par.args if isinstance(a, str)]
+        pcode = _OP_PARAM_NAMES.get(names[0].lower()) if names else None
+    vals = [a for a in par.args if isinstance(a, float)]
+    f = _unit_factor(par.first("ANGLEUNIT", "SCALEUNIT", "LENGTHUNIT",
+                               "TIMEUNIT", "UNIT"))
+    return pcode, (vals[0] if vals else None), f
+
+
 def _op_params(node: Node) -> dict[int, tuple[float, float | None]]:
     """{EPSG transformation-parameter code: (raw value, unit factor)}"""
     out: dict[int, tuple[float, float | None]] = {}
     for par in node.all("PARAMETER"):
-        pcode = _id_code(par)
-        if pcode is None:
-            names = [a for a in par.args if isinstance(a, str)]
-            pcode = _OP_PARAM_NAMES.get(names[0].lower()) if names else None
-        if pcode is None:
-            continue
-        vals = [a for a in par.args if isinstance(a, float)]
-        if not vals:
-            continue
-        f = _unit_factor(par.first("ANGLEUNIT", "SCALEUNIT", "LENGTHUNIT",
-                                   "TIMEUNIT", "UNIT"))
-        out[pcode] = (vals[0], f)
+        pcode, v, f = _op_param(par)
+        if pcode is not None and v is not None:
+            out[pcode] = (v, f)
     return out
 
 
@@ -844,6 +756,33 @@ def _op_parameterfile(node: Node) -> str:
     return strs[1]
 
 
+def _is_hgrid_method(code: int | None, low: str) -> bool:
+    """NTv2/NTv1/CTABLE2 horizontal grid-shift method (by EPSG code or
+    lower-cased name)."""
+    return code == 9615 or "ntv2" in low or low in ("ntv1", "ctable2")
+
+
+def _helmert_family(code: int | None,
+                    low: str) -> tuple[str | None, str | None]:
+    """(convention, domain) of a Helmert-family method — translation /
+    position vector / coordinate frame, static and time-dependent
+    (coordinateoperation.cpp:9240-9395) — by EPSG code, else by
+    lower-cased name (domain None then); (None, None) otherwise."""
+    for table, family in ((_OP_TRANSLATION, "trans"),
+                          (_OP_POSVEC, "position_vector"),
+                          (_OP_COORDFRAME, "coordinate_frame"),
+                          (_OP_TIME_PV, "position_vector"),
+                          (_OP_TIME_CF, "coordinate_frame")):
+        if code in table:
+            return family, table[code]
+    for key, family in (("geocentric translations", "trans"),
+                        ("position vector", "position_vector"),
+                        ("coordinate frame", "coordinate_frame")):
+        if key in low:
+            return family, None
+    return None, None
+
+
 def _coordop_core(node: Node) -> tuple[list[str], Node, Node]:
     """(core pipeline steps — no outer normalization —, source CRS,
     target CRS) for one COORDINATEOPERATION node."""
@@ -872,32 +811,13 @@ def _coordop_core(node: Node) -> tuple[list[str], Node, Node]:
 
     # grid-shift methods: NTv2/NTv1/CTABLE2 horizontal grids ->
     # hgridshift; VERTCON-style vertical offset files -> vgridshift
-    if code == 9615 or low in ("ntv2", "ntv1", "ctable2"):
+    if _is_hgrid_method(code, low):
         return ["proj=hgridshift grids=" + _op_parameterfile(node)], src, tgt
     if code == 9658 or "vertcon" in low or \
             low.startswith("vertical offset by grid interpolation"):
         return ["proj=vgridshift grids=" + _op_parameterfile(node)], src, tgt
 
-    # Helmert family (translation / position vector / coordinate frame,
-    # static and time-dependent) — coordinateoperation.cpp:9240-9395
-    family = None
-    domain = None
-    if code in _OP_TRANSLATION:
-        family, domain = "trans", _OP_TRANSLATION[code]
-    elif code in _OP_POSVEC:
-        family, domain = "position_vector", _OP_POSVEC[code]
-    elif code in _OP_COORDFRAME:
-        family, domain = "coordinate_frame", _OP_COORDFRAME[code]
-    elif code in _OP_TIME_PV:
-        family, domain = "position_vector", _OP_TIME_PV[code]
-    elif code in _OP_TIME_CF:
-        family, domain = "coordinate_frame", _OP_TIME_CF[code]
-    elif "geocentric translations" in low:
-        family = "trans"
-    elif "position vector" in low:
-        family = "position_vector"
-    elif "coordinate frame" in low:
-        family = "coordinate_frame"
+    family, domain = _helmert_family(code, low)
     if family is not None:
         if domain is None:
             if "geog3d" in low:
@@ -966,6 +886,66 @@ def _coordop_core(node: Node) -> tuple[list[str], Node, Node]:
                      f" (EPSG:{code})")
 
 
+# +towgs84 slots: EPSG Helmert parameter code -> converter to the
+# towgs84 unit (metres, arc-seconds, ppm)
+_TOWGS84_PARAMS = {8605: _to_metres, 8606: _to_metres, 8607: _to_metres,
+                   8608: _to_arcsec, 8609: _to_arcsec, 8610: _to_arcsec,
+                   8611: _to_ppm}
+
+
+def _boundcrs_to_projstring(root: Node) -> str:
+    """BOUNDCRS[SOURCECRS, TARGETCRS[WGS84], transformation] -> the
+    source CRS fragments + towgs84 or nadgrids.  WKT2 text (the shape
+    gdalsrsinfo exports for any towgs84-bearing CRS) carries an
+    ABRIDGEDTRANSFORMATION; a PROJJSON BoundCRS arrives as the
+    COORDINATEOPERATION node sources/projjson builds.
+
+    Reference: WKTParser::Private::buildBoundCRS
+    (src/iso19111/io.cpp:4406), JSONParser::buildBoundCRS and
+    Transformation::getTOWGS84Parameters
+    (src/iso19111/coordinateoperation.cpp:6706): abridged parameter
+    values are unitless metres / arc-seconds and Scale difference is
+    (value - 1) * 1e6 ppm (convertFromAbridged,
+    coordinateoperation.cpp:1294-1345); COORDINATEOPERATION parameters
+    carry their units; Coordinate Frame rotations flip sign into the
+    position-vector towgs84 convention."""
+    tr = root.first("ABRIDGEDTRANSFORMATION", "COORDINATEOPERATION")
+    if root.first("SOURCECRS") is None or tr is None:
+        raise ValueError("BOUNDCRS needs SOURCECRS and "
+                         "ABRIDGEDTRANSFORMATION")
+    frag = _node_to_projstring(_inner_crs(root, "SOURCECRS"))
+    meth = tr.first("METHOD")
+    if meth is None:
+        raise ValueError(f"{tr.kw} without METHOD")
+    mname = next((a for a in meth.args if isinstance(a, str)), "").lower()
+    mcode = _id_code(meth)
+    if _is_hgrid_method(mcode, mname):
+        return splice_fragment(frag, "nadgrids=" + _op_parameterfile(tr))
+    family, _domain = _helmert_family(mcode, mname)
+    if family is None:
+        raise ValueError(f"unsupported BOUNDCRS method {mname!r} "
+                         f"(EPSG:{mcode})")
+    abridged = tr.kw.upper() == "ABRIDGEDTRANSFORMATION"
+    vals = dict.fromkeys(_TOWGS84_PARAMS, 0.0)
+    for par in tr.all("PARAMETER"):
+        pcode, v, f = _op_param(par)
+        if v is None:
+            continue
+        if pcode not in _TOWGS84_PARAMS:
+            pname = next((a for a in par.args if isinstance(a, str)), "")
+            raise ValueError(f"unsupported {tr.kw} parameter {pname!r}")
+        if abridged:
+            f = None
+            if pcode == 8611:
+                v = (v - 1.0) * 1e6
+        vals[pcode] = _TOWGS84_PARAMS[pcode](v, f)
+    if family == "coordinate_frame":
+        for c in (8608, 8609, 8610):
+            vals[c] = -vals[c] if vals[c] != 0.0 else 0.0
+    return splice_fragment(
+        frag, "towgs84=" + ",".join(fmt(v) for v in vals.values()))
+
+
 def _conversion_step(conv: Node, geog_ctx: Node) -> str:
     """A CONVERSION inside a CONCATENATEDOPERATION STEP -> one pipeline
     step.  'Inverse of X' names / ID[\"INVERSE(EPSG)\",...] mark the
@@ -986,21 +966,8 @@ def _conversion_step(conv: Node, geog_ctx: Node) -> str:
             if isinstance(a, str):
                 meth.args[i] = a[len("inverse of "):]
                 break
-    code, prm = _conversion_params(conv)
-
-    def A(d, c, default=None):
-        return d.get(c, default)
-
-    def L(d, c, default=0.0):
-        return d.get(c, default)
-
-    def K(d, c, default=1.0):
-        return d.get(c, default)
-
-    frag = method_fragment(code, prm, A, L, K)
-    if frag is None:
-        raise ValueError(f"unsupported EPSG method {code}")
-    step = f"{frag} {_ellps_of(geog_ctx)}"
+    step = (f"{_epsg_fragment(*_conversion_params(conv))} "
+            f"{_ellps_of(geog_ctx)}")
     return ("inv " + step) if inverse else step
 
 
@@ -1246,31 +1213,97 @@ def _wkt_family(params: dict[str, str]) -> tuple[str, dict[str, str]] | None:
     return None
 
 
+@dataclass
+class _Preset:
+    """A proj-string preset resolved once for both CRS-text writers
+    (WKT2 here, PROJJSON in sources/projjson): tokens with +datum
+    expanded, the ellipsoid, the prime meridian in degrees, the length
+    unit and the datum shift."""
+    p: dict
+    ellps: str
+    a: float
+    rf: float
+    pm: float
+    unit: tuple[str, float]
+    towgs84: list[float] | None
+    nadgrids: str | None
+
+
+def _resolve_preset(projstring: str) -> _Preset:
+    from proj_4_spark.engine.plan import DATUMS
+
+    p = _parse_projstring_tokens(projstring)
+    if "datum" in p:
+        d = DATUMS.get(p["datum"])
+        if d is None:
+            raise ValueError(f"unknown datum {p['datum']}")
+        for k, v in d.items():
+            p.setdefault(k, v)
+    if "ellps" in p:
+        ename = p["ellps"]
+        a, rf = _registry_ellipsoid(ename)
+    elif "a" in p:
+        ename = "unnamed"
+        a = float(p["a"])
+        rf = float(p["rf"]) if "rf" in p else 0.0
+        if rf == 0.0 and "b" in p:
+            rf = _inverse_flattening(a, float(p["b"]))
+    else:
+        raise ValueError("preset without ellipsoid information")
+    # a NAMED meridian (pm=paris etc., src/datums.cpp pj_prime_meridians)
+    # resolves through the proj-string reader's table
+    raw_pm = p.get("pm", 0.0) or 0.0
+    try:
+        pm = float(raw_pm)
+    except (TypeError, ValueError):
+        from proj_4_spark.engine.projstring import prime_meridian_rad
+        pm = prime_meridian_rad(str(raw_pm)) * 180.0 / math.pi
+    if p.get("units") in _UNIT_WKT:
+        unit = _UNIT_WKT[p["units"]]
+    elif "to_meter" in p:
+        unit = ("unknown", float(p["to_meter"]))
+    else:
+        unit = ("metre", 1.0)
+    towgs84 = None
+    if p.get("towgs84") and not p.get("nadgrids"):
+        towgs84 = [float(x) for x in str(p["towgs84"]).split(",")]
+        towgs84 += [0.0] * (7 - len(towgs84))
+    return _Preset(p, ename, a, rf, pm, unit, towgs84,
+                   p.get("nadgrids") or None)
+
+
+def _writer_conversion(p: dict, fmt_name: str):
+    """(method code, method name, [(param code, param name, kind,
+    value)]) of a projected preset in the writers' method subset."""
+    fam = _wkt_family(p)
+    if fam is None:
+        raise ValueError(f"no {fmt_name} writer for proj={p.get('proj')!r}")
+    key, pp = fam
+    code, mname, plist = _WKT_METHODS[key]
+    return code, mname, [
+        (pcode, pname, kind, float(pp.get(projkey, default) or default))
+        for pcode, pname, projkey, kind, default in plist]
+
+
 _WGS84_GEOG_WKT = ('GEOGCRS["WGS 84",DATUM["World Geodetic System '
                    '1984",ELLIPSOID["WGS 84",6378137,298.257223563,'
                    'LENGTHUNIT["metre",1]]],'
                    'UNIT["degree",0.0174532925199433]]')
 
 
-def _bound_wkt(core: str, p: dict, name: str) -> str:
+def _bound_wkt(core: str, pre: _Preset, name: str) -> str:
     """Wrap datum-bearing presets in BOUNDCRS — the writer must not
     silently DROP +towgs84/+nadgrids (the reader converts back).
     Note the ABRIDGED convention stores Scale difference as
     1 + ppm*1e-6, which round-trips the ppm value to ~1e-10 relative
     (inherent to the WKT2 abridged form; PROJ has the same artifact)."""
-    tw = p.get("towgs84")
-    ng = p.get("nadgrids")
-    if not tw and not ng:
-        return core
-    if ng:
+    if pre.nadgrids:
         tr = (f'ABRIDGEDTRANSFORMATION["{name} to WGS84",'
               'METHOD["NTv2",ID["EPSG",9615]],'
               'PARAMETERFILE["Latitude and longitude difference file",'
-              f'"{ng}"]]')
-    else:
-        vals = [float(x) for x in str(tw).split(",")]
-        while len(vals) < 7:
-            vals.append(0.0)
+              f'"{pre.nadgrids}"]]')
+    elif pre.towgs84:
+        vals = pre.towgs84
         pnames = ["X-axis translation", "Y-axis translation",
                   "Z-axis translation", "X-axis rotation",
                   "Y-axis rotation", "Z-axis rotation"]
@@ -1282,6 +1315,8 @@ def _bound_wkt(core: str, p: dict, name: str) -> str:
               'METHOD["Position Vector transformation '
               '(geog2D domain)",ID["EPSG",9606]],'
               + ",".join(parts) + "]")
+    else:
+        return core
     return (f"BOUNDCRS[SOURCECRS[{core}],"
             f"TARGETCRS[{_WGS84_GEOG_WKT}],{tr}]")
 
@@ -1291,73 +1326,29 @@ def projstring_to_wkt2(projstring: str, name: str = "unnamed") -> str:
     preset (the writer half of the round-trip test: parse(write(x))
     must reproduce x's parameters exactly, INCLUDING the datum shift —
     towgs84/nadgrids presets emit a BOUNDCRS wrapper)."""
-    from proj_4_spark.engine.plan import DATUMS
-
-    p = _parse_projstring_tokens(projstring)
-    if "datum" in p:
-        d = DATUMS.get(p["datum"])
-        if d is None:
-            raise ValueError(f"unknown datum {p['datum']}")
-        for k, v in d.items():
-            p.setdefault(k, v)
-    if "ellps" in p:
-        ell = ELLPS_TABLE[p["ellps"]]
-        a = ell["a"]
-        if "rf" in ell:
-            rf = ell["rf"]
-        else:
-            b = ell["b"]
-            rf = 0.0 if b == a else a / (a - b)
-        ename = p["ellps"]
-    elif "a" in p:
-        a = float(p["a"])
-        rf = float(p["rf"]) if "rf" in p else 0.0
-        if rf == 0.0 and "b" in p and float(p["b"]) != a:
-            b = float(p["b"])
-            rf = a / (a - b)
-        ename = "unnamed"
-    else:
-        raise ValueError("preset without ellipsoid information")
-    ell_wkt = (f'ELLIPSOID["{ename}",{fmt(a)},{fmt(rf)},'
+    pre = _resolve_preset(projstring)
+    ell_wkt = (f'ELLIPSOID["{pre.ellps}",{fmt(pre.a)},{fmt(pre.rf)},'
                'LENGTHUNIT["metre",1]]')
-    pm = _pm_degrees(p)
-    pm_wkt = (f'PRIMEM["unnamed",{fmt(pm)},'
-              'ANGLEUNIT["degree",0.0174532925199433]]') if pm else ""
-    base = (f'BASEGEOGCRS["{name} base",DATUM["unknown",{ell_wkt}]'
-            + ("," + pm_wkt if pm_wkt else "")
-            + ',UNIT["degree",0.0174532925199433]]')
-    if p.get("proj") == "longlat":
+    pm_wkt = (f',PRIMEM["unnamed",{fmt(pre.pm)},'
+              'ANGLEUNIT["degree",0.0174532925199433]]') if pre.pm else ""
+    if pre.p.get("proj") == "longlat":
         return _bound_wkt(
-            (f'GEOGCRS["{name}",DATUM["unknown",{ell_wkt}]'
-             + ("," + pm_wkt if pm_wkt else "")
-             + ',CS[ellipsoidal,2],AXIS["latitude",north],'
+            (f'GEOGCRS["{name}",DATUM["unknown",{ell_wkt}]{pm_wkt}'
+             ',CS[ellipsoidal,2],AXIS["latitude",north],'
              'AXIS["longitude",east],'
-             'UNIT["degree",0.0174532925199433]]'), p, name)
-    fam = _wkt_family(p)
-    if fam is None:
-        raise ValueError(f"no WKT2 writer for proj={p.get('proj')!r}")
-    key, pp = fam
-    code, mname, plist = _WKT_METHODS[key]
-    parts = [f'CONVERSION["{name} conversion",'
-             f'METHOD["{mname}",ID["EPSG",{code}]]']
-    for pcode, pname, projkey, kind, default in plist:
-        v = float(pp.get(projkey, default) or default)
-        if kind == "A":
-            unit = 'ANGLEUNIT["degree",0.0174532925199433]'
-        elif kind == "K":
-            unit = 'SCALEUNIT["unity",1]'
-        else:
-            unit = 'LENGTHUNIT["metre",1]'
-        parts.append(f'PARAMETER["{pname}",{fmt(v)},{unit},'
-                     f'ID["EPSG",{pcode}]]')
-    conv = ",".join(parts) + "]"
-    if "units" in p and p["units"] in _UNIT_WKT:
-        uname, ufac = _UNIT_WKT[p["units"]]
-    elif "to_meter" in p:
-        uname, ufac = "unknown", float(p["to_meter"])
-    else:
-        uname, ufac = "metre", 1.0
+             'UNIT["degree",0.0174532925199433]]'), pre, name)
+    code, mname, params = _writer_conversion(pre.p, "WKT2")
+    units = {"A": 'ANGLEUNIT["degree",0.0174532925199433]',
+             "K": 'SCALEUNIT["unity",1]', "L": 'LENGTHUNIT["metre",1]'}
+    conv = ",".join(
+        [f'CONVERSION["{name} conversion",'
+         f'METHOD["{mname}",ID["EPSG",{code}]]']
+        + [f'PARAMETER["{pname}",{fmt(v)},{units[kind]},'
+           f'ID["EPSG",{pcode}]]' for pcode, pname, kind, v in params]) + "]"
+    uname, ufac = pre.unit
     return _bound_wkt(
-        (f'PROJCRS["{name}",{base},{conv},'
+        (f'PROJCRS["{name}",BASEGEOGCRS["{name} base",'
+         f'DATUM["unknown",{ell_wkt}]{pm_wkt}'
+         f',UNIT["degree",0.0174532925199433]],{conv},'
          f'CS[Cartesian,2],AXIS["(E)",east],AXIS["(N)",north],'
-         f'LENGTHUNIT["{uname}",{fmt(ufac)}]]'), p, name)
+         f'LENGTHUNIT["{uname}",{fmt(ufac)}]]'), pre, name)

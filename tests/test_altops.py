@@ -187,6 +187,25 @@ def test_alt_transform_dataframe_surface(spark):
     np.testing.assert_array_equal(out["y"].to_numpy(), ey)
 
 
+def test_alt_transform_rejects_candidate_without_spec():
+    """The Spark surface ships projstring specs to the workers; a
+    bespoke-op candidate is refused by name (AltOperation still runs it
+    in NumPy)."""
+    from proj_4_spark.engine.altops import alt_transform
+    from proj_4_spark.engine.plan import create_operation
+
+    bespoke = Candidate(op=create_operation("+proj=helmert +x=1"),
+                        bbox_src=(-180.0, -90.0, 180.0, 90.0),
+                        name="bespoke helmert")
+    shipped = Candidate.from_projstring("+proj=helmert +x=2",
+                                        (-180.0, -90.0, 180.0, 90.0))
+    with pytest.raises(ValueError, match="bespoke helmert"):
+        alt_transform(None, [shipped, bespoke])
+    x, _, _, _, ch = AltOperation([bespoke]).apply(
+        np.array([0.1]), np.array([0.2]), np.zeros(1), np.zeros(1), "fwd")
+    assert ch[0] == 0 and np.isfinite(x[0])
+
+
 def test_crs_to_crs_candidates_nad27_catalog_routing():
     """VERDICT r3 #9: alt_transform from two CRS names — the candidate
     list is built from the GENERATED EPSG catalog (TRANSFORMS table:

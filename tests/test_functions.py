@@ -124,17 +124,17 @@ def test_multimodal_feature_shapes(spark):
     )
 
     media = synth_media_table(spark, 60)
-    feats = extract_features(media, fake=True).toPandas()
+    feats = extract_features(media).toPandas()
     assert len(feats) == 60
     assert all(len(f) == 8 for f in feats["features"])
-    # deterministic fake: same payload digest -> same features
-    feats2 = extract_features(synth_media_table(spark, 60), fake=True).toPandas()
+    # deterministic payloads and decode -> same features
+    feats2 = extract_features(synth_media_table(spark, 60)).toPandas()
     assert np.allclose(
         np.stack(feats.sort_values("media_id")["features"].to_numpy()),
         np.stack(feats2.sort_values("media_id")["features"].to_numpy()),
     )
-    frames = frame_sample(media, every_n=2, fake=True).toPandas()
-    # 1/3 of media are video with 4 fake frames, sampled every 2 -> 2 rows
+    frames = frame_sample(media, every_n=2).toPandas()
+    # 1/3 of media are Y4M video with 4 frames, sampled every 2 -> 2 rows
     assert len(frames) == 20 * 2
     assert set(frames["frame_idx"]) == {0, 2}
 
@@ -254,7 +254,7 @@ def test_multimodal_real_decode_end_to_end(spark):
 
     media = synth_media_table(spark, 45)
     rows = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    feats = extract_features(media).toPandas()   # fake=False: real codecs
+    feats = extract_features(media).toPandas()
     assert len(feats) == 45
     for _, r in feats.iterrows():
         arr, _ = sniff_and_decode(rows[r["media_id"]])

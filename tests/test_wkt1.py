@@ -107,6 +107,25 @@ def test_wkt1_geogcs_with_towgs84():
     assert op.P.helmert is not None or op.P.cart is not None
 
 
+def test_wkt1_b_defined_ellipsoid_matches_registry():
+    """Clarke 1866 is b-defined in the registry; its 15-digit 1/f text
+    resolves to the named ellipsoid through the same matcher as the
+    WKT2 reader, not to a=/rf= literals."""
+    from proj_4_spark.sources.wkt2 import wkt2_to_projstring
+
+    wkt1 = ('GEOGCS["GCS_North_American_1927",'
+            'DATUM["D_North_American_1927",'
+            'SPHEROID["Clarke_1866",6378206.4,294.978698213898]],'
+            'PRIMEM["Greenwich",0.0],'
+            'UNIT["Degree",0.0174532925199433]]')
+    wkt2 = ('GEOGCRS["NAD27",DATUM["North American Datum 1927",'
+            'ELLIPSOID["Clarke 1866",6378206.4,294.978698213898,'
+            'LENGTHUNIT["metre",1]]],'
+            'ANGLEUNIT["degree",0.0174532925199433]]')
+    assert wkt1_to_projstring(wkt1) == "proj=longlat ellps=clrk66 no_defs"
+    assert wkt2_to_projstring(wkt2) == wkt1_to_projstring(wkt1)
+
+
 def test_wkt1_projcs_paste():
     wkt = ('PROJCS["World_Robinson",GEOGCS["GCS_WGS_1984",'
            'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,'
