@@ -64,7 +64,7 @@ _MODIFIER_HOOKS = _GRID_AXIS_HOOKS + ("helmert", "cart", "cart_wgs84")
 _FWD_TWIN_NAMES = ("webmerc", "merc", "eqc", "cea", "lcc", "aea",
                    "leac", "stere", "ups", "laea", "sterea", "somerc",
                    "krovak", "sinu", "eqdc", "eqearth", "cass",
-                   "ortho", "gnom", "geos")
+                   "ortho", "gnom", "geos", "robin")
 _FWD_KERNEL_NAMES = _FWD_TWIN_NAMES + ("omerc", "moll", "wag4", "wag5")
 # inverse families of _emit_inv_kernel (ortho/gnom: sphere only).
 # sterea is measured OUT: its 20-iteration Gauss inversion unrolled to a
@@ -766,6 +766,27 @@ def _emit_fwd_kernel(st: _SqlStager, P, lamw: str, phic: str, phi: str):
         return (f"{kk} * {cosc} * sin({slam})",
                 f"{kk} * ({L(cc0)} * {sinc} - {L(sc0)} * {cosc} * {cosl})",
                 bad)
+    if name == "robin":
+        # robin.cpp forward (kernels/robin.py): the 5-degree node i,
+        # then V(C, z) = c0 + z*(c1 + z*(c2 + z*c3)) over the X and Y
+        # tables; each float32-rounded coefficient column is an array
+        # literal indexed by node
+        from proj_4_spark.kernels import robin as R
+
+        i = S(r_i=f"CAST(least(greatest(floor(abs({phic}) * {L(R._C1)} + "
+                  f"{L(1e-15)}), 0), {R._NODES}) AS INT)")
+        z = S(r_z=f"{L(C.RAD_TO_DEG)} * (abs({phic}) - {L(R._RC1)} * "
+                  f"CAST({i} AS DOUBLE))")
+
+        def v(T):
+            c = [f"element_at(array({', '.join(L(t) for t in T[:, j])}), "
+                 f"{i} + 1)" for j in range(4)]
+            return f"{c[0]} + {z} * ({c[1]} + {z} * ({c[2]} + {z} * {c[3]}))"
+
+        yv = S(r_y=f"({v(R._YA)}) * {L(R._FYC)}")
+        return (f"({v(R._XA)}) * {L(R._FXC)} * {lamw}",
+                f"CASE WHEN {phic} < 0.0D THEN (-{yv}) ELSE {yv} END",
+                f"isnan({phic})")
     if name == "laea":
         return _laea_fwd_kernel(st, P, lamw, phic)
     if name in ("stere", "ups"):
@@ -2072,6 +2093,26 @@ def _pick_route(op, direction: str):
     return next((r for r in _ROUTES if r[1](op, direction)), None)
 
 
+_DIRS = {"fwd": "fwd", "forward": "fwd",
+         "inv": "inv", "inverse": "inv", "reverse": "inv"}
+
+
+def _direction(direction: str) -> str:
+    if direction not in _DIRS:
+        raise ValueError(
+            f"direction must be one of {sorted(_DIRS)}, got {direction!r}")
+    return _DIRS[direction]
+
+
+def describe_route(projstring: str, direction: str = "fwd") -> str:
+    """The ``_ROUTES`` row name ``transform()`` takes for (projstring,
+    direction) with ``jvm_fast_path=True`` — ``"datum_pipeline"``,
+    ``"composed_fwd"``, ``"composed_inv"``, ``"fwd"`` or ``"inv"`` — or
+    ``"udf"`` for the Arrow-UDF path."""
+    route = _pick_route(_cached_operation(projstring), _direction(direction))
+    return "udf" if route is None else route[0]
+
+
 def transform(
     df,
     projstring: str,
@@ -2108,9 +2149,9 @@ def transform(
     - ``composed_fwd`` / ``composed_inv``: datum-MODIFIED single ops
       (+towgs84/+datum emulation hooks) over latlong, over a forward
       family of webmerc/merc/eqc/cea/lcc/aea/leac/stere/ups/laea/
-      sterea/somerc/krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos, or
-      over any inverse family of the ``inv`` route;
-    - ``fwd``: bare single-op FORWARDS of those 20 families plus omerc,
+      sterea/somerc/krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos/
+      robin, or over any inverse family of the ``inv`` route;
+    - ``fwd``: bare single-op FORWARDS of those 21 families plus omerc,
       moll/wag4/wag5 and Poder-Engsager etmerc/tmerc/utm;
     - ``inv``: bare single-op INVERSES of webmerc/merc/eqc/cea/laea/
       stere/ups/sinu/eqdc/cass/geos/eqearth/omerc/lcc/aea/leac/moll/
@@ -2122,9 +2163,10 @@ def transform(
     ``False`` always uses the Arrow-UDF kernels (the reference path).
     Grid-backed datums (+nadgrids/+geoidgrids), +axis, +over, +geoc,
     long-wrap, prime meridians, geocentric CRS, ``+inv`` proj-strings
-    and the remaining families (robin, the sterea inverse, ...) always
-    use the UDF path.  Twin routes stage through temporary ``_jd_*``
-    columns: an input column with that prefix raises ValueError.
+    and the remaining families (the robin and sterea inverses, poly,
+    ...) always use the UDF path; ``describe_route`` names the route a
+    call takes.  Twin routes stage through temporary ``_jd_*`` columns:
+    an input column with that prefix raises ValueError.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
@@ -2135,12 +2177,7 @@ def transform(
     if not isinstance(jvm_fast_path, bool):
         raise ValueError(
             f"jvm_fast_path must be True or False, got {jvm_fast_path!r}")
-    _DIRS = {"fwd": "fwd", "forward": "fwd",
-             "inv": "inv", "inverse": "inv", "reverse": "inv"}
-    if direction not in _DIRS:
-        raise ValueError(
-            f"direction must be one of {sorted(_DIRS)}, got {direction!r}")
-    direction = _DIRS[direction]
+    direction = _direction(direction)
     op_probe = _cached_operation(projstring)
 
     route = _pick_route(op_probe, direction) if jvm_fast_path else None

@@ -74,15 +74,24 @@ def _num(v) -> float:
     return float(v)
 
 
+def _unit_string(u) -> tuple:
+    """(WKT unit node kind, factor) of a PROJJSON unit string; a string
+    outside _UNIT_STRINGS raises rather than read as the default unit."""
+    if u not in _UNIT_STRINGS:
+        raise ValueError(f"unsupported unit {u!r}")
+    return _UNIT_STRINGS[u]
+
+
 def _unit_conv(u) -> float | None:
     """Conversion factor of a PROJJSON unit (string or object); None for
-    the kind's default (metre / degree / unity) or an unknown unit."""
+    the kind's default (metre / degree / unity) or an object without a
+    conversion factor."""
     if isinstance(u, dict):
         f = u.get("conversion_factor")
         return float(f) if f is not None else None
     if u in (None, "metre", "degree", "unity"):
         return None
-    return _UNIT_STRINGS.get(str(u), (None, None))[1]
+    return _unit_string(u)[1]
 
 
 def _units(u) -> list:
@@ -96,9 +105,7 @@ def _units(u) -> list:
             return []
         kind = _UNIT_TYPES.get(str(u.get("type", "")).lower(), "UNIT")
         return [Node(kind, [u.get("name", "unknown"), f])]
-    if u not in _UNIT_STRINGS:
-        raise ValueError(f"unsupported unit {u!r}")
-    kind, f = _UNIT_STRINGS[u]
+    kind, f = _unit_string(u)
     return [Node(kind, [u, f])]
 
 

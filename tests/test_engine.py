@@ -1734,6 +1734,65 @@ def test_moll_fwd_jvm_fast_path_parity(spark):
     assert np.allclose(rp["r_y"], rp["lat"], atol=1e-9)
 
 
+def test_robin_fwd_twin_bit_identical(spark):
+    """The Robinson forward twin (5-degree node lookup + two cubics,
+    kernels/robin.py's float order) takes the bare ``fwd`` route and,
+    under ``+towgs84``, the ``composed_fwd`` route.  On node boundaries
+    k*5 deg +- 1e-13, the poles, +-0.0, NaN/NULL and |lat| > 90 rows
+    plus a seeded grid, the bare twin's x/y/z/t equal the Arrow-UDF
+    path in raw float64 bits.  The composed twin's datum legs take
+    sin/cos/atan2/hypot from the JVM, a few ulps off NumPy's libm as on
+    every composed route, so there the NaN pattern is exact and values
+    agree to 1e-14 relative.  The inverse stays on the UDF path."""
+    import pandas as pd
+
+    from proj_4_spark.engine.spark import describe_route, transform
+
+    lats = [s * (5.0 * k + d) for k in range(19) for d in (-1e-13, 0.0, 1e-13)
+            for s in (1.0, -1.0)]
+    lats += [0.0, -0.0, 90.1, -90.1, 1000.0, float("nan"), None]
+    lons = [-180.0, 180.0, 0.0, -0.0, 37.5, -541.0, float("nan"), None]
+    rng = np.random.default_rng(7)
+    n = 2000
+    pdf = pd.DataFrame({
+        "lon": lons * len(lats) + list(rng.uniform(-200.0, 200.0, n)),
+        "lat": list(np.repeat(lats, len(lons))) +
+               list(rng.uniform(-95.0, 95.0, n))})
+    pdf["h"] = rng.uniform(-500.0, 5000.0, len(pdf))
+    pdf.loc[3, "h"] = np.nan
+    pdf["tt"] = rng.uniform(2000.0, 2030.0, len(pdf))
+    pdf["id"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf)
+    for ps, route in (("+proj=robin +ellps=WGS84", "fwd"),
+                      ("+proj=robin +R=6371000 +lon_0=150 +x_0=10 +y_0=-5",
+                       "fwd"),
+                      ("+proj=robin +ellps=GRS80 +units=km", "fwd"),
+                      ("ESRI:54030", "fwd"),
+                      ("+proj=robin +ellps=WGS84 +towgs84=1,2,3",
+                       "composed_fwd")):
+        assert describe_route(ps) == route, ps
+        assert describe_route(ps, "inv") == "udf", ps
+        kw = dict(x="lon", y="lat", z="h", t="tt")
+        fast = transform(df, ps, out_prefix="f_", **kw)
+        assert "EvalPython" not in \
+            fast._jdf.queryExecution().executedPlan().toString(), ps
+        slow = transform(df, ps, out_prefix="s_", jvm_fast_path=False, **kw)
+        fp = fast.toPandas().sort_values("id")
+        sp = slow.toPandas().sort_values("id")
+        for c in ("x", "y", "z", "t"):
+            a = fp[f"f_{c}"].to_numpy(dtype=np.float64, na_value=np.nan)
+            b = sp[f"s_{c}"].to_numpy(dtype=np.float64, na_value=np.nan)
+            if route == "composed_fwd":
+                assert (np.isnan(a) == np.isnan(b)).all(), (ps, c)
+                m = ~np.isnan(a)
+                assert np.allclose(a[m], b[m], rtol=1e-14, atol=1e-8), (
+                    ps, c, np.abs(a[m] - b[m]).max())
+                continue
+            diff = a.view(np.int64) != b.view(np.int64)
+            assert not diff.any(), (ps, c, pdf[diff][["lon", "lat"]].head(),
+                                    a[diff][:5], b[diff][:5])
+
+
 def test_staged_twin_replaces_default_named_columns(spark):
     """Regression (VERDICT r7 #4): with the documented default call
     shape — input columns named x/y, out_prefix="" — every STAGED twin

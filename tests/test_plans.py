@@ -367,7 +367,8 @@ def test_twin_queries_codegen_health(spark):
     composed datum-modified forward twins (the lcc +towgs84 benchmark
     route, EPSG:2154 and EPSG:3035 — 10,575 / 10,503 bytecodes and a
     janino failure before the codegen barrier between the datum legs
-    and the projection), must pass _assert_codegen_health."""
+    and the projection) and the Robinson forwards (bare, ESRI:54030,
+    +towgs84), must pass _assert_codegen_health."""
     import __spark_entry__ as E
 
     from proj_4_spark.engine.spark import transform
@@ -390,7 +391,9 @@ def test_twin_queries_codegen_health(spark):
             (F.col("id") / 8 * 0.5 + 44.0).alias("lat"))
         for ps in ("+proj=lcc +lat_0=46.5 +lon_0=3 +lat_1=49 +lat_2=44 "
                    "+x_0=700000 +y_0=6600000 +ellps=clrk80ign "
-                   "+towgs84=-168,-60,320", "EPSG:2154", "EPSG:3035"):
+                   "+towgs84=-168,-60,320", "EPSG:2154", "EPSG:3035",
+                   "+proj=robin +ellps=WGS84", "ESRI:54030",
+                   "+proj=robin +ellps=WGS84 +towgs84=1,2,3"):
             out = transform(pts, ps, x="lon", y="lat", out_prefix="p_")
             _assert_codegen_health(spark, out, ps)
     finally:

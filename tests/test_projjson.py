@@ -271,6 +271,23 @@ def test_projjson_bound_unit_strings():
                        atol=1e-12)
 
 
+def test_projjson_ellipsoid_unit_strings():
+    """An ellipsoid axis with a unit string converts through the unit
+    table ('kilometre' -> metres); a string outside it ('km') raises
+    instead of reading as metres."""
+    def geog(unit):
+        return {"type": "GeographicCRS", "name": "g",
+                "datum": {"type": "GeodeticReferenceFrame", "name": "d",
+                          "ellipsoid": {"name": "e", "semi_major_axis":
+                                        {"value": 6378.137, "unit": unit},
+                                        "inverse_flattening": 300.5}}}
+
+    assert projjson_to_projstring(geog("kilometre")) == \
+        "proj=longlat a=6378137 rf=300.5 no_defs"
+    with pytest.raises(ValueError, match="unsupported unit 'km'"):
+        projjson_to_projstring(geog("km"))
+
+
 def test_create_operation_and_transform_accept_projjson(spark):
     """createFromUserInput dispatch on '{': PROJJSON works anywhere a
     proj-string does — create_operation AND the Spark transform

@@ -198,3 +198,20 @@ def test_r7_iterative_inverse_twins_stay_wired():
         ps = f"+proj={nm} +R=6371000"
         assert _route(ps, "inv") == "inv", nm
         assert _route(ps, "fwd") == "fwd", nm
+
+
+def test_robin_forward_twin_routes():
+    """The Robinson forward is a twin: bare (+proj=robin, ESRI:54030,
+    ESRI:53030) on the ``fwd`` route, +towgs84 on ``composed_fwd``.
+    Its inverse (node nudge + Newton) keeps the Arrow-UDF path."""
+    from proj_4_spark.engine.spark import describe_route
+
+    for ps in ("+proj=robin +ellps=WGS84", "+proj=robin +R=6371000",
+               "ESRI:54030", "ESRI:53030"):
+        assert describe_route(ps) == "fwd", ps
+        assert describe_route(ps, "inv") == "udf", ps
+    ps = "+proj=robin +ellps=WGS84 +towgs84=1,2,3"
+    assert describe_route(ps, "forward") == "composed_fwd"
+    assert describe_route(ps, "inverse") == "udf"
+    # +inv swaps the kernels: the forward direction runs the inverse
+    assert describe_route("+proj=robin +ellps=WGS84 +inv") == "udf"
