@@ -6,14 +6,15 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   LRU cache, so UDF closures carry only a short string — no pickled
   kernel state, trivially broadcastable, and grid data can be loaded
   worker-side.
-- transform() consults ONE ordered route table (_ROUTES) once.  A route
-  compiles the operation to a Catalyst "twin": staged Spark-SQL
+- transform() consults ONE ordered route table (_ROUTES) once: a
+  cart/helmert datum pipeline, a single op's forward, or its inverse.
+  A route compiles the operation to a Catalyst "twin": staged Spark-SQL
   projections (_SqlStager) that reproduce the NumPy kernels term for
   term, so the hot path is whole-stage codegen with zero Python workers.
-  Every twin comes from two staged pipelines — forward (entry -> shared
-  prepare -> per-family kernel -> shared finalize) and inverse (entry ->
-  per-family kernel -> inv_finalize -> shared finalize) — and the
-  cart/helmert datum legs compose with either inside the same stager.
+  Every twin comes from two staged pipelines — forward (entry -> datum
+  legs -> shared prepare -> per-family kernel -> shared finalize) and
+  inverse (entry -> per-family kernel -> inv_finalize -> datum legs ->
+  shared finalize).  A bare op is the case with zero datum legs.
 - An operation no route accepts runs as ONE Arrow-batched pandas UDF
   per *whole pipeline* (kernel fusion; never one UDF per step —
   SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
@@ -53,19 +54,17 @@ def _cached_operation(projstring: str):
     return create_operation(projstring)
 
 
-# datum/grid/axis hooks a twin never models, and the cart/helmert hooks
-# the composed datum-modified routes model as staged legs
+# grid/axis hooks a twin never models
 _GRID_AXIS_HOOKS = ("hgridshift", "vgridshift", "axisswap")
 _MODIFIER_HOOKS = _GRID_AXIS_HOOKS + ("helmert", "cart", "cart_wgs84")
 
-# forward families of the composed datum-modified route; the bare
-# forward route also serves omerc, the moll family and Poder-Engsager
-# etmerc/tmerc/utm (P.fwd is exact_e_fwd)
-_FWD_TWIN_NAMES = ("webmerc", "merc", "eqc", "cea", "lcc", "aea",
-                   "leac", "stere", "ups", "laea", "sterea", "somerc",
-                   "krovak", "sinu", "eqdc", "eqearth", "cass",
-                   "ortho", "gnom", "geos", "robin")
-_FWD_KERNEL_NAMES = _FWD_TWIN_NAMES + ("omerc", "moll", "wag4", "wag5")
+# forward families of _emit_fwd_kernel; Poder-Engsager etmerc/tmerc/utm
+# (P.fwd is exact_e_fwd) join them in _fwd_kernel_ok
+_FWD_KERNEL_NAMES = ("webmerc", "merc", "eqc", "cea", "lcc", "aea",
+                     "leac", "stere", "ups", "laea", "sterea", "somerc",
+                     "krovak", "sinu", "eqdc", "eqearth", "cass",
+                     "ortho", "gnom", "geos", "robin", "omerc", "moll",
+                     "wag4", "wag5")
 # inverse families of _emit_inv_kernel (ortho/gnom: sphere only).
 # sterea is measured OUT: its 20-iteration Gauss inversion unrolled to a
 # twin running 0.64x the Arrow-UDF path (4.0 vs 6.2 M pts/s at 16 M pts,
@@ -75,19 +74,6 @@ _INV_KERNEL_NAMES = ("webmerc", "merc", "eqc", "cea", "laea", "stere",
                      "ups", "sinu", "eqdc", "cass", "ortho", "gnom",
                      "moll", "wag4", "wag5", "geos", "eqearth", "omerc",
                      "lcc", "aea", "leac")
-
-
-def _bare_op_ok(P) -> bool:
-    """True only for a BARE op — no datum/grid/axis hooks and none of
-    the prepare/finalize modifiers (+over/+geoc/long-wrap/non-Greenwich
-    meridian) that the twins do not model."""
-    if any(getattr(P, a, None) is not None for a in _MODIFIER_HOOKS):
-        return False
-    if getattr(P, "over", False) or getattr(P, "geoc", False):
-        return False
-    if getattr(P, "is_long_wrap_set", False):
-        return False
-    return getattr(P, "from_greenwich", 0.0) == 0.0
 
 
 def _fwd_kernel_ok(P) -> bool:
@@ -106,15 +92,6 @@ def _inv_kernel_ok(P) -> bool:
     if name in ("ortho", "gnom") and P.es != 0.0:
         return False
     return name in _INV_KERNEL_NAMES
-
-
-def _bare_single(op, direction: str, want: str) -> bool:
-    """A bare single op run in its own direction: a '+proj=... +inv'
-    string builds Operation(inverted=True), whose direction='fwd' runs
-    the INVERSE kernel (proj_trans direction swap, src/4D_api.cpp)."""
-    P = getattr(op, "P", None)
-    return (P is not None and direction == want
-            and not getattr(op, "inverted", False) and _bare_op_ok(P))
 
 
 def _leg_kind(P, step: bool):
@@ -191,43 +168,40 @@ def _datum_jvm_legs(op, direction: str):
     return legs
 
 
-def _composed_ok(op, direction: str) -> bool:
-    """True when a SINGLE datum-modified operation (+towgs84 / +datum
-    cs2cs-emulation hooks: P.cart + P.cart_wgs84 [+ P.helmert]) can run
-    as the composed twin: datum legs + the projection's own kernel —
-    the dominant catalog-preset shape runs with zero Python workers in
-    both directions.  Grid hooks (+nadgrids/+geoidgrids), +axis, +over,
-    +geoc, long-wrap, prime meridians, a vertical offset and geocentric
-    CRS stay on the Arrow-UDF path."""
+def _single_ok(op, direction: str) -> bool:
+    """True when a SINGLE operation runs as the fwd / inv twin: its
+    cs2cs-emulation datum legs (+towgs84 / +datum hooks: P.cart +
+    P.cart_wgs84 [+ P.helmert]; none for a bare op), then the
+    projection's own kernel (or the latlong identity), in one stager —
+    the same prepare -> legs -> kernel -> finalize order whether or not
+    legs exist (src/fwd.cpp:41-131, src/inv.cpp:42-124).  Pipelines
+    are the datum_pipeline row's; '+proj=... +inv' strings (proj_trans
+    swaps their kernels, src/4D_api.cpp), grid hooks
+    (+nadgrids/+geoidgrids), +axis, +over, +geoc, long-wrap, prime
+    meridians and geocentric CRS stay on the Arrow-UDF path."""
     from proj_4_spark.engine.plan import PipelineOperation
 
     P = getattr(op, "P", None)
     if P is None or isinstance(op, PipelineOperation):
         return False
-    if getattr(op, "inverted", False) or direction not in ("fwd", "inv"):
+    if getattr(op, "inverted", False) or P.is_geocent:
         return False
-    if P.cart is None or P.cart_wgs84 is None:
-        return False  # not datum-modified: the bare routes handle it
-    if getattr(P, "is_geocent", False):
-        return False
-    if any(getattr(P, a, None) is not None for a in _GRID_AXIS_HOOKS):
+    if any(getattr(P, a) is not None for a in _GRID_AXIS_HOOKS):
         return False
     if P.over or P.geoc or P.from_greenwich != 0.0 or P.is_long_wrap_set:
         return False
-    if P.z0 != 0.0:
-        return False  # vfr/vto_meter (e.g. +units=km) are handled
-    want = [("cart", P.cart), ("cart", P.cart_wgs84)]
-    if P.helmert is not None:
-        want.append(("helmert", P.helmert))
-    for kind, hop in want:
-        if getattr(hop, "inverted", False) or \
-                _leg_kind(hop.P, step=False) != kind:
+    hooks = (("cart", P.cart), ("cart", P.cart_wgs84),
+             ("helmert", P.helmert))
+    if any(hop is not None for _, hop in hooks):
+        if P.cart is None or P.cart_wgs84 is None:
             return False
-    if getattr(P, "is_latlong", False):
+        for kind, hop in hooks:
+            if hop is not None and (getattr(hop, "inverted", False)
+                                    or _leg_kind(hop.P, step=False) != kind):
+                return False
+    if P.is_latlong:
         return True
-    if direction == "fwd":
-        return P.name in _FWD_TWIN_NAMES
-    return _inv_kernel_ok(P)
+    return _fwd_kernel_ok(P) if direction == "fwd" else _inv_kernel_ok(P)
 
 
 def _sql_dlit(v: float) -> str:
@@ -420,13 +394,14 @@ def _sql_authlat(st, beta: str, apa, tag: str) -> str:
 
 # --- forward pipeline -----------------------------------------------------
 #
-# _entry_stages -> _emit_fwd (shared prepare, _emit_fwd_kernel, *a +
-# x0/y0, *fr_meter) -> shared finalize (_outputs: the error mask,
-# vertical scaling, t).  Every kernel is ported term for term from the
-# NumPy kernels, keeping their operation order, grouping and
-# Python-folded literals: Catalyst does not reassociate floating-point
-# arithmetic, so a twin agrees with the Arrow-UDF path to libm ulps
-# (parity pinned per family in tests/test_engine.py).
+# _entry_stages -> datum legs (_emit_datum_legs; none for a bare op) ->
+# _emit_fwd (shared prepare, _emit_fwd_kernel, *a + x0/y0, *fr_meter)
+# -> shared finalize (_outputs: the error mask, vertical scaling, t).
+# Every kernel is ported term for term from the NumPy kernels, keeping
+# their operation order, grouping and Python-folded literals: Catalyst
+# does not reassociate floating-point arithmetic, so a twin agrees with
+# the Arrow-UDF path to libm ulps (parity pinned per family in
+# tests/test_engine.py).
 
 
 def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
@@ -462,14 +437,17 @@ def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
 def _emit_fwd(st: _SqlStager, P, lam: str, phi: str):
     """fwd prepare (lam wrap - lam0, lat clip), the family kernel and
     the projection finalize (*a, +x0/y0, *fr_meter) over radian COLUMN
-    REFS.  Returns (x, y, bad): bad is the kernel's extra error
-    predicate or None."""
+    REFS — for latlong the identity kernel and no planar finalize.
+    Returns (x, y, bad): bad is the kernel's extra error predicate or
+    None."""
     L = _sql_dlit
     st.stage(lamw1=_sql_adjlon(lam))
     st.stage(lamd=f"({st.col('lamw1')} - {L(P.lam0)})")
     lamw, phic = st.stage(
         lamw=_sql_adjlon(st.col("lamd")),
         phic=f"least(greatest({phi}, {L(-_H)}), {L(_H)})")
+    if P.is_latlong:
+        return lamw, phic, None
     xk, yk, bad = _emit_fwd_kernel(st, P, lamw, phic, phi)
     xe, ye = st.stage(
         xe=f"{L(P.fr_meter)} * (({xk}) * {L(P.a)} + {L(P.x0)})",
@@ -1061,17 +1039,44 @@ def _sql_clens(st, coeffs, r: str, i: str, tag: str):
 
 def _fwd_apply(df, op, direction: str, x, y, z, t, degrees: bool,
                z_supplied: bool, out_prefix: str):
-    """Route "fwd": a bare single-op forward."""
+    """Route "fwd": a single op's forward — its datum legs (WGS84 ->
+    local datum, fwd_prepare order; none for a bare op), then the
+    projection's forward pipeline (or the latlong identity) in one
+    stager, a codegen barrier between them."""
     P = op.P
+    L = _sql_dlit
     st = _SqlStager()
+    col = st.col
     _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    xe, ye, bad = _emit_fwd(st, P, st.col("lam"), st.col("phi"))
-    zout = st.col("zz")
+    lam, phi, zg = col("lam"), col("phi"), col("zz")
+    mask = col("err")
+    legs = _emulation_legs(P, "fwd")
+    if legs:
+        cx, cy, cz = _emit_datum_legs(st, legs, lam, phi, zg)
+        # NOT masked by err: fwd_prepare runs the legs on the clipped /
+        # wrapped values and NaN-masks only x,y afterwards
+        # (fwd.cpp:41-102) — an overrange-latitude row still gets a
+        # real datum-shifted z.  NULLs (guarded-division lanes)
+        # normalize to NaN.
+        lam, phi, zg = st.stage(glam=f"coalesce({cx}, {_SQL_NAN})",
+                                gphi=f"coalesce({cy}, {_SQL_NAN})",
+                                gz=f"coalesce({cz}, {_SQL_NAN})")
+        # the projection's own entry check on the shifted geographic
+        # coordinates (fwd.cpp:55)
+        gerr = st.stage(gerr=f"isnan({lam}) OR isnan({phi}) OR "
+                             f"{lam} > 10.0D OR {lam} < -10.0D OR "
+                             f"abs({phi}) - {L(_H)} > 1e-12D")
+        st.barrier()  # datum legs and projection: separate regions
+        mask += f" OR {gerr}"
+    xo, yo, bad = _emit_fwd(st, P, lam, phi)
+    if bad:
+        mask += f" OR {bad}"
+    if degrees and P.is_latlong:
+        xo, yo = _sql_deg(xo), _sql_deg(yo)
     if P.vfr_meter != 1.0 or P.z0 != 0.0:
         # fwd_finalize vertical scaling (fwd.cpp: z = vfr_meter*(z + z0))
-        zout = f"{_sql_dlit(P.vfr_meter)} * ({zout} + {_sql_dlit(P.z0)})"
-    mask = st.col("err") + (f" OR {bad}" if bad else "")
-    return st.apply(df, _outputs(st, out_prefix, xe, ye, zout, mask))
+        zg = f"{L(P.vfr_meter)} * ({zg} + {L(P.z0)})"
+    return st.apply(df, _outputs(st, out_prefix, xo, yo, zg, mask))
 
 
 def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask=None,
@@ -1093,18 +1098,18 @@ def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask=None,
 
 # --- inverse pipeline -----------------------------------------------------
 #
-# _emit_inv: entry (inv_prepare) -> _emit_inv_kernel -> inv_finalize,
-# then the same shared finalize as the forward (_outputs).  The
-# iterative families (phi2 src/phi2.cpp:12-83, phi1
-# src/projections/aea.cpp:48-70, inv_mlfn, the Newton inversions)
-# unroll to their reference iteration bound with a carried `done` flag
-# that FREEZES converged lanes — the per-lane update sequence is
-# identical to the masked-lane NumPy kernels, so twin/UDF parity is
-# exact, not approximate.  Spark-SQL NaN semantics differ from IEEE
-# (NaN sorts above +Infinity in every comparison), so convergence tests
-# are phrased as `abs(dphi) > TOL AND abs(v) < Infinity`: the finite
-# guard is False for NaN under Spark ordering, reproducing numpy's
-# isfinite stop.
+# _emit_inv: entry (inv_prepare) -> _emit_inv_kernel -> inv_finalize ->
+# datum legs (none for a bare op), then the same shared finalize as the
+# forward (_outputs).  The iterative families (phi2
+# src/phi2.cpp:12-83, phi1 src/projections/aea.cpp:48-70, inv_mlfn, the
+# Newton inversions) unroll to their reference iteration bound with a
+# carried `done` flag that FREEZES converged lanes — the per-lane update
+# sequence is identical to the masked-lane NumPy kernels, so twin/UDF
+# parity is exact, not approximate.  Spark-SQL NaN semantics differ
+# from IEEE (NaN sorts above +Infinity in every comparison), so
+# convergence tests are phrased as `abs(dphi) > TOL AND abs(v) <
+# Infinity`: the finite guard is False for NaN under Spark ordering,
+# reproducing numpy's isfinite stop.
 
 
 def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool,
@@ -1803,32 +1808,51 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
 
 def _inv_apply(df, op, direction: str, x, y, z, t, degrees: bool,
                z_supplied: bool, out_prefix: str):
-    """Route "inv": a bare single-op inverse — tile->lonlat and
-    reverse-geocode workloads run with zero Python workers."""
+    """Route "inv": a single op's inverse — the projection's inverse
+    pipeline (or the latlong identity), then its datum legs (local
+    datum -> WGS84, inv_finalize order, src/inv.cpp:117-124; none for a
+    bare op).  Tile->lonlat, reverse-geocode and +towgs84 zone inverses
+    run with zero Python workers."""
     P = op.P
+    L = _sql_dlit
     st = _SqlStager()
     lam, phi = _emit_inv(st, P, x, y, z, t, degrees, z_supplied)
-    if degrees:
-        lam, phi = _sql_deg(lam), _sql_deg(phi)
-    zout = st.col("zz")
+    zz = st.col("zz")
     if P.vto_meter != 1.0 or P.z0 != 0.0:
         # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0;
         # +units=km implies vto_meter=1000 when +vunits is absent)
-        zout = f"{zout} * {_sql_dlit(P.vto_meter)} - {_sql_dlit(P.z0)}"
-    return st.apply(df, _outputs(st, out_prefix, lam, phi, zout,
-                                 st.col("err")))
+        zz = f"{zz} * {L(P.vto_meter)} - {L(P.z0)}"
+    mask = st.col("err")
+    legs = _emulation_legs(P, "inv")
+    if legs:
+        lam, phi, zz = st.stage(
+            plam=f"CASE WHEN {mask} THEN {_SQL_NAN} "
+                 f"ELSE coalesce({lam}, {_SQL_NAN}) END",
+            pphi=f"CASE WHEN {mask} THEN {_SQL_NAN} "
+                 f"ELSE coalesce({phi}, {_SQL_NAN}) END",
+            zs=zz)
+        st.barrier()  # datum legs get their own codegen region
+        lam, phi, zz = _emit_datum_legs(st, legs, lam, phi, zz,
+                                        first_cart_prepare=False)
+        mask = None
+    if degrees:
+        lam, phi = _sql_deg(lam), _sql_deg(phi)
+    return st.apply(df, _outputs(st, out_prefix, lam, phi, zz, mask))
 
 
 def _sql_deg(v: str) -> str:
     return f"{v} * {_sql_dlit(C.RAD_TO_DEG)}"
 
 
-# --- datum legs and the datum routes --------------------------------------
+# --- datum legs and the datum-pipeline route ------------------------------
 
 
 def _emulation_legs(P, direction: str):
     """The cs2cs-emulation datum leg sequence (fwd_prepare
-    src/fwd.cpp:74-85 / inv_finalize src/inv.cpp:117-124)."""
+    src/fwd.cpp:74-85 / inv_finalize src/inv.cpp:117-124); empty for a
+    bare op."""
+    if P.cart is None:
+        return []
     if direction == "fwd":
         legs = [("cart", "fwd", P.cart_wgs84.P)]
         if P.helmert is not None:
@@ -1856,79 +1880,6 @@ def _datum_pipeline_apply(df, op, direction: str, x, y, z, t,
         cx, cy = _sql_deg(cx), _sql_deg(cy)
     return st.apply(df, _outputs(st, out_prefix, cx, cy, cz,
                                  st.col("err"), mask_z=True))
-
-
-def _composed_fwd_apply(df, op, direction: str, x, y, z, t,
-                        degrees: bool, z_supplied: bool, out_prefix: str):
-    """Route "composed_fwd": the datum legs (WGS84 -> local datum,
-    fwd_prepare order) then the projection's forward pipeline (or the
-    latlong identity) in one stager, a codegen barrier between them."""
-    P = op.P
-    L = _sql_dlit
-    st = _SqlStager()
-    col = st.col
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    cx, cy, cz = _emit_datum_legs(st, _emulation_legs(P, "fwd"),
-                                  col("lam"), col("phi"), col("zz"))
-    # NOT masked by err: fwd_prepare runs the legs on the clipped /
-    # wrapped values and NaN-masks only x,y afterwards (fwd.cpp:41-102)
-    # — an overrange-latitude row still gets a real datum-shifted z.
-    # NULLs (guarded-division lanes) normalize to NaN.
-    glam, gphi, gz = st.stage(glam=f"coalesce({cx}, {_SQL_NAN})",
-                              gphi=f"coalesce({cy}, {_SQL_NAN})",
-                              gz=f"coalesce({cz}, {_SQL_NAN})")
-    mask = col("err")
-    if getattr(P, "is_latlong", False):
-        # prepare tail: x -= lam0, adjlon; identity kernel; finalize
-        # wraps nothing further (long_wrap refused by the gate)
-        lamd = st.stage(ll_d=f"{glam} - {L(P.lam0)}")
-        xo = st.stage(ll_w=_sql_adjlon(lamd))
-        yo = gphi
-        if degrees:
-            xo, yo = _sql_deg(xo), _sql_deg(yo)
-    else:
-        # the projection's own entry check on the shifted geographic
-        # coordinates (fwd.cpp:55)
-        gerr = st.stage(gerr=f"isnan({glam}) OR isnan({gphi}) OR "
-                             f"{glam} > 10.0D OR {glam} < -10.0D OR "
-                             f"abs({gphi}) - {L(_H)} > 1e-12D")
-        st.barrier()  # datum legs and projection: separate regions
-        xo, yo, bad = _emit_fwd(st, P, glam, gphi)
-        mask += f" OR {gerr}" + (f" OR {bad}" if bad else "")
-    # fwd_finalize vertical scaling: z = vfr_meter * (z + z0), z0 == 0
-    # by the gate (src/fwd.cpp:119-131; +units=km propagates to vunits)
-    zout = gz if P.vfr_meter == 1.0 else f"{gz} * {L(P.vfr_meter)}"
-    return st.apply(df, _outputs(st, out_prefix, xo, yo, zout, mask))
-
-
-def _composed_inv_apply(df, op, direction: str, x, y, z, t,
-                        degrees: bool, z_supplied: bool, out_prefix: str):
-    """Route "composed_inv": the projection's inverse pipeline (or the
-    latlong identity) then the datum legs (local datum -> WGS84,
-    inv_finalize order, src/inv.cpp:117-124) — e.g. a +towgs84 lcc
-    zone inverse runs Python-free end to end."""
-    P = op.P
-    st = _SqlStager()
-    col = st.col
-    lam, phi = _emit_inv(st, P, x, y, z, t, degrees, z_supplied)
-    zz = col("zz")
-    if P.vto_meter != 1.0:
-        # inv_prepare vertical scaling: z = vto_meter * z - z0, z0 == 0
-        # by the gate (src/inv.cpp:55-76)
-        zz = st.stage(zs=f"{zz} * {_sql_dlit(P.vto_meter)}")
-    errc = col("err")
-    plam, pphi = st.stage(
-        plam=f"CASE WHEN {errc} THEN {_SQL_NAN} "
-             f"ELSE coalesce({lam}, {_SQL_NAN}) END",
-        pphi=f"CASE WHEN {errc} THEN {_SQL_NAN} "
-             f"ELSE coalesce({phi}, {_SQL_NAN}) END")
-    st.barrier()  # datum legs get their own codegen region
-    cx, cy, cz = _emit_datum_legs(st, _emulation_legs(P, "inv"),
-                                  plam, pphi, zz, first_cart_prepare=False)
-    if degrees:
-        cx, cy = _sql_deg(cx), _sql_deg(cy)
-    return st.apply(df, _outputs(st, out_prefix, cx, cy, cz))
-
 
 
 def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
@@ -2072,18 +2023,8 @@ _ROUTES = (
     ("datum_pipeline",
      lambda op, d: _datum_jvm_legs(op, d) is not None,
      _datum_pipeline_apply),
-    ("composed_fwd",
-     lambda op, d: d == "fwd" and _composed_ok(op, d),
-     _composed_fwd_apply),
-    ("composed_inv",
-     lambda op, d: d == "inv" and _composed_ok(op, d),
-     _composed_inv_apply),
-    ("fwd",
-     lambda op, d: _bare_single(op, d, "fwd") and _fwd_kernel_ok(op.P),
-     _fwd_apply),
-    ("inv",
-     lambda op, d: _bare_single(op, d, "inv") and _inv_kernel_ok(op.P),
-     _inv_apply),
+    ("fwd", lambda op, d: d == "fwd" and _single_ok(op, d), _fwd_apply),
+    ("inv", lambda op, d: d == "inv" and _single_ok(op, d), _inv_apply),
 )
 
 
@@ -2107,8 +2048,8 @@ def _direction(direction: str) -> str:
 def describe_route(projstring: str, direction: str = "fwd") -> str:
     """The ``_ROUTES`` row name ``transform()`` takes for (projstring,
     direction) with ``jvm_fast_path=True`` — ``"datum_pipeline"``,
-    ``"composed_fwd"``, ``"composed_inv"``, ``"fwd"`` or ``"inv"`` — or
-    ``"udf"`` for the Arrow-UDF path."""
+    ``"fwd"`` or ``"inv"`` (a single op with or without datum legs) —
+    or ``"udf"`` for the Arrow-UDF path."""
     route = _pick_route(_cached_operation(projstring), _direction(direction))
     return "udf" if route is None else route[0]
 
@@ -2146,20 +2087,20 @@ def transform(
     tests/test_engine.py.  The routes, in table order:
     - ``datum_pipeline``: cart/helmert datum PIPELINES (the towgs84
       expansion shape, incl. hub-composed catalog candidates);
-    - ``composed_fwd`` / ``composed_inv``: datum-MODIFIED single ops
-      (+towgs84/+datum emulation hooks) over latlong, over a forward
-      family of webmerc/merc/eqc/cea/lcc/aea/leac/stere/ups/laea/
-      sterea/somerc/krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos/
-      robin, or over any inverse family of the ``inv`` route;
-    - ``fwd``: bare single-op FORWARDS of those 21 families plus omerc,
-      moll/wag4/wag5 and Poder-Engsager etmerc/tmerc/utm;
-    - ``inv``: bare single-op INVERSES of webmerc/merc/eqc/cea/laea/
-      stere/ups/sinu/eqdc/cass/geos/eqearth/omerc/lcc/aea/leac/moll/
-      wag4/wag5, spherical ortho/gnom and Poder-Engsager
+    - ``fwd``: single-op FORWARDS — latlong (the identity kernel) and
+      webmerc/merc/eqc/cea/lcc/aea/leac/stere/ups/laea/sterea/somerc/
+      krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos/robin/omerc/moll/
+      wag4/wag5 and Poder-Engsager etmerc/tmerc/utm;
+    - ``inv``: single-op INVERSES — latlong and webmerc/merc/eqc/cea/
+      laea/stere/ups/sinu/eqdc/cass/geos/eqearth/omerc/lcc/aea/leac/
+      moll/wag4/wag5, spherical ortho/gnom and Poder-Engsager
       etmerc/tmerc/utm — closed forms, and the bounded phi2 / phi1 /
       inv_mlfn / Newton iterations (src/phi2.cpp,
       src/projections/aea.cpp:48-70, src/mlfn.hpp) unrolled with
       per-lane convergence freezing.
+    A ``fwd`` / ``inv`` op may carry datum legs (+towgs84/+datum
+    emulation hooks): they run in the same stager, before the kernel
+    forward and after it inverse; a bare op has none.
     ``False`` always uses the Arrow-UDF kernels (the reference path).
     Grid-backed datums (+nadgrids/+geoidgrids), +axis, +over, +geoc,
     long-wrap, prime meridians, geocentric CRS, ``+inv`` proj-strings

@@ -87,17 +87,6 @@ def decode_np(cell):
     return res, iy, ix
 
 
-def parent_np(cell, parent_res: int):
-    """Coarser-resolution ancestor (pure shifts)."""
-    res, iy, ix = decode_np(cell)
-    d = res - parent_res
-    return (
-        (np.int64(parent_res) << RES_SHIFT)
-        | ((iy >> d) << IY_SHIFT)
-        | (ix >> d)
-    )
-
-
 def neighbors_np(cell, ring: int = 1):
     """All cells within `ring` index steps (square ring), with longitude
     wraparound; latitude rows clamp at the poles.  Returns 2-D array

@@ -616,12 +616,12 @@ def test_etmerc_jvm_fast_path_parity(spark):
     """The Poder-Engsager etmerc/utm/tmerc JVM twin (staged Catalyst
     projections) agrees with the Arrow-UDF kernel path on values
     (<=1e-6 m) and the exact NaN pattern; the plan contains no Python
-    eval.  Guards: +algo=auto / approx / datum-modified / inverse stay
-    on the UDF path."""
+    eval.  Guards: +algo=auto / approx stay on the UDF path; the
+    datum-modified forward takes the ``fwd`` route."""
     import numpy as np
     import pandas as pd
 
-    from proj_4_spark.engine.spark import transform
+    from proj_4_spark.engine.spark import describe_route, transform
 
     lons = [-541.0, -180.0, -96.0, 0.0, 9.01, 12.0, 91.3, 179.99,
             200.0, None, float("nan"), 45.0]
@@ -665,11 +665,13 @@ def test_etmerc_jvm_fast_path_parity(spark):
 
     # guards
     for ps in ("+proj=tmerc +algo=auto +lon_0=9 +ellps=WGS84",
-               "+proj=tmerc +approx +lon_0=9 +ellps=WGS84",
-               "+proj=utm +zone=32 +datum=NAD83"):
+               "+proj=tmerc +approx +lon_0=9 +ellps=WGS84"):
         p = transform(df, ps, x="lon", y="lat", jvm_fast_path=True)
         assert "EvalPython" in \
             p._jdf.queryExecution().executedPlan().toString(), ps
+    # datum legs + the same kernel (parity pinned in
+    # test_datum_modified_jvm_fast_path_parity)
+    assert describe_route("+proj=utm +zone=32 +datum=NAD83") == "fwd"
     # the Poder-Engsager INVERSE is a staged twin since late r7
     # (parity pinned in test_iter_inverse_jvm_fast_path_parity)
     inv = transform(df, "+proj=utm +zone=32 +ellps=GRS80", x="lon",
@@ -1457,12 +1459,12 @@ def test_geos_jvm_fast_path_parity(spark):
 
 
 def test_datum_modified_jvm_fast_path_parity(spark):
-    """r6 composed twin: a SINGLE datum-modified op (+towgs84 / +datum
-    cs2cs-emulation hooks) compiles to datum legs + the projection's
-    expression twin — the dominant catalog-preset shape runs with ZERO
-    Python workers in both directions.  Values match the Arrow-UDF path
-    (rtol covers pow/tan ulp amplification at degenerate latitudes, the
-    same bound the bare twins pin) and the NaN pattern is exact —
+    """A SINGLE datum-modified op (+towgs84 / +datum cs2cs-emulation
+    hooks) compiles to datum legs + the projection's expression twin on
+    the fwd / inv routes — the dominant catalog-preset shape runs with
+    ZERO Python workers in both directions.  Values match the Arrow-UDF
+    path (rtol covers pow/tan ulp amplification at degenerate latitudes,
+    the same bound the bare twins pin) and the NaN pattern is exact —
     including the asymmetries of the emulation chain: overrange
     latitudes clip before the fwd legs (z still gets a real shift, only
     x/y go NaN) but pass UNCLIPPED into the inverse legs."""
@@ -1513,7 +1515,19 @@ def test_datum_modified_jvm_fast_path_parity(spark):
          "+x_0=700000 +y_0=6600000 +units=km +ellps=clrk80ign "
          "+towgs84=-168,-60,320", "inv", True),
     ]
-    for ps, direc, with_z in cases:
+    # one forward roster with or without datum legs: the Poder-Engsager
+    # and omerc forwards under a datum, and a bare longlat (zero legs),
+    # held to 1e-6 m absolute
+    metre = [
+        ("EPSG:26918", "fwd", True),      # utm north, +datum=NAD83
+        ("EPSG:2084", "fwd", True),       # utm +south, 7-param towgs84
+        ("EPSG:27700", "fwd", True),      # tmerc airy, 7-param towgs84
+        ("EPSG:2235", "fwd", True),       # tmerc +units=us-ft, NAD83
+        ("EPSG:2057", "fwd", True),       # omerc +towgs84
+        ("+proj=longlat +ellps=WGS84 +lon_0=10", "fwd", True),
+        ("+proj=longlat +ellps=WGS84 +lon_0=10", "inv", True),
+    ]
+    for ps, direc, with_z in cases + metre:
         kw = dict(x="lon", y="lat", direction=direc, out_prefix="f_")
         if with_z:
             kw["z"] = "h"
@@ -1532,7 +1546,8 @@ def test_datum_modified_jvm_fast_path_parity(spark):
             b = sp[f"s_{c}"].to_numpy(dtype=np.float64, na_value=np.nan)
             assert (np.isnan(a) == np.isnan(b)).all(), (ps, direc, c)
             m = ~np.isnan(a)
-            assert np.allclose(a[m], b[m], rtol=1e-9, atol=1e-6), (
+            rtol = 0.0 if (ps, direc, with_z) in metre else 1e-9
+            assert np.allclose(a[m], b[m], rtol=rtol, atol=1e-6), (
                 ps, direc, c, np.abs(a[m] - b[m]).max())
 
     # guards: grid-backed datums, +axis, geocent, ellipsoidal-inverse
@@ -1736,14 +1751,14 @@ def test_moll_fwd_jvm_fast_path_parity(spark):
 
 def test_robin_fwd_twin_bit_identical(spark):
     """The Robinson forward twin (5-degree node lookup + two cubics,
-    kernels/robin.py's float order) takes the bare ``fwd`` route and,
-    under ``+towgs84``, the ``composed_fwd`` route.  On node boundaries
-    k*5 deg +- 1e-13, the poles, +-0.0, NaN/NULL and |lat| > 90 rows
-    plus a seeded grid, the bare twin's x/y/z/t equal the Arrow-UDF
-    path in raw float64 bits.  The composed twin's datum legs take
-    sin/cos/atan2/hypot from the JVM, a few ulps off NumPy's libm as on
-    every composed route, so there the NaN pattern is exact and values
-    agree to 1e-14 relative.  The inverse stays on the UDF path."""
+    kernels/robin.py's float order) takes the ``fwd`` route, bare and
+    under ``+towgs84``.  On node boundaries k*5 deg +- 1e-13, the
+    poles, +-0.0, NaN/NULL and |lat| > 90 rows plus a seeded grid, the
+    bare twin's x/y/z/t equal the Arrow-UDF path in raw float64 bits.
+    The +towgs84 twin's datum legs take sin/cos/atan2/hypot from the
+    JVM, a few ulps off NumPy's libm as on every twin with datum legs,
+    so there the NaN pattern is exact and values agree to 1e-14
+    relative.  The inverse stays on the UDF path."""
     import pandas as pd
 
     from proj_4_spark.engine.spark import describe_route, transform
@@ -1769,7 +1784,7 @@ def test_robin_fwd_twin_bit_identical(spark):
                       ("+proj=robin +ellps=GRS80 +units=km", "fwd"),
                       ("ESRI:54030", "fwd"),
                       ("+proj=robin +ellps=WGS84 +towgs84=1,2,3",
-                       "composed_fwd")):
+                       "fwd")):
         assert describe_route(ps) == route, ps
         assert describe_route(ps, "inv") == "udf", ps
         kw = dict(x="lon", y="lat", z="h", t="tt")
@@ -1782,7 +1797,7 @@ def test_robin_fwd_twin_bit_identical(spark):
         for c in ("x", "y", "z", "t"):
             a = fp[f"f_{c}"].to_numpy(dtype=np.float64, na_value=np.nan)
             b = sp[f"s_{c}"].to_numpy(dtype=np.float64, na_value=np.nan)
-            if route == "composed_fwd":
+            if "+towgs84" in ps:
                 assert (np.isnan(a) == np.isnan(b)).all(), (ps, c)
                 m = ~np.isnan(a)
                 assert np.allclose(a[m], b[m], rtol=1e-14, atol=1e-8), (

@@ -367,8 +367,9 @@ def test_twin_queries_codegen_health(spark):
     composed datum-modified forward twins (the lcc +towgs84 benchmark
     route, EPSG:2154 and EPSG:3035 — 10,575 / 10,503 bytecodes and a
     janino failure before the codegen barrier between the datum legs
-    and the projection) and the Robinson forwards (bare, ESRI:54030,
-    +towgs84), must pass _assert_codegen_health."""
+    and the projection), the Robinson forwards (bare, ESRI:54030,
+    +towgs84) and the datum-modified tmerc / utm forwards (EPSG:27700,
+    EPSG:26918), must pass _assert_codegen_health."""
     import __spark_entry__ as E
 
     from proj_4_spark.engine.spark import transform
@@ -393,7 +394,8 @@ def test_twin_queries_codegen_health(spark):
                    "+x_0=700000 +y_0=6600000 +ellps=clrk80ign "
                    "+towgs84=-168,-60,320", "EPSG:2154", "EPSG:3035",
                    "+proj=robin +ellps=WGS84", "ESRI:54030",
-                   "+proj=robin +ellps=WGS84 +towgs84=1,2,3"):
+                   "+proj=robin +ellps=WGS84 +towgs84=1,2,3",
+                   "EPSG:27700", "EPSG:26918"):
             out = transform(pts, ps, x="lon", y="lat", out_prefix="p_")
             _assert_codegen_health(spark, out, ps)
     finally:

@@ -164,14 +164,17 @@ def test_r7_iterative_inverse_twins_stay_wired():
     assert _route("+proj=laea +ellps=GRS80 +lat_0=52", "inv") == "inv"
     assert _route("+proj=laea +R=6371000 +lat_0=52", "inv") == "inv"
 
-    # the COMPOSED datum-modified inverse accepts the iterative
-    # families too (+towgs84 conic zone inverses run Python-free)
+    # the datum-modified inverse accepts the iterative families too
+    # (+towgs84 conic zone inverses run Python-free)
     assert _route("+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
-                  "+towgs84=-10,158,187", "inv") == "composed_inv"
+                  "+towgs84=-10,158,187", "inv") == "inv"
     assert _route("+proj=merc +ellps=GRS80 +towgs84=1,2,3",
-                  "inv") == "composed_inv"
+                  "inv") == "inv"
     assert _route("+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
-                  "+towgs84=-10,158,187", "fwd") == "composed_fwd"
+                  "+towgs84=-10,158,187", "fwd") == "fwd"
+    # a datum-modified Poder-Engsager forward takes the same roster as
+    # the bare one
+    assert _route("+proj=utm +zone=32 +datum=NAD83", "fwd") == "fwd"
 
     # modifiers no twin models keep the Arrow-UDF path
     for ps, d in (("+proj=webmerc +ellps=WGS84 +inv", "fwd"),
@@ -181,7 +184,6 @@ def test_r7_iterative_inverse_twins_stay_wired():
                   ("+proj=tmerc +algo=auto +lon_0=9 +ellps=WGS84", "fwd"),
                   ("+proj=tmerc +approx +lon_0=9 +ellps=WGS84", "inv"),
                   ("+proj=ortho +ellps=GRS80 +lat_0=40", "inv"),
-                  ("+proj=utm +zone=32 +datum=NAD83", "fwd"),
                   ("+proj=webmerc +datum=NAD27", "fwd"),
                   ("+proj=robin +R=6371000 +towgs84=1,2,3", "inv")):
         assert _route(ps, d) is None, (ps, d)
@@ -202,7 +204,7 @@ def test_r7_iterative_inverse_twins_stay_wired():
 
 def test_robin_forward_twin_routes():
     """The Robinson forward is a twin: bare (+proj=robin, ESRI:54030,
-    ESRI:53030) on the ``fwd`` route, +towgs84 on ``composed_fwd``.
+    ESRI:53030) and +towgs84 both on the ``fwd`` route.
     Its inverse (node nudge + Newton) keeps the Arrow-UDF path."""
     from proj_4_spark.engine.spark import describe_route
 
@@ -211,7 +213,49 @@ def test_robin_forward_twin_routes():
         assert describe_route(ps) == "fwd", ps
         assert describe_route(ps, "inv") == "udf", ps
     ps = "+proj=robin +ellps=WGS84 +towgs84=1,2,3"
-    assert describe_route(ps, "forward") == "composed_fwd"
+    assert describe_route(ps, "forward") == "fwd"
     assert describe_route(ps, "inverse") == "udf"
     # +inv swaps the kernels: the forward direction runs the inverse
     assert describe_route("+proj=robin +ellps=WGS84 +inv") == "udf"
+
+
+# describe_route over all 9,150 EPSG/ESRI/IGNF presets, geographic ones
+# included: the count per (direction, route).  A "udf" count may only
+# fall, and a change that lowers one commits the new numbers here.
+ROUTE_CENSUS = {
+    ("fwd", "fwd"): 8219, ("fwd", "udf"): 931,
+    ("inv", "inv"): 8188, ("inv", "udf"): 962,
+}
+
+
+def test_route_census():
+    """The Arrow-UDF share of the catalog only falls.  A preset that
+    cannot be built counts as "udf": IGNF:LAMBE and IGNF:NTFG ride the
+    ntf_r93.gsb grid, which may be absent, and once built their grid
+    hook refuses every twin, so the census reads the same on every
+    box."""
+    import collections
+
+    from proj_4_spark.engine.spark import describe_route
+    from proj_4_spark.kernels.base import ProjError
+    from proj_4_spark.sources.epsg_generated import (
+        ESRI_PRESETS,
+        IGNF_PRESETS,
+        PRESETS,
+    )
+
+    counts = collections.Counter()
+    for auth, presets in (("EPSG", PRESETS), ("ESRI", ESRI_PRESETS),
+                          ("IGNF", IGNF_PRESETS)):
+        for code in presets:
+            for d in ("fwd", "inv"):
+                try:
+                    route = describe_route(f"{auth}:{code}", d)
+                except ProjError:
+                    route = "udf"
+                counts[(d, route)] += 1
+    rose = {k: (ROUTE_CENSUS.get(k, 0), n) for k, n in counts.items()
+            if k[1] == "udf" and n > ROUTE_CENSUS.get(k, 0)}
+    assert not rose, f"presets moved onto the Arrow-UDF path: {rose}"
+    assert dict(counts) == ROUTE_CENSUS, (
+        f"the census moved; commit the new counts: {dict(counts)}")
