@@ -6,16 +6,16 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   LRU cache, so UDF closures carry only a short string — no pickled
   kernel state, trivially broadcastable, and grid data can be loaded
   worker-side.
-- transform() consults ONE ordered route table (_ROUTES) once: a
-  cart/helmert datum pipeline, a single op's forward, or its inverse.
-  A route compiles the operation to a Catalyst "twin": staged Spark-SQL
-  projections (_SqlStager) that reproduce the NumPy kernels term for
-  term, so the hot path is whole-stage codegen with zero Python workers.
-  Every twin comes from two staged pipelines — forward (entry -> datum
-  legs -> shared prepare -> per-family kernel -> shared finalize) and
-  inverse (entry -> per-family kernel -> inv_finalize -> datum legs ->
-  shared finalize).  A bare op is the case with zero datum legs.
-- An operation no route accepts runs as ONE Arrow-batched pandas UDF
+- transform() has one dispatch: _twin_plan reads the operation into a
+  twin plan (an inverse kernel, datum legs, a forward kernel — any of
+  them absent — as pj_inv4d / pj_fwd4d run them), and _emit_twin
+  compiles the plan to a Catalyst "twin": staged Spark-SQL projections
+  (_SqlStager) that reproduce the NumPy kernels term for term, so the
+  hot path is whole-stage codegen with zero Python workers.  The plan
+  shapes are a cart/helmert datum pipeline (legs only), a single op's
+  forward (legs -> kernel) and its inverse (kernel -> legs); a bare op
+  has zero legs.
+- An operation without a twin plan runs as ONE Arrow-batched pandas UDF
   per *whole pipeline* (kernel fusion; never one UDF per step —
   SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
   ordinary projection: filters still push down, unused input columns
@@ -32,6 +32,7 @@ from __future__ import annotations
 from functools import lru_cache
 import itertools
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -130,78 +131,95 @@ def _leg_kind(P, step: bool):
     return None
 
 
-def _datum_jvm_legs(op, direction: str):
-    """Leg list for the datum-pipeline twin, or None.
+class _TwinPlan(NamedTuple):
+    """What a twin stages, in order: the inverse kernel (its P, or
+    None), the datum legs [(kind, step_dir, P), ...], the forward
+    kernel (its P, or None); `pipeline` marks a datum pipeline, whose
+    error mask covers z too."""
+    inv: object
+    legs: list
+    fwd: object
+    pipeline: bool
 
-    Recognizes a PipelineOperation whose steps are all bare
-    cart / helmert / molobadekas — the towgs84 expansion shape
-    (cart -> helmert -> cart⁻¹, src/datums.cpp pj_datum_set) that
-    every hub-composed catalog candidate and ``pipeline_datum_shift``
-    itself uses.  Returns [(kind, step_dir, P), ...] in effective
-    execution order, the first leg a cart fwd (consumes radians) and
-    the last a cart inv (produces radians)."""
+
+def _datum_legs(op, direction: str):
+    """The datum legs of (op, direction) in execution order, or None
+    when one is a leg no twin reproduces.
+
+    A pipeline's legs are its steps, all bare cart / helmert /
+    molobadekas: the towgs84 expansion shape (cart -> helmert ->
+    cart⁻¹, src/datums.cpp pj_datum_set) that every hub-composed
+    catalog candidate and ``pipeline_datum_shift`` use.  A single op's
+    legs are its cs2cs-emulation hooks (+towgs84 / +datum: P.cart,
+    P.cart_wgs84 [, P.helmert]) as fwd_prepare (src/fwd.cpp:74-85) and
+    inv_finalize (src/inv.cpp:117-124) run them; a bare op has none.
+    Non-empty legs start with a cart fwd (consuming radians) and end
+    with a cart inv (producing radians)."""
     from proj_4_spark.engine.plan import PipelineOperation
 
-    if not isinstance(op, PipelineOperation):
-        return None
-    if direction not in ("fwd", "inv"):
-        return None
-    eff = "inv" if ((direction == "inv") != bool(op.inverted)) else "fwd"
-    seq = op.steps if eff == "fwd" else list(reversed(op.steps))
+    step = isinstance(op, PipelineOperation)
+    if step:
+        eff = "inv" if ((direction == "inv") != bool(op.inverted)) else "fwd"
+        flip = "fwd" if eff == "inv" else "inv"
+        hops = []
+        for op_, flags in (op.steps if eff == "fwd" else op.steps[::-1]):
+            if (op_ is None or flags.get("kind") is not None
+                    or flags.get("omit_fwd") or flags.get("omit_inv")):
+                return None
+            hops.append((None, flip if flags.get("inv") else eff, op_))
+    else:
+        P = op.P
+        if P.cart is None and P.cart_wgs84 is None and P.helmert is None:
+            return []
+        if P.cart is None or P.cart_wgs84 is None:
+            return None
+        src, dst = ((P.cart_wgs84, P.cart) if direction == "fwd"
+                    else (P.cart, P.cart_wgs84))
+        hops = [("cart", "fwd", src), ("cart", "inv", dst)]
+        if P.helmert is not None:
+            hops.insert(1, ("helmert", "inv" if direction == "fwd"
+                            else "fwd", P.helmert))
     legs = []
-    for op_, flags in seq:
-        if op_ is None or flags.get("kind") is not None:
+    for want, step_dir, hop in hops:
+        kind = _leg_kind(hop.P, step)
+        if (kind is None or want not in (None, kind)
+                or getattr(hop, "inverted", False)):
             return None
-        if flags.get("omit_fwd") or flags.get("omit_inv"):
-            return None
-        kind = _leg_kind(op_.P, step=True)
-        if kind is None:
-            return None
-        step_dir = eff
-        if flags.get("inv"):
-            step_dir = "inv" if step_dir == "fwd" else "fwd"
-        legs.append((kind, step_dir, op_.P))
-    if not legs:
-        return None
-    if legs[0][:2] != ("cart", "fwd") or legs[-1][:2] != ("cart", "inv"):
+        legs.append((kind, step_dir, hop.P))
+    if legs and (legs[0][:2] != ("cart", "fwd")
+                 or legs[-1][:2] != ("cart", "inv")):
         return None  # twin needs angular I/O on both ends
     return legs
 
 
-def _single_ok(op, direction: str) -> bool:
-    """True when a SINGLE operation runs as the fwd / inv twin: its
-    cs2cs-emulation datum legs (+towgs84 / +datum hooks: P.cart +
-    P.cart_wgs84 [+ P.helmert]; none for a bare op), then the
-    projection's own kernel (or the latlong identity), in one stager —
-    the same prepare -> legs -> kernel -> finalize order whether or not
-    legs exist (src/fwd.cpp:41-131, src/inv.cpp:42-124).  Pipelines
-    are the datum_pipeline row's; '+proj=... +inv' strings (proj_trans
-    swaps their kernels, src/4D_api.cpp), grid hooks
+def _twin_plan(op, direction: str):
+    """The _TwinPlan of (op, direction), or None for the Arrow-UDF path.
+
+    A datum pipeline is its legs alone.  A single op is its kernel (the
+    latlong identity counts) and its datum legs in the prepare -> legs
+    -> kernel -> finalize order of src/fwd.cpp:41-131 and
+    src/inv.cpp:42-124: forward legs then the forward kernel, or the
+    inverse kernel then inverse legs.  '+proj=... +inv' strings
+    (proj_trans swaps their kernels, src/4D_api.cpp), grid hooks
     (+nadgrids/+geoidgrids), +axis, +over, +geoc, long-wrap, prime
     meridians and geocentric CRS stay on the Arrow-UDF path."""
     from proj_4_spark.engine.plan import PipelineOperation
 
-    P = getattr(op, "P", None)
-    if P is None or isinstance(op, PipelineOperation):
-        return False
-    if getattr(op, "inverted", False) or P.is_geocent:
-        return False
-    if any(getattr(P, a) is not None for a in _GRID_AXIS_HOOKS):
-        return False
-    if P.over or P.geoc or P.from_greenwich != 0.0 or P.is_long_wrap_set:
-        return False
-    hooks = (("cart", P.cart), ("cart", P.cart_wgs84),
-             ("helmert", P.helmert))
-    if any(hop is not None for _, hop in hooks):
-        if P.cart is None or P.cart_wgs84 is None:
-            return False
-        for kind, hop in hooks:
-            if hop is not None and (getattr(hop, "inverted", False)
-                                    or _leg_kind(hop.P, step=False) != kind):
-                return False
-    if P.is_latlong:
-        return True
-    return _fwd_kernel_ok(P) if direction == "fwd" else _inv_kernel_ok(P)
+    pipeline = isinstance(op, PipelineOperation)
+    P = None if pipeline else getattr(op, "P", None)
+    kernel_ok = _fwd_kernel_ok if direction == "fwd" else _inv_kernel_ok
+    if not pipeline and (
+            P is None or getattr(op, "inverted", False) or P.is_geocent
+            or any(getattr(P, a) is not None for a in _GRID_AXIS_HOOKS)
+            or P.over or P.geoc or P.from_greenwich != 0.0
+            or P.is_long_wrap_set or not (P.is_latlong or kernel_ok(P))):
+        return None
+    legs = _datum_legs(op, direction)
+    if legs is None or (pipeline and not legs):
+        return None
+    if direction == "fwd":
+        return _TwinPlan(None, legs, P, pipeline)
+    return _TwinPlan(P, legs, None, pipeline)
 
 
 def _sql_dlit(v: float) -> str:
@@ -404,8 +422,7 @@ def _sql_authlat(st, beta: str, apa, tag: str) -> str:
 # tests/test_engine.py).
 
 
-def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
-                  z_supplied: bool):
+def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool):
     """Shared FORWARD entry: radian lam/phi, synthesized z/t, the
     global error predicate (fwd.cpp:41-102)."""
     L = _sql_dlit
@@ -429,7 +446,7 @@ def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool,
            f"isnan({yq}) OR {col('lam')} > 10.0D OR "
            f"{col('lam')} < -10.0D OR "
            f"abs({col('phi')}) - {L(_H)} > 1e-12D")
-    if z_supplied:
+    if z is not None:
         err += f" OR `{z}` IS NULL OR isnan({col('zz')})"
     st.stage(err=err)
 
@@ -1037,50 +1054,8 @@ def _sql_clens(st, coeffs, r: str, i: str, tag: str):
     return hr, hi
 
 
-def _fwd_apply(df, op, direction: str, x, y, z, t, degrees: bool,
-               z_supplied: bool, out_prefix: str):
-    """Route "fwd": a single op's forward — its datum legs (WGS84 ->
-    local datum, fwd_prepare order; none for a bare op), then the
-    projection's forward pipeline (or the latlong identity) in one
-    stager, a codegen barrier between them."""
-    P = op.P
-    L = _sql_dlit
-    st = _SqlStager()
-    col = st.col
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    lam, phi, zg = col("lam"), col("phi"), col("zz")
-    mask = col("err")
-    legs = _emulation_legs(P, "fwd")
-    if legs:
-        cx, cy, cz = _emit_datum_legs(st, legs, lam, phi, zg)
-        # NOT masked by err: fwd_prepare runs the legs on the clipped /
-        # wrapped values and NaN-masks only x,y afterwards
-        # (fwd.cpp:41-102) — an overrange-latitude row still gets a
-        # real datum-shifted z.  NULLs (guarded-division lanes)
-        # normalize to NaN.
-        lam, phi, zg = st.stage(glam=f"coalesce({cx}, {_SQL_NAN})",
-                                gphi=f"coalesce({cy}, {_SQL_NAN})",
-                                gz=f"coalesce({cz}, {_SQL_NAN})")
-        # the projection's own entry check on the shifted geographic
-        # coordinates (fwd.cpp:55)
-        gerr = st.stage(gerr=f"isnan({lam}) OR isnan({phi}) OR "
-                             f"{lam} > 10.0D OR {lam} < -10.0D OR "
-                             f"abs({phi}) - {L(_H)} > 1e-12D")
-        st.barrier()  # datum legs and projection: separate regions
-        mask += f" OR {gerr}"
-    xo, yo, bad = _emit_fwd(st, P, lam, phi)
-    if bad:
-        mask += f" OR {bad}"
-    if degrees and P.is_latlong:
-        xo, yo = _sql_deg(xo), _sql_deg(yo)
-    if P.vfr_meter != 1.0 or P.z0 != 0.0:
-        # fwd_finalize vertical scaling (fwd.cpp: z = vfr_meter*(z + z0))
-        zg = f"{L(P.vfr_meter)} * ({zg} + {L(P.z0)})"
-    return st.apply(df, _outputs(st, out_prefix, xo, yo, zg, mask))
-
-
-def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask=None,
-             mask_z: bool = False) -> list[str]:
+def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask,
+             mask_z: bool) -> list[str]:
     """The final select list every twin shares: NULL -> NaN (the UDF
     path's na_value), `mask` rows -> NaN on x/y (and z when mask_z), t
     passed through."""
@@ -1112,8 +1087,7 @@ def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask=None,
 # reproducing numpy's isfinite stop.
 
 
-def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool,
-              z_supplied: bool):
+def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool):
     """Inverse entry — the null/NaN error predicate and inv_prepare
     scaling (to_meter*v - offset) * 1/a (src/inv.cpp:42-76), or radians
     for a latlong op — then the family kernel and inv_finalize (lam0 +
@@ -1127,7 +1101,7 @@ def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool,
         xv = f"({L(P.to_meter)} * {xq} - {L(P.x0)}) * {L(P.ra)}"
         yv = f"({L(P.to_meter)} * {yq} - {L(P.y0)}) * {L(P.ra)}"
     err = f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR isnan({yq})"
-    if z_supplied:
+    if z is not None:
         err += f" OR `{z}` IS NULL OR isnan(CAST(`{z}` AS DOUBLE))"
     # the coalesce makes xm/ym NON-NULLABLE (NULL -> NaN, the UDF path's
     # na_value), which drops the isNull plumbing from every downstream
@@ -1806,84 +1780,15 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
     return lam, phi
 
 
-def _inv_apply(df, op, direction: str, x, y, z, t, degrees: bool,
-               z_supplied: bool, out_prefix: str):
-    """Route "inv": a single op's inverse — the projection's inverse
-    pipeline (or the latlong identity), then its datum legs (local
-    datum -> WGS84, inv_finalize order, src/inv.cpp:117-124; none for a
-    bare op).  Tile->lonlat, reverse-geocode and +towgs84 zone inverses
-    run with zero Python workers."""
-    P = op.P
-    L = _sql_dlit
-    st = _SqlStager()
-    lam, phi = _emit_inv(st, P, x, y, z, t, degrees, z_supplied)
-    zz = st.col("zz")
-    if P.vto_meter != 1.0 or P.z0 != 0.0:
-        # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0;
-        # +units=km implies vto_meter=1000 when +vunits is absent)
-        zz = f"{zz} * {L(P.vto_meter)} - {L(P.z0)}"
-    mask = st.col("err")
-    legs = _emulation_legs(P, "inv")
-    if legs:
-        lam, phi, zz = st.stage(
-            plam=f"CASE WHEN {mask} THEN {_SQL_NAN} "
-                 f"ELSE coalesce({lam}, {_SQL_NAN}) END",
-            pphi=f"CASE WHEN {mask} THEN {_SQL_NAN} "
-                 f"ELSE coalesce({phi}, {_SQL_NAN}) END",
-            zs=zz)
-        st.barrier()  # datum legs get their own codegen region
-        lam, phi, zz = _emit_datum_legs(st, legs, lam, phi, zz,
-                                        first_cart_prepare=False)
-        mask = None
-    if degrees:
-        lam, phi = _sql_deg(lam), _sql_deg(phi)
-    return st.apply(df, _outputs(st, out_prefix, lam, phi, zz, mask))
-
-
 def _sql_deg(v: str) -> str:
     return f"{v} * {_sql_dlit(C.RAD_TO_DEG)}"
 
 
-# --- datum legs and the datum-pipeline route ------------------------------
-
-
-def _emulation_legs(P, direction: str):
-    """The cs2cs-emulation datum leg sequence (fwd_prepare
-    src/fwd.cpp:74-85 / inv_finalize src/inv.cpp:117-124); empty for a
-    bare op."""
-    if P.cart is None:
-        return []
-    if direction == "fwd":
-        legs = [("cart", "fwd", P.cart_wgs84.P)]
-        if P.helmert is not None:
-            legs.append(("helmert", "inv", P.helmert.P))
-        legs.append(("cart", "inv", P.cart.P))
-    else:
-        legs = [("cart", "fwd", P.cart.P)]
-        if P.helmert is not None:
-            legs.append(("helmert", "fwd", P.helmert.P))
-        legs.append(("cart", "inv", P.cart_wgs84.P))
-    return legs
-
-
-def _datum_pipeline_apply(df, op, direction: str, x, y, z, t,
-                          degrees: bool, z_supplied: bool, out_prefix: str):
-    """Route "datum_pipeline": a cart/helmert datum pipeline (the legs
-    from _datum_jvm_legs) — towgs84-style shifts and hub-composed
-    catalog candidates run with zero Python workers."""
-    st = _SqlStager()
-    _entry_stages(st, x, y, z, t, degrees, z_supplied)
-    cx, cy, cz = _emit_datum_legs(st, _datum_jvm_legs(op, direction),
-                                  st.col("lam"), st.col("phi"),
-                                  st.col("zz"))
-    if degrees:
-        cx, cy = _sql_deg(cx), _sql_deg(cy)
-    return st.apply(df, _outputs(st, out_prefix, cx, cy, cz,
-                                 st.col("err"), mask_z=True))
+# --- datum legs ------------------------------------------------------------
 
 
 def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
-                     tag: str = "", first_cart_prepare: bool = True):
+                     first_cart_prepare: bool):
     """Emit the SQL stages for a cart/helmert leg sequence starting from
     the column refs (cx, cy, cz); returns the final (cx, cy, cz).
 
@@ -1907,10 +1812,10 @@ def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
 
     for i, (kind, step_dir, P) in enumerate(legs):
         def s(name):
-            return col(f"{tag}l{i}_{name}")
+            return col(f"l{i}_{name}")
 
         def put(**cols):
-            st.stage(**{f"{tag}l{i}_{n}": v for n, v in cols.items()})
+            st.stage(**{f"l{i}_{n}": v for n, v in cols.items()})
 
         if kind == "cart" and step_dir == "fwd":
             # fwd prepare (adjlon + clip) then cart.cpp:132-147.  The
@@ -2012,26 +1917,70 @@ def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
     return cx, cy, cz
 
 
-# --- the route table ------------------------------------------------------
-#
-# ONE ordered table of (route_name, gate(op, direction), emitter).
-# transform() takes the first row whose gate accepts; no row -> the
-# Arrow-UDF path.  Every emitter has the signature
-# (df, op, direction, x, y, z, t, degrees, z_supplied, out_prefix).
-
-_ROUTES = (
-    ("datum_pipeline",
-     lambda op, d: _datum_jvm_legs(op, d) is not None,
-     _datum_pipeline_apply),
-    ("fwd", lambda op, d: d == "fwd" and _single_ok(op, d), _fwd_apply),
-    ("inv", lambda op, d: d == "inv" and _single_ok(op, d), _inv_apply),
-)
+# --- the twin -------------------------------------------------------------
 
 
-def _pick_route(op, direction: str):
-    """The first _ROUTES row whose gate accepts (op, direction), or None
-    (the Arrow-UDF path)."""
-    return next((r for r in _ROUTES if r[1](op, direction)), None)
+def _emit_twin(df, plan: _TwinPlan, x, y, z, t, degrees: bool,
+               out_prefix: str):
+    """Stage a _TwinPlan in one stager, pj_fwd4d / pj_inv4d's order:
+    entry -> inverse kernel + inv_finalize -> datum legs -> forward
+    prepare / kernel / finalize -> the shared select list (_outputs).
+    A kernel and its datum legs get separate codegen regions."""
+    L = _sql_dlit
+    st = _SqlStager()
+    if plan.inv is None:
+        _entry_stages(st, x, y, z, t, degrees)
+        lam, phi, zz = st.col("lam"), st.col("phi"), st.col("zz")
+    else:
+        P = plan.inv
+        lam, phi = _emit_inv(st, P, x, y, z, t, degrees)
+        zz = st.col("zz")
+        if P.vto_meter != 1.0 or P.z0 != 0.0:
+            # inv_prepare vertical scaling (inv.cpp: z = vto_meter*z - z0;
+            # +units=km implies vto_meter=1000 when +vunits is absent)
+            zz = f"{zz} * {L(P.vto_meter)} - {L(P.z0)}"
+    mask = [st.col("err")]
+    if plan.legs:
+        if plan.inv is not None:
+            # inv_finalize NaN-masks the error rows before its datum
+            # legs, which then take its wrapped but unclipped latitude
+            lam, phi, zz = st.stage(
+                plam=f"CASE WHEN {mask[0]} THEN {_SQL_NAN} "
+                     f"ELSE coalesce({lam}, {_SQL_NAN}) END",
+                pphi=f"CASE WHEN {mask[0]} THEN {_SQL_NAN} "
+                     f"ELSE coalesce({phi}, {_SQL_NAN}) END",
+                zs=zz)
+            st.barrier()
+            mask = []
+        lam, phi, zz = _emit_datum_legs(st, plan.legs, lam, phi, zz,
+                                        first_cart_prepare=plan.inv is None)
+        if plan.fwd is not None:
+            # NOT masked by err: fwd_prepare runs the legs on the
+            # clipped / wrapped values and NaN-masks only x,y afterwards
+            # (fwd.cpp:41-102) — an overrange-latitude row still gets a
+            # real datum-shifted z.  NULLs (guarded-division lanes)
+            # normalize to NaN.
+            lam, phi, zz = st.stage(glam=f"coalesce({lam}, {_SQL_NAN})",
+                                    gphi=f"coalesce({phi}, {_SQL_NAN})",
+                                    gz=f"coalesce({zz}, {_SQL_NAN})")
+            # the projection's own entry check on the shifted geographic
+            # coordinates (fwd.cpp:55)
+            mask.append(st.stage(
+                gerr=f"isnan({lam}) OR isnan({phi}) OR {lam} > 10.0D OR "
+                     f"{lam} < -10.0D OR abs({phi}) - {L(_H)} > 1e-12D"))
+            st.barrier()
+    if plan.fwd is not None:
+        P = plan.fwd
+        lam, phi, bad = _emit_fwd(st, P, lam, phi)
+        if bad:
+            mask.append(bad)
+        if P.vfr_meter != 1.0 or P.z0 != 0.0:
+            # fwd_finalize vertical scaling (fwd.cpp: z = vfr_meter*(z + z0))
+            zz = f"{L(P.vfr_meter)} * ({zz} + {L(P.z0)})"
+    if degrees and (plan.fwd is None or plan.fwd.is_latlong):
+        lam, phi = _sql_deg(lam), _sql_deg(phi)
+    return st.apply(df, _outputs(st, out_prefix, lam, phi, zz,
+                                 " OR ".join(mask), mask_z=plan.pipeline))
 
 
 _DIRS = {"fwd": "fwd", "forward": "fwd",
@@ -2046,12 +1995,16 @@ def _direction(direction: str) -> str:
 
 
 def describe_route(projstring: str, direction: str = "fwd") -> str:
-    """The ``_ROUTES`` row name ``transform()`` takes for (projstring,
-    direction) with ``jvm_fast_path=True`` — ``"datum_pipeline"``,
-    ``"fwd"`` or ``"inv"`` (a single op with or without datum legs) —
-    or ``"udf"`` for the Arrow-UDF path."""
-    route = _pick_route(_cached_operation(projstring), _direction(direction))
-    return "udf" if route is None else route[0]
+    """The path ``transform()`` takes for (projstring, direction), read
+    off its twin plan: ``"datum_pipeline"`` (a datum pipeline),
+    ``"fwd"`` or ``"inv"`` (a single op's kernel, with or without datum
+    legs), or ``"udf"`` for the Arrow-UDF path."""
+    plan = _twin_plan(_cached_operation(projstring), _direction(direction))
+    if plan is None:
+        return "udf"
+    if plan.pipeline:
+        return "datum_pipeline"
+    return "fwd" if plan.inv is None else "inv"
 
 
 def transform(
@@ -2065,7 +2018,6 @@ def transform(
     degrees: bool = True,
     out_prefix: str = "",
     keep_errors: bool = True,
-    jvm_fast_path: bool = True,
 ):
     """Apply a proj-string operation to coordinate columns of ``df``.
 
@@ -2080,11 +2032,10 @@ def transform(
     (reference: HUGE_VAL sentinel, src/fwd.cpp:42-43); pass
     ``keep_errors=False`` to filter them out.
 
-    ``jvm_fast_path`` must be a bool.  True (default) runs the first
-    route of the route table that accepts the operation as a Catalyst
-    twin — staged Spark-SQL projections, zero Python workers, parity
-    with the Arrow-UDF kernels pinned per family in
-    tests/test_engine.py.  The routes, in table order:
+    One dispatch: an operation with a twin plan runs as a Catalyst twin
+    — staged Spark-SQL projections, zero Python workers, parity with
+    the Arrow-UDF kernels pinned per family in tests/test_engine.py.
+    Every other operation runs the Arrow-UDF kernels.  The plan shapes:
     - ``datum_pipeline``: cart/helmert datum PIPELINES (the towgs84
       expansion shape, incl. hub-composed catalog candidates);
     - ``fwd``: single-op FORWARDS — latlong (the identity kernel) and
@@ -2101,13 +2052,12 @@ def transform(
     A ``fwd`` / ``inv`` op may carry datum legs (+towgs84/+datum
     emulation hooks): they run in the same stager, before the kernel
     forward and after it inverse; a bare op has none.
-    ``False`` always uses the Arrow-UDF kernels (the reference path).
     Grid-backed datums (+nadgrids/+geoidgrids), +axis, +over, +geoc,
     long-wrap, prime meridians, geocentric CRS, ``+inv`` proj-strings
     and the remaining families (the robin and sterea inverses, poly,
-    ...) always use the UDF path; ``describe_route`` names the route a
-    call takes.  Twin routes stage through temporary ``_jd_*`` columns:
-    an input column with that prefix raises ValueError.
+    ...) have no twin plan; ``describe_route`` names the path a call
+    takes.  Twins stage through temporary ``_jd_*`` columns: an input
+    column with that prefix raises ValueError.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
@@ -2115,36 +2065,30 @@ def transform(
 
     # validate arguments + proj-string on the driver (fail fast at plan
     # time, not as an executor traceback at collect time)
-    if not isinstance(jvm_fast_path, bool):
-        raise ValueError(
-            f"jvm_fast_path must be True or False, got {jvm_fast_path!r}")
     direction = _direction(direction)
-    op_probe = _cached_operation(projstring)
-
-    route = _pick_route(op_probe, direction) if jvm_fast_path else None
-    if route is not None:
-        out = route[2](df, op_probe, direction, x, y, z, t, degrees,
-                       z is not None, out_prefix)
+    op = _cached_operation(projstring)
+    plan = _twin_plan(op, direction)
+    if plan is not None:
+        out = _emit_twin(df, plan, x, y, z, t, degrees, out_prefix)
     else:
-        out = _udf_apply(df, projstring, direction, x, y, z, t, degrees,
-                         out_prefix)
+        out = _udf_apply(df, op, projstring, direction, x, y, z, t,
+                         degrees, out_prefix)
     if not keep_errors:
         out = out.where(F.col(f"{out_prefix}x").isNotNull()
                         & ~F.isnan(F.col(f"{out_prefix}x")))
     return out
 
 
-def _udf_apply(df, projstring: str, direction: str, x, y, z, t,
+def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,
                degrees: bool, out_prefix: str):
     """The Arrow-UDF path: ONE Arrow-batched pandas UDF runs the whole
     pipeline's NumPy kernels; the executor-side plan comes from
-    _cached_operation(projstring)."""
+    _cached_operation(projstring); `op` is the driver's copy."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    op_probe = _cached_operation(projstring)
-    ang_in = op_probe.angular_input(direction)
-    ang_out = op_probe.angular_output(direction)
+    ang_in = op.angular_input(direction)
+    ang_out = op.angular_output(direction)
     z_supplied, t_supplied = z is not None, t is not None
 
     @pandas_udf(_STRUCT4)

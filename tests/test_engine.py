@@ -429,7 +429,7 @@ def test_binary_uv_stream_spark_source(spark, tmp_path):
     assert np.allclose(got["x"], 6378137.0 * got["u"], rtol=1e-15)
 
 
-def test_webmerc_jvm_fast_path_parity(spark):
+def test_webmerc_jvm_fast_path_parity(spark, udf_transform):
     """The JVM-expression webmerc twin must agree with the Arrow-UDF
     kernel path on values (<=1e-6 m; cross-libm ulp only) AND on the
     exact NaN pattern for every error class: null/NaN inputs, |lam|>10
@@ -453,8 +453,8 @@ def test_webmerc_jvm_fast_path_parity(spark):
 
     fast = transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
                      out_prefix="f_")
-    slow = transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
-                     out_prefix="s_", jvm_fast_path=False)
+    slow = udf_transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
+                         out_prefix="s_")
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     splan = slow._jdf.queryExecution().executedPlan().toString()
@@ -473,8 +473,8 @@ def test_webmerc_jvm_fast_path_parity(spark):
     # keep_errors=False drops the same rows on both paths
     nf = transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
                    keep_errors=False).count()
-    ns = transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
-                   keep_errors=False, jvm_fast_path=False).count()
+    ns = udf_transform(df, "+proj=webmerc +ellps=WGS84", x="lon", y="lat",
+                       keep_errors=False).count()
     assert nf == ns
 
     # r6: datum-modified (hub-leg) webmerc now takes the COMPOSED
@@ -560,7 +560,7 @@ def test_karney_kernel_emits_no_runtime_warnings():
     assert not runtime, [str(x.message) for x in runtime[:5]]
 
 
-def test_merc_jvm_fast_path_parity(spark):
+def test_merc_jvm_fast_path_parity(spark, udf_transform):
     """The r5 merc JVM twin (spherical AND ellipsoidal tsfn forward)
     agrees with the Arrow-UDF kernel path on values (<=1e-6 m) and the
     exact NaN pattern, for plain merc, lat_ts-scaled merc, and sphere
@@ -584,8 +584,7 @@ def test_merc_jvm_fast_path_parity(spark):
                "+proj=merc +R=6371000",
                "+proj=merc +ellps=intl +lon_0=12 +x_0=100000"):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         plan = fast._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, ps
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -612,7 +611,7 @@ def test_merc_jvm_fast_path_parity(spark):
         inv._jdf.queryExecution().executedPlan().toString()
 
 
-def test_etmerc_jvm_fast_path_parity(spark):
+def test_etmerc_jvm_fast_path_parity(spark, udf_transform):
     """The Poder-Engsager etmerc/utm/tmerc JVM twin (staged Catalyst
     projections) agrees with the Arrow-UDF kernel path on values
     (<=1e-6 m) and the exact NaN pattern; the plan contains no Python
@@ -637,12 +636,10 @@ def test_etmerc_jvm_fast_path_parity(spark):
                "+proj=etmerc +lon_0=9 +k=0.9996 +x_0=500000 "
                "+ellps=WGS84 +units=us-ft",
                "+proj=utm +zone=56 +south +ellps=GRS80"):
-        fast = transform(df, ps, x="lon", y="lat", out_prefix="f_",
-                         jvm_fast_path=True)
+        fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         plan = fast._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -666,7 +663,7 @@ def test_etmerc_jvm_fast_path_parity(spark):
     # guards
     for ps in ("+proj=tmerc +algo=auto +lon_0=9 +ellps=WGS84",
                "+proj=tmerc +approx +lon_0=9 +ellps=WGS84"):
-        p = transform(df, ps, x="lon", y="lat", jvm_fast_path=True)
+        p = transform(df, ps, x="lon", y="lat")
         assert "EvalPython" in \
             p._jdf.queryExecution().executedPlan().toString(), ps
     # datum legs + the same kernel (parity pinned in
@@ -675,12 +672,12 @@ def test_etmerc_jvm_fast_path_parity(spark):
     # the Poder-Engsager INVERSE is a staged twin since late r7
     # (parity pinned in test_iter_inverse_jvm_fast_path_parity)
     inv = transform(df, "+proj=utm +zone=32 +ellps=GRS80", x="lon",
-                    y="lat", direction="inv", jvm_fast_path=True)
+                    y="lat", direction="inv")
     assert "EvalPython" not in \
         inv._jdf.queryExecution().executedPlan().toString()
 
 
-def test_eqc_jvm_fast_path_parity(spark):
+def test_eqc_jvm_fast_path_parity(spark, udf_transform):
     """The eqc Catalyst twin (pure linear scaling) agrees with the UDF
     path on values and NaN pattern — including the pole rows, which
     are VALID for eqc (unlike merc)."""
@@ -699,8 +696,7 @@ def test_eqc_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -713,7 +709,7 @@ def test_eqc_jvm_fast_path_parity(spark):
             assert np.allclose(a[m], b[m], rtol=0, atol=1e-6), (ps, c)
 
 
-def test_cea_jvm_fast_path_parity(spark):
+def test_cea_jvm_fast_path_parity(spark, udf_transform):
     """The cea Catalyst twin (sphere + ellipsoidal authalic q) matches
     the UDF path, including lat_ts-scaled and R_A-free variants."""
     import numpy as np
@@ -732,8 +728,7 @@ def test_cea_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -746,7 +741,7 @@ def test_cea_jvm_fast_path_parity(spark):
             assert np.allclose(a[m], b[m], rtol=0, atol=1e-6), (ps, c)
 
 
-def test_lcc_aea_jvm_fast_path_parity(spark):
+def test_lcc_aea_jvm_fast_path_parity(spark, udf_transform):
     """The lcc and aea/leac Catalyst twins match the UDF path on
     values and NaN pattern (wrong-side-of-cone poles NaN for lcc,
     rho^2<0 NaN for aea), for 1SP/2SP lcc, Michigan k_0, sphere and
@@ -773,8 +768,7 @@ def test_lcc_aea_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -792,7 +786,7 @@ def test_lcc_aea_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_stere_jvm_fast_path_parity(spark):
+def test_stere_jvm_fast_path_parity(spark, udf_transform):
     """The stere/ups Catalyst twin matches the UDF path across all four
     aspect modes, sphere and ellipsoid, incl. UPS and the antipodal
     NaN rows."""
@@ -822,8 +816,7 @@ def test_stere_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -838,7 +831,7 @@ def test_stere_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_laea_jvm_fast_path_parity(spark):
+def test_laea_jvm_fast_path_parity(spark, udf_transform):
     """The laea Catalyst twin matches the UDF path across all aspect
     modes, sphere and ellipsoid, incl. EPSG:3035 (ETRS89-LAEA Europe)
     and the antipodal NaN rows."""
@@ -867,8 +860,7 @@ def test_laea_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -883,7 +875,7 @@ def test_laea_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_sterea_jvm_fast_path_parity(spark):
+def test_sterea_jvm_fast_path_parity(spark, udf_transform):
     """The sterea (Gauss double projection) Catalyst twin matches the
     UDF path — incl. the RD New (EPSG:28992) parameters."""
     import numpy as np
@@ -904,8 +896,7 @@ def test_sterea_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -919,7 +910,7 @@ def test_sterea_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_inverse_jvm_fast_path_parity(spark):
+def test_inverse_jvm_fast_path_parity(spark, udf_transform):
     """The INVERSE Catalyst twins (webmerc / spherical merc / eqc:
     tile->lon/lat style workloads) match the UDF path; ellipsoidal
     merc inverse compiles to the r7 staged phi2 twin (parity pinned in
@@ -941,8 +932,8 @@ def test_inverse_jvm_fast_path_parity(spark):
                          out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="px", y="py", direction="inv",
-                         out_prefix="s_", jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="px", y="py", direction="inv",
+                             out_prefix="s_")
         fp = fast.toPandas().sort_values(["px", "py"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["px", "py"]).reset_index(
@@ -961,7 +952,7 @@ def test_inverse_jvm_fast_path_parity(spark):
         p._jdf.queryExecution().executedPlan().toString()
 
 
-def test_somerc_krovak_jvm_fast_path_parity(spark):
+def test_somerc_krovak_jvm_fast_path_parity(spark, udf_transform):
     """The somerc (Swiss CH1903/LV95) and krovak (S-JTSK) Catalyst
     twins match the UDF path."""
     import numpy as np
@@ -984,8 +975,7 @@ def test_somerc_krovak_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -1000,7 +990,7 @@ def test_somerc_krovak_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_sinu_eqdc_jvm_fast_path_parity(spark):
+def test_sinu_eqdc_jvm_fast_path_parity(spark, udf_transform):
     """The sinu and eqdc Catalyst twins (flat mlfn meridional-arc
     series) match the UDF path, sphere and ellipsoid."""
     import numpy as np
@@ -1021,8 +1011,7 @@ def test_sinu_eqdc_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -1037,7 +1026,7 @@ def test_sinu_eqdc_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_datum_pipeline_jvm_fast_path_parity(spark):
+def test_datum_pipeline_jvm_fast_path_parity(spark, udf_transform):
     """The cart/helmert datum-pipeline Catalyst twin (r6): towgs84-style
     cart -> helmert -> cart⁻¹ chains — incl. 7-param, +exact,
     Molodensky-Badekas, hub-composed 4-step concatenations, the
@@ -1092,7 +1081,7 @@ def test_datum_pipeline_jvm_fast_path_parity(spark):
         plan = fast._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, (ps, direc)
         kw["out_prefix"] = "s_"
-        slow = transform(df, ps, jvm_fast_path=False, **kw)
+        slow = udf_transform(df, ps, **kw)
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -1173,20 +1162,7 @@ def test_datum_twin_signed_zero_and_prefix_collision(spark):
                       y="lat")
 
 
-def test_jvm_fast_path_must_be_bool(spark):
-    """jvm_fast_path is a plain bool: a string (the retired "all"
-    alias, or "no", which used to be truthy and silently turned the
-    twins ON) or any other non-bool raises at plan time."""
-    from proj_4_spark.engine.spark import transform
-
-    df = spark.createDataFrame([(3.0, 46.5)], "lon double, lat double")
-    for bad in ("all", "no", "False", 1, None):
-        with pytest.raises(ValueError, match="jvm_fast_path"):
-            transform(df, "+proj=merc +ellps=WGS84", x="lon", y="lat",
-                      jvm_fast_path=bad)
-
-
-def test_inverse_jvm_fast_path_parity_r6(spark):
+def test_inverse_jvm_fast_path_parity_r6(spark, udf_transform):
     """r6 inverse twins: cea (sphere+ellipsoid authlat), laea (all
     modes, sphere+ellipsoid), spherical stere (all modes), spherical
     sinu and spherical eqdc match the UDF path exactly; the iterative
@@ -1228,8 +1204,8 @@ def test_inverse_jvm_fast_path_parity_r6(spark):
                          out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="px", y="py", direction="inv",
-                         out_prefix="s_", jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="px", y="py", direction="inv",
+                             out_prefix="s_")
         fp = fast.toPandas().sort_values(["px", "py"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["px", "py"]).reset_index(
@@ -1258,7 +1234,7 @@ def test_inverse_jvm_fast_path_parity_r6(spark):
         p._jdf.queryExecution().executedPlan().toString()
 
 
-def test_iter_inverse_jvm_fast_path_parity(spark):
+def test_iter_inverse_jvm_fast_path_parity(spark, udf_transform):
     """r7 iterative inverse twins: lcc / aea / leac (sphere AND
     ellipsoid) and ellipsoidal merc plan with zero Python workers and
     match the UDF path — the bounded phi2/phi1 iterations unroll to
@@ -1330,8 +1306,8 @@ def test_iter_inverse_jvm_fast_path_parity(spark):
                          out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="px", y="py", direction="inv",
-                         out_prefix="s_", jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="px", y="py", direction="inv",
+                             out_prefix="s_")
         fp = fast.toPandas().sort_values(["px", "py"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["px", "py"]).reset_index(
@@ -1364,7 +1340,7 @@ def test_iter_inverse_jvm_fast_path_parity(spark):
         assert np.allclose(rp["r_y"], rp["lat"], atol=1e-9), ps
 
 
-def test_omerc_fwd_jvm_fast_path_parity(spark):
+def test_omerc_fwd_jvm_fast_path_parity(spark, udf_transform):
     """late-r7 omerc FORWARD staged twin: Hotine oblique Mercator
     (Borneo RSO / Alaska zone 1 / two-point / +no_rot / +no_off,
     sphere + ellipsoid) plans with zero Python workers and matches
@@ -1396,8 +1372,7 @@ def test_omerc_fwd_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas()
         sp = slow.toPandas()
         for c in ("x", "y"):
@@ -1409,7 +1384,7 @@ def test_omerc_fwd_jvm_fast_path_parity(spark):
                 ps, c, np.abs(a[m] - b[m]).max())
 
 
-def test_geos_jvm_fast_path_parity(spark):
+def test_geos_jvm_fast_path_parity(spark, udf_transform):
     """late-r7 geos (geostationary satellite view) twins: BOTH
     directions closed-form, sphere + ellipsoid, sweep x/y, plan with
     zero Python workers and match the UDF path (exact NaN pattern
@@ -1441,9 +1416,8 @@ def test_geos_jvm_fast_path_parity(spark):
             assert "EvalPython" not in \
                 fast._jdf.queryExecution().executedPlan().toString(), (
                     ps, direc)
-            slow = transform(df, ps, x=cols[0], y=cols[1],
-                             direction=direc, out_prefix="s_",
-                             jvm_fast_path=False)
+            slow = udf_transform(df, ps, x=cols[0], y=cols[1],
+                                 direction=direc, out_prefix="s_")
             fp = fast.toPandas()
             sp = slow.toPandas()
             for c in ("x", "y"):
@@ -1458,7 +1432,7 @@ def test_geos_jvm_fast_path_parity(spark):
                     ps, direc, c, np.abs(a[m] - b[m]).max())
 
 
-def test_datum_modified_jvm_fast_path_parity(spark):
+def test_datum_modified_jvm_fast_path_parity(spark, udf_transform):
     """A SINGLE datum-modified op (+towgs84 / +datum cs2cs-emulation
     hooks) compiles to datum legs + the projection's expression twin on
     the fwd / inv routes — the dominant catalog-preset shape runs with
@@ -1536,7 +1510,7 @@ def test_datum_modified_jvm_fast_path_parity(spark):
             fast._jdf.queryExecution().executedPlan().toString(), (ps,
                                                                    direc)
         kw["out_prefix"] = "s_"
-        slow = transform(df, ps, jvm_fast_path=False, **kw)
+        slow = udf_transform(df, ps, **kw)
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -1566,7 +1540,7 @@ def test_datum_modified_jvm_fast_path_parity(spark):
             g._jdf.queryExecution().executedPlan().toString(), (ps, direc)
 
 
-def test_eqearth_cass_ortho_gnom_jvm_fast_path_parity(spark):
+def test_eqearth_cass_ortho_gnom_jvm_fast_path_parity(spark, udf_transform):
     """r6 late roster additions: eqearth (Equal Earth polynomial,
     sphere+ellipsoid), cass (sphere + mlfn series), ortho (sphere all
     modes + EPSG ellipsoidal fwd), gnom (sphere formulas) forward
@@ -1597,8 +1571,7 @@ def test_eqearth_cass_ortho_gnom_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas().sort_values(["lon", "lat"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["lon", "lat"]).reset_index(
@@ -1628,8 +1601,8 @@ def test_eqearth_cass_ortho_gnom_jvm_fast_path_parity(spark):
                          out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df2, ps, x="px", y="py", direction="inv",
-                         out_prefix="s_", jvm_fast_path=False)
+        slow = udf_transform(df2, ps, x="px", y="py", direction="inv",
+                             out_prefix="s_")
         fp = fast.toPandas().sort_values(["px", "py"]).reset_index(
             drop=True)
         sp = slow.toPandas().sort_values(["px", "py"]).reset_index(
@@ -1650,7 +1623,7 @@ def test_eqearth_cass_ortho_gnom_jvm_fast_path_parity(spark):
             g._jdf.queryExecution().executedPlan().toString(), ps
 
 
-def test_twin_vertical_unit_scaling_matches_udf(spark):
+def test_twin_vertical_unit_scaling_matches_udf(spark, udf_transform):
     """r7 fix: the bare twins must apply the generic vertical scaling
     the UDF path applies — fwd_finalize z = vfr_meter*(z+z0),
     inv_prepare z = vto_meter*z - z0 (src/fwd.cpp / src/inv.cpp).
@@ -1685,9 +1658,8 @@ def test_twin_vertical_unit_scaling_matches_udf(spark):
     for ps, direc, d, cols in cases:
         a = transform(d, ps, x=cols[0], y=cols[1], z="pz",
                       direction=direc, out_prefix="a_").toPandas()
-        b = transform(d, ps, x=cols[0], y=cols[1], z="pz",
-                      direction=direc, out_prefix="b_",
-                      jvm_fast_path=False).toPandas()
+        b = udf_transform(d, ps, x=cols[0], y=cols[1], z="pz",
+                          direction=direc, out_prefix="b_").toPandas()
         for c in ("x", "y", "z"):
             av = a[f"a_{c}"].to_numpy(dtype=np.float64,
                                       na_value=np.nan)
@@ -1699,7 +1671,7 @@ def test_twin_vertical_unit_scaling_matches_udf(spark):
                 ps, direc, c)
 
 
-def test_moll_fwd_jvm_fast_path_parity(spark):
+def test_moll_fwd_jvm_fast_path_parity(spark, udf_transform):
     """late-r7 moll/wag4/wag5 FORWARD staged twin (the 10-iteration
     Newton on the parametric angle, moll.cpp:22-42): zero Python
     workers, bit-exact against the UDF path on this grid (the frozen
@@ -1723,8 +1695,7 @@ def test_moll_fwd_jvm_fast_path_parity(spark):
         fast = transform(df, ps, x="lon", y="lat", out_prefix="f_")
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, x="lon", y="lat", out_prefix="s_",
-                         jvm_fast_path=False)
+        slow = udf_transform(df, ps, x="lon", y="lat", out_prefix="s_")
         fp = fast.toPandas()
         sp = slow.toPandas()
         for c in ("x", "y"):
@@ -1749,7 +1720,7 @@ def test_moll_fwd_jvm_fast_path_parity(spark):
     assert np.allclose(rp["r_y"], rp["lat"], atol=1e-9)
 
 
-def test_robin_fwd_twin_bit_identical(spark):
+def test_robin_fwd_twin_bit_identical(spark, udf_transform):
     """The Robinson forward twin (5-degree node lookup + two cubics,
     kernels/robin.py's float order) takes the ``fwd`` route, bare and
     under ``+towgs84``.  On node boundaries k*5 deg +- 1e-13, the
@@ -1791,7 +1762,7 @@ def test_robin_fwd_twin_bit_identical(spark):
         fast = transform(df, ps, out_prefix="f_", **kw)
         assert "EvalPython" not in \
             fast._jdf.queryExecution().executedPlan().toString(), ps
-        slow = transform(df, ps, out_prefix="s_", jvm_fast_path=False, **kw)
+        slow = udf_transform(df, ps, out_prefix="s_", **kw)
         fp = fast.toPandas().sort_values("id")
         sp = slow.toPandas().sort_values("id")
         for c in ("x", "y", "z", "t"):

@@ -54,7 +54,7 @@ def test_column_pruning_through_transform(spark):
     assert "ReadSchema: struct<event_id:bigint>" in txt, txt[-2000:]
 
 
-def test_transform_plan_has_no_shuffle(spark):
+def test_transform_plan_has_no_shuffle(spark, udf_transform):
     """The whole-pipeline UDF is embarrassingly parallel: no Exchange."""
     from proj_4_spark.engine.spark import transform
 
@@ -77,16 +77,40 @@ def test_transform_plan_has_no_shuffle(spark):
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0
     # the Arrow-UDF fallback still fuses the whole 3-step pipeline into
     # exactly ONE eval node (kernel fusion, SURVEY.md §4.3)
-    udf = transform(
+    udf = udf_transform(
         pts,
         "+proj=pipeline +ellps=GRS80 +step +proj=cart "
         "+step +proj=helmert +x=10 +y=-20 +z=30 +step +proj=cart +inv",
-        x="lon", y="lat", jvm_fast_path=False,
+        x="lon", y="lat",
     )
     uplan = plan_of(udf)
     assert "Exchange" not in uplan
     assert (uplan.count("ArrowEvalPython")
             + uplan.count("BatchEvalPython")) == 1
+
+
+def test_describe_route_matches_plan(spark):
+    """describe_route names the path transform() takes, for one
+    proj-string per plan shape: a twin name means no Python eval node
+    in the physical plan, "udf" means exactly one."""
+    from proj_4_spark.engine.spark import describe_route, transform
+
+    pipe = ("+proj=pipeline +ellps=GRS80 +step +proj=cart "
+            "+step +proj=helmert +x=10 +y=-20 +z=30 +step +proj=cart +inv")
+    utm = "+proj=utm +zone=32 +ellps=GRS80"
+    lcc = ("+proj=lcc +lat_1=49 +lat_2=77 +ellps=clrk66 "
+           "+towgs84=-10,158,187")
+    cases = ((pipe, "fwd", "datum_pipeline"),
+             (pipe, "inv", "datum_pipeline"),
+             (utm, "fwd", "fwd"), (utm, "inv", "inv"),
+             (lcc, "fwd", "fwd"), (lcc, "inv", "inv"),
+             ("+proj=robin +ellps=WGS84", "inv", "udf"))
+    df = spark.createDataFrame([(9.0, 48.0)], "x double, y double")
+    for ps, direc, want in cases:
+        assert describe_route(ps, direc) == want, (ps, direc)
+        plan = plan_of(transform(df, ps, direction=direc))
+        evals = plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+        assert evals == (1 if want == "udf" else 0), (ps, direc, plan)
 
 
 def test_small_dim_broadcasts(spark):

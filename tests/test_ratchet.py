@@ -56,13 +56,12 @@ def test_registry_parity_holds():
 
 
 def _route(ps, direction):
-    """Name of the transform() route-table row that takes (ps,
-    direction), or None for the Arrow-UDF path."""
-    from proj_4_spark.engine.plan import create_operation
-    from proj_4_spark.engine.spark import _pick_route
+    """Name of the twin transform() runs for (ps, direction), or None
+    for the Arrow-UDF path."""
+    from proj_4_spark.engine.spark import describe_route
 
-    row = _pick_route(create_operation(ps), direction)
-    return None if row is None else row[0]
+    route = describe_route(ps, direction)
+    return None if route == "udf" else route
 
 
 def test_r6_twin_roster_and_text_formats():

@@ -57,7 +57,7 @@ def test_media_extraction_roundtrips_encoding(spark, docs):
     assert -180 <= row.lat <= 90 or row.lon == 999.0
 
 
-def test_spark_transform_matches_local(spark, media_pts):
+def test_spark_transform_matches_local(spark, media_pts, udf_transform):
     """The Spark UDF path must produce bit-identical results to the
     driver-side NumPy path (same kernels, same batches); the default
     path (the staged etmerc/utm Catalyst twin, default-on since r7)
@@ -66,9 +66,9 @@ def test_spark_transform_matches_local(spark, media_pts):
     from proj_4_spark.kernels.common import DEG_TO_RAD
 
     sample = media_pts.where("abs(lat) < 84 and abs(lon) <= 180").limit(100).toPandas()
-    out = transform(
+    out = udf_transform(
         spark.createDataFrame(sample), "+proj=utm +zone=32 +ellps=GRS80",
-        x="lon", y="lat", out_prefix="u_", jvm_fast_path=False,
+        x="lon", y="lat", out_prefix="u_",
     ).toPandas().sort_values(["doc_id", "span_offset"])
     op = create_operation("+proj=utm +zone=32 +ellps=GRS80")
     s = sample.sort_values(["doc_id", "span_offset"])
@@ -124,10 +124,10 @@ def test_neighbors_col_exact_decode_near_row_boundary(spark):
     got = (
         df.withColumn("nb", cells.neighbors_col(F.col("cell"), res, 1))
         .orderBy("cell")
-        .toPandas()
+        .collect()
     )
     expect_sets = [set(map(int, row)) for row in expect[np.argsort(ids)]]
-    got_sets = [set(map(int, row)) for row in got["nb"]]
+    got_sets = [set(map(int, row["nb"])) for row in got]
     assert got_sets == expect_sets
 
 

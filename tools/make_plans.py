@@ -14,7 +14,7 @@ import __spark_entry__ as E
 NOTES = {
     "merc_fwd": "scan -> Catalyst expression twin (r5: zero Python workers, pure whole-stage codegen projection, no shuffle) -> select. ReadSchema prunes to event_id.",
     "webmerc_tiles": "Catalyst webmerc twin (zero Python) -> JVM integer tile math -> single hash aggregate. One shuffle (the groupBy) with map-side partial aggregation.",
-    "pipeline_datum_shift": "r6: the cart->helmert->cart-inv datum pipeline compiles to the staged Catalyst twin - zero Python workers, one whole-stage-codegen region, no shuffle. The Arrow-UDF fallback (jvm_fast_path=False) still fuses all three steps into ONE eval node.",
+    "pipeline_datum_shift": "r6: the cart->helmert->cart-inv datum pipeline compiles to the staged Catalyst twin - zero Python workers, one whole-stage-codegen region, no shuffle. The Arrow-UDF fallback still fuses all three steps into ONE eval node.",
     "lcc_fwd": "Catalyst lcc twin (zero Python): scan -> whole-stage codegen projection -> select.",
     "towgs84_datum_shift": "r6 COMPOSED twin: a datum-modified single op (+towgs84 cs2cs-emulation hooks) runs datum legs + the projection twin as one whole-stage-codegen region - zero Python; the dominant catalog-preset shape.",
     "laea_inverse": "r6 inverse twin: ETRS89-LAEA reverse geocode (authalic-latitude closed series) - zero Python, pure projection, no shuffle.",
