@@ -14,7 +14,8 @@ from __future__ import annotations
 import re
 
 from proj_4_spark.sources.epsg_methods import fmt
-from proj_4_spark.sources.wkt2 import ellipsoid_fragment
+from proj_4_spark.sources.wkt2 import (ellipsoid_fragment,
+                                       length_units_fragment)
 
 _ESRI_SIMPLE = {
     # esri projection name -> (proj name, uses lat_ts from SP1)
@@ -53,14 +54,7 @@ def esri_wkt_fragment(wkt: str) -> tuple | None:
         r'PARAMETER\["([A-Za-z_0-9]+)",(-?[0-9.eE+]+)\]', wkt)}
     units = re.findall(r'UNIT\["([^"]+)",([0-9.eE+-]+)', wkt)
     ufac = float(units[-1][1]) if units else 1.0
-    if abs(ufac - 1.0) < 1e-15:
-        unitf = "units=m"
-    elif abs(ufac - 0.3048) < 1e-12:
-        unitf = "units=ft"
-    elif abs(ufac - 1200.0 / 3937.0) < 1e-12:
-        unitf = "units=us-ft"
-    else:
-        unitf = f"to_meter={fmt(ufac)}"
+    unitf = length_units_fragment(ufac)
 
     def g(k, d=0.0):
         return prm.get(k, d)

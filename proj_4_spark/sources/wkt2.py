@@ -392,12 +392,27 @@ def _units_fragment_from(crs: Node) -> str:
             if u is not None:
                 factor = _unit_factor(u)
                 break
-    if factor is None or factor == 1.0:
+    return length_units_fragment(factor)
+
+
+# +units name -> (WKT unit name, meters per unit)
+_UNIT_WKT = {
+    "m": ("metre", 1.0),
+    "ft": ("foot", 0.3048),
+    "us-ft": ("US survey foot", 1200.0 / 3937.0),
+}
+
+
+def length_units_fragment(factor: float | None) -> str:
+    """+units (or +to_meter) for a length unit of `factor` meters: the
+    one rule of the WKT2 and ESRI WKT1 readers.  A unit of _UNIT_WKT
+    matches within 1e-12, the tolerance the catalog was generated with;
+    no factor means meters."""
+    if factor is None:
         return "units=m"
-    if abs(factor - 0.3048) < 1e-15:
-        return "units=ft"
-    if abs(factor - 1200.0 / 3937.0) < 1e-15:
-        return "units=us-ft"
+    for name, (_, meters) in _UNIT_WKT.items():
+        if abs(factor - meters) < 1e-12:
+            return f"units={name}"
     return f"to_meter={fmt(factor)}"
 
 
@@ -1156,12 +1171,6 @@ _WKT_METHODS = {
         (8802, "Longitude of natural origin", "lon_0", "A", 0.0),
         (8806, "False easting", "x_0", "L", 0.0),
         (8807, "False northing", "y_0", "L", 0.0)]),
-}
-
-_UNIT_WKT = {
-    "m": ("metre", 1.0),
-    "ft": ("foot", 0.3048),
-    "us-ft": ("US survey foot", 1200.0 / 3937.0),
 }
 
 

@@ -4,8 +4,10 @@ Plan shape (north_rule / SURVEY.md §2.5):
   1. index points by cell (cells.cell_col, JVM-side);
   2. per query, explode a neighbor ring of cells and join on cell —
      a hash join co-partitioned on the cell key, no cross product;
-  3. exact geodesic distances (vectorized Karney inverse, the same
-     metric the gie tolerance check uses) in one Arrow-batched UDF;
+  3. distances by the named metric (_METRICS): "haversine" is a JVM
+     expression; "karney", the exact ellipsoidal inverse the gie
+     tolerance check uses, runs vectorized in one Arrow-batched UDF,
+     the only Python worker in the spatial layer;
   4. Window.partitionBy(q_id).orderBy(dist, doc_id, span_offset)
      row_number() <= k (deterministic tie-break).
 
@@ -13,8 +15,8 @@ Correctness across ring boundaries: two passes, no loop.  Ring 1 first;
 each uncertified query then re-runs once in the ring its own ring-1
 k-th distance implies, or the whole grid (knn_join proves the guard).
 
-Skew: hot cells (cities) put many points in one cell; the join key can
-be salted with spatial/salting.py and AQE skew-join splits the rest.
+Skew: hot cells (cities) put many points in one cell; n_salt > 1 salts
+the join key with salting.salt_col and AQE skew-join splits the rest.
 """
 
 from __future__ import annotations
@@ -23,41 +25,33 @@ import numpy as np
 import pandas as pd
 
 from proj_4_spark import scale
-from proj_4_spark.spatial import cells
+from proj_4_spark.spatial import cells, salting
 
 # MINIMUM meridional meters per degree (at the equator, GRS80): the guard
 # needs a lower bound on the distance to an unexplored cell, so it must use
 # the smallest meters-per-degree anywhere — the mean (111194.93) would
 # overestimate by ~0.56% near the equator and falsely certify completion.
 M_PER_DEG = 110567.0
-
-
 HAVERSINE_R = 6371000.0  # mean sphere radius for metric="haversine"
 
 
-def _dist_udf(a: float, f: float, metric: str = "karney"):
+def _haversine_m(lon1, lat1, lon2, lat2):
+    """Great-circle meters on the HAVERSINE_R sphere as a JVM expression
+    (the SQL-expressible metric the DuckDB correctness gate recomputes):
+    radians, h = sin²(dφ/2) + cos φ1 cos φ2 sin²(dλ/2), 2R asin(min(1, √h))."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.kernels.common import DEG_TO_RAD
+
+    p1, p2 = lat1 * DEG_TO_RAD, lat2 * DEG_TO_RAD
+    s_dp = F.sin((p2 - p1) / 2.0)
+    s_dl = F.sin((lon2 - lon1) * DEG_TO_RAD / 2.0)
+    h = s_dp * s_dp + F.cos(p1) * F.cos(p2) * (s_dl * s_dl)
+    return 2.0 * HAVERSINE_R * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+
+
+def _karney_udf(a: float, f: float):
     from pyspark.sql.functions import pandas_udf
-
-    if metric == "haversine":
-        # SQL-expressible twin metric: lets the DuckDB correctness gate
-        # value-verify the full kNN machinery (rings/guards/tie-breaks)
-        @pandas_udf("double")
-        def geodesic_m(lon1: pd.Series, lat1: pd.Series,
-                       lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-            from proj_4_spark.kernels.common import DEG_TO_RAD
-
-            p1 = lat1.to_numpy(dtype=np.float64) * DEG_TO_RAD
-            p2 = lat2.to_numpy(dtype=np.float64) * DEG_TO_RAD
-            dp = p2 - p1
-            dl = (lon2.to_numpy(dtype=np.float64)
-                  - lon1.to_numpy(dtype=np.float64)) * DEG_TO_RAD
-            h = (np.sin(dp / 2.0) ** 2
-                 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2.0) ** 2)
-            return pd.Series(
-                2.0 * HAVERSINE_R * np.arcsin(np.minimum(1.0, np.sqrt(h)))
-            )
-
-        return geodesic_m
 
     @pandas_udf("double")
     def geodesic_m(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
@@ -76,8 +70,25 @@ def _dist_udf(a: float, f: float, metric: str = "karney"):
     return geodesic_m
 
 
+# metric -> (builder (a, f) -> meters of (lon1, lat1, lon2, lat2), the
+# guard's meters-per-degree lower bound, exact on the haversine sphere)
+_METRICS = {
+    "karney": (_karney_udf, M_PER_DEG),
+    "haversine": (lambda a, f: _haversine_m, HAVERSINE_R * np.pi / 180),
+}
+
+
+def _metric(name: str, a: float, f: float):
+    """(distance of (lon1, lat1, lon2, lat2), meters per degree) of `name`."""
+    if name not in _METRICS:
+        raise ValueError(f"unknown kNN metric {name!r}; valid metrics: "
+                         f"{', '.join(_METRICS)}")
+    build, m_per_deg = _METRICS[name]
+    return build(a, f), m_per_deg
+
+
 def _ranked(cand, geodesic_m, k: int):
-    """Candidate (q, p) pairs -> distance UDF -> per-query window ->
+    """Candidate (q, p) pairs -> distance -> per-query window ->
     rank <= k, ties broken by (doc_id, span_offset)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -98,8 +109,6 @@ def knn_join(
     k: int = 10,
     a: float = 6378137.0,
     f: float = 1 / 298.257222101,
-    point_cols=("doc_id", "span_offset", "lon", "lat"),
-    query_cols=("q_id", "lon", "lat"),
     metric: str = "karney",
     n_salt: int = 1,
 ):
@@ -110,8 +119,10 @@ def knn_join(
     files `points_df` scans (scale.knn_res), not from its rows after
     filters, limits or joins: a small subset of a large file gets the
     large file's (smaller) cells.
-    metric: "karney" (exact ellipsoidal) or "haversine" (mean sphere —
-    the SQL-expressible twin used by the DuckDB correctness gate).
+    metric: "karney" (exact ellipsoidal, the Arrow-batched Karney UDF)
+    or "haversine" (mean sphere, a JVM expression with no Python worker:
+    the SQL-expressible twin used by the DuckDB correctness gate); any
+    other name raises ValueError.
     n_salt > 1 defuses hot-cell skew (a metro cell holding most of the
     corpus): points hash-split into (cell, salt) sub-partitions and each
     query replicates across the salts of its candidate cells, so the hot
@@ -147,21 +158,18 @@ def knn_join(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    did, soff, plon, plat = point_cols
-    qid, qlon, qlat = query_cols
-    geodesic_m = _dist_udf(a, f, metric)
+    geodesic_m, m_per_deg = _metric(metric, a, f)
     res = scale.knn_res(scale.parquet_stats(points_df)[0])
     n = 1 << res
 
     pts = points_df.select(
-        F.col(did).alias("doc_id"), F.col(soff).alias("span_offset"),
-        F.col(plon).alias("p_lon"), F.col(plat).alias("p_lat"),
-        cells.cell_col(F.col(plon), F.col(plat), res).alias("cell"),
+        "doc_id", "span_offset",
+        F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
+        cells.cell_col(F.col("lon"), F.col("lat"), res).alias("cell"),
     )
     join_keys = ["cell"]
     if n_salt > 1:
-        pts = pts.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).cast("int"))
+        pts = pts.withColumn("salt", salting.salt_col("doc_id", n_salt))
         join_keys = ["cell", "salt"]
     # repartition points by cell (and salt) once; both passes read it
     pts = pts.repartition(*join_keys).cache()
@@ -175,9 +183,7 @@ def knn_join(
         return _ranked(q.join(pts, join_keys, "inner"), geodesic_m, k)
 
     queries = queries_df.select(
-        F.col(qid).alias("q_id"), F.col(qlon).alias("q_lon"), F.col(qlat).alias("q_lat"))
-    # meters-per-degree lower bound; exact on the haversine sphere
-    m_per_deg = HAVERSINE_R * np.pi / 180 if metric == "haversine" else M_PER_DEG
+        "q_id", F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat"))
     unit = (F.lit(cells.cell_size_deg(res)[1] * m_per_deg)
             * F.least(F.lit(1.0), F.cos(F.radians(F.col("q_lat")))))
     d1 = F.col("kth_dist")
@@ -209,10 +215,9 @@ def knn_brute_force(points_df, queries_df, k: int = 10,
                     metric: str = "karney"):
     """Reference implementation (cross join): the correctness oracle for
     knn_join at test scale.  Never use at production scale."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    geodesic_m = _dist_udf(a, f, metric)
+    geodesic_m, _ = _metric(metric, a, f)
     cand = queries_df.select(
         F.col("q_id"), F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat")
     ).crossJoin(
@@ -221,12 +226,5 @@ def knn_brute_force(points_df, queries_df, k: int = 10,
             F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
         )
     )
-    cand = cand.withColumn(
-        "dist_m", geodesic_m(F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat"))
-    )
-    w = Window.partitionBy("q_id").orderBy("dist_m", "doc_id", "span_offset")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "doc_id", "span_offset", "dist_m", "rank")
-    )
+    return _ranked(cand, geodesic_m, k).select(
+        "q_id", "doc_id", "span_offset", "dist_m", "rank")

@@ -4,25 +4,22 @@ At 10^12 documents the cell histogram is power-law (cities): a plain
 groupBy(cell) sends whole metros to single reducers.  north_rule demands
 explicit salting (AQE skew-join is the backstop, not the plan):
 
-  salted = concat(cell, pmod(xxhash64(doc_id), n_salt))
+  salt = int(pmod(xxhash64(doc_id), n_salt))
   phase 1: partial aggregate per (cell, salt)   -- map-side combine
   phase 2: final aggregate per cell             -- tiny shuffle
 
+knn_join builds its (cell, salt) join keys from the same `salt_col`.
 SURVEY.md §2.5 "hot-cell skew salting".
 """
 
 from __future__ import annotations
 
 
-def with_salt(df, key_col: str = "cell", id_col: str = "doc_id",
-              n_salt: int = 16, out_col: str = "salted_cell"):
+def salt_col(id_col: str, n_salt: int):
+    """Int column in [0, n_salt): the salt of each row's `id_col`."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(
-        out_col,
-        F.concat_ws("#", F.col(key_col).cast("string"),
-                    F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).cast("string")),
-    )
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).cast("int")
 
 
 def salted_count(df, key_col: str = "cell", id_col: str = "doc_id", n_salt: int = 16):
@@ -32,6 +29,6 @@ def salted_count(df, key_col: str = "cell", id_col: str = "doc_id", n_salt: int 
     on hot keys."""
     from pyspark.sql import functions as F
 
-    salted = with_salt(df, key_col, id_col, n_salt)
-    partial = salted.groupBy(key_col, "salted_cell").agg(F.count("*").alias("partial_n"))
+    partial = df.withColumn("salt", salt_col(id_col, n_salt)) \
+        .groupBy(key_col, "salt").agg(F.count("*").alias("partial_n"))
     return partial.groupBy(key_col).agg(F.sum("partial_n").alias("n"))

@@ -226,6 +226,26 @@ def test_knn_join_has_no_cross_product(spark):
     assert "BroadcastNestedLoopJoin" not in txt
 
 
+def test_knn_haversine_runs_in_jvm(spark):
+    """The haversine metric is a JVM expression: neither knn_join nor
+    knn_brute_force plans a Python evaluation under it, while under
+    karney the Karney UDF is the one Python node of each plan."""
+    from proj_4_spark.spatial.knn import knn_brute_force, knn_join
+
+    pts = spark.createDataFrame(
+        [("a", 0, 1.0, 2.0), ("b", 0, 120.0, -60.0)],
+        "doc_id string, span_offset int, lon double, lat double")
+    queries = spark.createDataFrame(
+        [("q_near", 1.5, 2.0), ("q_far", -100.0, 40.0)],
+        "q_id string, lon double, lat double")
+    for fn in (knn_join, knn_brute_force):
+        assert "EvalPython" not in plan_of(
+            fn(pts, queries, k=1, metric="haversine")), fn.__name__
+        karney = plan_of(fn(pts, queries, k=1, metric="karney"))
+        assert karney.count("ArrowEvalPython") == 1, fn.__name__
+        assert "BatchEvalPython" not in karney, fn.__name__
+
+
 def test_ivf_single_pass_single_exchange(spark):
     """IVF ANN plan (r8): ONE mapInArrow corpus pass emits narrow
     candidate rows against the closure-held query batch — no corpus
@@ -300,7 +320,7 @@ def test_lsh_topk_single_exchange_for_dedup_and_rank(spark):
 
 def test_salted_count_two_phase_agg_shape(spark):
     """salted_count's physical plan is the two-phase shape the salting
-    docs promise: an exchange on (cell, salted_cell) for the partial
+    docs promise: an exchange on (cell, salt) for the partial
     aggregate, then an exchange on (cell) alone for the final — the hot
     cell's rows spread over n_salt reducers in phase 1 and only n_salt
     partial rows meet in phase 2."""
@@ -313,8 +333,8 @@ def test_salted_count_two_phase_agg_shape(spark):
     txt = plan_of(salted_count(df, n_salt=16))
     parts = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", txt)
     assert len(parts) == 2, parts
-    two_key = [p for p in parts if "salted_cell" in p and "cell" in p]
-    one_key = [p for p in parts if "salted_cell" not in p]
+    two_key = [p for p in parts if "salt#" in p and "cell" in p]
+    one_key = [p for p in parts if "salt#" not in p]
     assert len(two_key) == 1 and len(one_key) == 1, parts
     # both phases keep partial (map-side) aggregation
     assert txt.count("HashAggregate") >= 4, txt[:2000]

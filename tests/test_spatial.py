@@ -330,6 +330,19 @@ def test_knn_pole_crossing_neighbour(spark):
                             np.float64(r.dist_m).view(np.int64)) for r in exp]
 
 
+def test_knn_unknown_metric_raises(spark):
+    """A metric name outside the table raises, naming the valid ones,
+    instead of silently running another metric."""
+    pts = spark.createDataFrame(
+        [("a", 0, 1.0, 2.0)],
+        "doc_id string, span_offset int, lon double, lat double")
+    queries = spark.createDataFrame([("q", 1.5, 2.0)],
+                                    "q_id string, lon double, lat double")
+    for fn in (knn_join, knn_brute_force):
+        with pytest.raises(ValueError, match="haversine"):
+            fn(pts, queries, k=1, metric="vincenty")
+
+
 def test_span_sequence_invariant_after_pipeline(spark, docs, media_pts):
     """Running the full geo pipeline must not mutate the documents table
     (span-sequence equality, input_hint)."""

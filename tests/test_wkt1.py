@@ -148,6 +148,38 @@ def test_wkt1_projcs_paste():
     assert 750000 < x[0] < 900000 and 4.7e6 < y[0] < 4.9e6
 
 
+def test_wkt1_and_wkt2_share_the_length_unit_rule():
+    """One CRS in a US-foot factor that is 2.2e-13 off 1200/3937 reads
+    as the same proj-string from WKT1 and WKT2: both readers name a
+    length unit within 1e-12 of ft or us-ft."""
+    from proj_4_spark.sources.wkt2 import wkt2_to_projstring
+
+    fac = "0.304800609601"
+    wkt1 = ('PROJCS["Mercator_ft",GEOGCS["GCS_WGS_1984",'
+            'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,'
+            '298.257223563]],PRIMEM["Greenwich",0.0],'
+            'UNIT["Degree",0.0174532925199433]],'
+            'PROJECTION["Mercator"],PARAMETER["False_Easting",0.0],'
+            'PARAMETER["False_Northing",0.0],'
+            'PARAMETER["Central_Meridian",0.0],'
+            'PARAMETER["Standard_Parallel_1",10.0],'
+            f'UNIT["Foot_US",{fac}]]')
+    wkt2 = ('PROJCRS["Mercator_ft",BASEGEOGCRS["WGS 84",'
+            'DATUM["World Geodetic System 1984",'
+            'ELLIPSOID["WGS 84",6378137,298.257223563]],'
+            'UNIT["degree",0.0174532925199433]],'
+            'CONVERSION["Mercator",'
+            'METHOD["Mercator (variant B)",ID["EPSG",9805]],'
+            'PARAMETER["Latitude of 1st standard parallel",10],'
+            'PARAMETER["Longitude of natural origin",0],'
+            'PARAMETER["False easting",0],PARAMETER["False northing",0]],'
+            'CS[Cartesian,2],AXIS["(E)",east],AXIS["(N)",north],'
+            f'LENGTHUNIT["US survey foot",{fac}]]')
+    assert wkt2_to_projstring(wkt2) == wkt1_to_projstring(wkt1) == (
+        "proj=merc lat_ts=10 lon_0=0 x_0=0 y_0=0 ellps=WGS84 units=us-ft "
+        "no_defs")
+
+
 def test_wkt1_errors():
     with pytest.raises(ValueError):
         wkt1_to_projstring('PROJCS["x",GEOGCS["g",DATUM["d",'

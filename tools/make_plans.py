@@ -22,7 +22,7 @@ NOTES = {
     "projjson_text_merc": "the CRS arrives as PROJJSON TEXT: JSON -> proj-string -> merc Catalyst twin, zero Python.",
     "cell_counts": "pure JVM cell encode (no Python) -> single hash aggregate. One shuffle.",
     "pip_rect_zones": "r8: the 12 plan-time-literal rectangles compile to ONE whole-stage-codegen conditional aggregate over the points scan - zero joins, map-side partials, one tiny exchange (the former BroadcastNestedLoop paid 12M pair visits for 72k hits). General polygons keep pip_join (broadcast zone_id, bbox and ring; bbox test and exact even-odd ring test in one JVM join condition, no Python) / pip_join_cells (cell hash join, rings re-attached by zone_id, the same JVM ring test).",
-    "knn_haversine": "points repartitioned by cell once and cached; two passes, no loop. Pass 1: ring-1 hash join on cell, window top-k per query, left-joined back to every query with the ring its k-th distance implies; that tiny frame is localCheckpointed once (the Scan ExistingRDD leaves) because both branches below read it. The union's first branch keeps the queries the ring-1 guard certifies; the second is ONE widening hash join on cell where every other query explodes its own ring (or the whole grid), then the same window top-k. No cross join. knn_join sizes the cell res itself from the points' parquet footer row count (proj_4_spark/scale.py knn_res; res 4 at the committed SFs).",
+    "knn_haversine": "the haversine metric is a JVM expression: no Python worker and no ArrowEvalPython node in either pass. Points repartitioned by cell once and cached; two passes, no loop. Pass 1: ring-1 hash join on cell, window top-k per query, left-joined back to every query with the ring its k-th distance implies; that tiny frame is localCheckpointed once (the Scan ExistingRDD leaves) because both branches below read it. The union's first branch keeps the queries the ring-1 guard certifies; the second is ONE widening hash join on cell where every other query explodes its own ring (or the whole grid), then the same window top-k. No cross join. knn_join sizes the cell res itself from the points' parquet footer row count (proj_4_spark/scale.py knn_res; res 4 at the committed SFs).",
     "ann_cosine_topk": "deliberate brute force (oracle baseline), r8 shape: query batch collected once (serving contract), ONE mapInArrow corpus pass emits exact sequential-NumPy dots vs the closure-held query matrix as narrow candidate rows; corpus vectors cross the Python boundary exactly once; only exchange = ranking window.",
     "ann_ivf_topk": "r8: single mapInArrow corpus pass (centroid assignment + candidate dots vs the closure probe map) - no corpus repartition (the old list_id exchange shuffled the full vector payload for nothing), no join; the persisted inverted file in ann_index.py is the real serving layout.",
     "dedup_exact": "md5 groupBy: single shuffle with map-side combine.",

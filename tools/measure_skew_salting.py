@@ -89,6 +89,7 @@ pts.write.mode("overwrite").parquet("/tmp/skew_pts.parquet")
 pts = spark.read.parquet("/tmp/skew_pts.parquet")
 
 from proj_4_spark.spatial import cells
+from proj_4_spark.spatial.salting import salt_col
 
 pts = pts.withColumn("cell", cells.cell_col(F.col("lon"), F.col("lat"), 5))
 pts = pts.cache()
@@ -108,7 +109,7 @@ def plain_distinct():
 def salted_distinct():
     # salts partition doc_ids (salt = hash(doc_id) % n), so per-salt
     # distinct counts are disjoint and SUM to the exact answer
-    s = pts.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(N_SALT)))
+    s = pts.withColumn("salt", salt_col("doc_id", N_SALT))
     p = s.groupBy("cell", "salt").agg(F.countDistinct("doc_id").alias("pn"))
     return p.groupBy("cell").agg(F.sum("pn").alias("n")).count()
 
@@ -126,8 +127,7 @@ def plain_join():
 
 
 def salted_join():
-    s = pts.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(N_SALT))
-                       .cast("int"))
+    s = pts.withColumn("salt", salt_col("doc_id", N_SALT))
     d = dim.withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALT)])))
     j = s.join(d, ["cell", "salt"]).select(F.sum(F.col("w")).alias("s"))
