@@ -14,7 +14,10 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   hot path is whole-stage codegen with zero Python workers.  The plan
   shapes are a cart/helmert datum pipeline (legs only), a single op's
   forward (legs -> kernel) and its inverse (kernel -> legs); a bare op
-  has zero legs.
+  has zero legs.  A twin is analysed once per (operation, input
+  schema, ...) over an empty placeholder frame and rebound onto each
+  caller's frame (_twin_template, _rebind): analysis, not Python
+  emission, is the cost of a twin's plan build.
 - An operation without a twin plan runs as ONE Arrow-batched pandas UDF
   per *whole pipeline* (kernel fusion; never one UDF per step —
   SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
@@ -49,7 +52,9 @@ _CE_LIMIT_JVM = 2.623395162778  # kernels/tmerc._CE_LIMIT (tmerc.cpp:409)
 
 @lru_cache(maxsize=256)
 def _cached_operation(projstring: str):
-    """Executor-side plan cache: one Operation per (worker, projstring)."""
+    """Plan cache: one Operation per (process, projstring).  The driver
+    reads it in transform() and describe_route, each Python worker in
+    the Arrow UDF."""
     from proj_4_spark.engine.plan import create_operation
 
     return create_operation(projstring)
@@ -2059,6 +2064,17 @@ def transform(
     takes.  Twins stage through temporary ``_jd_*`` columns: an input
     column with that prefix raises ValueError.
 
+    A twin is analysed once per template key — (session, projstring,
+    direction, x, y, z, t, degrees, out_prefix, the input schema with
+    its nullability and metadata, ``spark.sql.ansi.enabled``,
+    ``spark.sql.caseSensitive``) — and every call, the first included,
+    rebinds that analysed template onto ``df`` (the 256 most recently
+    used templates are kept).  The rebinding reaches Catalyst through
+    ``df._jdf``, so a twin needs a Classic (not a Spark Connect)
+    session, as the footer reads in ``scale.py`` do.  The
+    ``_jd_cgsplit_*`` observations at a twin's codegen barriers are
+    named once per template, so all outputs of one template share them.
+
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
     from pyspark.sql import functions as F
@@ -2067,9 +2083,13 @@ def transform(
     # time, not as an executor traceback at collect time)
     direction = _direction(direction)
     op = _cached_operation(projstring)
-    plan = _twin_plan(op, direction)
-    if plan is not None:
-        out = _emit_twin(df, plan, x, y, z, t, degrees, out_prefix)
+    if _twin_plan(op, direction) is not None:
+        conf = df.sparkSession.conf
+        out = _rebind(_twin_template(
+            df.sparkSession, projstring, direction, x, y, z, t, degrees,
+            out_prefix, df._jdf.schema().json(),
+            conf.get("spark.sql.ansi.enabled"),
+            conf.get("spark.sql.caseSensitive")), df)
     else:
         out = _udf_apply(df, op, projstring, direction, x, y, z, t,
                          degrees, out_prefix)
@@ -2077,6 +2097,62 @@ def transform(
         out = out.where(F.col(f"{out_prefix}x").isNotNull()
                         & ~F.isnan(F.col(f"{out_prefix}x")))
     return out
+
+
+@lru_cache(maxsize=256)
+def _twin_template(session, projstring: str, direction: str, x, y, z, t,
+                   degrees: bool, out_prefix: str, schema_json: str,
+                   ansi: str, case_sensitive: str):
+    """A twin emitted and analysed over an empty LocalRelation (the
+    placeholder) of the input schema.  Analysis is most of a twin's
+    build (the Resolution batch iterates per lateral-alias level), so
+    it runs once per key; the session confs that change what the
+    analyzer produces are part of the key.  Returns the analysed plan
+    and the (position, spelling) of each input column that x/y/z/t name
+    in another letter case: the analyzer keeps the caller's spelling on
+    such a reference."""
+    import json
+
+    from pyspark.sql import DataFrame
+
+    jvm = session._jvm
+    schema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema_json)
+    empty = DataFrame(session._jsparkSession.createDataFrame(
+        jvm.java.util.ArrayList(), schema), session)
+    plan = _twin_plan(_cached_operation(projstring), direction)
+    out = _emit_twin(empty, plan, x, y, z, t, degrees, out_prefix)
+    fields = [f["name"] for f in json.loads(schema_json)["fields"]]
+    respelled = tuple((i, n) for i, f in enumerate(fields)
+                      for n in {x, y, z, t} - {None, f}
+                      if n.lower() == f.lower())
+    return out._jdf.queryExecution().analyzed(), respelled
+
+
+def _rebind(template, df):
+    """A template over `df`: every reference to a placeholder column
+    becomes `df`'s analysed column at the same position (both follow the
+    schema in the key; `df`'s keep their qualifiers), then the
+    placeholder leaf becomes `df`'s plan.  The result is the plan a
+    build over `df` analyses to, and Dataset.ofRows runs the analyzer
+    and CheckAnalysis over it like over any new plan."""
+    from pyspark.sql import DataFrame
+
+    plan, respelled = template
+    session = df.sparkSession
+    jvm = session._jvm
+    caller = df._jdf.queryExecution().analyzed()
+    holes, cols = plan.collectLeaves().head().output(), caller.output()
+    attrs, leaf = jvm.java.util.HashMap(), jvm.java.util.HashMap()
+    for i in range(cols.size()):
+        attrs.put(holes.apply(i), cols.apply(i))
+    for i, n in respelled:
+        attrs.put(holes.apply(i).withName(n), cols.apply(i).withName(n))
+    # a Scala Map is a PartialFunction: the rule of both rewrites
+    plan = plan.transformAllExpressions(jvm.PythonUtils.toScalaMap(attrs))
+    leaf.put(plan.collectLeaves().head(), caller)
+    plan = plan.transformUp(jvm.PythonUtils.toScalaMap(leaf))
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, plan), session)
 
 
 def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,

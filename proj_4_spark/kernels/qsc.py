@@ -57,13 +57,10 @@ def setup_qsc(P: PJ) -> PJ:
         face = "right" if P.lam0 > 0.0 else "left"
     else:
         face = "back"
-    if P.es != 0.0:
-        b = P.a * math.sqrt(1.0 - P.es)
-        one_minus_f = 1.0 - (P.a - b) / P.a
-        omf2 = one_minus_f * one_minus_f
-    else:
-        b = P.a
-        one_minus_f = omf2 = 1.0
+    # (1 - f)^2, with b = a(1 - f) as qsc.cpp computes it
+    b = P.a * math.sqrt(1.0 - P.es)
+    one_minus_f = 1.0 - (P.a - b) / P.a
+    omf2 = one_minus_f * one_minus_f
 
     def fwd(lam, phi_in, z, t_, _P):
         if P.es != 0.0:
@@ -196,12 +193,12 @@ def setup_qsc(P: PJ) -> PJ:
             elif face == "left":
                 out_lam = _shift_lon(out_lam, HALFPI)
         if P.es != 0.0:
-            invert = out_phi < 0.0
-            tanphi = np.tan(out_phi)
-            xa = b / np.sqrt(tanphi * tanphi + omf2)
-            out_phi = np.arctan(
-                np.sqrt(np.maximum(P.a * P.a - xa * xa, 0)) / (one_minus_f * xa))
-            out_phi = np.where(invert, -out_phi, out_phi)
+            # the inverse of fwd's atan(omf2 * tan(phi)).  qsc.cpp's
+            # atan(sqrt(a^2 - xa^2) / ((1 - f) * xa)), with xa =
+            # b / sqrt(tan^2 + omf2), is the same value for b = a(1 - f),
+            # but its a^2 - xa^2 cancels near the equator (lat 1.03e-6
+            # deg came back as 0.0)
+            out_phi = np.arctan(np.tan(out_phi) / omf2)
         return out_lam, out_phi, z, t_
 
     P.fwd, P.inv = fwd, inv

@@ -1,6 +1,8 @@
 """Engine-level unit tests: parser, ellipsoid derivation, pipelines,
 round-trip drift (the BASELINE.json metric: <= 1e-8 deg)."""
 
+import math
+
 import numpy as np
 import pytest
 
@@ -1803,3 +1805,169 @@ def test_staged_twin_replaces_default_named_columns(spark):
         assert back.columns.count("x") == 1, (ps, back.columns)
         rows = back.select("x", "y").limit(5).collect()  # no ambiguity
         assert rows and all(r["x"] is not None for r in rows), ps
+
+
+# --- twin templates: analysed once per key, rebound onto each frame ---------
+
+
+def _rule_runs(spark) -> int:
+    """Catalyst rule runs so far in this JVM (RuleExecutor's meter)."""
+    return (spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
+            .getCurrentMetrics().numRuns())
+
+
+def _plan_json(df) -> str:
+    """The analysed plan as JSON, minus what differs between two builds
+    of one plan: exprIds, observation names and dataframe ids."""
+    import re
+
+    s = df._jdf.queryExecution().analyzed().toJSON()
+    s = re.sub(r'"id":\d+,"jvmId":"[^"]*"', '"id":0', s)
+    s = re.sub(r"_jd_cgsplit_\d+", "_jd_cgsplit", s)
+    return re.sub(r'"dataframeId":\d+', '"dataframeId":0', s)
+
+
+def _cold_twin(df, ps, x, y):
+    """The forward twin emitted and analysed over `df`, no template."""
+    from proj_4_spark.engine.spark import (_cached_operation, _emit_twin,
+                                           _twin_plan)
+
+    plan = _twin_plan(_cached_operation(ps), "fwd")
+    return _emit_twin(df, plan, x, y, None, None, True, "")
+
+
+def test_twin_template_second_call_skips_analysis(spark):
+    """A second transform() with the same key rebinds the analysed
+    template instead of analysing the twin again: it runs at most a
+    quarter of the Catalyst rule runs of the first call."""
+    from proj_4_spark.engine.spark import transform
+
+    ps = "+proj=utm +zone=33 +ellps=GRS80"
+    # a column name no other test uses: the first call builds the template
+    pts = spark.range(20).selectExpr(
+        "id", "10.0D + id * 0.1D AS lon_rule_runs", "50.0D AS lat")
+    n0 = _rule_runs(spark)
+    first = transform(pts, ps, x="lon_rule_runs", y="lat")
+    n1 = _rule_runs(spark)
+    second = transform(pts.where("id > 3"), ps, x="lon_rule_runs", y="lat")
+    n2 = _rule_runs(spark)
+    assert n2 - n1 <= (n1 - n0) / 4, (n1 - n0, n2 - n1)
+    rows = {r["id"]: (r["x"], r["y"]) for r in first.collect()}
+    assert {r["id"]: (r["x"], r["y"]) for r in second.collect()} == {
+        i: v for i, v in rows.items() if i > 3}
+
+
+def test_twin_template_outputs_union_and_self_join(spark):
+    """Two outputs of one template share every exprId and observation
+    name below their leaves; their union and their join still equal the
+    per-frame results."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.engine.spark import transform
+
+    ps = ("+proj=lcc +lat_0=46.5 +lon_0=3 +lat_1=49 +lat_2=44 "
+          "+x_0=700000 +y_0=6600000 +ellps=clrk80ign +towgs84=-168,-60,320")
+
+    def pts(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id", "-4.0D + (id % 40) * 0.3D AS lon",
+            "42.0D + (id % 40) * 0.2D AS lat")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    a = transform(pts(0, 40), ps, x="lon", y="lat")
+    b = transform(pts(40, 80), ps, x="lon", y="lat")
+    ra, rb = rows(a), rows(b)
+    assert rows(a.union(b)) == sorted(ra + rb)
+    joined = a.alias("l").join(b.alias("r"), F.col("l.id") + 40 == F.col("r.id"))
+    got = rows(joined.select("l.id", "l.x", "l.y", "r.x", "r.y"))
+    by_id = {r[0]: r for r in rb}
+    assert got == [(r[0], r[3], r[4], by_id[r[0] + 40][3],
+                    by_id[r[0] + 40][4]) for r in ra]
+    self_join = rows(a.alias("l").join(a.alias("r"), "id")
+                     .select("id", "l.x", "r.y"))
+    assert self_join == [(r[0], r[3], r[4]) for r in ra]
+
+
+def test_twin_template_key_follows_confs_and_nullability(spark):
+    """ANSI mode, case sensitivity and input nullability change what the
+    analyzer produces, so each is part of the template key: after a
+    flip, transform() gives the plan a cold build gives."""
+    from pyspark.sql.utils import AnalysisException
+
+    from proj_4_spark.engine.spark import transform
+
+    ps = "+proj=utm +zone=31 +ellps=GRS80"
+
+    def pts(k, nullable=False):
+        lon = ("CASE WHEN id = 2 THEN NULL ELSE 3.0D + id END" if nullable
+               else "3.0D + id")
+        return spark.range(k, k + 10).selectExpr(
+            "id", f"{lon} AS lon_keyed", "45.0D AS LAT_KEYED")
+
+    kw = dict(x="lon_keyed", y="lat_keyed")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        plans = {}
+        for mode in ("false", "true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            got = transform(pts(0), ps, **kw)
+            assert _plan_json(got) == _plan_json(_cold_twin(pts(0), ps, **kw))
+            plans[mode] = _plan_json(got)
+        assert plans["false"] != plans["true"]   # the flip is visible
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    for nullable in (False, True, False):
+        got = transform(pts(5, nullable), ps, **kw)
+        assert _plan_json(got) == _plan_json(
+            _cold_twin(pts(5, nullable), ps, **kw))
+    rows = {r["id"]: r["x"] for r in transform(pts(0, True), ps, **kw)
+            .collect()}
+    assert math.isnan(rows[2]) and not math.isnan(rows[3])
+
+    # y="lat_keyed" resolves LAT_KEYED only case-insensitively
+    case = spark.conf.get("spark.sql.caseSensitive")
+    try:
+        spark.conf.set("spark.sql.caseSensitive", "true")
+        with pytest.raises(AnalysisException):
+            _cold_twin(pts(0), ps, **kw)
+        with pytest.raises(AnalysisException):
+            transform(pts(0), ps, **kw)
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", case)
+    transform(pts(0), ps, **kw)
+
+
+def test_twin_template_prefix_clash_and_metadata(spark, tmp_path):
+    """A `_jd_`-prefixed input column raises on every call, not only on
+    the one that would build the template; a file-source frame keeps its
+    `_metadata` columns and its file scan as the plan's leaf, so
+    scale.parquet_stats (kNN sizing) reads the same footers through a
+    twin's output as through its input."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark import scale
+    from proj_4_spark.engine.spark import transform
+
+    ps = "+proj=merc +ellps=WGS84"
+    pts = spark.range(30).selectExpr("id", "id * 1.5D AS lon",
+                                     "id * 0.5D AS lat")
+    for _ in range(2):
+        with pytest.raises(ValueError, match="_jd_"):
+            transform(pts.withColumn("_jd_lam", F.lit(1.0)), ps,
+                      x="lon", y="lat")
+
+    path = str(tmp_path / "pts")
+    pts.repartition(3).write.parquet(path)
+    src = spark.read.parquet(path)
+    stats = scale.parquet_stats(src)
+    assert stats[0] == 30
+    for _ in range(2):
+        out = transform(src, ps, x="lon", y="lat")
+        assert scale.parquet_stats(out) == stats
+        names = {r["f"] for r in out.select(
+            F.col("_metadata.file_name").alias("f")).collect()}
+        assert names == {r["f"] for r in src.select(
+            F.col("_metadata.file_name").alias("f")).collect()}

@@ -69,6 +69,19 @@ def _op(ps):
 def test_roundtrip_property(ps, lon_rng, lat_rng, tol, data):
     lon = data.draw(st.floats(*lon_rng, allow_nan=False))
     lat = data.draw(st.floats(*lat_rng, allow_nan=False))
+    _check_roundtrip(ps, lon, lat, tol)
+
+
+@pytest.mark.parametrize("ps,lon,lat,tol", [
+    # the ellipsoidal inverse once cancelled near the equator: this
+    # point came back at lat 0.0
+    ("+proj=qsc +ellps=GRS80 +lat_0=0 +lon_0=0", 0.0, 1.03e-6, 1e-6),
+])
+def test_roundtrip_examples(ps, lon, lat, tol):
+    _check_roundtrip(ps, lon, lat, tol)
+
+
+def _check_roundtrip(ps, lon, lat, tol):
     op = _op(ps)
     x, y, _, _ = op.apply(np.array([lon * D]), np.array([lat * D]),
                           np.zeros(1), np.zeros(1))

@@ -3,9 +3,10 @@
     python tools/dump_twin_sql.py OUT
 
 `_SqlStager.apply` is replaced by a capture of (stages, barriers,
-final select list), and the public `transform(None, ps, ...)` is called
-for every (proj-string, direction) pair whose `describe_route` is not
-"udf".  The pairs are all EPSG/ESRI/IGNF catalog presets plus every
+final select list), and the emitter `_emit_twin` is called with
+`transform()`'s defaults and no frame for every (proj-string,
+direction) pair whose `describe_route` is not "udf".  The pairs are
+all EPSG/ESRI/IGNF catalog presets plus every
 proj-string literal in tests/ and perfbench/inputs.py, in both
 directions.  Each twin runs in three call shapes: degrees on without
 z/t, degrees off with z and t columns, and out_prefix="o_".
@@ -14,9 +15,8 @@ OUT gets one line per pair: route, direction, the sha256 of the three
 captured SQL lists ("-" for a pair off the twins) and the proj-string.
 A pair whose operation cannot be built reads `error:ProjError` as its
 route.  stdout gets one line per route: its pair count and the sha256
-of its OUT lines.  The script only uses the public API, so the same
-file run in two checkouts shows whether a refactor kept the twins'
-SQL byte-identical.
+of its OUT lines.  The same file run in two checkouts shows whether a
+refactor kept the twins' SQL byte-identical.
 """
 import ast
 import collections
@@ -68,6 +68,13 @@ def corpus():
     yield from _literal_projstrings(paths)
 
 
+def _staged(ps, direction, x="x", y="y", z=None, t=None, degrees=True,
+            out_prefix=""):
+    """What `transform()` stages for (ps, direction), with no frame."""
+    plan = S._twin_plan(S._cached_operation(ps), direction)
+    return S._emit_twin(None, plan, x, y, z, t, degrees, out_prefix)
+
+
 def main(out_path: str) -> None:
     def capture(self, df, final_exprs):
         return self.stages, sorted(self._barriers), final_exprs
@@ -83,8 +90,7 @@ def main(out_path: str) -> None:
                     route = "error:ProjError"
                 digest = "-"
                 if route not in ("udf", "error:ProjError"):
-                    sql = [S.transform(None, ps, direction=d, **kw)
-                           for kw in SHAPES]
+                    sql = [_staged(ps, d, **kw) for kw in SHAPES]
                     digest = hashlib.sha256(repr(sql).encode()).hexdigest()
                 line = f"{route}\t{d}\t{digest}\t{ps!r}\n"
                 out.write(line)
