@@ -3,9 +3,11 @@
 The media_ref encoding is defined in FIXTURES.md §1:
   media://{doc_id}/{k}?lon={lon:.9f}&lat={lat:.9f}&crs={crs}
 
-Extraction is pure JVM-side (regexp_extract inside whole-stage codegen) —
-no Python in the hot path; the geodetic transform downstream is the only
-pandas-UDF stage (SURVEY.md §7.0 "no per-row Python").
+Extraction is pure JVM-side (regexp_extract inside whole-stage codegen),
+and so is the geodetic transform downstream: the document pipeline's
+webmerc step is a Catalyst twin (``describe_route`` reads ``fwd``), so
+the pipeline starts no Python worker (SURVEY.md §7.0 "no per-row
+Python").
 """
 
 from __future__ import annotations
@@ -14,40 +16,37 @@ import itertools
 
 _cg_seq = itertools.count()
 
-_LON_RE = r"[?&]lon=(-?[0-9.]+)"
-_LAT_RE = r"[?&]lat=(-?[0-9.]+)"
-_CRS_RE = r"[?&]crs=([A-Za-z0-9:]+)"
+
+def _extract(key: str, value: str) -> str:
+    """regexp_extract of one media_ref query parameter, as SQL text."""
+    return f"regexp_extract(span.media_ref, '[?&]{key}=({value})', 1)"
 
 
-def explode_media_points(docs_df, keep_doc_cols: bool = True):
+def explode_media_points(docs_df):
     """documents(doc_id, spans) -> one row per media span with parsed
     lon/lat (degrees, EPSG:4326 per fixture contract).
 
     Plan shape: generator-expand (posexplode) -> filter kind='media'
     -> regexp projections.  All JVM-side; Catalyst pushes the kind filter
-    into the generate and prunes text columns out of the scan.
+    into the generate and prunes text columns out of the scan.  Built as
+    SQL text: one py4j call per step (proj_4_spark/sqltext.py).
     """
     from pyspark.sql import functions as F
 
-    ex = docs_df.select(
-        "doc_id",
-        F.posexplode("spans").alias("span_idx", "span"),
-    ).where(F.col("span.kind") == "media")
-    out = ex.select(
-        "doc_id",
-        F.col("span.offset").alias("span_offset"),
-        F.regexp_extract("span.media_ref", _LON_RE, 1).cast("double").alias("lon"),
-        F.regexp_extract("span.media_ref", _LAT_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract("span.media_ref", _CRS_RE, 1).alias("crs"),
-    )
+    out = (docs_df.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
+           .where("span.kind = 'media'")
+           .selectExpr(
+               "doc_id", "span.offset AS span_offset",
+               f"CAST({_extract('lon', '-?[0-9.]+')} AS DOUBLE) AS lon",
+               f"CAST({_extract('lat', '-?[0-9.]+')} AS DOUBLE) AS lat",
+               f"{_extract('crs', '[A-Za-z0-9:]+')} AS crs"))
     # r8: close the whole-stage-codegen region here.  Fused with a
     # downstream projection twin (the doc-geo pipeline's webmerc leg)
     # the combined method reached 10,218 bytecodes — past HotSpot's
     # 8000-byte JIT ceiling, so the hottest headline region ran
     # interpreted.  The observe costs one row-count accumulator and
     # splits explode+regex from the projection math (both sub-8k).
-    return out.observe(f"_media_cg_{next(_cg_seq)}",
-                       F.count(F.lit(1)).alias("rows"))
+    return out.observe(f"_media_cg_{next(_cg_seq)}", F.expr("count(1) AS rows"))
 
 
 def span_fingerprint(docs_df, col: str = "span_fp"):

@@ -42,6 +42,7 @@ import pandas as pd
 
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
+from proj_4_spark.sqltext import quote_name
 
 _STRUCT4 = "x double, y double, z double, t double"
 _SQL_INF = "CAST('Infinity' AS DOUBLE)"
@@ -2077,8 +2078,6 @@ def transform(
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
-    from pyspark.sql import functions as F
-
     # validate arguments + proj-string on the driver (fail fast at plan
     # time, not as an executor traceback at collect time)
     direction = _direction(direction)
@@ -2094,8 +2093,8 @@ def transform(
         out = _udf_apply(df, op, projstring, direction, x, y, z, t,
                          degrees, out_prefix)
     if not keep_errors:
-        out = out.where(F.col(f"{out_prefix}x").isNotNull()
-                        & ~F.isnan(F.col(f"{out_prefix}x")))
+        ox = quote_name(f"{out_prefix}x")
+        out = out.where(f"{ox} IS NOT NULL AND NOT isnan({ox})")
     return out
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from proj_4_spark.sqltext import column_sql
+
 RES_SHIFT = 58
 IY_SHIFT = 29
 MAX_RES = 28
@@ -41,41 +43,58 @@ def cell_np(lon, lat, res: int):
     return np.where(bad, np.int64(-1), out)
 
 
+def index_exprs(lon: str, lat: str, res: int, d: str = "D") -> tuple[str, str]:
+    """SQL text of the clamped grid indexes (ix, iy) of SQL operands
+    `lon`/`lat`; `d` suffixes the double literals: "D" for Spark SQL,
+    which reads 180.0 as DECIMAL, "" for DuckDB."""
+    n = 1 << res
+
+    def idx(c, lo, span):
+        return (f"least(greatest(cast(floor(({c} + {lo}{d}) / {span}{d} * {n})"
+                f" as bigint), 0), {n - 1})")
+
+    return idx(lon, "180.0", "360.0"), idx(lat, "90.0", "180.0")
+
+
+def pack_expr(res: int, iy: str, ix: str) -> str:
+    """SQL cell id (res << 58) + (iy << 29) + ix of index operands."""
+    return f"cast({res} as bigint) * {1 << RES_SHIFT} + {iy} * {1 << IY_SHIFT} + {ix}"
+
+
 def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     """The same computation as ANSI SQL (used for DuckDB oracles)."""
-    n = 1 << res
-    ix = f"least(greatest(cast(floor(({lon_expr} + 180.0) / 360.0 * {n}) as bigint), 0), {n - 1})"
-    iy = f"least(greatest(cast(floor(({lat_expr} + 90.0) / 180.0 * {n}) as bigint), 0), {n - 1})"
-    return f"(cast({res} as bigint) * {1 << RES_SHIFT} + {iy} * {1 << IY_SHIFT} + {ix})"
+    ix, iy = index_exprs(lon_expr, lat_expr, res, "")
+    return f"({pack_expr(res, iy, ix)})"
 
 
-def index_cols(lon_col, lat_col, res: int):
-    """JVM-side clamped grid indexes (ix, iy) of lon/lat degree columns
-    at `res` (the Column form of cell_np's ix/iy)."""
-    from pyspark.sql import functions as F
-
-    n = 1 << res
-
-    def idx(col, lo, span):
-        return F.least(
-            F.greatest(F.floor((col + lo) / span * n).cast("long"), F.lit(0)),
-            F.lit(n - 1),
-        )
-
-    return idx(lon_col, 180.0, 360.0), idx(lat_col, 90.0, 180.0)
-
-
-def pack_col(res: int, iy, ix):
-    """JVM-side cell id (res << 58) + (iy << 29) + ix of index columns."""
-    from pyspark.sql import functions as F
-
-    return (F.lit(res).cast("long") * (1 << RES_SHIFT)) + (iy * (1 << IY_SHIFT)) + ix
+def cell_expr(lon: str, lat: str, res: int) -> str:
+    """The same computation as Spark SQL text over SQL operands."""
+    ix, iy = index_exprs(lon, lat, res)
+    return f"({pack_expr(res, iy, ix)})"
 
 
 def cell_col(lon_col, lat_col, res: int):
-    """JVM-side Column expression (stays inside whole-stage codegen)."""
-    ix, iy = index_cols(lon_col, lat_col, res)
-    return pack_col(res, iy, ix)
+    """JVM-side Column expression (stays inside whole-stage codegen).
+    A plain column reference or an ``F.expr`` renders into one SQL text
+    (sqltext.column_sql); any other Column is composed from Columns."""
+    from pyspark.sql import functions as F
+
+    lon, lat = column_sql(lon_col), column_sql(lat_col)
+    if lon is not None and lat is not None:
+        return F.expr(cell_expr(lon, lat, res))
+    n = 1 << res
+    ix, iy = (F.least(F.greatest(F.floor((c + lo) / span * n).cast("long"),
+                                 F.lit(0)), F.lit(n - 1))
+              for c, lo, span in ((lon_col, 180.0, 360.0),
+                                  (lat_col, 90.0, 180.0)))
+    return _pack_col(res, iy, ix)
+
+
+def _pack_col(res: int, iy, ix):
+    """Column cell id (res << 58) + (iy << 29) + ix of index Columns."""
+    from pyspark.sql import functions as F
+
+    return (F.lit(res).cast("long") * (1 << RES_SHIFT)) + (iy * (1 << IY_SHIFT)) + ix
 
 
 def decode_np(cell):
@@ -104,17 +123,38 @@ def neighbors_np(cell, ring: int = 1):
     return (res[:, None] << RES_SHIFT) | (iy2 << IY_SHIFT) | ix2
 
 
-def neighbors_col(cell_col_, res: int, ring=1):
-    """JVM-side neighbor ring as an array column (for explode-join);
-    `ring` is an int or a per-row Column.  Rows clamp at the poles and
-    columns wrap and cap at 2^res, so each cell appears once."""
-    from pyspark.sql import Column, functions as F
-
-    n = F.lit(1 << res).cast("long")
-    r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
+def neighbors_expr(cell: str, res: int, ring=1) -> str:
+    """Spark SQL text of the neighbor ring (an array) of the cell id
+    SQL operand `cell`; `ring` is an int or a SQL operand.  Rows clamp
+    at the poles and columns wrap and cap at 2^res, so each cell appears
+    once.  The lambda variables `__iy`/`__ix` shadow any column so
+    named."""
+    n, r = f"{1 << res}L", f"CAST({ring} AS BIGINT)"
     # Exact integer decode: shiftright/bitwise, never `/` (double division
     # rounds above 2^53 — cell ids carry res<<58, so float division can be
     # off by up to ~128 in ix/iy near row boundaries).
+    iy = f"(shiftright({cell}, {IY_SHIFT}) & {(1 << (RES_SHIFT - IY_SHIFT)) - 1})"
+    ix = f"({cell} & {(1 << IY_SHIFT) - 1})"
+    rows = f"sequence(greatest({iy} - {r}, 0L), least({iy} + {r}, {n} - 1))"
+    cols = (f"CASE WHEN {r} * 2 + 1 >= {n} THEN sequence(0L, {n} - 1) "
+            f"ELSE transform(sequence({ix} - {r}, {ix} + {r}), "
+            f"__ix -> pmod(__ix, {n})) END")
+    return (f"flatten(transform({rows}, __iy -> "
+            f"transform({cols}, __ix -> {pack_expr(res, '__iy', '__ix')})))")
+
+
+def neighbors_col(cell_col_, res: int, ring=1):
+    """JVM-side neighbor ring as an array column (for explode-join);
+    `ring` is an int or a per-row Column (neighbors_expr).  Renders to
+    one SQL text like cell_col, else is composed from Columns."""
+    from pyspark.sql import Column, functions as F
+
+    cell = column_sql(cell_col_)
+    ring_sql = column_sql(ring) if isinstance(ring, Column) else str(ring)
+    if cell is not None and ring_sql is not None:
+        return F.expr(neighbors_expr(cell, res, ring_sql))
+    n = F.lit(1 << res).cast("long")
+    r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
     iy = F.shiftright(cell_col_, IY_SHIFT).bitwiseAND(
         F.lit((1 << (RES_SHIFT - IY_SHIFT)) - 1)
     )
@@ -125,7 +165,7 @@ def neighbors_col(cell_col_, res: int, ring=1):
             .otherwise(F.transform(F.sequence(ix - r, ix + r),
                                    lambda x: F.pmod(x, n))))
     return F.flatten(F.transform(
-        rows, lambda y: F.transform(cols, lambda x: pack_col(res, y, x))))
+        rows, lambda y: F.transform(cols, lambda x: _pack_col(res, y, x))))
 
 
 def cell_size_deg(res: int) -> tuple[float, float]:

@@ -1,7 +1,7 @@
 """Cell-partitioned k-nearest-neighbor join over geodetic points.
 
 Plan shape (north_rule / SURVEY.md §2.5):
-  1. index points by cell (cells.cell_col, JVM-side);
+  1. index points by cell (cells.cell_expr, JVM-side);
   2. per query, explode a neighbor ring of cells and join on cell —
      a hash join co-partitioned on the cell key, no cross product;
   3. distances by the named metric (_METRICS): "haversine" is a JVM
@@ -16,7 +16,7 @@ each uncertified query then re-runs once in the ring its own ring-1
 k-th distance implies, or the whole grid (knn_join proves the guard).
 
 Skew: hot cells (cities) put many points in one cell; n_salt > 1 salts
-the join key with salting.salt_col and AQE skew-join splits the rest.
+the join key with salting.salt_expr and AQE skew-join splits the rest.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ import pandas as pd
 
 from proj_4_spark import scale
 from proj_4_spark.spatial import cells, salting
+from proj_4_spark.sqltext import double
 
 # MINIMUM meridional meters per degree (at the equator, GRS80): the guard
 # needs a lower bound on the distance to an unexplored cell, so it must use
@@ -37,17 +38,20 @@ HAVERSINE_R = 6371000.0  # mean sphere radius for metric="haversine"
 
 def _haversine_m(lon1, lat1, lon2, lat2):
     """Great-circle meters on the HAVERSINE_R sphere as a JVM expression
-    (the SQL-expressible metric the DuckDB correctness gate recomputes):
-    radians, h = sin²(dφ/2) + cos φ1 cos φ2 sin²(dλ/2), 2R asin(min(1, √h))."""
+    of four column names (the SQL-expressible metric the DuckDB
+    correctness gate recomputes): radians,
+    h = sin²(dφ/2) + cos φ1 cos φ2 sin²(dλ/2), 2R asin(min(1, √h))."""
     from pyspark.sql import functions as F
 
     from proj_4_spark.kernels.common import DEG_TO_RAD
 
-    p1, p2 = lat1 * DEG_TO_RAD, lat2 * DEG_TO_RAD
-    s_dp = F.sin((p2 - p1) / 2.0)
-    s_dl = F.sin((lon2 - lon1) * DEG_TO_RAD / 2.0)
-    h = s_dp * s_dp + F.cos(p1) * F.cos(p2) * (s_dl * s_dl)
-    return 2.0 * HAVERSINE_R * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+    d2r, two = double(DEG_TO_RAD), double(2.0)
+    p1, p2 = f"{lat1} * {d2r}", f"{lat2} * {d2r}"
+    s_dp = f"sin(({p2} - {p1}) / {two})"
+    s_dl = f"sin(({lon2} - {lon1}) * {d2r} / {two})"
+    h = f"{s_dp} * {s_dp} + cos({p1}) * cos({p2}) * ({s_dl} * {s_dl})"
+    return F.expr(f"asin(least({double(1.0)}, sqrt({h}))) * "
+                  f"{double(2.0 * HAVERSINE_R)}")
 
 
 def _karney_udf(a: float, f: float):
@@ -70,8 +74,9 @@ def _karney_udf(a: float, f: float):
     return geodesic_m
 
 
-# metric -> (builder (a, f) -> meters of (lon1, lat1, lon2, lat2), the
-# guard's meters-per-degree lower bound, exact on the haversine sphere)
+# metric -> (builder (a, f) -> meters Column of the column names
+# (lon1, lat1, lon2, lat2), the guard's meters-per-degree lower bound,
+# exact on the haversine sphere)
 _METRICS = {
     "karney": (_karney_udf, M_PER_DEG),
     "haversine": (lambda a, f: _haversine_m, HAVERSINE_R * np.pi / 180),
@@ -90,15 +95,13 @@ def _metric(name: str, a: float, f: float):
 def _ranked(cand, geodesic_m, k: int):
     """Candidate (q, p) pairs -> distance -> per-query window ->
     rank <= k, ties broken by (doc_id, span_offset)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = Window.partitionBy("q_id").orderBy("dist_m", "doc_id", "span_offset")
     return (
-        cand.withColumn("dist_m", geodesic_m(F.col("q_lon"), F.col("q_lat"),
-                                             F.col("p_lon"), F.col("p_lat")))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        cand.withColumn("dist_m", geodesic_m("q_lon", "q_lat", "p_lon", "p_lat"))
+        .withColumn("rank", F.expr("row_number() OVER (PARTITION BY q_id "
+                                   "ORDER BY dist_m, doc_id, span_offset)"))
+        .where(f"rank <= {k}")
         .select("q_id", "q_lon", "q_lat", "doc_id", "span_offset", "dist_m", "rank")
     )
 
@@ -155,57 +158,52 @@ def knn_join(
     guard(1) <= 0, or when R * 360/2^res > 90 degrees.  One widening
     candidate join ranks them all, each in its own ring.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     geodesic_m, m_per_deg = _metric(metric, a, f)
     res = scale.knn_res(scale.parquet_stats(points_df)[0])
     n = 1 << res
 
-    pts = points_df.select(
-        "doc_id", "span_offset",
-        F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
-        cells.cell_col(F.col("lon"), F.col("lat"), res).alias("cell"),
-    )
+    cols = ["doc_id", "span_offset", "lon AS p_lon", "lat AS p_lat",
+            f"{cells.cell_expr('lon', 'lat', res)} AS cell"]
     join_keys = ["cell"]
     if n_salt > 1:
-        pts = pts.withColumn("salt", salting.salt_col("doc_id", n_salt))
+        cols.append(f"{salting.salt_expr('doc_id', n_salt)} AS salt")
         join_keys = ["cell", "salt"]
     # repartition points by cell (and salt) once; both passes read it
-    pts = pts.repartition(*join_keys).cache()
+    pts = points_df.selectExpr(*cols).repartition(*join_keys).cache()
 
     def ranked_within(q, ring):
-        q = q.withColumn("cell", F.explode(cells.neighbors_col(
-            cells.cell_col(F.col("q_lon"), F.col("q_lat"), res), res, ring)))
+        ring_cells = cells.neighbors_expr(
+            cells.cell_expr("q_lon", "q_lat", res), res, ring)
+        q = q.withColumn("cell", F.expr(f"explode({ring_cells})"))
         if n_salt > 1:
-            q = q.withColumn("salt", F.explode(
-                F.array(*[F.lit(i) for i in range(n_salt)])))
+            q = q.withColumn("salt", F.expr(
+                f"explode(array({', '.join(map(str, range(n_salt)))}))"))
         return _ranked(q.join(pts, join_keys, "inner"), geodesic_m, k)
 
-    queries = queries_df.select(
-        "q_id", F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat"))
-    unit = (F.lit(cells.cell_size_deg(res)[1] * m_per_deg)
-            * F.least(F.lit(1.0), F.cos(F.radians(F.col("q_lat")))))
-    d1 = F.col("kth_dist")
+    queries = queries_df.selectExpr("q_id", "lon AS q_lon", "lat AS q_lat")
+    unit = (f"({double(cells.cell_size_deg(res)[1] * m_per_deg)} * "
+            f"least({double(1.0)}, cos(radians(q_lat))))")
     # 0 = certified by ring 1; n = the whole grid.  A CASE, so the
     # division never sees unit <= 0 (ANSI mode raises on it)
-    ring = (F.when((F.col("n_found") < k) | (unit <= 0), n)
-            .when(d1 <= unit, 0)
-            .when(d1 / unit >= n // 4, n)  # R > 2^res / 4: dl > 90 deg
-            .otherwise(F.floor(d1 / unit) + 1))
+    ring = (f"CAST(CASE WHEN n_found < {k} OR {unit} <= 0 THEN {n} "
+            f"WHEN kth_dist <= {unit} THEN 0 "
+            f"WHEN kth_dist / {unit} >= {n // 4} THEN {n} "  # R > 2^res / 4: dl > 90 deg
+            f"ELSE floor(kth_dist / {unit}) + 1 END AS BIGINT)")
     # every query beside its ring-1 top-k (one null row if it found
     # none) and its ring, materialized once because both outputs read it
-    w = Window.partitionBy("q_id")
     first = (queries.join(ranked_within(queries, 1).drop("q_lon", "q_lat"),
                           "q_id", "left")
-             .withColumn("n_found", F.count("doc_id").over(w))
-             .withColumn("kth_dist", F.max("dist_m").over(w))
-             .withColumn("ring", ring.cast("long"))
+             .withColumns({
+                 "n_found": F.expr("count(doc_id) OVER (PARTITION BY q_id)"),
+                 "kth_dist": F.expr("max(dist_m) OVER (PARTITION BY q_id)")})
+             .withColumn("ring", F.expr(ring))
              .localCheckpoint(eager=True))
 
     widened = ranked_within(
         first.where("ring > 0 AND coalesce(rank, 1) = 1")
-        .select("q_id", "q_lon", "q_lat", "ring"), F.col("ring"))
+        .select("q_id", "q_lon", "q_lat", "ring"), "ring")
     out = ["q_id", "doc_id", "span_offset", "dist_m", "rank"]
     return first.where("ring = 0").select(out).unionByName(widened.select(out))
 
@@ -215,16 +213,8 @@ def knn_brute_force(points_df, queries_df, k: int = 10,
                     metric: str = "karney"):
     """Reference implementation (cross join): the correctness oracle for
     knn_join at test scale.  Never use at production scale."""
-    from pyspark.sql import functions as F
-
     geodesic_m, _ = _metric(metric, a, f)
-    cand = queries_df.select(
-        F.col("q_id"), F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat")
-    ).crossJoin(
-        points_df.select(
-            "doc_id", "span_offset",
-            F.col("lon").alias("p_lon"), F.col("lat").alias("p_lat"),
-        )
-    )
+    cand = queries_df.selectExpr("q_id", "lon AS q_lon", "lat AS q_lat").crossJoin(
+        points_df.selectExpr("doc_id", "span_offset", "lon AS p_lon", "lat AS p_lat"))
     return _ranked(cand, geodesic_m, k).select(
         "q_id", "doc_id", "span_offset", "dist_m", "rank")

@@ -17,6 +17,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from proj_4_spark.spatial.cells import cell_expr, index_exprs, pack_expr
+from proj_4_spark.sqltext import quote_name
+
 _BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
 
 
@@ -54,9 +57,10 @@ def _lt(a: str, b: str) -> str:
     return f"({a} < {b} AND NOT isnan({b}))"
 
 
-def _in_ring(lon: str, lat: str):
-    """Boolean column: point (`lon`, `lat`) inside the ring held as the
-    array columns `ring_lon`/`ring_lat`, by `point_in_ring_np`'s rule.
+def _in_ring(lon: str, lat: str) -> str:
+    """SQL text: point (`lon`, `lat`, SQL operands) inside the ring held
+    as the array columns `ring_lon`/`ring_lat`, by `point_in_ring_np`'s
+    rule.
 
     Edge i runs from vertex i to vertex (i + 1) % n: the implicit
     closing edge is always taken (for a closed ring it is horizontal and
@@ -64,38 +68,33 @@ def _in_ring(lon: str, lat: str):
     division only runs on crossing edges, whose endpoint latitudes
     differ: under ANSI mode a horizontal edge would raise DIVIDE_BY_ZERO
     where NumPy computes an inf it then discards."""
-    from pyspark.sql import functions as F
-
-    px, py = f"`{lon}`", f"`{lat}`"
     x1, y1 = "ring_lon[i]", "ring_lat[i]"
     x2 = "ring_lon[(i + 1) % size(ring_lon)]"
     y2 = "ring_lat[(i + 1) % size(ring_lat)]"
-    crosses = f"{_lt(py, y1)} != {_lt(py, y2)}"
-    xint = f"{x1} + ({py} - {y1}) / ({y2} - {y1}) * ({x2} - {x1})"
-    return F.expr(
-        "aggregate(sequence(0, size(ring_lon) - 1), false, (odd, i) -> "
-        f"odd != CASE WHEN {crosses} THEN {_lt(px, xint)} ELSE false END)")
+    crosses = f"{_lt(lat, y1)} != {_lt(lat, y2)}"
+    xint = f"{x1} + ({lat} - {y1}) / ({y2} - {y1}) * ({x2} - {x1})"
+    return ("aggregate(sequence(0, size(ring_lon) - 1), false, (odd, i) -> "
+            f"odd != CASE WHEN {crosses} THEN {_lt(lon, xint)} ELSE false END)")
 
 
-def _bbox(lon: str, lat: str):
-    from pyspark.sql import functions as F
-
-    return ((F.col(lon) >= F.col("min_lon")) & (F.col(lon) <= F.col("max_lon"))
-            & (F.col(lat) >= F.col("min_lat")) & (F.col(lat) <= F.col("max_lat")))
+def _bbox(lon: str, lat: str) -> str:
+    """SQL text: point (`lon`, `lat`) inside the zone's bbox columns.
+    Nested left to right: the parser reads a flat AND chain as a
+    balanced tree."""
+    return (f"(({lon} >= min_lon AND {lon} <= max_lon) "
+            f"AND {lat} >= min_lat) AND {lat} <= max_lat")
 
 
 def _rings(zones_df, *cols):
-    from pyspark.sql import functions as F
-
-    return zones_df.select("zone_id", *cols,
-                           F.col("ring.lon").alias("ring_lon"),
-                           F.col("ring.lat").alias("ring_lat"))
+    return zones_df.selectExpr("zone_id", *cols, "ring.lon AS ring_lon",
+                               "ring.lat AS ring_lat")
 
 
 def pip_join(points_df, zones_df, lon: str = "lon", lat: str = "lat"):
     """points (doc_id, span_offset, lon, lat) x zones
     (zone_id, ring:array<struct<lon,lat>>, min_lon..max_lat)
-    -> (doc_id, span_offset, zone_id).
+    -> (doc_id, span_offset, zone_id).  `lon`/`lat` are column names as
+    ``F.col`` reads them.
 
     (zone_id, bbox, ring) is broadcast — the zone side is small by this
     function's contract — and one join condition holds both tests, the
@@ -105,29 +104,23 @@ def pip_join(points_df, zones_df, lon: str = "lon", lat: str = "lat"):
     """
     from pyspark.sql import functions as F
 
+    lon, lat = quote_name(lon), quote_name(lat)
     return points_df.join(
         F.broadcast(_rings(zones_df, *_BBOX)),
-        on=F.when(_bbox(lon, lat), _in_ring(lon, lat)).otherwise(False),
+        on=F.expr(f"CASE WHEN {_bbox(lon, lat)} THEN {_in_ring(lon, lat)} "
+                  "ELSE false END"),
         how="inner",
     ).drop(*_BBOX, "ring_lon", "ring_lat")
 
 
-def _zone_cells_col(res: int):
-    """Array column of all res-cells covered by a zone's bbox
+def _zone_cells_sql(res: int) -> str:
+    """SQL text: the array of all res-cells covered by a zone's bbox
     (JVM-side: sequence over the iy/ix index ranges, no UDF)."""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.spatial.cells import index_cols, pack_col
-
-    ix0, iy0 = index_cols(F.col("min_lon"), F.col("min_lat"), res)
-    ix1, iy1 = index_cols(F.col("max_lon"), F.col("max_lat"), res)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(
-                F.sequence(ix0, ix1), lambda ix: pack_col(res, iy, ix)),
-        )
-    )
+    ix0, iy0 = index_exprs("min_lon", "min_lat", res)
+    ix1, iy1 = index_exprs("max_lon", "max_lat", res)
+    return (f"flatten(transform(sequence({iy0}, {iy1}), __iy -> "
+            f"transform(sequence({ix0}, {ix1}), __ix -> "
+            f"{pack_expr(res, '__iy', '__ix')})))")
 
 
 def pip_join_cells(points_df, zones_df, res: int = 6,
@@ -154,11 +147,10 @@ def pip_join_cells(points_df, zones_df, res: int = 6,
     """
     from pyspark.sql import functions as F
 
-    from proj_4_spark.spatial.cells import cell_col
-
-    zones_cells = zones_df.select(
-        "zone_id", *_BBOX, F.explode(_zone_cells_col(res)).alias("cell"))
-    pts = points_df.withColumn("cell", cell_col(F.col(lon), F.col(lat), res))
+    lon, lat = quote_name(lon), quote_name(lat)
+    zones_cells = zones_df.selectExpr(
+        "zone_id", *_BBOX, f"explode({_zone_cells_sql(res)}) AS cell")
+    pts = points_df.withColumn("cell", F.expr(cell_expr(lon, lat, res)))
     cand = pts.join(zones_cells, "cell", "inner").where(_bbox(lon, lat))
     return (cand.join(_rings(zones_df), "zone_id", "inner")
             .where(_in_ring(lon, lat))

@@ -14,21 +14,28 @@ SURVEY.md §2.5 "hot-cell skew salting".
 
 from __future__ import annotations
 
+from proj_4_spark.sqltext import quote_name
+
+
+def salt_expr(id_col: str, n_salt: int) -> str:
+    """SQL text of the int salt in [0, n_salt) of column `id_col`."""
+    return f"CAST(pmod(xxhash64({quote_name(id_col)}), {n_salt}) AS INT)"
+
 
 def salt_col(id_col: str, n_salt: int):
     """Int column in [0, n_salt): the salt of each row's `id_col`."""
     from pyspark.sql import functions as F
 
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).cast("int")
+    return F.expr(salt_expr(id_col, n_salt))
 
 
 def salted_count(df, key_col: str = "cell", id_col: str = "doc_id", n_salt: int = 16):
     """Two-phase count per key: partial per (key, salt), final per key.
 
     Equivalent to df.groupBy(key).count() but with bounded reducer fan-in
-    on hot keys."""
+    on hot keys.  Column names are read as ``F.col`` reads them."""
     from pyspark.sql import functions as F
 
-    partial = df.withColumn("salt", salt_col(id_col, n_salt)) \
-        .groupBy(key_col, "salt").agg(F.count("*").alias("partial_n"))
-    return partial.groupBy(key_col).agg(F.sum("partial_n").alias("n"))
+    partial = (df.withColumn("salt", salt_col(id_col, n_salt))
+               .groupBy(key_col, "salt").agg(F.expr("count(*) AS partial_n")))
+    return partial.groupBy(key_col).agg(F.expr("sum(partial_n) AS n"))

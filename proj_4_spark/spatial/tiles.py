@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from proj_4_spark.sqltext import quote_name
+
 # pi * 6378137 (WGS84 webmerc half-circumference)
 HALF_CIRC = 20037508.342789244
 
@@ -29,44 +31,30 @@ def tile_np(x, y, zoom: int):
     return np.clip(tx, 0, n - 1), np.clip(ty, 0, n - 1)
 
 
+def _tile_texts(x: str, y: str, zoom: int, d: str) -> tuple[str, str]:
+    """(tile_x, tile_y) of SQL operands `x`/`y`; `d` suffixes the double
+    literals ("" for DuckDB, "D" for Spark SQL, which reads them as
+    DECIMAL)."""
+    n = 1 << zoom
+    h, w = f"{HALF_CIRC!r}{d}", f"{2 * HALF_CIRC!r}{d}"
+    tx = f"least(greatest(cast(floor(({x} + {h}) / {w} * {n}) as bigint), 0), {n - 1})"
+    ty = f"least(greatest(cast(floor(({h} - ({y})) / {w} * {n}) as bigint), 0), {n - 1})"
+    return tx, ty
+
+
 def tile_sql(x_expr: str, y_expr: str, zoom: int) -> tuple[str, str]:
-    n = 1 << zoom
-    tx = (
-        f"least(greatest(cast(floor(({x_expr} + {HALF_CIRC!r}) / {2 * HALF_CIRC!r} * {n}) as bigint), 0), {n - 1})"
-    )
-    ty = (
-        f"least(greatest(cast(floor(({HALF_CIRC!r} - ({y_expr})) / {2 * HALF_CIRC!r} * {n}) as bigint), 0), {n - 1})"
-    )
-    return tx, ty
-
-
-def tile_cols(x_col, y_col, zoom: int):
-    """JVM-side Column pair (tile_x, tile_y)."""
-    from pyspark.sql import functions as F
-
-    n = 1 << zoom
-    tx = F.least(
-        F.greatest(F.floor((x_col + HALF_CIRC) / (2 * HALF_CIRC) * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    ty = F.least(
-        F.greatest(F.floor((F.lit(HALF_CIRC) - y_col) / (2 * HALF_CIRC) * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return tx, ty
+    """The same computation as ANSI SQL (used for DuckDB oracles)."""
+    return _tile_texts(x_expr, y_expr, zoom, "")
 
 
 def assign_tiles(points_df, x: str = "x", y: str = "y", zoom: int = 8):
-    """Add tile_x/tile_y/payload columns to a webmerc point DataFrame."""
+    """Add zoom/tile_x/tile_y/payload columns to a webmerc point
+    DataFrame (`x`/`y` are column names as ``F.col`` reads them; an
+    input column of one of the four names is replaced in place).  Two
+    projections: the payload reads the tile columns."""
     from pyspark.sql import functions as F
 
-    tx, ty = tile_cols(F.col(x), F.col(y), zoom)
-    return (
-        points_df.withColumn("zoom", F.lit(zoom))
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .withColumn(
-            "payload",
-            F.concat(F.lit(f"tile-{zoom}/"), F.col("tile_x"), F.lit("/"), F.col("tile_y")),
-        )
-    )
+    tx, ty = _tile_texts(quote_name(x), quote_name(y), zoom, "D")
+    return points_df.withColumns({
+        "zoom": F.expr(str(zoom)), "tile_x": F.expr(tx), "tile_y": F.expr(ty),
+    }).withColumn("payload", F.expr(f"concat('tile-{zoom}/', tile_x, '/', tile_y)"))

@@ -153,7 +153,7 @@ def test_pip_join_is_broadcast(spark):
 def test_cell_and_tile_exprs_are_codegen(spark):
     """Cell/tile assignment must stay inside WholeStageCodegen (no UDF)."""
     from proj_4_spark.spatial.cells import cell_col
-    from proj_4_spark.spatial.tiles import tile_cols
+    from proj_4_spark.spatial.tiles import assign_tiles
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     pts = ev.select(
@@ -161,8 +161,8 @@ def test_cell_and_tile_exprs_are_codegen(spark):
         ((F.col("event_id") * 104729 % 170000) / 1000.0 - 85.0).alias("lat"),
     )
     df = pts.withColumn("cell", cell_col(F.col("lon"), F.col("lat"), 7))
-    tx, ty = tile_cols(F.col("lon") * 111319.49, F.col("lat") * 111319.49, 8)
-    df = df.withColumn("tx", tx).withColumn("ty", ty)
+    df = assign_tiles(df.selectExpr("*", "lon * 111319.49D AS wx",
+                                    "lat * 111319.49D AS wy"), "wx", "wy", 8)
     plan = plan_of(df)
     assert "EvalPython" not in plan
     # "*(1)" prefix marks whole-stage-codegen stages in the simple plan

@@ -66,13 +66,13 @@ def old_variant(points_df, zones_df, res=6):
     from pyspark.sql.functions import pandas_udf
     import pandas as pd
     from proj_4_spark.spatial.cells import cell_col
-    from proj_4_spark.spatial.pip import _zone_cells_col, point_in_ring_np
+    from proj_4_spark.spatial.pip import _zone_cells_sql, point_in_ring_np
 
     zones_cells = zones_df.select(
         "zone_id",
         F.col("ring.lon").alias("ring_lon"), F.col("ring.lat").alias("ring_lat"),
         "min_lon", "min_lat", "max_lon", "max_lat",
-        F.explode(_zone_cells_col(res)).alias("cell"))
+        F.explode(F.expr(_zone_cells_sql(res))).alias("cell"))
     p = points_df.withColumn("cell", cell_col(F.col("lon"), F.col("lat"), res))
     cand = p.join(zones_cells, "cell", "inner").where(
         (F.col("lon") >= F.col("min_lon")) & (F.col("lon") <= F.col("max_lon"))
