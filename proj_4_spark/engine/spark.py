@@ -287,6 +287,16 @@ class _SqlStager:
     def col(self, name: str) -> str:
         return self.PREFIX + name
 
+    @classmethod
+    def observe(cls, df):
+        """`df` under a CollectMetrics node with a fresh name: the
+        barrier that closes a codegen region.  The optimizer neither
+        collapses a Project nor pushes a Filter through it."""
+        from pyspark.sql import functions as F
+
+        return df.observe(f"{cls.PREFIX}cgsplit_{next(cls._split_seq)}",
+                          F.count(F.lit(1)).alias("rows"))
+
     def apply(self, df, final_exprs: list[str]):
         clash = [c for c in df.columns if c.startswith(self.PREFIX)]
         if clash:
@@ -296,8 +306,6 @@ class _SqlStager:
             raise ValueError(
                 f"input columns collide with the staging prefix "
                 f"{self.PREFIX!r}: {clash}; rename them before transform()")
-        from pyspark.sql import functions as F
-
         # Batch consecutive stages into ONE selectExpr via lateral
         # column aliases (Spark >= 3.4): the analyzer rewrites them
         # into exactly the nested-Project chain that one-selectExpr-
@@ -326,9 +334,7 @@ class _SqlStager:
                 dead = [c for c in emitted if c not in later]
                 if dead:
                     out = out.drop(*dead)
-                out = out.observe(
-                    f"{self.PREFIX}cgsplit_{next(self._split_seq)}",
-                    F.count(F.lit(1)).alias("rows"))
+                out = self.observe(out)
         if pending:
             out = out.selectExpr("*", *pending)
         # replace-in-place contract: with the documented default call
@@ -2070,11 +2076,17 @@ def transform(
     its nullability and metadata, ``spark.sql.ansi.enabled``,
     ``spark.sql.caseSensitive``) — and every call, the first included,
     rebinds that analysed template onto ``df`` (the 256 most recently
-    used templates are kept).  The rebinding reaches Catalyst through
-    ``df._jdf``, so a twin needs a Classic (not a Spark Connect)
-    session, as the footer reads in ``scale.py`` do.  The
-    ``_jd_cgsplit_*`` observations at a twin's codegen barriers are
-    named once per template, so all outputs of one template share them.
+    used templates are kept).  The rebound plan is marked analysed, so
+    a warm call runs no analyzer rule, and it costs a fixed number of
+    py4j commands, however wide ``df`` is.  The rebinding reaches
+    Catalyst through ``df._jdf`` and Spark-internal plan methods
+    (``transformAllExpressions``, ``transformUp``, the
+    ``private[catalyst]`` ``setAnalyzed``), so a twin needs a Classic
+    (not a Spark Connect) session, as the footer reads in ``scale.py``
+    do.  The ``_jd_cgsplit_*`` observations at a twin's codegen
+    barriers are named once per template, so all outputs of one
+    template share them.  ``keep_errors=False`` filters behind one more
+    such barrier, named per call.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
@@ -2093,23 +2105,42 @@ def transform(
         out = _udf_apply(df, op, projstring, direction, x, y, z, t,
                          degrees, out_prefix)
     if not keep_errors:
+        # behind a barrier the filter reads only the output column:
+        # pushed down through a twin's Projects it would inline the
+        # kernel (97 KB of SQL on a helmert pipeline, past what Janino
+        # compiles), and on the Arrow-UDF path run the UDF twice
         ox = quote_name(f"{out_prefix}x")
-        out = out.where(f"{ox} IS NOT NULL AND NOT isnan({ox})")
+        out = _SqlStager.observe(out).where(
+            f"{ox} IS NOT NULL AND NOT isnan({ox})")
     return out
+
+
+class _Template(NamedTuple):
+    """An analysed twin and what _rebind needs to put it over a frame,
+    all resolved once per template key."""
+    plan: object        # the analysed twin over the placeholder
+    holes: object       # the placeholder's output attributes
+    leaf: object        # the placeholder leaf
+    respelled: tuple    # (position, spelling, respelled hole) per rename
+    empty_map: object   # an empty Scala Map
+    conforms: object    # the evidence Seq.toMap takes in Scala 2.13
+    dataset: object     # the classic.Dataset class
 
 
 @lru_cache(maxsize=256)
 def _twin_template(session, projstring: str, direction: str, x, y, z, t,
                    degrees: bool, out_prefix: str, schema_json: str,
-                   ansi: str, case_sensitive: str):
+                   ansi: str, case_sensitive: str) -> _Template:
     """A twin emitted and analysed over an empty LocalRelation (the
     placeholder) of the input schema.  Analysis is most of a twin's
     build (the Resolution batch iterates per lateral-alias level), so
     it runs once per key; the session confs that change what the
-    analyzer produces are part of the key.  Returns the analysed plan
-    and the (position, spelling) of each input column that x/y/z/t name
-    in another letter case: the analyzer keeps the caller's spelling on
-    such a reference."""
+    analyzer produces are part of the key.  Besides the analysed plan
+    it keeps the placeholder's output and leaf, the (position,
+    spelling) of each input column that x/y/z/t name in another letter
+    case (the analyzer keeps the caller's spelling on such a
+    reference), and the JVM handles _rebind calls: each
+    ``jvm.a.b.C`` walk costs one py4j command per name."""
     import json
 
     from pyspark.sql import DataFrame
@@ -2120,38 +2151,47 @@ def _twin_template(session, projstring: str, direction: str, x, y, z, t,
         jvm.java.util.ArrayList(), schema), session)
     plan = _twin_plan(_cached_operation(projstring), direction)
     out = _emit_twin(empty, plan, x, y, z, t, degrees, out_prefix)
+    analysed = out._jdf.queryExecution().analyzed()
+    leaf = analysed.collectLeaves().head()
+    holes = leaf.output()
     fields = [f["name"] for f in json.loads(schema_json)["fields"]]
-    respelled = tuple((i, n) for i, f in enumerate(fields)
+    respelled = tuple((i, n, holes.apply(i).withName(n))
+                      for i, f in enumerate(fields)
                       for n in {x, y, z, t} - {None, f}
                       if n.lower() == f.lower())
-    return out._jdf.queryExecution().analyzed(), respelled
+    return _Template(analysed, holes, leaf, respelled,
+                     jvm.PythonUtils.toScalaMap(jvm.java.util.HashMap()),
+                     getattr(jvm.scala.Predef, "$conforms")(),
+                     jvm.org.apache.spark.sql.classic.Dataset)
 
 
-def _rebind(template, df):
-    """A template over `df`: every reference to a placeholder column
-    becomes `df`'s analysed column at the same position (both follow the
-    schema in the key; `df`'s keep their qualifiers), then the
-    placeholder leaf becomes `df`'s plan.  The result is the plan a
-    build over `df` analyses to, and Dataset.ofRows runs the analyzer
-    and CheckAnalysis over it like over any new plan."""
+def _rebind(template: _Template, df):
+    """A template over `df`: the placeholder leaf becomes `df`'s plan,
+    then every reference to a placeholder column becomes `df`'s analysed
+    column at the same position (both follow the schema in the key;
+    `df`'s keep their qualifiers).  The result is the plan a build over
+    `df` analyses to: the template was analysed and checked over the
+    same schema and confs, `df`'s plan when `df` was built.  So it is
+    marked analysed, and Dataset.ofRows runs no analyzer rule over it.
+    Both substitution maps are built on the JVM side: a fixed number of
+    py4j commands, whatever the width of `df`.  `setAnalyzed` is
+    Spark-internal (private[catalyst], public in the bytecode), as are
+    `transformAllExpressions` and `transformUp`."""
     from pyspark.sql import DataFrame
 
-    plan, respelled = template
     session = df.sparkSession
-    jvm = session._jvm
     caller = df._jdf.queryExecution().analyzed()
-    holes, cols = plan.collectLeaves().head().output(), caller.output()
-    attrs, leaf = jvm.java.util.HashMap(), jvm.java.util.HashMap()
-    for i in range(cols.size()):
-        attrs.put(holes.apply(i), cols.apply(i))
-    for i, n in respelled:
-        attrs.put(holes.apply(i).withName(n), cols.apply(i).withName(n))
+    cols = caller.output()
+    attrs = template.holes.zip(cols).toMap(template.conforms)
+    for i, n, hole in template.respelled:
+        attrs = attrs.updated(hole, cols.apply(i).withName(n))
     # a Scala Map is a PartialFunction: the rule of both rewrites
-    plan = plan.transformAllExpressions(jvm.PythonUtils.toScalaMap(attrs))
-    leaf.put(plan.collectLeaves().head(), caller)
-    plan = plan.transformUp(jvm.PythonUtils.toScalaMap(leaf))
-    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        session._jsparkSession, plan), session)
+    plan = template.plan.transformUp(
+        template.empty_map.updated(template.leaf, caller))
+    plan = plan.transformAllExpressions(attrs)
+    plan.setAnalyzed()
+    return DataFrame(template.dataset.ofRows(session._jsparkSession, plan),
+                     session)
 
 
 def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,

@@ -61,22 +61,33 @@ def pack_expr(res: int, iy: str, ix: str) -> str:
     return f"cast({res} as bigint) * {1 << RES_SHIFT} + {iy} * {1 << IY_SHIFT} + {ix}"
 
 
+def _cell_text(lon: str, lat: str, res: int, d: str) -> str:
+    """cell_np as SQL text: the packed clamped indexes, or -1 where
+    cell_np does not take the point.  A NULL or NaN operand fails its
+    comparison (NaN sorts above every number in Spark and DuckDB, and
+    CASE takes a NULL condition as false), so it takes -1 as a NaN does
+    in NumPy; the THEN branch is never evaluated for it."""
+    ix, iy = index_exprs(lon, lat, res, d)
+    return (f"(CASE WHEN abs({lon}) <= 360.0{d} AND abs({lat}) <= 90.0{d} "
+            f"THEN {pack_expr(res, iy, ix)} ELSE -1 END)")
+
+
 def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     """The same computation as ANSI SQL (used for DuckDB oracles)."""
-    ix, iy = index_exprs(lon_expr, lat_expr, res, "")
-    return f"({pack_expr(res, iy, ix)})"
+    return _cell_text(lon_expr, lat_expr, res, "")
 
 
 def cell_expr(lon: str, lat: str, res: int) -> str:
     """The same computation as Spark SQL text over SQL operands."""
-    ix, iy = index_exprs(lon, lat, res)
-    return f"({pack_expr(res, iy, ix)})"
+    return _cell_text(lon, lat, res, "D")
 
 
 def cell_col(lon_col, lat_col, res: int):
-    """JVM-side Column expression (stays inside whole-stage codegen).
-    A plain column reference or an ``F.expr`` renders into one SQL text
-    (sqltext.column_sql); any other Column is composed from Columns."""
+    """JVM-side Column expression (stays inside whole-stage codegen),
+    equal to cell_np: -1 for a NULL, NaN or infinite coordinate,
+    |lon| > 360 or |lat| > 90.  A plain column reference or an
+    ``F.expr`` renders into one SQL text (sqltext.column_sql); any
+    other Column is composed from Columns."""
     from pyspark.sql import functions as F
 
     lon, lat = column_sql(lon_col), column_sql(lat_col)
@@ -87,7 +98,9 @@ def cell_col(lon_col, lat_col, res: int):
                                  F.lit(0)), F.lit(n - 1))
               for c, lo, span in ((lon_col, 180.0, 360.0),
                                   (lat_col, 90.0, 180.0)))
-    return _pack_col(res, iy, ix)
+    return (F.when((F.abs(lon_col) <= 360.0) & (F.abs(lat_col) <= 90.0),
+                   _pack_col(res, iy, ix))
+            .otherwise(-1))
 
 
 def _pack_col(res: int, iy, ix):
@@ -127,20 +140,26 @@ def neighbors_expr(cell: str, res: int, ring=1) -> str:
     """Spark SQL text of the neighbor ring (an array) of the cell id
     SQL operand `cell`; `ring` is an int or a SQL operand.  Rows clamp
     at the poles and columns wrap and cap at 2^res, so each cell appears
-    once.  The lambda variables `__iy`/`__ix` shadow any column so
-    named."""
+    once.  A -1 cell (a point cell_np does not take) has no neighbors.
+    It is decoded as cell 0, whose ring the CASE discards: decoded as
+    itself it would span 2^29 rows, which the optimizer's constant
+    folding would build for a literal -1.  The lambda variables
+    `__iy`/`__ix` shadow any column so named."""
     n, r = f"{1 << res}L", f"CAST({ring} AS BIGINT)"
     # Exact integer decode: shiftright/bitwise, never `/` (double division
     # rounds above 2^53 — cell ids carry res<<58, so float division can be
     # off by up to ~128 in ix/iy near row boundaries).
-    iy = f"(shiftright({cell}, {IY_SHIFT}) & {(1 << (RES_SHIFT - IY_SHIFT)) - 1})"
-    ix = f"({cell} & {(1 << IY_SHIFT) - 1})"
+    c = f"greatest({cell}, 0L)"
+    iy = f"(shiftright({c}, {IY_SHIFT}) & {(1 << (RES_SHIFT - IY_SHIFT)) - 1})"
+    ix = f"({c} & {(1 << IY_SHIFT) - 1})"
     rows = f"sequence(greatest({iy} - {r}, 0L), least({iy} + {r}, {n} - 1))"
     cols = (f"CASE WHEN {r} * 2 + 1 >= {n} THEN sequence(0L, {n} - 1) "
             f"ELSE transform(sequence({ix} - {r}, {ix} + {r}), "
             f"__ix -> pmod(__ix, {n})) END")
-    return (f"flatten(transform({rows}, __iy -> "
-            f"transform({cols}, __ix -> {pack_expr(res, '__iy', '__ix')})))")
+    return (f"CASE WHEN {cell} < 0 THEN array() ELSE "
+            f"flatten(transform({rows}, __iy -> "
+            f"transform({cols}, __ix -> {pack_expr(res, '__iy', '__ix')})))"
+            f" END")
 
 
 def neighbors_col(cell_col_, res: int, ring=1):
@@ -155,17 +174,18 @@ def neighbors_col(cell_col_, res: int, ring=1):
         return F.expr(neighbors_expr(cell, res, ring_sql))
     n = F.lit(1 << res).cast("long")
     r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
-    iy = F.shiftright(cell_col_, IY_SHIFT).bitwiseAND(
+    c = F.greatest(cell_col_, F.lit(0).cast("long"))
+    iy = F.shiftright(c, IY_SHIFT).bitwiseAND(
         F.lit((1 << (RES_SHIFT - IY_SHIFT)) - 1)
     )
-    ix = cell_col_.bitwiseAND(F.lit((1 << IY_SHIFT) - 1))
+    ix = c.bitwiseAND(F.lit((1 << IY_SHIFT) - 1))
     rows = F.sequence(F.greatest(iy - r, F.lit(0).cast("long")),
                       F.least(iy + r, n - 1))
     cols = (F.when(2 * r + 1 >= n, F.sequence(F.lit(0).cast("long"), n - 1))
             .otherwise(F.transform(F.sequence(ix - r, ix + r),
                                    lambda x: F.pmod(x, n))))
-    return F.flatten(F.transform(
-        rows, lambda y: F.transform(cols, lambda x: _pack_col(res, y, x))))
+    return F.when(cell_col_ < 0, F.array()).otherwise(F.flatten(F.transform(
+        rows, lambda y: F.transform(cols, lambda x: _pack_col(res, y, x)))))
 
 
 def cell_size_deg(res: int) -> tuple[float, float]:

@@ -122,6 +122,10 @@ def knn_join(
     files `points_df` scans (scale.knn_res), not from its rows after
     filters, limits or joins: a small subset of a large file gets the
     large file's (smaller) cells.
+    A point or query that cells.cell_np does not take (a NULL, NaN or
+    infinite coordinate, |lon| > 360, |lat| > 90) has cell -1 and no
+    neighbor cells: the point is never a candidate and the query gets
+    no rows.  knn_brute_force ranks them (with NaN distances).
     metric: "karney" (exact ellipsoidal, the Arrow-batched Karney UDF)
     or "haversine" (mean sphere, a JVM expression with no Python worker:
     the SQL-expressible twin used by the DuckDB correctness gate); any

@@ -24,6 +24,7 @@ from proj_4_spark.engine.spark import transform
 from proj_4_spark.sources import fixtures as FX
 from proj_4_spark.spatial import cells, knn, pip, salting, tiles
 from proj_4_spark.sqltext import column_sql, quote_name
+from tests.test_plans import _assert_codegen_health
 
 WEBMERC = "+proj=webmerc +ellps=WGS84"
 
@@ -65,7 +66,9 @@ def ref_pack_col(res, iy, ix):
 
 def ref_cell_col(lon_col, lat_col, res):
     ix, iy = ref_index_cols(lon_col, lat_col, res)
-    return ref_pack_col(res, iy, ix)
+    return (F.when((F.abs(lon_col) <= 360.0) & (F.abs(lat_col) <= 90.0),
+                   ref_pack_col(res, iy, ix))
+            .otherwise(-1))
 
 
 def ref_neighbors_col(cell_col_, res, ring=1):
@@ -73,15 +76,16 @@ def ref_neighbors_col(cell_col_, res, ring=1):
 
     n = F.lit(1 << res).cast("long")
     r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
-    iy = F.shiftright(cell_col_, 29).bitwiseAND(F.lit((1 << 29) - 1))
-    ix = cell_col_.bitwiseAND(F.lit((1 << 29) - 1))
+    c = F.greatest(cell_col_, F.lit(0).cast("long"))
+    iy = F.shiftright(c, 29).bitwiseAND(F.lit((1 << 29) - 1))
+    ix = c.bitwiseAND(F.lit((1 << 29) - 1))
     rows = F.sequence(F.greatest(iy - r, F.lit(0).cast("long")),
                       F.least(iy + r, n - 1))
     cols = (F.when(2 * r + 1 >= n, F.sequence(F.lit(0).cast("long"), n - 1))
             .otherwise(F.transform(F.sequence(ix - r, ix + r),
                                    lambda x: F.pmod(x, n))))
-    return F.flatten(F.transform(
-        rows, lambda y: F.transform(cols, lambda x: ref_pack_col(res, y, x))))
+    return F.when(cell_col_ < 0, F.array()).otherwise(F.flatten(F.transform(
+        rows, lambda y: F.transform(cols, lambda x: ref_pack_col(res, y, x)))))
 
 
 def ref_assign_tiles(points_df, x="x", y="y", zoom=8):
@@ -233,7 +237,7 @@ def _canonical_plan(df) -> str:
                lambda m: '"id":%d' % ids.setdefault(m[1], len(ids)), s)
     s = re.sub(r'(NamedLambdaVariable","num-children":0,"name":")[^"]*"',
                r'\1v"', s)
-    s = re.sub(r"_media_cg_\w+", "_media_cg", s)
+    s = re.sub(r"_media_cg_\w+|_jd_cgsplit_\w+", "_cg", s)
     # Column.alias lists the Dataset-API keys (__dataset_id,
     # __col_position) an alias must not inherit; a SQL alias has none.
     # Neither reaches the physical plan.
@@ -325,12 +329,57 @@ def test_salting_plans(spark, ansi, edge_pts):
             == _canonical_plan(ref_salted_count(df, "cell", "doc_id", 8)))
 
 
+def _filter_refs(df) -> list[set]:
+    """The attribute names each Filter of the optimized plan reads."""
+    import json
+
+    nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    return [{e["name"] for e in n["condition"]
+             if e["class"].endswith(".AttributeReference")}
+            for n in nodes if n["class"].endswith(".logical.Filter")]
+
+
 def test_keep_errors_filter_plan(spark, ansi, edge_pts):
+    """keep_errors=False filters the output behind an observe barrier:
+    its Filter reads only the x output column, where without the
+    barrier Catalyst would push it down through the twin's Projects,
+    inlining the kernel into the condition."""
     kw = dict(x="lon", y="lat", out_prefix="wm_")
-    ref = transform(edge_pts, WEBMERC, **kw)
-    ref = ref.where(F.col("wm_x").isNotNull() & ~F.isnan(F.col("wm_x")))
-    assert (_canonical_plan(transform(edge_pts, WEBMERC, keep_errors=False, **kw))
-            == _canonical_plan(ref))
+    ref = (transform(edge_pts, WEBMERC, **kw)
+           .observe("_jd_cgsplit_ref", F.count(F.lit(1)).alias("rows"))
+           .where(F.col("wm_x").isNotNull() & ~F.isnan(F.col("wm_x"))))
+    got = transform(edge_pts, WEBMERC, keep_errors=False, **kw)
+    assert _canonical_plan(got) == _canonical_plan(ref)
+    assert _filter_refs(got) == [{"wm_x"}]
+
+
+def test_keep_errors_helmert_compiles_and_filters(spark):
+    """A helmert pipeline's keep_errors=False plan compiles every codegen
+    region, each method under the HotSpot JIT ceiling (with the filter
+    pushed into the twin, Janino failed on it, which Spark only logs
+    before running the region interpreted), and its rows are the
+    keep_errors=True rows with a non-NaN x."""
+    ps = ("+proj=pipeline +step +proj=cart +ellps=GRS80 +step +proj=helmert "
+          "+x=1 +y=2 +z=3 +rx=0.1 +ry=0.2 +rz=0.3 +s=1.5 "
+          "+convention=position_vector +step +inv +proj=cart +ellps=WGS84")
+    pts = spark.range(400).selectExpr(
+        "id", "CASE WHEN id % 7 = 0 THEN CAST('NaN' AS DOUBLE) "
+              "WHEN id % 11 = 0 THEN NULL ELSE -10 + id * 0.05D END AS lon",
+        "40 + id * 0.03D AS lat")
+    got = transform(pts, ps, x="lon", y="lat", keep_errors=False)
+    assert _filter_refs(got) == [{"x"}]
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    # codegenString sees no subtrees under an unexecuted AQE plan
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _assert_codegen_health(spark, got, "helmert keep_errors=False")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    every = transform(pts, ps, x="lon", y="lat").toPandas()
+    want = every[every["x"].notna()].sort_values("id")
+    assert 300 < len(want) < 400
+    have = got.toPandas().sort_values("id")
+    assert have.reset_index(drop=True).equals(want.reset_index(drop=True))
 
 
 @pytest.mark.parametrize("n_salt", [1, 3])
@@ -360,11 +409,10 @@ def test_knn_join_plan(spark, ansi, edge_pts, monkeypatch, n_salt):
 # ------------------------------------------------- outputs vs the oracles
 
 def test_cell_and_tile_outputs_match_numpy_on_edge_rows(spark, edge_pts):
-    """cell_col equals cell_np wherever cell_np takes the point (finite,
-    |lon| <= 360, |lat| <= 90; elsewhere cell_np returns -1 and cell_col
-    clamps, as the Column form did); assign_tiles equals tile_np on
-    every non-NULL row.  On NULL rows both equal the Column forms, whose
-    `greatest` skips the NULL index (index 0)."""
+    """cell_col equals cell_np on every edge row: -1 for a NULL, NaN or
+    out-of-domain coordinate (NULL reads as NaN).  assign_tiles equals
+    tile_np on every non-NULL row; on NULL rows it equals the Column
+    form, whose `greatest` skips the NULL index (index 0)."""
     got = (tiles.assign_tiles(
         edge_pts.withColumn("cell", cells.cell_col(F.col("lon"), F.col("lat"), 6))
         .selectExpr("*", "lon * 111319.49D AS wx", "lat * 222638.98D AS wy"),
@@ -376,15 +424,16 @@ def test_cell_and_tile_outputs_match_numpy_on_edge_rows(spark, edge_pts):
                                       "payload AS ref_payload"), "doc_id")
         .toPandas())
     assert len(got) == edge_pts.count()
-    assert (got["cell"].isna() == got["ref_cell"].isna()).all()
     assert (got["payload"] == got["ref_payload"]).all()
+    assert got["cell"].notna().all()
+    cell = got["cell"].to_numpy().astype(np.int64)
+    assert (cell == got["ref_cell"].to_numpy().astype(np.int64)).all()
+    with np.errstate(invalid="ignore"):
+        want = cells.cell_np(got["lon"].to_numpy(float, na_value=np.nan),
+                             got["lat"].to_numpy(float, na_value=np.nan), 6)
+    assert (cell == want).all()
+    assert (want != -1).sum() >= 80 and (want == -1).sum() >= 6
     ok = got["lon"].notna() & got["lat"].notna()
-    lon, lat = got["lon"][ok].to_numpy(), got["lat"][ok].to_numpy()
-    want = cells.cell_np(lon, lat, 6)
-    cell = got["cell"][ok].to_numpy().astype(np.int64)
-    assert (cell == got["ref_cell"][ok].to_numpy().astype(np.int64)).all()
-    taken = want != -1
-    assert taken.sum() >= 80 and (cell[taken] == want[taken]).all()
     with np.errstate(invalid="ignore"):
         tx, ty = tiles.tile_np(got["wx"][ok], got["wy"][ok], 6)
     assert (got["tile_x"][ok].to_numpy() == tx).all()
@@ -408,6 +457,10 @@ def test_neighbors_col_matches_numpy(spark, edge_pts):
     for r in rows:
         assert sorted(r.nb) == sorted(set(cells.neighbors_np([r.cell], 2)[0]
                                           .tolist()))
+    # the cell of a point cell_np does not take has no neighbors
+    bad = spark.range(1).select(cells.neighbors_col(
+        cells.cell_col(F.lit(float("nan")), F.lit(0.0), 4), 4, 2).alias("nb"))
+    assert bad.first().nb == []
 
 
 def test_pip_outputs_match_numpy_on_edge_rows(spark, edge_pts, zones):
@@ -522,7 +575,7 @@ PY4J_BOUND = {
     "pip_join_cells": 54,           # 49
     "salt_col": 4,                  # 3
     "salted_count": 46,             # 42
-    "transform_keep_errors": 56,    # 51, most of it _rebind
+    "transform_keep_errors": 42,    # 38: 15 the rebind, 23 the barrier
 }
 
 
@@ -563,3 +616,13 @@ def test_builders_py4j_command_ratchet(spark, docs, zones, edge_pts):
     got = {name: _py4j_commands(spark, fn) for name, fn in cases.items()}
     over = {k: (v, PY4J_BOUND[k]) for k, v in got.items() if v > PY4J_BOUND[k]}
     assert not over, (over, got)
+
+
+def test_transform_py4j_commands_do_not_grow_with_width(spark, edge_pts):
+    """A warm transform() rebinds its template in a fixed number of py4j
+    commands: as many on a 23-column frame as on a 3-column one."""
+    narrow = edge_pts.select("doc_id", "lon", "lat")
+    wide = narrow.selectExpr("*", *[f"lon + {i} AS c{i}" for i in range(20)])
+    got = [_py4j_commands(spark, lambda df=df: transform(
+        df, WEBMERC, x="lon", y="lat")) for df in (narrow, wide)]
+    assert got[0] == got[1], got

@@ -1,17 +1,29 @@
 """Measure shuffle-write bytes of pip_join_cells before/after the r3
 ring-reattach refactor (rings used to ship through the cell shuffle
 duplicated once per covering cell).  Uses the local UI REST API for
-per-stage shuffleWriteBytes.  Result recorded in PLANS.md."""
+per-stage shuffleWriteBytes.  Result recorded in PLANS.md.
+
+    python tools/measure_pip_shuffle.py [--res 6 7]
+
+prints one JSON line per cell resolution (default: 6 and 7), with the
+exact shuffle-write bytes of both variants."""
+import argparse
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-spark = (SparkSession.builder.master("local[8]")
+ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+ap.add_argument("--res", type=int, nargs="+", default=[6, 7],
+                help="cell resolutions to measure (default: 6 7)")
+args = ap.parse_args()
+
+spark = (SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.ui.enabled", "true")
          # the premise of pip_join_cells is a zone table too large to
@@ -50,9 +62,10 @@ for z in range(n_zones):
 zones = spark.createDataFrame(
     zrows, "zone_id string, ring array<struct<lon double, lat double>>, "
            "min_lon double, min_lat double, max_lon double, max_lat double")
-pts = spark.createDataFrame(
-    [(int(i),) for i in range(n_pts)], "pt_id bigint"
-).select("pt_id",
+# F.rand seeds each partition by its index: 8 fixed partitions give the
+# same points on any core count (the points local[8] drew)
+pts = spark.range(n_pts, numPartitions=8).select(
+         F.col("id").alias("pt_id"),
          (F.rand(1) * 360 - 180).alias("lon"),
          (F.rand(2) * 180 - 90).alias("lat"))
 pts.write.mode("overwrite").parquet("/tmp/pip_pts.parquet")
@@ -102,17 +115,19 @@ def old_variant(points_df, zones_df, res=6):
 
 from proj_4_spark.spatial.pip import pip_join_cells
 
-b0 = shuffle_write_bytes()
-n_old = old_variant(pts, zones, res=7).count()
-b1 = shuffle_write_bytes()
-n_new = pip_join_cells(pts, zones, res=7).select("pt_id", "zone_id").count()
-b2 = shuffle_write_bytes()
+for res in args.res:
+    b0 = shuffle_write_bytes()
+    n_old = old_variant(pts, zones, res=res).count()
+    b1 = shuffle_write_bytes()
+    n_new = pip_join_cells(pts, zones, res=res).select("pt_id", "zone_id").count()
+    b2 = shuffle_write_bytes()
 
-old_bytes, new_bytes = b1 - b0, b2 - b1
-print(json.dumps({
-    "rows_old": n_old, "rows_new": n_new, "rows_equal": n_old == n_new,
-    "shuffle_write_old_mb": round(old_bytes / 1e6, 1),
-    "shuffle_write_new_mb": round(new_bytes / 1e6, 1),
-    "reduction_x": round(old_bytes / max(new_bytes, 1), 1),
-    "zones": n_zones, "ring_len": ring_len, "points": n_pts,
-}))
+    old_bytes, new_bytes = b1 - b0, b2 - b1
+    print(json.dumps({
+        "res": res,
+        "rows_old": n_old, "rows_new": n_new, "rows_equal": n_old == n_new,
+        "shuffle_write_old_bytes": old_bytes,
+        "shuffle_write_new_bytes": new_bytes,
+        "reduction_x": round(old_bytes / max(new_bytes, 1), 1),
+        "zones": n_zones, "ring_len": ring_len, "points": n_pts,
+    }))
