@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import itertools
 
+from proj_4_spark.templates import templated
+
 _cg_seq = itertools.count()
 
 
@@ -29,8 +31,17 @@ def explode_media_points(docs_df):
     Plan shape: generator-expand (posexplode) -> filter kind='media'
     -> regexp projections.  All JVM-side; Catalyst pushes the kind filter
     into the generate and prunes text columns out of the scan.  Built as
-    SQL text: one py4j call per step (proj_4_spark/sqltext.py).
+    SQL text (proj_4_spark/sqltext.py) and analysed once per template
+    key: the session, `docs_df`'s output attributes (name, type,
+    nullability, metadata, qualifier) and the ANSI and case-sensitivity
+    confs (proj_4_spark/templates.py); every call rebinds that plan onto
+    `docs_df`, so it needs a Classic session.  The observation at the
+    region barrier is named once per template.
     """
+    return templated(_explode, (), docs_df)
+
+
+def _explode(docs_df):
     from pyspark.sql import functions as F
 
     out = (docs_df.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")

@@ -15,9 +15,10 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   shapes are a cart/helmert datum pipeline (legs only), a single op's
   forward (legs -> kernel) and its inverse (kernel -> legs); a bare op
   has zero legs.  A twin is analysed once per (operation, input
-  schema, ...) over an empty placeholder frame and rebound onto each
-  caller's frame (_twin_template, _rebind): analysis, not Python
-  emission, is the cost of a twin's plan build.
+  attributes, ...) over an empty placeholder frame and rebound onto each
+  caller's frame (proj_4_spark/templates.py, shared with the document
+  and spatial builders): analysis, not Python emission, is the cost of
+  a twin's plan build.
 - An operation without a twin plan runs as ONE Arrow-batched pandas UDF
   per *whole pipeline* (kernel fusion; never one UDF per step —
   SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
@@ -43,6 +44,7 @@ import pandas as pd
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
 from proj_4_spark.sqltext import quote_name
+from proj_4_spark.templates import templated
 
 _STRUCT4 = "x double, y double, z double, t double"
 _SQL_INF = "CAST('Infinity' AS DOUBLE)"
@@ -295,7 +297,7 @@ class _SqlStager:
         from pyspark.sql import functions as F
 
         return df.observe(f"{cls.PREFIX}cgsplit_{next(cls._split_seq)}",
-                          F.count(F.lit(1)).alias("rows"))
+                          F.expr("count(1) AS rows"))
 
     def apply(self, df, final_exprs: list[str]):
         clash = [c for c in df.columns if c.startswith(self.PREFIX)]
@@ -2072,21 +2074,23 @@ def transform(
     column with that prefix raises ValueError.
 
     A twin is analysed once per template key — (session, projstring,
-    direction, x, y, z, t, degrees, out_prefix, the input schema with
-    its nullability and metadata, ``spark.sql.ansi.enabled``,
-    ``spark.sql.caseSensitive``) — and every call, the first included,
-    rebinds that analysed template onto ``df`` (the 256 most recently
-    used templates are kept).  The rebound plan is marked analysed, so
-    a warm call runs no analyzer rule, and it costs a fixed number of
-    py4j commands, however wide ``df`` is.  The rebinding reaches
-    Catalyst through ``df._jdf`` and Spark-internal plan methods
+    direction, x, y, z, t, degrees, out_prefix, keep_errors, the input's
+    output attributes with their nullability, metadata and qualifiers,
+    ``spark.sql.ansi.enabled``, ``spark.sql.caseSensitive``) — and every
+    call, the first included, rebinds that analysed template onto ``df``
+    (proj_4_spark/templates.py; the 256 most recently used templates of
+    all builders are kept).  The rebound plan is marked analysed, so a
+    warm call runs no analyzer rule, and it costs a fixed number of py4j
+    commands, however wide ``df`` is.  The rebinding reaches Catalyst
+    through ``df._jdf`` and Spark-internal plan methods
     (``transformAllExpressions``, ``transformUp``, the
     ``private[catalyst]`` ``setAnalyzed``), so a twin needs a Classic
     (not a Spark Connect) session, as the footer reads in ``scale.py``
     do.  The ``_jd_cgsplit_*`` observations at a twin's codegen
     barriers are named once per template, so all outputs of one
     template share them.  ``keep_errors=False`` filters behind one more
-    such barrier, named per call.
+    such barrier, also part of the template and named once per
+    template; on the Arrow-UDF path it is built per call.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
@@ -2095,103 +2099,32 @@ def transform(
     direction = _direction(direction)
     op = _cached_operation(projstring)
     if _twin_plan(op, direction) is not None:
-        conf = df.sparkSession.conf
-        out = _rebind(_twin_template(
-            df.sparkSession, projstring, direction, x, y, z, t, degrees,
-            out_prefix, df._jdf.schema().json(),
-            conf.get("spark.sql.ansi.enabled"),
-            conf.get("spark.sql.caseSensitive")), df)
-    else:
-        out = _udf_apply(df, op, projstring, direction, x, y, z, t,
-                         degrees, out_prefix)
-    if not keep_errors:
-        # behind a barrier the filter reads only the output column:
-        # pushed down through a twin's Projects it would inline the
-        # kernel (97 KB of SQL on a helmert pipeline, past what Janino
-        # compiles), and on the Arrow-UDF path run the UDF twice
-        ox = quote_name(f"{out_prefix}x")
-        out = _SqlStager.observe(out).where(
-            f"{ox} IS NOT NULL AND NOT isnan({ox})")
-    return out
+        return templated(_twin_build, (projstring, direction, x, y, z, t,
+                                       degrees, out_prefix, keep_errors), df)
+    out = _udf_apply(df, op, projstring, direction, x, y, z, t, degrees,
+                     out_prefix)
+    return out if keep_errors else _finite_rows(out, out_prefix)
 
 
-class _Template(NamedTuple):
-    """An analysed twin and what _rebind needs to put it over a frame,
-    all resolved once per template key."""
-    plan: object        # the analysed twin over the placeholder
-    holes: object       # the placeholder's output attributes
-    leaf: object        # the placeholder leaf
-    respelled: tuple    # (position, spelling, respelled hole) per rename
-    empty_map: object   # an empty Scala Map
-    conforms: object    # the evidence Seq.toMap takes in Scala 2.13
-    dataset: object     # the classic.Dataset class
+def _twin_build(df, projstring: str, direction: str, x, y, z, t,
+                degrees: bool, out_prefix: str, keep_errors: bool):
+    """The twin of (projstring, direction) over `df`, filtered when
+    `keep_errors` is false: the build transform() analyses once per
+    template key (proj_4_spark/templates.py)."""
+    out = _emit_twin(df, _twin_plan(_cached_operation(projstring), direction),
+                     x, y, z, t, degrees, out_prefix)
+    return out if keep_errors else _finite_rows(out, out_prefix)
 
 
-@lru_cache(maxsize=256)
-def _twin_template(session, projstring: str, direction: str, x, y, z, t,
-                   degrees: bool, out_prefix: str, schema_json: str,
-                   ansi: str, case_sensitive: str) -> _Template:
-    """A twin emitted and analysed over an empty LocalRelation (the
-    placeholder) of the input schema.  Analysis is most of a twin's
-    build (the Resolution batch iterates per lateral-alias level), so
-    it runs once per key; the session confs that change what the
-    analyzer produces are part of the key.  Besides the analysed plan
-    it keeps the placeholder's output and leaf, the (position,
-    spelling) of each input column that x/y/z/t name in another letter
-    case (the analyzer keeps the caller's spelling on such a
-    reference), and the JVM handles _rebind calls: each
-    ``jvm.a.b.C`` walk costs one py4j command per name."""
-    import json
-
-    from pyspark.sql import DataFrame
-
-    jvm = session._jvm
-    schema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema_json)
-    empty = DataFrame(session._jsparkSession.createDataFrame(
-        jvm.java.util.ArrayList(), schema), session)
-    plan = _twin_plan(_cached_operation(projstring), direction)
-    out = _emit_twin(empty, plan, x, y, z, t, degrees, out_prefix)
-    analysed = out._jdf.queryExecution().analyzed()
-    leaf = analysed.collectLeaves().head()
-    holes = leaf.output()
-    fields = [f["name"] for f in json.loads(schema_json)["fields"]]
-    respelled = tuple((i, n, holes.apply(i).withName(n))
-                      for i, f in enumerate(fields)
-                      for n in {x, y, z, t} - {None, f}
-                      if n.lower() == f.lower())
-    return _Template(analysed, holes, leaf, respelled,
-                     jvm.PythonUtils.toScalaMap(jvm.java.util.HashMap()),
-                     getattr(jvm.scala.Predef, "$conforms")(),
-                     jvm.org.apache.spark.sql.classic.Dataset)
-
-
-def _rebind(template: _Template, df):
-    """A template over `df`: the placeholder leaf becomes `df`'s plan,
-    then every reference to a placeholder column becomes `df`'s analysed
-    column at the same position (both follow the schema in the key;
-    `df`'s keep their qualifiers).  The result is the plan a build over
-    `df` analyses to: the template was analysed and checked over the
-    same schema and confs, `df`'s plan when `df` was built.  So it is
-    marked analysed, and Dataset.ofRows runs no analyzer rule over it.
-    Both substitution maps are built on the JVM side: a fixed number of
-    py4j commands, whatever the width of `df`.  `setAnalyzed` is
-    Spark-internal (private[catalyst], public in the bytecode), as are
-    `transformAllExpressions` and `transformUp`."""
-    from pyspark.sql import DataFrame
-
-    session = df.sparkSession
-    caller = df._jdf.queryExecution().analyzed()
-    cols = caller.output()
-    attrs = template.holes.zip(cols).toMap(template.conforms)
-    for i, n, hole in template.respelled:
-        attrs = attrs.updated(hole, cols.apply(i).withName(n))
-    # a Scala Map is a PartialFunction: the rule of both rewrites
-    plan = template.plan.transformUp(
-        template.empty_map.updated(template.leaf, caller))
-    plan = plan.transformAllExpressions(attrs)
-    plan.setAnalyzed()
-    return DataFrame(template.dataset.ofRows(session._jsparkSession, plan),
-                     session)
+def _finite_rows(out, out_prefix: str):
+    """The rows of `out` whose x output is not NULL or NaN.  Behind a
+    barrier the filter reads only that column: pushed down through a
+    twin's Projects it would inline the kernel (97 KB of SQL on a
+    helmert pipeline, past what Janino compiles), and on the Arrow-UDF
+    path run the UDF twice."""
+    ox = quote_name(f"{out_prefix}x")
+    return _SqlStager.observe(out).where(
+        f"{ox} IS NOT NULL AND NOT isnan({ox})")
 
 
 def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,

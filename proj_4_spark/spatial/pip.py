@@ -19,6 +19,7 @@ import numpy as np
 
 from proj_4_spark.spatial.cells import cell_expr, index_exprs, pack_expr
 from proj_4_spark.sqltext import quote_name
+from proj_4_spark.templates import templated
 
 _BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
 
@@ -94,14 +95,25 @@ def pip_join(points_df, zones_df, lon: str = "lon", lat: str = "lat"):
     """points (doc_id, span_offset, lon, lat) x zones
     (zone_id, ring:array<struct<lon,lat>>, min_lon..max_lat)
     -> (doc_id, span_offset, zone_id).  `lon`/`lat` are column names as
-    ``F.col`` reads them.
+    ``F.col`` reads them, qualifiers included (``"p.lon"`` over
+    ``points_df.alias("p")``).
 
     (zone_id, bbox, ring) is broadcast — the zone side is small by this
     function's contract — and one join condition holds both tests, the
     ring loop behind the bbox in a single CASE.  As separate predicates,
     Catalyst may order the loop first and run it on every (point, zone)
     pair of the nested-loop join.
+
+    The plan is analysed once per template key: the session, `lon`,
+    `lat`, each input's output attributes (name, type, nullability,
+    metadata, qualifier) and the ANSI and case-sensitivity confs
+    (proj_4_spark/templates.py); every call rebinds it onto the two
+    frames, so it needs a Classic session.
     """
+    return templated(_pip_join, (lon, lat), points_df, zones_df)
+
+
+def _pip_join(points_df, zones_df, lon: str, lat: str):
     from pyspark.sql import functions as F
 
     lon, lat = quote_name(lon), quote_name(lat)
@@ -143,15 +155,29 @@ def pip_join_cells(points_df, zones_df, res: int = 6,
          shuffles ONCE, and only bbox-surviving candidates meet it),
          and the same `_in_ring` test as pip_join keeps the hits.
 
-    Same output as pip_join; pick by zone-table size.
+    Same output as pip_join; pick by zone-table size.  Templated as
+    pip_join is, with `res` in the key; the observation at the ring
+    filter's barrier is named once per template.
     """
+    return templated(_pip_join_cells, (res, lon, lat), points_df, zones_df)
+
+
+def _pip_join_cells(points_df, zones_df, res: int, lon: str, lat: str):
     from pyspark.sql import functions as F
+
+    from proj_4_spark.engine.spark import _SqlStager
 
     lon, lat = quote_name(lon), quote_name(lat)
     zones_cells = zones_df.selectExpr(
         "zone_id", *_BBOX, f"explode({_zone_cells_sql(res)}) AS cell")
     pts = points_df.withColumn("cell", F.expr(cell_expr(lon, lat, res)))
     cand = pts.join(zones_cells, "cell", "inner").where(_bbox(lon, lat))
-    return (cand.join(_rings(zones_df), "zone_id", "inner")
-            .where(_in_ring(lon, lat))
+    # the ring test behind a barrier, never a join constraint: when the
+    # point columns' exprIds equal the ones Catalyst gives `_in_ring`'s
+    # lambda variables in its canonical form, they drop out of the
+    # test's canonical references, and InferFiltersFromConstraints
+    # moves the test onto the rings side of the zone_id join, where the
+    # point columns are missing (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    hits = _SqlStager.observe(cand.join(_rings(zones_df), "zone_id", "inner"))
+    return (hits.where(_in_ring(lon, lat))
             .drop("ring_lon", "ring_lat", *_BBOX, "cell"))

@@ -15,6 +15,7 @@ SURVEY.md §2.5 "hot-cell skew salting".
 from __future__ import annotations
 
 from proj_4_spark.sqltext import quote_name
+from proj_4_spark.templates import templated
 
 
 def salt_expr(id_col: str, n_salt: int) -> str:
@@ -33,7 +34,15 @@ def salted_count(df, key_col: str = "cell", id_col: str = "doc_id", n_salt: int 
     """Two-phase count per key: partial per (key, salt), final per key.
 
     Equivalent to df.groupBy(key).count() but with bounded reducer fan-in
-    on hot keys.  Column names are read as ``F.col`` reads them."""
+    on hot keys.  Column names are read as ``F.col`` reads them,
+    qualifiers included.  Analysed once per template key (the session,
+    the three arguments, `df`'s output attributes with their qualifiers,
+    the ANSI and case-sensitivity confs; proj_4_spark/templates.py) and
+    rebound onto `df`, so it needs a Classic session."""
+    return templated(_salted_count, (key_col, id_col, n_salt), df)
+
+
+def _salted_count(df, key_col: str, id_col: str, n_salt: int):
     from pyspark.sql import functions as F
 
     partial = (df.withColumn("salt", salt_col(id_col, n_salt))

@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 
 from proj_4_spark.sqltext import quote_name
+from proj_4_spark.templates import templated
 
 # pi * 6378137 (WGS84 webmerc half-circumference)
 HALF_CIRC = 20037508.342789244
@@ -49,9 +50,17 @@ def tile_sql(x_expr: str, y_expr: str, zoom: int) -> tuple[str, str]:
 
 def assign_tiles(points_df, x: str = "x", y: str = "y", zoom: int = 8):
     """Add zoom/tile_x/tile_y/payload columns to a webmerc point
-    DataFrame (`x`/`y` are column names as ``F.col`` reads them; an
-    input column of one of the four names is replaced in place).  Two
-    projections: the payload reads the tile columns."""
+    DataFrame (`x`/`y` are column names as ``F.col`` reads them,
+    qualifiers included; an input column of one of the four names is
+    replaced in place).  Two projections: the payload reads the tile
+    columns.  Analysed once per template key (the session, `x`, `y`,
+    `zoom`, the input's output attributes with their qualifiers, the
+    ANSI and case-sensitivity confs; proj_4_spark/templates.py) and
+    rebound onto `points_df`, so it needs a Classic session."""
+    return templated(_assign_tiles, (x, y, zoom), points_df)
+
+
+def _assign_tiles(points_df, x: str, y: str, zoom: int):
     from pyspark.sql import functions as F
 
     tx, ty = _tile_texts(quote_name(x), quote_name(y), zoom, "D")

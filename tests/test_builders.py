@@ -3,8 +3,9 @@
 Each builder's optimized plan equals the one its former Column-object
 form built (kept here as the reference), under ANSI mode on and off; its
 outputs equal the NumPy oracles on edge rows; column names are quoted
-the way ``F.col`` parses them; and a warm call stays under a pinned
-number of py4j commands.
+the way ``F.col`` parses them; and a warm call of a templated builder
+(proj_4_spark/templates.py) runs no Catalyst rule and stays under a
+pinned number of py4j commands, whatever the width of its input.
 """
 
 import collections
@@ -141,8 +142,10 @@ def ref_pip_join_cells(points_df, zones_df, res=6, lon="lon", lat="lat"):
         "zone_id", *_BBOX, F.explode(ref_zone_cells_col(res)).alias("cell"))
     pts = points_df.withColumn("cell", ref_cell_col(F.col(lon), F.col(lat), res))
     cand = pts.join(zones_cells, "cell", "inner").where(ref_bbox(lon, lat))
-    return (cand.join(ref_rings(zones_df), "zone_id", "inner")
-            .where(ref_in_ring(lon, lat))
+    # the ring test behind an observe barrier, never a join constraint
+    hits = cand.join(ref_rings(zones_df), "zone_id", "inner").observe(
+        "_jd_cgsplit_ref", F.count(F.lit(1)).alias("rows"))
+    return (hits.where(ref_in_ring(lon, lat))
             .drop("ring_lon", "ring_lat", *_BBOX, "cell"))
 
 
@@ -560,22 +563,188 @@ def test_odd_names_through_salted_count(spark, odd_names):
         assert sorted(map(tuple, got.collect())) == want
 
 
+# ------------------------------------------------------- qualified names
+
+def test_qualified_names_through_builders(spark, edge_pts, zones):
+    """Qualified lon/lat/x/y/id_col names resolve through every
+    templated builder, under two aliases of one schema (the qualifiers
+    are part of the template key)."""
+    def rows(df, *cols):
+        return sorted(map(tuple, df.select(*cols).collect()), key=str)
+
+    wm = edge_pts.where("lon IS NOT NULL AND lat IS NOT NULL").selectExpr(
+        "*", "lon * 111319.49D AS wm_x", "lat * 111319.49D AS wm_y")
+    want = {
+        "pip": rows(pip.pip_join(edge_pts, zones), "doc_id", "zone_id"),
+        "cells": rows(pip.pip_join_cells(edge_pts, zones, 5), "doc_id", "zone_id"),
+        "tiles": rows(tiles.assign_tiles(wm, "wm_x", "wm_y", 4), "doc_id", "payload"),
+        "salt": rows(salting.salted_count(edge_pts, "span_offset", "doc_id", 4),
+                     "span_offset", "n"),
+    }
+    assert want["pip"] and want["pip"] == want["cells"]
+    for a in ("p", "q"):
+        pts = edge_pts.alias(a)
+        assert rows(pip.pip_join(pts, zones, lon=f"{a}.lon", lat=f"{a}.lat"),
+                    "doc_id", "zone_id") == want["pip"]
+        assert rows(pip.pip_join_cells(pts, zones, 5, lon=f"{a}.lon",
+                                       lat=f"{a}.lat"),
+                    "doc_id", "zone_id") == want["cells"]
+        assert rows(tiles.assign_tiles(wm.alias(a), f"{a}.wm_x", f"{a}.wm_y", 4),
+                    "doc_id", "payload") == want["tiles"]
+        assert rows(salting.salted_count(pts, f"{a}.span_offset",
+                                         f"{a}.doc_id", 4),
+                    "span_offset", "n") == want["salt"]
+
+
+# ------------------------------------------------ templates: rebind checks
+
+def _points_with_lambda_exprids(spark, zones):
+    """One point, (8.0, 53.5), over a LocalRelation whose lon/lat carry
+    the exprIds Catalyst's canonical form of `_in_ring` gives its
+    `aggregate` lambda variables (read off that form), and the same
+    point over an ordinary frame."""
+    from pyspark.sql import DataFrame
+
+    probe = zones.selectExpr("ring.lon AS ring_lon", "ring.lat AS ring_lat",
+                             "0.0D AS lon", "0.0D AS lat")
+    ring_test = (probe.where(pip._in_ring("`lon`", "`lat`"))
+                 ._jdf.queryExecution().analyzed().condition())
+    # aggregate(..., (odd, i) -> ...): the merge lambda's two variables
+    args = ring_test.canonicalized().merge().arguments()
+    ids = [args.apply(k).exprId().id() for k in range(args.size())]
+    assert len(ids) == 2, ids
+    plain = spark.createDataFrame([(8.0, 53.5)], "lon double, lat double")
+    out = plain._jdf.queryExecution().analyzed().output()
+    jvm = spark._jvm
+    cat = jvm.org.apache.spark.sql.catalyst
+    attrs = [out.apply(k).withExprId(cat.expressions.ExprId.apply(v))
+             for k, v in enumerate(ids)]
+    row = cat.InternalRow.fromSeq(jvm.PythonUtils.toSeq([8.0, 53.5]))
+    relation = cat.plans.logical.LocalRelation
+    leaf = relation(jvm.PythonUtils.toSeq(attrs), jvm.PythonUtils.toSeq([row]),
+                    False, getattr(relation, "apply$default$4")())
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, leaf), spark), plain
+
+
+def test_pip_joins_with_lambda_variable_exprids(spark):
+    """Point columns whose exprIds equal `_in_ring`'s canonical lambda
+    variable ids drop out of the ring test's canonical references; the
+    cell join used to crash on them (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND:
+    the ring test was inferred onto the rings side of its zone_id
+    join)."""
+    # a fresh read: its exprIds are far above the lambda variables'
+    zones = spark.read.parquet(FX.ensure_fixture("zones.parquet", FX.zones_table))
+    pts, plain = _points_with_lambda_exprids(spark, zones)
+    want = sorted(r.zone_id for r in pip.pip_join(plain, zones).collect())
+    assert len(want) == 3
+    for fn in (pip.pip_join, lambda p, z: pip.pip_join_cells(p, z, res=6)):
+        assert sorted(r.zone_id for r in fn(pts, zones).collect()) == want
+
+
+def _rule_runs(spark) -> int:
+    """Catalyst rule runs so far in this JVM (RuleExecutor's meter)."""
+    return (spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
+            .getCurrentMetrics().numRuns())
+
+
+def test_builders_warm_call_runs_no_rule(spark, docs, zones, edge_pts):
+    """A warm call of each templated builder, over another frame of the
+    same schema, rebinds its analysed template: no Catalyst rule runs
+    (pip_join_cells re-instances its second zones read through
+    DeduplicateRelations alone, outside the analyzer)."""
+    wm = edge_pts.selectExpr("*", "lon AS wm_x", "lat AS wm_y")
+    cases = {
+        "explode_media_points": (explode_media_points, docs),
+        "assign_tiles": (lambda d: tiles.assign_tiles(d, "wm_x", "wm_y", 8), wm),
+        "pip_join": (lambda d: pip.pip_join(d, zones), edge_pts),
+        "pip_join_cells": (lambda d: pip.pip_join_cells(d, zones, res=6), edge_pts),
+        "salted_count": (lambda d: salting.salted_count(d, "span_offset", "doc_id"), wm),
+        "transform_keep_errors": (lambda d: transform(
+            d, WEBMERC, x="lon", y="lat", out_prefix="wm_", keep_errors=False),
+            edge_pts),
+    }
+    got = {}
+    for name, (fn, df) in cases.items():
+        fn(df)
+        other = df.where("true")
+        n0 = _rule_runs(spark)
+        fn(other)
+        got[name] = _rule_runs(spark) - n0
+    assert got == dict.fromkeys(cases, 0), got
+
+
+@pytest.fixture(scope="module")
+def zone_pts(spark, zones):
+    """Each zone's bbox center as a point (doc_id = its zone_id), in a
+    frame of its own: most of them hit a zone."""
+    centers = zones.selectExpr("zone_id AS doc_id", "0 AS span_offset",
+                               "(min_lon + max_lon) / 2 AS lon",
+                               "(min_lat + max_lat) / 2 AS lat")
+    return spark.createDataFrame(centers.collect(), centers.schema)
+
+
+def test_builder_template_outputs_union_and_self_join(spark, docs, zones, zone_pts):
+    """Two outputs of one builder template in one query (two explodes,
+    two pip_joins) share every exprId and observation name below their
+    leaves; their union and self-join still equal the per-frame
+    results."""
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=str)
+
+    for build, df, first in (
+            (explode_media_points, docs, "doc_id < 'doc-000000000020'"),
+            (lambda p: pip.pip_join(p, zones), zone_pts, "doc_id < 'zone-0010'")):
+        a, b = build(df.where(first)), build(df.where(f"NOT ({first})"))
+        ra, rb = rows(a), rows(b)
+        assert ra and rb
+        assert rows(a.union(b)) == sorted(ra + rb, key=str)
+        cols = a.columns
+        joined = a.alias("l").join(b.alias("r"), "doc_id", "full_outer")
+        assert joined.count() == len(ra) + len(rb)
+        self_join = a.alias("l").join(a.alias("r"), cols).select(
+            *[f"l.{c}" for c in cols])
+        assert set(rows(self_join)) == set(ra)
+
+
+def test_pip_join_cells_rebinds_each_zones_frame(spark, zones, zone_pts):
+    """A warm pip_join_cells template over another zones frame of the
+    same schema returns that frame's zones (both reads of the zones go
+    to the caller's frame); points that share a lineage with the zones
+    join as an independent copy of them does."""
+    full = set(map(tuple, pip.pip_join_cells(zone_pts, zones, res=6)
+                   .select("doc_id", "zone_id").collect()))
+    part = zones.where("zone_id >= 'zone-0005'")
+    got = set(map(tuple, pip.pip_join_cells(zone_pts, part, res=6)
+                  .select("doc_id", "zone_id").collect()))
+    assert got == {r for r in full if r[1] >= "zone-0005"}
+    assert got and got != full
+    centers = zones.selectExpr("zone_id AS doc_id", "0 AS span_offset",
+                               "(min_lon + max_lon) / 2 AS lon",
+                               "(min_lat + max_lat) / 2 AS lat")
+    for fn in (pip.pip_join, lambda p, z: pip.pip_join_cells(p, z, res=6)):
+        want = set(map(tuple, fn(zone_pts, zones).collect()))
+        assert want
+        assert set(map(tuple, fn(centers, zones).collect())) == want
+
+
 # ------------------------------------------------------- py4j ratchet
 
 # Commands (call, reflection, import; not deletes) a warm call of each
 # builder sends.  Built from Column objects they sent 190 (explode),
 # 221 (assign_tiles), 288 (pip_join), 979 (pip_join_cells), 109
-# (salted_count), 38 (salt_col) and 118 (transform keep_errors=False).
+# (salted_count), 38 (salt_col) and 118 (transform keep_errors=False);
+# as SQL text, analysed per call, 26, 28, 30, 49, 42, 3 and 38.
 PY4J_BOUND = {
-    "explode_media_points": 30,     # 26 measured
-    "assign_tiles": 32,             # 28
+    "explode_media_points": 19,     # 15 measured
+    "assign_tiles": 19,             # 15
     "cell_col": 18,                 # 15: two column_sql reads, one F.expr
     "neighbors_col": 12,            # 9
-    "pip_join": 34,                 # 30
-    "pip_join_cells": 54,           # 49
+    "pip_join": 31,                 # 27
+    "pip_join_cells": 35,           # 31
     "salt_col": 4,                  # 3
-    "salted_count": 46,             # 42
-    "transform_keep_errors": 42,    # 38: 15 the rebind, 23 the barrier
+    "salted_count": 19,             # 15
+    "transform_keep_errors": 19,    # 15
 }
 
 
@@ -588,7 +757,7 @@ def _py4j_commands(spark, fn) -> int:
         counts[command[0]] += 1
         return send(command, *args, **kwargs)
 
-    fn()  # warm: imports, lru caches, twin templates
+    fn()  # warm: imports, lru caches, plan templates
     client.send_command = counting
     try:
         fn()
@@ -597,25 +766,44 @@ def _py4j_commands(spark, fn) -> int:
     return counts["c"] + counts["r"] + counts["i"]
 
 
+def _widened(df):
+    """`df` and 20 more columns."""
+    return df.selectExpr("*", *[f"1.5D + {i} AS c{i}" for i in range(20)])
+
+
 def test_builders_py4j_command_ratchet(spark, docs, zones, edge_pts):
+    """Each builder's warm call stays under its bound; a templated one
+    sends as many commands on a 3-column input as on a 23-column one."""
     lon, lat, cell = F.col("lon"), F.col("lat"), F.col("cell")
-    wm = edge_pts.selectExpr("*", "lon AS wm_x", "lat AS wm_y")
-    cases = {
-        "explode_media_points": lambda: explode_media_points(docs),
-        "assign_tiles": lambda: tiles.assign_tiles(wm, "wm_x", "wm_y", 8),
-        "cell_col": lambda: cells.cell_col(lon, lat, 6),
-        "neighbors_col": lambda: cells.neighbors_col(cell, 6, 1),
-        "pip_join": lambda: pip.pip_join(edge_pts, zones),
-        "pip_join_cells": lambda: pip.pip_join_cells(edge_pts, zones, res=6),
-        "salt_col": lambda: salting.salt_col("doc_id", 16),
-        "salted_count": lambda: salting.salted_count(wm, "span_offset", "doc_id"),
-        "transform_keep_errors": lambda: transform(
-            edge_pts, WEBMERC, x="lon", y="lat", out_prefix="wm_",
-            keep_errors=False),
+    pts = edge_pts.select("doc_id", "lon", "lat")
+    wm = edge_pts.selectExpr("doc_id", "lon AS wm_x", "lat AS wm_y")
+    keyed = edge_pts.select("doc_id", "span_offset", "lon")
+    narrow_docs = docs.selectExpr("*", "1 AS one")
+    templated_cases = {
+        "explode_media_points": (explode_media_points, narrow_docs),
+        "assign_tiles": (lambda d: tiles.assign_tiles(d, "wm_x", "wm_y", 8), wm),
+        "pip_join": (lambda d: pip.pip_join(d, zones), pts),
+        "pip_join_cells": (lambda d: pip.pip_join_cells(d, zones, res=6), pts),
+        "salted_count": (lambda d: salting.salted_count(d, "span_offset", "doc_id"),
+                         keyed),
+        "transform_keep_errors": (lambda d: transform(
+            d, WEBMERC, x="lon", y="lat", out_prefix="wm_", keep_errors=False),
+            pts),
     }
-    got = {name: _py4j_commands(spark, fn) for name, fn in cases.items()}
+    got, wide = {}, {}
+    for name, (fn, df) in templated_cases.items():
+        assert len(df.columns) == 3
+        w = _widened(df)
+        got[name] = _py4j_commands(spark, lambda: fn(df))
+        wide[name] = _py4j_commands(spark, lambda: fn(w))
+    for name, fn in {
+            "cell_col": lambda: cells.cell_col(lon, lat, 6),
+            "neighbors_col": lambda: cells.neighbors_col(cell, 6, 1),
+            "salt_col": lambda: salting.salt_col("doc_id", 16)}.items():
+        got[name] = _py4j_commands(spark, fn)
     over = {k: (v, PY4J_BOUND[k]) for k, v in got.items() if v > PY4J_BOUND[k]}
     assert not over, (over, got)
+    assert wide == {k: got[k] for k in wide}, (got, wide)
 
 
 def test_transform_py4j_commands_do_not_grow_with_width(spark, edge_pts):
