@@ -12,11 +12,8 @@ Python").
 
 from __future__ import annotations
 
-import itertools
-
+from proj_4_spark.sqltext import codegen_barrier
 from proj_4_spark.templates import templated
-
-_cg_seq = itertools.count()
 
 
 def _extract(key: str, value: str) -> str:
@@ -42,8 +39,6 @@ def explode_media_points(docs_df):
 
 
 def _explode(docs_df):
-    from pyspark.sql import functions as F
-
     out = (docs_df.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
            .where("span.kind = 'media'")
            .selectExpr(
@@ -55,9 +50,9 @@ def _explode(docs_df):
     # downstream projection twin (the doc-geo pipeline's webmerc leg)
     # the combined method reached 10,218 bytecodes — past HotSpot's
     # 8000-byte JIT ceiling, so the hottest headline region ran
-    # interpreted.  The observe costs one row-count accumulator and
+    # interpreted.  The barrier costs one row-count accumulator and
     # splits explode+regex from the projection math (both sub-8k).
-    return out.observe(f"_media_cg_{next(_cg_seq)}", F.expr("count(1) AS rows"))
+    return codegen_barrier(out)
 
 
 def span_fingerprint(docs_df, col: str = "span_fp"):

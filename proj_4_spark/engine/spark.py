@@ -14,16 +14,16 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   hot path is whole-stage codegen with zero Python workers.  The plan
   shapes are a cart/helmert datum pipeline (legs only), a single op's
   forward (legs -> kernel) and its inverse (kernel -> legs); a bare op
-  has zero legs.  A twin is analysed once per (operation, input
-  attributes, ...) over an empty placeholder frame and rebound onto each
-  caller's frame (proj_4_spark/templates.py, shared with the document
-  and spatial builders): analysis, not Python emission, is the cost of
-  a twin's plan build.
+  has zero legs.
 - An operation without a twin plan runs as ONE Arrow-batched pandas UDF
   per *whole pipeline* (kernel fusion; never one UDF per step —
   SURVEY.md §4.3).  The UDF returns a struct column so Catalyst sees an
   ordinary projection: filters still push down, unused input columns
   still prune, and no shuffle is introduced.
+- Either build is analysed once per (operation, input attributes, ...)
+  over an empty placeholder frame and rebound onto each caller's frame
+  (proj_4_spark/templates.py, shared with the document and spatial
+  builders): analysis, not Python emission, is the cost of a plan build.
 
 At 100 TB scale this stage is embarrassingly parallel: cost is
 (rows/partition) x kernel flops, Arrow transfer (UDF path only) is the
@@ -34,7 +34,6 @@ sizing.  No collect, no driver loops.
 from __future__ import annotations
 
 from functools import lru_cache
-import itertools
 import math
 from typing import NamedTuple
 
@@ -43,12 +42,13 @@ import pandas as pd
 
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
-from proj_4_spark.sqltext import quote_name
+from proj_4_spark.sqltext import (codegen_barrier, double, identifier,
+                                  quote_name)
 from proj_4_spark.templates import templated
 
 _STRUCT4 = "x double, y double, z double, t double"
-_SQL_INF = "CAST('Infinity' AS DOUBLE)"
-_SQL_NAN = "CAST('NaN' AS DOUBLE)"
+_SQL_INF = double(math.inf)
+_SQL_NAN = double(math.nan)
 _H = math.pi / 2.0
 _CE_LIMIT_JVM = 2.623395162778  # kernels/tmerc._CE_LIMIT (tmerc.cpp:409)
 
@@ -230,18 +230,6 @@ def _twin_plan(op, direction: str):
     return _TwinPlan(P, legs, None, pipeline)
 
 
-def _sql_dlit(v: float) -> str:
-    """Spark-SQL double literal (the D suffix keeps it out of DECIMAL).
-    repr round-trips, so a Python-folded constant lands bit-exact."""
-    v = float(v)
-    if math.isnan(v):
-        return _SQL_NAN
-    if math.isinf(v):
-        return ("CAST('Infinity' AS DOUBLE)" if v > 0
-                else "CAST('-Infinity' AS DOUBLE)")
-    return repr(v) + "D"
-
-
 class _SqlStager:
     """Accumulates staged-projection SQL stages; ONE selectExpr (py4j
     round-trip) per codegen region instead of hundreds of Column-object
@@ -256,7 +244,6 @@ class _SqlStager:
     frame that already has a column with that prefix."""
 
     PREFIX = "_jd_"
-    _split_seq = itertools.count()
 
     def __init__(self):
         self.tmp: list[str] = []
@@ -276,30 +263,21 @@ class _SqlStager:
 
     def barrier(self):
         """Close the current whole-stage-codegen region: apply() will
-        insert a CollectMetrics (observe) node here, which Spark does
-        not fuse.  HotSpot refuses to JIT methods over 8000 bytecodes
-        (-XX:DontCompileHugeMethods), so a staged chain whose single
-        fused consume() exceeds that runs INTERPRETED — measured 13x
-        slower on the lcc inverse twin.  Splitting into sub-8000
-        regions costs one row-count accumulator per region boundary
-        and keeps every region JIT-compiled."""
+        put sqltext.codegen_barrier here.  HotSpot refuses to JIT
+        methods over 8000 bytecodes (-XX:DontCompileHugeMethods), so a
+        staged chain whose single fused consume() exceeds that runs
+        INTERPRETED — measured 13x slower on the lcc inverse twin.
+        Splitting into sub-8000 regions costs one row-count accumulator
+        per region boundary and keeps every region JIT-compiled."""
         if self.stages:
             self._barriers.add(len(self.stages) - 1)
 
     def col(self, name: str) -> str:
         return self.PREFIX + name
 
-    @classmethod
-    def observe(cls, df):
-        """`df` under a CollectMetrics node with a fresh name: the
-        barrier that closes a codegen region.  The optimizer neither
-        collapses a Project nor pushes a Filter through it."""
-        from pyspark.sql import functions as F
-
-        return df.observe(f"{cls.PREFIX}cgsplit_{next(cls._split_seq)}",
-                          F.expr("count(1) AS rows"))
-
-    def apply(self, df, final_exprs: list[str]):
+    def apply(self, df, final_exprs: list[str], out_names: list[str]):
+        """The stages over `df`, then the select list `final_exprs`,
+        which writes the columns `out_names`."""
         clash = [c for c in df.columns if c.startswith(self.PREFIX)]
         if clash:
             # a pre-existing _jd_* column would either raise an
@@ -336,7 +314,7 @@ class _SqlStager:
                 dead = [c for c in emitted if c not in later]
                 if dead:
                     out = out.drop(*dead)
-                out = self.observe(out)
+                out = codegen_barrier(out)
         if pending:
             out = out.selectExpr("*", *pending)
         # replace-in-place contract: with the documented default call
@@ -347,8 +325,6 @@ class _SqlStager:
         # capture the inputs), so the colliding originals can be
         # dropped first.  (The replaced column moves to the end of the
         # schema — select by name.)
-        out_names = {e.rsplit(" AS ", 1)[1].strip().strip("`")
-                     for e in final_exprs}
         clash_out = [c for c in out.columns if c in out_names]
         if clash_out:
             out = out.drop(*clash_out)
@@ -364,7 +340,7 @@ def _sql_atan2_ieee(yc: str, xc: str) -> str:
     from its string form; only y == 0 rows evaluate that branch
     (CaseWhen codegen is lazy).  Args must be COLUMN REFS (they appear
     several times textually)."""
-    L = _sql_dlit
+    L = double
     xneg = f"startswith(cast({xc} AS STRING), '-')"
     yneg = f"startswith(cast({yc} AS STRING), '-')"
     return (f"CASE WHEN isnan({xc}) OR isnan({yc}) THEN {_SQL_NAN} "
@@ -377,7 +353,7 @@ def _sql_atan2_ieee(yc: str, xc: str) -> str:
 
 def _sql_adjlon(c: str) -> str:
     """adjlon over a COLUMN REF (appears 4x textually)."""
-    L = _sql_dlit
+    L = double
     PI, TWO_PI = L(math.pi), L(2.0 * math.pi)
     return (f"CASE WHEN abs({c}) >= {L(math.pi + 1e-12)} THEN "
             f"(({c}) + {PI}) - {TWO_PI} * floor((({c}) + {PI})"
@@ -391,7 +367,7 @@ def _clip1(v: str) -> str:
 def _sql_tsfn(st, phi: str, sinphi: str, e: float, tag: str) -> str:
     """tsfn (src/tsfn.cpp:6-17) over a COLUMN REF phi:
     tan((pi/2 - phi)/2) / ((1 - e sin phi)/(1 + e sin phi))^(e/2)."""
-    L = _sql_dlit
+    L = double
     es = st.stage(**{f"{tag}esin": f"{sinphi} * {L(e)}"})
     return (f"tan(0.5D * ({L(_H)} - {phi})) / power((1.0D - {es}) / "
             f"(1.0D + {es}), {L(0.5 * e)})")
@@ -399,7 +375,7 @@ def _sql_tsfn(st, phi: str, sinphi: str, e: float, tag: str) -> str:
 
 def _sql_qsfn(st, P, sinphi: str, tag: str) -> str:
     """Authalic q (src/qsfn.cpp:9-25) over a COLUMN REF sin(phi)."""
-    L = _sql_dlit
+    L = double
     con = st.stage(**{f"{tag}con": f"{sinphi} * {L(P.e)}"})
     return (f"{L(P.one_es)} * ({sinphi} / (1.0D - {con} * {con}) - "
             f"{L(0.5 / P.e)} * ln((1.0D - {con}) / (1.0D + {con})))")
@@ -407,7 +383,7 @@ def _sql_qsfn(st, P, sinphi: str, tag: str) -> str:
 
 def _sql_mlfn(st, ph: str, en, tag: str) -> str:
     """Flat meridional-arc series M(phi) (mlfn.hpp inline_pj_mlfn)."""
-    e0, e1, e2, e3, e4 = (_sql_dlit(float(v)) for v in en)
+    e0, e1, e2, e3, e4 = (double(v) for v in en)
     s = st.stage(**{f"{tag}ms": f"sin({ph})"})
     cph, s2 = st.stage(**{f"{tag}mc": f"cos({ph}) * {s}",
                           f"{tag}m2": f"{s} * {s}"})
@@ -418,7 +394,7 @@ def _sql_mlfn(st, ph: str, en, tag: str) -> str:
 def _sql_authlat(st, beta: str, apa, tag: str) -> str:
     """Authalic -> geodetic latitude (src/auth.cpp:33-38, 3-term closed
     series) over a COLUMN REF beta."""
-    a0, a1, a2 = (_sql_dlit(float(v)) for v in apa[:3])
+    a0, a1, a2 = (double(v) for v in apa[:3])
     t2 = st.stage(**{f"{tag}t2": f"{beta} + {beta}"})
     return (f"{beta} + {a0} * sin({t2}) + {a1} * sin({t2} + {t2}) "
             f"+ {a2} * sin({t2} + {t2} + {t2})")
@@ -437,11 +413,12 @@ def _sql_authlat(st, beta: str, apa, tag: str) -> str:
 
 
 def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool):
-    """Shared FORWARD entry: radian lam/phi, synthesized z/t, the
-    global error predicate (fwd.cpp:41-102)."""
-    L = _sql_dlit
+    """Shared FORWARD entry over the quoted input columns: radian
+    lam/phi, synthesized z/t, the global error predicate
+    (fwd.cpp:41-102)."""
+    L = double
     col = st.col
-    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
+    xq, yq = f"CAST({x} AS DOUBLE)", f"CAST({y} AS DOUBLE)"
     if degrees:
         lam_sql, phi_sql = f"radians({xq})", f"radians({yq})"
     else:
@@ -451,17 +428,17 @@ def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool):
     # NULLs instead of propagating
     lam_sql = f"coalesce({lam_sql}, {_SQL_NAN})"
     phi_sql = f"coalesce({phi_sql}, {_SQL_NAN})"
-    zz_sql = (f"coalesce(CAST(`{z}` AS DOUBLE), {_SQL_NAN})"
+    zz_sql = (f"coalesce(CAST({z} AS DOUBLE), {_SQL_NAN})"
               if z is not None else "0.0D")
-    tt_sql = (f"coalesce(CAST(`{t}` AS DOUBLE), {_SQL_NAN})"
+    tt_sql = (f"coalesce(CAST({t} AS DOUBLE), {_SQL_NAN})"
               if t is not None else "0.0D")
     st.stage(lam=lam_sql, phi=phi_sql, zz=zz_sql, tt=tt_sql)
-    err = (f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR "
+    err = (f"{x} IS NULL OR isnan({xq}) OR {y} IS NULL OR "
            f"isnan({yq}) OR {col('lam')} > 10.0D OR "
            f"{col('lam')} < -10.0D OR "
            f"abs({col('phi')}) - {L(_H)} > 1e-12D")
     if z is not None:
-        err += f" OR `{z}` IS NULL OR isnan({col('zz')})"
+        err += f" OR {z} IS NULL OR isnan({col('zz')})"
     st.stage(err=err)
 
 
@@ -471,7 +448,7 @@ def _emit_fwd(st: _SqlStager, P, lam: str, phi: str):
     REFS — for latlong the identity kernel and no planar finalize.
     Returns (x, y, bad): bad is the kernel's extra error predicate or
     None."""
-    L = _sql_dlit
+    L = double
     st.stage(lamw1=_sql_adjlon(lam))
     st.stage(lamd=f"({st.col('lamw1')} - {L(P.lam0)})")
     lamw, phic = st.stage(
@@ -495,7 +472,7 @@ def _emit_fwd_kernel(st: _SqlStager, P, lamw: str, phic: str, phi: str):
 
     if getattr(P, "fwd", None) is exact_e_fwd:
         return _etmerc_fwd_kernel(st, P, lamw, phic)
-    L = _sql_dlit
+    L = double
     S = st.stage
     Q = P.opaque
     name = P.name
@@ -808,7 +785,7 @@ def _emit_fwd_kernel(st: _SqlStager, P, lamw: str, phic: str, phi: str):
 def _laea_fwd_kernel(st, P, lamw: str, phic: str):
     """laea.cpp:35-137: authalic sin-beta = qsfn(sin phi)/qp; the
     xmf/ymf/qp/sinb1/cosb1 constants fold at plan time."""
-    L = _sql_dlit
+    L = double
     S = st.stage
     Q = P.opaque
     mode = Q["mode"]
@@ -865,7 +842,7 @@ def _laea_fwd_kernel(st, P, lamw: str, phic: str):
 def _stere_fwd_kernel(st, P, lamw: str, phic: str):
     """stere.cpp:44-140 (ellipsoidal 44-96, spherical 99-140); akm1
     folds k0/lat_ts at setup; all four aspect modes."""
-    L = _sql_dlit
+    L = double
     S = st.stage
     Q = P.opaque
     mode = Q["mode"]
@@ -919,7 +896,7 @@ def _omerc_fwd_kernel(st, P, lamw: str, phic: str):
     errstate (E/ts^B at the exact pole, the U log at |U|=1) sit inside
     interior/bad CASE branches so ANSI Spark never hits them."""
     Q = P.opaque
-    L = _sql_dlit
+    L = double
     S = st.stage
     EPS_O, TOL_O = 1.0e-10, 1.0e-7
     A, B, E = float(Q["A"]), float(Q["B"]), float(Q["E"])
@@ -974,7 +951,7 @@ def _moll_fwd_kernel(st, P, lamw: str, phic: str):
     (1+cos == 0 at the float pi) routes through num*Infinity to mirror
     numpy under ANSI mode."""
     Q = P.opaque
-    L = _sql_dlit
+    L = double
     S = st.stage
     kk = S(k_k=f"{L(float(Q['C_p']))} * sin({phic})")
     cur, done = phic, "false"
@@ -1007,7 +984,7 @@ def _etmerc_fwd_kernel(st, P, lamw: str, phic: str):
     step lands in its OWN stage instead."""
     Q = P.opaque["exact"]
     cbg, gtu = Q["cbg"], Q["gtu"]
-    L = _sql_dlit
+    L = double
     S = st.stage
     # gatg(cbg): real Clenshaw over cos/sin(2*phi) (tmerc.cpp:267-279)
     two, s2 = S(two=f"2.0D * cos(2.0D * {phic})", s2=f"sin(2.0D * {phic})")
@@ -1046,7 +1023,7 @@ def _sql_gatg(st, coeffs, two: str, tag: str) -> str:
     """Real Clenshaw sum (gatg, tmerc.cpp:267-279) over the COLUMN REF
     two = 2*cos(2*phi); every step is its own stage (each intermediate
     is read twice)."""
-    L = _sql_dlit
+    L = double
     h1, h2 = L(float(coeffs[-1])), "0.0D"
     for k in range(len(coeffs) - 2, -1, -1):
         h2, h1 = h1, st.stage(**{f"{tag}g{k}": f"-({h2}) + {two} * ({h1}) "
@@ -1057,7 +1034,7 @@ def _sql_gatg(st, coeffs, two: str, tag: str) -> str:
 def _sql_clens(st, coeffs, r: str, i: str, tag: str):
     """Complex Clenshaw recurrence (clenS, tmerc.cpp:283-311) over the
     COLUMN REFS r, i; returns the (hr, hi) refs."""
-    L = _sql_dlit
+    L = double
     hr, hi = L(float(coeffs[-1])), "0.0D"
     hr1 = hi1 = "0.0D"
     for k in range(len(coeffs) - 2, -1, -1):
@@ -1068,21 +1045,19 @@ def _sql_clens(st, coeffs, r: str, i: str, tag: str):
     return hr, hi
 
 
-def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask,
+def _outputs(st, names: list[str], xo: str, yo: str, zo: str, mask,
              mask_z: bool) -> list[str]:
-    """The final select list every twin shares: NULL -> NaN (the UDF
-    path's na_value), `mask` rows -> NaN on x/y (and z when mask_z), t
-    passed through."""
+    """The final select list every twin shares, writing the columns
+    `names` (x, y, z, t): NULL -> NaN (the UDF path's na_value), `mask`
+    rows -> NaN on x/y (and z when mask_z), t passed through."""
     def fin(v, masked):
         v = f"coalesce({v}, {_SQL_NAN})"
         if masked and mask:
             v = f"CASE WHEN {mask} THEN {_SQL_NAN} ELSE {v} END"
         return v
 
-    return [f"{fin(xo, True)} AS `{prefix}x`",
-            f"{fin(yo, True)} AS `{prefix}y`",
-            f"{fin(zo, mask_z)} AS `{prefix}z`",
-            f"{st.col('tt')} AS `{prefix}t`"]
+    values = (fin(xo, True), fin(yo, True), fin(zo, mask_z), st.col("tt"))
+    return [f"{v} AS {identifier(n)}" for v, n in zip(values, names)]
 
 
 # --- inverse pipeline -----------------------------------------------------
@@ -1102,21 +1077,22 @@ def _outputs(st, prefix: str, xo: str, yo: str, zo: str, mask,
 
 
 def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool):
-    """Inverse entry — the null/NaN error predicate and inv_prepare
-    scaling (to_meter*v - offset) * 1/a (src/inv.cpp:42-76), or radians
-    for a latlong op — then the family kernel and inv_finalize (lam0 +
-    adjlon, inv.cpp:117-124).  Returns radian (lam, phi) column refs."""
-    L = _sql_dlit
-    xq, yq = f"CAST(`{x}` AS DOUBLE)", f"CAST(`{y}` AS DOUBLE)"
+    """Inverse entry over the quoted input columns — the null/NaN error
+    predicate and inv_prepare scaling (to_meter*v - offset) * 1/a
+    (src/inv.cpp:42-76), or radians for a latlong op — then the family
+    kernel and inv_finalize (lam0 + adjlon, inv.cpp:117-124).  Returns
+    radian (lam, phi) column refs."""
+    L = double
+    xq, yq = f"CAST({x} AS DOUBLE)", f"CAST({y} AS DOUBLE)"
     if getattr(P, "is_latlong", False):
         xv, yv = ((f"radians({xq})", f"radians({yq})") if degrees
                   else (xq, yq))
     else:
         xv = f"({L(P.to_meter)} * {xq} - {L(P.x0)}) * {L(P.ra)}"
         yv = f"({L(P.to_meter)} * {yq} - {L(P.y0)}) * {L(P.ra)}"
-    err = f"`{x}` IS NULL OR isnan({xq}) OR `{y}` IS NULL OR isnan({yq})"
+    err = f"{x} IS NULL OR isnan({xq}) OR {y} IS NULL OR isnan({yq})"
     if z is not None:
-        err += f" OR `{z}` IS NULL OR isnan(CAST(`{z}` AS DOUBLE))"
+        err += f" OR {z} IS NULL OR isnan(CAST({z} AS DOUBLE))"
     # the coalesce makes xm/ym NON-NULLABLE (NULL -> NaN, the UDF path's
     # na_value), which drops the isNull plumbing from every downstream
     # codegen expression — without it the staged iterative kernels blow
@@ -1124,9 +1100,9 @@ def _emit_inv(st: _SqlStager, P, x, y, z, t, degrees: bool):
     # lcc inverse) and run interpreted, 13x slower
     xm, ym, _, _, _ = st.stage(
         xm=f"coalesce({xv}, {_SQL_NAN})", ym=f"coalesce({yv}, {_SQL_NAN})",
-        zz=(f"coalesce(CAST(`{z}` AS DOUBLE), {_SQL_NAN})"
+        zz=(f"coalesce(CAST({z} AS DOUBLE), {_SQL_NAN})"
             if z is not None else "0.0D"),
-        tt=(f"coalesce(CAST(`{t}` AS DOUBLE), {_SQL_NAN})"
+        tt=(f"coalesce(CAST({t} AS DOUBLE), {_SQL_NAN})"
             if t is not None else "0.0D"),
         err=err)
     if getattr(P, "is_latlong", False):
@@ -1145,7 +1121,7 @@ def _sql_phi2_stages(st, ts0: str, e: float, tag: str) -> str:
     applied but immediately overwritten by NaN, PJD_ERR_NON_CON_INV_PHI2),
     so the 15th update need not be emitted.  `ts0` must be a column
     ref.  Returns the φ column name."""
-    L = _sql_dlit
+    L = double
     S = st.stage
     TOL, ecc = L(1.0e-10), L(0.5 * e)
     ts, done = ts0, S(**{f"{tag}dn0": f"NOT (abs({ts0}) < {_SQL_INF})"})
@@ -1179,7 +1155,7 @@ def _sql_phi1_stages(st, qs: str, Te: float, one_es: float,
     updates; a lane still active entering the 16th iteration is the
     kernel's count<0 -> NaN lane (the C loop bound admits one more pass
     than phi2's).  `qs` must be a column ref."""
-    L = _sql_dlit
+    L = double
     S = st.stage
     TOL = L(1.0e-10)
     phi = S(**{f"{tag}p0": f"asin(least(greatest(0.5D * {qs}, -1.0D), "
@@ -1225,7 +1201,7 @@ def _sql_invmlfn_stages(st, arg: str, es: float, en, tag: str) -> str:
     NaN lanes keep iterating like the NumPy kernel (abs(NaN) >= EPS is
     True under both Spark's ordering and numpy's, and the updates stay
     NaN).  `arg` must be a column ref."""
-    L = _sql_dlit
+    L = double
     S = st.stage
     k = 1.0 / (1.0 - es)
     e0, e1, e2, e3, e4 = (L(float(v)) for v in en)
@@ -1259,7 +1235,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
     (lam, phi) before inv_finalize (lam0 + adjlon)."""
     from proj_4_spark.kernels.tmerc import exact_e_inv
 
-    L = _sql_dlit
+    L = double
     S = st.stage
     Q = P.opaque
     H = _H
@@ -1795,7 +1771,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
 
 
 def _sql_deg(v: str) -> str:
-    return f"{v} * {_sql_dlit(C.RAD_TO_DEG)}"
+    return f"{v} * {double(C.RAD_TO_DEG)}"
 
 
 # --- datum legs ------------------------------------------------------------
@@ -1819,7 +1795,7 @@ def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
     """
     from proj_4_spark.kernels.helmert import _params_at
 
-    L = _sql_dlit
+    L = double
     HALF_PI = L(math.pi / 2.0)
     adjlon = _sql_adjlon
     col = st.col
@@ -1939,9 +1915,12 @@ def _emit_twin(df, plan: _TwinPlan, x, y, z, t, degrees: bool,
     """Stage a _TwinPlan in one stager, pj_fwd4d / pj_inv4d's order:
     entry -> inverse kernel + inv_finalize -> datum legs -> forward
     prepare / kernel / finalize -> the shared select list (_outputs).
-    A kernel and its datum legs get separate codegen regions."""
-    L = _sql_dlit
+    A kernel and its datum legs get separate codegen regions.  The input
+    columns are read as ``F.col`` reads them (sqltext.quote_name)."""
+    L = double
     st = _SqlStager()
+    x, y = quote_name(x), quote_name(y)
+    z, t = (None if c is None else quote_name(c) for c in (z, t))
     if plan.inv is None:
         _entry_stages(st, x, y, z, t, degrees)
         lam, phi, zz = st.col("lam"), st.col("phi"), st.col("zz")
@@ -1993,8 +1972,9 @@ def _emit_twin(df, plan: _TwinPlan, x, y, z, t, degrees: bool,
             zz = f"{L(P.vfr_meter)} * ({zz} + {L(P.z0)})"
     if degrees and (plan.fwd is None or plan.fwd.is_latlong):
         lam, phi = _sql_deg(lam), _sql_deg(phi)
-    return st.apply(df, _outputs(st, out_prefix, lam, phi, zz,
-                                 " OR ".join(mask), mask_z=plan.pipeline))
+    names = [f"{out_prefix}{c}" for c in "xyzt"]
+    return st.apply(df, _outputs(st, names, lam, phi, zz, " OR ".join(mask),
+                                 mask_z=plan.pipeline), names)
 
 
 _DIRS = {"fwd": "fwd", "forward": "fwd",
@@ -2073,46 +2053,51 @@ def transform(
     takes.  Twins stage through temporary ``_jd_*`` columns: an input
     column with that prefix raises ValueError.
 
-    A twin is analysed once per template key — (session, projstring,
+    ``x``, ``y``, ``z`` and ``t`` are read as ``F.col`` reads a name: a
+    dot follows a qualifier or reaches a struct field (``"a.lon"``), and
+    a name that contains a dot or a backtick is written in backticks
+    (``"`lo.n`"``, a backtick doubled).  The outputs are named whole,
+    as ``withColumn`` names a column: ``out_prefix="p."`` writes a
+    column named ``p.x``.
+
+    Both paths build through one template (proj_4_spark/templates.py):
+    the operation is analysed once per key — (session, projstring,
     direction, x, y, z, t, degrees, out_prefix, keep_errors, the input's
     output attributes with their nullability, metadata and qualifiers,
     ``spark.sql.ansi.enabled``, ``spark.sql.caseSensitive``) — and every
     call, the first included, rebinds that analysed template onto ``df``
-    (proj_4_spark/templates.py; the 256 most recently used templates of
-    all builders are kept).  The rebound plan is marked analysed, so a
-    warm call runs no analyzer rule, and it costs a fixed number of py4j
-    commands, however wide ``df`` is.  The rebinding reaches Catalyst
-    through ``df._jdf`` and Spark-internal plan methods
-    (``transformAllExpressions``, ``transformUp``, the
-    ``private[catalyst]`` ``setAnalyzed``), so a twin needs a Classic
-    (not a Spark Connect) session, as the footer reads in ``scale.py``
-    do.  The ``_jd_cgsplit_*`` observations at a twin's codegen
-    barriers are named once per template, so all outputs of one
-    template share them.  ``keep_errors=False`` filters behind one more
-    such barrier, also part of the template and named once per
-    template; on the Arrow-UDF path it is built per call.
+    (the 256 most recently used templates of all builders are kept).
+    The rebound plan is marked analysed, so a warm call runs no analyzer
+    rule, and it costs a fixed number of py4j commands, however wide
+    ``df`` is.  The rebinding reaches Catalyst through ``df._jdf`` and
+    Spark-internal plan methods (``transformAllExpressions``,
+    ``transformUp``, the ``private[catalyst]`` ``setAnalyzed``), so
+    ``transform()`` needs a Classic (not a Spark Connect) session, as the
+    footer reads in ``scale.py`` do.  The ``_jd_cgsplit_*`` observations
+    at a twin's codegen barriers are named once per template, so all
+    outputs of one template share them.  ``keep_errors=False`` filters
+    behind one more such barrier, also part of the template.
 
     Returns ``df`` with four new columns ``{out_prefix}{x,y,z,t}``.
     """
-    # validate arguments + proj-string on the driver (fail fast at plan
-    # time, not as an executor traceback at collect time)
-    direction = _direction(direction)
+    # a bad direction raises here; a bad proj-string raises while the
+    # template is built, on the driver, and is not kept
+    return templated(_build, (projstring, _direction(direction), x, y, z, t,
+                              degrees, out_prefix, keep_errors), df)
+
+
+def _build(df, projstring: str, direction: str, x, y, z, t,
+           degrees: bool, out_prefix: str, keep_errors: bool):
+    """(projstring, direction) over `df`, filtered when `keep_errors` is
+    false: its twin when it has a twin plan, else the Arrow UDF.  The
+    build transform() analyses once per template key."""
     op = _cached_operation(projstring)
-    if _twin_plan(op, direction) is not None:
-        return templated(_twin_build, (projstring, direction, x, y, z, t,
-                                       degrees, out_prefix, keep_errors), df)
-    out = _udf_apply(df, op, projstring, direction, x, y, z, t, degrees,
-                     out_prefix)
-    return out if keep_errors else _finite_rows(out, out_prefix)
-
-
-def _twin_build(df, projstring: str, direction: str, x, y, z, t,
-                degrees: bool, out_prefix: str, keep_errors: bool):
-    """The twin of (projstring, direction) over `df`, filtered when
-    `keep_errors` is false: the build transform() analyses once per
-    template key (proj_4_spark/templates.py)."""
-    out = _emit_twin(df, _twin_plan(_cached_operation(projstring), direction),
-                     x, y, z, t, degrees, out_prefix)
+    plan = _twin_plan(op, direction)
+    if plan is not None:
+        out = _emit_twin(df, plan, x, y, z, t, degrees, out_prefix)
+    else:
+        out = _udf_apply(df, op, projstring, direction, x, y, z, t, degrees,
+                         out_prefix)
     return out if keep_errors else _finite_rows(out, out_prefix)
 
 
@@ -2122,9 +2107,8 @@ def _finite_rows(out, out_prefix: str):
     twin's Projects it would inline the kernel (97 KB of SQL on a
     helmert pipeline, past what Janino compiles), and on the Arrow-UDF
     path run the UDF twice."""
-    ox = quote_name(f"{out_prefix}x")
-    return _SqlStager.observe(out).where(
-        f"{ox} IS NOT NULL AND NOT isnan({ox})")
+    ox = identifier(f"{out_prefix}x")
+    return codegen_barrier(out).where(f"{ox} IS NOT NULL AND NOT isnan({ox})")
 
 
 def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,

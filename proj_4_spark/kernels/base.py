@@ -166,6 +166,17 @@ class PJ:
         return key in self.params
 
 
+def spherical(P: PJ, fwd, inv=None) -> PJ:
+    """The setup tail of a spherical-only projection: the sphere (es=0),
+    its kernels (no inverse by default), radians in, classic units out."""
+    P.es = 0.0
+    P.fwd = fwd
+    P.inv = inv
+    P.left = UNITS_RADIANS
+    P.right = UNITS_CLASSIC
+    return P
+
+
 def fresh(x, y, z, t):
     """Writable float64 copies of a coordinate batch."""
     return (

@@ -13,18 +13,9 @@ import math
 import numpy as np
 
 from proj_4_spark.kernels import common as C
-from proj_4_spark.kernels.base import PJ, ProjError, UNITS_CLASSIC, UNITS_RADIANS
+from proj_4_spark.kernels.base import PJ, ProjError, spherical
 
 _TOL = 1e-10
-
-
-def _sph(P: PJ, fwd, inv=None) -> PJ:
-    P.es = 0.0
-    P.fwd = fwd
-    P.inv = inv
-    P.left = UNITS_RADIANS
-    P.right = UNITS_CLASSIC
-    return P
 
 
 def setup_nicol(P: PJ) -> PJ:
@@ -60,7 +51,7 @@ def setup_nicol(P: PJ) -> PJ:
         )
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def _bacon_like(P: PJ, bacn: bool, ortl: bool) -> PJ:
@@ -83,7 +74,7 @@ def _bacon_like(P: PJ, bacn: bool, ortl: bool) -> PJ:
         x = np.where(ax < EPS, 0.0, x)
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_bacon(P: PJ) -> PJ:
@@ -115,7 +106,7 @@ def setup_august(P: PJ) -> PJ:
         y = M * y1 * (3.0 + 3.0 * x12 - y12)
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_lagrng(P: PJ) -> PJ:
@@ -161,7 +152,7 @@ def setup_lagrng(P: PJ) -> PJ:
         lam = np.where(polar, 0.0, lam)
         return np.where(bad, np.nan, lam), np.where(bad, np.nan, phi), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def _vandg23(P: PJ, vdg3: bool) -> PJ:
@@ -190,7 +181,7 @@ def _vandg23(P: PJ, vdg3: bool) -> PJ:
         y = np.where(axis, y_axis, y)
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_vandg2(P: PJ) -> PJ:
@@ -232,7 +223,7 @@ def setup_vandg4(P: PJ) -> PJ:
         y = np.where(eq, 0.0, np.where(axis, phi, y))
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_mbtfpp(P: PJ) -> PJ:
@@ -262,7 +253,7 @@ def setup_mbtfpp(P: PJ) -> PJ:
         bad = bad1 | bad2
         return np.where(bad, np.nan, lam), np.where(bad, np.nan, phi), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_mbtfpq(P: PJ) -> PJ:
@@ -307,7 +298,7 @@ def setup_mbtfpq(P: PJ) -> PJ:
         bad = bad1 | bad2
         return np.where(bad, np.nan, lam), np.where(bad, np.nan, phi), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def _sts(P: PJ, p: float, q: float, tan_mode: bool) -> PJ:
@@ -337,7 +328,7 @@ def _sts(P: PJ, p: float, q: float, tan_mode: bool) -> PJ:
         lam = lam / (c * c) if tan_mode else lam * c
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_fouc(P: PJ) -> PJ:
@@ -395,7 +386,7 @@ def setup_oea(P: PJ) -> PJ:
         lam = C.aatan2(sz * np.sin(Az), cp0 * cz - sp0 * sz * cAz)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_tpeqd(P: PJ) -> PJ:
@@ -460,4 +451,4 @@ def setup_tpeqd(P: PJ) -> PJ:
         lam2 = np.arctan2(cp * np.sin(lam), sa * cp * s2 - ca * sp) + lamc
         return lam2, phi2, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)

@@ -12,18 +12,10 @@ import math
 import numpy as np
 
 from proj_4_spark.kernels import common as C
-from proj_4_spark.kernels.base import PJ, ProjError, UNITS_CLASSIC, UNITS_RADIANS
+from proj_4_spark.kernels.base import (PJ, ProjError, UNITS_CLASSIC,
+                                       UNITS_RADIANS, spherical)
 
 _EPS10 = 1e-10
-
-
-def _sph(P: PJ, fwd, inv=None) -> PJ:
-    P.es = 0.0
-    P.fwd = fwd
-    P.inv = inv
-    P.left = UNITS_RADIANS
-    P.right = UNITS_CLASSIC
-    return P
 
 
 def _sconics(P: PJ, type_: str) -> PJ:
@@ -105,7 +97,7 @@ def _sconics(P: PJ, type_: str) -> PJ:
             phi = rho_c - rho
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_euler(P):
@@ -198,7 +190,7 @@ def setup_airy(P: PJ) -> PJ:
                 y = -y
         return np.where(bad, np.nan, x), np.where(bad, np.nan, y), z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_gins8(P: PJ) -> PJ:
@@ -213,7 +205,7 @@ def setup_gins8(P: PJ) -> PJ:
         x = x * (0.87 - Cl * t2 * t2)
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_lask(P: PJ) -> PJ:
@@ -229,7 +221,7 @@ def setup_lask(P: PJ) -> PJ:
         y = phi * (b01 + l2 * (b21 + p2 * b23 + l2 * b41) + p2 * (b03 + p2 * b05))
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_larr(P: PJ) -> PJ:
@@ -241,7 +233,7 @@ def setup_larr(P: PJ) -> PJ:
         y = phi / (np.cos(0.5 * phi) * np.cos(SIXTH * lam))
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)
 
 
 def setup_tobmerc(P: PJ) -> PJ:
@@ -291,4 +283,4 @@ def setup_rpoly(P: PJ) -> PJ:
         y = np.where(eq, -P.phi0, phi - P.phi0 + (1.0 - np.cos(fa2)) * cot)
         return x, y, z, t
 
-    return _sph(P, fwd)
+    return spherical(P, fwd)

@@ -13,16 +13,7 @@ import math
 import numpy as np
 
 from proj_4_spark.kernels import common as C
-from proj_4_spark.kernels.base import PJ, ProjError, UNITS_CLASSIC, UNITS_RADIANS
-
-
-def _sph(P: PJ, fwd, inv) -> PJ:
-    P.es = 0.0
-    P.fwd = fwd
-    P.inv = inv
-    P.left = UNITS_RADIANS
-    P.right = UNITS_CLASSIC
-    return P
+from proj_4_spark.kernels.base import PJ, ProjError, spherical
 
 
 # --- eck1 (eck1.cpp) ---------------------------------------------------------
@@ -39,7 +30,7 @@ def setup_eck1(P: PJ) -> PJ:
         lam = x / (_E1_FC * (1.0 - _E1_RP * np.abs(phi)))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- eck2 (eck2.cpp) ---------------------------------------------------------
@@ -70,7 +61,7 @@ def setup_eck2(P: PJ) -> PJ:
         lam = np.where(bad, np.nan, lam)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- eck3 family (eck3.cpp): x = Cx*lam*(A + asqrt(1 - B*phi^2)) --------------
@@ -86,7 +77,7 @@ def _eck3_family(P: PJ, C_x, C_y, A, B) -> PJ:
             lam = np.where(denom == 0.0, np.nan, x / np.where(denom == 0, 1.0, denom))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_eck3(P: PJ) -> PJ:
@@ -149,7 +140,7 @@ def setup_eck4(P: PJ) -> PJ:
         phi = C.aasin((phi + np.sin(phi) * (c + 2.0)) * _E4_RCP)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- eck5 (eck5.cpp) ----------------------------------------------------------
@@ -168,7 +159,7 @@ def setup_eck5(P: PJ) -> PJ:
         lam = _E5_RXF * x / (1.0 + np.cos(phi))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- mill (mill.cpp) ----------------------------------------------------------
@@ -180,7 +171,7 @@ def setup_mill(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         return x, 2.5 * (np.arctan(np.exp(0.8 * y)) - C.M_FORTPI), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- gall (gall.cpp) ----------------------------------------------------------
@@ -197,7 +188,7 @@ def setup_gall(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         return _G_RXF * x, 2.0 * np.arctan(y * _G_RYF), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- wag2 (wag2.cpp) ----------------------------------------------------------
@@ -215,7 +206,7 @@ def setup_wag2(P: PJ) -> PJ:
         ph = C.aasin(np.sin(ph) / C_p1) / C_p2
         return lam, ph, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- wag3 (wag3.cpp) ----------------------------------------------------------
@@ -231,7 +222,7 @@ def setup_wag3(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         return x / (C_x * np.cos(TT * y)), y, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- wag7 (wag7.cpp; forward only) ---------------------------------------------
@@ -246,12 +237,7 @@ def setup_wag7(P: PJ) -> PJ:
         D = 1.0 / np.sqrt(0.5 * (1.0 + ct * np.cos(lam3)))
         return x * D, y * 1.24104 * D, z, t
 
-    P.es = 0.0
-    P.fwd = fwd
-    P.inv = None
-    P.left = UNITS_RADIANS
-    P.right = UNITS_CLASSIC
-    return P
+    return spherical(P, fwd)
 
 
 # --- putp2 (putp2.cpp; Newton NITER=10 EPS=1e-10) -------------------------------
@@ -294,7 +280,7 @@ def setup_putp2(P: PJ) -> PJ:
         ph = C.aasin((ph + np.sin(ph) * (c - 1.0)) / C_p)
         return lam, ph, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 # --- putp3 / putp3p (putp3.cpp) --------------------------------------------------
@@ -309,7 +295,7 @@ def _putp3(P: PJ, A: float) -> PJ:
         phi = y / CC
         return x / (CC * (1.0 - A * phi * phi)), phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_putp3(P: PJ) -> PJ:
@@ -339,7 +325,7 @@ def _putp4p(P: PJ, C_x: float, C_y: float) -> PJ:
         ph = C.aasin(1.13137085 * np.sin(ph))
         return lam, ph, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_putp4p(P: PJ) -> PJ:
@@ -362,7 +348,7 @@ def _putp5(P: PJ, A: float, B: float) -> PJ:
         phi = y / CC
         return x / (CC * (A - B * np.sqrt(1.0 + D * phi * phi))), phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_putp5(P: PJ) -> PJ:
@@ -408,7 +394,7 @@ def _putp6(P: PJ, C_x, C_y, A, B, D) -> PJ:
         ph2 = C.aasin(((A - r) * ph - np.log(ph + r)) / B)
         return lam, ph2, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_putp6(P: PJ) -> PJ:
@@ -435,7 +421,7 @@ def _urmfps(P: PJ, n: float) -> PJ:
         lam = x / (C_x * np.cos(yy))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_urmfps(P: PJ) -> PJ:

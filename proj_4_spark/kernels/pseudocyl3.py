@@ -15,18 +15,9 @@ import math
 import numpy as np
 
 from proj_4_spark.kernels import common as C
-from proj_4_spark.kernels.base import PJ, ProjError, UNITS_CLASSIC, UNITS_RADIANS
+from proj_4_spark.kernels.base import PJ, ProjError, spherical
 
 _EPS10 = 1e-10
-
-
-def _sph(P: PJ, fwd, inv) -> PJ:
-    P.es = 0.0
-    P.fwd = fwd
-    P.inv = inv
-    P.left = UNITS_RADIANS
-    P.right = UNITS_CLASSIC
-    return P
 
 
 def _newton(phi0, k, num_den, niter, tol):
@@ -59,7 +50,7 @@ def setup_cc(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         return x, np.arctan(y), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_tcc(P: PJ) -> PJ:
@@ -73,7 +64,7 @@ def setup_tcc(P: PJ) -> PJ:
         y = np.arctan2(np.tan(phi), np.cos(lam))
         return np.where(bad, np.nan, x), np.where(bad, np.nan, y), z, t
 
-    return _sph(P, fwd, None)
+    return spherical(P, fwd, None)
 
 
 def setup_tcea(P: PJ) -> PJ:
@@ -91,7 +82,7 @@ def setup_tcea(P: PJ) -> PJ:
         lam = np.arctan2(xx, tt * np.cos(yy))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_loxim(P: PJ) -> PJ:
@@ -123,7 +114,7 @@ def setup_loxim(P: PJ) -> PJ:
         lam = np.where(small, x / cosphi1, np.where(degenerate, 0.0, lam_big))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_collg(P: PJ) -> PJ:
@@ -151,7 +142,7 @@ def setup_collg(P: PJ) -> PJ:
         lam = np.where(bad, np.nan, lam)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_crast(P: PJ) -> PJ:
@@ -170,7 +161,7 @@ def setup_crast(P: PJ) -> PJ:
         lam = x * RXM / (2.0 * np.cos((phi + phi) * TH) - 1)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_fahey(P: PJ) -> PJ:
@@ -192,7 +183,7 @@ def setup_fahey(P: PJ) -> PJ:
                            x / (0.819152 * np.sqrt(np.where(yy <= 0, 1.0, yy))))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_fouc_s(P: PJ) -> PJ:
@@ -222,7 +213,7 @@ def setup_fouc_s(P: PJ) -> PJ:
         lam = x * (n + n1 * V) / V
         return lam, ph, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_wink1(P: PJ) -> PJ:
@@ -235,7 +226,7 @@ def setup_wink1(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         return 2.0 * x / (cosphi1 + np.cos(y)), y, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_wink2(P: PJ) -> PJ:
@@ -264,7 +255,7 @@ def setup_wink2(P: PJ) -> PJ:
         lam, phi = C.generic_inverse_2d(_fwd_core, _P, x, y, x, y)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_boggs(P: PJ) -> PJ:
@@ -286,7 +277,7 @@ def setup_boggs(P: PJ) -> PJ:
         y = FYC * (phi + math.sqrt(2.0) * np.sin(theta))
         return x, y, z, t
 
-    return _sph(P, fwd, None)
+    return spherical(P, fwd, None)
 
 
 def setup_denoy(P: PJ) -> PJ:
@@ -302,7 +293,7 @@ def setup_denoy(P: PJ) -> PJ:
         )
         return x, phi, z, t
 
-    return _sph(P, fwd, None)
+    return spherical(P, fwd, None)
 
 
 def _aitoff_like(P: PJ, winkel: bool, cosphi1: float) -> PJ:
@@ -330,7 +321,7 @@ def _aitoff_like(P: PJ, winkel: bool, cosphi1: float) -> PJ:
         lam, phi = C.generic_inverse_2d(_fwd_core, _P, x, y, x, y)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_aitoff(P: PJ) -> PJ:
@@ -383,7 +374,7 @@ def setup_hammer(P: PJ) -> PJ:
         phi = C.aasin(zz * y)
         return np.where(bad, np.nan, lam), np.where(bad, np.nan, phi), z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_nell(P: PJ) -> PJ:
@@ -405,7 +396,7 @@ def setup_nell(P: PJ) -> PJ:
         phi = C.aasin(0.5 * (y + np.sin(y)))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_nell_h(P: PJ) -> PJ:
@@ -427,7 +418,7 @@ def setup_nell_h(P: PJ) -> PJ:
         phi = np.where(conv, ph, np.where(p < 0.0, -C.M_HALFPI, C.M_HALFPI))
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_mbt_fps(P: PJ) -> PJ:
@@ -455,7 +446,7 @@ def setup_mbt_fps(P: PJ) -> PJ:
         phi = C.aasin((C1 * np.sin(tt) + np.sin(phi)) / C3)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def _poly_cyl(P: PJ, fwd_x, fwd_y, B_coef, C_coef, max_y, lam_from):
@@ -487,7 +478,7 @@ def _poly_cyl(P: PJ, fwd_x, fwd_y, B_coef, C_coef, max_y, lam_from):
         lam = np.where(converged, lam_from(x, yc), np.nan)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)
 
 
 def setup_natearth(P: PJ) -> PJ:
@@ -568,4 +559,4 @@ def setup_times(P: PJ) -> PJ:
         phi = 2 * np.arctan(T)
         return lam, phi, z, t
 
-    return _sph(P, fwd, inv)
+    return spherical(P, fwd, inv)

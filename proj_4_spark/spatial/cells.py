@@ -82,32 +82,26 @@ def cell_expr(lon: str, lat: str, res: int) -> str:
     return _cell_text(lon, lat, res, "D")
 
 
+def _sql(col) -> str:
+    """SQL text of `col` (sqltext.column_sql), or ValueError naming it."""
+    sql = column_sql(col)
+    if sql is None:
+        raise ValueError(
+            f"{col} does not render to SQL text: pass F.col(name) or "
+            f"F.expr(sql)")
+    return sql
+
+
 def cell_col(lon_col, lat_col, res: int):
     """JVM-side Column expression (stays inside whole-stage codegen),
     equal to cell_np: -1 for a NULL, NaN or infinite coordinate,
-    |lon| > 360 or |lat| > 90.  A plain column reference or an
-    ``F.expr`` renders into one SQL text (sqltext.column_sql); any
-    other Column is composed from Columns."""
+    |lon| > 360 or |lat| > 90.  `lon_col`/`lat_col` are ``F.col`` or
+    ``F.expr`` Columns, rendered into one SQL text
+    (sqltext.column_sql); any other Column raises ValueError
+    (``F.expr("lon + 0.5D")`` stands for ``F.col("lon") + 0.5``)."""
     from pyspark.sql import functions as F
 
-    lon, lat = column_sql(lon_col), column_sql(lat_col)
-    if lon is not None and lat is not None:
-        return F.expr(cell_expr(lon, lat, res))
-    n = 1 << res
-    ix, iy = (F.least(F.greatest(F.floor((c + lo) / span * n).cast("long"),
-                                 F.lit(0)), F.lit(n - 1))
-              for c, lo, span in ((lon_col, 180.0, 360.0),
-                                  (lat_col, 90.0, 180.0)))
-    return (F.when((F.abs(lon_col) <= 360.0) & (F.abs(lat_col) <= 90.0),
-                   _pack_col(res, iy, ix))
-            .otherwise(-1))
-
-
-def _pack_col(res: int, iy, ix):
-    """Column cell id (res << 58) + (iy << 29) + ix of index Columns."""
-    from pyspark.sql import functions as F
-
-    return (F.lit(res).cast("long") * (1 << RES_SHIFT)) + (iy * (1 << IY_SHIFT)) + ix
+    return F.expr(cell_expr(_sql(lon_col), _sql(lat_col), res))
 
 
 def decode_np(cell):
@@ -164,28 +158,13 @@ def neighbors_expr(cell: str, res: int, ring=1) -> str:
 
 def neighbors_col(cell_col_, res: int, ring=1):
     """JVM-side neighbor ring as an array column (for explode-join);
-    `ring` is an int or a per-row Column (neighbors_expr).  Renders to
-    one SQL text like cell_col, else is composed from Columns."""
+    `ring` is an int or a per-row Column (neighbors_expr).  The Columns
+    are ``F.col`` or ``F.expr`` Columns, as in cell_col; any other
+    raises ValueError."""
     from pyspark.sql import Column, functions as F
 
-    cell = column_sql(cell_col_)
-    ring_sql = column_sql(ring) if isinstance(ring, Column) else str(ring)
-    if cell is not None and ring_sql is not None:
-        return F.expr(neighbors_expr(cell, res, ring_sql))
-    n = F.lit(1 << res).cast("long")
-    r = (ring if isinstance(ring, Column) else F.lit(ring)).cast("long")
-    c = F.greatest(cell_col_, F.lit(0).cast("long"))
-    iy = F.shiftright(c, IY_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - IY_SHIFT)) - 1)
-    )
-    ix = c.bitwiseAND(F.lit((1 << IY_SHIFT) - 1))
-    rows = F.sequence(F.greatest(iy - r, F.lit(0).cast("long")),
-                      F.least(iy + r, n - 1))
-    cols = (F.when(2 * r + 1 >= n, F.sequence(F.lit(0).cast("long"), n - 1))
-            .otherwise(F.transform(F.sequence(ix - r, ix + r),
-                                   lambda x: F.pmod(x, n))))
-    return F.when(cell_col_ < 0, F.array()).otherwise(F.flatten(F.transform(
-        rows, lambda y: F.transform(cols, lambda x: _pack_col(res, y, x)))))
+    ring = _sql(ring) if isinstance(ring, Column) else str(ring)
+    return F.expr(neighbors_expr(_sql(cell_col_), res, ring))
 
 
 def cell_size_deg(res: int) -> tuple[float, float]:

@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 
 from proj_4_spark.spatial.cells import cell_expr, index_exprs, pack_expr
-from proj_4_spark.sqltext import quote_name
+from proj_4_spark.sqltext import codegen_barrier, quote_name
 from proj_4_spark.templates import templated
 
 _BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
@@ -165,8 +165,6 @@ def pip_join_cells(points_df, zones_df, res: int = 6,
 def _pip_join_cells(points_df, zones_df, res: int, lon: str, lat: str):
     from pyspark.sql import functions as F
 
-    from proj_4_spark.engine.spark import _SqlStager
-
     lon, lat = quote_name(lon), quote_name(lat)
     zones_cells = zones_df.selectExpr(
         "zone_id", *_BBOX, f"explode({_zone_cells_sql(res)}) AS cell")
@@ -178,6 +176,6 @@ def _pip_join_cells(points_df, zones_df, res: int, lon: str, lat: str):
     # test's canonical references, and InferFiltersFromConstraints
     # moves the test onto the rings side of the zone_id join, where the
     # point columns are missing (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
-    hits = _SqlStager.observe(cand.join(_rings(zones_df), "zone_id", "inner"))
+    hits = codegen_barrier(cand.join(_rings(zones_df), "zone_id", "inner"))
     return (hits.where(_in_ring(lon, lat))
             .drop("ring_lon", "ring_lat", *_BBOX, "cell"))

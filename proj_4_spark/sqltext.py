@@ -9,11 +9,16 @@ frees it.
 
 Two rules keep the text equal to the Column it replaces: doubles are
 written with a ``D`` suffix (Spark SQL parses ``180.0`` as DECIMAL), and
-a caller's column name is quoted the way ``F.col`` parses it.
+a caller's column name is quoted the way ``F.col`` parses it.  A column
+the library names itself (an output) is written whole, as
+``withColumn`` takes a name.  The builders close their codegen regions
+with one barrier.
 """
 
 from __future__ import annotations
 
+import itertools
+import math
 import re
 
 _PART = r"`(?:[^`]|``)*`|[^.`]+"
@@ -32,9 +37,36 @@ def quote_name(name: str) -> str:
                     for p in re.findall(_PART, name))
 
 
+def identifier(name: str) -> str:
+    """``name`` as one whole SQL identifier, as ``withColumn`` and
+    ``drop`` take it: backticked, a backtick doubled, a dot kept."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def double(x: float) -> str:
-    """A DOUBLE literal."""
-    return f"{float(x)!r}D"
+    """A DOUBLE literal.  repr round-trips, so a Python-folded constant
+    lands bit-exact; NaN and the infinities are casts from strings."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return ("CAST('Infinity' AS DOUBLE)" if x > 0
+                else "CAST('-Infinity' AS DOUBLE)")
+    return f"{x!r}D"
+
+
+_barrier_seq = itertools.count()
+
+
+def codegen_barrier(df):
+    """`df` under a CollectMetrics (observe) node with a fresh
+    ``_jd_cgsplit_*`` name: Spark does not fuse whole-stage codegen
+    across it, the optimizer neither collapses a Project nor pushes a
+    Filter through it, and it costs one row-count accumulator."""
+    from pyspark.sql import functions as F
+
+    return df.observe(f"_jd_cgsplit_{next(_barrier_seq)}",
+                      F.expr("count(1) AS rows"))
 
 
 def column_sql(col) -> str | None:

@@ -9,6 +9,7 @@ pinned number of py4j commands, whatever the width of its input.
 """
 
 import collections
+import itertools
 import re
 
 import numpy as np
@@ -28,6 +29,8 @@ from proj_4_spark.sqltext import column_sql, quote_name
 from tests.test_plans import _assert_codegen_health
 
 WEBMERC = "+proj=webmerc +ellps=WGS84"
+UTM = "+proj=utm +zone=32 +ellps=GRS80"
+ROBIN = "+proj=robin"   # its inverse runs on the Arrow-UDF path
 
 
 # ------------------------------------------------ Column-built references
@@ -295,18 +298,20 @@ def test_cell_and_neighbors_col_plans(spark, ansi, edge_pts):
     for new, ref in [
         (cells.cell_col(F.col("lon"), F.col("lat"), 6),
          ref_cell_col(F.col("lon"), F.col("lat"), 6)),
-        # a Column that does not render to SQL keeps the Column path
-        (cells.cell_col(F.col("lon") + 0.5, F.col("lat"), 6),
+        (cells.cell_col(F.expr("lon + 0.5D"), F.col("lat"), 6),
          ref_cell_col(F.col("lon") + 0.5, F.col("lat"), 6)),
         (cells.neighbors_col(cells.cell_col(F.col("lon"), F.col("lat"), 6), 6),
          ref_neighbors_col(ref_cell_col(F.col("lon"), F.col("lat"), 6), 6)),
-        (cells.neighbors_col(F.col("span_offset").cast("long"), 3, F.col("ring")),
+        (cells.neighbors_col(F.expr("CAST(span_offset AS BIGINT)"), 3, F.col("ring")),
          ref_neighbors_col(F.col("span_offset").cast("long"), 3, F.col("ring"))),
-        (cells.neighbors_col(F.lit(7).cast("long"), 2, 2),
+        (cells.neighbors_col(F.expr("CAST(7 AS BIGINT)"), 2, 2),
          ref_neighbors_col(F.lit(7).cast("long"), 2, 2)),
     ]:
         assert (_canonical_plan(p.select(new.alias("c")))
                 == _canonical_plan(p.select(ref.alias("c"))))
+    # a Column that does not render to SQL text is refused, by name
+    with pytest.raises(ValueError, match="lon"):
+        cells.cell_col(F.col("lon") + 0.5, F.col("lat"), 6)
 
 
 def test_assign_tiles_plan(spark, ansi, edge_pts):
@@ -462,7 +467,8 @@ def test_neighbors_col_matches_numpy(spark, edge_pts):
                                           .tolist()))
     # the cell of a point cell_np does not take has no neighbors
     bad = spark.range(1).select(cells.neighbors_col(
-        cells.cell_col(F.lit(float("nan")), F.lit(0.0), 4), 4, 2).alias("nb"))
+        cells.cell_col(F.expr("CAST('NaN' AS DOUBLE)"), F.expr("0.0D"), 4),
+        4, 2).alias("nb"))
     assert bad.first().nb == []
 
 
@@ -596,6 +602,69 @@ def test_qualified_names_through_builders(spark, edge_pts, zones):
                     "span_offset", "n") == want["salt"]
 
 
+# ------------------------------------------- transform() names, both paths
+
+def _nan_as_none(rows):
+    """Rows as tuples with NaN read as None (the UDF path returns a
+    NaN output as NULL)."""
+    return sorted((tuple(None if isinstance(v, float) and np.isnan(v) else v
+                         for v in r) for r in rows), key=str)
+
+
+@pytest.fixture(scope="module")
+def routes(spark):
+    """(proj-string, direction, points) on both paths: utm forward runs
+    as a twin, robin inverse on the Arrow-UDF path.  id 3 has a NaN
+    lon."""
+    from proj_4_spark.engine.spark import describe_route
+
+    out = []
+    for ps, direction, scale in ((UTM, "fwd", "1.0D"),
+                                 (ROBIN, "inv", "100000.0D")):
+        assert (describe_route(ps, direction) == "udf") == (ps == ROBIN)
+        out.append((ps, direction, spark.range(8).selectExpr(
+            "id", f"CASE WHEN id = 3 THEN CAST('NaN' AS DOUBLE) "
+                  f"ELSE (id * 1.5D + 3.0D) * {scale} END AS lon",
+            f"(id * 4.0D + 40.0D) * {scale} AS lat", "id * 10.0D AS h")))
+    return out
+
+
+def test_transform_reads_input_names_as_f_col(spark, routes):
+    """Qualified, struct-field and backticked x/y/z names give the
+    plain-name output on both paths (a dotted name needs backticks)."""
+    out = ["id", "x", "y", "z", "t"]
+    for ps, d, pts in routes:
+        want = _nan_as_none(transform(pts, ps, x="lon", y="lat", z="h",
+                                         direction=d).select(out).collect())
+        assert len(want) == 8
+        cases = [
+            (pts.alias("a"), dict(x="a.lon", y="a.lat", z="a.h")),
+            (pts.selectExpr(
+                "id", "named_struct('lon', lon, 'lat', lat, 'h', h) AS p"),
+             dict(x="p.lon", y="p.lat", z="p.h")),
+            (pts.selectExpr("id", "lon AS `lo``n`", "lat AS `la.t`", "h"),
+             dict(x="`lo``n`", y="`la.t`", z="`h`")),
+        ]
+        for df, names in cases:
+            got = transform(df, ps, direction=d, **names).select(out)
+            assert _nan_as_none(got.collect()) == want, (ps, names)
+
+
+def test_transform_out_prefix_is_one_whole_name(spark, routes):
+    """An out_prefix with a dot or a backtick names whole columns, with
+    keep_errors True and False, on both paths."""
+    for (ps, d, pts), keep in itertools.product(routes, (True, False)):
+        plain = transform(pts, ps, x="lon", y="lat", direction=d,
+                          out_prefix="o_", keep_errors=keep)
+        want = _nan_as_none(plain.collect())
+        assert len(want) == (8 if keep else 7)
+        for prefix in ("p.", "a`b_"):
+            got = transform(pts, ps, x="lon", y="lat", direction=d,
+                            out_prefix=prefix, keep_errors=keep)
+            assert got.columns == pts.columns + [f"{prefix}{c}" for c in "xyzt"]
+            assert _nan_as_none(got.collect()) == want, (ps, prefix, keep)
+
+
 # ------------------------------------------------ templates: rebind checks
 
 def _points_with_lambda_exprids(spark, zones):
@@ -663,6 +732,9 @@ def test_builders_warm_call_runs_no_rule(spark, docs, zones, edge_pts):
         "transform_keep_errors": (lambda d: transform(
             d, WEBMERC, x="lon", y="lat", out_prefix="wm_", keep_errors=False),
             edge_pts),
+        "transform_udf_keep_errors": (lambda d: transform(
+            d, ROBIN, x="lon", y="lat", direction="inv", keep_errors=False),
+            edge_pts),
     }
     got = {}
     for name, (fn, df) in cases.items():
@@ -686,15 +758,17 @@ def zone_pts(spark, zones):
 
 def test_builder_template_outputs_union_and_self_join(spark, docs, zones, zone_pts):
     """Two outputs of one builder template in one query (two explodes,
-    two pip_joins) share every exprId and observation name below their
-    leaves; their union and self-join still equal the per-frame
-    results."""
+    two pip_joins, two Arrow-UDF transforms) share every exprId and
+    observation name below their leaves; their union and self-join still
+    equal the per-frame results."""
     def rows(df):
         return sorted(map(tuple, df.collect()), key=str)
 
     for build, df, first in (
             (explode_media_points, docs, "doc_id < 'doc-000000000020'"),
-            (lambda p: pip.pip_join(p, zones), zone_pts, "doc_id < 'zone-0010'")):
+            (lambda p: pip.pip_join(p, zones), zone_pts, "doc_id < 'zone-0010'"),
+            (lambda p: transform(p, ROBIN, x="lon", y="lat", direction="inv"),
+             zone_pts, "doc_id < 'zone-0010'")):
         a, b = build(df.where(first)), build(df.where(f"NOT ({first})"))
         ra, rb = rows(a), rows(b)
         assert ra and rb
@@ -745,6 +819,7 @@ PY4J_BOUND = {
     "salt_col": 4,                  # 3
     "salted_count": 19,             # 15
     "transform_keep_errors": 19,    # 15
+    "transform_udf_keep_errors": 19,   # 15
 }
 
 
@@ -788,6 +863,9 @@ def test_builders_py4j_command_ratchet(spark, docs, zones, edge_pts):
                          keyed),
         "transform_keep_errors": (lambda d: transform(
             d, WEBMERC, x="lon", y="lat", out_prefix="wm_", keep_errors=False),
+            pts),
+        "transform_udf_keep_errors": (lambda d: transform(
+            d, ROBIN, x="lon", y="lat", direction="inv", keep_errors=False),
             pts),
     }
     got, wide = {}, {}

@@ -258,3 +258,56 @@ def test_route_census():
     assert not rose, f"presets moved onto the Arrow-UDF path: {rose}"
     assert dict(counts) == ROUTE_CENSUS, (
         f"the census moved; commit the new counts: {dict(counts)}")
+
+
+# PySpark 4.1 fails one selectExpr past 50 lateral-alias levels ("Max
+# iterations (100) reached for batch Resolution").
+MAX_TWIN_STAGES = 50
+
+
+def test_twin_region_depth(monkeypatch):
+    """Every codegen region of every twin holds fewer than
+    MAX_TWIN_STAGES stages, over tools/dump_twin_sql.py's corpus (the
+    catalog presets and the proj-string literals in tests/ and
+    perfbench/inputs.py, both directions) in its three call shapes.  A
+    region is one selectExpr whose stages read each other as lateral
+    column aliases, so its stage count bounds their alias depth from
+    above.  Prints the deepest region."""
+    import importlib.util
+    import os
+
+    from proj_4_spark.engine import spark as S
+    from proj_4_spark.kernels.base import ProjError
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "dump_twin_sql.py")
+    spec = importlib.util.spec_from_file_location("dump_twin_sql", path)
+    dump = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump)
+
+    def regions(self, df, final_exprs, out_names):
+        sizes, n = [], 0
+        for i in range(len(self.stages)):
+            n += 1
+            if i in self._barriers:
+                sizes.append(n)
+                n = 0
+        return sizes + [n]
+
+    monkeypatch.setattr(S._SqlStager, "apply", regions)
+    deepest, where, twins = 0, None, 0
+    for ps in dump.corpus():
+        for d in ("fwd", "inv"):
+            try:
+                if S.describe_route(ps, d) == "udf":
+                    continue
+            except ProjError:
+                continue
+            twins += 1
+            for k, shape in enumerate(dump.SHAPES):
+                n = max(dump._staged(ps, d, **shape))
+                if n > deepest:
+                    deepest, where = n, (ps, d, shape)
+    print(f"deepest twin region: {deepest} stages, {where}")
+    assert twins > 16000
+    assert deepest < MAX_TWIN_STAGES, (deepest, where)

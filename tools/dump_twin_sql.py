@@ -76,7 +76,7 @@ def _staged(ps, direction, x="x", y="y", z=None, t=None, degrees=True,
 
 
 def main(out_path: str) -> None:
-    def capture(self, df, final_exprs):
+    def capture(self, df, final_exprs, *out_names):
         return self.stages, sorted(self._barriers), final_exprs
 
     S._SqlStager.apply = capture

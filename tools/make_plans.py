@@ -1,15 +1,26 @@
 """Generate PLANS.md: the captured physical plan of each headline query
-with a scale annotation."""
-import sys, re
-sys.path.insert(0, '/root/repo')
-from pyspark.sql import SparkSession
+with a scale annotation.
+
+    python tools/make_plans.py
+
+Reads and writes the PLANS.md of the checkout this file is in, with
+that checkout's package, so a second checkout can be compared with it.
+The session stays local[8]: PLANS.md's header records it, and the plan
+text depends on it."""
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS = os.path.join(REPO, "PLANS.md")
+sys.path.insert(0, REPO)
+from pyspark.sql import SparkSession  # noqa: E402
 
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions", "16")
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-import __spark_entry__ as E
+import __spark_entry__ as E  # noqa: E402
 
 NOTES = {
     "merc_fwd": "scan -> Catalyst expression twin (r5: zero Python workers, pure whole-stage codegen projection, no shuffle) -> select. ReadSchema prunes to event_id.",
@@ -66,7 +77,7 @@ for name, note in NOTES.items():
 # preserve the hand-written analysis sections below the marker
 MARKER = "## Round-4 plan notes"
 try:
-    old = open("/root/repo/PLANS.md").read()
+    old = open(PLANS).read()
 except FileNotFoundError:
     tail = ""
 else:
@@ -104,5 +115,5 @@ byte-identical to the pandas-UDF version's.
 """)
 if tail:
     out.append(tail)
-open("/root/repo/PLANS.md", "w").write("\n".join(out))
+open(PLANS, "w").write("\n".join(out))
 print("written", len("\n".join(out)), "bytes")
