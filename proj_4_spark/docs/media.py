@@ -25,13 +25,15 @@ def explode_media_points(docs_df):
     """documents(doc_id, spans) -> one row per media span with parsed
     lon/lat (degrees, EPSG:4326 per fixture contract).
 
-    Plan shape: generator-expand (posexplode) -> filter kind='media'
-    -> regexp projections.  All JVM-side; Catalyst pushes the kind filter
-    into the generate and prunes text columns out of the scan.  Built as
-    SQL text (proj_4_spark/sqltext.py) and analysed once per template
-    key: the session, `docs_df`'s output attributes (name, type,
-    nullability, metadata, qualifier) and the ANSI and case-sensitivity
-    confs (proj_4_spark/templates.py); every call rebinds that plan onto
+    Plan shape: posexplode(arrays_zip(spans.kind, spans.media_ref,
+    spans.offset)) -> filter kind='media' -> regexp projections, all
+    JVM-side; the zip keeps span ``text`` out of a parquet scan's
+    ReadSchema.  An unparseable lon/lat is NULL (``try_cast``, under
+    ANSI too), an error row downstream.  Built as SQL text
+    (proj_4_spark/sqltext.py) and analysed once per template key: the
+    session, `docs_df`'s output attributes (name, type, nullability,
+    metadata, qualifier) and the ANSI and case-sensitivity confs
+    (proj_4_spark/templates.py); every call rebinds that plan onto
     `docs_df`, so it needs a Classic session.  The observation at the
     region barrier is named once per template.
     """
@@ -39,12 +41,14 @@ def explode_media_points(docs_df):
 
 
 def _explode(docs_df):
-    out = (docs_df.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
+    out = (docs_df.selectExpr(
+               "doc_id", "posexplode(arrays_zip(spans.kind, spans.media_ref, "
+               "spans.offset)) AS (span_idx, span)")
            .where("span.kind = 'media'")
            .selectExpr(
                "doc_id", "span.offset AS span_offset",
-               f"CAST({_extract('lon', '-?[0-9.]+')} AS DOUBLE) AS lon",
-               f"CAST({_extract('lat', '-?[0-9.]+')} AS DOUBLE) AS lat",
+               f"try_cast({_extract('lon', '-?[0-9.]+')} AS DOUBLE) AS lon",
+               f"try_cast({_extract('lat', '-?[0-9.]+')} AS DOUBLE) AS lat",
                f"{_extract('crs', '[A-Za-z0-9:]+')} AS crs"))
     # r8: close the whole-stage-codegen region here.  Fused with a
     # downstream projection twin (the doc-geo pipeline's webmerc leg)

@@ -34,7 +34,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd  # noqa: F401 — pandas_udf resolves `pd.*` hints
 
 from proj_4_spark.engine.plan import Operation, create_operation
 
@@ -210,7 +209,7 @@ def alt_transform(df, candidates: list[Candidate],
                   out_prefix: str = "", degrees: bool | None = None,
                   with_chosen: bool = True, direction: str = "fwd"):
     """DataFrame surface: per-point alternative-operation selection over
-    degree lon/lat columns via one Arrow-batched pandas UDF.
+    degree lon/lat columns.
 
     `degrees` defaults to True for direction='fwd' (geographic degree
     inputs) and False for direction='inv', where the inputs are
@@ -224,14 +223,15 @@ def alt_transform(df, candidates: list[Candidate],
     binary.  A candidate without a spec raises ValueError; bespoke ops
     run through AltOperation in NumPy.
 
-    Returns df plus columns {x, y, chosen_op} (prefix-able)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    One Arrow-batched UDF (kernel_udf.kernel_columns).  Returns df plus
+    columns {x, y, chosen_op} (prefix-able; a same-named column is
+    replaced); a point no candidate takes has NaN x/y and chosen_op -1.
+    """
+    from proj_4_spark.kernel_udf import kernel_columns
 
-    d2r = np.pi / 180.0
     if degrees is None:
         degrees = direction == "fwd"
+    scale = np.pi / 180.0 if degrees else 1.0
     for c in candidates:
         if c.spec is None:
             raise ValueError(
@@ -244,24 +244,20 @@ def alt_transform(df, candidates: list[Candidate],
         for c in candidates
     )
 
-    @pandas_udf("struct<x: double, y: double, chosen: int>")
-    def _alt(lo: pd.Series, la: pd.Series) -> pd.DataFrame:
+    def _alt(lo, la):
         if len(lo) == 0:
-            return pd.DataFrame({"x": [], "y": [], "chosen": []})
-        alt = _cached_alt_operation(meta)
-        lam = lo.to_numpy(np.float64) * (d2r if degrees else 1.0)
-        phi = la.to_numpy(np.float64) * (d2r if degrees else 1.0)
-        zz = np.zeros_like(lam)
-        x, y, _, _, chosen = alt.apply(lam, phi, zz, zz.copy(), direction)
-        return pd.DataFrame({"x": x, "y": y,
-                             "chosen": chosen.astype(np.int32)})
+            return lo, la, np.zeros(0, np.int32)
+        zz = np.zeros_like(lo)
+        x, y, _, _, chosen = _cached_alt_operation(meta).apply(
+            lo * scale, la * scale, zz, zz.copy(), direction)
+        return x, y, chosen.astype(np.int32)
 
-    res = df.withColumn("_alt", _alt(F.col(lon), F.col(lat)))
-    cols = [F.col("_alt.x").alias(out_prefix + "x"),
-            F.col("_alt.y").alias(out_prefix + "y")]
+    cols = kernel_columns(_alt, [lon, lat], ("x", "y", "chosen"),
+                          ints=("chosen",))
+    out = {out_prefix + "x": cols["x"], out_prefix + "y": cols["y"]}
     if with_chosen:
-        cols.append(F.col("_alt.chosen").alias(out_prefix + "chosen_op"))
-    return res.select("*", *cols).drop("_alt")
+        out[out_prefix + "chosen_op"] = cols["chosen"]
+    return df.withColumns(out)
 
 
 def _epsg_code(spec):

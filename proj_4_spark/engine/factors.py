@@ -17,7 +17,6 @@ Outputs per point (FACTORS struct, src/proj_internal.h):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from proj_4_spark.kernels import common as C
 
@@ -118,28 +117,18 @@ def factors_df(df, projstring: str, lon: str = "lon", lat: str = "lat",
                h: float = 0.0, prefix: str = "f_"):
     """DataFrame wrapper: adds {prefix}{h,k,s,conv,thetap,a,b,omega}
     columns (degrees in, radians for the angle outputs).  One
-    Arrow-batched pandas UDF returning a struct column — a projection in
-    the Catalyst plan, no shuffle."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
+    Arrow-batched pandas UDF (kernel_udf.kernel_columns) returning a
+    struct column — a projection in the Catalyst plan, no shuffle.  A
+    row the projection cannot take reads NaN in every column."""
     from proj_4_spark.engine.spark import _cached_operation
+    from proj_4_spark.kernel_udf import kernel_columns
 
     _cached_operation(projstring)  # fail fast driver-side
-    schema = ", ".join(f"{f} double" for f in _FIELDS)
 
-    @pandas_udf(schema)
-    def _fac(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
-        op = _cached_operation(projstring)
-        res = factors(
-            op,
-            lons.to_numpy(dtype=np.float64, na_value=np.nan) * C.DEG_TO_RAD,
-            lats.to_numpy(dtype=np.float64, na_value=np.nan) * C.DEG_TO_RAD,
-            h,
-        )
-        return pd.DataFrame({f: res[f] for f in _FIELDS})
+    def _fac(lons, lats):
+        res = factors(_cached_operation(projstring), lons * C.DEG_TO_RAD,
+                      lats * C.DEG_TO_RAD, h)
+        return [res[f] for f in _FIELDS]
 
-    res = df.withColumn("_fac", _fac(F.col(lon), F.col(lat)))
-    for f in _FIELDS:
-        res = res.withColumn(f"{prefix}{f}", F.col(f"_fac.{f}"))
-    return res.drop("_fac")
+    cols = kernel_columns(_fac, [lon, lat], _FIELDS)
+    return df.withColumns({f"{prefix}{f}": c for f, c in cols.items()})

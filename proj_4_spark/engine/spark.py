@@ -40,13 +40,13 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
+from proj_4_spark.kernel_udf import kernel_columns
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import ProjError
 from proj_4_spark.sqltext import (codegen_barrier, double, identifier,
                                   quote_name)
 from proj_4_spark.templates import templated
 
-_STRUCT4 = "x double, y double, z double, t double"
 _SQL_INF = double(math.inf)
 _SQL_NAN = double(math.nan)
 _H = math.pi / 2.0
@@ -2022,9 +2022,10 @@ def transform(
 
     Angular input/output is degrees at the DataFrame edge when
     ``degrees=True`` (matching the reference CLIs, src/apps/proj.cpp:144-152);
-    radians internally.  Errored rows yield NaN in the output columns
-    (reference: HUGE_VAL sentinel, src/fwd.cpp:42-43); pass
-    ``keep_errors=False`` to filter them out.
+    radians internally.  Errored rows yield NaN in the output columns,
+    on a twin and on the Arrow-UDF path alike (reference: HUGE_VAL
+    sentinel, src/fwd.cpp:42-43); pass ``keep_errors=False`` to filter
+    them out.
 
     One dispatch: an operation with a twin plan runs as a Catalyst twin
     — staged Spark-SQL projections, zero Python workers, parity with
@@ -2113,32 +2114,17 @@ def _finite_rows(out, out_prefix: str):
 
 def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,
                degrees: bool, out_prefix: str):
-    """The Arrow-UDF path: ONE Arrow-batched pandas UDF runs the whole
-    pipeline's NumPy kernels; the executor-side plan comes from
-    _cached_operation(projstring); `op` is the driver's copy."""
+    """The Arrow-UDF path: ONE Arrow-batched pandas UDF
+    (kernel_udf.kernel_columns) runs the whole pipeline's NumPy kernels;
+    the executor-side plan comes from _cached_operation(projstring); `op`
+    is the driver's copy.  An errored row reads NaN, as on the twins."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     ang_in = op.angular_input(direction)
     ang_out = op.angular_output(direction)
-    z_supplied, t_supplied = z is not None, t is not None
 
-    @pandas_udf(_STRUCT4)
-    def _tx(xs: pd.Series, ys: pd.Series, zs: pd.Series,
-            ts: pd.Series) -> pd.DataFrame:
+    def _tx(xa, ya, za, ta):
         op = _cached_operation(projstring)
-        xa = xs.to_numpy(dtype=np.float64, na_value=np.nan)
-        ya = ys.to_numpy(dtype=np.float64, na_value=np.nan)
-        za = zs.to_numpy(dtype=np.float64, na_value=np.nan)
-        ta = ts.to_numpy(dtype=np.float64, na_value=np.nan)
-        # Zero-fill ONLY synthesized z/t (no user column): when the user
-        # supplied a column, a null/NaN z must propagate as an error row
-        # like x/y — silently coercing to 0 would produce plausible-but-
-        # wrong output for 3D ops (vgridshift, cart).
-        if not z_supplied:
-            za = np.where(np.isnan(za), 0.0, za)
-        if not t_supplied:
-            ta = np.where(np.isnan(ta), 0.0, ta)
         if degrees and ang_in:
             xa = xa * C.DEG_TO_RAD
             ya = ya * C.DEG_TO_RAD
@@ -2150,27 +2136,19 @@ def _udf_apply(df, op, projstring: str, direction: str, x, y, z, t,
             # rather than aborting the stream (src/4D_api.cpp) — here
             # that is NaN rows, filterable via keep_errors=False.
             nan = np.full(len(xa), np.nan)
-            ox, oy, oz, ot = nan, nan.copy(), nan.copy(), nan.copy()
+            return nan, nan, nan, nan
         if degrees and ang_out:
             ox = ox * C.RAD_TO_DEG
             oy = oy * C.RAD_TO_DEG
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz, "t": ot})
+        return ox, oy, oz, ot
 
-    zcol = F.col(z) if z else F.lit(0.0)
-    tcol = F.col(t) if t else F.lit(0.0)
-    res = df.withColumn("_pj", _tx(F.col(x).cast("double"),
-                                   F.col(y).cast("double"),
-                                   zcol.cast("double"), tcol.cast("double")))
-    return (
-        res.withColumn(f"{out_prefix}x", F.col("_pj.x"))
-        .withColumn(f"{out_prefix}y", F.col("_pj.y"))
-        .withColumn(f"{out_prefix}z", F.col("_pj.z"))
-        .withColumn(f"{out_prefix}t", F.col("_pj.t"))
-        .drop("_pj")
-    )
-
-
-_GEOD_STRUCT = "s12 double, azi1 double, azi2 double"
+    # Zero-fill ONLY synthesized z/t (no user column): a user's null/NaN
+    # z must propagate as an error row like x/y — silently coercing it
+    # to 0 would give plausible-but-wrong output for 3D ops
+    # (vgridshift, cart).
+    cols = kernel_columns(_tx, [x, y, z or F.lit(0.0), t or F.lit(0.0)],
+                          ("x", "y", "z", "t"))
+    return df.withColumns({f"{out_prefix}{k}": c for k, c in cols.items()})
 
 
 def geodesic_inverse_df(df, lon1: str, lat1: str, lon2: str, lat2: str,
@@ -2178,30 +2156,18 @@ def geodesic_inverse_df(df, lon1: str, lat1: str, lon2: str, lat2: str,
                         f_: float = 1 / 298.257223563,
                         out_prefix: str = "geo_"):
     """Karney inverse problem as DataFrame columns (degrees in):
-    adds {prefix}{s12,azi1,azi2}.  One Arrow-batched UDF; the Geodesic
-    setup is cached per worker."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    adds {prefix}{s12,azi1,azi2}.  One Arrow-batched UDF
+    (kernel_udf.kernel_columns); the Geodesic setup is cached per
+    worker.  A row with a NULL, NaN or infinite input reads NaN."""
 
-    @pandas_udf(_GEOD_STRUCT)
-    def _inv(lo1: pd.Series, la1: pd.Series,
-             lo2: pd.Series, la2: pd.Series) -> pd.DataFrame:
+    def _geod_inv(lo1, la1, lo2, la2):
         from proj_4_spark.kernels.geodesic import _cached_geodesic
 
-        g = _cached_geodesic(a, f_)
-        s12, azi1, azi2, _ = g.inverse(
-            la1.to_numpy(dtype=np.float64, na_value=np.nan),
-            lo1.to_numpy(dtype=np.float64, na_value=np.nan),
-            la2.to_numpy(dtype=np.float64, na_value=np.nan),
-            lo2.to_numpy(dtype=np.float64, na_value=np.nan),
-        )
-        return pd.DataFrame({"s12": s12, "azi1": azi1, "azi2": azi2})
+        return _cached_geodesic(a, f_).inverse(la1, lo1, la2, lo2)[:3]
 
-    res = df.withColumn("_geo", _inv(F.col(lon1), F.col(lat1),
-                                     F.col(lon2), F.col(lat2)))
-    for c in ("s12", "azi1", "azi2"):
-        res = res.withColumn(f"{out_prefix}{c}", F.col(f"_geo.{c}"))
-    return res.drop("_geo")
+    cols = kernel_columns(_geod_inv, [lon1, lat1, lon2, lat2],
+                          ("s12", "azi1", "azi2"))
+    return df.withColumns({f"{out_prefix}{k}": c for k, c in cols.items()})
 
 
 def geodesic_direct_df(df, lon1: str, lat1: str, azi1: str, s12: str,
@@ -2209,29 +2175,19 @@ def geodesic_direct_df(df, lon1: str, lat1: str, azi1: str, s12: str,
                        f_: float = 1 / 298.257223563,
                        out_prefix: str = "geo_"):
     """Karney direct problem as DataFrame columns: adds
-    {prefix}{lon2,lat2,azi2} (degrees)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    {prefix}{lon2,lat2,azi2} (degrees).  One Arrow-batched UDF
+    (kernel_udf.kernel_columns); a row with a NULL or NaN input reads
+    NaN in every output its kernel cannot give."""
 
-    @pandas_udf("lon2 double, lat2 double, azi2 double")
-    def _dir(lo1: pd.Series, la1: pd.Series,
-             az: pd.Series, ss: pd.Series) -> pd.DataFrame:
+    def _geod_dir(lo1, la1, az, ss):
         from proj_4_spark.kernels.geodesic import _cached_geodesic
 
-        g = _cached_geodesic(a, f_)
-        lat2, lon2, azi2, _ = g.direct(
-            la1.to_numpy(dtype=np.float64, na_value=np.nan),
-            lo1.to_numpy(dtype=np.float64, na_value=np.nan),
-            az.to_numpy(dtype=np.float64, na_value=np.nan),
-            ss.to_numpy(dtype=np.float64, na_value=np.nan),
-        )
-        return pd.DataFrame({"lon2": lon2, "lat2": lat2, "azi2": azi2})
+        lat2, lon2, azi2, _ = _cached_geodesic(a, f_).direct(la1, lo1, az, ss)
+        return lon2, lat2, azi2
 
-    res = df.withColumn("_geo", _dir(F.col(lon1), F.col(lat1),
-                                     F.col(azi1), F.col(s12)))
-    for c in ("lon2", "lat2", "azi2"):
-        res = res.withColumn(f"{out_prefix}{c}", F.col(f"_geo.{c}"))
-    return res.drop("_geo")
+    cols = kernel_columns(_geod_dir, [lon1, lat1, azi1, s12],
+                          ("lon2", "lat2", "azi2"))
+    return df.withColumns({f"{out_prefix}{k}": c for k, c in cols.items()})
 
 
 def geodesic_polygon_area_df(df, poly_id: str = "poly_id",

@@ -321,6 +321,11 @@ class Geodesic:
         lat2 = np.atleast_1d(np.asarray(lat2, dtype=np.float64))
         lon2 = np.atleast_1d(np.asarray(lon2, dtype=np.float64))
         n = len(lat1)
+        # GeographicLib gives NaN for any non-finite input; the branches
+        # below would turn a NaN longitude (or one latitude) into a
+        # finite distance or azimuth
+        bad = ~(np.isfinite(lat1) & np.isfinite(lon1)
+                & np.isfinite(lat2) & np.isfinite(lon2))
 
         lon12, lon12s = _ang_diff(lon1, lon2)
         lonsign = np.where(lon12 >= 0, 1.0, -1.0)
@@ -512,9 +517,8 @@ class Geodesic:
 
         azi1 = _atan2d(salp1, calp1)
         azi2 = _atan2d(salp2, calp2)
-        if want_area:
-            return s12, azi1, azi2, a12, S12
-        return s12, azi1, azi2, a12
+        out = (s12, azi1, azi2, a12) + ((S12,) if want_area else ())
+        return tuple(np.where(bad, np.nan, v) for v in out)
 
     def _inverse_start(self, sbet1, cbet1, dn1, sbet2, cbet2, dn2,
                        lam12, slam12, clam12):

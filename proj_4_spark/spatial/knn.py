@@ -22,9 +22,9 @@ the join key with salting.salt_expr and AQE skew-join splits the rest.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from proj_4_spark import scale
+from proj_4_spark.kernel_udf import kernel_columns
 from proj_4_spark.spatial import cells, salting
 from proj_4_spark.sqltext import double
 
@@ -55,23 +55,19 @@ def _haversine_m(lon1, lat1, lon2, lat2):
 
 
 def _karney_udf(a: float, f: float):
-    from pyspark.sql.functions import pandas_udf
+    """The Karney distance of four column names, in meters: one
+    Arrow-batched UDF (kernel_udf.kernel_columns), NaN for a NULL or NaN
+    coordinate, so such a pair ranks after every finite one."""
 
-    @pandas_udf("double")
-    def geodesic_m(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
+    def geodesic_m(lon1, lat1, lon2, lat2):
         from proj_4_spark.kernels.common import DEG_TO_RAD
         from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
 
-        d = geodesic_inverse_karney(
-            lon1.to_numpy(dtype=np.float64) * DEG_TO_RAD,
-            lat1.to_numpy(dtype=np.float64) * DEG_TO_RAD,
-            lon2.to_numpy(dtype=np.float64) * DEG_TO_RAD,
-            lat2.to_numpy(dtype=np.float64) * DEG_TO_RAD,
-            a, f,
-        )
-        return pd.Series(d)
+        return (geodesic_inverse_karney(
+            lon1 * DEG_TO_RAD, lat1 * DEG_TO_RAD,
+            lon2 * DEG_TO_RAD, lat2 * DEG_TO_RAD, a, f),)
 
-    return geodesic_m
+    return lambda *names: kernel_columns(geodesic_m, names, ("d",))["d"]
 
 
 # metric -> (builder (a, f) -> meters Column of the column names
@@ -125,7 +121,8 @@ def knn_join(
     A point or query that cells.cell_np does not take (a NULL, NaN or
     infinite coordinate, |lon| > 360, |lat| > 90) has cell -1 and no
     neighbor cells: the point is never a candidate and the query gets
-    no rows.  knn_brute_force ranks them (with NaN distances).
+    no rows.  knn_brute_force ranks them after every finite point (under
+    karney with a NaN distance).
     metric: "karney" (exact ellipsoidal, the Arrow-batched Karney UDF)
     or "haversine" (mean sphere, a JVM expression with no Python worker:
     the SQL-expressible twin used by the DuckDB correctness gate); any

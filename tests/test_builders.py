@@ -38,15 +38,17 @@ ROBIN = "+proj=robin"   # its inverse runs on the Arrow-UDF path
 
 def ref_explode(docs_df):
     ex = docs_df.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span"),
+        "doc_id", F.posexplode(F.arrays_zip(
+            "spans.kind", "spans.media_ref", "spans.offset",
+        )).alias("span_idx", "span"),
     ).where(F.col("span.kind") == "media")
     out = ex.select(
         "doc_id",
         F.col("span.offset").alias("span_offset"),
         F.regexp_extract("span.media_ref", r"[?&]lon=(-?[0-9.]+)", 1)
-        .cast("double").alias("lon"),
+        .try_cast("double").alias("lon"),
         F.regexp_extract("span.media_ref", r"[?&]lat=(-?[0-9.]+)", 1)
-        .cast("double").alias("lat"),
+        .try_cast("double").alias("lat"),
         F.regexp_extract("span.media_ref", r"[?&]crs=([A-Za-z0-9:]+)", 1)
         .alias("crs"),
     )
@@ -291,6 +293,22 @@ def edge_pts(spark):
 def test_explode_media_points_plan(spark, ansi, docs):
     assert (_canonical_plan(explode_media_points(docs))
             == _canonical_plan(ref_explode(docs)))
+
+
+def test_explode_media_points_unparseable_ref(spark, ansi):
+    """A media_ref without a parseable lon reads NULL (an error row
+    downstream) under ANSI too; it failed the whole query with
+    CAST_INVALID_INPUT."""
+    docs = spark.createDataFrame(
+        [("d1", [("media", "t", "media://d1/0?lon=abc&lat=1.0&crs=EPSG:4326",
+                  0), ("text", "x", None, 1)]),
+         ("d2", [("media", "t", "media://d2/0?lon=2.5&lat=1.5&crs=EPSG:4326",
+                  0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+    rows = sorted(explode_media_points(docs).collect())
+    assert [tuple(r) for r in rows] == [("d1", 0, None, 1.0, "EPSG:4326"),
+                                        ("d2", 0, 2.5, 1.5, "EPSG:4326")]
 
 
 def test_cell_and_neighbors_col_plans(spark, ansi, edge_pts):

@@ -105,6 +105,40 @@ def test_inverse_without_area_unchanged():
         np.testing.assert_array_equal(base[i], w[i])
 
 
+@pytest.mark.parametrize("position", ["lat1", "lon1", "lat2", "lon2"])
+@pytest.mark.parametrize("bad", [math.nan, math.inf])
+def test_inverse_non_finite_input_is_nan(position, bad):
+    """Any non-finite input gives NaN s12/azi1/azi2/a12/S12, as in
+    GeographicLib (a NaN longitude gave s12 = 9,985,168 m, a NaN lat1
+    azi1 = 90); the finite rows beside it are unchanged."""
+    g = Geodesic()
+    args = {"lat1": [40.6, 40.6], "lon1": [-73.8, -73.8],
+            "lat2": [51.6, 51.6], "lon2": [-0.5, -0.5]}
+    args[position][1] = bad
+    out = g.inverse(*(np.array(args[k]) for k in ("lat1", "lon1", "lat2",
+                                                   "lon2")), want_area=True)
+    ref = g.inverse(np.array([40.6]), np.array([-73.8]),
+                    np.array([51.6]), np.array([-0.5]), want_area=True)
+    for got, want in zip(out, ref):
+        assert got[0] == want[0]
+        assert np.isnan(got[1]), (position, bad, out)
+
+
+def test_inverse_karney_nan_input_is_nan():
+    from proj_4_spark.kernels.geodesic import geodesic_inverse_karney
+
+    assert np.isnan(geodesic_inverse_karney(math.nan, 0.0, 1.0, 1.0)).all()
+
+
+def test_polygon_with_nan_vertex_is_nan():
+    """One NaN vertex poisons area and perimeter (it gave area
+    -2.54e14 m^2 and perimeter 10,207,062 m)."""
+    area, perim, n = geodesic_polygon_area([0, 1, math.nan, 0], [0, 0, 1, 1])
+    assert math.isnan(area) and math.isnan(perim) and n == 4
+    area, perim, _ = geodesic_polygon_area([0, 1, 1, 0], [0, 0, math.nan, 1])
+    assert math.isnan(area) and math.isnan(perim)
+
+
 def test_polygon_area_df(spark):
     """DataFrame aggregate equals the NumPy engine per polygon."""
     import pandas as pd

@@ -246,6 +246,71 @@ def test_knn_haversine_runs_in_jvm(spark):
         assert "BatchEvalPython" not in karney, fn.__name__
 
 
+def test_kernel_udf_surfaces_have_one_arrow_eval_one_udf(spark):
+    """Each NumPy-kernel UDF surface plans ONE ArrowEvalPython node
+    evaluating ONE UDF (its struct), and every double output reads
+    coalesce(field, NaN), so an errored row is NaN, not NULL
+    (proj_4_spark/kernel_udf.py); alt_transform's int chosen_op passes
+    through."""
+    import re
+
+    from proj_4_spark.engine.altops import Candidate, alt_transform
+    from proj_4_spark.engine.factors import _FIELDS, factors_df
+    from proj_4_spark.engine.spark import (geodesic_direct_df,
+                                           geodesic_inverse_df, transform)
+    from proj_4_spark.spatial.knn import knn_brute_force
+
+    df = spark.createDataFrame([(1.0, 2.0, 3.0, 4.0)],
+                               "lon double, lat double, b double, c double")
+    pts = spark.createDataFrame(
+        [("a", 0, 1.0, 2.0)],
+        "doc_id string, span_offset int, lon double, lat double")
+    queries = spark.createDataFrame([("q", 1.5, 2.0)],
+                                    "q_id string, lon double, lat double")
+    cands = [Candidate.from_projstring("+proj=merc +ellps=WGS84",
+                                       (-180.0, -90.0, 180.0, 90.0),
+                                       accuracy=1.0)]
+    surfaces = {
+        "transform": (transform(df, "+proj=robin", x="lon", y="lat",
+                                direction="inv"), "xyzt"),
+        "geodesic_inverse_df": (geodesic_inverse_df(df, "lon", "lat", "b",
+                                                    "c"),
+                                ("s12", "azi1", "azi2")),
+        "geodesic_direct_df": (geodesic_direct_df(df, "lon", "lat", "b",
+                                                  "c"),
+                               ("lon2", "lat2", "azi2")),
+        "factors_df": (factors_df(df, "+proj=merc"), _FIELDS),
+        "alt_transform": (alt_transform(df, cands), "xy"),
+        "knn_brute_force": (knn_brute_force(pts, queries, k=1), ("d",)),
+    }
+    for name, (out, fields) in surfaces.items():
+        plan = plan_of(out)
+        nodes = re.findall(r"ArrowEvalPython \[([^\]]*)\], \[([^\]]*)\]",
+                           plan)
+        assert len(nodes) == 1 and plan.count("EvalPython") == 1, (name, plan)
+        assert re.fullmatch(r"pythonUDF0#\d+", nodes[0][1]), (name, plan)
+        for f in fields:
+            assert re.search(rf"coalesce\(pythonUDF0#\d+\.{f}, NaN\)",
+                             plan), (name, f, plan)
+        bare = re.findall(r"[^(]pythonUDF0#\d+\.(\w+) AS", plan)
+        assert bare == (["chosen"] if name == "alt_transform" else []), (
+            name, plan)
+
+
+def test_explode_media_points_reads_no_text(spark, tmp_path):
+    """The explode generates over arrays_zip(kind, media_ref, offset):
+    the parquet scan reads no span text."""
+    import pyarrow.parquet as pq
+
+    from proj_4_spark.docs.media import explode_media_points
+    from proj_4_spark.docs.synth import synthesize_arrow
+
+    pq.write_table(synthesize_arrow(20, seed=7), str(tmp_path / "d.parquet"))
+    txt = formatted(explode_media_points(spark.read.parquet(str(tmp_path))))
+    assert ("ReadSchema: struct<doc_id:string,spans:array<struct<"
+            "kind:string,media_ref:string,offset:int>>>") in txt, txt
+
+
 def test_ivf_single_pass_single_exchange(spark):
     """IVF ANN plan (r8): ONE mapInArrow corpus pass emits narrow
     candidate rows against the closure-held query batch — no corpus

@@ -311,3 +311,27 @@ def test_twin_region_depth(monkeypatch):
     print(f"deepest twin region: {deepest} stages, {where}")
     assert twins > 16000
     assert deepest < MAX_TWIN_STAGES, (deepest, where)
+
+
+def test_kernel_udfs_have_one_arrow_boundary():
+    """Every pandas UDF under engine/ and spatial/ is built by
+    kernel_udf.kernel_columns, the one place that reads NULL as NaN and
+    writes an errored row as NaN: no module there names pandas_udf."""
+    import ast
+    import pathlib
+
+    import proj_4_spark
+
+    root = pathlib.Path(proj_4_spark.__file__).parent
+    found = []
+    for sub in ("engine", "spatial"):
+        for path in sorted((root / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                name = (node.id if isinstance(node, ast.Name) else
+                        node.attr if isinstance(node, ast.Attribute) else
+                        None)
+                if isinstance(node, ast.alias):
+                    name = node.name
+                if name == "pandas_udf":
+                    found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not found, found
