@@ -11,7 +11,10 @@ Design (SURVEY.md §3.1 "Spark analogue"):
   them absent — as pj_inv4d / pj_fwd4d run them), and _emit_twin
   compiles the plan to a Catalyst "twin": staged Spark-SQL projections
   (_SqlStager) that reproduce the NumPy kernels term for term, so the
-  hot path is whole-stage codegen with zero Python workers.  The plan
+  hot path is whole-stage codegen with zero Python workers.  A forward
+  has a twin when its NumPy kernel P.fwd traces (engine/trace: the
+  kernel runs once on stand-in columns and its DAG is emitted as SQL);
+  the inverse kernels are hand-written SQL.  The plan
   shapes are a cart/helmert datum pipeline (legs only), a single op's
   forward (legs -> kernel) and its inverse (kernel -> legs); a bare op
   has zero legs.
@@ -40,11 +43,13 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
+from proj_4_spark.engine import trace
 from proj_4_spark.kernel_udf import kernel_columns
 from proj_4_spark.kernels import common as C
-from proj_4_spark.kernels.base import ProjError
-from proj_4_spark.sqltext import (codegen_barrier, double, identifier,
-                                  quote_name)
+from proj_4_spark.kernels.base import (ProjError, UNITS_CLASSIC,
+                                       UNITS_PROJECTED, UNITS_RADIANS)
+from proj_4_spark.sqltext import (atan2_ieee, codegen_barrier, double,
+                                  identifier, quote_name)
 from proj_4_spark.templates import templated
 
 _SQL_INF = double(math.inf)
@@ -63,17 +68,26 @@ def _cached_operation(projstring: str):
     return create_operation(projstring)
 
 
+@lru_cache(maxsize=256)
+def _traced_fwd(P):
+    """The forward kernel of a projection P traced into a DAG
+    (engine/trace), once per operation, or None: no radian-in, planar-
+    out forward, or a kernel that does not trace under trace.MAX_NODES
+    (its forward runs the Arrow UDF)."""
+    if (P.left != UNITS_RADIANS or P.right not in (UNITS_CLASSIC,
+                                                    UNITS_PROJECTED)
+            or P.skip_fwd_prepare or P.skip_fwd_finalize
+            # tmerc's algo=auto picks a kernel per row: a twin would run
+            # both the exact and the approximate one on every row
+            or P.params.get("algo") == "auto"):
+        return None
+    fn = next((f for f in (P.fwd4d, P.fwd3d, P.fwd) if f is not None), None)
+    return None if fn is None else trace.trace_kernel(fn, P)
+
+
 # grid/axis hooks a twin never models
 _GRID_AXIS_HOOKS = ("hgridshift", "vgridshift", "axisswap")
 _MODIFIER_HOOKS = _GRID_AXIS_HOOKS + ("helmert", "cart", "cart_wgs84")
-
-# forward families of _emit_fwd_kernel; Poder-Engsager etmerc/tmerc/utm
-# (P.fwd is exact_e_fwd) join them in _fwd_kernel_ok
-_FWD_KERNEL_NAMES = ("webmerc", "merc", "eqc", "cea", "lcc", "aea",
-                     "leac", "stere", "ups", "laea", "sterea", "somerc",
-                     "krovak", "sinu", "eqdc", "eqearth", "cass",
-                     "ortho", "gnom", "geos", "robin", "omerc", "moll",
-                     "wag4", "wag5")
 # inverse families of _emit_inv_kernel (ortho/gnom: sphere only).
 # sterea is measured OUT: its 20-iteration Gauss inversion unrolled to a
 # twin running 0.64x the Arrow-UDF path (4.0 vs 6.2 M pts/s at 16 M pts,
@@ -83,13 +97,6 @@ _INV_KERNEL_NAMES = ("webmerc", "merc", "eqc", "cea", "laea", "stere",
                      "ups", "sinu", "eqdc", "cass", "ortho", "gnom",
                      "moll", "wag4", "wag5", "geos", "eqearth", "omerc",
                      "lcc", "aea", "leac")
-
-
-def _fwd_kernel_ok(P) -> bool:
-    from proj_4_spark.kernels.tmerc import exact_e_fwd
-
-    return (getattr(P, "fwd", None) is exact_e_fwd
-            or getattr(P, "name", None) in _FWD_KERNEL_NAMES)
 
 
 def _inv_kernel_ok(P) -> bool:
@@ -215,7 +222,8 @@ def _twin_plan(op, direction: str):
 
     pipeline = isinstance(op, PipelineOperation)
     P = None if pipeline else getattr(op, "P", None)
-    kernel_ok = _fwd_kernel_ok if direction == "fwd" else _inv_kernel_ok
+    kernel_ok = ((lambda P: _traced_fwd(P) is not None)
+                 if direction == "fwd" else _inv_kernel_ok)
     if not pipeline and (
             P is None or getattr(op, "inverted", False) or P.is_geocent
             or any(getattr(P, a) is not None for a in _GRID_AXIS_HOOKS)
@@ -275,6 +283,10 @@ class _SqlStager:
     def col(self, name: str) -> str:
         return self.PREFIX + name
 
+    def open_region(self) -> int:
+        """The number of stages since the last barrier."""
+        return len(self.stages) - 1 - max(self._barriers, default=-1)
+
     def apply(self, df, final_exprs: list[str], out_names: list[str]):
         """The stages over `df`, then the select list `final_exprs`,
         which writes the columns `out_names`."""
@@ -332,25 +344,6 @@ class _SqlStager:
         return out.drop(*[c for c in self.tmp if c in out.columns])
 
 
-def _sql_atan2_ieee(yc: str, xc: str) -> str:
-    """IEEE atan2: Spark's Atan2 evaluates Math.atan2(y + 0.0, x + 0.0),
-    which collapses -0.0 to +0.0 — but the kernels rely on IEEE signed
-    zeros (np.arctan2(0.0, -0.0) = pi, e.g. the polar-aspect origin row
-    or a geocentric Y of exactly -0.0).  The sign of a zero is read
-    from its string form; only y == 0 rows evaluate that branch
-    (CaseWhen codegen is lazy).  Args must be COLUMN REFS (they appear
-    several times textually)."""
-    L = double
-    xneg = f"startswith(cast({xc} AS STRING), '-')"
-    yneg = f"startswith(cast({yc} AS STRING), '-')"
-    return (f"CASE WHEN isnan({xc}) OR isnan({yc}) THEN {_SQL_NAN} "
-            f"WHEN {yc} = 0.0D THEN "
-            f"(CASE WHEN {xneg} AND {yneg} THEN {L(-math.pi)} "
-            f"WHEN {xneg} THEN {L(math.pi)} "
-            f"WHEN {yneg} THEN -0.0D ELSE 0.0D END) "
-            f"ELSE atan2({yc}, {xc}) END")
-
-
 def _sql_adjlon(c: str) -> str:
     """adjlon over a COLUMN REF (appears 4x textually)."""
     L = double
@@ -362,33 +355,6 @@ def _sql_adjlon(c: str) -> str:
 
 def _clip1(v: str) -> str:
     return f"greatest(least({v}, 1.0D), -1.0D)"
-
-
-def _sql_tsfn(st, phi: str, sinphi: str, e: float, tag: str) -> str:
-    """tsfn (src/tsfn.cpp:6-17) over a COLUMN REF phi:
-    tan((pi/2 - phi)/2) / ((1 - e sin phi)/(1 + e sin phi))^(e/2)."""
-    L = double
-    es = st.stage(**{f"{tag}esin": f"{sinphi} * {L(e)}"})
-    return (f"tan(0.5D * ({L(_H)} - {phi})) / power((1.0D - {es}) / "
-            f"(1.0D + {es}), {L(0.5 * e)})")
-
-
-def _sql_qsfn(st, P, sinphi: str, tag: str) -> str:
-    """Authalic q (src/qsfn.cpp:9-25) over a COLUMN REF sin(phi)."""
-    L = double
-    con = st.stage(**{f"{tag}con": f"{sinphi} * {L(P.e)}"})
-    return (f"{L(P.one_es)} * ({sinphi} / (1.0D - {con} * {con}) - "
-            f"{L(0.5 / P.e)} * ln((1.0D - {con}) / (1.0D + {con})))")
-
-
-def _sql_mlfn(st, ph: str, en, tag: str) -> str:
-    """Flat meridional-arc series M(phi) (mlfn.hpp inline_pj_mlfn)."""
-    e0, e1, e2, e3, e4 = (double(v) for v in en)
-    s = st.stage(**{f"{tag}ms": f"sin({ph})"})
-    cph, s2 = st.stage(**{f"{tag}mc": f"cos({ph}) * {s}",
-                          f"{tag}m2": f"{s} * {s}"})
-    return (f"{e0} * {ph} - {cph} * ({e1} + {s2} * ({e2} + {s2} * "
-            f"({e3} + {s2} * {e4})))")
 
 
 def _sql_authlat(st, beta: str, apa, tag: str) -> str:
@@ -403,13 +369,13 @@ def _sql_authlat(st, beta: str, apa, tag: str) -> str:
 # --- forward pipeline -----------------------------------------------------
 #
 # _entry_stages -> datum legs (_emit_datum_legs; none for a bare op) ->
-# _emit_fwd (shared prepare, _emit_fwd_kernel, *a + x0/y0, *fr_meter)
-# -> shared finalize (_outputs: the error mask, vertical scaling, t).
-# Every kernel is ported term for term from the NumPy kernels, keeping
-# their operation order, grouping and Python-folded literals: Catalyst
-# does not reassociate floating-point arithmetic, so a twin agrees with
-# the Arrow-UDF path to libm ulps (parity pinned per family in
-# tests/test_engine.py).
+# _emit_fwd (shared prepare, the kernel traced from P.fwd by
+# engine/trace, *a + x0/y0, *fr_meter) -> shared finalize (_outputs: the
+# error mask, vertical scaling, t).  The traced kernel keeps the NumPy
+# kernel's operation order, grouping and Python-folded literals:
+# Catalyst does not reassociate floating-point arithmetic, so a twin
+# agrees with the Arrow-UDF path to libm ulps (tests/test_twin_sweep.py
+# runs one representative of every forward SQL skeleton).
 
 
 def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool):
@@ -442,12 +408,13 @@ def _entry_stages(st: _SqlStager, x, y, z, t, degrees: bool):
     st.stage(err=err)
 
 
-def _emit_fwd(st: _SqlStager, P, lam: str, phi: str):
-    """fwd prepare (lam wrap - lam0, lat clip), the family kernel and
-    the projection finalize (*a, +x0/y0, *fr_meter) over radian COLUMN
-    REFS — for latlong the identity kernel and no planar finalize.
-    Returns (x, y, bad): bad is the kernel's extra error predicate or
-    None."""
+def _emit_fwd(st: _SqlStager, P, lam: str, phi: str, zz: str):
+    """fwd prepare (lam wrap - lam0, lat clip), the kernel traced from
+    P.fwd and the projection finalize (*a for classic units, +x0/y0,
+    *fr_meter) over radian COLUMN REFS — for latlong the identity kernel
+    and no planar finalize.  The traced kernel closes its codegen
+    region.  Returns (x, y); a row the kernel cannot project reads NaN,
+    as in NumPy."""
     L = double
     st.stage(lamw1=_sql_adjlon(lam))
     st.stage(lamd=f"({st.col('lamw1')} - {L(P.lam0)})")
@@ -455,568 +422,12 @@ def _emit_fwd(st: _SqlStager, P, lam: str, phi: str):
         lamw=_sql_adjlon(st.col("lamd")),
         phic=f"least(greatest({phi}, {L(-_H)}), {L(_H)})")
     if P.is_latlong:
-        return lamw, phic, None
-    xk, yk, bad = _emit_fwd_kernel(st, P, lamw, phic, phi)
-    xe, ye = st.stage(
-        xe=f"{L(P.fr_meter)} * (({xk}) * {L(P.a)} + {L(P.x0)})",
-        ye=f"{L(P.fr_meter)} * (({yk}) * {L(P.a)} + {L(P.y0)})")
-    return xe, ye, bad
-
-
-def _emit_fwd_kernel(st: _SqlStager, P, lamw: str, phic: str, phi: str):
-    """Per-family forward kernels over the prepared (lamw, phic) column
-    refs (phi: the unclipped latitude).  Returns (xk, yk, bad): the
-    kernel output before the finalize scales it by a, and an extra
-    per-family error predicate (or None)."""
-    from proj_4_spark.kernels.tmerc import exact_e_fwd
-
-    if getattr(P, "fwd", None) is exact_e_fwd:
-        return _etmerc_fwd_kernel(st, P, lamw, phic)
-    L = double
-    S = st.stage
-    Q = P.opaque
-    name = P.name
-    pi = math.pi
-    if name in ("webmerc", "merc"):
-        # merc.cpp: NaN within 1e-10 of the pole (subsumes the generic
-        # PJ_EPS_LAT check); ellipsoid y = -log(tsfn) (merc.cpp:22-31),
-        # sphere log(tan(pi/4 + phi/2)) with the log1p branch at
-        # |phi| <= eps (merc.cpp:14-20)
-        if P.es != 0.0 and name == "merc":
-            ywm = f"-ln({_sql_tsfn(st, phic, f'sin({phic})', P.e, 'f_')})"
-        else:
-            eps = float(np.finfo(np.float64).eps)
-            ywm = (f"CASE WHEN abs({phic}) <= {L(eps)} THEN log1p({phic}) "
-                   f"ELSE ln(tan({L(pi / 4.0)} + 0.5D * {phic})) END")
-        return (f"{L(P.k0)} * {lamw}", f"{L(P.k0)} * ({ywm})",
-                f"abs({phi}) >= {L(_H - 1e-10)}")
-    if name == "eqc":
-        # eqc.cpp:19-27: x = cos(lat_ts)*lam (rc folds at plan time)
-        return (f"{L(float(Q['rc']))} * {lamw}", f"{phic} - {L(P.phi0)}",
-                None)
-    if name == "cea":
-        # cea.cpp:20-34: x = k0*lam; y = sin(phi)/k0 (sphere) or
-        # 0.5*qsfn(sin(phi))/k0 (ellipsoid)
-        sphi = S(f_sphi=f"sin({phic})")
-        yk = (f"0.5D * ({_sql_qsfn(st, P, sphi, 'f_')}) / {L(P.k0)}"
-              if P.es != 0.0 else f"{sphi} / {L(P.k0)}")
-        return f"{L(P.k0)} * {lamw}", yk, None
-    if name == "lcc":
-        # lcc.cpp:23-43: rho = c*tsfn(phi)^n (ellipsoid) or
-        # c*tan(pi/4+phi/2)^-n (sphere); pole rows are exact (rho=0)
-        # unless on the wrong side of the cone (n*phi <= 0 -> NaN)
-        n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
-        pole = S(f_pole=f"abs(abs({phic}) - {L(_H)}) < {L(1e-10)}")
-        if P.es != 0.0:
-            ts = _sql_tsfn(st, phic, f"sin({phic})", P.e, "f_")
-            rho = f"{L(c)} * power({ts}, {L(n)})"
-        else:
-            rho = (f"{L(c)} * power(tan({L(pi / 4.0)} + 0.5D * {phic}), "
-                   f"{L(-n)})")
-        rho, lamn = S(f_rho=f"CASE WHEN {pole} THEN 0.0D ELSE {rho} END",
-                      f_lamn=f"{lamw} * {L(n)}")
-        return (f"{L(P.k0)} * ({rho} * sin({lamn}))",
-                f"{L(P.k0)} * ({L(rho0)} - {rho} * cos({lamn}))",
-                f"{pole} AND ({phic} * {L(n)}) <= 0.0D")
-    if name in ("aea", "leac"):
-        # aea.cpp:105-118: rho^2 = c - n*q(sin phi); negative -> NaN
-        c, dd, rho0, n = (float(Q[k]) for k in ("c", "dd", "rho0", "n"))
-        sphi = S(f_sphi=f"sin({phic})")
-        if Q["ellips"]:
-            rho2 = f"{L(c)} - {L(n)} * ({_sql_qsfn(st, P, sphi, 'f_')})"
-        else:
-            rho2 = f"{L(c)} - {L(float(Q['n2']))} * {sphi}"
-        rho2 = S(f_rho2=rho2)
-        bad = f"{rho2} < 0.0D"
-        rho, lamn = S(f_rho=f"{L(dd)} * sqrt(CASE WHEN {bad} THEN 0.0D "
-                            f"ELSE {rho2} END)",
-                      f_lamn=f"{lamw} * {L(n)}")
-        return (f"{rho} * sin({lamn})", f"{L(rho0)} - {rho} * cos({lamn})",
-                bad)
-    if name in ("sinu", "eqdc"):
-        if name == "eqdc":
-            # eqdc.cpp forward over the stashed setup constants
-            n, c, rho0 = float(Q["n"]), float(Q["c"]), float(Q["rho0"])
-            m = _sql_mlfn(st, phic, Q["en"], "f_") if Q["ellips"] else phic
-            rho, lamn = S(f_rho=f"{L(c)} - ({m})", f_lamn=f"{lamw} * {L(n)}")
-            return (f"{rho} * sin({lamn})",
-                    f"{L(rho0)} - {rho} * cos({lamn})", None)
-        if P.es != 0.0:
-            # gn_sinu.cpp:27-35
-            s = S(f_s=f"sin({phic})")
-            return (f"{lamw} * cos({phic}) / sqrt(1.0D - {L(P.es)} * {s} "
-                    f"* {s})", _sql_mlfn(st, phic, Q["en"], "f_"), None)
-        # sphere: n=1, m=0 (gn_sinu.cpp:57-85 closed branch)
-        return (f"{L(float(Q['C_x']))} * {lamw} * cos({phic})",
-                f"{L(float(Q['C_y']))} * {phic}", None)
-    if name == "eqearth":
-        # eqearth.cpp:44-74: psi from the (authalic) sin-beta, 9th-order
-        # polynomial; the Equal Earth constants are exact doubles
-        from proj_4_spark.kernels.pseudocyl import _A1, _A2, _A3, _A4, _M
-
-        rqda = float(Q["rqda"])
-        sb = S(f_sphi=f"sin({phic})")
-        if P.es != 0.0:
-            sb = _clip1(f"({_sql_qsfn(st, P, sb, 'f_')}) / "
-                        f"{L(float(Q['qp']))}")
-        psi = S(f_psi=f"asin({L(_M)} * {sb})")
-        psi2 = S(f_psi2=f"{psi} * {psi}")
-        psi6 = S(f_psi6=f"{psi2} * {psi2} * {psi2}")
-        xk = (f"{lamw} * cos({psi}) / ({L(_M)} * ({L(_A1)} + "
-              f"{L(3.0 * _A2)} * {psi2} + {psi6} * ({L(7.0 * _A3)} + "
-              f"{L(9.0 * _A4)} * {psi2})))")
-        yk = (f"{psi} * ({L(_A1)} + {L(_A2)} * {psi2} + {psi6} * "
-              f"({L(_A3)} + {L(_A4)} * {psi2}))")
-        return f"({xk}) * {L(rqda)}", f"({yk}) * {L(rqda)}", None
-    if name == "cass":
-        # cass.cpp forward: spherical closed form / ellipsoidal series
-        # over the flat mlfn meridional arc; en/m0 recomputed at plan
-        # time with the kernel's own scalar formulas
-        if P.es == 0.0:
-            return (f"asin({_clip1(f'cos({phic}) * sin({lamw})')})",
-                    f"atan2(tan({phic}), cos({lamw})) - {L(P.phi0)}", None)
-        C1_, C2_, C3_ = (0.16666666666666666666,
-                         0.00833333333333333333,
-                         0.04166666666666666666)
-        en = C.enfn(P.es)
-        m0 = float(C.mlfn(np.float64(P.phi0), np.float64(math.sin(P.phi0)),
-                          np.float64(math.cos(P.phi0)), en))
-        s, cph = S(f_s=f"sin({phic})", f_cph=f"cos({phic})")
-        yml = S(f_yml=_sql_mlfn(st, phic, en, "f_"))
-        n, tn, a1 = S(f_n=f"1.0D / sqrt(1.0D - {L(P.es)} * {s} * {s})",
-                      f_tn=f"tan({phic})", f_a1=f"{lamw} * {cph}")
-        tt, cc, a2 = S(f_tt=f"{tn} * {tn}",
-                       f_cc=f"{cph} * ({L(P.es / (1.0 - P.es))} * {cph})",
-                       f_a2=f"{a1} * {a1}")
-        return (f"{n} * {a1} * (1.0D - {a2} * {tt} * ({L(C1_)} - "
-                f"(8.0D - {tt} + 8.0D * {cc}) * {a2} * {L(C2_)}))",
-                f"{yml} - ({L(m0)} - {n} * {tn} * {a2} * (0.5D + "
-                f"(5.0D - {tt} + 6.0D * {cc}) * {a2} * {L(C3_)}))", None)
-    if name == "geos":
-        # geos.cpp forward (geostationary satellite view): closed form;
-        # the kernel's closure constants recomputed at plan time from
-        # the op's own params (kernels/misc6.py setup_geos)
-        rg1 = P.param_f("h") / P.a
-        rg = 1.0 + rg1
-        if P.es != 0.0:
-            rp = math.sqrt(P.one_es)
-            phig = S(f_phig=f"atan({L(P.one_es)} * tan({phic}))")
-            r = S(f_r=f"{L(rp)} / hypot({L(rp)} * cos({phig}), "
-                      f"sin({phig}))")
-        else:
-            phig, r = phic, "1.0D"
-        vx, vy, vz = S(f_vx=f"{r} * cos({lamw}) * cos({phig})",
-                       f_vy=f"{r} * sin({lamw}) * cos({phig})",
-                       f_vz=f"{r} * sin({phig})")
-        tmp = S(f_tmp=f"{L(rg)} - {vx}")
-        if P.params.get("sweep") == "x":
-            xk = f"{L(rg1)} * atan({vy} / hypot({vz}, {tmp}))"
-            yk = f"{L(rg1)} * atan({vz} / {tmp})"
-        else:
-            xk = f"{L(rg1)} * atan({vy} / {tmp})"
-            yk = f"{L(rg1)} * atan({vz} / hypot({vy}, {tmp}))"
-        if P.es != 0.0:
-            # visibility check (the sphere path skips it, like the kernel)
-            vis = S(f_vis=f"(({L(rg)} - {vx}) * {vx} - {vy} * {vy} - "
-                          f"{vz} * {vz} * {L(P.rone_es)}) < 0.0D")
-            xk = f"CASE WHEN {vis} THEN {_SQL_NAN} ELSE {xk} END"
-            yk = f"CASE WHEN {vis} THEN {_SQL_NAN} ELSE {yk} END"
-        return xk, yk, None
-    if name in ("ortho", "gnom"):
-        # ortho.cpp:38-76/133-157, gnom.cpp:33-77: hemisphere-guarded
-        # closed forms, all aspect modes
-        mode = Q["mode"]
-        s0, c0 = float(Q["sinph0"]), float(Q["cosph0"])
-        cosphi, sinphi, coslam, sinlam = S(
-            f_cp=f"cos({phic})", f_sp=f"sin({phic})",
-            f_cl=f"cos({lamw})", f_sl=f"sin({lamw})")
-        obliq = f"{L(s0)} * {sinphi} + {L(c0)} * {cosphi} * {coslam}"
-        obliq_y = f"{L(c0)} * {sinphi} - {L(s0)} * {cosphi} * {coslam}"
-        cl = f"(-{coslam})" if mode == "n_pole" else coslam
-        if name == "ortho" and P.es != 0.0:
-            nu = S(f_nu=f"1.0D / sqrt(1.0D - {L(P.es)} * {sinphi} * "
-                        f"{sinphi})")
-            return (f"{nu} * {cosphi} * {sinlam}",
-                    f"{nu} * ({sinphi} * {L(c0)} - {cosphi} * {L(s0)} * "
-                    f"{coslam}) + {L(P.es)} * ({L(float(Q['nu0']) * s0)} "
-                    f"- {nu} * {sinphi}) * {L(c0)}",
-                    f"({obliq}) < {L(-1e-10)}")
-        if name == "ortho":
-            if mode == "equit":
-                bad, yk = f"{cosphi} * {coslam} < {L(-1e-10)}", sinphi
-            elif mode == "obliq":
-                bad, yk = f"({obliq}) < {L(-1e-10)}", obliq_y
-            else:
-                bad = (f"(abs({phic} - {L(P.phi0)}) - {L(1e-10)}) > "
-                       f"{L(_H)}")
-                yk = f"{cosphi} * {cl}"
-            return f"{cosphi} * {sinlam}", yk, bad
-        # gnom: sphere formulas regardless of es (gnom.cpp)
-        y0c = S(f_y0={"equit": f"{cosphi} * {coslam}", "obliq": obliq,
-                      "s_pole": f"-{sinphi}"}.get(mode, sinphi))
-        bad = f"{y0c} <= {L(1e-10)}"
-        yi = S(f_yi=f"1.0D / (CASE WHEN {bad} THEN 1.0D ELSE {y0c} END)")
-        yk = {"equit": f"{yi} * {sinphi}",
-              "obliq": f"{yi} * ({obliq_y})"}.get(mode,
-                                                  f"{yi} * {cosphi} * {cl}")
-        return f"{yi} * {cosphi} * {sinlam}", yk, bad
-    if name == "somerc":
-        # somerc.cpp:10-25; the setup constants (c, K, kR, phip0) are
-        # recomputed with the kernel closure's scalar formulas
-        # (somerc.cpp:57-80) — deterministic plan-time math
-        e = P.e
-        hlf_e = 0.5 * e
-        cp0 = math.cos(P.phi0) ** 2
-        cons = math.sqrt(1.0 + P.es * cp0 * cp0 * P.rone_es)
-        sp0 = math.sin(P.phi0)
-        sinp0 = sp0 / cons
-        phip0 = math.asin(max(-1.0, min(1.0, sinp0)))
-        cosp0 = math.cos(phip0)
-        spe = sp0 * e
-        Kc = (math.log(math.tan(pi / 4.0 + 0.5 * phip0))
-              - cons * (math.log(math.tan(pi / 4.0 + 0.5 * P.phi0))
-                        - hlf_e * math.log((1.0 + spe) / (1.0 - spe))))
-        kR = P.k0 * math.sqrt(P.one_es) / (1.0 - spe * spe)
-        spc = S(f_spc=f"sin({phic}) * {L(e)}")
-        phip = S(f_phip=f"2.0D * atan(exp({L(cons)} * (ln(tan("
-                        f"{L(pi / 4.0)} + 0.5D * {phic})) - {L(hlf_e)} * "
-                        f"ln((1.0D + {spc}) / (1.0D - {spc}))) + {L(Kc)}))"
-                        f" - {L(_H)}")
-        lamp, cpp = S(f_lamp=f"{L(cons)} * {lamw}", f_cpp=f"cos({phip})")
-        phipp = S(f_phipp="asin(" + _clip1(
-            f"{L(cosp0)} * sin({phip}) - {L(sinp0)} * {cpp} * cos({lamp})")
-            + ")")
-        lampp = _clip1(f"{cpp} * sin({lamp}) / cos({phipp})")
-        return (f"{L(kR)} * asin({lampp})",
-                f"{L(kR)} * ln(tan({L(pi / 4.0)} + 0.5D * {phipp}))", None)
-    if name == "krovak":
-        # krovak.cpp:86-240; setup constants recomputed with the same
-        # scalar formulas (P.a/P.es already stomped to Bessel at setup)
-        e = P.e
-        UQ = 1.04216856380474
-        S0 = 1.37008346281555
-        czech = 1.0 if P.param_b("czech") else -1.0
-        alpha = math.sqrt(1.0 + (P.es * math.cos(P.phi0) ** 4)
-                          / (1.0 - P.es))
-        u0 = math.asin(math.sin(P.phi0) / alpha)
-        g = math.pow((1.0 + e * math.sin(P.phi0))
-                     / (1.0 - e * math.sin(P.phi0)), alpha * e / 2.0)
-        kk = (math.tan(u0 / 2.0 + pi / 4.0)
-              / math.pow(math.tan(P.phi0 / 2.0 + pi / 4.0), alpha) * g)
-        n0 = math.sqrt(1.0 - P.es) / (1.0 - P.es
-                                      * math.sin(P.phi0) ** 2)
-        n = math.sin(S0)
-        rho0 = P.k0 * n0 / math.tan(S0)
-        ad = pi / 2.0 - UQ
-        esin = S(f_esin=f"sin({phic}) * {L(e)}")
-        u, dv = S(f_u=f"2.0D * (atan({L(kk)} * power(tan({phic} / 2.0D + "
-                      f"{L(pi / 4.0)}), {L(alpha)}) / power((1.0D + {esin})"
-                      f" / (1.0D - {esin}), {L(alpha * e / 2.0)})) - "
-                      f"{L(pi / 4.0)})",
-                  f_dv=f"(-{lamw}) * {L(alpha)}")
-        s = S(f_s="asin(" + _clip1(
-            f"{L(math.cos(ad))} * sin({u}) + {L(math.sin(ad))} * cos({u})"
-            f" * cos({dv})") + ")")
-        cs = S(f_cs=f"cos({s})")
-        dg = f"{cs} < {L(1e-12)}"
-        d = S(f_d="asin(" + _clip1(
-            f"cos({u}) * sin({dv}) / (CASE WHEN {dg} THEN 1.0D "
-            f"ELSE {cs} END)") + ")")
-        rr = rho0 * math.pow(math.tan(S0 / 2.0 + pi / 4.0), n)
-        rho, ep = S(f_rho=f"{L(rr)} / power(tan({s} / 2.0D + "
-                          f"{L(pi / 4.0)}), {L(n)})",
-                    f_ep=f"{L(n)} * {d}")
-        return (f"CASE WHEN {dg} THEN 0.0D ELSE {rho} * sin({ep}) * "
-                f"{L(czech)} END",
-                f"CASE WHEN {dg} THEN 0.0D ELSE {rho} * cos({ep}) * "
-                f"{L(czech)} END", None)
-    if name == "sterea":
-        # sterea.cpp:46-67 over gauss.cpp:84-94: conformal-sphere
-        # latitude via one atan/pow, then the oblique stereographic;
-        # C/K/ratexp/sinc0/cosc0/R2 fold at plan time
-        Cc, Kc = float(Q["C"]), float(Q["K"])
-        sc0, cc0 = float(Q["sinc0"]), float(Q["cosc0"])
-        esin = S(f_esin=f"sin({phic}) * {L(P.e)}")
-        sph, slam = S(f_sph=f"2.0D * atan({L(Kc)} * power(tan(0.5D * "
-                            f"{phic} + {L(pi / 4.0)}), {L(Cc)}) * power("
-                            f"(1.0D - {esin}) / (1.0D + {esin}), "
-                            f"{L(float(Q['ratexp']))})) - {L(_H)}",
-                      f_slam=f"{L(Cc)} * {lamw}")
-        sinc, cosc, cosl = S(f_sinc=f"sin({sph})", f_cosc=f"cos({sph})",
-                             f_cosl=f"cos({slam})")
-        den = S(f_den=f"1.0D + {L(sc0)} * {sinc} + {L(cc0)} * {cosc} * "
-                      f"{cosl}")
-        bad = f"{den} = 0.0D"
-        kk = S(f_kk=f"{L(P.k0 * float(Q['R2']))} / (CASE WHEN {bad} THEN "
-                    f"1.0D ELSE {den} END)")
-        return (f"{kk} * {cosc} * sin({slam})",
-                f"{kk} * ({L(cc0)} * {sinc} - {L(sc0)} * {cosc} * {cosl})",
-                bad)
-    if name == "robin":
-        # robin.cpp forward (kernels/robin.py): the 5-degree node i,
-        # then V(C, z) = c0 + z*(c1 + z*(c2 + z*c3)) over the X and Y
-        # tables; each float32-rounded coefficient column is an array
-        # literal indexed by node
-        from proj_4_spark.kernels import robin as R
-
-        i = S(r_i=f"CAST(least(greatest(floor(abs({phic}) * {L(R._C1)} + "
-                  f"{L(1e-15)}), 0), {R._NODES}) AS INT)")
-        z = S(r_z=f"{L(C.RAD_TO_DEG)} * (abs({phic}) - {L(R._RC1)} * "
-                  f"CAST({i} AS DOUBLE))")
-
-        def v(T):
-            c = [f"element_at(array({', '.join(L(t) for t in T[:, j])}), "
-                 f"{i} + 1)" for j in range(4)]
-            return f"{c[0]} + {z} * ({c[1]} + {z} * ({c[2]} + {z} * {c[3]}))"
-
-        yv = S(r_y=f"({v(R._YA)}) * {L(R._FYC)}")
-        return (f"({v(R._XA)}) * {L(R._FXC)} * {lamw}",
-                f"CASE WHEN {phic} < 0.0D THEN (-{yv}) ELSE {yv} END",
-                f"isnan({phic})")
-    if name == "laea":
-        return _laea_fwd_kernel(st, P, lamw, phic)
-    if name in ("stere", "ups"):
-        return _stere_fwd_kernel(st, P, lamw, phic)
-    if name == "omerc":
-        return _omerc_fwd_kernel(st, P, lamw, phic)
-    return _moll_fwd_kernel(st, P, lamw, phic)
-
-
-def _laea_fwd_kernel(st, P, lamw: str, phic: str):
-    """laea.cpp:35-137: authalic sin-beta = qsfn(sin phi)/qp; the
-    xmf/ymf/qp/sinb1/cosb1 constants fold at plan time."""
-    L = double
-    S = st.stage
-    Q = P.opaque
-    mode = Q["mode"]
-    sinlam, coslam, sinphi = S(f_sl=f"sin({lamw})", f_cl=f"cos({lamw})",
-                               f_sp=f"sin({phic})")
-    sb1, cb1 = (L(float(Q["sinb1"])), L(float(Q["cosb1"]))) \
-        if mode in ("obliq", "equit") else (None, None)
-    if P.es != 0.0:
-        q = S(f_q=_sql_qsfn(st, P, sinphi, "f_"))
-        qp = float(Q["qp"])
-        if mode in ("obliq", "equit"):
-            xmf, ymf = L(float(Q["xmf"])), L(float(Q["ymf"]))
-            sinb = S(f_sinb=f"{q} / {L(qp)}")
-            cosb2 = S(f_cb2=f"1.0D - {sinb} * {sinb}")
-            cosb = S(f_cosb=f"CASE WHEN {cosb2} > 0.0D THEN "
-                            f"sqrt(greatest({cosb2}, 0.0D)) ELSE 0.0D END")
-            b = S(f_b=f"1.0D + {sb1} * {sinb} + {cb1} * {cosb} * {coslam}"
-                  if mode == "obliq" else f"1.0D + {cosb} * {coslam}")
-            bad = f"abs({b}) < {L(1e-10)}"
-            bb = S(f_bb=f"sqrt(2.0D / (CASE WHEN {bad} THEN 1.0D "
-                        f"ELSE {b} END))")
-            yk = (f"{ymf} * {bb} * ({cb1} * {sinb} - {sb1} * {cosb} * "
-                  f"{coslam})" if mode == "obliq"
-                  else f"{bb} * {sinb} * {ymf}")
-            return f"{xmf} * {bb} * {cosb} * {sinlam}", yk, bad
-        if mode == "n_pole":
-            b, qq = f"{L(_H)} + {phic}", f"{L(qp)} - {q}"
-        else:
-            b, qq = f"{phic} - {L(_H)}", f"{L(qp)} + {q}"
-        qq = S(f_qq=qq)
-        bb = S(f_bb=f"sqrt(greatest({qq}, 0.0D))")
-        small = f"{qq} < {L(1e-15)}"
-        yb = bb if mode == "s_pole" else f"(-{bb})"
-        return (f"CASE WHEN {small} THEN 0.0D ELSE {bb} * {sinlam} END",
-                f"CASE WHEN {small} THEN 0.0D ELSE {coslam} * {yb} END",
-                f"abs({b}) < {L(1e-10)}")
-    cosphi = S(f_cp=f"cos({phic})")
-    if mode in ("equit", "obliq"):
-        b = S(f_b=f"1.0D + {cosphi} * {coslam}" if mode == "equit" else
-              f"1.0D + {sb1} * {sinphi} + {cb1} * {cosphi} * {coslam}")
-        bad = f"{b} <= {L(1e-10)}"
-        bb = S(f_bb=f"sqrt(2.0D / (CASE WHEN {bad} THEN 1.0D "
-                    f"ELSE {b} END))")
-        yk = (f"{bb} * {sinphi}" if mode == "equit" else
-              f"{bb} * ({cb1} * {sinphi} - {sb1} * {cosphi} * {coslam})")
-        return f"{bb} * {cosphi} * {sinlam}", yk, bad
-    half = S(f_half=f"{L(math.pi / 4.0)} - {phic} * 0.5D")
-    yy = S(f_yy=f"2.0D * {'cos' if mode == 's_pole' else 'sin'}({half})")
-    pcl = f"(-{coslam})" if mode == "n_pole" else coslam
-    return (f"{yy} * {sinlam}", f"{yy} * {pcl}",
-            f"abs({phic} + {L(P.phi0)}) < {L(1e-10)}")
-
-
-def _stere_fwd_kernel(st, P, lamw: str, phic: str):
-    """stere.cpp:44-140 (ellipsoidal 44-96, spherical 99-140); akm1
-    folds k0/lat_ts at setup; all four aspect modes."""
-    L = double
-    S = st.stage
-    Q = P.opaque
-    mode = Q["mode"]
-    akm1 = L(float(Q["akm1"]))
-    sX1, cX1 = L(float(Q["sinX1"])), L(float(Q["cosX1"]))
-    sinlam, coslam, sinphi = S(f_sl=f"sin({lamw})", f_cl=f"cos({lamw})",
-                               f_sp=f"sin({phic})")
-    if P.es != 0.0:
-        e = P.e
-        if mode in ("obliq", "equit"):
-            esin = S(f_esin=f"{sinphi} * {L(e)}")
-            xc = S(f_xc=f"2.0D * atan(tan(0.5D * ({L(_H)} + {phic})) * "
-                        f"power((1.0D - {esin}) / (1.0D + {esin}), "
-                        f"{L(0.5 * e)})) - {L(_H)}")
-            sinX, cosX = S(f_sx=f"sin({xc})", f_cx=f"cos({xc})")
-            den = S(f_den=f"{cX1} * (1.0D + {sX1} * {sinX} + {cX1} * "
-                          f"{cosX} * {coslam})" if mode == "obliq"
-                    else f"1.0D + {cosX} * {coslam}")
-            bad = f"{den} = 0.0D"
-            A = S(f_A=f"{akm1} / (CASE WHEN {bad} THEN 1.0D ELSE {den} END)")
-            yk = (f"{A} * ({cX1} * {sinX} - {sX1} * {cosX} * {coslam})"
-                  if mode == "obliq" else f"{A} * {sinX}")
-            return f"{A} * {cosX} * {sinlam}", yk, bad
-        s_pole = mode == "s_pole"
-        pphi = f"(-{phic})" if s_pole else phic
-        psin = f"(-{sinphi})" if s_pole else sinphi
-        pcl = f"(-{coslam})" if s_pole else coslam
-        xa = S(f_xa=f"{akm1} * ({_sql_tsfn(st, pphi, psin, e, 'f_')})")
-        return f"{xa} * {sinlam}", f"(-{xa}) * {pcl}", None
-    cosphi = S(f_cp=f"cos({phic})")
-    if mode in ("obliq", "equit"):
-        den = S(f_den=f"1.0D + {cosphi} * {coslam}" if mode == "equit" else
-                f"1.0D + {sX1} * {sinphi} + {cX1} * {cosphi} * {coslam}")
-        bad = f"{den} <= {L(1.0e-10)}"
-        A = S(f_A=f"{akm1} / (CASE WHEN {bad} THEN 1.0D ELSE {den} END)")
-        yk = (f"{A} * {sinphi}" if mode == "equit" else
-              f"{A} * ({cX1} * {sinphi} - {sX1} * {cosphi} * {coslam})")
-        return f"{A} * {cosphi} * {sinlam}", yk, bad
-    n_pole = mode == "n_pole"
-    pphi = S(f_pphi=f"-{phic}" if n_pole else phic)
-    pcl = f"(-{coslam})" if n_pole else coslam
-    yb = S(f_yb=f"{akm1} * tan({L(math.pi / 4.0)} + 0.5D * {pphi})")
-    return (f"{sinlam} * {yb}", f"{yb} * {pcl}",
-            f"abs({pphi} - {L(_H)}) < {L(1.0e-8)}")
-
-
-def _omerc_fwd_kernel(st, P, lamw: str, phic: str):
-    """omerc.cpp forward (Hotine oblique Mercator, kernels/misc5.py):
-    interior lanes run the closed hyperbolic form, the pole lanes take
-    the setup's v_pole constants; divisions that numpy evaluates under
-    errstate (E/ts^B at the exact pole, the U log at |U|=1) sit inside
-    interior/bad CASE branches so ANSI Spark never hits them."""
-    Q = P.opaque
-    L = double
-    S = st.stage
-    EPS_O, TOL_O = 1.0e-10, 1.0e-7
-    A, B, E = float(Q["A"]), float(Q["B"]), float(Q["E"])
-    ArB = float(Q["ArB"])
-    sg, cg = float(Q["singam"]), float(Q["cosgam"])
-    inter = S(k_int=f"abs(abs({phic}) - {L(_H)}) > {L(EPS_O)}")
-    sph = S(k_sph=f"sin({phic})")
-    esn = S(k_es=f"{L(P.e)} * {sph}")
-    # tsfn (tsfn.cpp:6-17); 1+e*sin > 0 always
-    ts = S(k_ts=f"tan(0.5D * ({L(_H)} - {phic})) / "
-                f"power((1.0D - {esn}) / (1.0D + {esn}), {L(0.5 * P.e)})")
-    # W = E/ts^B: guarded to 1 off-interior (exact-pole ts is 0/inf,
-    # where numpy's errstate division would be an ANSI error here)
-    w = S(k_w=f"CASE WHEN {inter} THEN {L(E)} / power({ts}, {L(B)}) "
-              f"ELSE 1.0D END")
-    wi = S(k_wi=f"1.0D / {w}")
-    sc, tc, vv, tcos = S(k_s=f"0.5D * ({w} - {wi})",
-                         k_t=f"0.5D * ({w} + {wi})",
-                         k_vv=f"sin({L(B)} * {lamw})",
-                         k_tc=f"cos({L(B)} * {lamw})")
-    uu = S(k_u0=f"({sc} * {L(sg)} - {vv} * {L(cg)}) / {tc}")
-    badc = S(k_bad=f"{inter} AND abs(abs({uu}) - 1.0D) < {L(EPS_O)}")
-    a1 = S(k_a1=f"{sc} * {L(cg)} + {vv} * {L(sg)}")
-    ve, ue = S(k_ve=f"CASE WHEN NOT {inter} THEN "
-                    f"(CASE WHEN {phic} > 0.0D THEN "
-                    f"{L(float(Q['v_pole_n']))} ELSE "
-                    f"{L(float(Q['v_pole_s']))} END) "
-                    f"WHEN {badc} THEN {_SQL_NAN} ELSE "
-                    f"0.5D * {L(ArB)} * ln((1.0D - {uu}) / "
-                    f"(1.0D + {uu})) END",
-               k_ue=f"CASE WHEN NOT {inter} THEN {L(ArB)} * {phic} "
-                    f"WHEN abs({tcos}) < {L(TOL_O)} THEN "
-                    f"{L(A)} * {lamw} ELSE {L(ArB)} * "
-                    f"{_sql_atan2_ieee(a1, tcos)} END")
-    if Q["no_rot"]:
-        xk, yk = ue, ve
-    else:
-        sr, cr = float(Q["sinrot"]), float(Q["cosrot"])
-        u2 = S(k_u2=f"{ue} - {L(float(Q['u_0']))}")
-        xk, yk = S(k_xr=f"{ve} * {L(cr)} + {u2} * {L(sr)}",
-                   k_yr=f"{u2} * {L(cr)} - {ve} * {L(sr)}")
-    return S(k_xb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {xk} END",
-             k_yb=f"CASE WHEN {badc} THEN {_SQL_NAN} ELSE {yk} END") \
-        + (None,)
-
-
-def _moll_fwd_kernel(st, P, lamw: str, phic: str):
-    """moll/wag4/wag5 forward (kernels/pseudocyl.moll_s_forward,
-    moll.cpp:22-42): the bounded Newton on the parametric angle unrolls
-    with the frozen-lane flag (non-convergent lanes substitute the
-    +-pi/2 pole like the kernel); the exact-zero Newton denominator
-    (1+cos == 0 at the float pi) routes through num*Infinity to mirror
-    numpy under ANSI mode."""
-    Q = P.opaque
-    L = double
-    S = st.stage
-    kk = S(k_k=f"{L(float(Q['C_p']))} * sin({phic})")
-    cur, done = phic, "false"
-    for i in range(1, 11):
-        nu, de = S(**{f"m_nu{i}": f"CASE WHEN {done} THEN 0.0D "
-                                  f"ELSE {cur} + sin({cur}) - {kk} END",
-                      f"m_de{i}": f"CASE WHEN {done} THEN 1.0D "
-                                  f"ELSE 1.0D + cos({cur}) END"})
-        vv = S(**{f"m_v{i}": f"CASE WHEN {done} THEN 0.0D "
-                             f"WHEN {de} = 0.0D THEN {nu} * {_SQL_INF} "
-                             f"ELSE {nu} / {de} END"})
-        cur, done = S(**{f"m_ph{i}": f"CASE WHEN {done} THEN {cur} "
-                                     f"ELSE {cur} - {vv} END",
-                         f"m_dn{i}": f"abs({vv}) < {L(1.0e-7)}"})
-        if i == 5:
-            st.barrier()  # keep each codegen region JIT-compilable
-    po = S(k_po=f"CASE WHEN {done} THEN 0.5D * {cur} ELSE "
-                f"(CASE WHEN {cur} < 0.0D THEN {L(-_H)} "
-                f"ELSE {L(_H)} END) END")
-    return (f"{L(float(Q['C_x']))} * {lamw} * cos({po})",
-            f"{L(float(Q['C_y']))} * sin({po})", None)
-
-
-def _etmerc_fwd_kernel(st, P, lamw: str, phic: str):
-    """Poder-Engsager etmerc/tmerc/utm forward (kernels/tmerc.
-    exact_e_fwd, tmerc.cpp:334-415).  The gatg and complex-Clenshaw
-    recurrences reference each intermediate twice, so inlining them
-    into one projection would duplicate subtrees Fibonacci-style
-    (Catalyst does not CSE across an expression tree); every recurrence
-    step lands in its OWN stage instead."""
-    Q = P.opaque["exact"]
-    cbg, gtu = Q["cbg"], Q["gtu"]
-    L = double
-    S = st.stage
-    # gatg(cbg): real Clenshaw over cos/sin(2*phi) (tmerc.cpp:267-279)
-    two, s2 = S(two=f"2.0D * cos(2.0D * {phic})", s2=f"sin(2.0D * {phic})")
-    cn0 = S(Cn0=f"{phic} + {_sql_gatg(st, cbg, two, '')} * {s2}")
-    # spherical-to-complex-plane setup (tmerc.cpp:352-376)
-    sCn, cCn, sCe, cCe = S(sCn=f"sin({cn0})", cCn=f"cos({cn0})",
-                           sCe=f"sin({lamw})", cCe=f"cos({lamw})")
-    cc = S(cc=f"{cCn} * {cCe}")
-    cn1, invd = S(Cn1=f"atan2({sCn}, {cc})",
-                  invd=f"1.0D / hypot({sCn}, {cc})")
-    tCe, twoinv = S(tCe=f"{sCe} * {cCn} * {invd}", twoinv=f"2.0D * {invd}")
-    ce1, twoinvsq = S(Ce1=f"asinh({tCe})", twoinvsq=f"{twoinv} * {invd}")
-    tmpr = S(tmpr=f"{cc} * {twoinvsq}")
-    sar, car, shi, chi = S(sar=f"{sCn} * {tmpr}", car=f"{cc} * {tmpr} - 1.0D",
-                           shi=f"{tCe} * {twoinv}", chi=f"{twoinvsq} - 1.0D")
-    # complex Clenshaw over gtu (tmerc.cpp:283-311)
-    r, i = S(r=f"2.0D * {car} * {chi}", i=f"-2.0D * {sar} * {shi}")
-    hr, hi = _sql_clens(st, gtu, r, i, "")
-    rr, ii = S(rr=f"{sar} * {chi}", ii=f"{car} * {shi}")
-    cn, ce = S(Cn=f"{cn1} + {rr} * ({hr}) - {ii} * ({hi})",
-               Ce=f"{ce1} + {rr} * ({hi}) + {ii} * ({hr})")
-    # Ce bound (tmerc.cpp:409)
-    ok = S(ok=f"abs({ce}) <= {L(_CE_LIMIT_JVM)}")
-    # close the region after the recurrences: a chained roundtrip (utm
-    # fwd -> inv) otherwise fuses this chain (~5.3k bytecodes alone)
-    # with the inverse's first region past HotSpot's 8000-byte JIT
-    # ceiling, and the forward leg runs interpreted
-    st.barrier()
-    Qn = L(float(Q["Qn"]))
-    return (f"CASE WHEN {ok} THEN {Qn} * {ce} ELSE {_SQL_NAN} END",
-            f"CASE WHEN {ok} THEN {Qn} * {cn} + {L(float(Q['Zb']))} "
-            f"ELSE {_SQL_NAN} END", None)
+        return lamw, phic
+    xk, yk = trace.emit(st, _traced_fwd(P), dict(
+        lam=lamw, phi=phic, z=zz, t=st.col("tt")), "f")
+    a = f" * {L(P.a)}" if P.right == UNITS_CLASSIC else ""
+    return st.stage(xe=f"{L(P.fr_meter)} * ({xk}{a} + {L(P.x0)})",
+                    ye=f"{L(P.fr_meter)} * ({yk}{a} + {L(P.y0)})")
 
 
 def _sql_gatg(st, coeffs, two: str, tag: str) -> str:
@@ -1268,9 +679,9 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
         # spherical de-projection (tmerc.cpp:452-470)
         scn, ccn, she = S(k_scn=f"sin({cn1})", k_ccn=f"cos({cn1})",
                           k_she=f"sinh({ce1})")
-        ce2, mod = S(k_ce2=_sql_atan2_ieee(she, ccn),
+        ce2, mod = S(k_ce2=atan2_ieee(she, ccn),
                      k_mod=f"hypot({she}, {ccn})")
-        cn2, tmp = S(k_cn2=_sql_atan2_ieee(scn, mod),
+        cn2, tmp = S(k_cn2=atan2_ieee(scn, mod),
                      k_tmp=f"2.0D * {mod} / ({she} * {she} + 1.0D)")
         s2c, c2c = S(k_s2c=f"{scn} * {tmp}",
                      k_c2c=f"{tmp} * {mod} - 1.0D")
@@ -1330,7 +741,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
         phi = S(k_ph=f"CASE WHEN {done} THEN {neg}{cur} "
                      f"ELSE {_SQL_NAN} END")
         la0 = S(k_la0=f"CASE WHEN {xs} = 0.0D AND {ys} = 0.0D THEN "
-                      f"0.0D ELSE {_sql_atan2_ieee(xs, ys)} END")
+                      f"0.0D ELSE {atan2_ieee(xs, ys)} END")
         lam = S(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
                       f"ELSE {la0} END")
     elif name == "omerc":
@@ -1369,7 +780,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                    k_ay=f"cos({L(float(Q['BrA']))} * {uq})")
         la0 = S(k_la0=f"CASE WHEN {ap} THEN 0.0D ELSE "
                       f"-({L(float(Q['rB']))}) * "
-                      f"{_sql_atan2_ieee(ax, ay)} END")
+                      f"{atan2_ieee(ax, ay)} END")
         la1 = S(k_la1=f"CASE WHEN isnan({ph0}) THEN {_SQL_NAN} "
                       f"ELSE {la0} END")
         phi, lam = S(k_ph=f"CASE WHEN {badc} THEN {_SQL_NAN} "
@@ -1413,7 +824,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                 ab = S(k_ab1=f"-({ab})")
         bt = S(k_bt=f"asin(greatest(least({ab}, 1.0D), -1.0D))")
         aphi = S(k_aphi=_sql_authlat(st, bt, apa, "k_"))
-        la0 = S(k_la0=_sql_atan2_ieee(xs, ys))
+        la0 = S(k_la0=atan2_ieee(xs, ys))
         lam, phi = S(k_lam=f"CASE WHEN {ctr} THEN 0.0D ELSE {la0} END",
                      k_ph=f"CASE WHEN {ctr} THEN {L(P.phi0)} "
                           f"ELSE {aphi} END")
@@ -1449,7 +860,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                           f"/ (2.0D * {aa})")
         vx2, vy2, vz2 = S(k_vx2=f"{L(rg)} + {kq} * (-1.0D)",
                           k_vy2=f"{vy} * {kq}", k_vz2=f"{vz} * {kq}")
-        la0 = S(k_la0=_sql_atan2_ieee(vy2, vx2))
+        la0 = S(k_la0=atan2_ieee(vy2, vx2))
         # Vx2 > 0 for every det>=0 lane (k <= rg/aa < rg), so the
         # division cannot hit the ANSI divide-by-zero path
         ph0 = S(k_ph0=f"atan({vz2} * cos({la0}) / {vx2})")
@@ -1595,7 +1006,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                             f"ELSE {L(H)} END) END")
         phi = S(k_ph=f"CASE WHEN {nz} THEN {phi_i} "
                      f"ELSE {L(H if n > 0.0 else -H)} END")
-        lam = S(k_la0=f"CASE WHEN {nz} THEN {_sql_atan2_ieee(xs, ys)} / "
+        lam = S(k_la0=f"CASE WHEN {nz} THEN {atan2_ieee(xs, ys)} / "
                       f"{L(n)} ELSE 0.0D END")
         if name != "eqdc":  # (the eqdc kernel has no isnan(phi) masking)
             lam = S(k_lam=f"CASE WHEN isnan({phi}) THEN {_SQL_NAN} "
@@ -1644,13 +1055,13 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                 xs, ys = S(k_xs=f"{xm} * {sinz} * {cb1}",
                            k_ys=f"({cosz} - sin({ph}) * {sb1}) * {rh}")
             la = (f"CASE WHEN {ys} = 0.0D THEN 0.0D "
-                  f"ELSE {_sql_atan2_ieee(xs, ys)} END")
+                  f"ELSE {atan2_ieee(xs, ys)} END")
         elif mode == "n_pole":
             ph = f"{L(H)} - {phz}"
-            la = _sql_atan2_ieee(xm, S(k_nym=f"-{ym}"))
+            la = atan2_ieee(xm, S(k_nym=f"-{ym}"))
         else:
             ph = f"{phz} - {L(H)}"
-            la = _sql_atan2_ieee(xm, ym)
+            la = atan2_ieee(xm, ym)
         phi = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {ph} END"
         lam = f"CASE WHEN {bad} THEN {_SQL_NAN} ELSE {la} END"
     elif name in ("stere", "ups"):
@@ -1668,7 +1079,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
                    f"ELSE asin({_clip1(f'{ym} * {sinc} / {rhs}')}) END")
             ax, ay = S(k_ax=f"{xm} * {sinc}", k_ay=f"{cosc} * {rh}")
             lam = (f"CASE WHEN ({cosc} != 0.0D) OR ({xm} != 0.0D) THEN "
-                   f"{_sql_atan2_ieee(ax, ay)} ELSE 0.0D END")
+                   f"{atan2_ieee(ax, ay)} ELSE 0.0D END")
         elif mode == "obliq":
             sX1, cX1 = L(float(Q["sinX1"])), L(float(Q["cosX1"]))
             phi = S(k_ph0=f"CASE WHEN {near} THEN {L(P.phi0)} ELSE asin(" +
@@ -1677,14 +1088,14 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
             cc = S(k_ccc=f"{cosc} - {sX1} * sin({phi})")
             ax, ay = S(k_ax=f"{xm} * {sinc} * {cX1}", k_ay=f"{cc} * {rh}")
             lam = (f"CASE WHEN ({cc} != 0.0D) OR ({xm} != 0.0D) THEN "
-                   f"{_sql_atan2_ieee(ax, ay)} ELSE 0.0D END")
+                   f"{atan2_ieee(ax, ay)} ELSE 0.0D END")
         else:
             yy = S(k_yy=f"-{ym}") if mode == "n_pole" else ym
             pole = f"(-{cosc})" if mode == "s_pole" else cosc
             phi = (f"CASE WHEN {near} THEN {L(P.phi0)} "
                    f"ELSE asin({_clip1(pole)}) END")
             lam = (f"CASE WHEN ({xm} = 0.0D) AND ({yy} = 0.0D) THEN 0.0D "
-                   f"ELSE {_sql_atan2_ieee(xm, yy)} END")
+                   f"ELSE {atan2_ieee(xm, yy)} END")
     elif name == "sinu":
         # gn_sinu.cpp:88-97 spherical branch (setup pins n=1, m=0)
         phi = S(k_yy=f"{ym} / {L(float(Q['C_y']))}")
@@ -1694,7 +1105,7 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
         dd = S(k_dd=f"{ym} + {L(P.phi0)}")
         tx, cd = S(k_tx=f"tan({xm})", k_cd=f"cos({dd})")
         phi = f"asin({_clip1(f'sin({dd}) * cos({xm})')})"
-        lam = _sql_atan2_ieee(tx, cd)
+        lam = atan2_ieee(tx, cd)
     elif name in ("ortho", "gnom"):
         # ortho.cpp:79-128 / gnom.cpp:80-125 spherical inverses, all
         # aspect modes
@@ -1733,18 +1144,18 @@ def _emit_inv_kernel(st, P, xm: str, ym: str):
             if name == "ortho":
                 la = (f"CASE WHEN {yy} = 0.0D THEN (CASE WHEN {xx} = 0.0D "
                       f"THEN 0.0D WHEN {xx} < 0.0D THEN {L(-H)} "
-                      f"ELSE {L(H)} END) ELSE {_sql_atan2_ieee(xx, yy)} END")
+                      f"ELSE {L(H)} END) ELSE {atan2_ieee(xx, yy)} END")
             else:
-                la = _sql_atan2_ieee(xx, yy)
+                la = atan2_ieee(xx, yy)
         elif name == "ortho":
             sgn = 1.0 if mode == "n_pole" else -1.0
             ph = f"{L(sgn)} * acos({_clip1(sinc)})"
-            la = _sql_atan2_ieee(xm, S(k_yy=f"{L(-sgn)} * {ym}"))
+            la = atan2_ieee(xm, S(k_yy=f"{L(-sgn)} * {ym}"))
         elif mode == "s_pole":
-            ph, la = f"{ph0a} - {L(H)}", _sql_atan2_ieee(xm, ym)
+            ph, la = f"{ph0a} - {L(H)}", atan2_ieee(xm, ym)
         else:
             ph = f"{L(H)} - {ph0a}"
-            la = _sql_atan2_ieee(xm, S(k_yy=f"-{ym}"))
+            la = atan2_ieee(xm, S(k_yy=f"-{ym}"))
         phi = f"CASE WHEN {center} THEN {L(P.phi0)} ELSE {ph} END"
         lam = f"CASE WHEN {center} THEN 0.0D ELSE {la} END"
         if name == "ortho":
@@ -1861,7 +1272,7 @@ def _emit_datum_legs(st: _SqlStager, legs, cx: str, cy: str, cz: str,
                 phi=f"CASE WHEN {near} THEN (CASE WHEN {zpos} THEN "
                     f"{HALF_PI} ELSE -{HALF_PI} END) ELSE "
                     f"atan({s('yph')} / {s('xph')}) END",
-                lam=_sql_atan2_ieee(cy, cx))
+                lam=atan2_ieee(cy, cx))
             put(zz=f"CASE WHEN {s('cpi')} < 1e-6D THEN abs({cz}) - "
                    f"hypot({L(a * a)} * {s('cpi')}, {L(b * b)} * {s('spi')})"
                    f" / hypot({L(a)} * {s('cpi')}, {L(b)} * {s('spi')}) "
@@ -1964,9 +1375,7 @@ def _emit_twin(df, plan: _TwinPlan, x, y, z, t, degrees: bool,
             st.barrier()
     if plan.fwd is not None:
         P = plan.fwd
-        lam, phi, bad = _emit_fwd(st, P, lam, phi)
-        if bad:
-            mask.append(bad)
+        lam, phi = _emit_fwd(st, P, lam, phi, zz)
         if P.vfr_meter != 1.0 or P.z0 != 0.0:
             # fwd_finalize vertical scaling (fwd.cpp: z = vfr_meter*(z + z0))
             zz = f"{L(P.vfr_meter)} * ({zz} + {L(P.z0)})"
@@ -2034,9 +1443,9 @@ def transform(
     - ``datum_pipeline``: cart/helmert datum PIPELINES (the towgs84
       expansion shape, incl. hub-composed catalog candidates);
     - ``fwd``: single-op FORWARDS — latlong (the identity kernel) and
-      webmerc/merc/eqc/cea/lcc/aea/leac/stere/ups/laea/sterea/somerc/
-      krovak/sinu/eqdc/eqearth/cass/ortho/gnom/geos/robin/omerc/moll/
-      wag4/wag5 and Poder-Engsager etmerc/tmerc/utm;
+      every projection whose NumPy forward kernel traces
+      (engine/trace.py): no Python-level branch on data, only mapped
+      NumPy operations, at most trace.MAX_NODES DAG nodes;
     - ``inv``: single-op INVERSES — latlong and webmerc/merc/eqc/cea/
       laea/stere/ups/sinu/eqdc/cass/geos/eqearth/omerc/lcc/aea/leac/
       moll/wag4/wag5, spherical ortho/gnom and Poder-Engsager
@@ -2049,8 +1458,8 @@ def transform(
     forward and after it inverse; a bare op has none.
     Grid-backed datums (+nadgrids/+geoidgrids), +axis, +over, +geoc,
     long-wrap, prime meridians, geocentric CRS, ``+inv`` proj-strings
-    and the remaining families (the robin and sterea inverses, poly,
-    ...) have no twin plan; ``describe_route`` names the path a call
+    and the remaining families (forwards that do not trace, such as
+    aeqd and isea; the robin and sterea inverses, ...) have no twin plan; ``describe_route`` names the path a call
     takes.  Twins stage through temporary ``_jd_*`` columns: an input
     column with that prefix raises ValueError.
 

@@ -41,7 +41,7 @@ def _ell_int_5(phi):
 
 def _adams_core(lam, phi, mode):
     """adams_forward mode dispatch; adams.cpp:45-126.  Returns (x, y, bad)."""
-    bad = np.zeros(np.shape(lam), dtype=bool)
+    bad = np.zeros_like(lam, dtype=bool)
     if mode == "guyou":
         bad = (np.abs(lam) - _TOL) > C.M_HALFPI
         at_pole = np.abs(np.abs(phi) - C.M_HALFPI) < _TOL
@@ -72,7 +72,7 @@ def _adams_core(lam, phi, mode):
         a = C.aacos(av)
         b = C.M_HALFPI - phi
     elif mode == "adams_ws1":
-        at_pole = np.zeros(np.shape(lam), dtype=bool)
+        at_pole = np.zeros_like(lam, dtype=bool)
         sp = np.tan(0.5 * phi)
         bv = np.cos(C.aasin(sp)) * np.sin(0.5 * lam)
         a = C.aacos((bv - sp) * _RSQRT2)
@@ -80,7 +80,7 @@ def _adams_core(lam, phi, mode):
         sm = lam < 0.0
         sn = phi < 0.0
     elif mode == "adams_ws2":
-        at_pole = np.zeros(np.shape(lam), dtype=bool)
+        at_pole = np.zeros_like(lam, dtype=bool)
         spp = np.tan(0.5 * phi)
         av = np.cos(C.aasin(spp)) * np.sin(0.5 * lam)
         sm = (spp + av) < 0.0

@@ -31,7 +31,7 @@ def _phi1(qs: np.ndarray, Te: float, Tone_es: float) -> np.ndarray:
     if Te < EPSILON:
         return Phi
     active = np.isfinite(Phi)
-    count = np.full(Phi.shape, N_ITER, dtype=np.int64)
+    count = np.full_like(Phi, N_ITER, dtype=np.int64)
     while active.any():
         p = Phi[active]
         sinpi = np.sin(p)

@@ -63,7 +63,7 @@ def phi2(ts0: np.ndarray, e: float) -> np.ndarray:
     eccnth = 0.5 * e
     ts = ts0.copy()
     active = np.isfinite(ts)
-    count = np.full(ts.shape, N_ITER, dtype=np.int64)
+    count = np.full_like(ts, N_ITER, dtype=np.int64)
     while active.any():
         tsa = ts[active]
         sin_phi = (1 - tsa * tsa) / (1 + tsa * tsa)
@@ -225,7 +225,6 @@ def authlat(beta, apa) -> np.ndarray:
 
 def logtanpfpim1(x: np.ndarray) -> np.ndarray:
     """log(tan(x/2 + pi/4)) with log1p near 0; src/projections/merc.cpp:14-20."""
-    x = np.asarray(x, dtype=np.float64)
     small = np.abs(x) <= np.finfo(np.float64).eps
     with np.errstate(invalid="ignore", divide="ignore"):
         big = np.log(np.tan(M_FORTPI + 0.5 * x))

@@ -177,8 +177,8 @@ def setup_poly(P: PJ) -> PJ:
             r = yy * yy + x * x
             phi = yy.copy()
             active = np.isfinite(phi) & ~eq
-            bad = np.zeros(phi.shape, dtype=bool)
-            count = np.zeros(phi.shape, dtype=np.int64)
+            bad = np.zeros_like(phi, dtype=bool)
+            count = np.zeros_like(phi, dtype=np.int64)
             for _ in range(I_ITER):
                 if not active.any():
                     break
@@ -238,7 +238,7 @@ def setup_poly(P: PJ) -> PJ:
             B = x * x + yy * yy
             phi = yy.copy()
             active = np.isfinite(phi) & ~eq
-            count = np.zeros(phi.shape, dtype=np.int64)
+            count = np.zeros_like(phi, dtype=np.int64)
             for _ in range(N_ITER):
                 if not active.any():
                     break

@@ -83,10 +83,10 @@ def _rhealpix_verts(ns: int, ss: int):
 def _pnpoly(verts, tx, ty):
     """Vectorized transliteration of pnpoly (healpix.cpp:117-157):
     boundary vertices count as inside; edges are consecutive pairs only."""
-    inside_vert = np.zeros(np.shape(tx), dtype=bool)
+    inside_vert = np.zeros_like(tx, dtype=bool)
     for vx, vy in verts:
         inside_vert |= (tx == vx) & (ty == vy)
-    counter = np.zeros(np.shape(tx), dtype=np.int64)
+    counter = np.zeros_like(tx, dtype=np.int64)
     p1x, p1y = verts[0]
     n = len(verts)
     for i in range(1, n):

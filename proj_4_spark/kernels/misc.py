@@ -221,7 +221,7 @@ def ortho_e_inverse(x, y, z, t, P: PJ):
     yr = (y - Q["y_shift"]) / Q["y_scale"]
     bad = x * x + yr * yr > 1 + 1e-11
     lam, phi, _, _ = ortho_s_inverse(x, yr, z, t, P)
-    conv = np.zeros(lam.shape, dtype=bool)
+    conv = np.zeros_like(lam, dtype=bool)
     for _ in range(20):
         cosphi = np.cos(phi)
         sinphi = np.sin(phi)

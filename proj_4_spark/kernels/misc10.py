@@ -117,7 +117,7 @@ def setup_labrd(P: PJ) -> PJ:
         y = y + (Cb * V1 - Ca * V2 - Cd * V3 + Cc3 * V4)
         ps = p0s + y / kRg
         pe = ps + P.phi0 - p0s
-        conv = np.zeros(pe.shape, dtype=bool)
+        conv = np.zeros_like(pe, dtype=bool)
         for _ in range(20):
             V1 = A * np.log(np.tan(C.M_FORTPI + 0.5 * pe))
             tpe = P.e * np.sin(pe)
@@ -246,8 +246,8 @@ def setup_bipc(P: PJ) -> PJ:
         Az = np.arctan2(x, y)
         fAz = np.abs(Az)
         zang = np.zeros_like(r)
-        active = np.ones(np.shape(x), dtype=bool)
-        conv = np.zeros(np.shape(x), dtype=bool)
+        active = np.ones_like(x, dtype=bool)
+        conv = np.zeros_like(x, dtype=bool)
         for _ in range(_B_NITER):
             if not active.any():
                 break
@@ -396,8 +396,8 @@ def setup_imw_p(P: PJ) -> PJ:
         phi = np.full_like(x, phi_2)
         lam = x / math.cos(phi_2)
         yc = np.zeros_like(x)
-        active = np.ones(np.shape(x), dtype=bool)
-        bad = np.zeros(np.shape(x), dtype=bool)
+        active = np.ones_like(x, dtype=bool)
+        bad = np.zeros_like(x, dtype=bool)
         for _ in range(1000):
             if not active.any():
                 break

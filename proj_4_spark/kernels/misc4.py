@@ -110,7 +110,7 @@ def setup_lcca(P: PJ) -> PJ:
         dr = yy - xx * np.tan(0.5 * theta)
         lam = theta / lfac
         S = dr.copy()
-        converged = np.zeros(S.shape, dtype=bool)
+        converged = np.zeros_like(S, dtype=bool)
         active = np.isfinite(S)
         for _ in range(10):
             if not active.any():

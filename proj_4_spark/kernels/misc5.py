@@ -191,8 +191,6 @@ def setup_hatano(P: PJ) -> PJ:
         ph = phi.copy()
         active = np.isfinite(ph)
         for _ in range(20):
-            if not active.any():
-                break
             th1 = (ph[active] + np.sin(ph[active]) - c[active]) / (1.0 + np.cos(ph[active]))
             ph[active] = ph[active] - th1
             done = np.abs(th1) < 1e-7

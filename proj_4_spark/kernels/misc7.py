@@ -76,7 +76,7 @@ def setup_igh(P: PJ) -> PJ:
     }
 
     def zone_of_fwd(lam, phi):
-        z = np.zeros(lam.shape, dtype=np.int64)
+        z = np.zeros_like(lam, dtype=np.int64)
         north_m = phi >= _PHI_B
         north_s = (phi >= 0) & ~north_m
         south_s = (phi >= -_PHI_B) & (phi < 0)
@@ -105,7 +105,7 @@ def setup_igh(P: PJ) -> PJ:
 
     def inv(x, y, z_, t, _P):
         y90 = dy0 + math.sqrt(2.0)
-        zone = np.zeros(x.shape, dtype=np.int64)
+        zone = np.zeros_like(x, dtype=np.int64)
         inside = ~((y > y90 + _EPSLN) | (y < -y90 + _EPSLN))
         north_m = inside & (y >= _PHI_B)
         north_s = inside & (y >= 0) & ~north_m
@@ -219,7 +219,7 @@ def setup_igh_o(P: PJ) -> PJ:
 
     def _zone(lam_or_x, phi_or_y):
         v, u = phi_or_y, lam_or_x
-        z = np.zeros(u.shape, dtype=np.int64)
+        z = np.zeros_like(u, dtype=np.int64)
         nm = v >= _PHI_B
         ns = (v >= 0) & ~nm
         ss = (v >= -_PHI_B) & (v < 0)

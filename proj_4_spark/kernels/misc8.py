@@ -96,7 +96,7 @@ def setup_nzmg(P: PJ) -> PJ:
     def inv(x, y, z, t, _P):
         pr = y.copy()
         pi = x.copy()
-        converged = np.zeros(pr.shape, dtype=bool)
+        converged = np.zeros_like(pr, dtype=bool)
         active = np.isfinite(pr)
         for _ in range(20):
             if not active.any():

@@ -73,7 +73,7 @@ def _mod_ster(P: PJ, zcoeff) -> PJ:
     def inv(x, y, z, t, _P):
         pr = x.copy()
         pi = y.copy()
-        conv1 = np.zeros(pr.shape, dtype=bool)
+        conv1 = np.zeros_like(pr, dtype=bool)
         active = np.isfinite(pr)
         for _ in range(20):
             if not active.any():
@@ -102,7 +102,7 @@ def _mod_ster(P: PJ, zcoeff) -> PJ:
         chi = C.aasin(cosz * schio + pi * sinz * cchio / rh_safe)
         # conformal -> geodetic latitude fixed point (<=20 @1e-12)
         phi = chi.copy()
-        conv2 = np.zeros(phi.shape, dtype=bool)
+        conv2 = np.zeros_like(phi, dtype=bool)
         active = np.isfinite(phi)
         for _ in range(20):
             if not active.any():

@@ -54,7 +54,7 @@ def setup_somerc(P: PJ) -> PJ:
         lamp = C.aasin(cp_ * np.sin(lampp) / np.cos(phip))
         con = (K - np.log(np.tan(M_PI_4 + 0.5 * phip))) / c
         cur = phip.copy()
-        converged = np.zeros(cur.shape, dtype=bool)
+        converged = np.zeros_like(cur, dtype=bool)
         active = np.isfinite(cur)
         for _ in range(6):
             if not active.any():

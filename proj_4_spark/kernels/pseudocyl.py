@@ -25,11 +25,10 @@ def moll_s_forward(lam, phi, z, t, P: PJ):
     k = Q["C_p"] * np.sin(phi)
     phi_it = phi.copy()
     active = np.isfinite(phi_it)
-    count = np.zeros(phi_it.shape, dtype=np.int64)
-    converged = np.zeros(phi_it.shape, dtype=bool)
+    converged = np.zeros_like(phi_it, dtype=bool)
     for _ in range(10):
-        if not active.any():
-            break
+        # no early exit: a lane that converged stays frozen, so the
+        # bounded loop gives the same numbers and traces (engine/trace)
         V = (phi_it[active] + np.sin(phi_it[active]) - k[active]) / (
             1.0 + np.cos(phi_it[active])
         )
@@ -38,7 +37,6 @@ def moll_s_forward(lam, phi, z, t, P: PJ):
         conv = converged[active]
         conv |= done
         converged[active] = conv
-        count[active] += 1
         nxt = active.copy()
         nxt[active] = ~done
         active = nxt
@@ -131,15 +129,13 @@ def gn_sinu_s_forward(lam, phi, z, t, P: PJ):
     m, n = Q["m"], Q["n"]
     if m == 0.0:
         phi_out = C.aasin(n * np.sin(phi)) if n != 1.0 else phi
-        bad = np.zeros(phi.shape, dtype=bool)
+        bad = np.zeros_like(phi, dtype=bool)
     else:
         k = n * np.sin(phi)
         phi_it = phi.copy()
         active = np.isfinite(phi_it)
-        converged = np.zeros(phi_it.shape, dtype=bool)
+        converged = np.zeros_like(phi_it, dtype=bool)
         for _ in range(8):
-            if not active.any():
-                break
             V = (m * phi_it[active] + np.sin(phi_it[active]) - k[active]) / (
                 m + np.cos(phi_it[active])
             )
@@ -267,7 +263,7 @@ def eqearth_e_inverse(x, y, z, t, P: PJ):
     y = np.clip(y / Q["rqda"], -_MAX_Y, _MAX_Y)
     yc = y.copy()
     active = np.isfinite(yc)
-    converged = np.zeros(yc.shape, dtype=bool)
+    converged = np.zeros_like(yc, dtype=bool)
     for _ in range(12):
         if not active.any():
             break

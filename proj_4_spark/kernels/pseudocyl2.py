@@ -110,11 +110,9 @@ def setup_eck4(P: PJ) -> PJ:
         p = _E4_CP * np.sin(phi)
         V = phi * phi
         ph = phi * (0.895168 + V * (0.0218849 + V * 0.00826809))
-        converged = np.zeros(ph.shape, dtype=bool)
+        converged = np.zeros_like(ph, dtype=bool)
         active = np.isfinite(ph)
         for _ in range(6):
-            if not active.any():
-                break
             c = np.cos(ph[active])
             s = np.sin(ph[active])
             V = (ph[active] + s * (c + 2.0) - p[active]) / (
@@ -250,11 +248,9 @@ def setup_putp2(P: PJ) -> PJ:
         p = C_p * np.sin(phi)
         p2 = phi * phi
         ph = phi * (0.615709 + p2 * (0.00909953 + p2 * 0.0046292))
-        converged = np.zeros(ph.shape, dtype=bool)
+        converged = np.zeros_like(ph, dtype=bool)
         active = np.isfinite(ph)
         for _ in range(10):
-            if not active.any():
-                break
             c = np.cos(ph[active])
             s = np.sin(ph[active])
             V = (ph[active] + s * (c - 1.0) - p[active]) / (
@@ -367,11 +363,9 @@ def _putp6(P: PJ, C_x, C_y, A, B, D) -> PJ:
     def fwd(lam, phi, z, t, _P):
         p = B * np.sin(phi)
         ph = phi * 1.10265779
-        converged = np.zeros(ph.shape, dtype=bool)
+        converged = np.zeros_like(ph, dtype=bool)
         active = np.isfinite(ph)
         for _ in range(10):
-            if not active.any():
-                break
             r = np.sqrt(1.0 + ph[active] * ph[active])
             V = ((A - r) * ph[active] - np.log(ph[active] + r) - p[active]) / (A - 2.0 * r)
             ph[active] = ph[active] - V

@@ -24,11 +24,9 @@ def _newton(phi0, k, num_den, niter, tol):
     """Generic masked Newton loop: phi -= V where V = num_den(phi, k).
     Returns (phi, converged)."""
     ph = phi0.copy()
-    converged = np.zeros(ph.shape, dtype=bool)
+    converged = np.zeros_like(ph, dtype=bool)
     active = np.isfinite(ph)
     for _ in range(niter):
-        if not active.any():
-            break
         V = num_den(ph[active], k[active])
         ph[active] = ph[active] - V
         done = np.abs(V) < tol
@@ -458,7 +456,7 @@ def _poly_cyl(P: PJ, fwd_x, fwd_y, B_coef, C_coef, max_y, lam_from):
     def inv(x, y, z, t, _P):
         yv = np.clip(y, -max_y, max_y)
         yc = yv.copy()
-        converged = np.zeros(yc.shape, dtype=bool)
+        converged = np.zeros_like(yc, dtype=bool)
         active = np.isfinite(yc)
         for _ in range(100):
             if not active.any():

@@ -33,6 +33,14 @@ def _V(T, z):
     return T[:, 0] + z * (T[:, 1] + z * (T[:, 2] + z * T[:, 3]))
 
 
+def _V_at(T, i, z):
+    """_V of table row i: each coefficient column gathered by np.choose,
+    which dispatches on its index (np.take does not), so the forward
+    traces to a Spark SQL array lookup."""
+    c0, c1, c2, c3 = (np.choose(i, T[:, j]) for j in range(4))
+    return c0 + z * (c1 + z * (c2 + z * c3))
+
+
 def _DV(T, z):
     return T[:, 1] + 2 * z * T[:, 2] + z * z * 3.0 * T[:, 3]
 
@@ -44,8 +52,8 @@ def setup_robin(P: PJ) -> PJ:
         bad = ~np.isfinite(phi) | (i < 0)
         i = np.clip(i, 0, _NODES)
         dphi = C.RAD_TO_DEG * (dphi - _RC1 * i)
-        x = _V(_XA[i], dphi) * _FXC * lam
-        y = _V(_YA[i], dphi) * _FYC
+        x = _V_at(_XA, i, dphi) * _FXC * lam
+        y = _V_at(_YA, i, dphi) * _FYC
         y = np.where(phi < 0.0, -y, y)
         return np.where(bad, np.nan, x), np.where(bad, np.nan, y), z_, t
 

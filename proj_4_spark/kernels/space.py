@@ -105,8 +105,8 @@ def _make_fwd(P: PJ, Q: _Som, lsat_loop: bool):
         n = lam.shape[0] if hasattr(lam, "shape") else 1
         lamdp = np.zeros_like(lam)
         lamt = np.zeros_like(lam)
-        outer = np.ones(np.shape(lam), dtype=bool)   # lanes still iterating
-        l_zero = np.zeros(np.shape(lam), dtype=bool)  # lanes with l == 0
+        outer = np.ones_like(lam, dtype=bool)   # lanes still iterating
+        l_zero = np.zeros_like(lam, dtype=bool)  # lanes with l == 0
         inner_iters = 51 if lsat_loop else 50
         for nn in range(1, 4):
             sav0 = lampp
@@ -115,8 +115,8 @@ def _make_fwd(P: PJ, Q: _Som, lsat_loop: bool):
             fac = np.where(cl < 0.0,
                            lampp + np.sin(lampp) * HALFPI,
                            lampp - np.sin(lampp) * HALFPI)
-            conv = np.zeros(np.shape(lam), dtype=bool)
-            conv_iter = np.full(np.shape(lam), -1, dtype=np.int64)
+            conv = np.zeros_like(lam, dtype=bool)
+            conv_iter = np.full_like(lam, -1, dtype=np.int64)
             sav = sav0.copy()
             lamdp_i = lamdp.copy()
             lamt_i = lamt.copy()
@@ -176,7 +176,7 @@ def _make_inv(P: PJ, Q: _Som):
     def inv(x, y, z, t_, _P):
         lamdp = x / Q.b
         s = np.zeros_like(x)
-        active = np.ones(np.shape(x), dtype=bool)
+        active = np.ones_like(x, dtype=bool)
         for _ in range(50):
             if not active.any():
                 break

@@ -26,7 +26,7 @@ import numpy as np
 from proj_4_spark import scale
 from proj_4_spark.kernel_udf import kernel_columns
 from proj_4_spark.spatial import cells, salting
-from proj_4_spark.sqltext import double
+from proj_4_spark.sqltext import clamp, double
 
 # MINIMUM meridional meters per degree (at the equator, GRS80): the guard
 # needs a lower bound on the distance to an unexplored cell, so it must use
@@ -40,7 +40,8 @@ def _haversine_m(lon1, lat1, lon2, lat2):
     """Great-circle meters on the HAVERSINE_R sphere as a JVM expression
     of four column names (the SQL-expressible metric the DuckDB
     correctness gate recomputes): radians,
-    h = sin²(dφ/2) + cos φ1 cos φ2 sin²(dλ/2), 2R asin(min(1, √h))."""
+    h = sin²(dφ/2) + cos φ1 cos φ2 sin²(dλ/2), 2R asin(min(1, √h)); a
+    NaN coordinate reads NaN (sqltext.clamp keeps it)."""
     from pyspark.sql import functions as F
 
     from proj_4_spark.kernels.common import DEG_TO_RAD
@@ -50,7 +51,7 @@ def _haversine_m(lon1, lat1, lon2, lat2):
     s_dp = f"sin(({p2} - {p1}) / {two})"
     s_dl = f"sin(({lon2} - {lon1}) * {d2r} / {two})"
     h = f"{s_dp} * {s_dp} + cos({p1}) * cos({p2}) * ({s_dl} * {s_dl})"
-    return F.expr(f"asin(least({double(1.0)}, sqrt({h}))) * "
+    return F.expr(f"asin({clamp(f'sqrt({h})', hi=double(1.0))}) * "
                   f"{double(2.0 * HAVERSINE_R)}")
 
 

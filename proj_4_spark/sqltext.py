@@ -55,6 +55,37 @@ def double(x: float) -> str:
     return f"{x!r}D"
 
 
+def clamp(v: str, lo: str | None = None, hi: str | None = None) -> str:
+    """``np.clip(v, lo, hi)`` as SQL text, NaN in and NaN out; either
+    bound may be None.  Spark orders NaN above every number, so
+    ``greatest`` keeps a NaN and ``least`` drops it (``least(NaN, 1.0D)``
+    is 1.0): the upper bound is a ``greatest`` of the negated values.
+    ``v`` and the bounds appear once each; a NULL is skipped, as
+    ``greatest`` skips it."""
+    if lo is not None:
+        v = f"greatest({v}, {lo})"
+    if hi is not None:
+        v = f"-greatest(-({v}), -({hi}))"
+    return v
+
+
+def atan2_ieee(yc: str, xc: str) -> str:
+    """IEEE atan2: Spark's Atan2 evaluates Math.atan2(y + 0.0, x + 0.0),
+    which collapses -0.0 to +0.0, where NumPy keeps the signed zeros
+    (np.arctan2(0.0, -0.0) is pi).  The sign of a zero is read from its
+    string form; only y == 0 rows evaluate that branch (CaseWhen codegen
+    is lazy).  The arguments must be column refs: each appears several
+    times."""
+    xneg = f"startswith(cast({xc} AS STRING), '-')"
+    yneg = f"startswith(cast({yc} AS STRING), '-')"
+    return (f"CASE WHEN isnan({xc}) OR isnan({yc}) THEN {double(math.nan)} "
+            f"WHEN {yc} = 0.0D THEN "
+            f"(CASE WHEN {xneg} AND {yneg} THEN {double(-math.pi)} "
+            f"WHEN {xneg} THEN {double(math.pi)} "
+            f"WHEN {yneg} THEN -0.0D ELSE 0.0D END) "
+            f"ELSE atan2({yc}, {xc}) END")
+
+
 _barrier_seq = itertools.count()
 
 

@@ -1,9 +1,31 @@
 import os
+import signal
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pytest
+
+
+# pytest.ini's faulthandler_timeout: past it a test has hung (an Arrow
+# collect once waited over 15 min on a socket no task would write)
+HANG_SECONDS = 900
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_call(item):
+    """Fail a test that runs past HANG_SECONDS by name, from a
+    main-thread SIGALRM, instead of letting it use up the run."""
+    def hang(signum, frame):
+        raise TimeoutError(f"{item.nodeid} ran past {HANG_SECONDS} s")
+
+    old = signal.signal(signal.SIGALRM, hang)
+    signal.alarm(HANG_SECONDS)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,7 @@ pinned number of py4j commands, whatever the width of its input.
 
 import collections
 import itertools
+import math
 import re
 
 import numpy as np
@@ -171,7 +172,9 @@ def ref_haversine_m(lon1, lat1, lon2, lat2):
     s_dp = F.sin((p2 - p1) / 2.0)
     s_dl = F.sin((lon2 - lon1) * DEG_TO_RAD / 2.0)
     h = s_dp * s_dp + F.cos(p1) * F.cos(p2) * (s_dl * s_dl)
-    return 2.0 * knn.HAVERSINE_R * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+    # sqltext.clamp's NaN-keeping min(1, sqrt(h))
+    return 2.0 * knn.HAVERSINE_R * F.asin(
+        -F.greatest(-F.sqrt(h), -F.lit(1.0)))
 
 
 def ref_ranked(cand, geodesic_m, k):
@@ -910,3 +913,41 @@ def test_transform_py4j_commands_do_not_grow_with_width(spark, edge_pts):
     got = [_py4j_commands(spark, lambda df=df: transform(
         df, WEBMERC, x="lon", y="lat")) for df in (narrow, wide)]
     assert got[0] == got[1], got
+
+
+def test_haversine_of_a_nan_point_is_nan(spark):
+    """A NaN coordinate has no haversine distance: it reads NaN (as the
+    Karney metric does), not pi*R, so it cannot tie with a true
+    antipode in knn_brute_force."""
+    from proj_4_spark.spatial.knn import _haversine_m
+
+    rows = spark.createDataFrame(
+        [(1, 0.0, 0.0, 180.0, 0.0), (2, 0.0, float("nan"), 10.0, 10.0),
+         (3, float("nan"), 0.0, 10.0, 10.0)],
+        "id int, lon1 double, lat1 double, lon2 double, lat2 double")
+    got = {r["id"]: r["d"] for r in rows.select(
+        "id", _haversine_m("lon1", "lat1", "lon2", "lat2").alias("d"))
+        .collect()}
+    assert abs(got[1] - 20015086.79602057) < 1e-6
+    assert math.isnan(got[2]) and math.isnan(got[3]), got
+
+
+def test_spark_internal_surface(spark):
+    """The Spark-internal API templates.py rebinds plans through,
+    resolved by reflection, so a Spark upgrade that moves one fails
+    here by name rather than in every builder."""
+    import pyspark
+
+    print("pyspark", pyspark.__version__)
+
+    def methods(name):
+        cls = spark._jvm.java.lang.Class.forName(name)
+        return {m.getName() for m in cls.getMethods()}
+
+    plan = methods("org.apache.spark.sql.catalyst.plans.logical.LogicalPlan")
+    assert {"setAnalyzed", "transformUp",
+            "transformAllExpressions"} <= plan
+    assert "apply" in methods(
+        "org.apache.spark.sql.catalyst.analysis.DeduplicateRelations$")
+    assert "name" in methods("org.apache.spark.sql.catalyst.trees.TreeNodeTag")
+    assert "ofRows" in methods("org.apache.spark.sql.classic.Dataset")
