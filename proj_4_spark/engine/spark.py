@@ -48,6 +48,7 @@ from proj_4_spark.kernel_udf import kernel_columns
 from proj_4_spark.kernels import common as C
 from proj_4_spark.kernels.base import (ProjError, UNITS_CLASSIC,
                                        UNITS_PROJECTED, UNITS_RADIANS)
+from proj_4_spark.kernels.tmerc import exact_e_fwd
 from proj_4_spark.sqltext import (atan2_ieee, codegen_barrier, double,
                                   identifier, quote_name)
 from proj_4_spark.templates import templated
@@ -77,9 +78,10 @@ def _traced_fwd(P):
     if (P.left != UNITS_RADIANS or P.right not in (UNITS_CLASSIC,
                                                     UNITS_PROJECTED)
             or P.skip_fwd_prepare or P.skip_fwd_finalize
-            # tmerc's algo=auto picks a kernel per row: a twin would run
-            # both the exact and the approximate one on every row
-            or P.params.get("algo") == "auto"):
+            # tmerc's algo=auto picks a kernel per row (a twin would run
+            # both); its approximate forward keeps the UDF, as before
+            or (P.name in ("tmerc", "etmerc", "utm")
+                and P.fwd is not exact_e_fwd)):
         return None
     fn = next((f for f in (P.fwd4d, P.fwd3d, P.fwd) if f is not None), None)
     return None if fn is None else trace.trace_kernel(fn, P)

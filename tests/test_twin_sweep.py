@@ -470,7 +470,6 @@ REPRESENTATIVES = [
     '+proj=stere +lat_0=40 +lon_0=10 +datum=WGS84',
     '+proj=sterea +lat_0=-30 +lon_0=20 +ellps=GRS80',
     '+proj=sterea +lat_0=52.15 +lon_0=5.38 +k=0.9999 +ellps=bessel',
-    '+proj=tmerc +approx +ellps=GRS80 +lon_0=9',
     '+proj=webmerc +datum=GGRS87',
     '+proj=webmerc +datum=NAD83',
     '+proj=webmerc +ellps=WGS84 +units=km',
