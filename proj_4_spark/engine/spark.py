@@ -414,9 +414,9 @@ def _emit_fwd(st: _SqlStager, P, lam: str, phi: str, zz: str):
     """fwd prepare (lam wrap - lam0, lat clip), the kernel traced from
     P.fwd and the projection finalize (*a for classic units, +x0/y0,
     *fr_meter) over radian COLUMN REFS — for latlong the identity kernel
-    and no planar finalize.  The traced kernel closes its codegen
-    region.  Returns (x, y); a row the kernel cannot project reads NaN,
-    as in NumPy."""
+    and no planar finalize.  A large traced kernel closes its codegen
+    region (trace.CLOSE_COST).  Returns (x, y); a row the kernel cannot
+    project reads NaN, as in NumPy."""
     L = double
     st.stage(lamw1=_sql_adjlon(lam))
     st.stage(lamd=f"({st.col('lamw1')} - {L(P.lam0)})")

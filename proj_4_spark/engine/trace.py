@@ -39,9 +39,10 @@ readers' SQL text) becomes a stage alias, a node read once is inlined,
 and aliases at the same depth share one stage.  Codegen regions are cut
 with the stager's barrier so that each stays under ``MAX_REGION_STAGES``
 stages and ``REGION_COST`` (an estimate of the generated bytecode,
-calibrated against Spark's maxMethodCodeSize); the kernel closes its
-last region, so a chained forward -> inverse cannot fuse past HotSpot's
-8,000-byte JIT ceiling.
+calibrated against Spark's maxMethodCodeSize).  A kernel whose last
+region is estimated over ``CLOSE_COST`` closes it, so a chained forward
+-> inverse cannot fuse past HotSpot's 8,000-byte JIT ceiling; a smaller
+kernel shares its region with the finalize and what follows.
 """
 
 from __future__ import annotations
@@ -54,12 +55,22 @@ import numpy as np
 
 from proj_4_spark.sqltext import atan2_ieee, clamp, double
 
-# a kernel of more DAG nodes than this runs on the Arrow-UDF path
-MAX_NODES = 1500
+# a kernel of more DAG nodes than this runs on the Arrow-UDF path: at
+# 4 M rows on local[4] the twin ran 1.14-1.26x the UDF's throughput up
+# to 212 nodes (putp6, putp2, mbt_fps) and 0.93-1.08x at 248-254
+# (hatano, boggs: unrolled Newton loops, every lane runs every step)
+MAX_NODES = 240
 # per codegen region: lateral-alias stages (PySpark fails one selectExpr
 # past 50 levels) and the estimated bytecode of its expressions
 MAX_REGION_STAGES = 40
 REGION_COST = 6000
+# a kernel's last region estimated past this is closed, so that what
+# follows (the finalize, a chained transform()) starts a region of its
+# own: utm (4,431 estimated, 5,739 bytes measured) fused with its own
+# inverse's first region (2,412) would pass 8,000 bytes.  A smaller
+# kernel stays open: the closing barrier cost robin (4,123) and webmerc
+# a quarter of their throughput
+CLOSE_COST = 4200
 # an inlined expression longer than this (characters) is staged
 _MAX_INLINE = 1200
 
@@ -686,8 +697,8 @@ def _leaf_text(node):
 
 def emit(st, kernel: Kernel, inputs: dict, tag: str):
     """Stage `kernel` in the stager `st` over `inputs` (input name ->
-    SQL column ref) and close its last codegen region.  Returns the x,
-    y column refs."""
+    SQL column ref); close its last codegen region when that region is
+    estimated over CLOSE_COST.  Returns the x, y column refs."""
     nodes = kernel.nodes
     live = sorted(_reachable(nodes, (kernel.x, kernel.y)))
     templ, uses = {}, dict.fromkeys(live, 0)
@@ -736,6 +747,7 @@ def emit(st, kernel: Kernel, inputs: dict, tag: str):
             open_stages, acc = 0, 0
         st.stage(**{f"{tag}{i}": text[i] for i in members})
         open_stages, acc = open_stages + 1, acc + c
-    st.barrier()
+    if acc > CLOSE_COST:
+        st.barrier()
     return (ref.get(kernel.x, text[kernel.x]),
             ref.get(kernel.y, text[kernel.y]))

@@ -1,3 +1,4 @@
+import math
 import os
 import signal
 import sys
@@ -7,20 +8,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pytest
 
 
-# pytest.ini's faulthandler_timeout: past it a test has hung (an Arrow
-# collect once waited over 15 min on a socket no task would write)
-HANG_SECONDS = 900
+class Hang(BaseException):
+    """A test ran past its alarm; not an Exception, so a test's own
+    ``except Exception`` cannot swallow it."""
 
 
 @pytest.hookimpl(hookwrapper=True)
 def pytest_runtest_call(item):
-    """Fail a test that runs past HANG_SECONDS by name, from a
-    main-thread SIGALRM, instead of letting it use up the run."""
+    """Fail a test that runs past pytest.ini's faulthandler_timeout by
+    name, from a main-thread SIGALRM, instead of letting it use up the
+    run (an Arrow collect once waited over 15 min on a socket no task
+    would write).  A timeout of 0 sets no alarm."""
+    seconds = math.ceil(float(item.config.getini("faulthandler_timeout")
+                              or 0))
+    if seconds <= 0:
+        yield
+        return
+
     def hang(signum, frame):
-        raise TimeoutError(f"{item.nodeid} ran past {HANG_SECONDS} s")
+        raise Hang(f"{item.nodeid} ran past {seconds} s")
 
     old = signal.signal(signal.SIGALRM, hang)
-    signal.alarm(HANG_SECONDS)
+    signal.alarm(seconds)
     try:
         yield
     finally:
