@@ -40,9 +40,10 @@ and aliases at the same depth share one stage.  Codegen regions are cut
 with the stager's barrier so that each stays under ``MAX_REGION_STAGES``
 stages and ``REGION_COST`` (an estimate of the generated bytecode,
 calibrated against Spark's maxMethodCodeSize).  A kernel whose last
-region is estimated over ``CLOSE_COST`` closes it, so a chained forward
--> inverse cannot fuse past HotSpot's 8,000-byte JIT ceiling; a smaller
-kernel shares its region with the finalize and what follows.
+region is estimated over ``CLOSE_COST`` closes it, so that its chained
+forward -> inverse (utm's roundtrip) does not fuse past HotSpot's
+8,000-byte JIT ceiling; a smaller kernel shares its region with the
+finalize and whatever follows, as the hand-written twins did.
 """
 
 from __future__ import annotations
